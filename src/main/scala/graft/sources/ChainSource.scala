@@ -1,40 +1,19 @@
 package graft.sources
 
-import java.util.{Map => JMap}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Or}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.functions.Keccak
 
-/** DataSource V2 "chain provider": the Spark-native analog of the
-  * reference's remote provider query DSL (cherry SURVEY §2.1 S1–S9 —
-  * HyperSync/SQD serve filtered, projected log batches server-side). A real
-  * connector would speak the provider's wire protocol; this one serves a
-  * deterministic synthetic chain so the PUSHDOWN PLUMBING — the part that
-  * matters at 100 TB — is real and testable:
-  *
-  *   - `SupportsPushDownFilters`: block-range predicates plus `=`/`IN`
-  *     constraints on the table's request columns (`topic0`/`address` for
-  *     logs ≙ `LogRequest`, `erc20_custom.py:103-120`; `program_id`/
-  *     `discriminator` for instructions ≙ `InstructionRequest`,
-  *     `jup_swap.py:115-122`) are consumed by the source. OR-of-requests
-  *     semantics are honored: an `Or` tree over supported constraints
-  *     becomes a list of alternative requests, matching how cherry sends
-  *     multiple LogRequests whose results union server-side;
-  *   - `SupportsPushDownRequiredColumns`: column pruning reaches row
-  *     generation (≙ the field-selection structs, S6);
-  *   - block-range slicing into `numPartitions` InputPartitions (≙ the
-  *     provider's paged streaming, S1) — each partition generates only its
-  *     slice, so scan parallelism matches the cluster, not the data size.
+/** Synthetic chain provider: serves a deterministic synthetic chain, so
+  * the pushdown the three chain providers share ([[ChainScan]]) is real and
+  * testable without a provider. The backend cuts `[fromBlock, toBlock)`
+  * (default `[0, 1000)`) into `numPartitions` slices; each partition
+  * generates only its slice, `logsPerBlock` rows per block, and emits a
+  * row only when one of the pushed requests matches it. The chain has no
+  * head of its own, so a micro-batch stream ends at `toBlock`.
   *
   * Usage:
   *   spark.read.format("graft.sources.ChainSource")
@@ -42,14 +21,23 @@ import graft.functions.Keccak
   *     .option("fromBlock", 0).option("toBlock", 10000)
   *     .option("logsPerBlock", 3).option("numPartitions", 8).load()
   */
-class ChainSource extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-  override def shortName(): String = "graftchain"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ChainSource.schemaFor(options.getOrDefault("table", "logs"))
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: JMap[String, String]): Table =
-    new ChainTable(properties.asScala.toMap)
+class ChainSource extends ChainProvider("chain", streams = true) {
+  private[sources] def backend(table: String, opts: Map[String, String]): ChainBackend = {
+    val logsPerBlock = opts.getOrElse("logsperblock", "3").toInt
+    require(logsPerBlock > 0, // 0 used to emit one PHANTOM row per block
+      s"logsPerBlock must be positive, got $logsPerBlock")
+    val numPartitions = ChainScan.numPartitions(opts)
+    new ChainBackend {
+      val defaultRange = (0L, Some(1000L))
+      def plan(from: Long, to: Long, requests: Seq[ChainReq],
+               cols: Array[String]): ChainPlan =
+        ChainPlan(ChainScan.slice(from, to, numPartitions)(
+          ChainPartition(table, _, _, logsPerBlock, requests, cols)))
+      val readerFactory: PartitionReaderFactory =
+        (partition: InputPartition) =>
+          new ChainReader(partition.asInstanceOf[ChainPartition])
+    }
+  }
 }
 
 object ChainSource {
@@ -95,6 +83,10 @@ object ChainSource {
     case "traces"       => tracesSchema
     case other => throw new IllegalArgumentException(s"unknown chain table $other")
   }
+
+  /** The block-number column a table's range pushdown applies to. */
+  def blockColumn(table: String): String =
+    if (table == "instructions") "block_slot" else "block_number"
 
   /** Request-pushable (server-side filterable) columns per table. */
   def pushableColumns(table: String): Set[String] = table match {
@@ -191,269 +183,6 @@ object ChainSource {
     }
     new GenericInternalRow(values)
   }
-}
-
-/** One provider request: a conjunction of `col ∈ values` constraints over
-  * the table's pushable columns (absent column = unconstrained). A pushed
-  * filter expands to a LIST of these, OR'd — cherry's repeated
-  * LogRequest/InstructionRequest semantics.
-  */
-private[sources] case class ChainReq(cs: Map[String, Set[Seq[Byte]]]) {
-  /** Conjunction of two requests; None when a column's value sets are
-    * disjoint (the request can never match).
-    */
-  def and(other: ChainReq): Option[ChainReq] = {
-    val merged = (cs.keySet ++ other.cs.keySet).map { k =>
-      k -> ((cs.get(k), other.cs.get(k)) match {
-        case (Some(a), Some(b)) => a intersect b
-        case (Some(a), None)    => a
-        case (None, Some(b))    => b
-        case (None, None)       => Set.empty[Seq[Byte]] // unreachable
-      })
-    }.toMap
-    if (merged.values.exists(_.isEmpty)) None else Some(ChainReq(merged))
-  }
-  def matches(value: String => Seq[Byte]): Boolean =
-    cs.forall { case (k, set) => set.contains(value(k)) }
-  def describe: String =
-    cs.toSeq.sortBy(_._1).map { case (k, vs) => s"$k:${vs.size}" }.mkString("{", ",", "}")
-}
-
-/** Filter-tree → request-list parsing shared by the chain providers
-  * (synthetic `ChainSource` and file-backed `ParquetChainSource`).
-  */
-private[sources] object ReqPushdown {
-  /** Case-insensitive reader-option view: DSv2 delivers options through a
-    * CaseInsensitiveStringMap (keys lowercased), while `getTable`'s
-    * properties keep original case — a case-sensitive `getOrElse` on
-    * "fromBlock" silently missed a user's "fromblock" and scanned the
-    * DEFAULT range instead. Builders normalize once and look up lowercase.
-    */
-  def lowerOpts(props: Map[String, String]): Map[String, String] =
-    props.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-
-  /** v+1 saturating at Long.MaxValue: block-range bound arithmetic for
-    * `GreaterThan`/`LessThanOrEqual` pushdown. A wrapping `v + 1` turned
-    * `<= Long.MaxValue` (matches everything) into an empty scan and
-    * `> Long.MaxValue` (matches nothing) into a full one.
-    */
-  def incSat(v: Long): Long = if (v == Long.MaxValue) Long.MaxValue else v + 1
-
-  def asBytes(v: Any): Option[Seq[Byte]] = v match {
-    case a: Array[Byte] => Some(a.toSeq)
-    case _              => None
-  }
-
-  /** A filter tree → list of alternative requests (OR semantics), or None
-    * if any leaf is not a pushable `=`/`IN` constraint.
-    */
-  def parseReq(f: Filter, pushable: Set[String]): Option[Seq[ChainReq]] = f match {
-    case EqualTo(c, v) if pushable(c) =>
-      asBytes(v).map(b => Seq(ChainReq(Map(c -> Set(b)))))
-    case In(c, vs) if pushable(c) =>
-      val bs = vs.toSeq.map(asBytes)
-      if (bs.nonEmpty && bs.forall(_.isDefined))
-        Some(Seq(ChainReq(Map(c -> bs.flatten.toSet))))
-      else None
-    case Or(l, r) =>
-      for { a <- parseReq(l, pushable); b <- parseReq(r, pushable) } yield a ++ b
-    case And(l, r) =>
-      for { a <- parseReq(l, pushable); b <- parseReq(r, pushable) }
-        yield for { x <- a; y <- b; m <- x.and(y) } yield m
-    case _ => None
-  }
-
-  /** `filter.<col>` reader options (comma-separated hex values) → one
-    * conjunctive request — the provider-QUERY-config channel, and the only
-    * pushdown channel on the streaming path (V2 filter pushdown is
-    * batch-only).
-    */
-  def optionReq(pushable: Set[String], props: Map[String, String]): ChainReq = {
-    val lower = lowerOpts(props)
-    // an unrecognized filter.<col> must FAIL, not silently no-op: on the
-    // streaming path this is the only filter channel, and a typo'd or
-    // non-pushable column would leave the scan unfiltered while the user
-    // believes it is server-side filtered
-    val unknown = lower.keys
-      .filter(_.startsWith("filter."))
-      .map(_.stripPrefix("filter."))
-      .filterNot(pushable.map(_.toLowerCase(java.util.Locale.ROOT)))
-      .toSeq.sorted
-    require(unknown.isEmpty,
-      s"filter option(s) on non-pushable column(s): ${unknown.mkString(", ")}" +
-        s" (pushable: ${pushable.toSeq.sorted.mkString(", ")})")
-    ChainReq(pushable.flatMap { c =>
-      lower.get(s"filter.${c.toLowerCase(java.util.Locale.ROOT)}").map { v =>
-        c -> v.split(",", -1).map { h =>
-          // an empty hex value ('' or a stray double comma) decodes to
-          // the empty byte string, a constraint that matches NOTHING —
-          // the silent zero-row run this option channel must fail on
-          require(h.nonEmpty,
-            s"filter.$c: empty hex value in '$v'")
-          graft.functions.Hex.decode(h).toSeq: Seq[Byte]
-        }.toSet
-      }
-    }.toMap)
-  }
-}
-
-private class ChainTable(props: Map[String, String]) extends Table with SupportsRead {
-  private val table = props.getOrElse("table", "logs")
-  override def name(): String = s"graft_chain_$table"
-  override def schema(): StructType = ChainSource.schemaFor(table)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ChainScanBuilder(props ++ options.asScala)
-}
-
-private class ChainScanBuilder(props0: Map[String, String]) extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-
-  private val props = ReqPushdown.lowerOpts(props0)
-  private val table = props.getOrElse("table", "logs")
-  private val blockCol = if (table == "instructions") "block_slot" else "block_number"
-  private val pushable = ChainSource.pushableColumns(table)
-
-  private var fromBlock = props.getOrElse("fromblock", "0").toLong
-  private var toBlock = props.getOrElse("toblock", "1000").toLong // exclusive
-  private val logsPerBlock = props.getOrElse("logsperblock", "3").toInt
-  require(logsPerBlock > 0, // 0 used to emit one PHANTOM row per block
-    s"logsPerBlock must be positive, got $logsPerBlock")
-  private val numPartitions = props.getOrElse("numpartitions", "4").toInt
-  require(numPartitions > 0, // 0 divides by zero in slice(); negative
-    // degrades the step to 1 and plans one partition PER BLOCK
-    s"numPartitions must be positive, got $numPartitions")
-
-  /** Request constraints can ALSO arrive as reader options —
-    * `filter.<col>` = comma-separated hex values (≙ cherry's provider
-    * QUERY config, where LogRequest filters are declared up front rather
-    * than as DataFrame predicates). This is the only pushdown channel on
-    * the STREAMING path: Spark's V2 filter pushdown applies to batch scans
-    * only, so a `.filter(...)` on a readStream is evaluated post-scan
-    * (still correct, just not server-side).
-    */
-  private val optionReq: ChainReq = ReqPushdown.optionReq(pushable, props)
-
-  // OR'd request list; a single unconstrained request = "match everything"
-  private var requests: Seq[ChainReq] = Seq(optionReq)
-  private var pushed: Array[Filter] = Array.empty
-  private var requiredCols: Array[String] = ChainSource.schemaFor(table).fieldNames
-
-  private def parseReq(f: Filter): Option[Seq[ChainReq]] =
-    ReqPushdown.parseReq(f, pushable)
-
-  /** Consume block-range predicates and request-column constraints
-    * (≙ provider query DSL); everything else stays with Spark as a
-    * residual. Multiple accepted filters AND together; each may itself be
-    * an OR-of-requests, which distributes across the current request list.
-    */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (accepted, residual) = filters.partition {
-      case GreaterThanOrEqual(c, v: Long) if c == blockCol => fromBlock = math.max(fromBlock, v); true
-      case GreaterThan(c, v: Long) if c == blockCol        => fromBlock = math.max(fromBlock, ReqPushdown.incSat(v)); true
-      case LessThan(c, v: Long) if c == blockCol           => toBlock = math.min(toBlock, v); true
-      case LessThanOrEqual(c, v: Long) if c == blockCol    => toBlock = math.min(toBlock, ReqPushdown.incSat(v)); true
-      // a point lookup is the range [v, v+1) — without this case it fell
-      // through to the residual and the scan paged the whole default range
-      case EqualTo(c, v: Long) if c == blockCol =>
-        fromBlock = math.max(fromBlock, v)
-        toBlock = math.min(toBlock, ReqPushdown.incSat(v)); true
-      // IN brackets to [min, max+1); the set itself stays RESIDUAL (the
-      // bracket admits the gaps, Spark re-filters them) — side effect
-      // only, hence `false`
-      case In(c, vs) if c == blockCol && vs.nonEmpty &&
-          vs.forall(_.isInstanceOf[Long]) =>
-        val ls = vs.map(_.asInstanceOf[Long])
-        fromBlock = math.max(fromBlock, ls.min)
-        toBlock = math.min(toBlock, ReqPushdown.incSat(ls.max))
-        false
-      case f =>
-        parseReq(f) match {
-          case Some(alts) =>
-            requests = for { r <- requests; a <- alts; m <- r.and(a) } yield m
-            true
-          case None => false
-        }
-    }
-    pushed = accepted
-    residual
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    requiredCols = requiredSchema.fieldNames
-
-  override def build(): Scan = new Scan with Batch {
-    // props is already the lowered map (see the constructor)
-    private val blocksPerBatch = props.getOrElse("blocksperbatch", "100").toLong
-
-    private def slice(lo0: Long, hi: Long): Array[InputPartition] = {
-      val span = math.max(hi - lo0, 0L)
-      val step = math.max(1L, (span + numPartitions - 1) / numPartitions)
-      (lo0 until hi by step).map { lo =>
-        ChainPartition(table, lo, math.min(lo + step, hi), logsPerBlock,
-          requests, requiredCols): InputPartition
-      }.toArray
-    }
-    private val readerFactory: PartitionReaderFactory =
-      (partition: InputPartition) =>
-        new ChainReader(partition.asInstanceOf[ChainPartition])
-
-    override def readSchema(): StructType =
-      StructType(requiredCols.map(c => ChainSource.schemaFor(table)(c)))
-    override def toBatch: Batch = this
-    override def description(): String = {
-      val reqDesc =
-        if (requests == Seq(ChainReq(Map.empty))) "all"
-        else requests.map(_.describe).mkString("|")
-      s"graft_chain_$table [$fromBlock,$toBlock) reqs=$reqDesc cols=${requiredCols.mkString(",")}"
-    }
-
-    override def planInputPartitions(): Array[InputPartition] =
-      slice(fromBlock, toBlock)
-    override def createReaderFactory(): PartitionReaderFactory = readerFactory
-
-    /** Streaming analog of the reference's paced pull loop (cherry
-      * `pipeline.py:110-113`): offsets are block numbers; each trigger
-      * admits at most `blocksPerBatch` blocks, and the stream goes idle at
-      * the (bounded, synthetic) chain head — a live connector would keep
-      * advancing `latestOffset` as blocks arrive. Pushdown state (range,
-      * requests, pruned columns) carries into every micro-batch's partitions.
-      */
-    override def toMicroBatchStream(checkpointLocation: String)
-        : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-      new org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-          with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
-        import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
-        override def initialOffset(): Offset = ChainOffset(fromBlock)
-        // admission-controlled pacing: each trigger admits blocksPerBatch
-        override def latestOffset(start: Offset, limit: ReadLimit): Offset =
-          ChainOffset(math.min(toBlock,
-            start.asInstanceOf[ChainOffset].block + blocksPerBatch))
-        override def latestOffset(): Offset =
-          throw new UnsupportedOperationException(
-            "paced source: use latestOffset(start, limit)")
-        override def reportLatestOffset(): Offset = ChainOffset(toBlock)
-        override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-        override def deserializeOffset(json: String): Offset =
-          ChainOffset(json.toLong)
-        override def planInputPartitions(start: Offset, end: Offset)
-            : Array[InputPartition] =
-          slice(start.asInstanceOf[ChainOffset].block,
-            end.asInstanceOf[ChainOffset].block)
-        override def createReaderFactory(): PartitionReaderFactory = readerFactory
-        override def commit(end: Offset): Unit = ()
-        override def stop(): Unit = ()
-      }
-  }
-}
-
-/** Block-number stream offset (JSON = the number). */
-private[sources] case class ChainOffset(block: Long)
-    extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = block.toString
 }
 
 private case class ChainPartition(table: String, fromBlock: Long, toBlock: Long,

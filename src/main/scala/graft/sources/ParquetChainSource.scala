@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.util.{Map => JMap}
-
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
@@ -12,29 +10,24 @@ import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** File-backed sibling of [[ChainSource]]: the SAME request/pushdown
-  * plumbing (block-range consumption, `=`/`IN`/OR-of-requests on the
-  * pushable columns, column pruning), but served from REAL parquet files
-  * instead of synthetic generation — the provider plane proven against
-  * real IO (cherry's archived-data path: providers also serve from their
-  * parquet/arrow archives, `README.md:29-34`).
+/** File-backed chain provider: serves the shared scan ([[ChainScan]])
+  * from REAL parquet files instead of synthetic generation — the provider
+  * plane proven against real IO (cherry's archived-data path: providers
+  * also serve from their parquet/arrow archives, `README.md:29-34`).
   *
-  * Scale shape: planning reads only file FOOTERS (metadata) and prunes
-  * whole row groups whose block-column min/max stats fall outside the
-  * pushed range — the same stats-prune a warehouse-grade parquet scan
-  * does; each surviving row group becomes one InputPartition, so scan
-  * parallelism tracks data layout. Inside a row group the reader projects
-  * only the needed columns (column pruning reaches the page level: parquet
-  * is columnar, unprojected columns are never deserialized) and applies
-  * the row-level range check plus OR-of-requests matching before a row is
-  * ever handed to Spark.
+  * Planning reads only file FOOTERS (metadata) and prunes whole row groups
+  * whose block-column min/max stats fall outside the scan range — the same
+  * stats-prune a warehouse-grade parquet scan does; each surviving row
+  * group becomes one InputPartition, so scan parallelism tracks data
+  * layout, and the description notes `rgs=kept/total`. Inside a row group
+  * the reader projects only the needed columns (column pruning reaches the
+  * page level: parquet is columnar, unprojected columns are never
+  * deserialized) and applies the row-level range check plus OR-of-requests
+  * matching before a row is ever handed to Spark. The default range is
+  * unbounded; there is no micro-batch stream.
   *
   * Usage:
   *   spark.read.format("graft.sources.ParquetChainSource")
@@ -42,146 +35,66 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     .option("table", "logs")              // or "instructions"
   *     .load()
   */
-class ParquetChainSource extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-  override def shortName(): String = "graftchainfile"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ChainSource.schemaFor(options.getOrDefault("table", "logs"))
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: JMap[String, String]): Table =
-    new ParquetChainTable(properties.asScala.toMap)
-}
-
-private class ParquetChainTable(props: Map[String, String])
-    extends Table with SupportsRead {
-  private val table = props.getOrElse("table", "logs")
-  override def name(): String = s"graft_chainfile_$table"
-  override def schema(): StructType = ChainSource.schemaFor(table)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ParquetChainScanBuilder(props ++ options.asScala)
-}
-
-private class ParquetChainScanBuilder(props0: Map[String, String])
-    extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-
-  private val props = ReqPushdown.lowerOpts(props0)
-  private val table = props.getOrElse("table", "logs")
-  private val blockCol = if (table == "instructions") "block_slot" else "block_number"
-  private val pushable = ChainSource.pushableColumns(table)
-  private val path = props.getOrElse("path",
-    throw new IllegalArgumentException("graftchainfile requires option 'path'"))
-
-  private var fromBlock = Long.MinValue
-  private var toBlock = Long.MaxValue // exclusive
-  private var requests: Seq[ChainReq] = Seq(ReqPushdown.optionReq(pushable, props))
-  private var pushed: Array[Filter] = Array.empty
-  private var requiredCols: Array[String] = ChainSource.schemaFor(table).fieldNames
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (accepted, residual) = filters.partition {
-      case GreaterThanOrEqual(c, v: Long) if c == blockCol => fromBlock = math.max(fromBlock, v); true
-      case GreaterThan(c, v: Long) if c == blockCol        => fromBlock = math.max(fromBlock, ReqPushdown.incSat(v)); true
-      case LessThan(c, v: Long) if c == blockCol           => toBlock = math.min(toBlock, v); true
-      case LessThanOrEqual(c, v: Long) if c == blockCol    => toBlock = math.min(toBlock, ReqPushdown.incSat(v)); true
-      // point lookup = [v, v+1): prunes to the row groups containing v
-      case EqualTo(c, v: Long) if c == blockCol =>
-        fromBlock = math.max(fromBlock, v)
-        toBlock = math.min(toBlock, ReqPushdown.incSat(v)); true
-      // IN brackets the range; the set stays residual (side effect only)
-      case In(c, vs) if c == blockCol && vs.nonEmpty &&
-          vs.forall(_.isInstanceOf[Long]) =>
-        val ls = vs.map(_.asInstanceOf[Long])
-        fromBlock = math.max(fromBlock, ls.min)
-        toBlock = math.min(toBlock, ReqPushdown.incSat(ls.max))
-        false
-      case f =>
-        ReqPushdown.parseReq(f, pushable) match {
-          case Some(alts) =>
-            requests = for { r <- requests; a <- alts; m <- r.and(a) } yield m
-            true
-          case None => false
+class ParquetChainSource extends ChainProvider("chainfile", streams = false) {
+  private[sources] def backend(table: String, opts: Map[String, String]): ChainBackend = {
+    val path = opts.getOrElse("path",
+      throw new IllegalArgumentException("graftchainfile requires option 'path'"))
+    val blockCol = ChainSource.blockColumn(table)
+    new ChainBackend {
+      val defaultRange = (Long.MinValue, Some(Long.MaxValue))
+      def plan(from: Long, to: Long, requests: Seq[ChainReq],
+               cols: Array[String]): ChainPlan = {
+        // the SESSION's Hadoop configuration, not a bare new Configuration():
+        // fs.s3a credentials / endpoint overrides / io settings set via
+        // spark.hadoop.* must reach both the driver-side footer listing and
+        // the executor-side row-group reads (shipped to partitions via
+        // SerializableConfiguration — Configuration itself is not
+        // serializable)
+        val hconf = new org.apache.spark.util.SerializableConfiguration(
+          org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+        val conf = hconf.value
+        val root = new Path(path)
+        val fs = root.getFileSystem(conf)
+        val files =
+          if (fs.getFileStatus(root).isDirectory)
+            fs.listStatus(root).map(_.getPath)
+              .filter(_.getName.endsWith(".parquet")).sortBy(_.toString)
+          else Array(root)
+        var total = 0
+        val parts = files.flatMap { f =>
+          val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+          try {
+            reader.getFooter.getBlocks.asScala.toSeq.zipWithIndex.flatMap {
+              case (bm, i) =>
+                total += 1
+                val stats = bm.getColumns.asScala
+                  .find(_.getPath.toDotString == blockCol).map(_.getStatistics)
+                // prune iff stats prove the group disjoint from [from, to)
+                val keep = stats match {
+                  case Some(s) if s != null && s.hasNonNullValue =>
+                    val mn = s.genericGetMin.asInstanceOf[java.lang.Long].longValue
+                    val mx = s.genericGetMax.asInstanceOf[java.lang.Long].longValue
+                    mx >= from && mn < to
+                  case _ => true // no stats → cannot prune
+                }
+                if (keep)
+                  Some(ParquetChainPartition(table, f.toString, i, from, to,
+                    requests, cols, hconf): InputPartition)
+                else None
+            }
+          } finally reader.close()
         }
-    }
-    pushed = accepted
-    residual
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    requiredCols = requiredSchema.fieldNames
-
-  override def build(): Scan = new Scan with Batch {
-    // the SESSION's Hadoop configuration, not a bare new Configuration():
-    // fs.s3a credentials / endpoint overrides / io settings set via
-    // spark.hadoop.* must reach both the driver-side footer listing and
-    // the executor-side row-group reads (shipped to partitions via
-    // SerializableConfiguration — Configuration itself is not
-    // serializable)
-    private val hconf = new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    // Footer-only planning: list files, read row-group stats, prune groups
-    // outside the pushed block range. Lazy + reused by description() and
-    // planInputPartitions().
-    private lazy val (partitions, totalRowGroups): (Array[InputPartition], Int) = {
-      val conf = hconf.value
-      val root = new Path(path)
-      val fs = root.getFileSystem(conf)
-      val files =
-        if (fs.getFileStatus(root).isDirectory)
-          fs.listStatus(root).map(_.getPath)
-            .filter(_.getName.endsWith(".parquet")).sortBy(_.toString)
-        else Array(root)
-      var total = 0
-      val parts = files.flatMap { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-        try {
-          reader.getFooter.getBlocks.asScala.toSeq.zipWithIndex.flatMap {
-            case (bm, i) =>
-              total += 1
-              val stats = bm.getColumns.asScala
-                .find(_.getPath.toDotString == blockCol).map(_.getStatistics)
-              // prune iff stats prove the group disjoint from [from, to)
-              val keep = stats match {
-                case Some(s) if s != null && s.hasNonNullValue =>
-                  val mn = s.genericGetMin.asInstanceOf[java.lang.Long].longValue
-                  val mx = s.genericGetMax.asInstanceOf[java.lang.Long].longValue
-                  mx >= fromBlock && mn < toBlock
-                case _ => true // no stats → cannot prune
-              }
-              if (keep)
-                Some(ParquetChainPartition(table, f.toString, i, blockCol,
-                  fromBlock, toBlock, requests, requiredCols,
-                  hconf): InputPartition)
-              else None
-          }
-        } finally reader.close()
+        ChainPlan(parts, s" rgs=${parts.length}/$total")
       }
-      (parts, total)
+      val readerFactory: PartitionReaderFactory =
+        (partition: InputPartition) =>
+          new ParquetChainReader(partition.asInstanceOf[ParquetChainPartition])
     }
-
-    override def readSchema(): StructType =
-      StructType(requiredCols.map(c => ChainSource.schemaFor(table)(c)))
-    override def toBatch: Batch = this
-    override def description(): String = {
-      val reqDesc =
-        if (requests == Seq(ChainReq(Map.empty))) "all"
-        else requests.map(_.describe).mkString("|")
-      s"graft_chainfile_$table [$fromBlock,$toBlock) reqs=$reqDesc " +
-        s"cols=${requiredCols.mkString(",")} rgs=${partitions.length}/$totalRowGroups"
-    }
-    override def planInputPartitions(): Array[InputPartition] = partitions
-    override def createReaderFactory(): PartitionReaderFactory =
-      (partition: InputPartition) =>
-        new ParquetChainReader(partition.asInstanceOf[ParquetChainPartition])
   }
 }
 
 private case class ParquetChainPartition(table: String, file: String,
-                                         rowGroup: Int, blockCol: String,
-                                         fromBlock: Long, toBlock: Long,
+                                         rowGroup: Int, fromBlock: Long, toBlock: Long,
                                          requests: Seq[ChainReq],
                                          cols: Array[String],
                                          conf: org.apache.spark.util.SerializableConfiguration)
@@ -195,6 +108,7 @@ private class ParquetChainReader(p: ParquetChainPartition)
     extends PartitionReader[InternalRow] {
 
   private val sparkSchema = ChainSource.schemaFor(p.table)
+  private val blockCol = ChainSource.blockColumn(p.table)
   private val reader = ParquetFileReader.open(
     HadoopInputFile.fromPath(new Path(p.file), p.conf.value))
   // everything after open() runs under a guard: a constructor failure
@@ -206,7 +120,7 @@ private class ParquetChainReader(p: ParquetChainPartition)
       val fileSchema = reader.getFooter.getFileMetaData.getSchema
       // projection = output cols ∪ request cols ∪ block col (row check)
       val readCols: Seq[String] =
-        (p.cols.toSeq ++ p.requests.flatMap(_.cs.keys) :+ p.blockCol).distinct
+        (p.cols.toSeq ++ p.requests.flatMap(_.cs.keys) :+ blockCol).distinct
       val projection = new MessageType(fileSchema.getName,
         readCols.map(c => fileSchema.getType(Seq(c): _*)): _*)
       reader.setRequestedSchema(projection)
@@ -224,7 +138,7 @@ private class ParquetChainReader(p: ParquetChainPartition)
     while (remaining > 0) {
       remaining -= 1
       val g = recordReader.read()
-      val block = g.getLong(p.blockCol, 0)
+      val block = g.getLong(blockCol, 0)
       if (block >= p.fromBlock && block < p.toBlock) {
         val matches = unconstrained ||
           p.requests.exists(_.matches(c => g.getBinary(c, 0).getBytes.toSeq))

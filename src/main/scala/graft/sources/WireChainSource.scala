@@ -2,24 +2,16 @@ package graft.sources
 
 import java.net.{HttpURLConnection, URL}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.{Map => JMap}
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.memory.RootAllocator
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
-import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.WireProtocol.WireQuery
 
-/** Remote chain-provider CLIENT: the third sibling of [[ChainSource]]
-  * (synthetic) and [[ParquetChainSource]] (file-backed), serving the same
-  * tables over HTTP via [[WireProtocol]] — the Spark-native analog of the
+/** Remote chain-provider CLIENT: serves the shared scan ([[ChainScan]])
+  * over HTTP via [[WireProtocol]] — the Spark-native analog of the
   * reference's live provider ingestion (cherry configures a remote provider
   * with `ProviderConfig(kind, url)` and pulls filtered/projected pages from
   * it: `examples/erc20_custom.py:93-137`; provider matrix `README.md:29-34`).
@@ -35,16 +27,17 @@ import graft.sources.WireProtocol.WireQuery
   *     chooses page size, so client memory is one page regardless of range)
   *     and `x-graft-height` (provider archive height, ≙ the reference's
   *     height endpoint that paces streaming against the chain head).
-  *   - GET `url`/height: current archive height as text.
+  *   - GET `url`/height: current archive height as text — the chain head.
+  *     An absent `toBlock` scans up to it (one GET at planning; none when
+  *     `toBlock` is given) and a micro-batch stream never passes it.
   *
   * Scale shape: the block range splits into `numPartitions` independent
   * slices, each an InputPartition running its OWN pagination loop against
   * the provider — scan parallelism is cluster-sized, per-task memory is
-  * page-sized, and a provably-empty request list (contradictory AND'd
-  * pushdown, `requests == Seq.empty`) plans ZERO partitions and sends zero
-  * HTTP requests. Match-all is the explicit `Seq(ChainReq(Map.empty))`
+  * page-sized. Match-all is the explicit `Seq(ChainReq(Map.empty))`
   * (`"requests":[{}]` on the wire) — see WireProtocol's request-list
-  * semantics.
+  * semantics. Transient failures are retried `maxAttempts` times with
+  * exponential backoff from `retryBackoffMs`.
   *
   * Usage:
   *   spark.read.format("graft.sources.WireChainSource")
@@ -53,14 +46,28 @@ import graft.sources.WireProtocol.WireQuery
   *     .option("fromBlock", 0).option("toBlock", 10000) // toBlock default = provider height
   *     .load()
   */
-class WireChainSource extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
-  override def shortName(): String = "graftchainwire"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ChainSource.schemaFor(options.getOrDefault("table", "logs"))
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: JMap[String, String]): Table =
-    new WireChainTable(properties.asScala.toMap)
+class WireChainSource extends ChainProvider("chainwire", streams = true) {
+  private[sources] def backend(table: String, opts: Map[String, String]): ChainBackend = {
+    val url = opts.getOrElse("url",
+      throw new IllegalArgumentException("graftchainwire requires option 'url'"))
+    val numPartitions = ChainScan.numPartitions(opts)
+    // transient-failure policy (idempotent re-POST, exponential backoff)
+    val maxAttempts = opts.getOrElse("maxattempts", "3").toInt
+    val retryBackoffMs = opts.getOrElse("retrybackoffms", "100").toLong
+    new ChainBackend {
+      val defaultRange = (0L, None)
+      override def head(): Long =
+        WireHttp.retry(maxAttempts, retryBackoffMs)(WireHttp.height(url))
+      def plan(from: Long, to: Long, requests: Seq[ChainReq],
+               cols: Array[String]): ChainPlan =
+        ChainPlan(ChainScan.slice(from, to, numPartitions)(
+          WireChainPartition(url, table, _, _, requests, cols, maxAttempts,
+            retryBackoffMs)))
+      val readerFactory: PartitionReaderFactory =
+        (partition: InputPartition) =>
+          new WireChainReader(partition.asInstanceOf[WireChainPartition])
+    }
+  }
 }
 
 /** Minimal JDK-only HTTP plumbing for the wire protocol (client side). */
@@ -135,159 +142,6 @@ private[sources] object WireHttp {
   }
 }
 
-private class WireChainTable(props: Map[String, String])
-    extends Table with SupportsRead {
-  private val table = props.getOrElse("table", "logs")
-  override def name(): String = s"graft_chainwire_$table"
-  override def schema(): StructType = ChainSource.schemaFor(table)
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new WireChainScanBuilder(props ++ options.asScala)
-}
-
-private class WireChainScanBuilder(props0: Map[String, String]) extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-
-  private val props = ReqPushdown.lowerOpts(props0)
-  private val table = props.getOrElse("table", "logs")
-  private val blockCol = if (table == "instructions") "block_slot" else "block_number"
-  private val pushable = ChainSource.pushableColumns(table)
-  private val url = props.getOrElse("url",
-    throw new IllegalArgumentException("graftchainwire requires option 'url'"))
-
-  private var fromBlock = props.getOrElse("fromblock", "0").toLong
-  // exclusive; absent = provider archive height at planning time
-  private var toBlockOpt: Option[Long] = props.get("toblock").map(_.toLong)
-  private val numPartitions = props.getOrElse("numpartitions", "4").toInt
-  require(numPartitions > 0, // 0 divides by zero in slice(); negative
-    // plans one partition per block, each with its own HTTP pagination
-    s"numPartitions must be positive, got $numPartitions")
-  // transient-failure policy (idempotent re-POST, exponential backoff)
-  private val maxAttempts = props.getOrElse("maxattempts", "3").toInt
-  private val retryBackoffMs = props.getOrElse("retrybackoffms", "100").toLong
-
-  // `filter.<col>` option channel — same contract as the sibling sources
-  // (and the only pushdown channel on the streaming path)
-  private var requests: Seq[ChainReq] =
-    Seq(ReqPushdown.optionReq(pushable, props))
-  private var pushed: Array[Filter] = Array.empty
-  private var requiredCols: Array[String] = ChainSource.schemaFor(table).fieldNames
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (accepted, residual) = filters.partition {
-      case GreaterThanOrEqual(c, v: Long) if c == blockCol => fromBlock = math.max(fromBlock, v); true
-      case GreaterThan(c, v: Long) if c == blockCol        => fromBlock = math.max(fromBlock, ReqPushdown.incSat(v)); true
-      case LessThan(c, v: Long) if c == blockCol           => toBlockOpt = Some(math.min(toBlockOpt.getOrElse(Long.MaxValue), v)); true
-      case LessThanOrEqual(c, v: Long) if c == blockCol    => toBlockOpt = Some(math.min(toBlockOpt.getOrElse(Long.MaxValue), ReqPushdown.incSat(v))); true
-      // point lookup = [v, v+1) — otherwise the client paged the whole
-      // archive to return one block's rows filtered client-side
-      case EqualTo(c, v: Long) if c == blockCol =>
-        fromBlock = math.max(fromBlock, v)
-        toBlockOpt = Some(math.min(toBlockOpt.getOrElse(Long.MaxValue),
-          ReqPushdown.incSat(v))); true
-      // IN brackets the range; the set stays residual (side effect only)
-      case In(c, vs) if c == blockCol && vs.nonEmpty &&
-          vs.forall(_.isInstanceOf[Long]) =>
-        val ls = vs.map(_.asInstanceOf[Long])
-        fromBlock = math.max(fromBlock, ls.min)
-        toBlockOpt = Some(math.min(toBlockOpt.getOrElse(Long.MaxValue),
-          ReqPushdown.incSat(ls.max)))
-        false
-      case f =>
-        ReqPushdown.parseReq(f, pushable) match {
-          case Some(alts) =>
-            requests = for { r <- requests; a <- alts; m <- r.and(a) } yield m
-            true
-          case None => false
-        }
-    }
-    pushed = accepted
-    residual
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    requiredCols = requiredSchema.fieldNames
-
-  override def build(): Scan = new Scan with Batch {
-    // props is already the lowered map (see the constructor)
-    private val blocksPerBatch = props.getOrElse("blocksperbatch", "100").toLong
-
-    private def slice(lo0: Long, hi: Long): Array[InputPartition] = {
-      // provably-empty request list (contradictory pushdown): zero
-      // partitions, zero HTTP traffic — don't make a 1000-executor
-      // cluster ask the provider for nothing
-      if (requests.isEmpty) return Array.empty
-      val span = math.max(hi - lo0, 0L)
-      val step = math.max(1L, (span + numPartitions - 1) / numPartitions)
-      (lo0 until hi by step).map { lo =>
-        WireChainPartition(url, table, lo, math.min(lo + step, hi),
-          requests, requiredCols, maxAttempts, retryBackoffMs): InputPartition
-      }.toArray
-    }
-    private def liveHeight(): Long =
-      WireHttp.retry(maxAttempts, retryBackoffMs)(WireHttp.height(url))
-    private val readerFactory: PartitionReaderFactory =
-      (partition: InputPartition) =>
-        new WireChainReader(partition.asInstanceOf[WireChainPartition])
-
-    override def readSchema(): StructType =
-      StructType(requiredCols.map(c => ChainSource.schemaFor(table)(c)))
-    override def toBatch: Batch = this
-    override def description(): String = {
-      val reqDesc =
-        if (requests.isEmpty) "none"
-        else if (requests == Seq(ChainReq(Map.empty))) "all"
-        else requests.map(_.describe).mkString("|")
-      s"graft_chainwire_$table [$fromBlock,${toBlockOpt.getOrElse("head")}) " +
-        s"reqs=$reqDesc cols=${requiredCols.mkString(",")}"
-    }
-
-    override def planInputPartitions(): Array[InputPartition] =
-      // batch semantics need a bound: absent toBlock = provider height NOW
-      // (one metadata GET at planning time, ≙ "scan up to the archive head")
-      slice(fromBlock, toBlockOpt.getOrElse(liveHeight()))
-    override def createReaderFactory(): PartitionReaderFactory = readerFactory
-
-    /** Streaming: offsets are block numbers; each trigger admits at most
-      * `blocksPerBatch` blocks AND never runs past the provider's archive
-      * height — the height header/endpoint is what paces a live client
-      * against the chain head (the reference's paced pull loop,
-      * `pipeline.py:110-113`). Absent toBlock = follow the head forever.
-      */
-    override def toMicroBatchStream(checkpointLocation: String)
-        : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-      new org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-          with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
-        import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
-        private val hardEnd = toBlockOpt.getOrElse(Long.MaxValue)
-        override def initialOffset(): Offset = ChainOffset(fromBlock)
-        override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-          val from = start.asInstanceOf[ChainOffset].block
-          val head = math.min(hardEnd, liveHeight())
-          ChainOffset(math.min(math.max(head, from), from + blocksPerBatch))
-        }
-        override def latestOffset(): Offset =
-          throw new UnsupportedOperationException(
-            "paced source: use latestOffset(start, limit)")
-        override def reportLatestOffset(): Offset =
-          ChainOffset(math.min(hardEnd, liveHeight()))
-        override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-        override def deserializeOffset(json: String): Offset =
-          ChainOffset(json.toLong)
-        override def planInputPartitions(start: Offset, end: Offset)
-            : Array[InputPartition] =
-          slice(start.asInstanceOf[ChainOffset].block,
-            end.asInstanceOf[ChainOffset].block)
-        override def createReaderFactory(): PartitionReaderFactory = readerFactory
-        override def commit(end: Offset): Unit = ()
-        override def stop(): Unit = ()
-      }
-  }
-}
-
 private case class WireChainPartition(url: String, table: String,
                                       fromBlock: Long, toBlock: Long,
                                       requests: Seq[ChainReq],
@@ -308,7 +162,7 @@ private class WireChainReader(p: WireChainPartition)
     StructType(p.cols.map(c => ChainSource.schemaFor(p.table)(c)))
   private val allocator = new RootAllocator()
   private var cursor = p.fromBlock
-  private var exhausted = p.requests.isEmpty || cursor >= p.toBlock
+  private var exhausted = cursor >= p.toBlock
   // batch-lazy page decode: holds one Arrow batch of decoded rows, not the
   // whole page; tracked so close() can release a half-read page's buffers
   // (task abort / LIMIT) before the allocator is closed

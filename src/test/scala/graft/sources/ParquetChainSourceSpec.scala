@@ -62,6 +62,17 @@ class ParquetChainSourceSpec extends SparkSpec {
     assert(desc.contains(s"rgs=$parts/4"), desc)
   }
 
+  test("fromBlock/toBlock options bound the scan and prune row groups") {
+    val df = read("fromBlock" -> "300")
+    assert(df.count() == 300)
+    val desc = scanOf(df).scan.description()
+    assert(desc.contains("[300,"), s"fromBlock option ignored: $desc")
+    val parts = scanOf(df).inputRDD.getNumPartitions
+    assert(parts <= 2, s"row groups not pruned: $parts of 4 planned ($desc)")
+    assert(desc.contains(s"rgs=$parts/4"), desc)
+    assert(read("toBlock" -> "100").count() == 300)
+  }
+
   test("topic0 equality is matched inside the file reader") {
     val t0 = ChainSource.topic0Pool(0)
     val df = read().filter(col("topic0") === lit(t0))

@@ -1,7 +1,11 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.DataSourceRegister
 
 import graft.SparkSpec
 
@@ -57,6 +61,9 @@ class ProviderEquivalenceSpec extends SparkSpec {
       .option("url", server.url).option("table", "logs")
       .option("toBlock", "200").load()
 
+  private def scanOf(df: DataFrame): BatchScanExec =
+    df.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }.get
+
   private def keyed(df: DataFrame): Set[Seq[Any]] =
     df.select(col("block_number"), col("log_index"), hex(col("address")),
         hex(col("topic0")), hex(col("topic1")), hex(col("data")))
@@ -89,5 +96,27 @@ class ProviderEquivalenceSpec extends SparkSpec {
       assert(keyed(synthetic.filter(pred)) == want, "synthetic diverged")
       assert(keyed(file.filter(pred)) == want, "file-backed diverged")
       assert(keyed(wire.filter(pred)) == want, "wire diverged")
+      // a provably-empty request list plans nothing, in every provider
+      if (name == "contradiction")
+        for ((label, df) <- Seq("synthetic" -> synthetic, "file-backed" -> file,
+            "wire" -> wire)) {
+          val scan = scanOf(df.filter(pred))
+          assert(scan.inputRDD.getNumPartitions == 0, s"$label planned partitions")
+          assert(scan.scan.description().contains("reqs=none"),
+            s"$label: ${scan.scan.description()}")
+        }
     }
+
+  test("the three providers resolve by their registered short names") {
+    val registered = java.util.ServiceLoader.load(classOf[DataSourceRegister])
+      .asScala.map(_.shortName()).toSet
+    assert(Set("graftchain", "graftchainfile", "graftchainwire").subsetOf(registered),
+      registered)
+    val want = keyed(plain)
+    assert(keyed(spark.read.format("graftchain").option("toBlock", "200").load()) == want)
+    assert(keyed(spark.read.format("graftchainfile")
+      .option("path", s"$dir/logs").load()) == want)
+    assert(keyed(spark.read.format("graftchainwire").option("url", server.url)
+      .option("toBlock", "200").load()) == want)
+  }
 }
