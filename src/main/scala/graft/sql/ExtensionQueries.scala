@@ -1,7 +1,9 @@
 package graft.sql
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
 import graft.ops.{BpeOps, ClassifyOps, CrawlOps, DedupOps, DsirOps, GraphOps, HtmlOps, HttpOps, JoinOps, LmOps, RobotsOps, SampleOps, SitemapOps, StatOps, TextOps, TimeOps, UrlOps, VectorOps, WarcOps}
@@ -71,6 +73,12 @@ object ExtensionQueries {
   private def respread(files: DataFrame): DataFrame =
     files.repartition(
       files.sparkSession.sparkContext.defaultParallelism)
+
+  /** A Catalyst expression builder (a kernel with no Column API, e.g.
+    * [[graft.functions.GzipBytes]]) applied to a Column.
+    */
+  private def bridge1(mk: Expression => Expression, c: Column): Column =
+    Bridge.column(mk(Bridge.expression(c)))
 
   /** Per-(application, sf-dir) memo of BOUNDED driver-side artifacts the
     * composite ANN gates share — the brute-force truth set (queries×k rows)
@@ -1135,15 +1143,7 @@ object ExtensionQueries {
     // corpus never shuffled pairwise.
     "x94_training_manifest" -> { (s, dir) =>
       val d = spread(t(s, dir, "documents"))
-      val quality = TextOps.qualityScore(d)
-        .filter(col("n_words") >= 20 && col("alpha_ratio_bp") >= 7000)
-        .select("doc_id", "source", "text")
-      val canon = quality.withColumn("__ct",
-        TextOps.normalizeText(col("text"), stripPunct = true))
-      val kept = DedupOps.exact(
-        canon.select(col("doc_id"), col("__ct")), "doc_id", "__ct")
-      val surv = canon.join(kept, Seq("doc_id"), "left_semi")
-      val bal = SampleOps.temperatureSample(surv, "doc_id", "source")
+      val (_, _, bal) = manifestStages(d)
       val toks = bal.select(col("doc_id"),
         size(split(col("text"), " ")).cast(LongType).as("n_toks_doc"))
       SampleOps.packSequences(toks, "doc_id", "n_toks_doc", seqLen = 128)
@@ -1227,15 +1227,7 @@ object ExtensionQueries {
     // feeds expensive SHUFFLING consumers, not count(*) branches).
     "x102_funnel_report" -> { (s, dir) =>
       val d = spread(t(s, dir, "documents"))
-      val quality = TextOps.qualityScore(d)
-        .filter(col("n_words") >= 20 && col("alpha_ratio_bp") >= 7000)
-        .select("doc_id", "source", "text")
-      val canon = quality.withColumn("__ct",
-        TextOps.normalizeText(col("text"), stripPunct = true))
-      val kept = DedupOps.exact(
-        canon.select(col("doc_id"), col("__ct")), "doc_id", "__ct")
-      val surv = canon.join(kept, Seq("doc_id"), "left_semi")
-      val bal = SampleOps.temperatureSample(surv, "doc_id", "source")
+      val (quality, surv, bal) = manifestStages(d)
       StatOps.funnelReport(
           Seq("raw" -> d, "quality" -> quality, "dedup" -> surv,
             "balanced" -> bal),
@@ -1272,15 +1264,7 @@ object ExtensionQueries {
     // shows one domain losing 99%. Bounded stages × sources metadata.
     "x105_funnel_by_source" -> { (s, dir) =>
       val d = spread(t(s, dir, "documents"))
-      val quality = TextOps.qualityScore(d)
-        .filter(col("n_words") >= 20 && col("alpha_ratio_bp") >= 7000)
-        .select("doc_id", "source", "text")
-      val canon = quality.withColumn("__ct",
-        TextOps.normalizeText(col("text"), stripPunct = true))
-      val kept = DedupOps.exact(
-        canon.select(col("doc_id"), col("__ct")), "doc_id", "__ct")
-      val surv = canon.join(kept, Seq("doc_id"), "left_semi")
-      val bal = SampleOps.temperatureSample(surv, "doc_id", "source")
+      val (quality, surv, bal) = manifestStages(d)
       StatOps.funnelReportBy(
           Seq("raw" -> d, "quality" -> quality, "dedup" -> surv,
             "balanced" -> bal),
@@ -1641,9 +1625,7 @@ object ExtensionQueries {
     "x130_warc_to_c4" -> { (s, dir) =>
       val d = spread(t(s, dir, "documents"))
       val pages = WarcOps.responses(warcFixture(d), "file_id", "content")
-        .select(nullif(regexp_extract(col("target_uri"),
-            "/doc/([0-9]+)$", 1), lit("")).cast(LongType).as("doc_id"),
-          col("payload").as("html"))
+        .select(uriDocId, col("payload").as("html"))
       HtmlOps.c4Pages(pages, "doc_id", "html")
         .select("doc_id", "n_lines", "text")
         .orderBy("doc_id")
@@ -1946,15 +1928,8 @@ object ExtensionQueries {
         files.select(col("file_id"),
           WarcOps.gunzipText(col("gz")).as("content")),
         "file_id", "content")
-      val routed = HttpOps.parseResponses(pages, "payload")
-        .filter(col("status_code") === 200 &&
-          col("content_type") === "text/html")
-        .select(nullif(regexp_extract(col("target_uri"),
-            "/doc/([0-9]+)$", 1), lit("")).cast(LongType).as("doc_id"),
-          HttpOps.decodeBody(col("body"), col("charset")).as("html"))
-      HtmlOps.c4Pages(routed, "doc_id", "html")
-        .select("doc_id", "n_lines", "text")
-        .orderBy("doc_id")
+      c4ResponsePages(pages,
+        HttpOps.decodeBody(col("body"), col("charset")))
     },
 
     // x140 — the HTTP envelope split on its own cross-engine oracle
@@ -2019,15 +1994,7 @@ object ExtensionQueries {
     // queue by.
     "x142_pagerank" -> { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      val d = spread(t(s, dir, "documents"))
-      val pages = d.select(col("doc_id"), linkBase.as("base"),
-        linkHtmlFixture.as("html"))
-      val edges = resolvedCanon(pages.select(col("base"),
-            explode(HtmlOps.extractLinks(col("html"))).as("ref")),
-          Seq("base"), "ref")
-        .filter(col("canon_url") =!= col("base"))
-        .groupBy(col("base").as("src"), col("canon_url").as("dst"))
-        .agg(count(lit(1)).as("w"))
+      val edges = pageLinkEdges(spread(t(s, dir, "documents")))
       val ranks = GraphOps.pageRankInt(edges, iterations = 2)
         .withColumn("reg_domain", UrlOps.domainOf(col("node")))
       // argmax with a deterministic tie-break: min node among the
@@ -2145,16 +2112,8 @@ object ExtensionQueries {
       val d = spread(t(s, dir, "documents"))
       val pages = WarcOps.responses(
         warcChunkedHttpFixture(d), "file_id", "content")
-      val routed = HttpOps.parseResponses(pages, "payload")
-        .filter(col("status_code") === 200 &&
-          col("content_type") === "text/html" &&
-          col("transfer_encoding") === "chunked")
-        .select(nullif(regexp_extract(col("target_uri"),
-            "/doc/([0-9]+)$", 1), lit("")).cast(LongType).as("doc_id"),
-          col("body").as("html"))
-      HtmlOps.c4Pages(routed, "doc_id", "html")
-        .select("doc_id", "n_lines", "text")
-        .orderBy("doc_id")
+      c4ResponsePages(pages, col("body"),
+        col("transfer_encoding") === "chunked")
     },
 
     // x145 — the prioritized frontier SCHEDULE (the round's capstone
@@ -2266,15 +2225,8 @@ object ExtensionQueries {
       val d = spread(t(s, dir, "documents"))
       val pages = WarcOps.responses(
         warcCharsetFixture(d), "file_id", "content")
-      val routed = HttpOps.parseResponses(pages, "payload")
-        .filter(col("status_code") === 200 &&
-          col("content_type") === "text/html")
-        .select(nullif(regexp_extract(col("target_uri"),
-            "/doc/([0-9]+)$", 1), lit("")).cast(LongType).as("doc_id"),
-          HttpOps.decodeBody(col("body"), col("charset")).as("html"))
-      HtmlOps.c4Pages(routed, "doc_id", "html")
-        .select("doc_id", "n_lines", "text")
-        .orderBy("doc_id")
+      c4ResponsePages(pages,
+        HttpOps.decodeBody(col("body"), col("charset")))
     },
 
     // x148 — <base href> resolution (HTML5 §4.2.3): when a page
@@ -2331,25 +2283,12 @@ object ExtensionQueries {
     // (no effect), the rest declare nothing.
     "x149_recrawl_priority" -> { (s, dir) =>
       val d = spread(t(s, dir, "documents"))
-      val caps = d
-        .select(col("doc_id"),
-          explode(sequence(lit(0), lit(2))).as("k"))
-        .withColumn("url", concat(lit("https://example.com/doc/"),
-          col("doc_id").cast("string")))
-        .withColumn("capture_date", concat(lit("2020-01-"),
-          lpad((lit(1) + col("doc_id") % 9 + col("k") * 7)
-            .cast("string"), 2, "0")))
-        .withColumn("version",
-          when(col("doc_id") % 3 === 0, col("k"))
-            .when(col("doc_id") % 3 === 1,
-              when(col("k") >= 2, lit(1)).otherwise(lit(0)))
-            .otherwise(lit(0)))
+      val caps = captureHistory(d)
         .withColumn("digest", md5(concat(col("doc_id").cast("string"),
           lit("_v"), col("version").cast("string"))))
       val lastmods = d.filter(col("doc_id") % 5 === 4 ||
           col("doc_id") % 5 === 2)
-        .select(concat(lit("https://example.com/doc/"),
-            col("doc_id").cast("string")).as("url"),
+        .select(docUrl.as("url"),
           when(col("doc_id") % 5 === 4, lit("2020-02-10"))
             .otherwise(lit("2020-01-01")).as("lastmod"))
       CrawlOps.recrawlPriority(caps, "2020-02-15",
@@ -2377,16 +2316,9 @@ object ExtensionQueries {
       val d = spread(t(s, dir, "documents"))
       val pages = WarcOps.responses(
         warcContentEncodingFixture(d), "file_id", "content")
-      val routed = HttpOps.parseResponses(pages, "payload")
-        .filter(col("status_code") === 200 &&
-          col("content_type") === "text/html" &&
-          col("content_encoding").isin("gzip", "deflate", "zstd"))
-        .select(nullif(regexp_extract(col("target_uri"),
-            "/doc/([0-9]+)$", 1), lit("")).cast(LongType).as("doc_id"),
-          HttpOps.decodeBody(col("body"), col("charset")).as("html"))
-      HtmlOps.c4Pages(routed, "doc_id", "html")
-        .select("doc_id", "n_lines", "text")
-        .orderBy("doc_id")
+      c4ResponsePages(pages,
+        HttpOps.decodeBody(col("body"), col("charset")),
+        col("content_encoding").isin("gzip", "deflate", "zstd"))
     },
 
     // x151 — block-density main-content extraction (r17, VERDICT r16
@@ -2598,8 +2530,7 @@ object ExtensionQueries {
       val decoded = HttpOps.parseResponses(pages, "payload")
         .filter(col("status_code") === 200 &&
           col("content_type") === "text/html")
-        .select(nullif(regexp_extract(col("target_uri"),
-            "/doc/([0-9]+)$", 1), lit("")).cast(LongType).as("doc_id"),
+        .select(uriDocId,
           coalesce(col("charset"), HtmlOps.metaCharset(col("body")))
             .as("charset_used"),
           col("body"))
@@ -2673,18 +2604,7 @@ object ExtensionQueries {
     // validator, and boosts priority by 10000.
     "x159_revalidation_plan" -> { (s, dir) =>
       val d = spread(t(s, dir, "documents"))
-      val caps = d
-        .select(col("doc_id"), explode(sequence(lit(0), lit(2))).as("k"))
-        .withColumn("url", concat(lit("https://example.com/doc/"),
-          col("doc_id").cast("string")))
-        .withColumn("capture_date", concat(lit("2020-01-"),
-          lpad((lit(1) + col("doc_id") % 9 + col("k") * 7)
-            .cast("string"), 2, "0")))
-        .withColumn("version",
-          when(col("doc_id") % 3 === 0, col("k"))
-            .when(col("doc_id") % 3 === 1,
-              when(col("k") >= 2, lit(1)).otherwise(lit(0)))
-            .otherwise(lit(0)))
+      val caps = captureHistory(d)
         .withColumn("digest", md5(concat(col("doc_id").cast("string"),
           lit("_v"), col("version").cast("string"))))
         .withColumn("etag",
@@ -2698,9 +2618,7 @@ object ExtensionQueries {
               lit(" Jan 2020 00:00:00 GMT")))
             .otherwise(lit(null).cast("string")))
       val sitemap = d.filter(col("doc_id") % 5 === 0)
-        .select(concat(lit("https://example.com/doc/"),
-            col("doc_id").cast("string")).as("url"),
-          lit("2020-02-10").as("lastmod"))
+        .select(docUrl.as("url"), lit("2020-02-10").as("lastmod"))
       CrawlOps.revalidationPlan(caps, "2020-02-15",
           sitemapLastmod = sitemap)
         .orderBy("url")
@@ -2727,17 +2645,14 @@ object ExtensionQueries {
     // the same recomputed C4 target.
     "x166_bom_charset" -> { (s, dir) =>
       val d = spread(t(s, dir, "documents"))
-      val idS = col("doc_id").cast("string")
       val bomArm = col("doc_id") % 4
-      val htmlAcc = regexp_replace(htmlFixture, lit("</body></html>$"),
-        concat(lit(AccentLineHead), idS, lit(AccentLineTail)))
       val view = when(bomArm === 0, concat(lit("ï»¿"),
-          decode(encode(htmlAcc, "UTF-8"), "ISO-8859-1")))
+          decode(encode(accentPage, "UTF-8"), "ISO-8859-1")))
         .when(bomArm === 1, concat(lit("ÿþ"),
-          decode(encode(htmlAcc, "UTF-16LE"), "ISO-8859-1")))
+          decode(encode(accentPage, "UTF-16LE"), "ISO-8859-1")))
         .when(bomArm === 2, concat(lit("þÿ"),
-          decode(encode(htmlAcc, "UTF-16BE"), "ISO-8859-1")))
-        .otherwise(decode(encode(htmlAcc, "UTF-8"), "ISO-8859-1"))
+          decode(encode(accentPage, "UTF-16BE"), "ISO-8859-1")))
+        .otherwise(decode(encode(accentPage, "UTF-8"), "ISO-8859-1"))
       val ct = when(bomArm === 0, lit("text/html; charset=iso-8859-1"))
         .when(bomArm === 3, lit("text/html; charset=utf-8"))
         .otherwise(lit("text/html"))
@@ -2760,22 +2675,7 @@ object ExtensionQueries {
 
     "x165_dedup_store" -> { (s, dir) =>
       val d = spread(t(s, dir, "documents"))
-      val caps = d
-        .select(col("doc_id"), explode(sequence(lit(0), lit(2))).as("k"))
-        .withColumn("url", concat(lit("https://example.com/doc/"),
-          col("doc_id").cast("string")))
-        .withColumn("capture_date", concat(lit("2020-01-"),
-          lpad((lit(1) + col("doc_id") % 9 + col("k") * 7)
-            .cast("string"), 2, "0")))
-        .withColumn("version",
-          when(col("doc_id") % 3 === 0, col("k"))
-            .when(col("doc_id") % 3 === 1,
-              when(col("k") >= 2, lit(1)).otherwise(lit(0)))
-            .otherwise(lit(0)))
-        .withColumn("payload", concat(lit("Body v"),
-          col("version").cast("string"), lit(" of doc "),
-          col("doc_id").cast("string"), lit(".")))
-        .withColumn("digest", md5(col("payload")))
+      val caps = storeCaptures(d)
       val recs = WarcOps.dedupStoreRecords(caps)
         .withColumn("file_id", expr("doc_id div 8"))
       val files = respread(recs.groupBy("file_id")
@@ -2814,22 +2714,7 @@ object ExtensionQueries {
     // third ~2/3 (two of three captures collapse to revisits).
     "x167_store_savings" -> { (s, dir) =>
       val d = spread(t(s, dir, "documents"))
-      val caps = d
-        .select(col("doc_id"), explode(sequence(lit(0), lit(2))).as("k"))
-        .withColumn("url", concat(lit("https://example.com/doc/"),
-          col("doc_id").cast("string")))
-        .withColumn("capture_date", concat(lit("2020-01-"),
-          lpad((lit(1) + col("doc_id") % 9 + col("k") * 7)
-            .cast("string"), 2, "0")))
-        .withColumn("version",
-          when(col("doc_id") % 3 === 0, col("k"))
-            .when(col("doc_id") % 3 === 1,
-              when(col("k") >= 2, lit(1)).otherwise(lit(0)))
-            .otherwise(lit(0)))
-        .withColumn("payload", concat(lit("Body v"),
-          col("version").cast("string"), lit(" of doc "),
-          col("doc_id").cast("string"), lit(".")))
-        .withColumn("digest", md5(col("payload")))
+      val caps = storeCaptures(d)
       WarcOps.dedupStoreRecords(caps)
         .groupBy((col("doc_id") % 3).as("change_class"))
         .agg(count(lit(1)).as("n_records"),
@@ -2857,25 +2742,16 @@ object ExtensionQueries {
     // byte accounting.
     "x164_wet_roundtrip" -> { (s, dir) =>
       val d = spread(t(s, dir, "documents"))
-      val idS = col("doc_id").cast("string")
-      val htmlAcc = regexp_replace(htmlFixture, lit("</body></html>$"),
-        concat(lit(AccentLineHead), idS, lit(AccentLineTail)))
       val pages = HtmlOps.c4Pages(
-        d.select(col("doc_id"), htmlAcc.as("html")), "doc_id", "html")
+        d.select(col("doc_id"), accentPage.as("html")), "doc_id", "html")
       val wet = pages.select(col("doc_id"),
         expr("doc_id div 8").as("file_id"),
-        WarcOps.conversionRecord(
-          concat(lit("https://example.com/doc/"),
-            col("doc_id").cast("string")),
-          lit("2020-02-01T00:00:00Z"), col("text")).as("r"))
-      val files = respread(wet.groupBy("file_id")
-        .agg(concat_ws("", array_sort(collect_list(
-            struct(col("doc_id"), col("r")))).getField("r"))
-          .as("content")))
+        WarcOps.conversionRecord(docUrl, lit("2020-02-01T00:00:00Z"),
+          col("text")).as("r"))
+      val files = warcFiles(wet, "doc_id")
       WarcOps.parseRecords(files, "file_id", "content")
         .filter(col("warc_type") === "conversion")
-        .select(nullif(regexp_extract(col("target_uri"),
-            "/doc/([0-9]+)$", 1), lit("")).cast(LongType).as("doc_id"),
+        .select(uriDocId,
           col("refers_to"), col("content_length"), col("length_ok"),
           HttpOps.decodeBody(col("payload"), lit("utf-8")).as("text"))
         .orderBy("doc_id")
@@ -2963,15 +2839,7 @@ object ExtensionQueries {
     // norm is not); same page-level edge stream as x142; 2 iterations
     // unrolled in the mirror.
     "x161_hits" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val pages = d.select(col("doc_id"), linkBase.as("base"),
-        linkHtmlFixture.as("html"))
-      val edges = resolvedCanon(pages.select(col("base"),
-            explode(HtmlOps.extractLinks(col("html"))).as("ref")),
-          Seq("base"), "ref")
-        .filter(col("canon_url") =!= col("base"))
-        .groupBy(col("base").as("src"), col("canon_url").as("dst"))
-        .agg(count(lit(1)).as("w"))
+      val edges = pageLinkEdges(spread(t(s, dir, "documents")))
       GraphOps.hitsInt(edges, iterations = 2)
         .orderBy("node")
     },
@@ -3020,17 +2888,8 @@ object ExtensionQueries {
         ("en", TextOps.GopherStopProbe, 2L, 10L, 100000L, 300L, 1000L, 8000L),
         ("fr", langFrStops, 2L, 10L, 100000L, 250L, 1000L, 8000L),
         ("de", langDeStops, 2L, 10L, 100000L, 250L, 1000L, 8000L))
-        .toDF("lang", "stop_words", "min_stop_hits", "min_words",
-          "max_words", "min_word_len_centi", "max_word_len_centi",
-          "min_alpha_bp")
-      val eng = TextOps.gopherFilter(lang, "text", minWords = 10L)
-        .filter(col("keep"))
-      val aware = TextOps.gopherFilterByLang(lang, profiles)
-        .filter(col("keep"))
-      StatOps.funnelReportBy(
-          Seq("raw" -> lang, "english_cfg" -> eng, "lang_aware" -> aware),
-          size(split(col("text"), " ")), "lang")
-        .orderBy("stage_idx", "lang")
+        .toDF(GopherProfileCols: _*)
+      gopherFunnel(lang, profiles)
     },
 
     // x169 — LANGUAGE-AWARE C4 line rules (r18, the x168 sibling at
@@ -3082,10 +2941,7 @@ object ExtensionQueries {
         WarcOps.watRecord(col("uri"), lit("2020-03-01T00:00:00Z"),
           to_json(struct(col("uri"), col("title"), col("links"),
             col("headers")))).as("r"))
-      val files = respread(wat.groupBy("file_id")
-        .agg(concat_ws("", array_sort(collect_list(
-            struct(col("doc_id"), col("r")))).getField("r"))
-          .as("content")))
+      val files = warcFiles(wat, "doc_id")
       WarcOps.parseRecords(files, "file_id", "content")
         .filter(col("warc_type") === "metadata")
         .withColumn("j", HttpOps.decodeBody(col("payload"), lit("utf-8")))
@@ -3228,17 +3084,8 @@ object ExtensionQueries {
         ("el", langElStops, 2L, 10L, 100000L, 250L, 1000L, 0L),
         ("he", langHeStops, 2L, 10L, 100000L, 250L, 1000L, 0L),
         ("hi", langHiStops, 2L, 10L, 100000L, 250L, 1000L, 0L))
-        .toDF("lang", "stop_words", "min_stop_hits", "min_words",
-          "max_words", "min_word_len_centi", "max_word_len_centi",
-          "min_alpha_bp")
-      val eng = TextOps.gopherFilter(lang, "text", minWords = 10L)
-        .filter(col("keep"))
-      val aware = TextOps.gopherFilterByLang(lang, profiles)
-        .filter(col("keep"))
-      StatOps.funnelReportBy(
-          Seq("raw" -> lang, "english_cfg" -> eng, "lang_aware" -> aware),
-          size(split(col("text"), " ")), "lang")
-        .orderBy("stage_idx", "lang")
+        .toDF(GopherProfileCols: _*)
+      gopherFunnel(lang, profiles)
     },
 
     // x175 — PDF text extraction (r19, VERDICT r18 #3; the x150
@@ -3263,11 +3110,6 @@ object ExtensionQueries {
       val d = spread(t(s, dir, "documents"))
       val idS = col("doc_id").cast("string")
       val arm = col("doc_id") % 5
-      def bridge1(mk: org.apache.spark.sql.catalyst.expressions.Expression =>
-          org.apache.spark.sql.catalyst.expressions.Expression,
-          c: Column): Column =
-        org.apache.spark.sql.graftbridge.Bridge.column(
-          mk(org.apache.spark.sql.graftbridge.Bridge.expression(c)))
       val contentTj = concat(lit("BT /F1 12 Tf 72 720 Td (Report "), idS,
         lit(" first line.) Tj T* (Second line with accents: café "), idS,
         lit(".) Tj ET"))
@@ -3350,15 +3192,9 @@ object ExtensionQueries {
     "x176_first_mile_capstone" -> { (s, dir) =>
       import s.implicits._
       val d = spread(t(s, dir, "documents"))
-      val idS = col("doc_id").cast("string")
       val l3 = col("doc_id") % 3
       val isShort = col("doc_id") % 5 === 4
       val md5g = md5(expr("doc_id div 6").cast("string"))
-      def bridge1(mk: org.apache.spark.sql.catalyst.expressions.Expression =>
-          org.apache.spark.sql.catalyst.expressions.Expression,
-          c: Column): Column =
-        org.apache.spark.sql.graftbridge.Bridge.column(
-          mk(org.apache.spark.sql.graftbridge.Bridge.expression(c)))
       // line 1 as the DECLARED-CHARSET byte view: the ja paragraph's
       // real windows-31j bytes (shift_jis superset — the WHATWG label),
       // the fr paragraph's real UTF-8 bytes; ASCII is identity in both
@@ -3416,28 +3252,8 @@ object ExtensionQueries {
             length(gzView).cast("string"), lit("\r\n\r\n"), gzView))
           .otherwise(concat(
             lit("\r\nTransfer-Encoding: chunked\r\n\r\n"), chunked)))
-      val uriC = concat(lit("https://example.com/doc/"), idS)
-      val base = d.select(col("doc_id"),
-        (col("doc_id") / 8).cast(LongType).as("file_id"),
-        httpMsg.as("__http"))
-      val info = base.select(col("file_id")).distinct()
-        .select(col("file_id"), lit(-1L).as("ord_doc"),
-          warcRecordSynth("warcinfo", lit(null).cast("string"),
-            lit("2020-01-01T00:00:00Z"),
-            lit("software: graft-synth/1.0")).as("r"))
-      val resp = base
-        .select(col("file_id"), col("doc_id").as("ord_doc"),
-          warcRecordSynth("response", uriC, lit("2020-03-01T00:00:00Z"),
-            col("__http")).as("r"))
-      val files = respread(info.unionByName(resp)
-        .select(col("file_id"), col("ord_doc"),
-          WarcOps.gzipMember(col("r")).as("g"))
-        .groupBy("file_id")
-        .agg(aggregate(
-          array_sort(collect_list(struct(col("ord_doc"), col("g"))))
-            .getField("g"),
-          lit(Array.emptyByteArray),
-          (acc, x) => concat(acc, x)).as("gz")))
+      val files = warcHttpFiles(d, Seq(), httpMsg, gz = true,
+        date = lit("2020-03-01T00:00:00Z"))
       // ---- the engine chain under test ----
       val pages = WarcOps.responses(
         files.select(col("file_id"),
@@ -3467,9 +3283,7 @@ object ExtensionQueries {
       // ~25-expression router fan-out downstream.
       val envelope = HttpOps.parseResponses(pages, "payload")
         .filter(col("status_code") === 200)
-        .select(nullif(regexp_extract(col("target_uri"),
-            "/doc/([0-9]+)$", 1), lit("")).cast(LongType).as("doc_id"),
-          col("content_type"), col("charset"), col("body"))
+        .select(uriDocId, col("content_type"), col("charset"), col("body"))
         .localCheckpoint()
       val mt = HttpOps.effectiveMediaType(col("content_type"),
         HttpOps.sniffMediaType(col("body")))
@@ -3586,22 +3400,7 @@ object ExtensionQueries {
     // jump straight to one capture without scanning the file.
     "x178_cdxj_index" -> { (s, dir) =>
       val d = spread(t(s, dir, "documents"))
-      val caps = d
-        .select(col("doc_id"), explode(sequence(lit(0), lit(2))).as("k"))
-        .withColumn("url", concat(lit("https://example.com/doc/"),
-          col("doc_id").cast("string")))
-        .withColumn("capture_date", concat(lit("2020-01-"),
-          lpad((lit(1) + col("doc_id") % 9 + col("k") * 7)
-            .cast("string"), 2, "0")))
-        .withColumn("version",
-          when(col("doc_id") % 3 === 0, col("k"))
-            .when(col("doc_id") % 3 === 1,
-              when(col("k") >= 2, lit(1)).otherwise(lit(0)))
-            .otherwise(lit(0)))
-        .withColumn("payload", concat(lit("Body v"),
-          col("version").cast("string"), lit(" of doc "),
-          col("doc_id").cast("string"), lit(".")))
-        .withColumn("digest", md5(col("payload")))
+      val caps = storeCaptures(d)
       // recs feeds BOTH the index and the assembled files — checkpoint
       // once (r20, the x125 multi-consumer discipline) so the
       // digest-window store synthesis runs once, not per consumer.
@@ -3699,6 +3498,53 @@ object ExtensionQueries {
         .orderBy("file_id", "urlkey", "cdxj_ts")
     }
   )
+
+  /** The x149 capture history: three weekly captures `k` per doc URL;
+    * `version` changes every capture on `doc_id % 3 == 0`, once (at the
+    * third) on `== 1`, never on `== 2`. Columns (doc_id, k, url,
+    * capture_date, version).
+    */
+  private def captureHistory(d: DataFrame): DataFrame =
+    d.select(col("doc_id"), explode(sequence(lit(0), lit(2))).as("k"))
+      .withColumn("url", docUrl)
+      .withColumn("capture_date", concat(lit("2020-01-"),
+        lpad((lit(1) + col("doc_id") % 9 + col("k") * 7)
+          .cast("string"), 2, "0")))
+      .withColumn("version",
+        when(col("doc_id") % 3 === 0, col("k"))
+          .when(col("doc_id") % 3 === 1,
+            when(col("k") >= 2, lit(1)).otherwise(lit(0)))
+          .otherwise(lit(0)))
+
+  /** [[captureHistory]] with each capture's payload text and its md5
+    * `digest` — the x165/x167/x178 dedup-store input.
+    */
+  private def storeCaptures(d: DataFrame): DataFrame =
+    captureHistory(d)
+      .withColumn("payload", concat(lit("Body v"),
+        col("version").cast("string"), lit(" of doc "),
+        col("doc_id").cast("string"), lit(".")))
+      .withColumn("digest", md5(col("payload")))
+
+  /** The columns of a `TextOps.gopherFilterByLang` profile table. */
+  private val GopherProfileCols = Seq("lang", "stop_words", "min_stop_hits",
+    "min_words", "max_words", "min_word_len_centi", "max_word_len_centi",
+    "min_alpha_bp")
+
+  /** The x168/x174 Gopher funnel over labelled docs `(doc_id, text,
+    * lang)`: docs and tokens per lang, raw, under the English-only
+    * config and under the per-language `profiles`.
+    */
+  private def gopherFunnel(lang: DataFrame, profiles: DataFrame): DataFrame = {
+    val eng = TextOps.gopherFilter(lang, "text", minWords = 10L)
+      .filter(col("keep"))
+    val aware = TextOps.gopherFilterByLang(lang, profiles)
+      .filter(col("keep"))
+    StatOps.funnelReportBy(
+        Seq("raw" -> lang, "english_cfg" -> eng, "lang_aware" -> aware),
+        size(split(col("text"), " ")), "lang")
+      .orderBy("stage_idx", "lang")
+  }
 
   /** The capstone fixture texts (x176) — the x168/x172 paragraphs for
     * en/fr (already verified to win their trigram routes with margin),
@@ -3901,18 +3747,8 @@ object ExtensionQueries {
     col("doc_id").cast("string"),
     lit(".</p></body></html>"))
 
-  /** WARC-file synthesis over the x127 HTML pages — ONE definition
-    * shared by x129 and x130, mirrored verbatim by [[warcSynthCtesSql]]:
-    * files of 8 docs (`doc_id / 8`), one warcinfo record per file
-    * (fixed payload, no Target-URI), a request record for every
-    * `doc_id % 3 == 0` doc, and a response record per doc whose payload
-    * is the [[htmlFixture]] page; records concatenated in
-    * (ord_doc, kind) order. Returns `(file_id, content)`.
-    */
   /** One synthesized WARC record (version line, headers, blank line,
-    * payload, record terminator) — shared by [[warcFixture]] (x129/
-    * x130, plain-text files) and [[warcGzHttpFixture]] (x139, gzip
-    * members).
+    * payload, record terminator) — shared by every WARC fixture.
     */
   private def warcRecordSynth(tpe: String, uri: Column, date: Column,
                               payload: Column,
@@ -3925,35 +3761,104 @@ object ExtensionQueries {
       lit("Content-Length: "), length(payload).cast("string"),
       lit("\r\n\r\n"), payload, lit("\r\n\r\n"))
 
-  private def warcFixture(d: DataFrame): DataFrame = {
-    val base = d.select(col("doc_id"),
-      (col("doc_id") / 8).cast(LongType).as("file_id"),
-      htmlFixture.as("html"))
-    val idStr = col("doc_id").cast("string")
-    val uriC = concat(lit("https://example.com/doc/"), idStr)
-    val dateC = concat(lit("2020-01-"),
-      lpad(((col("doc_id") % 28) + 1).cast("string"), 2, "0"),
-      lit("T00:00:00Z"))
-    def record(tpe: String, uri: Column, date: Column,
-               payload: Column): Column =
-      warcRecordSynth(tpe, uri, date, payload)
-    val info = base.select(col("file_id")).distinct()
-      .select(col("file_id"), lit(-1L).as("ord_doc"), lit(0).as("sub"),
-        record("warcinfo", lit(null).cast("string"),
+  /** The per-doc columns the fixtures share: files of 8 docs
+    * (`doc_id / 8`), the doc's URL (the WARC Target-URI) and its
+    * `2020-01-DD` WARC date.
+    */
+  private def warcFileId: Column =
+    (col("doc_id") / 8).cast(LongType).as("file_id")
+  private def docUrl: Column =
+    concat(lit("https://example.com/doc/"), col("doc_id").cast("string"))
+  private def warcDate: Column = concat(lit("2020-01-"),
+    lpad(((col("doc_id") % 28) + 1).cast("string"), 2, "0"),
+    lit("T00:00:00Z"))
+
+  /** The doc id back out of a parsed record's [[docUrl]] `target_uri`. */
+  private def uriDocId: Column = nullif(regexp_extract(col("target_uri"),
+    "/doc/([0-9]+)$", 1), lit("")).cast(LongType).as("doc_id")
+
+  /** One warcinfo record per file of `base` (fixed payload, no
+    * Target-URI) at `ord_doc = -1`, so it sorts first in its file;
+    * `sortCols` fill any sort columns between `ord_doc` and `r`.
+    */
+  private def warcInfoRecords(base: DataFrame, sortCols: Column*): DataFrame =
+    base.select(col("file_id")).distinct()
+      .select(Seq(col("file_id"), lit(-1L).as("ord_doc")) ++ sortCols :+
+        warcRecordSynth("warcinfo", lit(null).cast("string"),
           lit("2020-01-01T00:00:00Z"),
-          lit("software: graft-synth/1.0")).as("r"))
+          lit("software: graft-synth/1.0")).as("r"): _*)
+
+  /** Assemble records `(file_id, <sortKeys>, r)` into files: each file's
+    * `r` concatenated in `sortKeys` order. Returns `(file_id, content)`.
+    */
+  private def warcFiles(recs: DataFrame, sortKeys: String*): DataFrame =
+    respread(recs.groupBy("file_id")
+      .agg(concat_ws("", array_sort(collect_list(
+          struct((sortKeys :+ "r").map(col): _*))).getField("r"))
+        .as("content")))
+
+  /** The HTTP-in-WARC file shape: per file a warcinfo record, then one
+    * response record per doc whose payload is the HTTP message `http`
+    * (an expression over `cols`, selected beside `doc_id`/`file_id`).
+    * Plain-text files `(file_id, content)`; with `gz`, every record is
+    * its own gzip member, concatenated in record order: `(file_id, gz)`.
+    */
+  private def warcHttpFiles(d: DataFrame, cols: Seq[Column], http: Column,
+                            gz: Boolean = false,
+                            date: Column = warcDate): DataFrame = {
+    val base = d.select(col("doc_id") +: warcFileId +: cols: _*)
+    val resp = base.withColumn("__http", http)
+      .select(col("file_id"), col("doc_id").as("ord_doc"),
+        warcRecordSynth("response", docUrl, date, col("__http")).as("r"))
+    val recs = warcInfoRecords(base).unionByName(resp)
+    if (!gz) warcFiles(recs, "ord_doc")
+    else respread(recs
+      .select(col("file_id"), col("ord_doc"),
+        WarcOps.gzipMember(col("r")).as("g"))
+      .groupBy("file_id")
+      .agg(aggregate(
+        array_sort(collect_list(struct(col("ord_doc"), col("g"))))
+          .getField("g"),
+        lit(Array.emptyByteArray),
+        (acc, x) => concat(acc, x)).as("gz")))
+  }
+
+  /** The C4 pages of the 200 text/html responses among WARC `pages`
+    * that pass every `keep` test, the page html being `html` over the
+    * parsed HTTP envelope — the x139 family's route.
+    */
+  private def c4ResponsePages(pages: DataFrame, html: Column,
+                              keep: Column*): DataFrame = {
+    val routed = HttpOps.parseResponses(pages, "payload")
+      .filter((Seq(col("status_code") === 200,
+        col("content_type") === "text/html") ++ keep).reduce(_ && _))
+      .select(uriDocId, html.as("html"))
+    HtmlOps.c4Pages(routed, "doc_id", "html")
+      .select("doc_id", "n_lines", "text")
+      .orderBy("doc_id")
+  }
+
+  /** WARC-file synthesis over the x127 HTML pages — ONE definition
+    * shared by x129 and x130, mirrored verbatim by [[warcSynthCtesSql]]:
+    * files of 8 docs (`doc_id / 8`), one warcinfo record per file
+    * (fixed payload, no Target-URI), a request record for every
+    * `doc_id % 3 == 0` doc, and a response record per doc whose payload
+    * is the [[htmlFixture]] page; records concatenated in
+    * (ord_doc, kind) order. Returns `(file_id, content)`.
+    */
+  private def warcFixture(d: DataFrame): DataFrame = {
+    val base = d.select(col("doc_id"), warcFileId, htmlFixture.as("html"))
     val req = base.filter(col("doc_id") % 3 === 0)
       .select(col("file_id"), col("doc_id").as("ord_doc"),
         lit(0).as("sub"),
-        record("request", uriC, dateC,
-          concat(lit("GET /doc/"), idStr, lit(" HTTP/1.1"))).as("r"))
+        warcRecordSynth("request", docUrl, warcDate,
+          concat(lit("GET /doc/"), col("doc_id").cast("string"),
+            lit(" HTTP/1.1"))).as("r"))
     val resp = base.select(col("file_id"), col("doc_id").as("ord_doc"),
-      lit(1).as("sub"), record("response", uriC, dateC, col("html")).as("r"))
-    respread(info.unionByName(req).unionByName(resp)
-      .groupBy("file_id")
-      .agg(concat_ws("", array_sort(collect_list(
-          struct(col("ord_doc"), col("sub"), col("r")))).getField("r"))
-        .as("content")))
+      lit(1).as("sub"),
+      warcRecordSynth("response", docUrl, warcDate, col("html")).as("r"))
+    warcFiles(warcInfoRecords(base, lit(0).as("sub"))
+      .unionByName(req).unionByName(resp), "ord_doc", "sub")
   }
 
   /** The `.warc.gz`+HTTP synthesis for x139 — the BYTE/HTTP-faithful
@@ -3974,39 +3879,14 @@ object ExtensionQueries {
     // bytes: the record carries the latin1 VIEW of those bytes, so the
     // gzip member, the WARC/HTTP lengths, and the charset decode are
     // all exercised on non-ASCII content (ADVICE r16)
-    val htmlAcc = regexp_replace(htmlFixture, lit("</body></html>$"),
-      concat(lit(AccentLineHead), col("doc_id").cast("string"),
-        lit(AccentLineTail)))
-    val base = d.select(col("doc_id"),
-      (col("doc_id") / 8).cast(LongType).as("file_id"),
-      decode(encode(htmlAcc, "UTF-8"), "ISO-8859-1").as("html"))
-    val idStr = col("doc_id").cast("string")
-    val uriC = concat(lit("https://example.com/doc/"), idStr)
-    val dateC = concat(lit("2020-01-"),
-      lpad(((col("doc_id") % 28) + 1).cast("string"), 2, "0"),
-      lit("T00:00:00Z"))
     val httpMsg = concat(
       lit("HTTP/1.1 200 OK\r\n" +
         "Content-Type: text/html; charset=utf-8\r\n" +
         "Content-Length: "), length(col("html")).cast("string"),
       lit("\r\n\r\n"), col("html"))
-    val info = base.select(col("file_id")).distinct()
-      .select(col("file_id"), lit(-1L).as("ord_doc"),
-        warcRecordSynth("warcinfo", lit(null).cast("string"),
-          lit("2020-01-01T00:00:00Z"),
-          lit("software: graft-synth/1.0")).as("r"))
-    val resp = base.withColumn("__http", httpMsg)
-      .select(col("file_id"), col("doc_id").as("ord_doc"),
-        warcRecordSynth("response", uriC, dateC, col("__http")).as("r"))
-    respread(info.unionByName(resp)
-      .select(col("file_id"), col("ord_doc"),
-        WarcOps.gzipMember(col("r")).as("g"))
-      .groupBy("file_id")
-      .agg(aggregate(
-        array_sort(collect_list(struct(col("ord_doc"), col("g"))))
-          .getField("g"),
-        lit(Array.emptyByteArray),
-        (acc, x) => concat(acc, x)).as("gz")))
+    warcHttpFiles(d,
+      Seq(decode(encode(accentPage, "UTF-8"), "ISO-8859-1").as("html")),
+      httpMsg, gz = true)
   }
 
   /** The chunked-HTTP synthesis for x144: each doc's x127 page split at
@@ -4022,14 +3902,6 @@ object ExtensionQueries {
     * independently-recomputed x128 target (the x139 convention).
     */
   private def warcChunkedHttpFixture(d: DataFrame): DataFrame = {
-    val base = d.select(col("doc_id"),
-      (col("doc_id") / 8).cast(LongType).as("file_id"),
-      htmlFixture.as("html"))
-    val idStr = col("doc_id").cast("string")
-    val uriC = concat(lit("https://example.com/doc/"), idStr)
-    val dateC = concat(lit("2020-01-"),
-      lpad(((col("doc_id") % 28) + 1).cast("string"), 2, "0"),
-      lit("T00:00:00Z"))
     // chunk sizes count view chars (= original bytes, the r17
     // DechunkBody convention; this ASCII fixture's chars ARE its bytes)
     val c1 = substring(col("html"), 1, 64)
@@ -4042,19 +3914,7 @@ object ExtensionQueries {
       lit("HTTP/1.1 200 OK\r\n" +
         "Content-Type: text/html; charset=utf-8\r\n" +
         "Transfer-Encoding: chunked\r\n\r\n"), chunked)
-    val info = base.select(col("file_id")).distinct()
-      .select(col("file_id"), lit(-1L).as("ord_doc"),
-        warcRecordSynth("warcinfo", lit(null).cast("string"),
-          lit("2020-01-01T00:00:00Z"),
-          lit("software: graft-synth/1.0")).as("r"))
-    val resp = base.withColumn("__http", httpMsg)
-      .select(col("file_id"), col("doc_id").as("ord_doc"),
-        warcRecordSynth("response", uriC, dateC, col("__http")).as("r"))
-    respread(info.unionByName(resp)
-      .groupBy("file_id")
-      .agg(concat_ws("", array_sort(collect_list(
-          struct(col("ord_doc"), col("r")))).getField("r"))
-        .as("content")))
+    warcHttpFiles(d, Seq(htmlFixture.as("html")), httpMsg)
   }
 
   /** The revisit synthesis for x146 — docs grouped by 3: head stores
@@ -4067,32 +3927,23 @@ object ExtensionQueries {
     * by the x146 oracle CTEs.
     */
   private def warcRevisitFixture(d: DataFrame): DataFrame = {
-    val idStr = col("doc_id").cast("string")
     val grp = col("doc_id") - (col("doc_id") % 3)
-    val base = d.select(col("doc_id"),
-      (col("doc_id") / 8).cast(LongType).as("file_id"),
+    val base = d.select(col("doc_id"), warcFileId,
       concat(lit("snapshot of group "), grp.cast("string"),
         lit(" stable content")).as("pay"),
       grp.as("grp"))
-    val uriC = concat(lit("https://example.com/doc/"), idStr)
-    val dateC = concat(lit("2020-01-"),
-      lpad(((col("doc_id") % 28) + 1).cast("string"), 2, "0"),
-      lit("T00:00:00Z"))
     val digest = concat(lit("WARC-Payload-Digest: md5:"), md5(col("pay")),
       lit("\r\n"))
     val refers = concat(lit("WARC-Refers-To-Target-URI: "),
       lit("https://example.com/doc/"), col("grp").cast("string"),
       lit("\r\n"))
     val rec = when(col("doc_id") % 3 < 2,
-        warcRecordSynth("response", uriC, dateC, col("pay"), digest))
+        warcRecordSynth("response", docUrl, warcDate, col("pay"), digest))
       .otherwise(
-        warcRecordSynth("revisit", uriC, dateC, lit(""),
+        warcRecordSynth("revisit", docUrl, warcDate, lit(""),
           concat(digest, refers)))
-    respread(base.select(col("file_id"), col("doc_id").as("ord_doc"), rec.as("r"))
-      .groupBy("file_id")
-      .agg(concat_ws("", array_sort(collect_list(
-          struct(col("ord_doc"), col("r")))).getField("r"))
-        .as("content")))
+    warcFiles(base.select(col("file_id"), col("doc_id").as("ord_doc"),
+      rec.as("r")), "ord_doc")
   }
 
   /** The accented-page line appended for x147/x139 — ONE definition,
@@ -4111,6 +3962,15 @@ object ExtensionQueries {
     "<p>Smart “quotes” — the café’s menu "
   private val Cp1252LineTail =
     " is prêt… ready.</p></body></html>"
+
+  /** [[htmlFixture]] with `head <doc_id> tail` as its closing line. */
+  private def htmlFixtureWithLine(head: String, tail: String): Column =
+    regexp_replace(htmlFixture, lit("</body></html>$"),
+      concat(lit(head), col("doc_id").cast("string"), lit(tail)))
+
+  /** The accented page of x139/x147/x150 and their successors. */
+  private def accentPage: Column =
+    htmlFixtureWithLine(AccentLineHead, AccentLineTail)
 
   /** The charset synthesis for x147, three arms on `doc_id % 3`, each
     * shipping in the LATIN1-VIEW convention:
@@ -4131,19 +3991,10 @@ object ExtensionQueries {
     * does not transcode).
     */
   private def warcCharsetFixture(d: DataFrame): DataFrame = {
-    val idStr = col("doc_id").cast("string")
     val arm = col("doc_id") % 3
-    val htmlAcc = regexp_replace(htmlFixture, lit("</body></html>$"),
-      concat(lit(AccentLineHead), idStr, lit(AccentLineTail)))
-    val htmlCp = regexp_replace(htmlFixture, lit("</body></html>$"),
-      concat(lit(Cp1252LineHead), idStr, lit(Cp1252LineTail)))
-    val base = d.select(col("doc_id"),
-      (col("doc_id") / 8).cast(LongType).as("file_id"),
-      when(arm === 2, htmlCp).otherwise(htmlAcc).as("html"))
-    val uriC = concat(lit("https://example.com/doc/"), idStr)
-    val dateC = concat(lit("2020-01-"),
-      lpad(((col("doc_id") % 28) + 1).cast("string"), 2, "0"),
-      lit("T00:00:00Z"))
+    val html = when(arm === 2,
+        htmlFixtureWithLine(Cp1252LineHead, Cp1252LineTail))
+      .otherwise(accentPage)
     val cs = when(arm === 0, lit("utf-8"))
       .when(arm === 1, lit("iso-8859-1"))
       .otherwise(lit("windows-1252"))
@@ -4158,19 +4009,7 @@ object ExtensionQueries {
       lit("HTTP/1.1 200 OK\r\nContent-Type: text/html; charset="), cs,
       lit("\r\nContent-Length: "), length(view).cast("string"),
       lit("\r\n\r\n"), view)
-    val info = base.select(col("file_id")).distinct()
-      .select(col("file_id"), lit(-1L).as("ord_doc"),
-        warcRecordSynth("warcinfo", lit(null).cast("string"),
-          lit("2020-01-01T00:00:00Z"),
-          lit("software: graft-synth/1.0")).as("r"))
-    val resp = base.withColumn("__http", httpMsg)
-      .select(col("file_id"), col("doc_id").as("ord_doc"),
-        warcRecordSynth("response", uriC, dateC, col("__http")).as("r"))
-    respread(info.unionByName(resp)
-      .groupBy("file_id")
-      .agg(concat_ws("", array_sort(collect_list(
-          struct(col("ord_doc"), col("r")))).getField("r"))
-        .as("content")))
+    warcHttpFiles(d, Seq(html.as("html")), httpMsg)
   }
 
   /** The Content-Encoding synthesis for x150: the accent page's REAL
@@ -4186,15 +4025,7 @@ object ExtensionQueries {
     * cannot gunzip).
     */
   private def warcContentEncodingFixture(d: DataFrame): DataFrame = {
-    val idStr = col("doc_id").cast("string")
-    val htmlAcc = regexp_replace(htmlFixture, lit("</body></html>$"),
-      concat(lit(AccentLineHead), idStr, lit(AccentLineTail)))
-    def bridge1(mk: org.apache.spark.sql.catalyst.expressions.Expression =>
-        org.apache.spark.sql.catalyst.expressions.Expression,
-        c: Column): Column =
-      org.apache.spark.sql.graftbridge.Bridge.column(
-        mk(org.apache.spark.sql.graftbridge.Bridge.expression(c)))
-    val utf8View = decode(encode(htmlAcc, "UTF-8"), "ISO-8859-1")
+    val utf8View = decode(encode(accentPage, "UTF-8"), "ISO-8859-1")
     // r18: a third arm ships REAL zstd frames — zstd-jni rides every
     // Spark classpath, so the jar-gated kernels are live here
     val coded = when(col("doc_id") % 3 === 0,
@@ -4202,35 +4033,16 @@ object ExtensionQueries {
       .when(col("doc_id") % 3 === 1,
         bridge1(graft.functions.DeflateBytes(_), utf8View))
       .otherwise(bridge1(graft.functions.ZstdBytes(_), utf8View))
-    val base = d.select(col("doc_id"),
-      (col("doc_id") / 8).cast(LongType).as("file_id"),
-      decode(coded, "ISO-8859-1").as("body_view"),
-      when(col("doc_id") % 3 === 0, lit("gzip"))
-        .when(col("doc_id") % 3 === 1, lit("deflate"))
-        .otherwise(lit("zstd"))
-        .as("ce"))
-    val uriC = concat(lit("https://example.com/doc/"), idStr)
-    val dateC = concat(lit("2020-01-"),
-      lpad(((col("doc_id") % 28) + 1).cast("string"), 2, "0"),
-      lit("T00:00:00Z"))
     val httpMsg = concat(
       lit("HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n" +
         "Content-Encoding: "), col("ce"),
       lit("\r\nContent-Length: "), length(col("body_view")).cast("string"),
       lit("\r\n\r\n"), col("body_view"))
-    val info = base.select(col("file_id")).distinct()
-      .select(col("file_id"), lit(-1L).as("ord_doc"),
-        warcRecordSynth("warcinfo", lit(null).cast("string"),
-          lit("2020-01-01T00:00:00Z"),
-          lit("software: graft-synth/1.0")).as("r"))
-    val resp = base.withColumn("__http", httpMsg)
-      .select(col("file_id"), col("doc_id").as("ord_doc"),
-        warcRecordSynth("response", uriC, dateC, col("__http")).as("r"))
-    respread(info.unionByName(resp)
-      .groupBy("file_id")
-      .agg(concat_ws("", array_sort(collect_list(
-          struct(col("ord_doc"), col("r")))).getField("r"))
-        .as("content")))
+    warcHttpFiles(d, Seq(decode(coded, "ISO-8859-1").as("body_view"),
+      when(col("doc_id") % 3 === 0, lit("gzip"))
+        .when(col("doc_id") % 3 === 1, lit("deflate"))
+        .otherwise(lit("zstd"))
+        .as("ce")), httpMsg)
   }
 
   /** The robots-META synthesis for x153 — seven arms on `doc_id % 7`
@@ -4326,26 +4138,15 @@ object ExtensionQueries {
     *    accent byte into U+FFFD and the hash catches it).
     */
   private def warcMetaCharsetFixture(d: DataFrame): DataFrame = {
-    val idStr = col("doc_id").cast("string")
     val arm = col("doc_id") % 3
-    val htmlAcc = regexp_replace(htmlFixture, lit("</body></html>$"),
-      concat(lit(AccentLineHead), idStr, lit(AccentLineTail)))
-    val htmlCp = regexp_replace(htmlFixture, lit("</body></html>$"),
-      concat(lit(Cp1252LineHead), idStr, lit(Cp1252LineTail)))
     val metaModern = "<meta charset=\"utf-8\">"
     val metaLegacy = "<meta http-equiv=\"Content-Type\" " +
       "content=\"text/html; charset=windows-1252\">"
     val html = when(arm === 1,
-        regexp_replace(htmlCp, lit("^<html><head>"),
-          lit("<html><head>" + metaLegacy)))
-      .otherwise(regexp_replace(htmlAcc, lit("^<html><head>"),
+        regexp_replace(htmlFixtureWithLine(Cp1252LineHead, Cp1252LineTail),
+          lit("^<html><head>"), lit("<html><head>" + metaLegacy)))
+      .otherwise(regexp_replace(accentPage, lit("^<html><head>"),
         lit("<html><head>" + metaModern)))
-    val base = d.select(col("doc_id"),
-      (col("doc_id") / 8).cast(LongType).as("file_id"), html.as("html"))
-    val uriC = concat(lit("https://example.com/doc/"), idStr)
-    val dateC = concat(lit("2020-01-"),
-      lpad(((col("doc_id") % 28) + 1).cast("string"), 2, "0"),
-      lit("T00:00:00Z"))
     val view = when(arm === 0,
         decode(encode(col("html"), "UTF-8"), "ISO-8859-1"))
       .when(arm === 1, translate(col("html"),
@@ -4357,19 +4158,7 @@ object ExtensionQueries {
       lit("HTTP/1.1 200 OK\r\nContent-Type: "), ct,
       lit("\r\nContent-Length: "), length(view).cast("string"),
       lit("\r\n\r\n"), view)
-    val info = base.select(col("file_id")).distinct()
-      .select(col("file_id"), lit(-1L).as("ord_doc"),
-        warcRecordSynth("warcinfo", lit(null).cast("string"),
-          lit("2020-01-01T00:00:00Z"),
-          lit("software: graft-synth/1.0")).as("r"))
-    val resp = base.withColumn("__http", httpMsg)
-      .select(col("file_id"), col("doc_id").as("ord_doc"),
-        warcRecordSynth("response", uriC, dateC, col("__http")).as("r"))
-    respread(info.unionByName(resp)
-      .groupBy("file_id")
-      .agg(concat_ws("", array_sort(collect_list(
-          struct(col("ord_doc"), col("r")))).getField("r"))
-        .as("content")))
+    warcHttpFiles(d, Seq(html.as("html")), httpMsg)
   }
 
   /** The x140 HTTP response-message synthesis — four envelope shapes
@@ -4559,10 +4348,10 @@ object ExtensionQueries {
       .filter(col("canon_url").isNotNull)
 
   /** The refresh-snapshot synthesis shared by x114 and x125 — and by the
-    * BucketedJoinSpec plan gate and the BucketedDiff measurement main,
-    * which claim to exercise "the x114 flow": drop every 7th doc, append
-    * " updated" to every 5th surviving text, re-add every 3rd under a
-    * +1e6 id (added/changed/removed/unchanged all populated). ONE
+    * BucketedJoinSpec plan gate, which claims to exercise "the x114
+    * flow": drop every 7th doc, append " updated" to every 5th
+    * surviving text, re-add every 3rd under a +1e6 id
+    * (added/changed/removed/unchanged all populated). ONE
     * definition (r15 review: three verbatim copies had decoupled the
     * SURVEY measurement and the zero-exchange gate from the queries they
     * mirror). Works over any frame carrying (doc_id, text, ...).
@@ -4573,6 +4362,21 @@ object ExtensionQueries {
         concat(col("text"), lit(" updated"))).otherwise(col("text")))
       .unionByName(d.filter(col("doc_id") % 3 === 0)
         .withColumn("doc_id", col("doc_id") + 1000000L))
+
+  /** The weighted page-link graph `(src, dst, w)` of the x134 link
+    * pages over `d`: canonical outlinks per page URL, self-links
+    * dropped (x142/x161).
+    */
+  private def pageLinkEdges(d: DataFrame): DataFrame = {
+    val pages = d.select(col("doc_id"), linkBase.as("base"),
+      linkHtmlFixture.as("html"))
+    resolvedCanon(pages.select(col("base"),
+          explode(HtmlOps.extractLinks(col("html"))).as("ref")),
+        Seq("base"), "ref")
+      .filter(col("canon_url") =!= col("base"))
+      .groupBy(col("base").as("src"), col("canon_url").as("dst"))
+      .agg(count(lit(1)).as("w"))
+  }
 
   /** Shared head of the curation composites (x34 exact / x64 LSH-verify):
     * quality filter → exact dedup. The quality subtree (regex-heavy) and
@@ -4592,6 +4396,23 @@ object ExtensionQueries {
     val exactKept = DedupOps.exact(quality, "doc_id", "text")
       .localCheckpoint()
     (exactKept, quality.join(exactKept, Seq("doc_id"), "left_semi"))
+  }
+
+  /** The x94 manifest stages over `d`: the quality filter, canonical
+    * (normalized-text) exact dedup of its survivors, and the
+    * temperature-balanced source mix — `(quality, surv, bal)`.
+    */
+  private def manifestStages(d: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val quality = TextOps.qualityScore(d)
+      .filter(col("n_words") >= 20 && col("alpha_ratio_bp") >= 7000)
+      .select("doc_id", "source", "text")
+    val canon = quality.withColumn("__ct",
+      TextOps.normalizeText(col("text"), stripPunct = true))
+    val kept = DedupOps.exact(
+      canon.select(col("doc_id"), col("__ct")), "doc_id", "__ct")
+    val surv = canon.join(kept, Seq("doc_id"), "left_semi")
+    (quality, surv, SampleOps.temperatureSample(surv, "doc_id", "source"))
   }
 
   /** Shared tail of the curation composites: near-dup pairs → connected
@@ -4671,12 +4492,67 @@ object ExtensionQueries {
       | okb AS (SELECT band, sig FROM bsig GROUP BY band, sig
       |   HAVING count(*) <= $maxBucket)""".stripMargin
 
-  private val word3gramShingles =
-    """WITH w AS (SELECT doc_id, string_split(text,' ') w FROM documents),
+  /** Word 3-gram shingles of `src`'s `text` as the CTEs `w` and
+    * `sh(doc_id, s)` — the body only, so a caller can open its query
+    * with `WITH RECURSIVE`.
+    */
+  private def word3gramCtes(src: String): String =
+    s"""w AS (SELECT doc_id, string_split(text,' ') w FROM $src),
       | sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
       |          range(1, greatest(len(w)-2,0)+1),
       |          k -> w[k::INT] || ' ' || w[k::INT+1] || ' ' || w[k::INT+2]))) s
       |        FROM w)""".stripMargin
+
+  private val word3gramShingles = s"WITH ${word3gramCtes("documents")}"
+
+  /** The band-collision candidates `cand(i, j)` of a banding fragment's
+    * `bsig`/`okb` and their exact shingle intersections
+    * `inter(i, j, c)` over `sh` — the verify arm every LSH oracle shares.
+    */
+  private val bandVerifySql =
+    """cand AS (SELECT DISTINCT a.doc_id i, b.doc_id j FROM bsig a JOIN bsig b
+      |   ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
+      |   JOIN okb ON okb.band = a.band AND okb.sig = a.sig),
+      | inter AS (SELECT cd.i, cd.j, count(*) c FROM cand cd
+      |   JOIN sh a ON a.doc_id = cd.i JOIN sh b ON b.doc_id = cd.j AND b.s = a.s
+      |   GROUP BY 1, 2)""".stripMargin
+
+  /** Exact shingle intersections `inter(i, j, c)` of every doc pair
+    * over `sh`, by an s-keyed self-join that skips hot shingles (more
+    * than `DedupOps.DefaultMaxBucket` docs) the way the engine does.
+    */
+  private val exactInterSql =
+    s"""oks AS (SELECT s FROM sh GROUP BY s
+      |   HAVING count(*) <= ${graft.ops.DedupOps.DefaultMaxBucket}),
+      | inter AS (SELECT a.doc_id i, b.doc_id j, count(*) c FROM sh a
+      |   JOIN oks ON oks.s = a.s
+      |   JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)""".stripMargin
+
+  /** The near-duplicate test over `inter(i, j, c)` joined to the shingle
+    * counts `n na`/`n nb`: Jaccard >= 0.5 in floored basis points.
+    */
+  private val jaccardHitSql =
+    "floor(c::DOUBLE * 10000 / (na.n + nb.n - c)::DOUBLE) >= 5000"
+
+  /** The near-duplicate pairs `p(i, j)` of `inter` by [[jaccardHitSql]]. */
+  private val jaccardPairsSql =
+    s"""p AS (SELECT i, j FROM inter
+      |   JOIN n na ON na.doc_id = i JOIN n nb ON nb.doc_id = j
+      |   WHERE $jaccardHitSql)""".stripMargin
+
+  /** Symmetric edges `e(a, b)` of the pair CTE `p(i, j)` and their
+    * recursive closure `reach(a, b)` — the connected-components mirror
+    * (needs `WITH RECURSIVE`).
+    */
+  private val reachSql =
+    """e AS (SELECT i AS a, j AS b FROM p UNION ALL SELECT j, i FROM p),
+      | reach AS (SELECT a, b FROM e
+      |   UNION
+      |   SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a)""".stripMargin
+
+  /** `xs` as a DuckDB list literal of quoted strings, `['a','b']`. */
+  private def sqlArr(xs: Seq[String]): String =
+    xs.map(x => s"'$x'").mkString("[", ",", "]")
 
   /** x60 and x73 share ONE oracle body: the Bloom pre-filter is an
     * execution-strategy knob with a no-false-negative contract, so the
@@ -4694,7 +4570,7 @@ object ExtensionQueries {
        |   GROUP BY 1, 2),
        | near_dropped AS (SELECT j AS doc_id FROM inter
        |   JOIN n na ON na.doc_id = i JOIN n nb ON nb.doc_id = j
-       |   WHERE floor(c::DOUBLE * 10000 / (na.n + nb.n - c)::DOUBLE) >= 5000),
+       |   WHERE $jaccardHitSql),
        | exact_kept AS (SELECT d.doc_id FROM documents d
        |   WHERE d.doc_id >= 250
        |   -- NOT EXISTS, not NOT IN: a NULL text in the reference would
@@ -5143,15 +5019,11 @@ object ExtensionQueries {
     "x21_dedup_ngram_jaccard" ->
       s"""$word3gramShingles,
          | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
-         | oks AS (SELECT s FROM sh GROUP BY s
-         |   HAVING count(*) <= ${graft.ops.DedupOps.DefaultMaxBucket}),
-         | inter AS (SELECT a.doc_id i, b.doc_id j, count(*) c FROM sh a
-         |   JOIN oks ON oks.s = a.s
-         |   JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
+         | $exactInterSql
          | SELECT i, j,
          |   floor(c::DOUBLE * 10000 / (na.n + nb.n - c)::DOUBLE)::BIGINT AS jaccard_bp
          | FROM inter JOIN n na ON na.doc_id = i JOIN n nb ON nb.doc_id = j
-         | WHERE floor(c::DOUBLE * 10000 / (na.n + nb.n - c)::DOUBLE) >= 5000
+         | WHERE $jaccardHitSql
          | ORDER BY i, j""".stripMargin,
 
     "x22_dedup_minhash_lsh" ->
@@ -5407,24 +5279,11 @@ object ExtensionQueries {
         | FROM lineitem""".stripMargin,
 
     "x40_dedup_clusters" ->
-      s"""WITH RECURSIVE w AS (SELECT doc_id, string_split(text,' ') w FROM documents),
-        | sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |          range(1, greatest(len(w)-2,0)+1),
-        |          k -> w[k::INT] || ' ' || w[k::INT+1] || ' ' || w[k::INT+2]))) s
-        |        FROM w),
+      s"""WITH RECURSIVE ${word3gramCtes("documents")},
         | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
-        | oks AS (SELECT s FROM sh GROUP BY s
-        |   HAVING count(*) <= ${graft.ops.DedupOps.DefaultMaxBucket}),
-        | inter AS (SELECT a.doc_id i, b.doc_id j, count(*) c FROM sh a
-        |   JOIN oks ON oks.s = a.s
-        |   JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        | p AS (SELECT i, j FROM inter
-        |   JOIN n na ON na.doc_id = i JOIN n nb ON nb.doc_id = j
-        |   WHERE floor(c::DOUBLE * 10000 / (na.n + nb.n - c)::DOUBLE) >= 5000),
-        | e AS (SELECT i AS a, j AS b FROM p UNION ALL SELECT j, i FROM p),
-        | reach AS (SELECT a, b FROM e
-        |   UNION
-        |   SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a)
+        | $exactInterSql,
+        | $jaccardPairsSql,
+        | $reachSql
         | SELECT a AS doc_id, least(a, min(b)) AS component
         | FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
 
@@ -5581,11 +5440,7 @@ object ExtensionQueries {
 
     "x34_corpus_curation" ->
       s"""WITH RECURSIVE $curationHeadSql,
-         | oks AS (SELECT s FROM sh GROUP BY s
-         |   HAVING count(*) <= ${graft.ops.DedupOps.DefaultMaxBucket}),
-         | inter AS (SELECT a.doc_id i, b.doc_id j, count(*) c FROM sh a
-         |   JOIN oks ON oks.s = a.s
-         |   JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
+         | $exactInterSql,
          | $curationTailSql""".stripMargin,
 
     // Mirrors x34's pipeline with the near-dup stage swapped to
@@ -5595,12 +5450,7 @@ object ExtensionQueries {
     "x64_corpus_curation_lsh" ->
       s"""WITH RECURSIVE $curationHeadSql,
          | $minhashBsigSql,
-         | cand AS (SELECT DISTINCT a.doc_id i, b.doc_id j FROM bsig a JOIN bsig b
-         |   ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-         |   JOIN okb ON okb.band = a.band AND okb.sig = a.sig),
-         | inter AS (SELECT cd.i, cd.j, count(*) c FROM cand cd
-         |   JOIN sh a ON a.doc_id = cd.i JOIN sh b ON b.doc_id = cd.j AND b.s = a.s
-         |   GROUP BY 1, 2),
+         | $bandVerifySql,
          | $curationTailSql""".stripMargin,
 
     // Positional 5-token shingles (hash60 of the space-joined slice, the
@@ -5782,17 +5632,8 @@ object ExtensionQueries {
     "x80_containment" ->
       s"""$word3gramShingles,
          | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
-         | oks AS (SELECT s FROM sh GROUP BY s
-         |   HAVING count(*) <= ${graft.ops.DedupOps.DefaultMaxBucket}),
-         | inter AS (SELECT a.doc_id i, b.doc_id j, count(*) c FROM sh a
-         |   JOIN oks ON oks.s = a.s
-         |   JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-         | SELECT i, j, c AS inter_n,
-         |   floor(c::DOUBLE * 10000 / na.n)::BIGINT AS cont_i_bp,
-         |   floor(c::DOUBLE * 10000 / nb.n)::BIGINT AS cont_j_bp
-         | FROM inter JOIN n na ON na.doc_id = i JOIN n nb ON nb.doc_id = j
-         | WHERE greatest(floor(c::DOUBLE * 10000 / na.n),
-         |                floor(c::DOUBLE * 10000 / nb.n)) >= 8000
+         | $exactInterSql
+         | $containmentSelectSql
          | ORDER BY i, j""".stripMargin,
 
     // x80's scoring with the candidate set replaced by the OPH banding
@@ -5803,18 +5644,8 @@ object ExtensionQueries {
       s"""$word3gramShingles,
          | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
          | $ophBsigSql,
-         | cand AS (SELECT DISTINCT a.doc_id i, b.doc_id j FROM bsig a JOIN bsig b
-         |   ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-         |   JOIN okb ON okb.band = a.band AND okb.sig = a.sig),
-         | inter AS (SELECT cd.i, cd.j, count(*) c FROM cand cd
-         |   JOIN sh a ON a.doc_id = cd.i JOIN sh b ON b.doc_id = cd.j AND b.s = a.s
-         |   GROUP BY 1, 2)
-         | SELECT i, j, c AS inter_n,
-         |   floor(c::DOUBLE * 10000 / na.n)::BIGINT AS cont_i_bp,
-         |   floor(c::DOUBLE * 10000 / nb.n)::BIGINT AS cont_j_bp
-         | FROM inter JOIN n na ON na.doc_id = i JOIN n nb ON nb.doc_id = j
-         | WHERE greatest(floor(c::DOUBLE * 10000 / na.n),
-         |                floor(c::DOUBLE * 10000 / nb.n)) >= 8000
+         | $bandVerifySql
+         | $containmentSelectSql
          | ORDER BY i, j""".stripMargin,
 
     // the rate arithmetic mirrors mixtureSample's exact double sequence:
@@ -5844,17 +5675,7 @@ object ExtensionQueries {
     // doubles derived from identical integer counts → identical IEEE
     // input on both sides.
     "x83_lm_perplexity" ->
-      """WITH w AS (SELECT doc_id, string_split(text,' ') w FROM documents),
-        | big AS (SELECT doc_id, unnest(list_transform(
-        |          range(1, greatest(len(w)-1,0)+1),
-        |          k -> w[k::INT] || ' ' || w[k::INT+1])) s FROM w),
-        | c2 AS (SELECT s, count(*) n2 FROM big GROUP BY 1),
-        | c1 AS (SELECT split_part(s,' ',1) w1, count(*) n1 FROM big GROUP BY 1),
-        | v AS (SELECT count(DISTINCT t) v FROM
-        |   (SELECT unnest(string_split(text,' ')) t FROM documents)),
-        | m AS (SELECT s,
-        |     floor(ln((n1 + v.v)::DOUBLE / (n2 + 1)::DOUBLE) * 1000000)::BIGINT nll
-        |   FROM c2 JOIN c1 ON split_part(c2.s,' ',1) = c1.w1 CROSS JOIN v)
+      s"""WITH $bigramNllSql
         | SELECT doc_id, count(*)::BIGINT AS n_bigrams,
         |   sum(nll)::BIGINT AS nll_sum,
         |   (sum(nll)::BIGINT // count(*)::BIGINT) AS avg_nll_scaled
@@ -5865,26 +5686,12 @@ object ExtensionQueries {
     // stopword-ratio quality desc / doc_id asc; rank 1 is canonical.
     // Singletons (docs in no edge) are their own component and keeper.
     "x84_canonical_keep" ->
-      s"""WITH RECURSIVE w AS (SELECT doc_id, string_split(text,' ') w FROM documents),
-        | sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |          range(1, greatest(len(w)-2,0)+1),
-        |          k -> w[k::INT] || ' ' || w[k::INT+1] || ' ' || w[k::INT+2]))) s
-        |        FROM w),
+      s"""WITH RECURSIVE ${word3gramCtes("documents")},
         | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
         | $ophBsigSql,
-        | cand AS (SELECT DISTINCT a.doc_id i, b.doc_id j FROM bsig a JOIN bsig b
-        |   ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-        |   JOIN okb ON okb.band = a.band AND okb.sig = a.sig),
-        | inter AS (SELECT cd.i, cd.j, count(*) c FROM cand cd
-        |   JOIN sh a ON a.doc_id = cd.i JOIN sh b ON b.doc_id = cd.j AND b.s = a.s
-        |   GROUP BY 1, 2),
-        | p AS (SELECT i, j FROM inter
-        |   JOIN n na ON na.doc_id = i JOIN n nb ON nb.doc_id = j
-        |   WHERE floor(c::DOUBLE * 10000 / (na.n + nb.n - c)::DOUBLE) >= 5000),
-        | e AS (SELECT i AS a, j AS b FROM p UNION ALL SELECT j, i FROM p),
-        | reach AS (SELECT a, b FROM e
-        |   UNION
-        |   SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
+        | $bandVerifySql,
+        | $jaccardPairsSql,
+        | $reachSql,
         | comp AS (SELECT a AS doc_id, least(a, min(b)) AS component
         |   FROM reach GROUP BY a),
         | q AS (SELECT doc_id,
@@ -5905,22 +5712,11 @@ object ExtensionQueries {
     // Same OPH banding mirror + verify threshold; pairs fold symmetrically
     // on (least, greatest) of the two sources.
     "x85_source_overlap" ->
-      s"""WITH w AS (SELECT doc_id, string_split(text,' ') w FROM documents),
-        | sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |          range(1, greatest(len(w)-2,0)+1),
-        |          k -> w[k::INT] || ' ' || w[k::INT+1] || ' ' || w[k::INT+2]))) s
-        |        FROM w),
+      s"""$word3gramShingles,
         | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
         | $ophBsigSql,
-        | cand AS (SELECT DISTINCT a.doc_id i, b.doc_id j FROM bsig a JOIN bsig b
-        |   ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-        |   JOIN okb ON okb.band = a.band AND okb.sig = a.sig),
-        | inter AS (SELECT cd.i, cd.j, count(*) c FROM cand cd
-        |   JOIN sh a ON a.doc_id = cd.i JOIN sh b ON b.doc_id = cd.j AND b.s = a.s
-        |   GROUP BY 1, 2),
-        | p AS (SELECT i, j FROM inter
-        |   JOIN n na ON na.doc_id = i JOIN n nb ON nb.doc_id = j
-        |   WHERE floor(c::DOUBLE * 10000 / (na.n + nb.n - c)::DOUBLE) >= 5000),
+        | $bandVerifySql,
+        | $jaccardPairsSql,
         | cnt AS (SELECT source, count(*) n_docs FROM documents GROUP BY 1),
         | pr AS (SELECT least(a.source, b.source) src_a,
         |     greatest(a.source, b.source) src_b
@@ -5987,17 +5783,7 @@ object ExtensionQueries {
     // Gopher decision-table mirror: same integral signals (centi / basis
     // points, floor), same rule bounds, same conjunction.
     "x88_gopher_filter" ->
-      """WITH w AS (SELECT doc_id, text, string_split(text,' ') w FROM documents),
-        | sig AS (SELECT doc_id,
-        |     len(w)::BIGINT n_words,
-        |     length(replace(text, ' ', ''))::BIGINT word_chars,
-        |     (len(w) - len(list_distinct(w)))::BIGINT n_dup,
-        |     len(list_filter(w, x ->
-        |       length(regexp_replace(x, '[^a-zA-Z]', '', 'g')) > 0))::BIGINT n_alpha,
-        |     (length(text) - length(regexp_replace(text, '[#…]', '', 'g')))::BIGINT n_sym,
-        |     len(list_intersect(list_distinct(w),
-        |       ['the','be','to','of','and','that','have','with']))::BIGINT stop_hits
-        |   FROM w),
+      s"""WITH $gopherCountsSql,
         | s2 AS (SELECT doc_id, n_words,
         |     floor(word_chars::DOUBLE * 100 / n_words::DOUBLE)::BIGINT mean_word_len_centi,
         |     floor(n_dup::DOUBLE * 10000 / n_words::DOUBLE)::BIGINT dup_word_bp,
@@ -6079,17 +5865,7 @@ object ExtensionQueries {
     // CCNet mirror: the x83 scoring CTEs + per-language ntile(3) over the
     // integer score with the doc_id tie-break.
     "x96_ccnet_buckets" ->
-      """WITH w AS (SELECT doc_id, string_split(text,' ') w FROM documents),
-        | big AS (SELECT doc_id, unnest(list_transform(
-        |          range(1, greatest(len(w)-1,0)+1),
-        |          k -> w[k::INT] || ' ' || w[k::INT+1])) s FROM w),
-        | c2 AS (SELECT s, count(*) n2 FROM big GROUP BY 1),
-        | c1 AS (SELECT split_part(s,' ',1) w1, count(*) n1 FROM big GROUP BY 1),
-        | v AS (SELECT count(DISTINCT t) v FROM
-        |   (SELECT unnest(string_split(text,' ')) t FROM documents)),
-        | m AS (SELECT s,
-        |     floor(ln((n1 + v.v)::DOUBLE / (n2 + 1)::DOUBLE) * 1000000)::BIGINT nll
-        |   FROM c2 JOIN c1 ON split_part(c2.s,' ',1) = c1.w1 CROSS JOIN v),
+      s"""WITH $bigramNllSql,
         | sc AS (SELECT doc_id,
         |     (sum(nll)::BIGINT // count(*)::BIGINT) avg_nll_scaled
         |   FROM big JOIN m USING (s) GROUP BY doc_id),
@@ -6313,20 +6089,7 @@ object ExtensionQueries {
     // integer math only — full epochs = want div n capped at 5, partial
     // rate = remainder bp, the shared md5 hash-mod acceptance.
     "x101_epoch_upsample" ->
-      """WITH wt AS (SELECT * FROM (VALUES
-        |     ('src0', 0.5::DOUBLE), ('src2', 0.2::DOUBLE),
-        |     ('src3', 0.01::DOUBLE)) w(dom, w)),
-        | cnt AS (SELECT source, count(*) n FROM documents GROUP BY 1),
-        | j AS (SELECT dom, w, n FROM cnt JOIN wt ON source = dom),
-        | p AS (SELECT dom, n, floor(w * 12000.0)::BIGINT want FROM j),
-        | e AS (SELECT dom, n, want, want // n full0,
-        |     least(want // n, 5) eful FROM p),
-        | pl AS (SELECT dom, eful,
-        |     CASE WHEN full0 >= 5 THEN 0
-        |          ELSE ((want - eful * n) * 10000) // n END pbp
-        |   FROM e),
-        | ep AS (SELECT dom, eful, pbp,
-        |     unnest(range(0, eful + 1)) epoch FROM pl)
+      s"""WITH $epochPlanSql
         | SELECT d.doc_id, d.source, ep.epoch::BIGINT AS epoch
         | FROM documents d JOIN ep ON d.source = ep.dom
         | WHERE ep.epoch < ep.eful
@@ -6419,20 +6182,7 @@ object ExtensionQueries {
     // Epoch-replay mirror: the x101 selection CTEs, then rank by
     // (hash60(epoch‖'_'‖id), id, epoch) and round-robin over 8 shards.
     "x106_epoch_replay" ->
-      """WITH wt AS (SELECT * FROM (VALUES
-        |     ('src0', 0.5::DOUBLE), ('src2', 0.2::DOUBLE),
-        |     ('src3', 0.01::DOUBLE)) w(dom, w)),
-        | cnt AS (SELECT source, count(*) n FROM documents GROUP BY 1),
-        | j AS (SELECT dom, w, n FROM cnt JOIN wt ON source = dom),
-        | p AS (SELECT dom, n, floor(w * 12000.0)::BIGINT want FROM j),
-        | e AS (SELECT dom, n, want, want // n full0,
-        |     least(want // n, 5) eful FROM p),
-        | pl AS (SELECT dom, eful,
-        |     CASE WHEN full0 >= 5 THEN 0
-        |          ELSE ((want - eful * n) * 10000) // n END pbp
-        |   FROM e),
-        | ep AS (SELECT dom, eful, pbp,
-        |     unnest(range(0, eful + 1)) epoch FROM pl),
+      s"""WITH $epochPlanSql,
         | sel AS (SELECT d.doc_id, ep.epoch::BIGINT epoch
         |   FROM documents d JOIN ep ON d.source = ep.dom
         |   WHERE ep.epoch < ep.eful
@@ -6450,17 +6200,7 @@ object ExtensionQueries {
     // Config-diff mirror: the x88 signal CTEs computed ONCE, both
     // conjunctions decided from them, 2×2 flip matrix.
     "x107_filter_config_diff" ->
-      """WITH w AS (SELECT doc_id, text, string_split(text,' ') w FROM documents),
-        | sig AS (SELECT doc_id,
-        |     len(w)::BIGINT n_words,
-        |     length(replace(text, ' ', ''))::BIGINT word_chars,
-        |     (len(w) - len(list_distinct(w)))::BIGINT n_dup,
-        |     len(list_filter(w, x ->
-        |       length(regexp_replace(x, '[^a-zA-Z]', '', 'g')) > 0))::BIGINT n_alpha,
-        |     (length(text) - length(regexp_replace(text, '[#…]', '', 'g')))::BIGINT n_sym,
-        |     len(list_intersect(list_distinct(w),
-        |       ['the','be','to','of','and','that','have','with']))::BIGINT stop_hits
-        |   FROM w),
+      s"""WITH $gopherCountsSql,
         | s2 AS (SELECT doc_id, n_words,
         |     floor(word_chars::DOUBLE * 100 / n_words::DOUBLE)::BIGINT mwl,
         |     floor(n_dup::DOUBLE * 10000 / n_words::DOUBLE)::BIGINT dup_bp,
@@ -6509,15 +6249,8 @@ object ExtensionQueries {
       s"""$word3gramShingles,
          | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
          | $ophBsigSql,
-         | cand AS (SELECT DISTINCT a.doc_id i, b.doc_id j FROM bsig a JOIN bsig b
-         |   ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-         |   JOIN okb ON okb.band = a.band AND okb.sig = a.sig),
-         | inter AS (SELECT cd.i, cd.j, count(*) c FROM cand cd
-         |   JOIN sh a ON a.doc_id = cd.i JOIN sh b ON b.doc_id = cd.j AND b.s = a.s
-         |   GROUP BY 1, 2),
-         | p AS (SELECT i, j FROM inter
-         |   JOIN n na ON na.doc_id = i JOIN n nb ON nb.doc_id = j
-         |   WHERE floor(c::DOUBLE * 10000 / (na.n + nb.n - c)::DOUBLE) >= 5000),
+         | $bandVerifySql,
+         | $jaccardPairsSql,
          | sp AS (SELECT doc_id,
          |     CASE WHEN ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT
          |       % 10000 < 8000 THEN 'train' ELSE 'eval' END split
@@ -6537,20 +6270,7 @@ object ExtensionQueries {
     // decimal (hash,pos) key, a CURRENT ROW..3 FOLLOWING window min,
     // full windows only, DISTINCT selections.
     "x110_winnow_fingerprints" ->
-      """WITH w AS (SELECT doc_id, string_split(text,' ') t FROM documents),
-        | ps AS (SELECT doc_id, unnest(list_transform(
-        |     range(0, greatest(len(t)-2, 0)),
-        |     p -> struct_pack(p := p, h := ('0x' || substr(md5(
-        |       array_to_string(list_slice(t, (p+1)::INT, (p+3)::INT), ' ')
-        |     ),1,15))::BIGINT))) e FROM w),
-        | pp AS (SELECT doc_id, e.p p,
-        |     lpad(e.h::VARCHAR, 19, '0') || lpad(e.p::VARCHAR, 8, '0') kk
-        |   FROM ps),
-        | wm AS (SELECT doc_id, p,
-        |     max(p) OVER (PARTITION BY doc_id) maxp,
-        |     min(kk) OVER (PARTITION BY doc_id ORDER BY p
-        |       ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) wmin
-        |   FROM pp)
+      s"""WITH $winnowCtesSql
         | SELECT DISTINCT doc_id, substr(wmin, 20, 8)::BIGINT AS pos,
         |   substr(wmin, 1, 19)::BIGINT AS fp
         | FROM wm WHERE p <= maxp - 3
@@ -6559,26 +6279,12 @@ object ExtensionQueries {
     // Cluster-histogram mirror: x109's banding/verify pairs → recursive
     // reachability (the x40 component rule) → sizes → histogram.
     "x111_cluster_histogram" ->
-      s"""WITH RECURSIVE w AS (SELECT doc_id, string_split(text,' ') w FROM documents),
-         | sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-         |          range(1, greatest(len(w)-2,0)+1),
-         |          k -> w[k::INT] || ' ' || w[k::INT+1] || ' ' || w[k::INT+2]))) s
-         |        FROM w),
+      s"""WITH RECURSIVE ${word3gramCtes("documents")},
          | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
          | $ophBsigSql,
-         | cand AS (SELECT DISTINCT a.doc_id i, b.doc_id j FROM bsig a JOIN bsig b
-         |   ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-         |   JOIN okb ON okb.band = a.band AND okb.sig = a.sig),
-         | inter AS (SELECT cd.i, cd.j, count(*) c FROM cand cd
-         |   JOIN sh a ON a.doc_id = cd.i JOIN sh b ON b.doc_id = cd.j AND b.s = a.s
-         |   GROUP BY 1, 2),
-         | p AS (SELECT i, j FROM inter
-         |   JOIN n na ON na.doc_id = i JOIN n nb ON nb.doc_id = j
-         |   WHERE floor(c::DOUBLE * 10000 / (na.n + nb.n - c)::DOUBLE) >= 5000),
-         | e AS (SELECT i AS a, j AS b FROM p UNION ALL SELECT j, i FROM p),
-         | reach AS (SELECT a, b FROM e
-         |   UNION
-         |   SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
+         | $bandVerifySql,
+         | $jaccardPairsSql,
+         | $reachSql,
          | compo AS (SELECT a AS doc_id, least(a, min(b)) comp
          |   FROM reach GROUP BY a),
          | sz AS (SELECT comp, count(*) s FROM compo GROUP BY comp)
@@ -6611,20 +6317,7 @@ object ExtensionQueries {
     // Winnow-overlap mirror: the x110 selection CTEs → DISTINCT (doc,fp)
     // → fp-bucket pair join → shared count ≥ 2.
     "x113_winnow_overlap" ->
-      """WITH w AS (SELECT doc_id, string_split(text,' ') t FROM documents),
-        | ps AS (SELECT doc_id, unnest(list_transform(
-        |     range(0, greatest(len(t)-2, 0)),
-        |     p -> struct_pack(p := p, h := ('0x' || substr(md5(
-        |       array_to_string(list_slice(t, (p+1)::INT, (p+3)::INT), ' ')
-        |     ),1,15))::BIGINT))) e FROM w),
-        | pp AS (SELECT doc_id, e.p p,
-        |     lpad(e.h::VARCHAR, 19, '0') || lpad(e.p::VARCHAR, 8, '0') kk
-        |   FROM ps),
-        | wm AS (SELECT doc_id, p,
-        |     max(p) OVER (PARTITION BY doc_id) maxp,
-        |     min(kk) OVER (PARTITION BY doc_id ORDER BY p
-        |       ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) wmin
-        |   FROM pp),
+      s"""WITH $winnowCtesSql,
         | sel AS (SELECT DISTINCT doc_id, substr(wmin, 1, 19)::BIGINT fp
         |   FROM wm WHERE p <= maxp - 3),
         | ok AS (SELECT fp FROM sel GROUP BY fp HAVING count(*) <= 200),
@@ -6715,20 +6408,7 @@ object ExtensionQueries {
     // Epoch-token mirror: the x101/x106 selection CTEs carrying source
     // and token counts, grouped per (source, epoch).
     "x118_epoch_tokens" ->
-      """WITH wt AS (SELECT * FROM (VALUES
-        |     ('src0', 0.5::DOUBLE), ('src2', 0.2::DOUBLE),
-        |     ('src3', 0.01::DOUBLE)) w(dom, w)),
-        | cnt AS (SELECT source, count(*) n FROM documents GROUP BY 1),
-        | j AS (SELECT dom, w, n FROM cnt JOIN wt ON source = dom),
-        | p AS (SELECT dom, n, floor(w * 12000.0)::BIGINT want FROM j),
-        | e AS (SELECT dom, n, want, want // n full0,
-        |     least(want // n, 5) eful FROM p),
-        | pl AS (SELECT dom, eful,
-        |     CASE WHEN full0 >= 5 THEN 0
-        |          ELSE ((want - eful * n) * 10000) // n END pbp
-        |   FROM e),
-        | ep AS (SELECT dom, eful, pbp,
-        |     unnest(range(0, eful + 1)) epoch FROM pl),
+      s"""WITH $epochPlanSql,
         | sel AS (SELECT d.doc_id, d.source,
         |     len(string_split(d.text,' '))::BIGINT nt, ep.epoch::BIGINT epoch
         |   FROM documents d JOIN ep ON d.source = ep.dom
@@ -6828,12 +6508,7 @@ object ExtensionQueries {
     "x124_corpus_curation_oph" ->
       s"""WITH RECURSIVE $curationHeadSql,
          | $ophBsigSql,
-         | cand AS (SELECT DISTINCT a.doc_id i, b.doc_id j FROM bsig a JOIN bsig b
-         |   ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
-         |   JOIN okb ON okb.band = a.band AND okb.sig = a.sig),
-         | inter AS (SELECT cd.i, cd.j, count(*) c FROM cand cd
-         |   JOIN sh a ON a.doc_id = cd.i JOIN sh b ON b.doc_id = cd.j AND b.s = a.s
-         |   GROUP BY 1, 2),
+         | $bandVerifySql,
          | $curationTailSql""".stripMargin,
 
     // Refresh-capstone mirror: the x114 diff CTEs (with source carried),
@@ -7212,11 +6887,7 @@ object ExtensionQueries {
     // kernels are additionally spec-gated (HttpOpsSpec round-trip +
     // multi-member + view tests).
     "x139_warc_gz_http" ->
-      s"""WITH $htmlSynthSql,
-        | h2 AS (SELECT doc_id, regexp_replace(html, '</body></html>$$',
-        |     '$AccentLineHead' || doc_id::VARCHAR || '$AccentLineTail')
-        |     AS html FROM h),
-        | ${htmlStripCtesSql("h2")},
+      s"""${accentPagesSql(None)},
         | $htmlPageTailSql""".stripMargin,
 
     // x140 mirror: identical envelope synthesis, DuckDB's own split
@@ -7321,22 +6992,7 @@ object ExtensionQueries {
         | nodes AS (SELECT node, min(dom) AS reg_domain FROM (
         |     SELECT src AS node, sdom AS dom FROM e0
         |     UNION ALL SELECT dst, ddom FROM e0) GROUP BY node),
-        | ow AS (SELECT src, sum(w)::BIGINT out_w FROM e GROUP BY src),
-        | r0 AS (SELECT node, 1000000::BIGINT r FROM nodes),
-        | i1 AS (SELECT e.dst AS node,
-        |     sum((r0.r * e.w) // ow.out_w)::BIGINT s
-        |   FROM e JOIN r0 ON e.src = r0.node JOIN ow ON e.src = ow.src
-        |   GROUP BY e.dst),
-        | r1 AS (SELECT n.node,
-        |     (150000 + (85 * coalesce(i1.s, 0)) // 100)::BIGINT r
-        |   FROM nodes n LEFT JOIN i1 USING (node)),
-        | i2 AS (SELECT e.dst AS node,
-        |     sum((r1.r * e.w) // ow.out_w)::BIGINT s
-        |   FROM e JOIN r1 ON e.src = r1.node JOIN ow ON e.src = ow.src
-        |   GROUP BY e.dst),
-        | r2 AS (SELECT n.node,
-        |     (150000 + (85 * coalesce(i2.s, 0)) // 100)::BIGINT r
-        |   FROM nodes n LEFT JOIN i2 USING (node)),
+        | $pagerank2Sql,
         | rm AS (SELECT n.node, n.reg_domain, r2.r,
         |     max(r2.r) OVER (PARTITION BY n.reg_domain) rmax
         |   FROM nodes n JOIN r2 USING (node))
@@ -7484,22 +7140,7 @@ object ExtensionQueries {
         |   GROUP BY src, dst),
         | nodes AS (SELECT DISTINCT node FROM (
         |     SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-        | ow AS (SELECT src, sum(w)::BIGINT out_w FROM e GROUP BY src),
-        | r0 AS (SELECT node, 1000000::BIGINT r FROM nodes),
-        | i1 AS (SELECT e.dst AS node,
-        |     sum((r0.r * e.w) // ow.out_w)::BIGINT s
-        |   FROM e JOIN r0 ON e.src = r0.node JOIN ow ON e.src = ow.src
-        |   GROUP BY e.dst),
-        | r1 AS (SELECT n.node,
-        |     (150000 + (85 * coalesce(i1.s, 0)) // 100)::BIGINT r
-        |   FROM nodes n LEFT JOIN i1 USING (node)),
-        | i2 AS (SELECT e.dst AS node,
-        |     sum((r1.r * e.w) // ow.out_w)::BIGINT s
-        |   FROM e JOIN r1 ON e.src = r1.node JOIN ow ON e.src = ow.src
-        |   GROUP BY e.dst),
-        | r2 AS (SELECT n.node,
-        |     (150000 + (85 * coalesce(i2.s, 0)) // 100)::BIGINT r
-        |   FROM nodes n LEFT JOIN i2 USING (node)),
+        | $pagerank2Sql,
         | cand AS (SELECT canon_url, host, reg_domain,
         |     coalesce(nullif(regexp_extract(canon_url,
         |       '^[a-z][a-z0-9+.-]*://[^/?#]*(.*)$$', 1), ''), '/') mp
@@ -7605,15 +7246,7 @@ object ExtensionQueries {
     // identity across ALL THREE charset arms, windows-1252 included,
     // is the x139 losslessness proof for the decode layer).
     "x147_charset_bytes" ->
-      s"""WITH $htmlSynthSql,
-        | h2 AS (SELECT doc_id, regexp_replace(html, '</body></html>$$',
-        |     CASE WHEN doc_id % 3 = 2
-        |       THEN '$Cp1252LineHead' || doc_id::VARCHAR ||
-        |         '$Cp1252LineTail'
-        |       ELSE '$AccentLineHead' || doc_id::VARCHAR ||
-        |         '$AccentLineTail' END)
-        |     AS html FROM h),
-        | ${htmlStripCtesSql("h2")},
+      s"""${accentPagesSql(Some(2))},
         | $htmlPageTailSql""".stripMargin,
 
     // x148 mirror: the same four-shape synthesis, DuckDB's own base
@@ -7684,15 +7317,7 @@ object ExtensionQueries {
         |     CASE WHEN doc_id % 5 = 4 THEN '2020-02-10'
         |          ELSE '2020-01-01' END AS lastmod
         |   FROM documents WHERE doc_id % 5 IN (2, 4)),
-        | lg AS (SELECT url, capture_date, digest,
-        |     lag(digest) OVER (PARTITION BY url ORDER BY capture_date)
-        |       AS prev
-        |   FROM caps),
-        | ag AS (SELECT url, count(*)::BIGINT n_captures,
-        |     sum(CASE WHEN prev IS NOT NULL AND prev <> digest
-        |       THEN 1 ELSE 0 END)::BIGINT n_changes,
-        |     min(capture_date) f, max(capture_date) l
-        |   FROM lg GROUP BY url),
+        | $captureChangesSql,
         | ag2 AS (SELECT ag.url, n_captures, n_changes,
         |     date_diff('day', f::DATE, l::DATE)::BIGINT span_days,
         |     date_diff('day', l::DATE, DATE '2020-02-15')::BIGINT
@@ -7716,11 +7341,7 @@ object ExtensionQueries {
     // gzip AND deflate arms is the x139 losslessness proof for the
     // Content-Encoding layer).
     "x150_content_encoding" ->
-      s"""WITH $htmlSynthSql,
-        | h2 AS (SELECT doc_id, regexp_replace(html, '</body></html>$$',
-        |     '$AccentLineHead' || doc_id::VARCHAR || '$AccentLineTail')
-        |     AS html FROM h),
-        | ${htmlStripCtesSql("h2")},
+      s"""${accentPagesSql(None)},
         | $htmlPageTailSql""".stripMargin,
 
     // x151 mirror: the same chrome-heavy synthesis, DuckDB's own block
@@ -7997,27 +7618,14 @@ object ExtensionQueries {
     // convention — the byte round trips are the Spark side's to
     // prove) plus the arm-determined charset the sniff must land on.
     "x156_meta_charset" ->
-      s"""WITH $htmlSynthSql,
-        | h2 AS (SELECT doc_id, regexp_replace(html, '</body></html>$$',
-        |     CASE WHEN doc_id % 3 = 1
-        |       THEN '$Cp1252LineHead' || doc_id::VARCHAR ||
-        |         '$Cp1252LineTail'
-        |       ELSE '$AccentLineHead' || doc_id::VARCHAR ||
-        |         '$AccentLineTail' END)
-        |     AS html FROM h),
-        | ${htmlStripCtesSql("h2")},
-        | k AS (SELECT doc_id, line_no, line FROM dd WHERE rk = 1),
-        | pg AS (SELECT doc_id, count(*)::BIGINT AS n_lines,
-        |     string_agg(line, chr(10) ORDER BY line_no) AS text
-        |   FROM k GROUP BY doc_id)
+      s"""${accentPagesSql(Some(1))},
+        | $htmlPagesSql
         | SELECT doc_id,
         |   CASE (doc_id % 3) WHEN 0 THEN 'utf-8'
         |     WHEN 1 THEN 'windows-1252'
         |     ELSE 'iso-8859-1' END AS charset_used,
         |   n_lines, text FROM pg
-        | WHERE n_lines >= 5 AND NOT contains(text, '{')
-        |   AND NOT contains(text, '}')
-        |   AND NOT contains(lower(text), 'lorem ipsum')
+        | $c4PageWhereSql
         | ORDER BY doc_id""".stripMargin,
 
     // x157 mirror: the same synthesis, the shared strip/line CTEs,
@@ -8048,9 +7656,7 @@ object ExtensionQueries {
         |     string_agg(line, chr(10) ORDER BY line_no) AS text
         |   FROM kl GROUP BY doc_id)
         | SELECT doc_id, n_lines, text FROM pg
-        | WHERE n_lines >= 5 AND NOT contains(text, '{')
-        |   AND NOT contains(text, '}')
-        |   AND NOT contains(lower(text), 'lorem ipsum')
+        | $c4PageWhereSql
         | ORDER BY doc_id""".stripMargin,
 
     // x158 mirror: the synthesis constructs the templates the Spark
@@ -8105,15 +7711,7 @@ object ExtensionQueries {
         |     (PARTITION BY url ORDER BY capture_date DESC, digest DESC)
         |     rk FROM caps),
         | l1 AS (SELECT url, etag, lm FROM lt WHERE rk = 1),
-        | lg AS (SELECT url, capture_date, digest,
-        |     lag(digest) OVER (PARTITION BY url ORDER BY capture_date)
-        |       AS prev
-        |   FROM caps),
-        | ag AS (SELECT url, count(*)::BIGINT n_captures,
-        |     sum(CASE WHEN prev IS NOT NULL AND prev <> digest
-        |       THEN 1 ELSE 0 END)::BIGINT n_changes,
-        |     min(capture_date) f, max(capture_date) l
-        |   FROM lg GROUP BY url),
+        | $captureChangesSql,
         | sm AS (SELECT 'https://example.com/doc/' || doc_id::VARCHAR
         |       AS url, '2020-02-10' AS lastmod
         |   FROM documents WHERE doc_id % 5 = 0),
@@ -8146,23 +7744,14 @@ object ExtensionQueries {
     // side's to prove) plus the arm-determined charset the precedence
     // chain must land on.
     "x166_bom_charset" ->
-      s"""WITH $htmlSynthSql,
-        | h2 AS (SELECT doc_id, regexp_replace(html, '</body></html>$$',
-        |     '$AccentLineHead' || doc_id::VARCHAR || '$AccentLineTail')
-        |     AS html FROM h),
-        | ${htmlStripCtesSql("h2")},
-        | k AS (SELECT doc_id, line_no, line FROM dd WHERE rk = 1),
-        | pg AS (SELECT doc_id, count(*)::BIGINT AS n_lines,
-        |     string_agg(line, chr(10) ORDER BY line_no) AS text
-        |   FROM k GROUP BY doc_id)
+      s"""${accentPagesSql(None)},
+        | $htmlPagesSql
         | SELECT doc_id,
         |   CASE (doc_id % 4) WHEN 1 THEN 'utf-16le'
         |     WHEN 2 THEN 'utf-16be'
         |     ELSE 'utf-8' END AS charset_used,
         |   n_lines, text FROM pg
-        | WHERE n_lines >= 5 AND NOT contains(text, '{')
-        |   AND NOT contains(text, '}')
-        |   AND NOT contains(lower(text), 'lorem ipsum')
+        | $c4PageWhereSql
         | ORDER BY doc_id""".stripMargin,
 
     // x165 mirror: the same capture/payload synthesis, DuckDB's own
@@ -8171,17 +7760,7 @@ object ExtensionQueries {
     // the digest join — the store strings themselves are the Spark
     // side's to prove.
     "x165_dedup_store" ->
-      s"""WITH dsc AS (SELECT doc_id, t.k,
-        |     'https://example.com/doc/' || doc_id::VARCHAR AS url,
-        |     '2020-01-' ||
-        |       lpad((1 + (doc_id % 9) + t.k * 7)::VARCHAR, 2, '0')
-        |       AS capture_date,
-        |     (CASE WHEN doc_id % 3 = 0 THEN t.k
-        |           WHEN doc_id % 3 = 1 THEN
-        |             (CASE WHEN t.k >= 2 THEN 1 ELSE 0 END)
-        |           ELSE 0 END) AS ver
-        |   FROM documents
-        |   CROSS JOIN (SELECT unnest([0, 1, 2]) AS k) t),
+      s"""WITH ${captureHistorySql("dsc")},
         | dsp AS (SELECT url, capture_date,
         |     'Body v' || ver::VARCHAR || ' of doc ' ||
         |       regexp_extract(url, '/doc/([0-9]+)$$', 1) || '.'
@@ -8241,23 +7820,14 @@ object ExtensionQueries {
     // the Spark side must land the SAME bytes through write → split →
     // slice → decode.
     "x164_wet_roundtrip" ->
-      s"""WITH $htmlSynthSql,
-        | h2 AS (SELECT doc_id, regexp_replace(html, '</body></html>$$',
-        |     '$AccentLineHead' || doc_id::VARCHAR || '$AccentLineTail')
-        |     AS html FROM h),
-        | ${htmlStripCtesSql("h2")},
-        | k AS (SELECT doc_id, line_no, line FROM dd WHERE rk = 1),
-        | pg AS (SELECT doc_id, count(*)::BIGINT AS n_lines,
-        |     string_agg(line, chr(10) ORDER BY line_no) AS text
-        |   FROM k GROUP BY doc_id)
+      s"""${accentPagesSql(None)},
+        | $htmlPagesSql
         | SELECT doc_id,
         |   'https://example.com/doc/' || doc_id::VARCHAR AS refers_to,
         |   octet_length(encode(text))::BIGINT AS content_length,
         |   true AS length_ok, text
         | FROM pg
-        | WHERE n_lines >= 5 AND NOT contains(text, '{')
-        |   AND NOT contains(text, '}')
-        |   AND NOT contains(lower(text), 'lorem ipsum')
+        | $c4PageWhereSql
         | ORDER BY doc_id""".stripMargin,
 
     // x162 mirror: the same five-arm synthesis (signature bytes via
@@ -8436,7 +8006,6 @@ object ExtensionQueries {
     // arithmetic (all integral), and the three funnel stages unioned.
     "x168_lang_gopher" -> {
       // relational trigram scoring (triScoreCtesSql — r19)
-      def sqlArr(xs: Seq[String]) = xs.map(x => s"'$x'").mkString("[", ",", "]")
       val engArr = sqlArr(TextOps.GopherStopProbe)
       s"""WITH d AS (SELECT doc_id,
         |     CASE (doc_id % 3) WHEN 0 THEN '$langEnText'
@@ -8458,20 +8027,7 @@ object ExtensionQueries {
         |   p(lang, stop_words, min_stop_hits, min_words,
         |     min_word_len_centi)),
         | sig AS (SELECT doc_id, text, lang,
-        |     len(string_split(text, ' '))::BIGINT n_words,
-        |     floor(len(replace(text, ' ', ''))::DOUBLE * 100
-        |       / len(string_split(text, ' '))::DOUBLE)::BIGINT wl,
-        |     floor((len(string_split(text, ' '))
-        |         - len(list_distinct(string_split(text, ' '))))::DOUBLE
-        |       * 10000
-        |       / len(string_split(text, ' '))::DOUBLE)::BIGINT dup_bp,
-        |     floor(len(list_filter(string_split(text, ' '),
-        |         w -> len(regexp_replace(w, '[^a-zA-Z]', '', 'g')) > 0))
-        |         ::DOUBLE * 10000
-        |       / len(string_split(text, ' '))::DOUBLE)::BIGINT alpha_bp,
-        |     floor((len(text) - len(regexp_replace(text, '[#…]', '', 'g')))
-        |         ::DOUBLE * 10000
-        |       / len(string_split(text, ' '))::DOUBLE)::BIGINT sym_bp,
+        |     $gopherSignalsSql,
         |     len(list_filter(list_distinct(string_split(text, ' ')),
         |       w -> list_contains($engArr, w)))::BIGINT eng_stops
         |   FROM l),
@@ -8483,23 +8039,13 @@ object ExtensionQueries {
         |     coalesce(p.min_words, 50) mw,
         |     coalesce(p.min_word_len_centi, 300) mwl
         |   FROM sig s LEFT JOIN prof p USING (lang)),
-        | keng AS (SELECT * FROM sig
-        |   WHERE n_words >= 10 AND n_words <= 100000
-        |     AND wl BETWEEN 300 AND 1000 AND dup_bp <= 3000
-        |     AND alpha_bp >= 8000 AND sym_bp <= 1000 AND eng_stops >= 2),
+        | $gopherEnglishSql,
         | kaw AS (SELECT * FROM aware
         |   WHERE n_words >= mw AND n_words <= 100000
         |     AND wl >= mwl AND wl <= 1000 AND dup_bp <= 3000
         |     AND alpha_bp >= 8000 AND sym_bp <= 1000
         |     AND lang_stops >= msh)
-        | SELECT 0::BIGINT stage_idx, 'raw' AS stage, lang,
-        |     count(*)::BIGINT n_docs, sum(n_words)::BIGINT n_tokens
-        |   FROM sig GROUP BY lang
-        | UNION ALL SELECT 1::BIGINT, 'english_cfg', lang,
-        |     count(*)::BIGINT, sum(n_words)::BIGINT FROM keng GROUP BY lang
-        | UNION ALL SELECT 2::BIGINT, 'lang_aware', lang,
-        |     count(*)::BIGINT, sum(n_words)::BIGINT FROM kaw GROUP BY lang
-        | ORDER BY stage_idx, lang""".stripMargin
+        | $gopherFunnelSql""".stripMargin
     },
 
     // x169 mirror: the same en/ja page synthesis, the SAME strip/line
@@ -8517,17 +8063,7 @@ object ExtensionQueries {
         | prof AS (SELECT * FROM (VALUES
         |     ('ja', ['。','！','？','」'], 1, 3))
         |   p(lang, term_chars, min_line_words, min_line_chars)),
-        | lx AS (SELECT ln.doc_id, d0.lang, ln.line_no, ln.line
-        |   FROM ln JOIN d0 USING (doc_id)),
-        | keptl AS (SELECT lx.doc_id, lx.lang, lx.line_no, lx.line
-        |   FROM lx LEFT JOIN prof p USING (lang)
-        |   WHERE list_contains(coalesce(p.term_chars, ['.','!','?','"']),
-        |       substr(line, length(line), 1))
-        |     AND len(string_split(line, ' ')) >=
-        |       coalesce(p.min_line_words, 3)
-        |     AND length(line) >= coalesce(p.min_line_chars, 1)
-        |     AND NOT contains(lower(line), 'javascript'))
-        | SELECT doc_id, lang, line_no, line FROM keptl
+        | $c4LangLinesSql
         | ORDER BY doc_id, line_no""".stripMargin,
 
     // x170 mirror: the recovered WAT fields are the Spark side's to
@@ -8653,7 +8189,6 @@ object ExtensionQueries {
     // the ru/ar profiles set it to 0 because the [a-zA-Z] alphabetic
     // floor reads every non-latin word as non-alphabetic.
     "x174_lang_gopher_ext" -> {
-      def sqlArr(xs: Seq[String]) = xs.map(x => s"'$x'").mkString("[", ",", "]")
       val engArr = sqlArr(TextOps.GopherStopProbe)
       s"""WITH d AS (SELECT doc_id,
         |     CASE (doc_id % 6) WHEN 0 THEN '$langEnText'
@@ -8685,20 +8220,7 @@ object ExtensionQueries {
         |   p(lang, stop_words, min_stop_hits, min_words,
         |     min_word_len_centi, min_alpha_bp)),
         | sig AS (SELECT doc_id, text, lang,
-        |     len(string_split(text, ' '))::BIGINT n_words,
-        |     floor(len(replace(text, ' ', ''))::DOUBLE * 100
-        |       / len(string_split(text, ' '))::DOUBLE)::BIGINT wl,
-        |     floor((len(string_split(text, ' '))
-        |         - len(list_distinct(string_split(text, ' '))))::DOUBLE
-        |       * 10000
-        |       / len(string_split(text, ' '))::DOUBLE)::BIGINT dup_bp,
-        |     floor(len(list_filter(string_split(text, ' '),
-        |         w -> len(regexp_replace(w, '[^a-zA-Z]', '', 'g')) > 0))
-        |         ::DOUBLE * 10000
-        |       / len(string_split(text, ' '))::DOUBLE)::BIGINT alpha_bp,
-        |     floor((len(text) - len(regexp_replace(text, '[#…]', '', 'g')))
-        |         ::DOUBLE * 10000
-        |       / len(string_split(text, ' '))::DOUBLE)::BIGINT sym_bp,
+        |     $gopherSignalsSql,
         |     len(list_filter(list_distinct(string_split(text, ' ')),
         |       w -> list_contains($engArr, w)))::BIGINT eng_stops
         |   FROM l),
@@ -8711,23 +8233,13 @@ object ExtensionQueries {
         |     coalesce(p.min_word_len_centi, 300) mwl,
         |     coalesce(p.min_alpha_bp, 8000) mab
         |   FROM sig s LEFT JOIN prof p USING (lang)),
-        | keng AS (SELECT * FROM sig
-        |   WHERE n_words >= 10 AND n_words <= 100000
-        |     AND wl BETWEEN 300 AND 1000 AND dup_bp <= 3000
-        |     AND alpha_bp >= 8000 AND sym_bp <= 1000 AND eng_stops >= 2),
+        | $gopherEnglishSql,
         | kaw AS (SELECT * FROM aware
         |   WHERE n_words >= mw AND n_words <= 100000
         |     AND wl >= mwl AND wl <= 1000 AND dup_bp <= 3000
         |     AND alpha_bp >= mab AND sym_bp <= 1000
         |     AND lang_stops >= msh)
-        | SELECT 0::BIGINT stage_idx, 'raw' AS stage, lang,
-        |     count(*)::BIGINT n_docs, sum(n_words)::BIGINT n_tokens
-        |   FROM sig GROUP BY lang
-        | UNION ALL SELECT 1::BIGINT, 'english_cfg', lang,
-        |     count(*)::BIGINT, sum(n_words)::BIGINT FROM keng GROUP BY lang
-        | UNION ALL SELECT 2::BIGINT, 'lang_aware', lang,
-        |     count(*)::BIGINT, sum(n_words)::BIGINT FROM kaw GROUP BY lang
-        | ORDER BY stage_idx, lang""".stripMargin
+        | $gopherFunnelSql""".stripMargin
     },
 
     // x175 mirror: the extracted text is the Spark side's to PROVE
@@ -8772,7 +8284,6 @@ object ExtensionQueries {
     // over char-6 shingles, recursive reachability, the token-budget
     // mixture rates, and the x94 packing prefix sums.
     "x176_first_mile_capstone" -> {
-      def sqlArr(xs: Seq[String]) = xs.map(x => s"'$x'").mkString("[", ",", "]")
       val engArr = sqlArr(TextOps.GopherStopProbe)
       s"""WITH RECURSIVE d0 AS (SELECT doc_id, doc_id % 3 l3,
         |     (doc_id % 5 = 4) sh0, md5((doc_id // 6)::VARCHAR) g,
@@ -8822,20 +8333,7 @@ object ExtensionQueries {
         |   p(lang, stop_words, min_stop_hits, min_words, mwl_min,
         |     mwl_max, min_alpha)),
         | sig AS (SELECT doc_id, lang, src, text, n_tokens,
-        |     len(string_split(text, ' '))::BIGINT n_words,
-        |     floor(len(replace(text, ' ', ''))::DOUBLE * 100
-        |       / len(string_split(text, ' '))::DOUBLE)::BIGINT wl,
-        |     floor((len(string_split(text, ' '))
-        |         - len(list_distinct(string_split(text, ' '))))::DOUBLE
-        |       * 10000
-        |       / len(string_split(text, ' '))::DOUBLE)::BIGINT dup_bp,
-        |     floor(len(list_filter(string_split(text, ' '),
-        |         w -> len(regexp_replace(w, '[^a-zA-Z]', '', 'g')) > 0))
-        |         ::DOUBLE * 10000
-        |       / len(string_split(text, ' '))::DOUBLE)::BIGINT alpha_bp,
-        |     floor((len(text) - len(regexp_replace(text, '[#…]', '', 'g')))
-        |         ::DOUBLE * 10000
-        |       / len(string_split(text, ' '))::DOUBLE)::BIGINT sym_bp
+        |     $gopherSignalsSql
         |   FROM ext),
         | q AS MATERIALIZED (SELECT s.doc_id, s.lang, s.src, s.text,
         |     s.n_tokens
@@ -8869,10 +8367,7 @@ object ExtensionQueries {
         |   WHERE floor(len(list_intersect(la.l, lb.l))::DOUBLE * 10000
         |     / (len(la.l) + len(lb.l)
         |        - len(list_intersect(la.l, lb.l)))::DOUBLE) >= 9000),
-        | e AS (SELECT i AS a, j AS b FROM p UNION ALL SELECT j, i FROM p),
-        | reach AS (SELECT a, b FROM e
-        |   UNION
-        |   SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
+        | $reachSql,
         | dropd AS (SELECT a AS doc_id FROM reach GROUP BY a
         |   HAVING least(a, min(b)) < a),
         | surv AS MATERIALIZED (SELECT q.* FROM q WHERE NOT EXISTS
@@ -8938,17 +8433,7 @@ object ExtensionQueries {
         | ${htmlStripCtesSql("h2")},
         | prof AS (SELECT * FROM (VALUES $c4ProfileRowsSql)
         |   p(lang, term_chars, min_line_words, min_line_chars)),
-        | lx AS (SELECT ln.doc_id, d0.lang, ln.line_no, ln.line
-        |   FROM ln JOIN d0 USING (doc_id)),
-        | keptl AS (SELECT lx.doc_id, lx.lang, lx.line_no, lx.line
-        |   FROM lx LEFT JOIN prof p USING (lang)
-        |   WHERE list_contains(coalesce(p.term_chars, ['.','!','?','"']),
-        |       substr(line, length(line), 1))
-        |     AND len(string_split(line, ' ')) >=
-        |       coalesce(p.min_line_words, 3)
-        |     AND length(line) >= coalesce(p.min_line_chars, 1)
-        |     AND NOT contains(lower(line), 'javascript'))
-        | SELECT doc_id, lang, line_no, line FROM keptl
+        | $c4LangLinesSql
         | ORDER BY doc_id, line_no""".stripMargin,
 
     // x178 mirror: the store strings and the seek are the Spark
@@ -8960,17 +8445,7 @@ object ExtensionQueries {
     // fixture host, the digit-only timestamp, and the seeked record's
     // expected type/payload; seek_ok true by construction.
     "x178_cdxj_index" ->
-      s"""WITH xc AS (SELECT doc_id, t.k,
-        |     'https://example.com/doc/' || doc_id::VARCHAR AS url,
-        |     '2020-01-' ||
-        |       lpad((1 + (doc_id % 9) + t.k * 7)::VARCHAR, 2, '0')
-        |       AS capture_date,
-        |     (CASE WHEN doc_id % 3 = 0 THEN t.k
-        |           WHEN doc_id % 3 = 1 THEN
-        |             (CASE WHEN t.k >= 2 THEN 1 ELSE 0 END)
-        |           ELSE 0 END) AS ver
-        |   FROM documents
-        |   CROSS JOIN (SELECT unnest([0, 1, 2]) AS k) t),
+      s"""WITH ${captureHistorySql("xc")},
         | xp AS (SELECT doc_id, k, url, capture_date,
         |     'Body v' || ver::VARCHAR || ' of doc ' ||
         |       doc_id::VARCHAR || '.' AS payload
@@ -9300,6 +8775,203 @@ object ExtensionQueries {
       |     (PARTITION BY line ORDER BY doc_id, line_no) rk FROM kept)""".stripMargin
   }
 
+  /** The Gopher quality signals over a `text` column, as select-list
+    * items: n_words, wl (mean word length, centi-chars), dup_bp,
+    * alpha_bp and sym_bp — the integral arithmetic of
+    * `TextOps.gopherFilterByLang`.
+    */
+  private lazy val gopherSignalsSql: String =
+    """len(string_split(text, ' '))::BIGINT n_words,
+      |     floor(len(replace(text, ' ', ''))::DOUBLE * 100
+      |       / len(string_split(text, ' '))::DOUBLE)::BIGINT wl,
+      |     floor((len(string_split(text, ' '))
+      |         - len(list_distinct(string_split(text, ' '))))::DOUBLE
+      |       * 10000
+      |       / len(string_split(text, ' '))::DOUBLE)::BIGINT dup_bp,
+      |     floor(len(list_filter(string_split(text, ' '),
+      |         w -> len(regexp_replace(w, '[^a-zA-Z]', '', 'g')) > 0))
+      |         ::DOUBLE * 10000
+      |       / len(string_split(text, ' '))::DOUBLE)::BIGINT alpha_bp,
+      |     floor((len(text) - len(regexp_replace(text, '[#…]', '', 'g')))
+      |         ::DOUBLE * 10000
+      |       / len(string_split(text, ' '))::DOUBLE)::BIGINT sym_bp""".stripMargin
+
+  /** The x168/x174 English-configured Gopher stage: `keng`, the `sig`
+    * rows passing the default thresholds.
+    */
+  private lazy val gopherEnglishSql: String =
+    """keng AS (SELECT * FROM sig
+      |   WHERE n_words >= 10 AND n_words <= 100000
+      |     AND wl BETWEEN 300 AND 1000 AND dup_bp <= 3000
+      |     AND alpha_bp >= 8000 AND sym_bp <= 1000 AND eng_stops >= 2)""".stripMargin
+
+  /** The x168/x174 funnel: docs and tokens per lang at `sig` (raw),
+    * `keng` (english_cfg) and `kaw` (lang_aware).
+    */
+  private lazy val gopherFunnelSql: String =
+    """SELECT 0::BIGINT stage_idx, 'raw' AS stage, lang,
+      |     count(*)::BIGINT n_docs, sum(n_words)::BIGINT n_tokens
+      |   FROM sig GROUP BY lang
+      | UNION ALL SELECT 1::BIGINT, 'english_cfg', lang,
+      |     count(*)::BIGINT, sum(n_words)::BIGINT FROM keng GROUP BY lang
+      | UNION ALL SELECT 2::BIGINT, 'lang_aware', lang,
+      |     count(*)::BIGINT, sum(n_words)::BIGINT FROM kaw GROUP BY lang
+      | ORDER BY stage_idx, lang""".stripMargin
+
+  /** Two integer PageRank iterations (damping 0.85, 10^6 scale) over the
+    * edge CTE `e(src, dst, w)` and node CTE `nodes(node)`, ending at
+    * `r2(node, r)` — the x142/x145 mirror of `GraphOps.pageRank`.
+    */
+  private lazy val pagerank2Sql: String =
+    """ow AS (SELECT src, sum(w)::BIGINT out_w FROM e GROUP BY src),
+      | r0 AS (SELECT node, 1000000::BIGINT r FROM nodes),
+      | i1 AS (SELECT e.dst AS node,
+      |     sum((r0.r * e.w) // ow.out_w)::BIGINT s
+      |   FROM e JOIN r0 ON e.src = r0.node JOIN ow ON e.src = ow.src
+      |   GROUP BY e.dst),
+      | r1 AS (SELECT n.node,
+      |     (150000 + (85 * coalesce(i1.s, 0)) // 100)::BIGINT r
+      |   FROM nodes n LEFT JOIN i1 USING (node)),
+      | i2 AS (SELECT e.dst AS node,
+      |     sum((r1.r * e.w) // ow.out_w)::BIGINT s
+      |   FROM e JOIN r1 ON e.src = r1.node JOIN ow ON e.src = ow.src
+      |   GROUP BY e.dst),
+      | r2 AS (SELECT n.node,
+      |     (150000 + (85 * coalesce(i2.s, 0)) // 100)::BIGINT r
+      |   FROM nodes n LEFT JOIN i2 USING (node))""".stripMargin
+
+  /** The x101 epoch plan per source: `ep(dom, eful, pbp, epoch)` — full
+    * epochs `eful` (capped at 5) and the partial-epoch acceptance rate
+    * `pbp` in basis points, for weights `wt` over a 12000-doc budget.
+    */
+  private lazy val epochPlanSql: String =
+    """wt AS (SELECT * FROM (VALUES
+      |     ('src0', 0.5::DOUBLE), ('src2', 0.2::DOUBLE),
+      |     ('src3', 0.01::DOUBLE)) w(dom, w)),
+      | cnt AS (SELECT source, count(*) n FROM documents GROUP BY 1),
+      | j AS (SELECT dom, w, n FROM cnt JOIN wt ON source = dom),
+      | p AS (SELECT dom, n, floor(w * 12000.0)::BIGINT want FROM j),
+      | e AS (SELECT dom, n, want, want // n full0,
+      |     least(want // n, 5) eful FROM p),
+      | pl AS (SELECT dom, eful,
+      |     CASE WHEN full0 >= 5 THEN 0
+      |          ELSE ((want - eful * n) * 10000) // n END pbp
+      |   FROM e),
+      | ep AS (SELECT dom, eful, pbp,
+      |     unnest(range(0, eful + 1)) epoch FROM pl)""".stripMargin
+
+  /** The language-aware C4 line rules over the strip CTE `ln`, the
+    * page languages `d0` and the profile table `prof` — a complete query
+    * tail but for its ORDER BY (x169/x177).
+    */
+  private lazy val c4LangLinesSql: String =
+    """lx AS (SELECT ln.doc_id, d0.lang, ln.line_no, ln.line
+      |   FROM ln JOIN d0 USING (doc_id)),
+      | keptl AS (SELECT lx.doc_id, lx.lang, lx.line_no, lx.line
+      |   FROM lx LEFT JOIN prof p USING (lang)
+      |   WHERE list_contains(coalesce(p.term_chars, ['.','!','?','"']),
+      |       substr(line, length(line), 1))
+      |     AND len(string_split(line, ' ')) >=
+      |       coalesce(p.min_line_words, 3)
+      |     AND length(line) >= coalesce(p.min_line_chars, 1)
+      |     AND NOT contains(lower(line), 'javascript'))
+      | SELECT doc_id, lang, line_no, line FROM keptl""".stripMargin
+
+  /** Winnowing selection CTEs (x110/x113): positional word-3-gram
+    * hash60s, the zero-padded (hash, pos) key and its 4-wide window min
+    * `wm(doc_id, p, maxp, wmin)`.
+    */
+  private lazy val winnowCtesSql: String =
+    """w AS (SELECT doc_id, string_split(text,' ') t FROM documents),
+      | ps AS (SELECT doc_id, unnest(list_transform(
+      |     range(0, greatest(len(t)-2, 0)),
+      |     p -> struct_pack(p := p, h := ('0x' || substr(md5(
+      |       array_to_string(list_slice(t, (p+1)::INT, (p+3)::INT), ' ')
+      |     ),1,15))::BIGINT))) e FROM w),
+      | pp AS (SELECT doc_id, e.p p,
+      |     lpad(e.h::VARCHAR, 19, '0') || lpad(e.p::VARCHAR, 8, '0') kk
+      |   FROM ps),
+      | wm AS (SELECT doc_id, p,
+      |     max(p) OVER (PARTITION BY doc_id) maxp,
+      |     min(kk) OVER (PARTITION BY doc_id ORDER BY p
+      |       ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) wmin
+      |   FROM pp)""".stripMargin
+
+  /** The Gopher raw counts per doc (x88/x107): `sig(doc_id, n_words,
+    * word_chars, n_dup, n_alpha, n_sym, stop_hits)`.
+    */
+  private lazy val gopherCountsSql: String =
+    """w AS (SELECT doc_id, text, string_split(text,' ') w FROM documents),
+      | sig AS (SELECT doc_id,
+      |     len(w)::BIGINT n_words,
+      |     length(replace(text, ' ', ''))::BIGINT word_chars,
+      |     (len(w) - len(list_distinct(w)))::BIGINT n_dup,
+      |     len(list_filter(w, x ->
+      |       length(regexp_replace(x, '[^a-zA-Z]', '', 'g')) > 0))::BIGINT n_alpha,
+      |     (length(text) - length(regexp_replace(text, '[#…]', '', 'g')))::BIGINT n_sym,
+      |     len(list_intersect(list_distinct(w),
+      |       ['the','be','to','of','and','that','have','with']))::BIGINT stop_hits
+      |   FROM w)""".stripMargin
+
+  /** The x83 bigram LM CTEs: occurrence bigrams `big(doc_id, s)` and
+    * their Laplace-smoothed surprisal `m(s, nll)`, quantized to 10^-6.
+    */
+  private lazy val bigramNllSql: String =
+    """w AS (SELECT doc_id, string_split(text,' ') w FROM documents),
+      | big AS (SELECT doc_id, unnest(list_transform(
+      |          range(1, greatest(len(w)-1,0)+1),
+      |          k -> w[k::INT] || ' ' || w[k::INT+1])) s FROM w),
+      | c2 AS (SELECT s, count(*) n2 FROM big GROUP BY 1),
+      | c1 AS (SELECT split_part(s,' ',1) w1, count(*) n1 FROM big GROUP BY 1),
+      | v AS (SELECT count(DISTINCT t) v FROM
+      |   (SELECT unnest(string_split(text,' ')) t FROM documents)),
+      | m AS (SELECT s,
+      |     floor(ln((n1 + v.v)::DOUBLE / (n2 + 1)::DOUBLE) * 1000000)::BIGINT nll
+      |   FROM c2 JOIN c1 ON split_part(c2.s,' ',1) = c1.w1 CROSS JOIN v)""".stripMargin
+
+  /** The x80/x82 containment select over `inter` and `n`: both
+    * containments in basis points, kept when either reaches 0.8.
+    */
+  private lazy val containmentSelectSql: String =
+    """SELECT i, j, c AS inter_n,
+      |   floor(c::DOUBLE * 10000 / na.n)::BIGINT AS cont_i_bp,
+      |   floor(c::DOUBLE * 10000 / nb.n)::BIGINT AS cont_j_bp
+      | FROM inter JOIN n na ON na.doc_id = i JOIN n nb ON nb.doc_id = j
+      | WHERE greatest(floor(c::DOUBLE * 10000 / na.n),
+      |                floor(c::DOUBLE * 10000 / nb.n)) >= 8000""".stripMargin
+
+  /** Per-URL change evidence over a capture CTE `caps(url,
+    * capture_date, digest)` (x149/x159): `ag(url, n_captures,
+    * n_changes, f, l)` — observed digest changes and the first/last
+    * capture dates.
+    */
+  private lazy val captureChangesSql: String =
+    """lg AS (SELECT url, capture_date, digest,
+      |     lag(digest) OVER (PARTITION BY url ORDER BY capture_date)
+      |       AS prev
+      |   FROM caps),
+      | ag AS (SELECT url, count(*)::BIGINT n_captures,
+      |     sum(CASE WHEN prev IS NOT NULL AND prev <> digest
+      |       THEN 1 ELSE 0 END)::BIGINT n_changes,
+      |     min(capture_date) f, max(capture_date) l
+      |   FROM lg GROUP BY url)""".stripMargin
+
+  /** [[captureHistory]], DuckDB side, as the CTE `name(doc_id, k,
+    * url, capture_date, ver)`.
+    */
+  private def captureHistorySql(name: String): String =
+    s"""$name AS (SELECT doc_id, t.k,
+      |     'https://example.com/doc/' || doc_id::VARCHAR AS url,
+      |     '2020-01-' ||
+      |       lpad((1 + (doc_id % 9) + t.k * 7)::VARCHAR, 2, '0')
+      |       AS capture_date,
+      |     (CASE WHEN doc_id % 3 = 0 THEN t.k
+      |           WHEN doc_id % 3 = 1 THEN
+      |             (CASE WHEN t.k >= 2 THEN 1 ELSE 0 END)
+      |           ELSE 0 END) AS ver
+      |   FROM documents
+      |   CROSS JOIN (SELECT unnest([0, 1, 2]) AS k) t)""".stripMargin
+
   /** The C4 page tier over the kept-line CTE `dd` — ONE definition
     * shared by x128 (straight from synthesis) and x130 (after the WARC
     * round trip): page reassembly in line order, then the ≥5-lines,
@@ -9307,15 +8979,47 @@ object ExtensionQueries {
     * ORDER BY).
     */
   private lazy val htmlPageTailSql: String =
+    s"""$htmlPagesSql
+      | SELECT doc_id, n_lines, text FROM pg
+      | $c4PageWhereSql
+      | ORDER BY doc_id""".stripMargin
+
+  /** The page CTEs of [[htmlPageTailSql]]: `k`, the lines `dd` keeps,
+    * reassembled in line order into `pg(doc_id, n_lines, text)`.
+    */
+  private lazy val htmlPagesSql: String =
     """k AS (SELECT doc_id, line_no, line FROM dd WHERE rk = 1),
       | pg AS (SELECT doc_id, count(*)::BIGINT AS n_lines,
       |     string_agg(line, chr(10) ORDER BY line_no) AS text
-      |   FROM k GROUP BY doc_id)
-      | SELECT doc_id, n_lines, text FROM pg
-      | WHERE n_lines >= 5 AND NOT contains(text, '{')
+      |   FROM k GROUP BY doc_id)""".stripMargin
+
+  /** The C4 page rules over `pg`-shaped rows (≥ 5 lines, no brace, no
+    * lorem ipsum), as a WHERE clause.
+    */
+  private lazy val c4PageWhereSql: String =
+    """WHERE n_lines >= 5 AND NOT contains(text, '{')
       |   AND NOT contains(text, '}')
-      |   AND NOT contains(lower(text), 'lorem ipsum')
-      | ORDER BY doc_id""".stripMargin
+      |   AND NOT contains(lower(text), 'lorem ipsum')""".stripMargin
+
+  /** The head of the accent-page oracles (x139 and its successors): the
+    * [[htmlSynthSql]] pages `h`, `h2` = each page closed by the
+    * [[AccentLineHead]] line — or, on `doc_id % 3 = cp1252Arm`, the
+    * [[Cp1252LineHead]] line — and the strip CTEs over `h2`, ending at
+    * the kept-line CTE `dd`.
+    */
+  private def accentPagesSql(cp1252Arm: Option[Int]): String = {
+    val accent = s"'$AccentLineHead' || doc_id::VARCHAR || '$AccentLineTail'"
+    val line = cp1252Arm.fold(accent)(arm =>
+      s"""CASE WHEN doc_id % 3 = $arm
+        |       THEN '$Cp1252LineHead' || doc_id::VARCHAR ||
+        |         '$Cp1252LineTail'
+        |       ELSE $accent END""".stripMargin)
+    s"""WITH $htmlSynthSql,
+      | h2 AS (SELECT doc_id, regexp_replace(html, '</body></html>$$',
+      |     $line)
+      |     AS html FROM h),
+      | ${htmlStripCtesSql("h2")}""".stripMargin
+  }
 
   /** WARC-file synthesis over the x127 HTML CTE `h`, DuckDB side —
     * mirrors [[warcFixture]] verbatim (record layout, header order,
@@ -9747,17 +9451,13 @@ object ExtensionQueries {
   // lazy: referenced from the `oracle` map's interpolations above —
   // object-init order would otherwise read them as null
   private lazy val curationHeadSql =
-    """q AS (SELECT doc_id, text FROM documents
+    s"""q AS (SELECT doc_id, text FROM documents
       |   WHERE len(string_split(text,' ')) >= 20
       |     AND floor(len(regexp_replace(text,'[^a-z]','','g'))::DOUBLE * 10000
       |           / len(text)::DOUBLE) >= 7000),
       | k1 AS (SELECT min(doc_id) doc_id FROM q GROUP BY md5(text)),
       | s AS (SELECT q.doc_id, q.text FROM q JOIN k1 USING (doc_id)),
-      | w AS (SELECT doc_id, string_split(text,' ') w FROM s),
-      | sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-      |          range(1, greatest(len(w)-2,0)+1),
-      |          k -> w[k::INT] || ' ' || w[k::INT+1] || ' ' || w[k::INT+2]))) s
-      |        FROM w),
+      | ${word3gramCtes("s")},
       | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1)""".stripMargin
 
   /** Shared curation-oracle tail: jaccard threshold over `inter` →
@@ -9765,13 +9465,8 @@ object ExtensionQueries {
     * → surviving keeper ids.
     */
   private lazy val curationTailSql =
-    """p AS (SELECT i, j FROM inter
-      |   JOIN n na ON na.doc_id = i JOIN n nb ON nb.doc_id = j
-      |   WHERE floor(c::DOUBLE * 10000 / (na.n + nb.n - c)::DOUBLE) >= 5000),
-      | e AS (SELECT i AS a, j AS b FROM p UNION ALL SELECT j, i FROM p),
-      | reach AS (SELECT a, b FROM e
-      |   UNION
-      |   SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a),
+    s"""$jaccardPairsSql,
+      | $reachSql,
       | dropd AS (SELECT a AS doc_id FROM reach GROUP BY a
       |   HAVING least(a, min(b)) < a)
       | SELECT doc_id FROM k1

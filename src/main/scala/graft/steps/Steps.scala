@@ -47,21 +47,27 @@ object Steps {
       s"$step targets table '$name' but the bundle has: " +
         tables.keys.toSeq.sorted.mkString(", "))
 
+  /** Rewrite the one table `name` of the bundle with `f`, after the
+    * [[requireTable]] check — the shape every single-table step shares.
+    */
+  private def onTable(tables: Map[String, DataFrame], name: String,
+                      step: String)(f: DataFrame => DataFrame)
+      : Map[String, DataFrame] = {
+    requireTable(tables, name, step)
+    tables.updated(name, f(tables(name)))
+  }
+
   /** Cast named columns of one table; `allowCastFail` → `try_cast` semantics
     * (null on failure), exactly the reference's `allow_cast_fail` contract.
     */
   final case class Cast(tableName: String, mappings: Map[String, DataType],
                         allowCastFail: Boolean = false) extends Step {
-    def apply(spark: SparkSession, tables: Map[String, DataFrame]): Map[String, DataFrame] = {
-      requireTable(tables, tableName, "Cast")
-      tables.map {
-        case (name, df) if name == tableName =>
-          name -> mappings.foldLeft(df) { case (d, (c, t)) =>
-            d.withColumn(c, castExpr(c, t, allowCastFail))
-          }
-        case kv => kv
+    def apply(spark: SparkSession, tables: Map[String, DataFrame]): Map[String, DataFrame] =
+      onTable(tables, tableName, "Cast") { df =>
+        mappings.foldLeft(df) { case (d, (c, t)) =>
+          d.withColumn(c, castExpr(c, t, allowCastFail))
+        }
       }
-    }
   }
 
   // --- T5 CAST_BY_TYPE (cherry steps/cast_by_type.py:9-27) ------------------
@@ -124,15 +130,11 @@ object Steps {
     * equivalent boundary step converts decimal-string columns to the canon.
     */
   final case class U256FromString(tableName: String, columns: Seq[String]) extends Step {
-    def apply(spark: SparkSession, tables: Map[String, DataFrame]): Map[String, DataFrame] = {
-      requireTable(tables, tableName, "U256FromString")
-      tables.map {
-        case (name, df) if name == tableName =>
-          name -> columns.foldLeft(df)((d, c) =>
-            d.withColumn(c, F.u256_from_string(col(c))))
-        case kv => kv
+    def apply(spark: SparkSession, tables: Map[String, DataFrame]): Map[String, DataFrame] =
+      onTable(tables, tableName, "U256FromString") { df =>
+        columns.foldLeft(df)((d, c) =>
+          d.withColumn(c, F.u256_from_string(col(c))))
       }
-    }
   }
 
   // --- T9 SET_CHAIN_ID (cherry steps/set_chain_id.py:7-21) ------------------
@@ -150,11 +152,6 @@ object Steps {
 
   // --- T1 EVM_DECODE_EVENTS (cherry steps/evm_decode_events.py:9-35) --------
 
-  /** Decode `inputTable` logs against one event signature into typed columns;
-    * `hstack` appends all input columns (cherry's 1:1 cardinality contract —
-    * decode is an expression, not a generator). Expects the conventional
-    * column names topic1..topic3 + data (absent topics decode as null).
-    */
   /** Topic column if present, else a typed null (absent topics decode as
     * null) — shared by every decode step.
     */
@@ -178,6 +175,11 @@ object Steps {
     } else decoded.select(dFields.map(f => col(s"__d.$f")).toSeq: _*)
   }
 
+  /** Decode `inputTable` logs against one event signature into typed columns;
+    * `hstack` appends all input columns (cherry's 1:1 cardinality contract —
+    * decode is an expression, not a generator). Expects the conventional
+    * column names topic1..topic3 + data (absent topics decode as null).
+    */
   final case class EvmDecodeEvents(eventSignature: String,
                                    allowDecodeFail: Boolean = false,
                                    inputTable: String = "logs",
@@ -352,48 +354,42 @@ object Steps {
                                         hashCol: String = "hash",
                                         parentHashCol: String = "parent_hash",
                                         bucketSize: Long = 1000000L) extends Step {
-    def apply(spark: SparkSession, tables: Map[String, DataFrame]): Map[String, DataFrame] = {
-      requireTable(tables, blocksTable, "EvmValidateBlockData")
-      tables.map {
-        case (name, df) if name == blocksTable =>
-          val out =
-            if (bucketSize > 0) {
-              val slim = df.select(col(numberCol), col(hashCol), col(parentHashCol))
-              // integral div, not floor(double /): double division loses
-              // precision above 2^53 and would misassign bucket ids near
-              // boundaries for large sequence keys (the Tables.scala
-              // nanos-timestamp rule applied here)
-              val bucket =
-                expr(s"CAST(`$numberCol` AS BIGINT) div $bucketSize")
-              val own = df.withColumn("__b", bucket)
-                .withColumn("__carrier", lit(false))
-              // last possible block of each bucket rides into the next one
-              val carriers = slim
-                .filter((col(numberCol) + 1) % bucketSize === 0)
-                .withColumn("__b", bucket + 1)
-                .withColumn("__carrier", lit(true))
-              val w = Window.partitionBy(col("__b")).orderBy(col(numberCol))
-              val prevHash = lag(col(hashCol), 1).over(w)
-              own.unionByName(carriers, allowMissingColumns = true)
-                // coalesce(false): a null parent_hash with a real
-                // predecessor is a continuity VIOLATION, not a null —
-                // `valid` must stay a total boolean or filter(col("valid"))
-                // silently drops the very rows it should flag
-                .withColumn("valid",
-                  coalesce(prevHash.isNull || prevHash === col(parentHashCol),
-                    lit(false)))
-                .filter(!col("__carrier"))
-                .drop("__b", "__carrier")
-            } else {
-              val prevHash = lag(col(hashCol), 1).over(Window.orderBy(col(numberCol)))
-              df.withColumn("valid",
-                coalesce(prevHash.isNull || prevHash === col(parentHashCol),
-                  lit(false)))
-            }
-          name -> out
-        case kv => kv
+    def apply(spark: SparkSession, tables: Map[String, DataFrame]): Map[String, DataFrame] =
+      onTable(tables, blocksTable, "EvmValidateBlockData") { df =>
+        if (bucketSize > 0) {
+          val slim = df.select(col(numberCol), col(hashCol), col(parentHashCol))
+          // integral div, not floor(double /): double division loses
+          // precision above 2^53 and would misassign bucket ids near
+          // boundaries for large sequence keys (the Tables.scala
+          // nanos-timestamp rule applied here)
+          val bucket =
+            expr(s"CAST(`$numberCol` AS BIGINT) div $bucketSize")
+          val own = df.withColumn("__b", bucket)
+            .withColumn("__carrier", lit(false))
+          // last possible block of each bucket rides into the next one
+          val carriers = slim
+            .filter((col(numberCol) + 1) % bucketSize === 0)
+            .withColumn("__b", bucket + 1)
+            .withColumn("__carrier", lit(true))
+          val w = Window.partitionBy(col("__b")).orderBy(col(numberCol))
+          val prevHash = lag(col(hashCol), 1).over(w)
+          own.unionByName(carriers, allowMissingColumns = true)
+            // coalesce(false): a null parent_hash with a real
+            // predecessor is a continuity VIOLATION, not a null —
+            // `valid` must stay a total boolean or filter(col("valid"))
+            // silently drops the very rows it should flag
+            .withColumn("valid",
+              coalesce(prevHash.isNull || prevHash === col(parentHashCol),
+                lit(false)))
+            .filter(!col("__carrier"))
+            .drop("__b", "__carrier")
+        } else {
+          val prevHash = lag(col(hashCol), 1).over(Window.orderBy(col(numberCol)))
+          df.withColumn("valid",
+            coalesce(prevHash.isNull || prevHash === col(parentHashCol),
+              lit(false)))
+        }
       }
-    }
   }
 
   // --- T10 POLARS-analog: whole-bundle user function ------------------------

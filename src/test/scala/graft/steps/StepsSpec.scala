@@ -113,6 +113,20 @@ class StepsSpec extends SparkSpec {
     assert(w.partitionSpec.isEmpty)
   }
 
+  test("single-table steps reject a table the bundle lacks, naming its tables") {
+    val tables = bundle("blocks" -> Seq(1L).toDF("block_number"),
+      "logs" -> Seq("1").toDF("v"))
+    val steps = Seq(
+      Steps.Cast("log", Map("v" -> LongType)),
+      Steps.U256FromString("log", Seq("v")),
+      Steps.EvmValidateBlockData(blocksTable = "block"))
+    steps.foreach { step =>
+      val e = intercept[IllegalArgumentException](step(spark, tables))
+      assert(e.getMessage.contains("the bundle has: blocks, logs"),
+        e.getMessage)
+    }
+  }
+
   test("EvmDecodeMultiEvents.fromAbiDb loads a glaciers-style signature db file") {
     import graft.functions.Keccak
     val transferSig = "Transfer(address indexed from, address indexed to, uint256 amount)"
