@@ -325,12 +325,12 @@ object Bench {
     }
     val qMed = results.map { case (k, _, _, ts) => (k, median(ts)) }
     val medianTotal = qMed.map(_._2).sum
-    val qs = qMed.map { case (k, m) => s""""$k":${num(m, 4)}""" }
+    val qs = qMed.map { case (k, m) => s"${Verify.jsonEscape(k)}:${num(m, 4)}" }
       .mkString("{", ",", "}")
     val bestTotal = results.map(_._2).sum
     val meanTotal = results.map(_._3).sum
     val repsDetail = results.map { case (k, _, _, ts) =>
-      s""""$k":[${ts.map(num(_, 4)).mkString(",")}]"""
+      s"${Verify.jsonEscape(k)}:[${ts.map(num(_, 4)).mkString(",")}]"
     }.mkString("{", ",", "}")
     val gcSec = (gcMillis - gc0) / 1e3
     // fixed-work host calibration, measured in the SAME JVM state the
@@ -376,7 +376,7 @@ object Bench {
       Seq("oracle_matched_value" ->
         num(qMed.filter(r => ns(r._1)).map(_._2).sum, 4),
         "oracle_missing" -> qMed.map(_._1).filterNot(ns)
-          .map("\"" + _ + "\"").mkString("[", ",", "]"))
+          .map(Verify.jsonEscape).mkString("[", ",", "]"))
     }.getOrElse(Nil)
     // Every artifact line serializes ONCE from an ordered key→rawJson
     // pair list (r20, ADVICE r19 #3) — no string surgery on an
@@ -386,7 +386,7 @@ object Bench {
       pairs.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val failedPair: Seq[(String, String)] =
       if (failed.isEmpty) Nil
-      else Seq("failed" -> failed.map(n => "\"" + n + "\"")
+      else Seq("failed" -> failed.map(Verify.jsonEscape)
         .mkString("[", ",", "]"))
     // Compact headline line — printed LAST so the driver's tail capture
     // always contains it whole. Extra diagnostic keys (mean_total vs value
@@ -449,7 +449,7 @@ object Bench {
         "part" -> (i + 1).toString,
         "parts" -> parts.size.toString,
         "headline" -> "\"median_of_reps\"",
-        "queries" -> grp.map { case (k, m) => s""""$k":${num(m, 4)}""" }
+        "queries" -> grp.map { case (k, m) => s"${Verify.jsonEscape(k)}:${num(m, 4)}" }
           .mkString("{", ",", "}")) ++ sfPair))
     }
     // The per-query map alone is ~2 KB at 72 queries, which has pushed the

@@ -51,46 +51,51 @@ object GraftExtensions {
     }
   }
 
-  /** Arity gate shared by every builder: without it, extra arguments are
-    * SILENTLY IGNORED (keccak256(a, b) hashing only `a` — a plausible
-    * digest over the wrong input) and missing ones die in an anonymous
-    * IndexOutOfBounds instead of naming the function.
+  /** A builder's arguments, carrying the function name for its errors. */
+  private final class Args(name: String, es: Seq[Expression]) {
+    def apply(i: Int): Expression = es(i)
+    def int(i: Int): Int = foldToInt(name, es(i))
+  }
+
+  /** One SQL function, its name written once: the usage line derives from
+    * the argument names, and the arity gate from their count — without
+    * the gate, extra arguments are SILENTLY IGNORED (keccak256(a, b)
+    * hashing only `a` — a plausible digest over the wrong input) and
+    * missing ones die in an anonymous IndexOutOfBounds instead of naming
+    * the function.
     */
-  private def checked(name: String, arity: Int)(
-      b: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    es => {
-      if (es.length != arity) throw new IllegalArgumentException(
-        s"$name expects $arity argument(s), got ${es.length}")
-      b(es)
-    }
+  private def fn(name: String, args: Seq[String], desc: String)(
+      build: Args => Expression): (String, String, Seq[Expression] => Expression) =
+    (name, s"$name(${args.mkString(", ")}) - $desc", es => {
+      if (es.length != args.length) throw new IllegalArgumentException(
+        s"$name expects ${args.length} argument(s), got ${es.length}")
+      build(new Args(name, es))
+    })
 
   val sqlFunctions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("base58_encode", "base58_encode(bin) - bitcoin-alphabet base58 string",
-      checked("base58_encode", 1)(es => Base58Encode(es.head))),
-    ("base58_decode", "base58_decode(str) - bytes, null on bad alphabet",
-      checked("base58_decode", 1)(es => Base58Decode(es.head))),
-    ("keccak256", "keccak256(bin) - 32-byte Keccak-256 digest",
-      checked("keccak256", 1)(es => Keccak256(es.head))),
-    ("u256_to_decimal", "u256_to_decimal(bin32) - DECIMAL(38,0), null on overflow",
-      checked("u256_to_decimal", 1)(es => U256ToDecimal(es.head))),
-    ("u256_to_string", "u256_to_string(bin32) - decimal string",
-      checked("u256_to_string", 1)(es => U256ToString(es.head))),
-    ("u256_from_string", "u256_from_string(str) - 32-byte big-endian binary",
-      checked("u256_from_string", 1)(es => U256FromString(es.head))),
-    ("float_vec_dot", "float_vec_dot(a, b) - left-fold double dot product",
-      checked("float_vec_dot", 2)(es => FloatVecDot(es.head, es(1)))),
-    ("char_ngrams", "char_ngrams(str, n) - distinct character n-grams",
-      checked("char_ngrams", 2)(es => CharNGrams(es.head, foldToInt("char_ngrams", es(1))))),
-    ("word_ngrams", "word_ngrams(str, n) - distinct word n-grams",
-      checked("word_ngrams", 2)(es => WordNGrams(es.head, foldToInt("word_ngrams", es(1))))),
-    ("md5_bottom_k", "md5_bottom_k(arr, k) - k smallest md5 digests, concat",
-      checked("md5_bottom_k", 2)(es => Md5BottomK(es.head, foldToInt("md5_bottom_k", es(1))))),
-    ("deflate_len", "deflate_len(str) - DEFLATE-compressed byte length",
-      checked("deflate_len", 1)(es => DeflateLen(es.head))),
-    ("decode_charset",
-      "decode_charset(view, name) - decode a latin1-view body with a " +
-        "java.nio charset (WHATWG web labels), null on malformed",
-      checked("decode_charset", 2)(es => DecodeCharset(es.head, es(1)))))
+    fn("base58_encode", Seq("bin"), "bitcoin-alphabet base58 string")(
+      a => Base58Encode(a(0))),
+    fn("base58_decode", Seq("str"), "bytes, null on bad alphabet")(
+      a => Base58Decode(a(0))),
+    fn("keccak256", Seq("bin"), "32-byte Keccak-256 digest")(a => Keccak256(a(0))),
+    fn("u256_to_decimal", Seq("bin32"), "DECIMAL(38,0), null on overflow")(
+      a => U256ToDecimal(a(0))),
+    fn("u256_to_string", Seq("bin32"), "decimal string")(a => U256ToString(a(0))),
+    fn("u256_from_string", Seq("str"), "32-byte big-endian binary")(
+      a => U256FromString(a(0))),
+    fn("float_vec_dot", Seq("a", "b"), "left-fold double dot product")(
+      a => FloatVecDot(a(0), a(1))),
+    fn("char_ngrams", Seq("str", "n"), "distinct character n-grams")(
+      a => CharNGrams(a(0), a.int(1))),
+    fn("word_ngrams", Seq("str", "n"), "distinct word n-grams")(
+      a => WordNGrams(a(0), a.int(1))),
+    fn("md5_bottom_k", Seq("arr", "k"), "k smallest md5 digests, concat")(
+      a => Md5BottomK(a(0), a.int(1))),
+    fn("deflate_len", Seq("str"), "DEFLATE-compressed byte length")(
+      a => DeflateLen(a(0))),
+    fn("decode_charset", Seq("view", "name"),
+      "decode a latin1-view body with a java.nio charset (WHATWG web " +
+        "labels), null on malformed")(a => DecodeCharset(a(0), a(1))))
 }
 
 /** Engine session bootstrap: the scale-posture defaults every entry point

@@ -361,7 +361,7 @@ case class EvmDecodeEvent(signature: String, allowFail: Boolean,
   override def dataType: DataType = sig.schema
   override def nullable: Boolean = true
 
-  // plan-time gate (the NGramTypeCheck rationale): topics carried as hex
+  // plan-time gate (the UnaryKernel rationale): topics carried as hex
   // STRINGS are a common caller mistake that would otherwise pass
   // analysis and die mid-job in an anonymous ClassCastException
   override def checkInputDataTypes()

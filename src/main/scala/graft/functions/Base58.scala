@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -90,11 +88,8 @@ object Base58 {
 }
 
 /** base58_encode(binary) → string (Bitcoin alphabet). */
-case class Base58Encode(child: Expression) extends UnaryExpression
-    with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires BinaryType input, got ${child.dataType}")
+case class Base58Encode(child: Expression) extends FallbackUnaryKernel {
+  override protected def inputType: DataType = BinaryType
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "base58_encode"
@@ -105,13 +100,10 @@ case class Base58Encode(child: Expression) extends UnaryExpression
 }
 
 /** base58_decode(string) → binary; null on invalid input characters. */
-case class Base58Decode(child: Expression) extends UnaryExpression
-    with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires StringType input, got ${child.dataType}")
+case class Base58Decode(child: Expression) extends FallbackUnaryKernel {
+  override protected def inputType: DataType = StringType
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
+  override protected def nullOnBadInput: Boolean = true
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "base58_decode"
   override protected def nullSafeEval(input: Any): Any =

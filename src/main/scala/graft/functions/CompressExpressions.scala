@@ -1,10 +1,79 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType, NullType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+/** The contract every unary kernel of this package shares, written once:
+  *
+  *  - type check: the child is `inputType` (nested nullability ignored)
+  *    or `NullType` — a literal NULL argument is a null row (the standard
+  *    Spark convention); any other type fails at analysis, naming the
+  *    function, instead of passing and dying mid-job in an anonymous
+  *    ClassCastException after the Janino fallback;
+  *  - codegen: ONE `nullSafeCodeGen` call to the companion's static
+  *    `compute` (reached through the case class's static forwarder), so
+  *    the stage stays inside whole-stage codegen;
+  *  - `nullOnBadInput`: compute() returns null on malformed input (the
+  *    100 TB rule — corruption surfaces as a filterable NULL row, never a
+  *    dead stage), so the result is nullable and codegen re-checks the
+  *    returned value;
+  *  - a `NullType` child's generated value is Object-typed, which Janino
+  *    rejects where compute() expects its input type — the result is a
+  *    constant null.
+  *
+  * The interpreted kernels extend [[FallbackUnaryKernel]] instead.
+  */
+private[functions] trait UnaryKernel extends UnaryExpression {
+  protected def inputType: DataType
+  protected def nullOnBadInput: Boolean = false
+  override def nullable: Boolean = nullOnBadInput || child.nullable
+
+  /** Java source of the static compute call on the child's value; runs
+    * once, before the child's code is generated, so a reference object
+    * it registers on `ctx` keeps its slot.
+    */
+  protected def computeCall(ctx: CodegenContext): String => String =
+    c => s"${getClass.getName}.compute($c)"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case NullType => TypeCheckResult.TypeCheckSuccess
+    case t if DataTypeUtils.equalsIgnoreNullability(t, inputType) =>
+      TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires ${inputType.simpleString}, got ${other.simpleString}")
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    if (child.dataType == NullType)
+      ev.copy(code = code"""
+        |boolean ${ev.isNull} = true;
+        |${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+        """.stripMargin)
+    else {
+      val call = computeCall(ctx)
+      if (nullOnBadInput)
+        nullSafeCodeGen(ctx, ev, c => s"""
+        |${ev.value} = ${call(c)};
+        |${ev.isNull} = (${ev.value} == null);
+        """.stripMargin)
+      else nullSafeCodeGen(ctx, ev, c => s"${ev.value} = ${call(c)};")
+    }
+}
+
+/** A [[UnaryKernel]] evaluated through `CodegenFallback` (it keeps its
+  * stage out of whole-stage codegen): the type check and nullability are
+  * shared, the codegen is not.
+  */
+private[functions] trait FallbackUnaryKernel extends UnaryKernel
+    with CodegenFallback {
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    super[CodegenFallback].doGenCode(ctx, ev)
+}
 
 /** The LATIN1-VIEW byte⇄string conversions every compression kernel in
   * this file shares (the x147 convention, made kernel-level in r17 —
@@ -50,79 +119,14 @@ private[graft] object Latin1View {
   * within a JVM; zlib output can differ across zlib builds, so this signal
   * is spec-gated (no cross-engine oracle) by design.
   */
-case class DeflateLen(child: Expression) extends UnaryExpression {
+case class DeflateLen(child: Expression) extends UnaryKernel {
   override def dataType: DataType = LongType
   override def prettyName: String = "deflate_len"
-
-  // plan-time gate (the NGramTypeCheck rationale): SQL-registered, so a
-  // wrong-typed argument would otherwise pass analysis and die mid-job
-  // in an anonymous ClassCastException after the Janino fallback
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      // NullType accepted alongside StringType (standard Spark expression
-      // convention): a literal NULL argument is a null row, not a type bug
-      case org.apache.spark.sql.types.StringType |
-           org.apache.spark.sql.types.NullType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"deflate_len requires string, got ${other.simpleString}")
-    }
-
+  override protected def inputType: DataType = StringType
   override protected def nullSafeEval(input: Any): Any =
     DeflateLen.compute(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    // a NullType child's generated value is Object-typed, which Janino
-    // rejects where UTF8String is expected — the result is constant null
-    if (child.dataType == org.apache.spark.sql.types.NullType)
-      ev.copy(code = code"""
-        |boolean ${ev.isNull} = true;
-        |long ${ev.value} = -1L;
-        """.stripMargin)
-    else
-      defineCodeGen(ctx, ev, c => s"graft.functions.DeflateLen.compute($c)")
   override protected def withNewChildInternal(newChild: Expression): DeflateLen =
     copy(child = newChild)
-}
-
-/** Shared shape of the four latin1-view compression kernels: a unary,
-  * nullable, string-or-binary-typed expression whose compute() returns
-  * null on any malformed input (the 100 TB rule — corruption surfaces
-  * as a filterable NULL row, never a dead stage).
-  */
-private[functions] trait ViewCodecExpression extends UnaryExpression {
-  override def nullable: Boolean = true
-  /** fully-qualified static compute call for codegen */
-  protected def computeCall(c: String): String
-  protected def acceptedType: DataType
-  protected def nullValueJava: String
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case t if t == acceptedType ||
-          t == org.apache.spark.sql.types.NullType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires ${acceptedType.simpleString}, " +
-            s"got ${other.simpleString}")
-    }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (child.dataType == org.apache.spark.sql.types.NullType)
-      ev.copy(code = code"""
-        |boolean ${ev.isNull} = true;
-        |$nullValueJava ${ev.value} = null;
-        """.stripMargin)
-    else
-      // compute() returns null for malformed input — explicit re-check
-      // (the CanonicalizeUrl nullSafeCodeGen pattern)
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |${ev.value} = ${computeCall(c)};
-        |${ev.isNull} = (${ev.value} == null);
-        """.stripMargin)
 }
 
 /** gzip-compress a LATIN1-VIEW string's bytes into one gzip member —
@@ -137,14 +141,11 @@ private[functions] trait ViewCodecExpression extends UnaryExpression {
   * round-trips through [[GunzipToString]] rather than comparing raw
   * members across JVMs.
   */
-case class GzipBytes(child: Expression) extends ViewCodecExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.BinaryType
+case class GzipBytes(child: Expression) extends UnaryKernel {
+  override def dataType: DataType = BinaryType
   override def prettyName: String = "gzip_bytes"
-  override protected def acceptedType: DataType =
-    org.apache.spark.sql.types.StringType
-  override protected def nullValueJava: String = "byte[]"
-  override protected def computeCall(c: String): String =
-    s"graft.functions.GzipBytes.compute($c)"
+  override protected def inputType: DataType = StringType
+  override protected def nullOnBadInput: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
     GzipBytes.compute(input.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(newChild: Expression): GzipBytes =
@@ -170,14 +171,11 @@ object GzipBytes {
   * within-JDK determinism; consumers round-trip through
   * [[InflateToString]].
   */
-case class DeflateBytes(child: Expression) extends ViewCodecExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.BinaryType
+case class DeflateBytes(child: Expression) extends UnaryKernel {
+  override def dataType: DataType = BinaryType
   override def prettyName: String = "deflate_bytes"
-  override protected def acceptedType: DataType =
-    org.apache.spark.sql.types.StringType
-  override protected def nullValueJava: String = "byte[]"
-  override protected def computeCall(c: String): String =
-    s"graft.functions.DeflateBytes.compute($c)"
+  override protected def inputType: DataType = StringType
+  override protected def nullOnBadInput: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
     DeflateBytes.compute(input.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(newChild: Expression): DeflateBytes =
@@ -229,14 +227,11 @@ object DeflateBytes {
   * [[graft.ops.WarcOps.readWarcGzRecords]], which streams the
   * decompression and emits per-record rows.
   */
-case class GunzipToString(child: Expression) extends ViewCodecExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
+case class GunzipToString(child: Expression) extends UnaryKernel {
+  override def dataType: DataType = StringType
   override def prettyName: String = "gunzip_to_string"
-  override protected def acceptedType: DataType =
-    org.apache.spark.sql.types.BinaryType
-  override protected def nullValueJava: String = "UTF8String"
-  override protected def computeCall(c: String): String =
-    s"graft.functions.GunzipToString.compute($c)"
+  override protected def inputType: DataType = BinaryType
+  override protected def nullOnBadInput: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
     GunzipToString.compute(input.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(newChild: Expression): GunzipToString =
@@ -285,14 +280,11 @@ object GunzipToString {
   * Same never-throw + [[GunzipToString.MaxDecompressedBytes]] cap
   * contract.
   */
-case class InflateToString(child: Expression) extends ViewCodecExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
+case class InflateToString(child: Expression) extends UnaryKernel {
+  override def dataType: DataType = StringType
   override def prettyName: String = "inflate_to_string"
-  override protected def acceptedType: DataType =
-    org.apache.spark.sql.types.BinaryType
-  override protected def nullValueJava: String = "UTF8String"
-  override protected def computeCall(c: String): String =
-    s"graft.functions.InflateToString.compute($c)"
+  override protected def inputType: DataType = BinaryType
+  override protected def nullOnBadInput: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
     InflateToString.compute(input.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(newChild: Expression): InflateToString =
@@ -359,14 +351,11 @@ object DeflateLen {
   * succeeded. Same never-throw + [[GunzipToString.MaxDecompressedBytes]]
   * cap contract as the gzip/deflate kernels.
   */
-case class ZstdToString(child: Expression) extends ViewCodecExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
+case class ZstdToString(child: Expression) extends UnaryKernel {
+  override def dataType: DataType = StringType
   override def prettyName: String = "zstd_to_string"
-  override protected def acceptedType: DataType =
-    org.apache.spark.sql.types.BinaryType
-  override protected def nullValueJava: String = "UTF8String"
-  override protected def computeCall(c: String): String =
-    s"graft.functions.ZstdToString.compute($c)"
+  override protected def inputType: DataType = BinaryType
+  override protected def nullOnBadInput: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
     ZstdToString.compute(input.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(newChild: Expression): ZstdToString =
@@ -413,14 +402,11 @@ object ZstdToString {
   * [[ZstdToString]] rather than comparing raw frames across zstd
   * builds. NULL when zstd-jni is absent (the [[ZstdToString]] gate).
   */
-case class ZstdBytes(child: Expression) extends ViewCodecExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.BinaryType
+case class ZstdBytes(child: Expression) extends UnaryKernel {
+  override def dataType: DataType = BinaryType
   override def prettyName: String = "zstd_bytes"
-  override protected def acceptedType: DataType =
-    org.apache.spark.sql.types.StringType
-  override protected def nullValueJava: String = "byte[]"
-  override protected def computeCall(c: String): String =
-    s"graft.functions.ZstdBytes.compute($c)"
+  override protected def inputType: DataType = StringType
+  override protected def nullOnBadInput: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
     ZstdBytes.compute(input.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(newChild: Expression): ZstdBytes =
@@ -454,14 +440,11 @@ object ZstdBytes {
   * SAME code decodes for real). Never-throw + size-cap contract as
   * above.
   */
-case class BrotliToString(child: Expression) extends ViewCodecExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
+case class BrotliToString(child: Expression) extends UnaryKernel {
+  override def dataType: DataType = StringType
   override def prettyName: String = "brotli_to_string"
-  override protected def acceptedType: DataType =
-    org.apache.spark.sql.types.BinaryType
-  override protected def nullValueJava: String = "UTF8String"
-  override protected def computeCall(c: String): String =
-    s"graft.functions.BrotliToString.compute($c)"
+  override protected def inputType: DataType = BinaryType
+  override protected def nullOnBadInput: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
     BrotliToString.compute(input.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(newChild: Expression): BrotliToString =

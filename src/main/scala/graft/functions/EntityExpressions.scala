@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{DataType, NullType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** HTML entity decoding as ONE single-pass Catalyst expression — the
@@ -45,31 +43,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * input text containing the U+0001/U+0002 marker chars would corrupt (the WarcOps
   * sentinel class; the kernel itself has no sentinel).
   */
-case class DecodeHtmlEntities(child: Expression) extends UnaryExpression {
+case class DecodeHtmlEntities(child: Expression) extends UnaryKernel {
   override def dataType: DataType = StringType
   override def prettyName: String = "decode_html_entities"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType | NullType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string, got ${other.simpleString}")
-    }
-
+  override protected def inputType: DataType = StringType
   override protected def nullSafeEval(input: Any): Any =
     DecodeHtmlEntities.compute(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (child.dataType == NullType)
-      ev.copy(code = code"""
-        |boolean ${ev.isNull} = true;
-        |UTF8String ${ev.value} = null;
-        """.stripMargin)
-    else
-      defineCodeGen(ctx, ev,
-        c => s"graft.functions.DecodeHtmlEntities.compute($c)")
   override protected def withNewChildInternal(
       newChild: Expression): DecodeHtmlEntities = copy(child = newChild)
 }

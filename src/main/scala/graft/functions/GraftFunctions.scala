@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.graftbridge.Bridge.{column => toCol, expression => toExpr}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
 
 /** Public scalar-function surface of the engine (SURVEY.md §2.5): Column
@@ -21,12 +21,12 @@ object GraftFunctions {
   def hex_lower(c: Column, prefixed: Boolean = true): Column =
     if (prefixed) concat(lit("0x"), lower(hex(c))) else lower(hex(c))
 
-  def base58_encode(c: Column): Column = toCol(Base58Encode(toExpr(c)))
-  def base58_decode(c: Column): Column = toCol(Base58Decode(toExpr(c)))
+  def base58_encode(c: Column): Column = Bridge.column(Base58Encode(Bridge.expression(c)))
+  def base58_decode(c: Column): Column = Bridge.column(Base58Decode(Bridge.expression(c)))
 
   // --- hashing --------------------------------------------------------------
 
-  def keccak256(c: Column): Column = toCol(Keccak256(toExpr(c)))
+  def keccak256(c: Column): Column = Bridge.column(Keccak256(Bridge.expression(c)))
 
   /** topic0 of a (possibly human-form) event signature, as 32-byte binary;
     * plan-time constant for literal signatures (cherry
@@ -48,9 +48,9 @@ object GraftFunctions {
 
   // --- u256 (32-byte big-endian binary canon, SURVEY §7.3) --------------------
 
-  def u256_to_decimal(c: Column): Column = toCol(U256ToDecimal(toExpr(c)))
-  def u256_to_string(c: Column): Column = toCol(U256ToString(toExpr(c)))
-  def u256_from_string(c: Column): Column = toCol(U256FromString(toExpr(c)))
+  def u256_to_decimal(c: Column): Column = Bridge.column(U256ToDecimal(Bridge.expression(c)))
+  def u256_to_string(c: Column): Column = Bridge.column(U256ToString(Bridge.expression(c)))
+  def u256_from_string(c: Column): Column = Bridge.column(U256FromString(Bridge.expression(c)))
 
   // --- decoders -------------------------------------------------------------
 
@@ -60,8 +60,8 @@ object GraftFunctions {
   def evm_decode_event(signature: String, topic1: Column, topic2: Column,
                        topic3: Column, data: Column,
                        allowFail: Boolean = false): Column =
-    toCol(EvmDecodeEvent(signature, allowFail,
-      Seq(toExpr(topic1), toExpr(topic2), toExpr(topic3), toExpr(data))))
+    Bridge.column(EvmDecodeEvent(signature, allowFail,
+      Seq(topic1, topic2, topic3, data).map(Bridge.expression)))
 
   /** Decode a Borsh-encoded Solana instruction → struct (cherry T2/T3,
     * `steps/svm_decode_instructions.py`). Field spec DSL:
@@ -69,7 +69,8 @@ object GraftFunctions {
     */
   def svm_decode_instruction(discriminatorHex: String, fieldSpec: String,
                              data: Column, allowFail: Boolean = false): Column =
-    toCol(SvmDecodeInstruction(discriminatorHex, fieldSpec, allowFail, toExpr(data)))
+    Bridge.column(SvmDecodeInstruction(discriminatorHex, fieldSpec, allowFail,
+      Bridge.expression(data)))
 
   // --- SQL registration -----------------------------------------------------
 

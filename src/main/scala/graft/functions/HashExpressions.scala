@@ -2,11 +2,9 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType, NullType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 
 /** The repo's 60-bit deterministic hash — `hash60` — as ONE fused
   * codegen'd kernel (r20, guide §4 "expressions and codegen").
@@ -26,32 +24,16 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType, NullType}
   *
   * Null contract: null in, null out (the md5/conv chain's behavior).
   */
-case class Hash60(child: Expression) extends UnaryExpression {
+case class Hash60(child: Expression) extends UnaryKernel {
   override def dataType: DataType = LongType
   // the conv(...) chain this replaces reported nullable=true; keep the
   // schema byte-identical for the oracle's schema compare
   override def nullable: Boolean = true
   override def prettyName: String = "hash60"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType || child.dataType == NullType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"hash60 requires binary input, got ${child.dataType.simpleString}")
+  override protected def inputType: DataType = BinaryType
 
   override protected def nullSafeEval(bytes: Any): Any =
     Hash60.compute(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    if (child.dataType == NullType)
-      ev.copy(code = code"""
-        |boolean ${ev.isNull} = true;
-        |long ${ev.value} = -1L;
-        """.stripMargin)
-    else
-      nullSafeCodeGen(ctx, ev, b =>
-        s"${ev.value} = graft.functions.Hash60.compute($b);")
 
   override protected def withNewChildInternal(newChild: Expression): Hash60 =
     copy(child = newChild)
@@ -111,35 +93,22 @@ object Hash60 {
   * Null contract: null in, null out (the md5 chain's behavior).
   */
 case class Md5Salted(salt: String, child: Expression)
-    extends UnaryExpression {
+    extends UnaryKernel {
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = true
   override def prettyName: String = "md5_salted"
+  override protected def inputType: DataType = BinaryType
 
   @transient private lazy val saltBytes: Array[Byte] =
     salt.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType || child.dataType == NullType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"md5_salted requires binary input, got ${child.dataType.simpleString}")
-
   override protected def nullSafeEval(bytes: Any): Any =
     Md5Salted.compute(saltBytes, bytes.asInstanceOf[Array[Byte]])
 
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    if (child.dataType == NullType)
-      ev.copy(code = code"""
-        |boolean ${ev.isNull} = true;
-        |byte[] ${ev.value} = null;
-        """.stripMargin)
-    else {
-      val saltRef = ctx.addReferenceObj("saltBytes", saltBytes, "byte[]")
-      nullSafeCodeGen(ctx, ev, b =>
-        s"${ev.value} = graft.functions.Md5Salted.compute($saltRef, $b);")
-    }
+  override protected def computeCall(ctx: CodegenContext): String => String = {
+    val saltRef = ctx.addReferenceObj("saltBytes", saltBytes, "byte[]")
+    b => s"graft.functions.Md5Salted.compute($saltRef, $b)"
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Md5Salted =
     copy(child = newChild)

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Decode an HTTP/1.1 `Transfer-Encoding: chunked` body (RFC 9112
@@ -28,37 +26,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * 100 TB rule: corruption must surface as a filterable NULL row, not
   * kill the stage).
   */
-case class DechunkBody(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-  override def nullable: Boolean = true
+case class DechunkBody(child: Expression) extends UnaryKernel {
+  override def dataType: DataType = StringType
   override def prettyName: String = "dechunk_body"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case org.apache.spark.sql.types.StringType |
-           org.apache.spark.sql.types.NullType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string, got ${other.simpleString}")
-    }
-
+  override protected def inputType: DataType = StringType
+  override protected def nullOnBadInput: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
     DechunkBody.compute(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (child.dataType == org.apache.spark.sql.types.NullType)
-      ev.copy(code = code"""
-        |boolean ${ev.isNull} = true;
-        |UTF8String ${ev.value} = null;
-        """.stripMargin)
-    else
-      // compute() returns null for malformed framing — explicit re-check
-      // (the GunzipToString nullSafeCodeGen pattern)
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |${ev.value} = graft.functions.DechunkBody.compute($c);
-        |${ev.isNull} = (${ev.value} == null);
-        """.stripMargin)
   override protected def withNewChildInternal(newChild: Expression): DechunkBody =
     copy(child = newChild)
 }

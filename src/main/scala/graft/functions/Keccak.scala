@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{BinaryType, DataType}
 
 /** Keccak-256 (the pre-FIPS Keccak with 0x01 domain padding, as used by
@@ -124,11 +122,8 @@ object Keccak {
 }
 
 /** keccak256(binary) → 32-byte binary. */
-case class Keccak256(child: Expression) extends UnaryExpression
-    with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires BinaryType input, got ${child.dataType}")
+case class Keccak256(child: Expression) extends FallbackUnaryKernel {
+  override protected def inputType: DataType = BinaryType
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "keccak256"

@@ -2,9 +2,9 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -23,36 +23,18 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 
 /** Distinct character n-grams of a string: charShingles(text, n). */
-case class CharNGrams(child: Expression, n: Int) extends UnaryExpression {
+case class CharNGrams(child: Expression, n: Int) extends UnaryKernel {
   require(n > 0, "n must be positive")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    NGramTypeCheck(prettyName, child)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "char_ngrams"
+  override protected def inputType: DataType = StringType
 
   override protected def nullSafeEval(input: Any): Any =
     CharNGrams.compute(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.CharNGrams.compute($c, $n)")
+  override protected def computeCall(ctx: CodegenContext): String => String =
+    c => s"graft.functions.CharNGrams.compute($c, $n)"
   override protected def withNewChildInternal(newChild: Expression): CharNGrams =
     copy(child = newChild)
-}
-
-/** Shared plan-time type gate for the string-input n-gram kernels — a
-  * wrong-typed argument otherwise passes analysis and dies mid-job in an
-  * anonymous ClassCastException (after a Janino compile failure demotes
-  * the stage to interpreted eval).
-  */
-private object NGramTypeCheck {
-  def apply(fn: String, child: Expression)
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$fn requires string, got ${other.simpleString}")
-    }
 }
 
 object CharNGrams {
@@ -94,24 +76,16 @@ object CharNGrams {
   * full row k-hundred times). Hex form matches Spark's `md5()` builtin and
   * DuckDB's `md5()` exactly.
   */
-case class Md5BottomK(child: Expression, k: Int) extends UnaryExpression {
+case class Md5BottomK(child: Expression, k: Int) extends UnaryKernel {
   require(k > 0, "k must be positive")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires array<string>, got ${other.simpleString}")
-    }
   override def dataType: DataType = StringType
   override def prettyName: String = "md5_bottom_k"
+  override protected def inputType: DataType = ArrayType(StringType)
 
   override protected def nullSafeEval(input: Any): Any =
-    Md5BottomK.compute(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Md5BottomK.compute($c, $k)")
+    Md5BottomK.compute(input.asInstanceOf[ArrayData], k)
+  override protected def computeCall(ctx: CodegenContext): String => String =
+    c => s"graft.functions.Md5BottomK.compute($c, $k)"
   override protected def withNewChildInternal(newChild: Expression): Md5BottomK =
     copy(child = newChild)
 }
@@ -125,8 +99,7 @@ object Md5BottomK {
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  def compute(arr: org.apache.spark.sql.catalyst.util.ArrayData,
-              k: Int): UTF8String = {
+  def compute(arr: ArrayData, k: Int): UTF8String = {
     val n = arr.numElements()
     val md = localMd.get()
     // bounded size-k insertion (k is typically 4): sorting ALL of a
@@ -164,17 +137,16 @@ object Md5BottomK {
 /** Distinct word n-grams (single-space joined) of a whitespace-tokenized
   * string: wordShingles(text, n). Tokenization matches `split(text, ' ')`.
   */
-case class WordNGrams(child: Expression, n: Int) extends UnaryExpression {
+case class WordNGrams(child: Expression, n: Int) extends UnaryKernel {
   require(n > 0, "n must be positive")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    NGramTypeCheck(prettyName, child)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_ngrams"
+  override protected def inputType: DataType = StringType
 
   override protected def nullSafeEval(input: Any): Any =
     WordNGrams.compute(input.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WordNGrams.compute($c, $n)")
+  override protected def computeCall(ctx: CodegenContext): String => String =
+    c => s"graft.functions.WordNGrams.compute($c, $n)"
   override protected def withNewChildInternal(newChild: Expression): WordNGrams =
     copy(child = newChild)
 }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Pure-JDK PDF text extraction (r19, VERDICT r18 #3): the
@@ -70,14 +70,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * with no text operators → the empty string (a real answer: "this
   * PDF has no extractable text").
   */
-case class PdfToText(child: Expression) extends ViewCodecExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
+case class PdfToText(child: Expression) extends UnaryKernel {
+  override def dataType: DataType = StringType
   override def prettyName: String = "pdf_to_text"
-  override protected def acceptedType: DataType =
-    org.apache.spark.sql.types.BinaryType
-  override protected def nullValueJava: String = "UTF8String"
-  override protected def computeCall(c: String): String =
-    s"graft.functions.PdfToText.compute($c)"
+  override protected def inputType: DataType = BinaryType
+  override protected def nullOnBadInput: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
     PdfToText.compute(input.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(newChild: Expression): PdfToText =

@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
@@ -37,16 +36,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * dupc:long>>, ascending n. Null text → null.
   */
 case class TopNgramStats(child: Expression, minN: Int, maxN: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
   require(minN >= 1 && minN <= maxN,
     s"need 1 <= minN <= maxN (got $minN..$maxN)")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires string, got ${other.simpleString}")
-    }
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("n", LongType, nullable = false),
@@ -57,14 +49,13 @@ case class TopNgramStats(child: Expression, minN: Int, maxN: Int)
     containsNull = false)
 
   override def prettyName: String = "top_ngram_stats"
+  override protected def inputType: DataType = StringType
 
   override protected def nullSafeEval(input: Any): Any =
     TopNgramStats.compute(input.asInstanceOf[UTF8String], minN, maxN)
 
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.TopNgramStats.compute($c, $minN, $maxN)")
+  override protected def computeCall(ctx: CodegenContext): String => String =
+    c => s"graft.functions.TopNgramStats.compute($c, $minN, $maxN)"
 
   override protected def withNewChildInternal(
       newChild: Expression): TopNgramStats = copy(child = newChild)

@@ -2,9 +2,7 @@ package graft.functions
 
 import java.math.BigInteger
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -43,13 +41,10 @@ object U256 {
 /** u256_to_decimal(binary) → DECIMAL(38,0); null when the value exceeds 38
   * digits (try-cast semantics, mirroring the reference's allow-fail casts).
   */
-case class U256ToDecimal(child: Expression) extends UnaryExpression
-    with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires BinaryType input, got ${child.dataType}")
+case class U256ToDecimal(child: Expression) extends FallbackUnaryKernel {
+  override protected def inputType: DataType = BinaryType
   override def dataType: DataType = DecimalType(38, 0)
-  override def nullable: Boolean = true
+  override protected def nullOnBadInput: Boolean = true
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "u256_to_decimal"
   override protected def nullSafeEval(input: Any): Any = {
@@ -62,11 +57,8 @@ case class U256ToDecimal(child: Expression) extends UnaryExpression
 }
 
 /** u256_to_string(binary) → full-precision base-10 string (lossless). */
-case class U256ToString(child: Expression) extends UnaryExpression
-    with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires BinaryType input, got ${child.dataType}")
+case class U256ToString(child: Expression) extends FallbackUnaryKernel {
+  override protected def inputType: DataType = BinaryType
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "u256_to_string"
@@ -79,13 +71,10 @@ case class U256ToString(child: Expression) extends UnaryExpression
 /** u256_from_string(base-10 string) → canonical 32-byte binary; null on
   * malformed or out-of-range input.
   */
-case class U256FromString(child: Expression) extends UnaryExpression
-    with CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires StringType input, got ${child.dataType}")
+case class U256FromString(child: Expression) extends FallbackUnaryKernel {
+  override protected def inputType: DataType = StringType
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
+  override protected def nullOnBadInput: Boolean = true
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "u256_from_string"
   override protected def nullSafeEval(input: Any): Any =

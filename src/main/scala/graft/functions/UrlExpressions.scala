@@ -2,10 +2,9 @@ package graft.functions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{DataType, NullType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** URL canonicalization as ONE Catalyst expression.
@@ -27,39 +26,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * (UrlOpsSpec pins equivalence on every rule arm and a generator;
   * the x131–x138 DuckDB gates pin it against the second engine).
   */
-case class CanonicalizeUrl(child: Expression) extends UnaryExpression {
+case class CanonicalizeUrl(child: Expression) extends UnaryKernel {
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
   override def prettyName: String = "canonicalize_url"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      // NullType accepted alongside StringType (standard convention)
-      case StringType | NullType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string, got ${other.simpleString}")
-    }
-
+  override protected def inputType: DataType = StringType
+  // compute() returns null for non-absolute input
+  override protected def nullOnBadInput: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
     CanonicalizeUrl.compute(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (child.dataType == NullType)
-      ev.copy(code = code"""
-        |boolean ${ev.isNull} = true;
-        |UTF8String ${ev.value} = null;
-        """.stripMargin)
-    else {
-      // compute() returns null for non-absolute input — nullSafeCodeGen
-      // with an explicit null re-check (defineCodeGen assumes non-null
-      // results)
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |${ev.value} = graft.functions.CanonicalizeUrl.compute($c);
-        |${ev.isNull} = (${ev.value} == null);
-        """.stripMargin)
-    }
   override protected def withNewChildInternal(newChild: Expression): CanonicalizeUrl =
     copy(child = newChild)
 }
@@ -84,10 +58,11 @@ case class CanonicalizeUrl(child: Expression) extends UnaryExpression {
 case class RegisteredDomainOf(
     child: Expression,
     suffixes: Seq[String] = RegisteredDomainOf.MultiLabelSuffixes.toSeq)
-  extends UnaryExpression {
+  extends UnaryKernel {
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
   override def prettyName: String = "registered_domain_of"
+  override protected def inputType: DataType = StringType
+  override protected def nullOnBadInput: Boolean = true
 
   // built once per expression instance, serialized with the plan
   private val suffixSet: java.util.HashSet[String] = {
@@ -96,35 +71,16 @@ case class RegisteredDomainOf(
     s
   }
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType | NullType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires string, got ${other.simpleString}")
-    }
-
   override protected def nullSafeEval(input: Any): Any =
     RegisteredDomainOf.compute(input.asInstanceOf[UTF8String], suffixSet)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (child.dataType == NullType)
-      ev.copy(code = code"""
-        |boolean ${ev.isNull} = true;
-        |UTF8String ${ev.value} = null;
-        """.stripMargin)
-    else {
-      // the suffix set rides the generated class as a reference object
-      // (serialized to executors with the plan — a static registry
-      // would exist only on the driver JVM)
-      val setRef = ctx.addReferenceObj("suffixSet", suffixSet,
-        "java.util.HashSet")
-      nullSafeCodeGen(ctx, ev, c => s"""
-        |${ev.value} = graft.functions.RegisteredDomainOf.compute($c, $setRef);
-        |${ev.isNull} = (${ev.value} == null);
-        """.stripMargin)
-    }
+  override protected def computeCall(ctx: CodegenContext): String => String = {
+    // the suffix set rides the generated class as a reference object
+    // (serialized to executors with the plan — a static registry
+    // would exist only on the driver JVM)
+    val setRef = ctx.addReferenceObj("suffixSet", suffixSet,
+      "java.util.HashSet")
+    c => s"graft.functions.RegisteredDomainOf.compute($c, $setRef)"
+  }
   override protected def withNewChildInternal(newChild: Expression): RegisteredDomainOf =
     copy(child = newChild)
 }

@@ -185,7 +185,9 @@ object CrawlOps {
         .filter(col("__rn") <= perHostCap).drop("__rn")
         .withColumn("hop", lit(hop))
         .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint()
+        // eager: obs.get below blocks until an action has run the
+        // observed plan — a lazy checkpoint would leave it waiting forever
+        .localCheckpoint(eager = true)
       out = if (out == null) scheduled else out.unionByName(scheduled)
       if (obs.get("n").asInstanceOf[Long] == 0L) done = true
       else if (hop < maxHops) {

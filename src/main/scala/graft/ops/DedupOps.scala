@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 import TextOps.{charShingles, hash60, wordShingles}
@@ -61,10 +62,8 @@ object DedupOps {
     * (i, j, jaccard_bp) with i < j. Jaccard is a ratio of exact ints →
     * deterministic across engines.
     */
-  private def docPairs(c: Column, minRatioBp: Long = 0L): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
+  private def docPairs(c: Column, minRatioBp: Long = 0L): Column =
     Bridge.column(graft.functions.DocPairs(Bridge.expression(c), minRatioBp))
-  }
 
   /** threshold → basis points by ROUND, not floor: `0.0115 * 10000` is
     * 114.999… in IEEE double, and flooring would admit pairs one bp BELOW
@@ -84,11 +83,9 @@ object DedupOps {
         s"(got ${df.schema(idCol).dataType.simpleString})")
 
   private def simhashChunkPairs(ds: Column, ck: Column, chunks: Int,
-                                maxHamming: Int): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
+                                maxHamming: Int): Column =
     Bridge.column(graft.functions.SimhashChunkPairs(
       Bridge.expression(ds), Bridge.expression(ck), chunks, maxHamming))
-  }
 
   /** Near-duplicate pairs — THE entry point a curation pipeline should
     * call. Default path (`exact = false`) is LSH-candidate-then-verify:
@@ -990,7 +987,7 @@ object DedupOps {
       // previous round's checkpoint blocks are unreachable garbage —
       // free them NOW instead of letting every round's label table pile
       // up in old gen until the session/harness boundary
-      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(labels)
+      Bridge.unpersistCheckpoint(labels)
       labels = next
       done = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
@@ -1006,7 +1003,7 @@ object DedupOps {
     }
     // the edge list is loop-scoped: the returned labels are a materialized
     // checkpoint with no lineage into edges, so its blocks can go now
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(edges)
+    Bridge.unpersistCheckpoint(edges)
     labels.select(col("id"), col("comp"))
   }
 

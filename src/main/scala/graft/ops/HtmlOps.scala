@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.LongType
 
 /** HTML → training-text extraction: the FIRST-MILE stage a web-scale
@@ -62,9 +63,7 @@ object HtmlOps {
     val noComment = regexp_replace(noStyle, "(?s)<!--.*?-->", " ")
     val broke = regexp_replace(noComment, lineBreakTagRe, "\n")
     val noTags = regexp_replace(broke, "<[^>]*>", "")
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.functions.DecodeHtmlEntities(
-        org.apache.spark.sql.graftbridge.Bridge.expression(noTags)))
+    Bridge.column(graft.functions.DecodeHtmlEntities(Bridge.expression(noTags)))
   }
 
   /** C4 §2.2 line retention over extracted HTML: per input doc, the

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.IntegerType
 
 /** HTTP/1.1 response-envelope splitting: the stage between WARC record
@@ -92,9 +93,7 @@ object HttpOps {
     */
   def dechunkIfChunked(bodyCol: Column, te: Column): Column =
     when(te === "chunked",
-      org.apache.spark.sql.graftbridge.Bridge.column(
-        graft.functions.DechunkBody(
-          org.apache.spark.sql.graftbridge.Bridge.expression(bodyCol))))
+      Bridge.column(graft.functions.DechunkBody(Bridge.expression(bodyCol))))
       .otherwise(bodyCol)
 
   /** The final content coding of the Content-Encoding header
@@ -125,17 +124,14 @@ object HttpOps {
     * coding.
     */
   def decodeContentCoding(bodyCol: Column, ce: Column): Column = {
-    def bridge(f: org.apache.spark.sql.catalyst.expressions.Expression =>
-        org.apache.spark.sql.catalyst.expressions.Expression): Column =
-      org.apache.spark.sql.graftbridge.Bridge.column(
-        f(org.apache.spark.sql.graftbridge.Bridge.expression(
-          encode(bodyCol, "ISO-8859-1"))))
+    val bytes = Bridge.expression(encode(bodyCol, "ISO-8859-1"))
     when(ce.isNull || ce === "identity", bodyCol)
       .when(ce.isin("gzip", "x-gzip"),
-        bridge(graft.functions.GunzipToString(_)))
-      .when(ce === "deflate", bridge(graft.functions.InflateToString(_)))
-      .when(ce === "zstd", bridge(graft.functions.ZstdToString(_)))
-      .when(ce === "br", bridge(graft.functions.BrotliToString(_)))
+        Bridge.column(graft.functions.GunzipToString(bytes)))
+      .when(ce === "deflate",
+        Bridge.column(graft.functions.InflateToString(bytes)))
+      .when(ce === "zstd", Bridge.column(graft.functions.ZstdToString(bytes)))
+      .when(ce === "br", Bridge.column(graft.functions.BrotliToString(bytes)))
       .otherwise(lit(null).cast("string"))
   }
 
@@ -186,10 +182,8 @@ object HttpOps {
         decode(encode(body, "ISO-8859-1"), "UTF-16LE"))
       .when(cs === "utf-16be",
         decode(encode(body, "ISO-8859-1"), "UTF-16BE"))
-      .otherwise(org.apache.spark.sql.graftbridge.Bridge.column(
-        graft.functions.DecodeCharset(
-          org.apache.spark.sql.graftbridge.Bridge.expression(body),
-          org.apache.spark.sql.graftbridge.Bridge.expression(cs))))
+      .otherwise(Bridge.column(graft.functions.DecodeCharset(
+        Bridge.expression(body), Bridge.expression(cs))))
   }
 
   /** The charset the body's BYTE-ORDER MARK declares, from the latin1
@@ -282,10 +276,8 @@ object HttpOps {
     * pdfText(col("body")))`.
     */
   def pdfText(bodyView: Column): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.functions.PdfToText(
-        org.apache.spark.sql.graftbridge.Bridge.expression(
-          encode(bodyView, "ISO-8859-1"))))
+    Bridge.column(graft.functions.PdfToText(
+      Bridge.expression(encode(bodyView, "ISO-8859-1"))))
 
   /** Split a frame's `msgCol` HTTP response messages into the columns
     * downstream extraction routes on: `status_code`, `content_type`,

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** Text-analysis operators for large-scale training-data pipelines: token
@@ -33,8 +34,8 @@ object TextOps {
     * mirror computes.
     */
   def hash60(c: Column): Column =
-    bridge(graft.functions.Hash60(
-      expr0(c.cast(StringType).cast(BinaryType))))
+    Bridge.column(graft.functions.Hash60(
+      Bridge.expression(c.cast(StringType).cast(BinaryType))))
 
   /** Raw 16-byte digest of `md5(salt || c)` — the binary MinHash-band
     * fast path ([[graft.functions.Md5Salted]], r21): bitwise the
@@ -45,29 +46,24 @@ object TextOps {
     * cast discipline as [[hash60]].
     */
   def md5Salted(salt: String, c: Column): Column =
-    bridge(graft.functions.Md5Salted(salt,
-      expr0(c.cast(StringType).cast(BinaryType))))
+    Bridge.column(graft.functions.Md5Salted(salt,
+      Bridge.expression(c.cast(StringType).cast(BinaryType))))
 
   /** Ratio → basis points as BIGINT: floor(10000 * num / den). */
   def bp(num: Column, den: Column): Column =
     floor(num.cast(DoubleType) * 10000d / den.cast(DoubleType)).cast(LongType)
 
-  private def bridge(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(e)
-  private def expr0(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
-    org.apache.spark.sql.graftbridge.Bridge.expression(c)
-
   /** Distinct character n-gram shingles (graft.functions.CharNGrams — one
     * eval loop per row instead of an interpreted lambda per element).
     */
   def charShingles(c: Column, n: Int): Column =
-    bridge(graft.functions.CharNGrams(expr0(c), n))
+    Bridge.column(graft.functions.CharNGrams(Bridge.expression(c), n))
 
   /** Distinct word n-gram shingles, whitespace tokenization
     * (graft.functions.WordNGrams).
     */
   def wordShingles(c: Column, n: Int): Column =
-    bridge(graft.functions.WordNGrams(expr0(c), n))
+    Bridge.column(graft.functions.WordNGrams(Bridge.expression(c), n))
 
   /** Token counts: whitespace tokens, alpha runs, and a BPE-ish segmentation
     * (letter runs | digit runs | single other non-space chars).
@@ -120,8 +116,8 @@ object TextOps {
     */
   def fingerprint(docs: DataFrame, textCol: String = "text", k: Int = 4): DataFrame =
     docs.withColumn("fp",
-      bridge(graft.functions.Md5BottomK(
-        expr0(charShingles(col(textCol), 8)), k)))
+      Bridge.column(graft.functions.Md5BottomK(
+        Bridge.expression(charShingles(col(textCol), 8)), k)))
 
   /** Per-doc token Shannon entropy (micro-nats, integral) — the
     * "gibberish or boilerplate at either extreme" quality signal: near-0
@@ -328,8 +324,8 @@ object TextOps {
     docs
       .filter(length(col(textCol)) > 0)
       .select(col(idCol), length(col(textCol)).cast(LongType).as("__len"),
-        explode(bridge(graft.functions.TopNgramStats(
-          expr0(col(textCol)), minN, maxN))).as("__t"))
+        explode(Bridge.column(graft.functions.TopNgramStats(
+          Bridge.expression(col(textCol)), minN, maxN))).as("__t"))
       .select(col(idCol), col("__t.n").as("n"),
         col("__t.g").as("top_gram"), col("__t.cnt").as("top_cnt"),
         least(expr("(__t.cnt * __t.glen * 10000) div __len"), lit(10000L))
@@ -350,7 +346,7 @@ object TextOps {
       // Long.MaxValue — a sentinel that wrecks any threshold/aggregate
       // downstream); null says "no signal" honestly
       when(length(col(textCol)) === 0, lit(null))
-        .otherwise(bp(bridge(graft.functions.DeflateLen(expr0(col(textCol)))),
+        .otherwise(bp(Bridge.column(graft.functions.DeflateLen(Bridge.expression(col(textCol)))),
           length(col(textCol)).cast(LongType))))
 
   /** Rare-token ratio per document: the share (basis points) of token

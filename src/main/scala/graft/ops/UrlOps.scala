@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** URL canonicalization and registered-domain extraction: the URL-level
   * stage of web-corpus curation (RefinedWeb's first filter tier — Penedo
@@ -102,18 +103,15 @@ object UrlOps {
     * composition remains the reference, equivalence-specced.
     */
   def domainOf(url: Column): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.functions.RegisteredDomainOf(
-        org.apache.spark.sql.graftbridge.Bridge.expression(url)))
+    Bridge.column(graft.functions.RegisteredDomainOf(Bridge.expression(url)))
 
   /** [[domainOf]] under a LOADED multi-label suffix set — how a
     * deployment ships the real ~9k-rule Public Suffix List without a
     * source change (pair with [[loadPsl]]).
     */
   def domainOf(url: Column, suffixes: Seq[String]): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.functions.RegisteredDomainOf(
-        org.apache.spark.sql.graftbridge.Bridge.expression(url), suffixes))
+    Bridge.column(graft.functions.RegisteredDomainOf(
+      Bridge.expression(url), suffixes))
 
   /** Load a Public Suffix List file (publicsuffix.org format) into the
     * suffix set [[domainOf]]/[[registeredDomain]] consult: `//`
@@ -205,9 +203,7 @@ object UrlOps {
     * reference semantics; UrlOpsSpec pins bit-equivalence.
     */
   def canonicalizeUrl(url: Column): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.functions.CanonicalizeUrl(
-        org.apache.spark.sql.graftbridge.Bridge.expression(url)))
+    Bridge.column(graft.functions.CanonicalizeUrl(Bridge.expression(url)))
 
   /** SURT urlkey (Sort-friendly URI Reordering Transform — the key
     * column of CDX(J) web-archive indexes; r20, VERDICT r19 #5): the

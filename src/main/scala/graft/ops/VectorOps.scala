@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 /** Similarity search over embedding columns (Array[Float]).
@@ -20,10 +21,8 @@ object VectorOps {
     * bit-exact semantics as `aggregate(zip_with(a,b,*), 0.0, +)` but ~50×
     * faster in pair joins (HOFs are CodegenFallback).
     */
-  def dot(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
+  def dot(a: Column, b: Column): Column =
     Bridge.column(graft.functions.FloatVecDot(Bridge.expression(a), Bridge.expression(b)))
-  }
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -249,28 +248,22 @@ object VectorOps {
   /** Int8-quantized vector as a BINARY column (graft.functions.QuantizeVec):
     * clamp(floor(x·qscale), ±127) per component — 4× smaller than float32.
     */
-  def quantizeInt8(vec: Column, qscale: Double): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
+  def quantizeInt8(vec: Column, qscale: Double): Column =
     Bridge.column(graft.functions.QuantizeVec(Bridge.expression(vec), qscale))
-  }
 
   /** Double left-fold dot of two quantized BINARY vectors (exact int
     * products) — `sqrt(int8Dot(q,q))/qscale` is the quantized-index norm.
     */
-  def int8Dot(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
+  def int8Dot(a: Column, b: Column): Column =
     Bridge.column(graft.functions.Int8VecDot(
       Bridge.expression(a), Bridge.expression(b)))
-  }
 
   /** ADC kernel: quantized BINARY corpus vector × float query vector;
     * divide the SUM by qscale once to dequantize.
     */
-  def int8FloatDot(q: Column, f: Column): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
+  def int8FloatDot(q: Column, f: Column): Column =
     Bridge.column(graft.functions.Int8FloatVecDot(
       Bridge.expression(q), Bridge.expression(f)))
-  }
 
   /** Scalar-quantized IVF ANN (IVF-SQ8 with asymmetric distance, after
     * Jégou et al.'s IVFADC): the trained-IVF probe with the CORPUS side
@@ -646,12 +639,9 @@ object VectorOps {
     }.filter(_._3 > 0)
     require(kept.nonEmpty,
       s"$opName: need at least one non-zero-norm seed centroid")
-    val assign = {
-      import org.apache.spark.sql.graftbridge.Bridge
-      Bridge.column(graft.functions.NearestCentroid(
-        Bridge.expression(col("v")), Bridge.expression(col("nrm")),
-        kept.map(_._1), kept.flatMap(_._2), kept.map(_._3), dims.head))
-    }
+    val assign = Bridge.column(graft.functions.NearestCentroid(
+      Bridge.expression(col("v")), Bridge.expression(col("nrm")),
+      kept.map(_._1), kept.flatMap(_._2), kept.map(_._3), dims.head))
     (sided(vecs, idCol, vecCol, "id", "v", "nrm").withColumn("cell", assign),
       kept)
   }
@@ -1030,12 +1020,9 @@ object VectorOps {
     // argmin_j d², ties → lowest j — bit-identical to the composed
     // slice/dot/array_min form, without its per-codeword slice
     // materializations; this loop runs over the full corpus at build)
-    val pqEncodeCol = {
-      import org.apache.spark.sql.graftbridge.Bridge
-      Bridge.column(graft.functions.PqEncode(
-        Bridge.expression(col("nv")),
-        codebooks.flatten.flatten, cn2.flatten, m, ksub, dsub))
-    }
+    val pqEncodeCol = Bridge.column(graft.functions.PqEncode(
+      Bridge.expression(col("nv")),
+      codebooks.flatten.flatten, cn2.flatten, m, ksub, dsub))
     val encoded = (0 until m).foldLeft(
       assignCells(sided(corpus, idCol, vecCol, "nid", "nv", "nn"),
         cent, "nid", "nv", "nn", 1)

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.LongType
 
 /** WARC (Web ARChive, ISO 28500) container parsing: the stage a web-scale
@@ -48,18 +49,14 @@ object WarcOps {
     * can seek to a record without decompressing the file.
     */
   def gzipMember(record: Column): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.functions.GzipBytes(
-        org.apache.spark.sql.graftbridge.Bridge.expression(record)))
+    Bridge.column(graft.functions.GzipBytes(Bridge.expression(record)))
 
   /** Decompress a full `.warc.gz` file's bytes — concatenated members
     * included — back to the WARC text [[parseRecords]] consumes
     * ([[graft.functions.GunzipToString]]; malformed gzip → NULL).
     */
   def gunzipText(fileBytes: Column): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.functions.GunzipToString(
-        org.apache.spark.sql.graftbridge.Bridge.expression(fileBytes)))
+    Bridge.column(graft.functions.GunzipToString(Bridge.expression(fileBytes)))
 
   /** Record-boundary sentinel the version line is replaced with before
     * the one-pass split. Payload bytes that COLLIDE with the sentinel

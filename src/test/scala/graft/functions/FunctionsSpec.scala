@@ -2,8 +2,10 @@ package graft.functions
 
 import java.math.BigInteger
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.SparkSpec
 import graft.functions.{GraftFunctions => F}
@@ -332,6 +334,45 @@ class FunctionsSpec extends SparkSpec {
     assert(df.head().isNullAt(0))
   }
 
+  // --- the shared unary-kernel contract (UnaryKernel) ----------------------
+
+  /** One unary kernel: its SQL call when registered, else its constructor
+    * (Column API); and arguments of types it must reject.
+    */
+  private case class Unary(name: String, sql: Option[String => String],
+                           mk: Expression => Expression, wrong: Seq[String])
+
+  private val notString = Seq("i", "CAST('x' AS BINARY)")
+  private val notBinary = Seq("i", "'x'")
+  private val unaryKernels = Seq(
+    Unary("deflate_len", Some(a => s"deflate_len($a)"), DeflateLen(_), notString),
+    Unary("char_ngrams", Some(a => s"char_ngrams($a, 3)"), CharNGrams(_, 3), notString),
+    Unary("word_ngrams", Some(a => s"word_ngrams($a, 2)"), WordNGrams(_, 2), notString),
+    Unary("md5_bottom_k", Some(a => s"md5_bottom_k($a, 4)"), Md5BottomK(_, 4),
+      Seq("i", "'x'", "array(1)")),
+    Unary("dechunk_body", None, DechunkBody(_), notString),
+    Unary("canonicalize_url", None, CanonicalizeUrl(_), notString),
+    Unary("registered_domain_of", None, RegisteredDomainOf(_), notString),
+    Unary("decode_html_entities", None, DecodeHtmlEntities(_), notString),
+    Unary("hash60", None, Hash60(_), notBinary),
+    Unary("md5_salted", None, Md5Salted("s", _), notBinary),
+    Unary("top_ngram_stats", None, TopNgramStats(_, 2, 4), notString),
+    Unary("gzip_bytes", None, GzipBytes(_), notString),
+    Unary("deflate_bytes", None, DeflateBytes(_), notString),
+    Unary("zstd_bytes", None, ZstdBytes(_), notString),
+    Unary("gunzip_to_string", None, GunzipToString(_), notBinary),
+    Unary("inflate_to_string", None, InflateToString(_), notBinary),
+    Unary("zstd_to_string", None, ZstdToString(_), notBinary),
+    Unary("brotli_to_string", None, BrotliToString(_), notBinary),
+    Unary("pdf_to_text", None, PdfToText(_), notBinary),
+    // the CodegenFallback kernels (FallbackUnaryKernel)
+    Unary("base58_encode", Some(a => s"base58_encode($a)"), Base58Encode(_), notBinary),
+    Unary("base58_decode", Some(a => s"base58_decode($a)"), Base58Decode(_), notString),
+    Unary("keccak256", Some(a => s"keccak256($a)"), Keccak256(_), notBinary),
+    Unary("u256_to_decimal", Some(a => s"u256_to_decimal($a)"), U256ToDecimal(_), notBinary),
+    Unary("u256_to_string", Some(a => s"u256_to_string($a)"), U256ToString(_), notBinary),
+    Unary("u256_from_string", Some(a => s"u256_from_string($a)"), U256FromString(_), notString))
+
   test("literal NULL arguments pass the plan-time type gates (NullType)") {
     import spark.implicits._
     // the decoder's null-prefix rule exists precisely so a caller can pass
@@ -354,9 +395,9 @@ class FunctionsSpec extends SparkSpec {
     assert(svm.head().isNullAt(0))
     // SQL channel, where the NULL literal is the common spelling
     assert(spark.sql("SELECT deflate_len(NULL) AS n").head().isNullAt(0))
-    // NON-foldable NullType children (a conditional over a column):
-    // all-literal calls constant-fold before codegen, so only these
-    // actually compile the NullType doGenCode branches being shipped
+    // NullType children behind a conditional over a column (the
+    // optimizer folds IF(c, NULL, NULL) to the literal, so the NullType
+    // codegen branches are compiled by the `n` column below)
     val nf = when(col("i") > 0, lit(null)).otherwise(lit(null))
     val svmNf = Seq(1).toDF("i")
       .select(F.svm_decode_instruction("f8c6", "amount:u64", nf,
@@ -366,6 +407,33 @@ class FunctionsSpec extends SparkSpec {
     assert(spark.sql(
       "SELECT deflate_len(IF(i > 0, NULL, NULL)) AS n FROM nulltype_nf")
       .head().isNullAt(0))
+    // the same contract over every unary kernel: a NULL literal and a
+    // NullType child give NULL, wrong types fail analysis naming the
+    // function. `n` is a NullType COLUMN the optimizer cannot see through
+    // (the checkpoint hides the literal), so it compiles the kernel's
+    // NullType codegen branch
+    F.register(spark)
+    spark.range(1, 3).select(col("id").as("i"), lit(null).as("n"))
+      .localCheckpoint().createOrReplaceTempView("unary_src")
+    def run(k: Unary, arg: String): DataFrame = k.sql match {
+      case Some(call) => spark.sql(s"SELECT ${call(arg)} AS r FROM unary_src")
+      case None => spark.table("unary_src")
+        .select(Bridge.column(k.mk(Bridge.expression(expr(arg)))).as("r"))
+    }
+    // a Janino failure in the NullType branch must fail, not fall back
+    val fallback = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try unaryKernels.foreach { k =>
+      assert(k.mk(Bridge.expression(lit(1))).prettyName == k.name)
+      Seq("NULL", "IF(i > 0, NULL, NULL)", "n").foreach { arg =>
+        val rows = run(k, arg).collect()
+        assert(rows.length == 2 && rows.forall(_.isNullAt(0)), s"${k.name}($arg)")
+      }
+      k.wrong.foreach { arg =>
+        val e = intercept[AnalysisException](run(k, arg))
+        assert(e.getMessage.contains(k.name), e.getMessage)
+      }
+    } finally spark.conf.set("spark.sql.codegen.fallback", fallback)
   }
 
   // --- Borsh instruction decode ----------------------------------------------
