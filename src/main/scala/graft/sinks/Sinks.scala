@@ -17,13 +17,6 @@ import graft.api.Sink
   * before the anchor is attempted.
   */
 private[sinks] object AnchorLast {
-  // Daemon cached pool: write jobs block their thread on the Spark action,
-  // so the pool sizes itself to the batch's table count.
-  private lazy val ec: ExecutionContext = ExecutionContext.fromExecutorService(
-    java.util.concurrent.Executors.newCachedThreadPool(r => {
-      val t = new Thread(r, "graft-sink-write"); t.setDaemon(true); t
-    }))
-
   def push(tables: Map[String, DataFrame], anchorTable: Option[String])
           (write: (String, DataFrame) => Unit): Unit = {
     // a typo'd anchor name would silently write the REAL anchor table
@@ -34,13 +27,24 @@ private[sinks] object AnchorLast {
       s"anchorTable ${anchorTable.get} is not a bundle table " +
         s"(tables: ${tables.keys.toSeq.sorted.mkString(", ")})")
     val (anchor, rest) = tables.partition { case (n, _) => anchorTable.contains(n) }
-    val inFlight = rest.toSeq.map { case (n, df) => Future(write(n, df))(ec) }
-    // await ALL writes before propagating any failure: bailing on the
-    // first would leave sibling write jobs running in the background,
-    // racing a caller's retry of the same batch (duplicate rows with no
-    // crash) — collect every outcome, then raise the first failure
-    val outcomes = inFlight.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    outcomes.collectFirst { case scala.util.Failure(e) => throw e }
+    // per-PUSH writer threads: a thread copies Spark's local properties
+    // (job group, description, scheduler pool) only when it is created, so
+    // a shared pool's reused thread would run this push's writes under the
+    // caller that created it. Write jobs block their thread on the Spark
+    // action, so the cached pool sizes itself to the batch's table count.
+    val pool = java.util.concurrent.Executors.newCachedThreadPool(r => {
+      val t = new Thread(r, "graft-sink-write"); t.setDaemon(true); t
+    })
+    val ec = ExecutionContext.fromExecutorService(pool)
+    try {
+      val inFlight = rest.toSeq.map { case (n, df) => Future(write(n, df))(ec) }
+      // await ALL writes before propagating any failure: bailing on the
+      // first would leave sibling write jobs running in the background,
+      // racing a caller's retry of the same batch (duplicate rows with no
+      // crash) — collect every outcome, then raise the first failure
+      val outcomes = inFlight.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+      outcomes.collectFirst { case scala.util.Failure(e) => throw e }
+    } finally pool.shutdown()
     anchor.foreach { case (n, df) => write(n, df) }
   }
 

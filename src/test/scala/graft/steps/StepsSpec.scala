@@ -5,6 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkSpec
 import graft.api.{ParquetSource, Pipeline}
@@ -338,6 +340,150 @@ class StepsSpec extends SparkSpec {
     assert(writes(0)._2 <= writes(1)._1, "writes overlapped")
   }
 
+  test("runPipelined fills each prefetched bundle in ONE Spark job, read back from the cache") {
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("graft-prefetch").toString
+    val nBatches = 3
+    val rowsPerBatch = 1000L
+    // one parquet directory per batch: a re-scan of a slice reads its rows
+    (0 until nBatches).foreach { i =>
+      spark.range(i * rowsPerBatch, (i + 1) * rowsPerBatch)
+        .selectExpr("id", "id % 7 AS k").write.parquet(s"$dir/b$i")
+    }
+    // opened before the run, so schema inference is not counted as a job
+    val slices = (0 until nBatches).map(i => spark.read.parquet(s"$dir/b$i"))
+    val emptySchema = StructType(Seq(StructField("id", LongType)))
+    val dim = spark.read.parquet(s"$dir/b0").filter($"k" === 0)
+    val alias = Steps.Fn((_, t) => t + ("alias" -> t("a")))
+    // (label, bundle of one slice, steps): the edge cases ride as inputs
+    val cases: Seq[(String, DataFrame => Map[String, DataFrame], Seq[graft.api.Step])] = Seq(
+      ("two tables", p => bundle("a" -> p, "b" -> p.filter($"k" > 2).select($"id")), Nil),
+      ("zero-row table", p => bundle("a" -> p, "none" -> p.filter($"id" < 0)), Nil),
+      ("zero-partition table", p => bundle("a" -> p, "empty" ->
+        spark.createDataFrame(sc.emptyRDD[org.apache.spark.sql.Row], emptySchema)), Nil),
+      ("aliased table", p => bundle("a" -> p, "b" -> p.select($"id")), Seq(alias)),
+      // the same DataFrame object in every batch, as BlockRangeSource
+      // passes a static dimension table along
+      ("static table", p => bundle("a" -> p, "dim" -> dim), Nil))
+    cases.foreach { case (label, shape, steps) =>
+      val preRun = sc.getPersistentRDDs.keySet
+      // a batch's source read waits for the previous push to finish, so
+      // the persisted RDDs a push sees are exactly its own bundle's
+      val gate = new java.util.concurrent.Semaphore(0)
+      val src = new graft.api.Source {
+        def batches(s: org.apache.spark.sql.SparkSession) =
+          Iterator.tabulate(nBatches) { i => if (i > 0) gate.acquire(); shape(slices(i)) }
+      }
+      val rowsSeen = new java.util.concurrent.atomic.AtomicLong()
+      val sink = new graft.api.Sink {
+        def push(tables: Map[String, DataFrame]): Unit =
+          try {
+            val own = sc.getPersistentRDDs.filter { case (id, _) => !preRun(id) }.values
+            val cachedPlans = own.size
+            assert(cachedPlans == tables.values.toSet.size, s"$label: cached plans")
+            eventually(timeout(Span(10, Seconds))) {
+              val cached = sc.getRDDStorageInfo.map(r => r.id -> r.numCachedPartitions).toMap
+              own.foreach(r => assert(cached.getOrElse(r.id, 0) == r.partitions.length,
+                s"$label: RDD ${r.id} not fully cached before the sink read it"))
+            }
+            // the sink's own jobs are tagged, so they are not counted as
+            // prefetch jobs. It reads through a new plan, as a write does:
+            // a DataFrame's own plan is fixed at its first action, so a
+            // table already read in an earlier run would miss this cache
+            sc.setLocalProperty(JobTally.RoleKey, "sink")
+            try rowsSeen.addAndGet(tables.values.map(_.select("*").collect().length.toLong).sum)
+            finally sc.setLocalProperty(JobTally.RoleKey, null)
+          } finally gate.release()
+      }
+      val tally = JobTally.during(spark) {
+        graft.api.Pipeline.runPipelined(spark, Pipeline(src, steps, sink))
+      }
+      assert(tally.jobs("") == nBatches, s"$label: jobs outside the sink per run")
+      // a cache hit counts one record per cached columnar batch (at most
+      // one per partition here); a parquet re-scan counts every row
+      assert(tally.jobs("sink") > 0 && tally.recordsRead("sink") < rowsPerBatch,
+        s"$label: the sink re-read the source (${tally.recordsRead("sink")} records)")
+      val expected = (0 until nBatches).map { i =>
+        Pipeline.processSteps(spark, shape(slices(i)), steps).values.map(_.count()).sum
+      }.sum
+      assert(rowsSeen.get == expected, s"$label: rows seen by the sink")
+      assert(sc.getPersistentRDDs.keySet == preRun, s"$label: cache released")
+    }
+  }
+
+  test("runPipelined failure paths release every cached batch") {
+    val sc = spark.sparkContext
+    def source(n: Int) = new graft.api.Source {
+      def batches(s: org.apache.spark.sql.SparkSession) =
+        Iterator.tabulate(n)(i => Map("t" -> s.range(i * 100L, (i + 1) * 100L).toDF(),
+          "u" -> s.range(i * 10L, (i + 1) * 10L).toDF()))
+    }
+    def recordingSink(seen: java.util.concurrent.ConcurrentLinkedQueue[Long],
+                      failOn: Long => Boolean) = new graft.api.Sink {
+      def push(tables: Map[String, DataFrame]): Unit = {
+        val first = tables("t").agg(min($"id")).as[Long].head() / 100
+        seen.add(first)
+        if (failOn(first)) throw new IllegalStateException(s"sink down at batch $first")
+      }
+    }
+    def causes(e: Throwable): Seq[Throwable] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+
+    // a step whose UDF throws only on batch 2's rows: the prefetch fails,
+    // the run throws after writing batch 1 alone, and nothing stays cached
+    val boom = udf((id: Long) => {
+      if (id >= 100) throw new IllegalArgumentException(s"bad row $id"); id })
+    val failingStep = Steps.Fn((_, t) => t.map { case (k, df) => k -> df.withColumn("chk", boom($"id")) })
+    val preRun = sc.getPersistentRDDs.keySet
+    val seen1 = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val stepErr = intercept[Exception] {
+      graft.api.Pipeline.runPipelined(spark,
+        Pipeline(source(3), Seq(failingStep), recordingSink(seen1, _ => false)))
+    }
+    assert(causes(stepErr).exists(c => Option(c.getMessage).exists(_.contains("bad row"))),
+      s"unexpected failure: $stepErr")
+    assert(seen1.toArray.toSeq == Seq(0L), "the sink must have written batch 1 only")
+    assert(sc.getPersistentRDDs.keySet == preRun, "a failed prefetch leaked its cache")
+
+    // a sink that throws on batch 1: its error propagates, and the
+    // in-flight prefetch of batch 2 is drained (ran to the end) and released
+    val batch2Rows = sc.longAccumulator("batch2Rows")
+    val countBatch2 = udf((id: Long) => { if (id >= 100 && id < 200) batch2Rows.add(1); id })
+    val countingStep = Steps.Fn((_, t) => t.map { case (k, df) => k -> df.withColumn("chk", countBatch2($"id")) })
+    val seen2 = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val sinkErr = intercept[IllegalStateException] {
+      graft.api.Pipeline.runPipelined(spark,
+        Pipeline(source(3), Seq(countingStep), recordingSink(seen2, _ == 0L)))
+    }
+    assert(sinkErr.getMessage == "sink down at batch 0")
+    assert(seen2.toArray.toSeq == Seq(0L))
+    assert(batch2Rows.value == 100L, "the in-flight prefetch was not drained")
+    assert(sc.getPersistentRDDs.keySet == preRun, "the drained prefetch leaked its cache")
+  }
+
+  test("AnchorLast writes run under the pushing thread's job group") {
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("graft-jobgroup").toString
+    val sink = ParquetSink(dir, anchorTable = Some("a"))
+    val tables = bundle("a" -> Seq(1L).toDF("id"), "b" -> Seq(2L).toDF("id"),
+      "c" -> Seq(3L).toDF("id"))
+    // each push runs on its own fresh thread, under its own job group
+    def pushAs(group: String): Unit = {
+      @volatile var err: Option[Throwable] = None
+      val t = new Thread(() => {
+        sc.setJobGroup(group, group)
+        try sink.push(tables) catch { case e: Throwable => err = Some(e) }
+        finally sc.clearJobGroup()
+      })
+      t.start(); t.join()
+      err.foreach(e => throw e)
+    }
+    pushAs("g1")
+    val tally = JobTally.during(spark)(pushAs("g2"))
+    assert(tally.groups.size >= tables.size, s"write jobs: ${tally.groups}")
+    assert(tally.groups.forall(_.contains("g2")), s"write job groups: ${tally.groups}")
+  }
+
   test("Pipeline.merge unions batches per table and checks key sets") {
     val b1 = bundle("t" -> Seq(1).toDF("a"))
     val b2 = bundle("t" -> Seq(2).toDF("a"))
@@ -346,5 +492,65 @@ class StepsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Pipeline.merge(Seq(b1, bundle("other" -> Seq(1).toDF("a"))))
     }
+  }
+}
+
+/** Jobs, job groups and task input records of the jobs a block submits,
+  * keyed by the `RoleKey` local property of the submitting thread ("" when
+  * unset). [[JobTally.during]] runs a marker job before and after the
+  * block: listener events arrive in order, so what is counted between the
+  * two markers' start events is exactly the block's jobs, complete.
+  */
+private final class JobTally extends org.apache.spark.scheduler.SparkListener {
+  import org.apache.spark.scheduler._
+  private val stageRole = scala.collection.mutable.Map.empty[Int, String]
+  private val jobCount = scala.collection.mutable.Map.empty[String, Int]
+  private val records = scala.collection.mutable.Map.empty[String, Long]
+  private val jobGroups = scala.collection.mutable.ArrayBuffer.empty[Option[String]]
+  private val markers = new java.util.concurrent.CountDownLatch(2)
+
+  def jobs(role: String): Int = synchronized(jobCount.getOrElse(role, 0))
+  def recordsRead(role: String): Long = synchronized(records.getOrElse(role, 0L))
+  def groups: Seq[Option[String]] = synchronized(jobGroups.toList)
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    val props = Option(e.properties)
+    val role = props.flatMap(p => Option(p.getProperty(JobTally.RoleKey))).getOrElse("")
+    if (role == JobTally.Marker) markers.countDown()
+    else if (markers.getCount == 1) {
+      jobCount(role) = jobCount.getOrElse(role, 0) + 1
+      jobGroups += props.flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+      e.stageIds.foreach(stageRole(_) = role)
+    }
+  }
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+    if (e.taskMetrics != null) stageRole.get(e.stageId).foreach { role =>
+      records(role) = records.getOrElse(role, 0L) + e.taskMetrics.inputMetrics.recordsRead
+    }
+  }
+}
+
+private object JobTally {
+  val RoleKey = "graft.test.role"
+  val Marker = "marker"
+
+  private def marker(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val sc = spark.sparkContext
+    sc.setLocalProperty(RoleKey, Marker)
+    try sc.parallelize(Seq(1), 1).count()
+    finally sc.setLocalProperty(RoleKey, null)
+  }
+
+  def during(spark: org.apache.spark.sql.SparkSession)(body: => Unit): JobTally = {
+    val t = new JobTally
+    spark.sparkContext.addSparkListener(t)
+    try {
+      marker(spark)
+      body
+      marker(spark)
+      assert(t.markers.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener events")
+      t
+    } finally spark.sparkContext.removeSparkListener(t)
   }
 }
