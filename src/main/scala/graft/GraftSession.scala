@@ -162,6 +162,8 @@ object GraftSession {
     // warn about the one static conf that cannot be applied post-hoc.
     if (!s.catalog.functionExists("keccak256")) {
       graft.functions.GraftFunctions.register(s)
+      System.err.println("[graft] spark.sql.extensions not applied: the session " +
+        "existed before GraftSession; graft SQL functions registered as temp functions")
       // every non-static engine conf is repairable post-hoc (r14: the
       // previous code only repaired inferTimestampNTZ, warned that
       // nanosAsLong "cannot be applied now" — it is a runtime SQLConf

@@ -18,8 +18,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     as proof the rest of the batch landed.
   *
   * At scale: because steps compose lazily, Catalyst sees through the whole
-  * pipeline — filters migrate to the scan, columns prune through every
-  * step, and the only materialization points are the sink writes.
+  * pipeline — filters migrate to the scan and columns prune through every
+  * step. The materialization points are the sink writes and, for a
+  * multi-batch source, the one fill job per prefetched batch ([[run]]).
   */
 final case class Pipeline(source: Source, steps: Seq[Step], sink: Sink)
 
@@ -45,91 +46,86 @@ object Pipeline {
     keys.map(k => k -> batches.map(_(k)).reduce(_.unionByName(_))).toMap
   }
 
-  /** The driver loop (≙ `run_pipeline`, cherry `pipeline.py:102-126`).
-    * Bounded sources iterate micro-batches; each batch flows through the
-    * step fold and lands in the sink. Each batch is a lazy plan, so within
-    * one batch the fetch∥transform∥write overlap happens inside Spark's
-    * scheduler when the sink action runs; for the reference's CROSS-batch
-    * prefetch overlap, see `runPipelined`.
-    */
-  def run(spark: SparkSession, pipeline: Pipeline): Unit =
-    pipeline.source.batches(spark).foreach { batch =>
-      pipeline.sink.push(processSteps(spark, batch, pipeline.steps))
-    }
-
-  /** Pipelined driver loop (≙ the reference's headline parallelism claim:
-    * "next batch … being fetched while your pre-processing function is
-    * running", README.md:25; `asyncio.to_thread` at `pipeline.py:122`):
-    * batch N+1 is materialized (persisted, then filled by ONE Spark job
-    * over the union of its tables' RDDs) CONCURRENTLY with batch N's sink
-    * write. Writes stay strictly sequential — cross-batch anchor ordering
-    * and watermark monotonicity (P5) are untouched; only the read/decode
-    * of the next batch overlaps the write IO of the current one.
-    * Lookahead depth is 1, so peak footprint is two cached batches.
+  /** The driver loop (≙ `run_pipeline`, cherry `pipeline.py:102-126`). Each
+    * batch flows through the step fold into the sink, and batch N+1 is read,
+    * stepped and materialized (persisted, then filled by ONE Spark job over
+    * the union of its tables' RDDs) CONCURRENTLY with batch N's sink write:
+    * the reference's "next batch … being fetched while your pre-processing
+    * function is running" (README.md:25; `asyncio.to_thread` at
+    * `pipeline.py:122`). Writes stay strictly sequential, so cross-batch
+    * anchor ordering and watermark monotonicity (P5) hold. Lookahead is 1,
+    * so peak footprint is two cached batches.
+    *
+    * The first bundle is cached only when the source has a second batch. A
+    * single-batch source (`ParquetSource`, `CsvSource`, `JsonlSource`, any
+    * `Iterator.single`) has nothing for a prefetch to overlap, so its bundle
+    * is pushed as one lazy plan, with no fill job and no cache. The source
+    * decides this, so there is no lookahead option.
     *
     * Why not `count()` per table: under AQE a count over a cached plan is
     * three jobs (the cache stage, the count's shuffle-map stage, the final
-    * count), so a three-table bundle paid nine prefetch jobs. Asking for a
-    * persisted RDD partition's iterator computes and stores the whole
-    * partition, so one no-exchange job fills every table's cache.
+    * count). Asking for a persisted RDD partition's iterator computes and
+    * stores the whole partition, so one no-exchange job fills every table.
     */
-  def runPipelined(spark: SparkSession, pipeline: Pipeline): Unit = {
-    import scala.concurrent.{Await, Future}
+  def run(spark: SparkSession, pipeline: Pipeline): Unit = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    // per-INVOCATION executor: a JVM-global single thread would serialize
-    // two concurrently-running pipelines' prefetches against each other —
-    // each loop blocking on the OTHER pipeline's materialization, paying
-    // the persist overhead without the overlap this method exists for
-    val prefetchPool = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-      val t = new Thread(r, "graft-batch-prefetch"); t.setDaemon(true); t
-    })
-    val prefetchEc = scala.concurrent.ExecutionContext.fromExecutorService(prefetchPool)
+    import scala.util.Try
     val it = pipeline.source.batches(spark)
-    def prepare(): Option[Tables] =
-      if (!it.hasNext) None
-      else {
-        val stepped = processSteps(spark, it.next(), pipeline.steps)
-        stepped.values.foreach(_.persist())
-        // fill every table's cache now, in one job. `toDF()` plans afresh
-        // against the cache just registered: a DataFrame's own `rdd` is
-        // memoized, so a table passed along in every batch (a static
-        // dimension) would read the previous batch's released cache. A
-        // failure must release the tables already persisted or each failed
-        // prefetch permanently leaks cached executor memory in a
-        // long-lived session.
-        try spark.sparkContext.union(stepped.values.toSeq.distinct.map(_.toDF().rdd))
-          .foreachPartition(_ => ())
-        catch { case e: Throwable =>
-          stepped.values.foreach(df => scala.util.Try(df.unpersist()))
-          throw e
-        }
-        Some(stepped)
-      }
-    var current = prepare()
+    def take(): Option[Tables] =
+      if (it.hasNext) Some(processSteps(spark, it.next(), pipeline.steps)) else None
+    var current = take()
+    val prefetch = it.hasNext
+    // the one release rule: unpersist `done`'s tables except a plan `live`
+    // also holds. A table passed along in every batch is ONE cache entry
+    // (the next batch's persist of it was a no-op), so releasing it with
+    // the written batch would leave the next push to re-scan it.
+    def release(done: Option[Tables], live: Option[Tables]): Unit =
+      if (prefetch) for (b <- done; df <- b.values
+                         if !live.exists(_.values.exists(_.sameSemantics(df))))
+        Try(df.unpersist())
+    // `toDF()` plans afresh against the cache just registered: a
+    // DataFrame's own `rdd` is memoized, so a static dimension would read a
+    // released cache. A failed fill releases what it persisted, or each
+    // failure would pin executor memory for the life of the session.
+    def fill(stepped: Tables, live: Option[Tables]): Tables = {
+      stepped.values.foreach(_.persist())
+      try spark.sparkContext.union(stepped.values.toSeq.distinct.map(_.toDF().rdd))
+        .foreachPartition(_ => ())
+      catch { case e: Throwable => release(Some(stepped), live); throw e }
+      stepped
+    }
+    if (prefetch) current = current.map(fill(_, None))
+    // per-INVOCATION executor: a JVM-global single thread would serialize
+    // two concurrently-running pipelines' prefetches against each other
+    val prefetchEc = ExecutionContext.fromExecutorService(
+      java.util.concurrent.Executors.newSingleThreadExecutor(r => {
+        val t = new Thread(r, "graft-batch-prefetch"); t.setDaemon(true); t
+      }))
     try {
       while (current.isDefined) {
-        val nextF = Future(prepare())(prefetchEc)
-        var pushFailed = true
-        try { pipeline.sink.push(current.get); pushFailed = false }
+        val live = current
+        val nextF = Future(take().map(fill(_, live)))(prefetchEc)
+        var pushed = false
+        try { pipeline.sink.push(current.get); pushed = true }
         finally {
-          // never leak cached batches: release the written batch, and if
-          // the write failed, also drain + release the in-flight prefetch.
-          // On the SUCCESS path a prefetch failure must PROPAGATE — a
-          // swallowed one would end the loop as if the source were
-          // exhausted, silently dropping every remaining batch.
-          current.get.values.foreach(_.unpersist())
-          if (pushFailed) {
-            scala.util.Try(Await.result(nextF, Duration.Inf))
-              .foreach(_.foreach(_.values.foreach(_.unpersist())))
-            current = None
-          } else current = Await.result(nextF, Duration.Inf)
+          // awaited even after a failed push, so the outer finally releases
+          // what it cached. After a good push its failure must PROPAGATE: a
+          // swallowed one would end the loop as if the source were exhausted.
+          val next = Try(Await.result(nextF, Duration.Inf))
+          release(current, next.toOption.flatten)
+          current = next.toOption.flatten
+          if (pushed) next.get
         }
       }
     } finally {
-      current.foreach(_.values.foreach(_.unpersist()))
-      prefetchPool.shutdown()
+      release(current, None)
+      prefetchEc.shutdown()
     }
   }
+
+  /** [[run]] under its earlier name. */
+  def runPipelined(spark: SparkSession, pipeline: Pipeline): Unit = run(spark, pipeline)
 }
 
 /** A bounded micro-batch source (≙ `start_stream`, cherry `pipeline.py:106,

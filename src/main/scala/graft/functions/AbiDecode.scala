@@ -346,7 +346,7 @@ object AbiRuntime {
   *
   * Code-generates (r10): the decode itself is one call into
   * [[AbiRuntime.decodeEvent]], but doGenCode keeps the CONTAINING stage
-  * in whole-stage codegen — as a CodegenFallback this expression split
+  * in whole-stage codegen — evaluated interpreted, this expression split
   * the stage and paid interpreted-glue per row (measured 1.36× slower on
   * a 2M-row Transfer fixture; SURVEY §6.2).
   */

@@ -88,26 +88,32 @@ object Base58 {
 }
 
 /** base58_encode(binary) → string (Bitcoin alphabet). */
-case class Base58Encode(child: Expression) extends FallbackUnaryKernel {
+case class Base58Encode(child: Expression) extends UnaryKernel {
   override protected def inputType: DataType = BinaryType
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "base58_encode"
   override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(Base58.encode(input.asInstanceOf[Array[Byte]]))
+    Base58Encode.compute(input.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(newChild: Expression): Base58Encode =
     copy(child = newChild)
 }
 
+object Base58Encode {
+  def compute(b: Array[Byte]): UTF8String = UTF8String.fromString(Base58.encode(b))
+}
+
 /** base58_decode(string) → binary; null on invalid input characters. */
-case class Base58Decode(child: Expression) extends FallbackUnaryKernel {
+case class Base58Decode(child: Expression) extends UnaryKernel {
   override protected def inputType: DataType = StringType
   override def dataType: DataType = BinaryType
   override protected def nullOnBadInput: Boolean = true
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "base58_decode"
   override protected def nullSafeEval(input: Any): Any =
-    Base58.decode(input.asInstanceOf[UTF8String].toString)
+    Base58Decode.compute(input.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(newChild: Expression): Base58Decode =
     copy(child = newChild)
 }
+
+object Base58Decode { def compute(s: UTF8String): Array[Byte] = Base58.decode(s.toString) }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType, NullType, StringType}
@@ -25,8 +25,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - a `NullType` child's generated value is Object-typed, which Janino
   *    rejects where compute() expects its input type — the result is a
   *    constant null.
-  *
-  * The interpreted kernels extend [[FallbackUnaryKernel]] instead.
   */
 private[functions] trait UnaryKernel extends UnaryExpression {
   protected def inputType: DataType
@@ -63,16 +61,6 @@ private[functions] trait UnaryKernel extends UnaryExpression {
         """.stripMargin)
       else nullSafeCodeGen(ctx, ev, c => s"${ev.value} = ${call(c)};")
     }
-}
-
-/** A [[UnaryKernel]] evaluated through `CodegenFallback` (it keeps its
-  * stage out of whole-stage codegen): the type check and nullability are
-  * shared, the codegen is not.
-  */
-private[functions] trait FallbackUnaryKernel extends UnaryKernel
-    with CodegenFallback {
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    super[CodegenFallback].doGenCode(ctx, ev)
 }
 
 /** The LATIN1-VIEW byte⇄string conversions every compression kernel in

@@ -122,13 +122,15 @@ object Keccak {
 }
 
 /** keccak256(binary) → 32-byte binary. */
-case class Keccak256(child: Expression) extends FallbackUnaryKernel {
+case class Keccak256(child: Expression) extends UnaryKernel {
   override protected def inputType: DataType = BinaryType
   override def dataType: DataType = BinaryType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "keccak256"
   override protected def nullSafeEval(input: Any): Any =
-    Keccak.hash256(input.asInstanceOf[Array[Byte]])
+    Keccak256.compute(input.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(newChild: Expression): Keccak256 =
     copy(child = newChild)
 }
+
+object Keccak256 { def compute(b: Array[Byte]): Array[Byte] = Keccak.hash256(b) }

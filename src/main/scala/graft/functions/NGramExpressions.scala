@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * interpreted lambda per element (HOFs are CodegenFallback) — hundreds of
   * expression-tree evals per document. These evaluate one tight Scala loop
   * per row, and `doGenCode` emits a static call so the surrounding stage
-  * stays inside whole-stage codegen (a CodegenFallback expression would
+  * stays inside whole-stage codegen (an interpreted expression would
   * demote the entire stage to interpreted rows). Output element SETS are
   * identical to the HOF form (first-occurrence distinct order; consumers
   * either sort, min, or join — order-insensitive).

@@ -18,68 +18,68 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object U256 {
   val Width = 32
-
-  def normalize(b: Array[Byte]): Array[Byte] = {
-    require(b.length <= Width, s"u256 out of range: ${b.length} bytes")
-    if (b.length == Width) b
-    else {
-      val out = new Array[Byte](Width)
-      System.arraycopy(b, 0, out, Width - b.length, b.length)
-      out
-    }
-  }
-
-  def fromBigInteger(v: BigInteger): Array[Byte] = {
-    require(v.signum >= 0 && v.bitLength <= 256, s"u256 out of range: $v")
-    val raw = v.toByteArray // may carry a sign byte
-    normalize(if (raw.length == Width + 1 && raw(0) == 0) raw.tail else raw)
-  }
-
-  def toBigInteger(b: Array[Byte]): BigInteger = new BigInteger(1, b)
 }
 
 /** u256_to_decimal(binary) → DECIMAL(38,0); null when the value exceeds 38
   * digits (try-cast semantics, mirroring the reference's allow-fail casts).
   */
-case class U256ToDecimal(child: Expression) extends FallbackUnaryKernel {
+case class U256ToDecimal(child: Expression) extends UnaryKernel {
   override protected def inputType: DataType = BinaryType
   override def dataType: DataType = DecimalType(38, 0)
   override protected def nullOnBadInput: Boolean = true
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "u256_to_decimal"
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = U256.toBigInteger(input.asInstanceOf[Array[Byte]])
-    val d = Decimal(new java.math.BigDecimal(v))
-    if (d.changePrecision(38, 0)) d else null
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    U256ToDecimal.compute(input.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(newChild: Expression): U256ToDecimal =
     copy(child = newChild)
 }
 
+object U256ToDecimal {
+  def compute(b: Array[Byte]): Decimal = {
+    val d = Decimal(new java.math.BigDecimal(new BigInteger(1, b)))
+    if (d.changePrecision(38, 0)) d else null
+  }
+}
+
 /** u256_to_string(binary) → full-precision base-10 string (lossless). */
-case class U256ToString(child: Expression) extends FallbackUnaryKernel {
+case class U256ToString(child: Expression) extends UnaryKernel {
   override protected def inputType: DataType = BinaryType
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "u256_to_string"
   override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(U256.toBigInteger(input.asInstanceOf[Array[Byte]]).toString)
+    U256ToString.compute(input.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(newChild: Expression): U256ToString =
     copy(child = newChild)
+}
+
+object U256ToString {
+  def compute(b: Array[Byte]): UTF8String = UTF8String.fromString(new BigInteger(1, b).toString)
 }
 
 /** u256_from_string(base-10 string) → canonical 32-byte binary; null on
   * malformed or out-of-range input.
   */
-case class U256FromString(child: Expression) extends FallbackUnaryKernel {
+case class U256FromString(child: Expression) extends UnaryKernel {
   override protected def inputType: DataType = StringType
   override def dataType: DataType = BinaryType
   override protected def nullOnBadInput: Boolean = true
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "u256_from_string"
   override protected def nullSafeEval(input: Any): Any =
-    try U256.fromBigInteger(new BigInteger(input.asInstanceOf[UTF8String].toString.trim))
-    catch { case _: IllegalArgumentException => null } // covers NumberFormatException
+    U256FromString.compute(input.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(newChild: Expression): U256FromString =
     copy(child = newChild)
+}
+
+object U256FromString {
+  def compute(s: UTF8String): Array[Byte] = {
+    val v = try new BigInteger(s.toString.trim) catch { case _: NumberFormatException => null }
+    if (v == null || v.signum < 0 || v.bitLength > 256) return null
+    val raw = v.toByteArray.takeRight(U256.Width) // drops a 256-bit value's zero sign byte
+    val out = new Array[Byte](U256.Width)
+    System.arraycopy(raw, 0, out, U256.Width - raw.length, raw.length)
+    out
+  }
 }

@@ -32,11 +32,10 @@ final case class DeltaSink(baseDir: String,
     AnchorLast.requireKnown(partitionBy.keySet, tables, "partitionBy")
     AnchorLast.push(tables, anchorTable) { (name, df) =>
       // documented empty-table skip (the reference's delta writer skips
-      // rather than committing empty versions). Honest cost note: the
-      // isEmpty probe is its own job, so a non-empty table with a wide
-      // upstream executes that subtree twice (probe + write); callers on
-      // hot micro-batch paths should materialize the bundle first (the
-      // step-fold's localCheckpoint idiom) if the double scan shows up.
+      // rather than committing empty versions). Cost note: the isEmpty
+      // probe is its own job. `Pipeline.run` caches every bundle of a
+      // multi-batch source, so there probe and write both read the cache;
+      // a single-batch source's lazy bundle runs its upstream twice.
       if (df.isEmpty) ()
       else {
       val w = df.write.format("delta").mode("append")

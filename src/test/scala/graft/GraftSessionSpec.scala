@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types.BinaryType
-import org.scalatest.funsuite.AnyFunSuite
 
 /** GraftExtensions injector spec. A shared-JVM test can't boot a second
   * SparkContext to observe `spark.sql.extensions` end-to-end, so this
@@ -11,7 +10,31 @@ import org.scalatest.funsuite.AnyFunSuite
   * registered builders directly; SQL-path coverage for the same functions
   * lives in FunctionsSpec via GraftFunctions.register.
   */
-class GraftSessionSpec extends AnyFunSuite {
+class GraftSessionSpec extends SparkSpec {
+
+  test("getOrCreate over a session built without the extensions repairs and warns") {
+    // the shared session is built without spark.sql.extensions; a suite
+    // that ran earlier may have registered the functions as temp functions
+    val conf = spark.sessionState.conf
+    val saved = conf.getAllConfs
+    spark.sessionState.functionRegistry.dropFunction(
+      org.apache.spark.sql.catalyst.FunctionIdentifier("keccak256"))
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    // getOrCreate applies the builder's runtime confs to the shared
+    // session; they are put back for the suites that follow
+    val s = try GraftSession.getOrCreate() finally {
+      System.setErr(stderr)
+      conf.clear()
+      saved.foreach { case (k, v) => conf.setConfString(k, v) }
+    }
+    assert(s eq spark)
+    assert(spark.catalog.functionExists("keccak256"))
+    val warned = err.toString.linesIterator.filter(_.contains("spark.sql.extensions")).toList
+    assert(warned.size == 1 && warned.head.contains("not applied") &&
+      warned.head.contains("temp functions"), s"stderr: $err")
+  }
 
   test("GraftExtensions registers all builders and they evaluate") {
     val ext = new SparkSessionExtensions

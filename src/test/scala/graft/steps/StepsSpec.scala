@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.{Seconds, Span}
 
@@ -459,6 +460,62 @@ class StepsSpec extends SparkSpec {
     assert(seen2.toArray.toSeq == Seq(0L))
     assert(batch2Rows.value == 100L, "the in-flight prefetch was not drained")
     assert(sc.getPersistentRDDs.keySet == preRun, "the drained prefetch leaked its cache")
+  }
+
+  test("Pipeline.run pushes a single-batch source lazily: no cache, no job outside the sink") {
+    val sc = spark.sparkContext
+    val preRun = sc.getPersistentRDDs.keySet
+    val src = new graft.api.Source {
+      def batches(s: org.apache.spark.sql.SparkSession) =
+        Iterator.single(Map("t" -> s.range(0, 100).toDF(), "u" -> s.range(0, 10).toDF()))
+    }
+    val pushes = new java.util.concurrent.atomic.AtomicInteger()
+    val sink = new graft.api.Sink {
+      def push(tables: Map[String, DataFrame]): Unit = {
+        pushes.incrementAndGet()
+        assert(sc.getPersistentRDDs.keySet == preRun, "persisted RDDs during the push")
+        assert(tables.values.forall(_.storageLevel == StorageLevel.NONE), "a table was cached")
+        sc.setLocalProperty(JobTally.RoleKey, "sink")
+        try tables.values.foreach(_.collect())
+        finally sc.setLocalProperty(JobTally.RoleKey, null)
+      }
+    }
+    val tally = JobTally.during(spark) {
+      Pipeline.run(spark, Pipeline(src, Seq(Steps.SetChainId(1L)), sink))
+    }
+    assert(pushes.get == 1)
+    assert(tally.jobs("") == 0, "jobs outside the sink")
+    assert(tally.jobs("sink") > 0)
+    assert(sc.getPersistentRDDs.keySet == preRun, "persisted RDDs after the run")
+  }
+
+  test("Pipeline.run keeps a table passed along in every batch cached for every push") {
+    val sc = spark.sparkContext
+    val preRun = sc.getPersistentRDDs.keySet
+    val dim = Seq((0L, "d")).toDF("k", "name")
+    // no gate: batch N+1 is read and persisted while push N sleeps, and its
+    // persist of the static table is a no-op on the entry batch N holds
+    val src = new graft.api.Source {
+      def batches(s: org.apache.spark.sql.SparkSession) =
+        Iterator.tabulate(4)(i => Map("logs" -> s.range(i * 10L, (i + 1) * 10L).toDF(), "dim" -> dim))
+    }
+    val pushes = new java.util.concurrent.atomic.AtomicInteger()
+    val uncached = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sink = new graft.api.Sink {
+      def push(tables: Map[String, DataFrame]): Unit = {
+        val n = pushes.incrementAndGet()
+        def check(when: String): Unit = tables.foreach { case (name, df) =>
+          if (df.storageLevel == StorageLevel.NONE) uncached.add(s"$name at the $when of push $n")
+        }
+        check("start")
+        Thread.sleep(500)
+        check("end")
+      }
+    }
+    Pipeline.run(spark, Pipeline(src, Seq(Steps.SetChainId(1L)), sink))
+    assert(pushes.get == 4)
+    assert(uncached.isEmpty, s"uncached: ${uncached.toArray.mkString(", ")}")
+    assert(sc.getPersistentRDDs.keySet == preRun, "cache released")
   }
 
   test("AnchorLast writes run under the pushing thread's job group") {
