@@ -144,36 +144,40 @@ object GraftSession {
     // default is both the local and the cluster posture.
     "spark.sql.adaptive.enabled" -> "true")
 
+  /** Everything builder() sets besides the master. */
+  private def settings(shufflePartitions: Int): Map[String, String] =
+    defaults + ("spark.sql.shuffle.partitions" -> shufflePartitions.toString)
+
   def builder(master: String = s"local[$envCpus]",
               shufflePartitions: Int = envCpus): SparkSession.Builder =
-    defaults.foldLeft(
-      SparkSession.builder()
-        .master(master)
-        .config("spark.sql.shuffle.partitions", shufflePartitions)
+    settings(shufflePartitions).foldLeft(
+      SparkSession.builder().master(master)
     ) { case (b, (k, v)) => b.config(k, v) }
 
   def getOrCreate(): SparkSession = {
+    // Builder.getOrCreate applies the builder's runtime SQL confs to a
+    // session that already exists: read the values they replace, to name
+    // every one that changes
+    val before = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map { p =>
+        settings(envCpus).keys.filter(p.conf.isModifiable).map(k => k -> p.conf.getOption(k))
+      }
     val s = builder().getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // getOrCreate may have returned a PRE-EXISTING session on which the
-    // builder confs above never took effect — every graft SQL function
-    // would be missing with no hint.
-    // Repair the function registry through the temp-function channel and
-    // warn about the one static conf that cannot be applied post-hoc.
+    val changed = before.toSeq.flatten.collect {
+      case (k, old) if old != s.conf.getOption(k) =>
+        s"$k: ${old.getOrElse("<unset>")} -> ${s.conf.get(k)}"
+    }
+    if (changed.nonEmpty)
+      System.err.println("[graft] GraftSession confs applied to the existing session: " +
+        changed.sorted.mkString(", "))
+    // the static spark.sql.extensions never reaches a PRE-EXISTING session:
+    // every graft SQL function would be missing with no hint. Repair the
+    // function registry through the temp-function channel, and say so.
     if (!s.catalog.functionExists("keccak256")) {
       graft.functions.GraftFunctions.register(s)
       System.err.println("[graft] spark.sql.extensions not applied: the session " +
         "existed before GraftSession; graft SQL functions registered as temp functions")
-      // every non-static engine conf is repairable post-hoc (r14: the
-      // previous code only repaired inferTimestampNTZ, warned that
-      // nanosAsLong "cannot be applied now" — it is a runtime SQLConf
-      // entry, not StaticSQLConf — and silently skipped the UTC session
-      // timezone the time operators' semantics are pinned to). Only
-      // spark.sql.extensions is genuinely static; the function registry
-      // repair above covers its SQL-function half.
-      s.conf.set("spark.sql.session.timeZone", "UTC")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     }
     s
   }

@@ -14,13 +14,17 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame =
     sql.ExtensionQueries.queries("x124_corpus_curation_oph")(spark, "/root/testdata/sf0.001")
-  /** One entry per implemented operator from SURVEY.md §2 (parity Q1-Q15)
-    * plus the training-data-pipeline extensions (x16-x26).
+  /** Every declared query with its DuckDB oracle: the parity set (Q1-Q15)
+    * and the training-data-pipeline extensions (x16-x179).
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    sql.ParityQueries.queries ++ sql.ExtensionQueries.queries
+  val catalog: Map[String, sql.QueryCase] =
+    merge(sql.ParityQueries.catalog, sql.ExtensionQueries.catalog)
+  /** One catalog from the per-object ones; a name that two of them declare
+    * is rejected, where `++` would let the later one shadow it. */
+  private[graft] def merge(catalogs: Map[String, sql.QueryCase]*): Map[String, sql.QueryCase] =
+    sql.QueryCase.catalog(catalogs.flatten: _*)
+  def queries: Map[String, (SparkSession, String) => DataFrame] = catalog.transform((_, c) => c.build)
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    sql.ParityQueries.oracle ++ sql.ExtensionQueries.oracle
+    * the same parquet tables. */
+  def oracleSql: Map[String, String] = catalog.transform((_, c) => c.oracle)
 }

@@ -97,39 +97,30 @@ final case class ParquetSink(baseDir: String,
 /** Session-catalog table sink (≙ cherry W1 DuckDB `writers/duckdb.py:17-52`:
   * CREATE TABLE AS on first push, INSERT INTO after — here saveAsTable
   * append does both). JDBC/warehouse sinks share this shape.
+  *
+  * `buckets` maps table name → (key column, bucket count) for Spark
+  * BUCKETING on a join key — the co-located join layout: every listed
+  * table is hash-bucketed (and bucket-sorted) on its declared key into the
+  * same bucket count, so a later equi-join of two tables from this sink
+  * requires NO shuffle of either side — the sort-merge join reads aligned
+  * buckets directly (`BucketedJoinSpec` asserts Exchange-free plans). At
+  * 100 TB this is the difference between paying a corpus-sized exchange on
+  * EVERY downstream join and paying a one-time bucketed write: the
+  * standing layout for fact tables that are repeatedly joined on the same
+  * key (docs↔scores, blocks↔logs) — Spark's answer to the warehouse sinks'
+  * ORDER BY/index declarations (ClickHouse `writers/clickhouse.py:119-148`).
+  *
+  * Tables not in the map write unbucketed. Same loud-typo policy as
+  * ParquetSink.partitionBy: a key naming no pushed table fails instead of
+  * silently writing an unbucketed layout the consumer can't see is wrong.
+  * (This relies on the engine's bundle contract: the step fold emits a
+  * STABLE key set every batch, with a no-rows table present as an empty
+  * DataFrame rather than absent — so an absent configured table really is
+  * a typo, not a quiet batch.)
   */
 final case class CatalogSink(tablePrefix: String = "",
-                             anchorTable: Option[String] = None) extends Sink {
-  def push(tables: Map[String, DataFrame]): Unit =
-    AnchorLast.push(tables, anchorTable) { (name, df) =>
-      df.write.mode("append").saveAsTable(tablePrefix + name)
-    }
-}
-
-/** [[CatalogSink]] with Spark BUCKETING on a join key — the co-located
-  * join layout: every table is hash-bucketed (and bucket-sorted) on its
-  * declared key into the same bucket count, so a later equi-join of two
-  * tables from this sink requires NO shuffle of either side — the
-  * sort-merge join reads aligned buckets directly (`BucketedJoinSpec`
-  * asserts Exchange-free plans). At 100 TB this is the difference between
-  * paying a corpus-sized exchange on EVERY downstream join and paying a
-  * one-time bucketed write: the standing layout for fact tables that are
-  * repeatedly joined on the same key (docs↔scores, blocks↔logs) —
-  * Spark's answer to the warehouse sinks' ORDER BY/index declarations
-  * (ClickHouse `writers/clickhouse.py:119-148`).
-  *
-  * `buckets` maps table name → (key column, bucket count). Tables not in
-  * the map write unbucketed (the CatalogSink behavior). Same loud-typo
-  * policy as ParquetSink.partitionBy: a key naming no pushed table fails
-  * instead of silently writing an unbucketed layout the consumer can't
-  * see is wrong. (This relies on the engine's bundle contract: the step
-  * fold emits a STABLE key set every batch, with a no-rows table present
-  * as an empty DataFrame rather than absent — so an absent configured
-  * table really is a typo, not a quiet batch.)
-  */
-final case class BucketedCatalogSink(buckets: Map[String, (String, Int)],
-                                     tablePrefix: String = "",
-                                     anchorTable: Option[String] = None)
+                             anchorTable: Option[String] = None,
+                             buckets: Map[String, (String, Int)] = Map.empty)
     extends Sink {
   require(buckets.values.forall(_._2 > 0), "bucket counts must be positive")
   def push(tables: Map[String, DataFrame]): Unit = {

@@ -212,3293 +212,6 @@ object ExtensionQueries {
         "vec_id", "embedding", m = 4, ksub = ksub, iters = 2)
     }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // x16 — token counting (whitespace, alpha runs, BPE-ish segmentation).
-    "x16_text_tokens" -> { (s, dir) =>
-      TextOps.tokenCounts(spread(t(s, dir, "documents")))
-        .select("doc_id", "ws_tokens", "alpha_tokens", "bpe_tokens")
-        .orderBy("doc_id")
-    },
-
-    // x17 — quality-score signals (C4/Gopher-style filters), basis points.
-    "x17_text_quality" -> { (s, dir) =>
-      TextOps.qualityScore(spread(t(s, dir, "documents")))
-        .select("doc_id", "n_words", "avg_word_len_bp", "stop_ratio_bp",
-          "alpha_ratio_bp")
-        .orderBy("doc_id")
-    },
-
-    // x18 — char-trigram-profile language ID (n-gram heuristic).
-    "x18_lang_id" -> { (s, dir) =>
-      TextOps.langId(spread(t(s, dir, "documents")))
-        .select("doc_id", "pred_lang", "pred_hits")
-        .orderBy("doc_id")
-    },
-
-    // x19 — bottom-k sketch document fingerprint.
-    "x19_fingerprint" -> { (s, dir) =>
-      TextOps.fingerprint(spread(t(s, dir, "documents")))
-        .select("doc_id", "fp")
-        .orderBy("doc_id")
-    },
-
-    // x20 — exact dedup by content hash (keep min doc_id per md5(text)).
-    "x20_dedup_exact" -> { (s, dir) =>
-      DedupOps.exact(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")
-    },
-
-    // x21 — n-gram Jaccard near-dup pairs via shingle equi-join (no cross
-    // join anywhere: the shuffle key is the shingle).
-    "x21_dedup_ngram_jaccard" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      DedupOps.ngramJaccardPairs(d, "doc_id",
-          TextOps.wordShingles(col("text"), 3), 0.5)
-        .orderBy("i", "j")
-    },
-
-    // x22 — MinHash+LSH candidate pairs (16 hashes, 4 bands × 4 rows:
-    // P(candidate) = 1-(1-J^4)^4 → J=0.99 caught, J=0.1 ~4e-4).
-    "x22_dedup_minhash_lsh" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      DedupOps.minhashLshCandidates(d, "doc_id",
-          TextOps.wordShingles(col("text"), 3), numHashes = 16, bandRows = 4)
-        .orderBy("i", "j")
-    },
-
-    // x23 — SimHash near-dup pairs (60-bit code, hamming ≤ 3).
-    "x23_dedup_simhash" -> { (s, dir) =>
-      DedupOps.simhashPairs(spread(t(s, dir, "documents")), "doc_id", "text", 3)
-        .orderBy("i", "j")
-    },
-
-    // x24 — embedding-cosine near-dup pairs (brute-force exact baseline).
-    "x24_dedup_embedding" -> { (s, dir) =>
-      DedupOps.embeddingNearDup(spread(t(s, dir, "embeddings")), "vec_id",
-          "embedding", 0.45)
-        .orderBy("i", "j")
-    },
-
-    // x25 — exact ANN baseline: brute-force cosine top-5 for 20 query
-    // vectors (corpus scanned once, queries broadcast).
-    "x25_ann_topk" -> { (s, dir) =>
-      val e = spread(t(s, dir, "embeddings"))
-      VectorOps.bruteForceTopK(e.filter(col("vec_id") < 20), e, "vec_id",
-          "embedding", 5)
-        .orderBy("qid", "nid")
-    },
-
-    // x26 — LSH-bucketed ANN (8 random hyperplanes → 256 buckets); the
-    // scale path: corpus partitions by bucket, queries probe one bucket.
-    "x26_ann_lsh" -> { (s, dir) =>
-      val e = spread(t(s, dir, "embeddings"))
-      VectorOps.lshTopK(e.filter(col("vec_id") < 20), e, "vec_id",
-          "embedding", 5, dim = 64, numPlanes = 8)
-        .orderBy("qid", "nid")
-    },
-
-    // x35 — IVF ANN (8 deterministic seed centroids, 2-probe): the other
-    // classic scale path next to LSH (x26). Corpus shuffles once on its
-    // cell id; queries probe 2/8 of the data.
-    "x35_ann_ivf" -> { (s, dir) =>
-      val e = spread(t(s, dir, "embeddings"))
-      VectorOps.ivfTopK(e.filter(col("vec_id") < 20), e, "vec_id",
-          "embedding", 5, numCentroids = 8, nProbe = 2)
-        .orderBy("qid", "nid")
-    },
-
-    // x39 — fixed-interval resample + forward gap-fill (TimeOps): hourly
-    // per-user max(value), densified over each user's active span.
-    "x39_resample_fill" -> { (s, dir) =>
-      TimeOps.resampleFill(t(s, dir, "events"), "user_id", "ts", "value",
-          3600L * 1000000L)
-        .select(col("user_id"), col("b"),
-          floor(col("fv") * 10000).cast(LongType).as("v_bp"))
-        .orderBy("user_id", "b")
-    },
-
-    // x38 — keyed interval join (bucketed range-join plan): clicks within
-    // one hour AFTER each purchase, counted per purchase.
-    "x38_interval_join" -> { (s, dir) =>
-      val e = t(s, dir, "events")
-      val p = e.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("pid"), col("user_id"), col("ts").as("pts"))
-      val c = e.filter(col("event_type") === "click")
-        .select(col("event_id").as("cid"), col("user_id"), col("ts").as("cts"))
-      JoinOps.intervalJoin(p, c, "user_id", "pts", "cts", 3600L * 1000000L)
-        .groupBy(col("pid")).agg(count(lit(1)).as("n_clicks"))
-        .orderBy("pid")
-    },
-
-    // x37 — repetition signals (Gopher-style filters): duplicate-word and
-    // duplicate-bigram fractions in basis points.
-    "x37_text_repetition" -> { (s, dir) =>
-      TextOps.repetitionScore(spread(t(s, dir, "documents")))
-        .select("doc_id", "n_words", "dup_word_bp", "dup_bigram_bp")
-        .orderBy("doc_id")
-    },
-
-    // x36 — PII redaction (C4/Dolma-style corpus scrubbing). The fixtures
-    // carry no real PII, so the query plants deterministic email/IP/phone
-    // spans derived from doc_id, then redacts — both engines synthesize and
-    // scrub the identical string.
-    "x36_pii_redact" -> { (s, dir) =>
-      val planted = spread(t(s, dir, "documents")).withColumn("text", concat(
-        lit("mail u"), col("doc_id").cast("string"),
-        lit("@ex.com on 10.0.0."), (col("doc_id") % 200).cast("string"),
-        lit(" call +1-555-000-"), col("doc_id").cast("string"),
-        lit(" "), substring(col("text"), 1, 40)))
-      TextOps.redactPii(planted)
-        .select("doc_id", "red", "n_email", "n_ip", "n_phone")
-        .orderBy("doc_id")
-    },
-
-    // x27 — backward as-of join (union+window plan, JoinOps): for each
-    // purchase, the user's most recent click at-or-before it.
-    "x27_asof_join" -> { (s, dir) =>
-      val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val clicks = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("click_id"))
-        .withColumn("click_ts", col("ts"))
-      JoinOps.asOfJoinBackward(purchases, clicks, "user_id", "ts",
-          Seq("click_id", "click_ts"))
-        .select(col("event_id"), col("user_id"), col("click_id"),
-          (graft.ops.TsCompat.micros(col("ts")) -
-            graft.ops.TsCompat.micros(col("click_ts"))).as("delay_us"))
-        .orderBy("event_id")
-    },
-
-    // x28 — running windowed aggregation + lag over event time.
-    "x28_window_running" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      val wf = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "events")
-        .select(col("event_id"), col("user_id"),
-          (round(sum(col("value").cast(DecimalType(38, 6))).over(wf), 4) * 10000)
-            .cast(LongType).as("run_total_e4"),
-          lag(col("event_type"), 1).over(w).as("prev_type"))
-        .orderBy("event_id")
-    },
-
-    // x29 — corpus dedup statistics (exact counts → oracle-able summary).
-    "x29_dedup_stats" -> { (s, dir) =>
-      t(s, dir, "documents")
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(md5(col("text"))).as("n_unique"))
-        .select(col("n_docs"), col("n_unique"),
-          TextOps.bp(col("n_docs") - col("n_unique"), col("n_docs")).as("dup_ratio_bp"))
-    },
-
-    // x30 — CUBE grouping sets over the corpus dimensions.
-    "x30_cube" -> { (s, dir) =>
-      t(s, dir, "documents")
-        .cube(col("lang"), col("source"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("lang").asc_nulls_first, col("source").asc_nulls_first)
-    },
-
-    // x47 — explicit GROUPING SETS (the third grouping-sets form next to
-    // CUBE x30 and ROLLUP q13): per-lang and per-source marginals plus the
-    // grand total, in one expand + partial agg.
-    "x47_grouping_sets" -> { (s, dir) =>
-      t(s, dir, "documents")
-        .groupingSets(Seq(Seq(col("lang")), Seq(col("source")), Seq.empty),
-          col("lang"), col("source"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("lang").asc_nulls_first, col("source").asc_nulls_first)
-    },
-
-    // x31 — full outer join of per-nation aggregates.
-    "x31_full_outer" -> { (s, dir) =>
-      val cc = t(s, dir, "customer").groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("c_cnt"))
-      val sc = t(s, dir, "supplier").groupBy(col("s_nationkey"))
-        .agg(count(lit(1)).as("s_cnt"))
-      cc.join(sc, col("c_nationkey") === col("s_nationkey"), "full_outer")
-        .select(coalesce(col("c_nationkey"), col("s_nationkey")).as("k"),
-          col("c_cnt"), col("s_cnt"))
-        .orderBy("k")
-    },
-
-    // x32 — EXCEPT set op (users who errored but never purchased).
-    "x32_except" -> { (s, dir) =>
-      val ev = t(s, dir, "events")
-      ev.filter(col("event_type") === "error").select(col("user_id"))
-        .except(ev.filter(col("event_type") === "purchase").select(col("user_id")))
-        .orderBy("user_id")
-    },
-
-    // x33 — approximate aggregates (HLL distinct, quantile sketch). Raw
-    // sketch values differ across engines, so the oracle-able contract is:
-    // exact values (cross-engine comparable) + in-query error-bound checks
-    // on the sketches emitted as 0/1 longs (the oracle asserts 1). The
-    // bound check stays in integer arithmetic (|apx−exact|·100 ≤ exact·5,
-    // i.e. 5% relative error; HLL rsd=0.02 and a 1000-bucket KLL-style
-    // percentile sketch sit comfortably inside it, deterministically —
-    // both sketches are hash-based, not randomized).
-    // Plan note: each distinct column gets its OWN aggregate — two
-    // count_distincts + a sort-based percentile in one agg makes Catalyst
-    // expand every input row once per distinct group (observed 8s vs 2s at
-    // sf0.1). Three independent 1-row aggs cross-joined cost three narrow
-    // scans instead. Within each distinct agg, `distinct().agg(count)`
-    // beats `agg(count_distinct)`: the map side combines down to the
-    // distinct values BEFORE the shuffle and no Expand is planned for the
-    // exact+HLL pair (measured 2.87s → re-measured after; HLL over the
-    // distinct set is the same estimate since HLL is duplicate-blind).
-    "x33_approx_stats" -> { (s, dir) =>
-      val li = t(s, dir, "lineitem")
-      val parts = li.select("l_partkey").distinct().agg(
-        count(lit(1)).as("exact_parts"),
-        approx_count_distinct(col("l_partkey"), 0.02).as("__ap"))
-      val supps = li.select("l_suppkey").distinct().agg(
-        count(lit(1)).as("exact_supps"),
-        approx_count_distinct(col("l_suppkey"), 0.02).as("__as"))
-      // Exact median via the distributed three-pass histogram kernel
-      // (StatOps, the x50 plan) instead of Spark's `percentile`: the
-      // built-in is a TypedImperativeAggregate that builds a value→count
-      // map per partition and merges ALL of them on one reducer — profiled
-      // at 1.86s of x33's 2.87s at sf0.1, and sized by distinct values
-      // (unbounded at 100 TB). The histogram kernel is map-side-combinable
-      // counts end-to-end. Rank-vs-interpolated median differs by ≤1 value
-      // gap — far inside the 5% sketch bound this flag checks.
-      val approxMed = li.agg(
-        percentile_approx(col("l_extendedprice"), lit(0.5), lit(1000))
-          .as("__am"))
-      val exactMed = StatOps.exactQuantiles(
-          li.select(col("l_extendedprice")).withColumn("g", lit(1)),
-          "g", "l_extendedprice", Seq(("__em", 1L, 2L)))
-        .select(col("__em"))
-      val med = approxMed.crossJoin(exactMed)
-      parts.crossJoin(supps).crossJoin(med)
-        .select(col("exact_parts"), col("exact_supps"),
-          (abs(col("__ap") - col("exact_parts")) * lit(100L) <=
-            col("exact_parts") * lit(5L)).cast("long").as("parts_ok"),
-          (abs(col("__as") - col("exact_supps")) * lit(100L) <=
-            col("exact_supps") * lit(5L)).cast("long").as("supps_ok"),
-          (abs(col("__am") - col("__em")) <= col("__em") * lit(0.05))
-            .cast("long").as("median_ok"))
-    },
-
-    // x40 — near-dup CLUSTERS: connected components over the Jaccard pair
-    // graph (pairs → clusters is what "keep one per duplicate group"
-    // actually needs; A~B, B~C must collapse to one component).
-    "x40_dedup_clusters" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val pairs = DedupOps.ngramJaccardPairs(d, "doc_id",
-        TextOps.wordShingles(col("text"), 3), 0.5)
-      DedupOps.connectedComponents(pairs, "i", "j")
-        .select(col("id").as("doc_id"), col("comp").as("component"))
-        .orderBy("doc_id")
-    },
-
-    // x41 — deterministic train/val/test split by id hash (80/10/10):
-    // reproducible across runs/engines/partitionings, stable under corpus
-    // growth — the hash-mod idiom every large corpus pipeline uses.
-    "x41_hash_split" -> { (s, dir) =>
-      SampleOps.hashSplit(t(s, dir, "documents"), "doc_id",
-          Seq(("train", 8000), ("val", 9000), ("test", 10000)))
-        .select(col("doc_id"), col("split"))
-        .orderBy("doc_id")
-    },
-
-    // x42 — semantic dedup (SemDeDup): cluster embeddings to 8 seed cells,
-    // drop the higher id of every within-cell cosine ≥ 0.45 pair.
-    "x42_semantic_dedup" -> { (s, dir) =>
-      VectorOps.semanticDedup(spread(t(s, dir, "embeddings")), "vec_id",
-          "embedding", numCentroids = 8, threshold = 0.45)
-        .orderBy("vec_id")
-    },
-
-    // x65 — SemDeDup at the scale sizing: centroid count grows with the
-    // corpus (k = max(8, n/32)) so expected cell size — and the per-cell
-    // pair term — stays constant across decades, where x42's pinned k=8
-    // is quadratic (the one scaling row r9 left unmeasured).
-    "x65_semantic_dedup_scaled" -> { (s, dir) =>
-      VectorOps.semanticDedupScaled(spread(t(s, dir, "embeddings")),
-          "vec_id", "embedding", perCell = 32, threshold = 0.45)
-        .orderBy("vec_id")
-    },
-
-    // x44 — token-budget shard packing (sequence packing stage 1): docs in
-    // id order fill contiguous ~10k-token shards; distributed prefix sum,
-    // never a global ordered window over the corpus.
-    "x44_shard_pack" -> { (s, dir) =>
-      val toks = TextOps.tokenCounts(spread(t(s, dir, "documents")))
-        .select(col("doc_id"), col("ws_tokens"))
-      SampleOps.packShards(toks, "doc_id", "ws_tokens", budget = 10000L,
-          bucketSize = 100L)
-        .select(col("doc_id"), col("shard"))
-        .orderBy("doc_id")
-    },
-
-    // x45 — corpus vocabulary: top-25 whitespace tokens by frequency
-    // (vocab building / BPE seeding): map-side-combined count + top-k.
-    "x45_vocab_topk" -> { (s, dir) =>
-      TextOps.vocabTopK(spread(t(s, dir, "documents")), 25)
-    },
-
-    // x46 — sliding-window chunking: 20-token chunks, 4-token overlap
-    // (context-window splitting before tokenization/packing).
-    "x46_chunk_windows" -> { (s, dir) =>
-      TextOps.chunkTokens(spread(t(s, dir, "documents")), "doc_id",
-          chunkSize = 20, overlap = 4)
-        .orderBy("doc_id", "chunk_idx")
-    },
-
-    // x43 — benchmark decontamination: distinct 3-gram overlap between each
-    // corpus doc and a (stand-in) benchmark set, docs 0-2. The benchmark
-    // shingle set broadcasts; the corpus never shuffles on the shingle key.
-    "x43_decontaminate" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val sh = TextOps.wordShingles(col("text"), 3)
-      DedupOps.contaminationHits(d.filter(col("doc_id") >= 3), "doc_id", sh,
-          d.filter(col("doc_id") < 3), sh)
-        .orderBy("doc_id")
-    },
-
-    // x48 — gap-based sessionization: 30-minute inactivity closes a user's
-    // session. Single key shuffle; lag + running sum share one window sort.
-    "x48_sessionize" -> { (s, dir) =>
-      TimeOps.sessionize(t(s, dir, "events"), "user_id", "ts", "event_id",
-          gapMicros = 1800L * 1000000L)
-        .select(col("user_id"), col("event_id"), col("session_idx"))
-        .orderBy("user_id", "event_id")
-    },
-
-    // x49 — pivot (priority × status order counts): Spark's pivot relational
-    // operator with explicit value list (no extra distinct-values scan);
-    // one expand + partial agg, same shape as CUBE.
-    "x49_pivot" -> { (s, dir) =>
-      t(s, dir, "orders").groupBy(col("o_orderpriority"))
-        .pivot("o_orderstatus", Seq("O", "F", "P"))
-        .agg(count(lit(1)))
-        .select(col("o_orderpriority"),
-          coalesce(col("O"), lit(0L)).as("cnt_o"),
-          coalesce(col("F"), lit(0L)).as("cnt_f"),
-          coalesce(col("P"), lit(0L)).as("cnt_p"))
-        .orderBy("o_orderpriority")
-    },
-
-    // x50 — EXACT per-group percentiles (p50/p90/p99 of extended price) via
-    // StatOps.exactQuantiles: two-pass histogram selection with position =
-    // ceil(p·n) in pure integer math — engine-portable, no interpolation,
-    // and scale-correct (a window/row_number plan would sort each group
-    // through one task; the histogram plan only sorts the target buckets).
-    "x50_percentile" -> { (s, dir) =>
-      StatOps.exactQuantiles(t(s, dir, "lineitem"), "l_returnflag",
-          "l_extendedprice",
-          Seq(("p50", 1L, 2L), ("p90", 9L, 10L), ("p99", 99L, 100L)))
-        .select(col("l_returnflag"),
-          floor(col("p50") * 100).cast(LongType).as("p50_c"),
-          floor(col("p90") * 100).cast(LongType).as("p90_c"),
-          floor(col("p99") * 100).cast(LongType).as("p99_c"))
-        .orderBy("l_returnflag")
-    },
-
-    // x55 — contiguous 0-based global row index in (n_chars desc, doc_id)
-    // order: distributed prefix sum over a range repartition — never a
-    // global row_number window.
-    "x55_row_index" -> { (s, dir) =>
-      SampleOps.globalRowIndex(t(s, dir, "documents"),
-          Seq(col("n_chars").desc, col("doc_id")))
-        .select(col("doc_id"), col("idx"))
-        .orderBy("doc_id")
-    },
-
-    // x56 — ANALYZE-style numeric column profile: one scan, one row per
-    // column (count / nulls / exact distinct / min / max).
-    "x56_profile" -> { (s, dir) =>
-      StatOps.profile(t(s, dir, "lineitem"),
-          Seq("l_discount", "l_extendedprice", "l_quantity"))
-        .orderBy("col_name")
-    },
-
-    // x57 — rare-token ratio: share of token occurrences with corpus
-    // document-frequency < 3 — the corpus-relative garbage/noise signal.
-    "x57_rare_tokens" -> { (s, dir) =>
-      TextOps.rareTokenRatio(spread(t(s, dir, "documents")), "doc_id", minDf = 3L)
-        .select("doc_id", "n_tokens", "n_rare", "rare_bp")
-        .orderBy("doc_id")
-    },
-
-    // x58 — temperature (α=1/2) domain rebalancing: per-source keep rates
-    // √(n_min/n_d) computed from the corpus, rows picked by id-hash.
-    "x58_temperature_sample" -> { (s, dir) =>
-      SampleOps.temperatureSample(t(s, dir, "documents"), "doc_id", "source")
-        .select("doc_id", "source")
-        .orderBy("doc_id")
-    },
-
-    // x59 — per-source power-of-two length histogram (exact integer
-    // buckets via base-2 digit count): the packing/batching size profile.
-    "x59_length_buckets" -> { (s, dir) =>
-      StatOps.lengthBuckets(t(s, dir, "documents"), "source", "n_chars")
-        .orderBy("source", "len_bucket")
-    },
-
-    // x60 — incremental dedup: new snapshot (doc_id >= 250) deduped against
-    // the existing corpus (doc_id < 250) by exact hash + 3-gram Jaccard.
-    "x60_incremental_dedup" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      DedupOps.incrementalDedup(
-          d.filter(col("doc_id") >= 250), d.filter(col("doc_id") < 250),
-          "doc_id", "text", TextOps.wordShingles(col("text"), 3), 0.5)
-        .orderBy("doc_id")
-    },
-
-    // x62 — multi-table LSH ANN (4 independent tables): the recall remedy
-    // the x61 gate prescribes for the single-table path, recall 1-(1-r)^4.
-    "x62_ann_lsh_multi" -> { (s, dir) =>
-      val e = spread(t(s, dir, "embeddings"))
-      VectorOps.lshTopKMultiTable(e.filter(col("vec_id") < 20), e, "vec_id",
-          "embedding", 5, dim = 64, numPlanes = 8, numTables = 4)
-        .orderBy("qid", "nid")
-    },
-
-    // x61 — ANN recall@5: BOTH approximate paths (LSH x26, IVF x35) graded
-    // against brute-force ground truth (x25), per query — the index-quality
-    // gate an embedding pipeline runs before trusting an approximate index.
-    // (On this fixture's near-random embeddings the single-table 8-bit LSH
-    // scores ~0 — which is the point of the gate; IVF nProbe=2 does better.)
-    "x61_ann_recall" -> { (s, dir) =>
-      // truth from the per-run memo: both method grades join against it,
-      // and x63 grades against the SAME set — one brute-force scoring
-      // job per run instead of one per gate per branch
-      val exact = annTruth(s, dir)
-      val lsh = VectorOps.annRecall(gateCandidates(s, dir, "x26_ann_lsh"),
-        exact, "qid", "nid").withColumn("method", lit("lsh"))
-      val ivf = VectorOps.annRecall(gateCandidates(s, dir, "x35_ann_ivf"),
-        exact, "qid", "nid").withColumn("method", lit("ivf"))
-      lsh.unionByName(ivf)
-        .select("method", "qid", "n_exact", "n_hit", "recall_bp")
-        .orderBy("method", "qid")
-    },
-
-    // x67 — multi-PROBE LSH (Lv et al. VLDB'07, single-bit perturbations):
-    // ONE hash table, 8 margin-ordered probe buckets per query — where
-    // x62's multi-TABLE remedy pays 4× index storage for 7% recall, this
-    // pays 8 probe lookups on the query side (20 rows, not the corpus)
-    // for 11% on the same fixture. The honest conclusion the gate
-    // documents: probing beats replication at equal scan, and BOTH are
-    // candidate-generation tools on near-isotropic data, not serving
-    // paths — the IVF family is the serving path.
-    "x67_ann_lsh_multiprobe" -> { (s, dir) =>
-      val e = spread(t(s, dir, "embeddings"))
-      VectorOps.lshTopKMultiProbe(e.filter(col("vec_id") < 20), e, "vec_id",
-          "embedding", 5, dim = 64, numPlanes = 8, numProbes = 8)
-        .orderBy("qid", "nid")
-    },
-
-    // x66 — scalar-quantized trained IVF (IVF-SQ8 with asymmetric
-    // distance): the x63 codebook's probe with the corpus side stored as
-    // int8 BINARY — the index that fits when 100 TB of float32 embeddings
-    // don't (4× smaller). Cell assignment at full precision (index-build
-    // time); candidate scoring is ADC (float query × dequantized int8
-    // corpus), qscale = 127/max|component| derived from one corpus
-    // aggregate the oracle recomputes in SQL — every scoring op mirrored,
-    // so the result is hash-exact despite quantization.
-    "x66_ann_quantized" -> { (s, dir) =>
-      val e = spread(t(s, dir, "embeddings"))
-      VectorOps.ivfTopKQuantizedWithCentroids(e.filter(col("vec_id") < 20),
-          e, "vec_id", "embedding", 5, trainedCodebook(s, dir).toSeq,
-          sqScaleOf(s, dir), nProbe = 4)
-        .orderBy("qid", "nid")
-    },
-
-    // x63 — the FULL index-selection gate: all six approximate paths
-    // (single-table LSH, 4-table LSH, multi-probe LSH, seed-IVF,
-    // k-means-trained IVF, int8-quantized trained IVF) graded against
-    // brute-force ground truth
-    // in one result — the table a user reads to pick an index. The trained
-    // path wires kmeansCentroidsExact (k=32, 2 Lloyd rounds) into the IVF
-    // probe at nProbe=4: ~87% mean recall@5 at HALF the scan fraction of
-    // x35's seed-IVF (12% vs 25% of the corpus) on the sf0.01 fixture; the
-    // quantized row (x66) shows what 4×-smaller storage costs in recall at
-    // the SAME scan fraction — see SURVEY §2.10 for the full sweep.
-    "x63_ann_recall_trained" -> { (s, dir) =>
-      val e = spread(t(s, dir, "embeddings"))
-      val exact = annTruth(s, dir)
-      def grade(df: DataFrame, m: String): DataFrame =
-        VectorOps.annRecall(df, exact, "qid", "nid")
-          .withColumn("method", lit(m))
-      // training runs its own driver-iterated jobs BEFORE the gate plan is
-      // built — the codebook is k×dim floats entering the probe as
-      // literals, trained ONCE per run (gateMemo) like a production
-      // pipeline trains once per corpus
-      val ivfTrained = memoRelation(s, dir, "cand|ivf_trained") {
-        VectorOps.ivfTopKWithCentroids(
-          e.filter(col("vec_id") < 20), e, "vec_id", "embedding", 5,
-          trainedCodebook(s, dir).toSeq, nProbe = 4)
-      }
-      grade(gateCandidates(s, dir, "x26_ann_lsh"), "lsh")
-        .unionByName(grade(gateCandidates(s, dir, "x62_ann_lsh_multi"), "lsh_multi"))
-        .unionByName(grade(gateCandidates(s, dir, "x67_ann_lsh_multiprobe"), "lsh_mp"))
-        .unionByName(grade(gateCandidates(s, dir, "x35_ann_ivf"), "ivf"))
-        .unionByName(grade(ivfTrained, "ivf_trained"))
-        .unionByName(grade(gateCandidates(s, dir, "x66_ann_quantized"), "ivf_q8"))
-        .select("method", "qid", "n_exact", "n_hit", "recall_bp")
-        .orderBy("method", "qid")
-    },
-
-    // x51 — per-doc salient terms (TF-IDF ranking in exact integer
-    // arithmetic): top-3 terms per document by tf·10000·N/df.
-    "x51_term_salience" -> { (s, dir) =>
-      TextOps.termSalience(spread(t(s, dir, "documents")), "doc_id", 3)
-        .orderBy("doc_id", "rank")
-    },
-
-    // x52 — per-domain cap ("at most 20 pages per source"), id-hash order:
-    // the domain-balancing primitive, deterministic under any partitioning.
-    "x52_domain_cap" -> { (s, dir) =>
-      SampleOps.topKPerKey(t(s, dir, "documents"), "source", "doc_id", 20)
-        .select(col("doc_id"), col("source"))
-        .orderBy("doc_id")
-    },
-
-    // x53 — corpus collocations: top-25 bigrams by document-level PMI
-    // (exact integer score, min document frequency 5).
-    "x53_bigram_pmi" -> { (s, dir) =>
-      TextOps.bigramPmi(spread(t(s, dir, "documents")), "doc_id",
-        k = 25, minDf = 5L)
-    },
-
-    // x54 — stratified sampling: per-language keep rates (en 80%, zh 20%,
-    // default 50%) by id hash — narrow, shuffle-free, stable as the corpus
-    // grows.
-    "x54_stratified_sample" -> { (s, dir) =>
-      SampleOps.stratifiedSample(t(s, dir, "documents"), "doc_id", "lang",
-          Map("en" -> 8000, "zh" -> 2000), defaultBp = 5000)
-        .select(col("doc_id"), col("lang"))
-        .orderBy("doc_id")
-    },
-
-    // x34 — corpus curation on the EXACT baseline: quality filter → exact
-    // dedup → near-dup pairs → TRANSITIVE closure (connected components) →
-    // keep the lowest id per duplicate group. The composition a
-    // training-data pipeline actually runs: pair-based dropping alone
-    // mishandles chains (A~B, B~C without A~C must still collapse to one
-    // survivor). `exact = true` is a deliberate opt-IN here — x64 runs
-    // the API's default (LSH-verify) path; this entry keeps the complete
-    // enumeration as the declared calibration baseline.
-    "x34_corpus_curation" -> { (s, dir) =>
-      val (exactKept, survivors) = curationSurvivors(spread(t(s, dir, "documents")))
-      curationResult(exactKept, DedupOps.nearDupPairs(survivors, "doc_id",
-        TextOps.wordShingles(col("text"), 3), 0.5, exact = true))
-    },
-
-    // x64 — FLAGSHIP corpus curation on the DEFAULT (scale) path: same
-    // quality→exact-dedup→near-dup→components pipeline as x34, with the
-    // near-dup stage as nearDupPairs' default LSH-candidate-then-verify.
-    // The sf1 decade measurement (SURVEY §6.3) showed x34's exact pair
-    // kernel going quadratic when shingle density is high (toy-vocab
-    // fixture: every trigram bucket grows with the corpus); this path's
-    // near-dup cost is |candidates|-proportional — what a 100 TB curation
-    // run actually executes. Differs from x34 only where LSH recall
-    // misses a true pair (P(miss) = (1-J⁴)⁴: 1.9% at J=0.9, ~0 at
-    // J=0.99); the oracle mirrors the SAME banding so the gate is exact
-    // regardless.
-    "x64_corpus_curation_lsh" -> { (s, dir) =>
-      val (exactKept, survivors) = curationSurvivors(spread(t(s, dir, "documents")))
-      curationResult(exactKept, DedupOps.nearDupPairs(survivors, "doc_id",
-        TextOps.wordShingles(col("text"), 3), 0.5))
-    },
-
-    // x68 — substring-level exact dedup (Lee et al. 2021): maximal spans
-    // of ≥2-occurrence 5-token shingles, merged gaps-and-islands per doc.
-    // The granularity doc-level dedup cannot see — boilerplate repeating
-    // INSIDE otherwise-unique documents.
-    "x68_span_dedup" -> { (s, dir) =>
-      DedupOps.duplicatedSpans(spread(t(s, dir, "documents")), "doc_id",
-          "text", k = 5, minCount = 2)
-        .orderBy("doc_id", "span_start")
-    },
-
-    // x69 — model-based quality scoring (the CCNet-style classifier
-    // filter): distant labels from the x17 stopword heuristic,
-    // Laplace-smoothed integral token posteriors over document frequency,
-    // doc score = integral mean over its distinct tokens. Integer
-    // arithmetic end-to-end (the x53 convention) → hash-exact oracle.
-    "x69_quality_classifier" -> { (s, dir) =>
-      TextOps.qualityClassifierScore(spread(t(s, dir, "documents")),
-          "doc_id", labelBp = 1500)
-        .orderBy("doc_id")
-    },
-
-    // x70 — distributed BPE tokenizer training (Sennrich et al. 2016): the
-    // corpus collapses to a word-frequency table in ONE shuffle; all 8
-    // merge iterations run over the vocab. Output = the learned merge
-    // table, integer-exact (long pair counts, lexicographic tie-break) so
-    // the unrolled-CTE oracle hash-matches.
-    "x70_bpe_train" -> { (s, dir) =>
-      import s.implicits._
-      bpeMergesOf(s, dir)
-        .map(m => (m.rank.toLong, m.left, m.right, m.pairCount))
-        .toDF("merge_rank", "left_sym", "right_sym", "pair_count")
-        .orderBy("merge_rank")
-    },
-
-    // x71 — tokenize the corpus with the trained merges: folds run over
-    // the DISTINCT words only; each occurrence joins its word's symbol
-    // count (broadcast — a Zipf vocab is always ≪ its corpus).
-    "x71_bpe_tokenize" -> { (s, dir) =>
-      BpeOps.tokenize(spread(t(s, dir, "documents")), "doc_id",
-          bpeMergesOf(s, dir))
-        .orderBy("doc_id")
-    },
-
-    // x72 — Bloom-filter incremental-dedup probe: src0 docs probe a bloom
-    // built over every OTHER source (m=2048 deliberately undersized so
-    // the fixture exhibits real false positives next to exact_dup=0).
-    // exact_dup alongside proves the no-false-negative contract in the
-    // gated output itself: no row may have exact_dup=1, bloom_hit=0.
-    "x72_bloom_dedup" -> { (s, dir) =>
-      val docs = spread(t(s, dir, "documents"))
-      val ref = docs.filter(col("source") =!= "src0").select("text")
-      val probe = docs.filter(col("source") === "src0").select("doc_id", "text")
-      val bloom = StatOps.bloomSketch(ref, "text", mBits = 2048, kHashes = 4)
-      val hits = StatOps.bloomProbe(probe, "doc_id", "text", bloom,
-        mBits = 2048, kHashes = 4)
-      val exact = probe.join(ref.distinct(), Seq("text"), "left_semi")
-        .select(col("doc_id"), lit(1L).as("exact_dup"))
-      hits.join(exact, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("bloom_hit"),
-          coalesce(col("exact_dup"), lit(0L)).as("exact_dup"))
-        .orderBy("doc_id")
-    },
-
-    // x73 — x60's incremental dedup with the Bloom pre-filter engaged: the
-    // reference corpus collapses to a bounded sketch, definite misses skip
-    // the exact anti-join entirely. Output is row-identical to x60 by
-    // construction (no false negatives), so the oracle asserts exactly
-    // that — same SQL as x60.
-    "x73_bloom_incremental" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      DedupOps.incrementalDedup(
-          d.filter(col("doc_id") >= 250), d.filter(col("doc_id") < 250),
-          "doc_id", "text", TextOps.wordShingles(col("text"), 3), 0.5,
-          bloom = true, bloomBits = 1 << 14, bloomHashes = 4)
-        .orderBy("doc_id")
-    },
-
-    // x74 — span REMOVAL (Lee et al. 2021 second half): x68 finds the
-    // duplicated 5-gram spans; this emits the corpus rewritten with every
-    // non-first occurrence excised. Only touched docs emitted (the
-    // untouched corpus would be pure fixture echo).
-    "x74_span_removal" -> { (s, dir) =>
-      DedupOps.removeSpans(spread(t(s, dir, "documents")), "doc_id", "text",
-          k = 5, minCount = 2)
-        .filter(col("n_removed") > 0)
-        .select("doc_id", "n_removed", "text_clean")
-        .orderBy("doc_id")
-    },
-
-    // x75 — forward as-of join (x27's mirror, previously spec-only): for
-    // each purchase, the user's EARLIEST click at-or-after it — the "next
-    // event after" direction (next fill after an order). Same union+window
-    // plan, first(ignoreNulls) over the FOLLOWING frame.
-    "x75_asof_forward" -> { (s, dir) =>
-      val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val clicks = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("click_id"))
-        .withColumn("click_ts", col("ts"))
-      JoinOps.asOfJoinForward(purchases, clicks, "user_id", "ts",
-          Seq("click_id", "click_ts"))
-        .select(col("event_id"), col("user_id"), col("click_id"),
-          (graft.ops.TsCompat.micros(col("click_ts")) -
-            graft.ops.TsCompat.micros(col("ts"))).as("wait_us"))
-        .orderBy("event_id")
-    },
-
-    // x76 — cross-source MinHash similarity matrix: estimated Jaccard
-    // between every source pair's 3-gram shingle sets — the corpus-overlap
-    // analytics a mixture-weighting stage reads ("how much of src3 is src1
-    // again?"). Group signatures are bounded metadata (sources × 32).
-    "x76_source_similarity" -> { (s, dir) =>
-      DedupOps.minhashGroupSimilarity(spread(t(s, dir, "documents")),
-          "source", TextOps.wordShingles(col("text"), 3), numHashes = 32)
-        .orderBy("key_a", "key_b")
-    },
-
-    // x77 — per-doc seen-before novelty: of each doc's distinct 3-gram
-    // shingles, the fraction first appearing in a LOWER-id doc — the
-    // "how derivative is this document" signal, integer basis points.
-    "x77_novelty" -> { (s, dir) =>
-      DedupOps.seenBeforeNovelty(spread(t(s, dir, "documents")), "doc_id",
-          TextOps.wordShingles(col("text"), 3))
-        .orderBy("doc_id")
-    },
-
-    // x78 — OHLC candles: per (user, day) the first/last/max/min value and
-    // event count — the canonical time-series downsample of the reference
-    // domain (price candles over trades). One map-side-combinable shuffle.
-    "x78_ohlc_resample" -> { (s, dir) =>
-      TimeOps.ohlcResample(t(s, dir, "events"), "user_id", "ts", "event_id",
-          "value", 86400L * 1000000)
-        .orderBy("user_id", "bucket")
-    },
-
-    // x79 — trailing 1-hour RANGE-frame aggregate per event: event-time
-    // windows (peers at equal ts see each other; event-time gaps shrink
-    // the frame) vs x28's ROWS running total.
-    "x79_rolling_time_window" -> { (s, dir) =>
-      TimeOps.rollingTimeWindow(t(s, dir, "events"), "user_id", "ts",
-          "event_id", "value", 3600L * 1000000)
-        .orderBy("event_id")
-    },
-
-    // x80 — asymmetric containment pairs: |A∩B|/|A| and /|B| — the
-    // sub-duplication metric Jaccard structurally misses (a short doc
-    // fully embedded in a long one). `exact = true` is the deliberate
-    // opt-IN (the x21/x34 pattern): this entry is the complete
-    // enumeration kept as the calibration baseline; x82 runs the API's
-    // default LSH-candidate-then-verify path.
-    "x80_containment" -> { (s, dir) =>
-      DedupOps.containmentPairs(spread(t(s, dir, "documents")), "doc_id",
-          TextOps.wordShingles(col("text"), 3), 0.8, exact = true)
-        .orderBy("i", "j")
-    },
-
-    // x82 — containment on the DEFAULT (scale) path: MinHash-LSH banding
-    // (r14: the one-permutation signatures, like every other banding
-    // consumer) proposes candidate pairs, exact intersection counts
-    // verify on those pairs only — work ∝ |candidates| instead of
-    // Θ(Σ bucket²). The oracle mirrors the SAME banding (the x124
-    // pattern), so the gate is exact regardless of banding recall;
-    // differs from x80 only where banding misses a pair
-    // (J = tρ/(1+ρ−tρ) for containment t at size ratio ρ — see
-    // DedupOps.containmentPairs for the honest math).
-    "x82_containment_lsh" -> { (s, dir) =>
-      DedupOps.containmentPairs(spread(t(s, dir, "documents")), "doc_id",
-          TextOps.wordShingles(col("text"), 3), 0.8, oph = true)
-        .orderBy("i", "j")
-    },
-
-    // x81 — mixture sampling to target source weights (assemble-the-mix):
-    // largest corpus matching src0:src1:src2 = 5:3:2, deterministic
-    // id-hash acceptance; unweighted sources dropped.
-    "x81_mixture_sample" -> { (s, dir) =>
-      SampleOps.mixtureSample(t(s, dir, "documents"), "doc_id", "source",
-          Seq("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2))
-        .select("doc_id", "source")
-        .orderBy("doc_id")
-    },
-
-    // x83 — bigram-LM perplexity scoring (the CCNet-style model-based
-    // quality tier): train a Laplace-smoothed bigram LM on the corpus,
-    // score every doc by integral mean surprisal. Per-bigram surprisal is
-    // quantized to an integer BEFORE per-doc summation, so the result is
-    // partition-order-proof and the oracle hash-exact. The trained model
-    // is localCheckpointed: scoring references it three times (bigram
-    // join, prefix table, vocab row) and a production run loads it from
-    // ModelIO instead of retraining.
-    "x83_lm_perplexity" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val model = LmOps.trainBigramLm(d).localCheckpoint()
-      LmOps.scoreBigramNll(d, model).orderBy("doc_id")
-    },
-
-    // x84 — the canonical KEEP/DROP decision, the artifact a dedup stage
-    // actually ships: LSH-verified near-dup pairs → connected components
-    // → per cluster keep the highest-quality member (stopword-ratio
-    // signal, doc_id tie-break), everything else dropped with its
-    // canonical id attached. Singleton docs keep themselves. One row per
-    // input doc — the decision table a 100 TB pipeline writes back next
-    // to the corpus.
-    "x84_canonical_keep" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      DedupOps.canonicalKeep(d, "doc_id", TextOps.stopRatioBp(col("text")),
-          DedupOps.nearDupPairs(d, "doc_id",
-            TextOps.wordShingles(col("text"), 3), 0.5, oph = true))
-        .orderBy("doc_id")
-    },
-
-    // x85 — cross-source duplication matrix: which sources overlap, from
-    // the same LSH-verified near-dup pairs. One bounded sources² report
-    // row set — the "which crawl dumps re-crawl each other" audit that
-    // decides what to ingest at all. src_a <= src_b folds the symmetric
-    // pair; the diagonal is intra-source duplication.
-    "x85_source_overlap" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val pairs = DedupOps.nearDupPairs(d, "doc_id",
-        TextOps.wordShingles(col("text"), 3), 0.5, oph = true)
-      val src = d.select(col("doc_id"), col("source"))
-      val cnt = src.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
-      pairs
-        .join(src.select(col("doc_id").as("i"), col("source").as("si")), Seq("i"))
-        .join(src.select(col("doc_id").as("j"), col("source").as("sj")), Seq("j"))
-        .select(least(col("si"), col("sj")).as("src_a"),
-          greatest(col("si"), col("sj")).as("src_b"))
-        .groupBy(col("src_a"), col("src_b"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .join(cnt.select(col("source").as("src_a"), col("n_docs").as("n_docs_a")),
-          Seq("src_a"))
-        .join(cnt.select(col("source").as("src_b"), col("n_docs").as("n_docs_b")),
-          Seq("src_b"))
-        .select("src_a", "src_b", "n_pairs", "n_docs_a", "n_docs_b")
-        .orderBy("src_a", "src_b")
-    },
-
-    // x86 — DSIR selection (Xie et al. 2023): the 100 raw docs whose
-    // hashed-n-gram profile the English slice up-weights most. The
-    // "make the crawl look like the target corpus" curation stage;
-    // target = lang='en' stands in for the high-quality reference set.
-    "x86_dsir_selection" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      DsirOps.selectTopN(d, d.filter(col("lang") === "en"), 100)
-    },
-
-    // x87 — IVF-PQ: the product-quantized serving index (m=4 one-byte
-    // codes per vector, 64× smaller than float32) probing the same
-    // seed-centroid cells as x35; completes the serving ladder
-    // float (x35) → int8 SQ (x66) → PQ codes (x87).
-    "x87_ann_ivf_pq" -> { (s, dir) =>
-      val e = spread(t(s, dir, "embeddings"))
-      VectorOps.ivfTopKPq(e.filter(col("vec_id") < 20), e, "vec_id",
-          "embedding", 5, pqCodebooksOf(s, dir), numCentroids = 8, nProbe = 2)
-        .orderBy("qid", "nid")
-    },
-
-    // x88 — the Gopher rule battery as a decision table: every signal,
-    // one flag per rule, and the conjunction — the filter artifact a
-    // pipeline writes next to the corpus (Rae et al. 2021 §A.1.1).
-    "x88_gopher_filter" -> { (s, dir) =>
-      TextOps.gopherFilter(spread(t(s, dir, "documents")))
-        .select("doc_id", "n_words", "mean_word_len_centi", "dup_word_bp",
-          "alpha_word_bp", "sym_bp", "stop_hits", "keep_n_words",
-          "keep_word_len", "keep_dup", "keep_alpha", "keep_sym",
-          "keep_stop", "keep")
-        .orderBy("doc_id")
-    },
-
-    // x89 — GPT-style concat-and-chunk packing: whitespace token counts,
-    // then the fixed-128-token sequence spans — the loader index for
-    // "materialize training sequence N" without re-scanning the corpus.
-    "x89_seq_packing" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-        .select(col("doc_id"), size(split(col("text"), " "))
-          .cast(org.apache.spark.sql.types.LongType).as("n_toks_doc"))
-      SampleOps.packSequences(d, "doc_id", "n_toks_doc", seqLen = 128)
-        .select("seq_id", "doc_id", "seq_off", "doc_off", "n_toks")
-        .orderBy("seq_id", "doc_id")
-    },
-
-    // x90 — BM25 retrieval: the 5 lowest-id docs as seed queries, top-5
-    // corpus matches each — the "find more like these" curation primitive
-    // over the inline-built inverted index.
-    "x90_bm25_retrieval" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      TextOps.bm25TopK(d.filter(col("doc_id") < 5), d, 5)
-        .orderBy("qid", "did")
-    },
-
-    // x91 — the PQ recall gate: x87's memoized top-5 graded against the
-    // x25 brute-force truth (the annTruth pattern) — what the 64×
-    // compression costs, measured, next to the x61/x63 method grades.
-    "x91_ann_recall_pq" -> { (s, dir) =>
-      VectorOps.annRecall(gateCandidates(s, dir, "x87_ann_ivf_pq"),
-          annTruth(s, dir), "qid", "nid")
-        .withColumn("method", lit("ivf_pq"))
-        .select("method", "qid", "n_exact", "n_hit", "recall_bp")
-        .orderBy("method", "qid")
-    },
-
-    // x92 — the per-source dataset card: counts, token stats, Gopher pass
-    // rate, intra-source exact duplication, modal language — the audit
-    // table a corpus release ships next to the data.
-    "x92_source_report" -> { (s, dir) =>
-      StatOps.sourceReport(spread(t(s, dir, "documents")))
-        .orderBy("source")
-    },
-
-    // x93 — normalization-aware dup audit: distinct counts of the raw
-    // text vs its canonical form (lower/collapse-ws/trim, then the
-    // punct-stripped variant) — the "how much duplication does
-    // normalization reveal" number that decides whether a corpus deduos
-    // raw or canonical.
-    "x93_normalized_dup_stats" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      d.agg(count(lit(1)).as("n_docs"),
-        count_distinct(col("text")).as("n_distinct_raw"),
-        count_distinct(TextOps.normalizeText(col("text")))
-          .as("n_distinct_norm"),
-        count_distinct(TextOps.normalizeText(col("text"), stripPunct = true))
-          .as("n_distinct_norm_nopunct"))
-    },
-
-    // x94 — the END-TO-END training manifest, the round's capstone
-    // composite: quality gate (the x34 curation filter) → canonical-text
-    // exact dedup (x93's normalizer feeding x20's keep-min) → temperature
-    // (α=1/2) source rebalance (x58) → fixed-128-token sequence packing
-    // (x89). One lazy plan from raw documents to the loader manifest a
-    // training run reads — every stage narrow or combiner-condensed, the
-    // corpus never shuffled pairwise.
-    "x94_training_manifest" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val (_, _, bal) = manifestStages(d)
-      val toks = bal.select(col("doc_id"),
-        size(split(col("text"), " ")).cast(LongType).as("n_toks_doc"))
-      SampleOps.packSequences(toks, "doc_id", "n_toks_doc", seqLen = 128)
-        .select("seq_id", "doc_id", "seq_off", "doc_off", "n_toks")
-        .orderBy("seq_id", "doc_id")
-    },
-
-    // x95 — prototypicality pruning (Sorscher 2022): 8 seed cells, keep
-    // the hardest 50% of each cell (ascending cosine-to-centroid rank).
-    "x95_prototype_pruning" -> { (s, dir) =>
-      VectorOps.prototypePrune(spread(t(s, dir, "embeddings")), "vec_id",
-          "embedding", numCentroids = 8, keepBp = 5000)
-        .orderBy("vec_id")
-    },
-
-    // x96 — CCNet head/middle/tail: per-language perplexity terciles
-    // under the x83 bigram model (head = most fluent third per language).
-    "x96_ccnet_buckets" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val model = LmOps.trainBigramLm(d).localCheckpoint()
-      LmOps.ccnetBuckets(d, model).orderBy("doc_id")
-    },
-
-    // x97 — Gopher's full n-gram repetition family: per doc and
-    // n ∈ [2,10], top-gram and duplicated-gram character coverage.
-    "x97_topgram_coverage" -> { (s, dir) =>
-      TextOps.topNgramCoverage(spread(t(s, dir, "documents")))
-        .orderBy("doc_id", "n")
-    },
-
-    // x98 — epoch-0 training-order shuffle into 8 shards: the
-    // deterministic permutation + round-robin layout a loader replays.
-    "x98_shuffle_order" -> { (s, dir) =>
-      SampleOps.shuffleOrder(spread(t(s, dir, "documents")), "doc_id",
-          numShards = 8, epoch = 0L)
-        .select("doc_id", "global_pos", "shard", "shard_pos")
-        .orderBy("doc_id")
-    },
-
-    // x99 — hard-negative mining: for the 20 lowest-id query vectors, the
-    // 5 most similar corpus vectors with a different label (the x25 scan
-    // shape with the label inequality fused into the join).
-    "x99_hard_negatives" -> { (s, dir) =>
-      val e = spread(t(s, dir, "embeddings"))
-      VectorOps.hardNegatives(e.filter(col("vec_id") < 20), e, "vec_id",
-          "embedding", "label", 5)
-        .orderBy("qid", "nid")
-    },
-
-    // x100 — kNN label-noise audit: majority label of the 5 nearest
-    // same-cell neighbors vs own label, corpus-proportional cells.
-    "x100_label_noise" -> { (s, dir) =>
-      VectorOps.knnLabelNoise(spread(t(s, dir, "embeddings")), "vec_id",
-          "embedding", "label", k = 5, perCell = 32)
-        .orderBy("vec_id")
-    },
-
-    // x101 — epoch up-sampling: assemble a 12k-doc mix at src0:src2:src3
-    // = 50:20:1 percent shares, repeating scarce sources up to 5 epochs
-    // (the LLaMA books/wiki recipe). At sf0.01 src0/src2 hit the epoch
-    // cap while src3 lands between (4 full epochs + an 8000 bp partial);
-    // at sf0.1 src3 degrades to plain down-sampling — both directions of
-    // mix assembly and all three arms through one operator.
-    "x101_epoch_upsample" -> { (s, dir) =>
-      SampleOps.epochUpsample(t(s, dir, "documents"), "doc_id", "source",
-          Seq("src0" -> 0.5, "src2" -> 0.2, "src3" -> 0.01),
-          totalDocs = 12000L, maxEpochs = 5)
-        .select("doc_id", "source", "epoch")
-        .orderBy("doc_id", "epoch")
-    },
-
-    // x102 — the pipeline funnel: doc/token counts after each stage of
-    // the x94 manifest pipeline (raw → quality → canonical dedup →
-    // temperature balance) — the observability table that makes a mix
-    // bug visible BEFORE a training run pays for it. Four bounded
-    // aggregates; deliberately LAZY (no localCheckpoint): measured at
-    // sf0.1/sf1/sf2, checkpointing the shared quality/survivor stages
-    // was a wash (−15%/+4%/+10%) — counting is so much cheaper than the
-    // stages themselves that materialization costs more than the branch
-    // re-execution it saves (contrast x34/x64, where the reused frame
-    // feeds expensive SHUFFLING consumers, not count(*) branches).
-    "x102_funnel_report" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val (quality, surv, bal) = manifestStages(d)
-      StatOps.funnelReport(
-          Seq("raw" -> d, "quality" -> quality, "dedup" -> surv,
-            "balanced" -> bal),
-          size(split(col("text"), " ")))
-        .orderBy("stage_idx")
-    },
-
-    // x103 — feature-hashed bag-of-words vectors (sparse form): the
-    // text→vector bridge with no vocabulary, model, or embedding
-    // service. Restricted to the first 500 docs so the fixture output
-    // stays diff-sized; the plan is corpus-shaped (one explode + one
-    // doc-scoped combinable agg) regardless of the cut.
-    "x103_hashed_bow" -> { (s, dir) =>
-      TextOps.hashedBow(
-          spread(t(s, dir, "documents")).filter(col("doc_id") < 500),
-          "doc_id", "text", dim = 64)
-        .orderBy("doc_id", "bucket")
-    },
-
-    // x104 — sparse cosine top-5 over the hashed-BoW vectors: text-only
-    // near-neighbor retrieval through the inverted-index join (pairs cost
-    // only their co-occurring buckets). The 20 lowest-id docs probe the
-    // full corpus — the x25 shape on the sparse representation.
-    "x104_sparse_cosine" -> { (s, dir) =>
-      val sv = TextOps.hashedBow(spread(t(s, dir, "documents")),
-        "doc_id", "text", dim = 64)
-      VectorOps.sparseCosineTopK(sv.filter(col("doc_id") < 20), sv,
-          "doc_id", "bucket", "val", k = 5)
-        .orderBy("qid", "nid")
-    },
-
-    // x105 — the x102 funnel broken out BY SOURCE: where mix bugs hide —
-    // a global funnel that drops 40% looks fine until the by-source view
-    // shows one domain losing 99%. Bounded stages × sources metadata.
-    "x105_funnel_by_source" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val (quality, surv, bal) = manifestStages(d)
-      StatOps.funnelReportBy(
-          Seq("raw" -> d, "quality" -> quality, "dedup" -> surv,
-            "balanced" -> bal),
-          size(split(col("text"), " ")), "source")
-        .orderBy("stage_idx", "source")
-    },
-
-    // x106 — the complete mix-assembly capstone: x101's epoched replica
-    // stream laid out for the loader — global position by the per-row
-    // (epoch, id) hash (a doc's replicas scatter away from each other),
-    // round-robin shards with exact ±1 balance. epochUpsample →
-    // replayLayout is "assemble the mix, lay it out", end to end.
-    "x106_epoch_replay" -> { (s, dir) =>
-      SampleOps.replayLayout(
-          SampleOps.epochUpsample(t(s, dir, "documents"), "doc_id",
-            "source", Seq("src0" -> 0.5, "src2" -> 0.2, "src3" -> 0.01),
-            totalDocs = 12000L, maxEpochs = 5),
-          "doc_id", "epoch", numShards = 8)
-        .select("doc_id", "epoch", "global_pos", "shard", "shard_pos")
-        .orderBy("doc_id", "epoch")
-    },
-
-    // x107 — filter-config decision diff: the strict (Gopher-default)
-    // vs lax (minWords 20, 1 stopword) keep decisions RE-DECIDED from
-    // one signal table — no second text scan — aggregated to the 2×2
-    // flip matrix a config review reads ("how many docs does loosening
-    // admit, and how many tokens ride on them").
-    "x107_filter_config_diff" -> { (s, dir) =>
-      val g = TextOps.gopherFilter(spread(t(s, dir, "documents")))
-      g.withColumn("keep_lax",
-          col("n_words") >= 20L && col("n_words") <= 100000L &&
-          col("keep_word_len") && col("keep_dup") && col("keep_alpha") &&
-          col("keep_sym") && col("stop_hits") >= 1L)
-        .groupBy(col("keep").as("keep_strict"), col("keep_lax"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_words")).as("n_words_total"))
-        .orderBy("keep_strict", "keep_lax")
-    },
-
-    // x108 — mixture sampling with the budget in TOKENS, the unit recipes
-    // actually specify: feasible T = min_d(tokens_d/w_d), per-domain doc
-    // acceptance rate = w_d·T/tokens_d bp. Corpus never shuffles.
-    "x108_token_mixture" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-        .withColumn("n_tokens", size(split(col("text"), " ")).cast(LongType))
-      SampleOps.tokenBudgetMixture(d, "doc_id", "source", "n_tokens",
-          Seq("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2))
-        .select("doc_id", "source", "n_tokens")
-        .orderBy("doc_id")
-    },
-
-    // x109 — train/eval split-leakage audit: per split, docs with an
-    // LSH-verified near-dup in train — the eval-contamination number a
-    // benchmark ships with. Train's own row = intra-train duplication.
-    "x109_split_leakage" -> { (s, dir) =>
-      val d = SampleOps.hashSplit(spread(t(s, dir, "documents")), "doc_id",
-        Seq("train" -> 8000, "eval" -> 10000))
-      DedupOps.splitLeakage(d, "doc_id",
-          TextOps.wordShingles(col("text"), 3), 0.5, "split", "train",
-          oph = true)
-        .orderBy("split")
-    },
-
-    // x110 — winnowing fingerprints (Schleimer 2003): window-min selection
-    // over positional 3-gram hashes, w=4 — every ≥6-token overlap still
-    // shares a fingerprint at ~40% of the full shingle table's size.
-    "x110_winnow_fingerprints" -> { (s, dir) =>
-      TextOps.winnowFingerprints(spread(t(s, dir, "documents")), "doc_id",
-          k = 3, w = 4)
-        .orderBy("doc_id", "pos")
-    },
-
-    // x111 — duplicate-cluster size histogram: the dedup-stage audit
-    // ("are dups pairs or one 10k-doc boilerplate blob?") — LSH-verified
-    // pairs → components → bounded size histogram.
-    "x111_cluster_histogram" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val pairs = DedupOps.nearDupPairs(d, "doc_id",
-        TextOps.wordShingles(col("text"), 3), 0.5, oph = true)
-      DedupOps.connectedComponents(pairs)
-        .groupBy(col("comp")).agg(count(lit(1)).as("sz"))
-        .groupBy(col("sz").as("cluster_size"))
-        .agg(count(lit(1)).as("n_clusters"))
-        .orderBy("cluster_size")
-    },
-
-    // x112 — truncated-dimension recall (the Matryoshka/MRL question):
-    // what does serving on the first 16 of 64 dims lose? Brute top-5 on
-    // the truncated vectors graded against the full-dim truth.
-    "x112_truncated_recall" -> { (s, dir) =>
-      val e = spread(t(s, dir, "embeddings"))
-      val tr = e.withColumn("embedding", slice(col("embedding"), 1, 16))
-      val approx = VectorOps.bruteForceTopK(tr.filter(col("vec_id") < 20),
-        tr, "vec_id", "embedding", 5)
-      // full-dim ground truth = the x25 rows the annTruth memo already
-      // holds — re-deriving it here was a second brute-force corpus scan
-      // per run (the exact sub-job class the gateMemo exists to stop)
-      VectorOps.annRecall(approx, annTruth(s, dir), "qid", "nid")
-        .orderBy("qid")
-    },
-
-    // x113 — overlap candidates from the x110 winnow index: docs sharing
-    // ≥2 selected fingerprints — the MOSS-style candidate generator at
-    // ~40% of the shingle table's bill. maxBucket 200 is MOSS's
-    // "too-common fingerprint" drop — the declared scale knob.
-    "x113_winnow_overlap" -> { (s, dir) =>
-      DedupOps.winnowOverlapPairs(spread(t(s, dir, "documents")), "doc_id",
-          k = 3, w = 4, minShared = 2, maxBucket = 200)
-        .orderBy("i", "j")
-    },
-
-    // x114 — corpus snapshot diff: per-id added/removed/changed/unchanged
-    // between a dump and its refresh — the work-list the incremental ops
-    // (x60/x73) run from. The refresh is simulated deterministically.
-    "x114_snapshot_diff" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents")).select("doc_id", "text")
-      StatOps.snapshotDiff(d, refreshSnapshot(d), "doc_id", "text")
-        .orderBy("doc_id")
-    },
-
-    // x115 — source-mix drift between the same two snapshots: per source,
-    // counts + corpus shares + delta — the ingest monitor that catches a
-    // domain quietly halving before training bakes it in.
-    "x115_mix_drift" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val nw = d.filter(!(col("source") === "src0" && col("doc_id") % 2 === 0))
-      StatOps.mixDrift(d, nw, "source").orderBy("source")
-    },
-
-    // x116 — phrase-blocklist decision table (the C4 bad-words stage):
-    // whole-word contiguous-phrase matching, distinct-hit counts, keep
-    // flag. Blocklist broadcasts; the corpus never shuffles its text.
-    "x116_blocklist" -> { (s, dir) =>
-      TextOps.blocklistHits(spread(t(s, dir, "documents")), "doc_id",
-          Seq("slow", "spark join", "big scan table"))
-        .orderBy("doc_id")
-    },
-
-    // x117 — per-source percentile selection (FineWeb-style "keep the
-    // best 30% of each source"): a global threshold would let one
-    // well-scoring source crowd out the rest.
-    "x117_percentile_select" -> { (s, dir) =>
-      val q = TextOps.qualityScore(spread(t(s, dir, "documents")))
-        .select(col("doc_id"), col("source"), col("alpha_ratio_bp"))
-      SampleOps.percentileSelect(q, "doc_id", "source", "alpha_ratio_bp",
-          3000L)
-        .orderBy("doc_id")
-    },
-
-    // x118 — epoch token accounting: per (source, epoch) doc/token totals
-    // of the x101 replica stream — "what will the run actually see",
-    // priced in tokens, before any GPU burns.
-    "x118_epoch_tokens" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-        .withColumn("n_tok", size(split(col("text"), " ")).cast(LongType))
-      SampleOps.epochUpsample(d, "doc_id", "source",
-          Seq("src0" -> 0.5, "src2" -> 0.2, "src3" -> 0.01),
-          totalDocs = 12000L, maxEpochs = 5)
-        .groupBy(col("source"), col("epoch"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
-        .orderBy("source", "epoch")
-    },
-
-    // x119 — embedding-space drift per label between snapshots: cosine of
-    // integer-quantized centroid SUMS (scale invariance removes the
-    // mean's division) — content drift that x115's count drift can't see.
-    "x119_centroid_drift" -> { (s, dir) =>
-      val e = spread(t(s, dir, "embeddings"))
-      val nw = e.filter(col("vec_id") % 3 =!= 0)
-      VectorOps.centroidDrift(e, nw, "embedding", "label")
-        .select(col("label").cast(LongType).as("label"), col("n_old"),
-          col("n_new"), col("cos_bp"))
-        .orderBy("label")
-    },
-
-    // x120 — PII compliance report per source: doc counts, any-hit docs,
-    // per-category totals, rate bp — the release-gate table a corpus
-    // ships next to its dataset card. PII planted deterministically.
-    "x120_pii_report" -> { (s, dir) =>
-      val planted = spread(t(s, dir, "documents")).withColumn("text",
-        when(col("doc_id") % 10 < 3,
-          concat(lit("u"), col("doc_id").cast("string"), lit("@ex.com "),
-            col("text")))
-        .when(col("doc_id") % 10 === 5,
-          concat(lit("host 10.0.0."), (col("doc_id") % 200).cast("string"),
-            lit(" "), col("text")))
-        .otherwise(col("text")))
-      TextOps.redactPii(planted)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("n_email") + col("n_ip") + col("n_phone") > 0, 1L)
-            .otherwise(0L)).as("n_pii_docs"),
-          sum(col("n_email")).as("n_email"),
-          sum(col("n_ip")).as("n_ip"),
-          sum(col("n_phone")).as("n_phone"))
-        .withColumn("pii_rate_bp", TextOps.bp(col("n_pii_docs"), col("n_docs")))
-        .orderBy("source")
-    },
-
-    // x121 — per-doc token Shannon entropy (integral micro-nats,
-    // quantize-then-sum): the gibberish/boilerplate signal at both
-    // extremes of the scale.
-    "x121_token_entropy" -> { (s, dir) =>
-      TextOps.tokenEntropy(spread(t(s, dir, "documents")), "doc_id")
-        .orderBy("doc_id")
-    },
-
-    // x122 — lexical diversity per source: type/token/hapax counts, TTR
-    // and hapax-ratio bp — the vocabulary-richness row of a dataset card.
-    "x122_lexical_diversity" -> { (s, dir) =>
-      val tf = spread(t(s, dir, "documents"))
-        .select(col("source"), explode(split(col("text"), " ")).as("tk"))
-        .groupBy(col("source"), col("tk")).agg(count(lit(1)).as("__tf"))
-      tf.groupBy(col("source"))
-        .agg(count(lit(1)).as("n_types"), sum(col("__tf")).as("n_tokens"),
-          sum(when(col("__tf") === 1L, 1L).otherwise(0L)).as("n_hapax"))
-        .withColumn("ttr_bp", TextOps.bp(col("n_types"), col("n_tokens")))
-        .withColumn("hapax_bp", TextOps.bp(col("n_hapax"), col("n_types")))
-        .orderBy("source")
-    },
-
-    // x123 — one-permutation MinHash LSH candidates (Li/Owen/Zhang 2012):
-    // ONE hash per shingle vs x22's sixteen — the signature pass that
-    // dominates at 100 TB, at the same banding contract.
-    "x123_dedup_minhash_oph" -> { (s, dir) =>
-      DedupOps.minhashLshCandidatesOph(spread(t(s, dir, "documents")),
-          "doc_id", TextOps.wordShingles(col("text"), 3),
-          numHashes = 16, bandRows = 4)
-        .orderBy("i", "j")
-    },
-
-    // x124 — the x64 curation flagship on OPH signatures: same quality →
-    // exact-dedup → candidate-verify → components pipeline, with the
-    // signature stage paying one hash per shingle instead of sixteen.
-    "x124_corpus_curation_oph" -> { (s, dir) =>
-      val (exactKept, survivors) = curationSurvivors(spread(t(s, dir, "documents")))
-      curationResult(exactKept, DedupOps.nearDupPairs(survivors, "doc_id",
-        TextOps.wordShingles(col("text"), 3), 0.5, oph = true))
-    },
-
-    // x125 — the REFRESH capstone (x94's incremental sibling): snapshot
-    // diff → only added+changed docs pay → blocklist + entropy quality
-    // gates → token-budget mixture over the surviving refresh. The
-    // integration exhibit for the incremental-ingest story: a corpus
-    // refresh never re-bills the unchanged 99%.
-    "x125_refresh_manifest" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents")).select("doc_id", "source", "text")
-      val nw = refreshSnapshot(d)
-      val work = StatOps.snapshotDiff(d.select("doc_id", "text"),
-          nw.select("doc_id", "text"), "doc_id", "text")
-        .filter(col("status").isin("added", "changed")).select("doc_id")
-      // materialized: the work-list feeds THREE consumers (blocklist,
-      // entropy, the survivor join) — lazily, each would re-run the
-      // diff + semi-join subtree. A production refresh materializes its
-      // work-list for exactly this reason (and it is change-sized, not
-      // corpus-sized). Measured in-suite: 5.9 s → ~1.5 s at sf0.1.
-      val docs = nw.join(work, Seq("doc_id"), "left_semi").localCheckpoint()
-      val keepBl = TextOps.blocklistHits(docs, "doc_id",
-          Seq("big scan table", "slow fast agg"))
-        .filter(col("keep")).select("doc_id")
-      val ent = TextOps.tokenEntropy(docs, "doc_id")
-        .filter(col("entropy_micro") >= 1500000L)
-        .select("doc_id", "n_tokens")
-      val survivors = docs.join(keepBl, Seq("doc_id"), "left_semi")
-        .join(ent, Seq("doc_id"))
-      SampleOps.tokenBudgetMixture(survivors, "doc_id", "source",
-          "n_tokens", Seq("src0" -> 0.3, "src1" -> 0.3, "src2" -> 0.4))
-        .select("doc_id", "source", "n_tokens")
-        .orderBy("doc_id")
-    },
-
-    // x126 — the TRAINED-PQ recall gate, closing the index-selection
-    // table's last unmeasured row: per-subspace k-means codebooks
-    // (pqTrainedCodebooks, 2 exact Lloyd rounds) graded against the x25
-    // brute-force truth at the SAME serving plan as x87's seed-PQ
-    // (m=4 one-byte codes, identical cells, identical nProbe) — two
-    // codebook budgets, ksub=16 (byte-for-byte the seed index's storage)
-    // and ksub=32 (still one byte per code; the codebook itself is driver
-    // metadata either way). The decision this row exists to make: does
-    // training close enough of seed-PQ's 20% recall@5 gap to ship PQ at
-    // the memory floor, or does SQ8 stay the quantized serving tier?
-    "x126_ann_recall_pq_trained" -> { (s, dir) =>
-      val e = spread(t(s, dir, "embeddings"))
-      def cands(ksub: Int): DataFrame =
-        memoRelation(s, dir, s"cand|pq_trained_$ksub") {
-          VectorOps.ivfTopKPq(e.filter(col("vec_id") < 20), e,
-            "vec_id", "embedding", 5, pqTrainedCodebooksOf(s, dir, ksub),
-            numCentroids = 8, nProbe = 2)
-        }
-      val exact = annTruth(s, dir)
-      def grade(df: DataFrame, m: String): DataFrame =
-        VectorOps.annRecall(df, exact, "qid", "nid")
-          .withColumn("method", lit(m))
-      grade(cands(16), "ivf_pq_t16")
-        .unionByName(grade(cands(32), "ivf_pq_t32"))
-        .select("method", "qid", "n_exact", "n_hit", "recall_bp")
-        .orderBy("method", "qid")
-    },
-
-    // x127 — HTML/boilerplate extraction, the FIRST-MILE stage every
-    // web-scale corpus runs before any other curation operator (r15; C4,
-    // Raffel et al. 2020 §2.2). The fixture ships clean text, so each doc
-    // is first wrapped in a deterministic HTML page — head with style
-    // (braces!) and script (angle brackets and quotes!), headings,
-    // paragraph breaks carved at ' window ' word boundaries, entity-
-    // encoded chrome, an "enable JavaScript" banner, a cross-page legal
-    // footer, and a comment hiding tagged content — IDENTICALLY in both
-    // engines. Extraction then proves: script/style/comment content never
-    // leaks, block closes become line breaks, entities decode once,
-    // no-terminal-punctuation and short lines drop, the javascript line
-    // drops, and the repeated footer survives exactly once corpus-wide
-    // (line-level dedup).
-    "x127_html_extract" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      HtmlOps.c4KeptLines(d.select(col("doc_id"), htmlFixture.as("html")),
-          "doc_id", "html")
-        .select("doc_id", "line_no", "line")
-        .orderBy("doc_id", "line_no")
-    },
-
-    // x128 — the PAGE tier on the same extraction (HtmlOps.c4Pages):
-    // reassemble each page from its surviving lines and apply C4's
-    // page-level rules (≥5 kept lines; brace and lorem-ipsum page
-    // drops). The artifact a crawl ingest actually ships downstream —
-    // cleaned page text, not loose lines. Same ONE-definition synthesis
-    // and strip chain as x127 on both engines.
-    "x128_html_pages" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      HtmlOps.c4Pages(d.select(col("doc_id"), htmlFixture.as("html")),
-          "doc_id", "html")
-        .select("doc_id", "n_lines", "text")
-        .orderBy("doc_id")
-    },
-
-    // x129 — WARC container parsing (WarcOps, ISO 28500): the stage
-    // BEFORE x127 — a crawl arrives as WARC files, not loose HTML. The
-    // x127 HTML pages are wrapped into multi-record WARC files (one
-    // warcinfo per file, a request record for every third doc, a
-    // response per doc — identical synthesis in both engines), then
-    // parsed back: record splitting, header extraction (case-insensitive,
-    // absent → NULL), Content-Length payload slicing, and the length_ok
-    // self-diagnosis.
-    "x129_warc_records" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      WarcOps.parseRecords(warcFixture(d), "file_id", "content")
-        .select(col("file_id"), col("rec_no"), col("warc_type"),
-          col("target_uri"), col("warc_date"), col("content_length"),
-          md5(col("payload")).as("payload_md5"), col("length_ok"))
-        .orderBy("file_id", "rec_no")
-    },
-
-    // x130 — the full first-mile composition: WARC parse → response
-    // payloads → the SAME C4 page extraction as x128. Output must be
-    // row-identical to x128 (the container round trip adds nothing and
-    // loses nothing) — and the oracle recomputes it independently
-    // through DuckDB's own parse chain, so the equality is proven, not
-    // assumed.
-    "x130_warc_to_c4" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val pages = WarcOps.responses(warcFixture(d), "file_id", "content")
-        .select(uriDocId, col("payload").as("html"))
-      HtmlOps.c4Pages(pages, "doc_id", "html")
-        .select("doc_id", "n_lines", "text")
-        .orderBy("doc_id")
-    },
-
-    // x131 — URL canonicalization + registered domain (UrlOps): the
-    // RefinedWeb/CCNet URL tier. Eight deterministic URL shapes per doc
-    // exercise every rule: case, www/userinfo/fragment drop, default
-    // vs non-default ports, slash collapse, trailing dot and slash,
-    // tracking-param drop, bytewise param sort, non-absolute → NULL,
-    // and the multi-label suffix heuristic — with the suffix set
-    // LOADED from a PSL file (UrlOps.loadPsl → RegisteredDomainOf's
-    // data parameter, r16): arm 7's `co.kr` resolves to example.co.kr
-    // only through the loaded list, proving the data path end-to-end
-    // through the oracle.
-    "x131_url_canon" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val suffixes = UrlOps.loadPsl(pslFixturePath)
-      d.select(col("doc_id"), urlFixture.as("url"))
-        .select(col("doc_id"), col("url"),
-          UrlOps.canonicalizeUrl(col("url")).as("canon_url"),
-          UrlOps.host(col("url")).as("host"),
-          UrlOps.domainOf(col("url"), suffixes)
-            .as("reg_domain"))
-        .orderBy("doc_id")
-    },
-
-    // x132 — canonical-URL dedup rolled up per registered domain: the
-    // actual consumer of x131 (RefinedWeb dedups its frontier on the
-    // canonical string — URLs differing only in tracking params, case,
-    // ports, or slashes are one fetch). One shuffle on the canonical
-    // string, one on the domain.
-    "x132_url_dedup" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val ur = d.select(col("doc_id"),
-          UrlOps.canonicalizeUrl(urlFixture).as("canon_url"),
-          UrlOps.domainOf(urlFixture)
-            .as("reg_domain"))
-        .filter(col("canon_url").isNotNull)
-      ur.groupBy("canon_url", "reg_domain")
-        .agg(min("doc_id").as("keep_doc"), count(lit(1)).as("n_docs"))
-        .groupBy("reg_domain")
-        .agg(count(lit(1)).as("n_urls"), sum("n_docs").as("n_docs"),
-          min("keep_doc").as("first_doc"))
-        .orderBy("reg_domain")
-    },
-
-    // x133 — robots.txt admission (RobotsOps): parse per-domain robots
-    // bodies into the rules governing agent "graftbot" (exact-token
-    // groups beat `*` domain-wide; multi-agent headers; comments; the
-    // empty-Disallow idiom), then admit the x131 canonical URLs by
-    // longest-prefix-match with Allow winning ties. The fixture plants a
-    // megabot-only Disallow-everything group (agent scoping must ignore
-    // it), a `*` group that must be ignored wherever the graftbot group
-    // exists, and drops the graftbot group on example.org only — the
-    // RFC 9309 fallback path, observable as that domain going fully
-    // blocked under `Disallow: /`.
-    "x133_robots_filter" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      // localCheckpoint: the canonicalized frontier feeds THREE consumers
-      // (robots domains, the admission join, the final rollup join) —
-      // materialize the regex-heavy canonicalization once instead of
-      // re-running it per branch (the curationSurvivors pattern)
-      val urls = d.select(col("doc_id"),
-          UrlOps.canonicalizeUrl(urlFixture).as("canon_url"),
-          UrlOps.domainOf(urlFixture).as("reg_domain"))
-        .filter(col("canon_url").isNotNull)
-        .withColumn("match_path", RobotsOps.matchPath(col("canon_url")))
-        .localCheckpoint()
-      val robots = urls.select("reg_domain").distinct()
-        .withColumn("robots_txt", robotsFixture(col("reg_domain")))
-      val rules = RobotsOps.parseRules(robots, "graftbot")
-      // reg_domain rides the admission keys (unique per doc_id row), so
-      // the per-domain rollup reads the flags frame directly — no
-      // join-back shuffle
-      RobotsOps.allowedFlags(urls, rules, Seq("doc_id", "reg_domain"))
-        .groupBy("reg_domain")
-        .agg(count(lit(1)).as("n_urls"),
-          sum(when(col("allowed"), 1L).otherwise(0L)).as("n_allowed"),
-          sum(when(col("allowed"), 0L).otherwise(1L)).as("n_blocked"),
-          min(when(!col("allowed"), col("doc_id"))).as("first_blocked_doc"))
-        .orderBy("reg_domain")
-    },
-
-    // x134 — the link graph (HtmlOps.extractLinks → UrlOps.resolveUrl →
-    // canonicalize): every <a href> of each synthesized page resolved
-    // against the page's own URL (absolute, protocol-relative,
-    // root-relative, path-relative, and fragment-only arms all planted),
-    // canonicalized, and rolled up per (source domain, target domain) —
-    // the corpus link graph whose in-degree is a quality prior and whose
-    // edges seed the crawl frontier. Two chained combinable aggs (per-
-    // target then per-pair) — no count_distinct Expand (the x56 lesson).
-    "x134_link_graph" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val pages = d.select(col("doc_id"), linkBase.as("base"),
-        linkHtmlFixture.as("html"))
-      // aggregate on the canonical string FIRST, then derive the target
-      // domain on the per-target frame: dst_domain is a regexp chain
-      // over canon_url, and computing it pre-agg re-inlines the whole
-      // canonicalization tree into every reference on the exploded link
-      // stream (project collapse duplicates the expression, not the
-      // value) — post-agg it runs once per DISTINCT target
-      val edges = resolvedCanon(pages.select(
-          UrlOps.domainOf(col("base")).as("src_domain"),
-          col("base"),
-          explode(HtmlOps.extractLinks(col("html"))).as("ref")),
-        Seq("src_domain"), "ref")
-      edges.groupBy("src_domain", "canon_url")
-        .agg(count(lit(1)).as("n"))
-        .withColumn("dst_domain",
-          UrlOps.domainOf(col("canon_url")))
-        .groupBy("src_domain", "dst_domain")
-        .agg(sum(col("n")).as("n_links"), count(lit(1)).as("n_targets"),
-          min(col("canon_url")).as("sample_target"))
-        .orderBy("src_domain", "dst_domain")
-    },
-
-    // x135 — token Naive Bayes quality classifier (ClassifyOps): the
-    // model-based filter tier (the fastText-classifier role in
-    // CCNet/DataComp curation). Labels come from the x34 quality rule on
-    // the even-id half, the model scores the odd-id half, and the output
-    // is the confusion rollup with exact integer score sums (micro-nat
-    // scaled-long weights — the x90 BM25 convention, so the DuckDB
-    // mirror is hash-exact regardless of summation order).
-    "x135_nb_quality" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val labeled = TextOps.qualityScore(d)
-        .withColumn("pos",
-          col("n_words") >= 20 && col("alpha_ratio_bp") >= 7000)
-        .select("doc_id", "text", "pos")
-      val train = labeled.filter(col("doc_id") % 2 === 0)
-      val test = labeled.filter(col("doc_id") % 2 =!= 0)
-      val model = ClassifyOps.trainTokenNb(train, "pos")
-      ClassifyOps.scoreTokenNb(test, model)
-        .join(test.select(col("doc_id"), col("pos").as("actual")),
-          Seq("doc_id"))
-        .groupBy("actual", "pred")
-        .agg(count(lit(1)).as("n_docs"), sum(col("score")).as("sum_score"),
-          min("doc_id").as("min_doc"), max("doc_id").as("max_doc"))
-        .orderBy("actual", "pred")
-    },
-
-    // x136 — the crawl-frontier capstone: the first-mile DISCOVERY loop
-    // end-to-end. Pages → extracted links → resolved + canonicalized
-    // targets → frontier dedup (one row per canonical URL, keep the
-    // first discoverer) → already-crawled anti-set → robots admission
-    // (RobotsOps, agent graftbot) → per-domain politeness cap (4 fetches
-    // per domain, canonical order). Per-domain funnel counts out — every
-    // stage's survivors visible in one row, the crawl-scheduler report.
-    "x136_crawl_frontier" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val d = spread(t(s, dir, "documents"))
-      val pages = d.select(col("doc_id"), linkBase.as("base"),
-        linkHtmlFixture.as("html"))
-      val resolved = resolvedCanon(pages.select(col("doc_id"),
-          explode(HtmlOps.extractLinks(col("html"))).as("ref"), col("base")),
-        Seq("doc_id"), "ref")
-      val cand = resolved.groupBy("canon_url")
-        .agg(min("doc_id").as("discovered_by"), count(lit(1)).as("n_refs"))
-        .withColumn("reg_domain",
-          UrlOps.domainOf(col("canon_url")))
-        .withColumn("match_path", RobotsOps.matchPath(col("canon_url")))
-      val crawled = pages
-        .select(UrlOps.canonicalizeUrl(col("base")).as("canon_url"))
-        .distinct().withColumn("seen", lit(true))
-      // localCheckpoint: the marked frontier (one row per canonical URL —
-      // far smaller than the link stream) feeds the robots-domain
-      // distinct, the admission join, AND the staged rollup; without it
-      // each branch re-runs link extraction + resolution + the
-      // canonical-dedup shuffle over the whole corpus
-      val marked = cand.join(crawled, Seq("canon_url"), "left")
-        .withColumn("is_new", col("seen").isNull).drop("seen")
-        .localCheckpoint()
-      val robots = marked.select("reg_domain").distinct()
-        .withColumn("robots_txt", frontierRobotsFixture)
-      val rules = RobotsOps.parseRules(robots, "graftbot")
-      // the funnel columns all ride the admission keys (unique per
-      // canonical URL), so no join-back; ONE window then does the
-      // per-domain politeness cap: admitted rows sort first inside their
-      // domain, so row_number ranks exactly the admitted set — no
-      // schedule self-join (deterministic: (admitted, canon_url) is
-      // unique within a domain)
-      val staged = RobotsOps.allowedFlags(marked, rules,
-          Seq("canon_url", "reg_domain", "n_refs", "is_new"))
-        .withColumn("admitted", col("is_new") && col("allowed"))
-        .drop("allowed")
-      staged
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("reg_domain")
-            .orderBy(col("admitted").desc, col("canon_url"))))
-        .withColumn("scheduled", col("admitted") && col("rn") <= 4)
-        .groupBy("reg_domain")
-        .agg(count(lit(1)).as("n_candidates"),
-          sum(col("n_refs")).as("n_refs"),
-          sum(when(col("is_new"), 1L).otherwise(0L)).as("n_new"),
-          sum(when(col("admitted"), 1L).otherwise(0L)).as("n_admitted"),
-          sum(when(col("scheduled"), 1L).otherwise(0L)).as("n_scheduled"),
-          min(when(col("scheduled"), col("canon_url")))
-            .as("first_scheduled"))
-        .orderBy("reg_domain")
-    },
-
-    // x137 — the per-domain card: content stats (pages, quality passes,
-    // tokens — the x34 rule over each site's docs) full-outer-joined
-    // with link-graph authority (cross-domain in-links and distinct
-    // referring domains from the x134 edges). The domain-level quality
-    // prior RefinedWeb/C4-style pipelines gate fetches and weight
-    // sampling with; a link-only domain (the CDN) and a page-only
-    // domain both appear, each with the other side zeroed.
-    "x137_domain_card" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val content = d.select(
-          UrlOps.domainOf(linkBase).as("domain"),
-          col("text"))
-        .withColumn("n_words",
-          size(split(col("text"), " ")).cast(LongType))
-        .withColumn("q_pass",
-          col("n_words") >= 20 &&
-            TextOps.bp(length(regexp_replace(col("text"), "[^a-z]", "")),
-              length(col("text"))) >= 7000)
-        .groupBy("domain")
-        .agg(count(lit(1)).as("n_pages"),
-          sum(when(col("q_pass"), 1L).otherwise(0L)).as("n_quality"),
-          sum(col("n_words")).as("n_toks"))
-      val pages = d.select(col("doc_id"), linkBase.as("base"),
-        linkHtmlFixture.as("html"))
-      // per-target agg first, domain derivation + cross filter on the
-      // aggregated frame (the x134 expression-duplication rationale)
-      val inlinks = resolvedCanon(pages.select(
-            UrlOps.domainOf(col("base"))
-              .as("src_domain"),
-            explode(HtmlOps.extractLinks(col("html"))).as("ref"),
-            col("base")),
-          Seq("src_domain"), "ref")
-        .withColumn("domain",
-          UrlOps.domainOf(col("canon_url")))
-        .filter(col("domain") =!= col("src_domain"))
-        .groupBy("domain", "src_domain")
-        .agg(count(lit(1)).as("n"))
-        .groupBy("domain")
-        .agg(sum(col("n")).as("in_links_cross"),
-          count(lit(1)).as("in_domains"))
-      content.join(inlinks, Seq("domain"), "full_outer")
-        .select(col("domain"),
-          coalesce(col("n_pages"), lit(0L)).as("n_pages"),
-          coalesce(col("n_quality"), lit(0L)).as("n_quality"),
-          coalesce(col("n_toks"), lit(0L)).as("n_toks"),
-          coalesce(col("in_links_cross"), lit(0L)).as("in_links_cross"),
-          coalesce(col("in_domains"), lit(0L)).as("in_domains"))
-        .orderBy("domain")
-    },
-
-    // x138 — anchor-text rollup: every <a> element's target resolved +
-    // canonicalized and its ANCHOR TEXT kept (inner tags stripped) —
-    // the label the web puts on each target, rolled up per (target
-    // domain, anchor text). The WebText-style signal: anchor text is
-    // curated human description of the linked page.
-    "x138_anchor_text" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val pages = d.select(col("doc_id"), linkBase.as("base"),
-        linkHtmlFixture.as("html"))
-      // two chained combinable aggs, not count_distinct (the x56
-      // Expand lesson)
-      resolvedCanon(
-          pages.select(col("base"),
-              explode(HtmlOps.extractAnchors(col("html"))).as("a"))
-            .select(col("base"), col("a.href").as("href"),
-              col("a.atext").as("atext"))
-            .filter(col("atext") =!= ""),
-          Seq("atext"), "href")
-        .groupBy("atext", "canon_url")
-        .agg(count(lit(1)).as("n"))
-        .withColumn("dst_domain",
-          UrlOps.domainOf(col("canon_url")))
-        .groupBy("dst_domain", "atext")
-        .agg(sum(col("n")).as("n_anchors"),
-          count(lit(1)).as("n_targets"))
-        .orderBy("dst_domain", "atext")
-    },
-
-    // x139 — the BYTE/HTTP-faithful first mile (r16; VERDICT r15 #1):
-    // a real Common Crawl file is `.warc.gz` — one gzip member per
-    // record — and each response payload is an HTTP/1.1 message, not
-    // bare HTML. The fixture builds exactly that (per-record gzip
-    // members, concatenated per file), and the query runs the REAL
-    // chain: gunzip the file (multi-member, GunzipToString → the
-    // latin1 VIEW of the record bytes, r17) → WARC record parse → HTTP
-    // envelope split → route on status 200 + text/html → charset
-    // decode (the pages ship as REAL UTF-8 bytes with an accented
-    // paragraph, so the gz tier is now gated on non-ASCII content —
-    // ADVICE r16) → the SAME C4 page extraction as x128. The oracle is
-    // the accent-modified x128 recompute: DuckDB cannot gunzip, so it
-    // recomputes the target output independently from the documents
-    // table — row-identity proves the whole container+envelope+byte
-    // round trip is lossless (the x130 proof, one tier deeper).
-    "x139_warc_gz_http" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val files = warcGzHttpFixture(d)
-      val pages = WarcOps.responses(
-        files.select(col("file_id"),
-          WarcOps.gunzipText(col("gz")).as("content")),
-        "file_id", "content")
-      c4ResponsePages(pages,
-        HttpOps.decodeBody(col("body"), col("charset")))
-    },
-
-    // x140 — the HTTP envelope split on its own cross-engine oracle
-    // (the regex tier IS mirrorable, unlike gzip): four synthesized
-    // response shapes (200+charset, 301+Location, 404, lowercase
-    // content-type with quoted charset), split into status /
-    // media type / charset / redirect / body in both engines, rolled
-    // up per envelope shape. The routing table a crawl ingest
-    // partitions its fetch results by.
-    "x140_http_headers" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      HttpOps.parseResponses(
-          d.select(col("doc_id"), httpFixture.as("msg")), "msg")
-        .groupBy("status_code", "content_type", "charset")
-        .agg(count(lit(1)).as("n_msgs"),
-          sum(length(col("body")).cast(LongType)).as("body_chars"),
-          sum(when(col("location").isNotNull, 1L).otherwise(0L))
-            .as("n_redirects"),
-          min("doc_id").as("min_doc"))
-        .orderBy("status_code", "content_type")
-    },
-
-    // x141 — the multi-hop crawl loop (CrawlOps.crawlFrontierIterate;
-    // VERDICT r15 #7): x136 is ONE discovery hop, a crawl iterates.
-    // Seeds = every 10th page of the link corpus; two hops of
-    // frontier → fetch → extract → dedup-against-everything-crawled →
-    // robots admission (agent graftbot) → per-domain cap-4 politeness,
-    // rolled up per (hop, domain) with the fetched/404 split. The
-    // oracle unrolls both hops as CTEs — the same links, the same
-    // rules, the same cumulative crawled set.
-    "x141_crawl_hops" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val pages = d.select(linkBase.as("canon_url"),
-        linkHtmlFixture.as("html"))
-      val seeds = d.filter(col("doc_id") % 10 === 0)
-        .select(linkBase.as("canon_url"))
-      // robots coverage: the five site domains plus the CDN's (a
-      // domain absent from the rule table is unrestricted — RFC 9309)
-      val doms = pages
-        .select(UrlOps.domainOf(col("canon_url")).as("reg_domain"))
-        .distinct()
-        .unionByName(s.range(1).select(lit("example.net").as("reg_domain")))
-      val rules = RobotsOps.parseRules(
-        doms.withColumn("robots_txt", frontierRobotsFixture), "graftbot")
-      CrawlOps.crawlFrontierIterate(pages, seeds, rules, maxHops = 2)
-        .groupBy("hop", "reg_domain")
-        .agg(count(lit(1)).as("n_scheduled"),
-          sum(when(col("fetched"), 1L).otherwise(0L)).as("n_fetched"),
-          min("canon_url").as("first_url"))
-        .orderBy("hop", "reg_domain")
-    },
-
-    // x142 — link-authority PageRank (GraphOps.pageRankInt; the
-    // Cho/Garcia-Molina/Page WWW'98 crawl-ordering signal): the x134
-    // edge stream (resolve + canonicalize, self-loops dropped), edge
-    // weight = href multiplicity, two damped power iterations in exact
-    // scaled-BIGINT arithmetic (rank at 10^6, integral div throughout,
-    // so summation order cannot matter and the DuckDB mirror unrolling
-    // the same two iterations as CTEs is hash-exact by construction).
-    // Rolled up per target domain with the argmax node — the
-    // per-domain authority table a frontier scheduler orders its fetch
-    // queue by.
-    "x142_pagerank" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val edges = pageLinkEdges(spread(t(s, dir, "documents")))
-      val ranks = GraphOps.pageRankInt(edges, iterations = 2)
-        .withColumn("reg_domain", UrlOps.domainOf(col("node")))
-      // argmax with a deterministic tie-break: min node among the
-      // rank_max holders (one window + the rollup — no self-join)
-      ranks
-        .withColumn("rmax",
-          max("rank").over(Window.partitionBy("reg_domain")))
-        .groupBy("reg_domain")
-        .agg(count(lit(1)).as("n_nodes"),
-          sum("rank").as("rank_sum"),
-          max("rank").as("rank_max"),
-          min(when(col("rank") === col("rmax"), col("node")))
-            .as("top_node"))
-        .orderBy("reg_domain")
-    },
-
-    // x143 — sitemap discovery (SitemapOps; sitemaps.org protocol):
-    // the OTHER half of the crawl's URL-discovery plane. Four of the
-    // five site domains advertise a sitemap INDEX from robots.txt
-    // (key case varies, one pointer carries a trailing comment, the
-    // fifth domain has no directive), each index references two child
-    // urlsets, each child packs its domain's pages as <url> entries
-    // with XML-escaped tracking params in the loc and optional
-    // lastmod/priority. The chain: Sitemap: directives → index parse →
-    // child fetch (closed-corpus double, the CrawlOps convention) →
-    // urlset parse → canonicalize → anti-flag against the crawled set
-    // → two-stage per-sitemap/per-domain rollup (no count_distinct
-    // Expand — the x56 lesson).
-    "x143_sitemap_discovery" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val m = (col("doc_id") % 5).cast("string")
-      val site = concat(lit("https://s"), m, lit(".example-"), m,
-        lit(".com"))
-      val dom = concat(lit("example-"), m, lit(".com"))
-      val idS = col("doc_id").cast("string")
-      val robots = d.select((col("doc_id") % 5).as("mnum"),
-          dom.as("reg_domain"), site.as("site")).distinct()
-        .withColumn("robots_txt",
-          when(col("reg_domain") =!= "example-4.com", concat(
-            lit("User-agent: *\nDisallow: /private\n\n"),
-            when(col("mnum") % 2 === 0, lit("Sitemap: "))
-              .otherwise(lit("SITEMAP: ")),
-            col("site"), lit("/sitemap_index.xml # autogen\n")))
-          .otherwise(lit("User-agent: *\nAllow: /\n")))
-      val ptr = SitemapOps.sitemapUrls(robots)
-      val idxXml = ptr.withColumn("xml", concat(
-        lit("<sitemapindex><sitemap><loc>"),
-        regexp_replace(col("sitemap_url"), "sitemap_index\\.xml$",
-          "maps/s1.xml"),
-        lit("</loc></sitemap><sitemap><loc>"),
-        regexp_replace(col("sitemap_url"), "sitemap_index\\.xml$",
-          "maps/s2.xml"),
-        lit("</loc></sitemap></sitemapindex>")))
-      val children = SitemapOps.parseIndex(idxXml, Seq("reg_domain"))
-      val entry = concat(lit("<url><loc>"), site, lit("/dir/page/"), idS,
-        lit("?utm_source=map&amp;utm_medium=xml</loc>"),
-        when(col("doc_id") % 3 === 0, concat(lit("<lastmod>2020-01-"),
-          lpad(((col("doc_id") % 28) + 1).cast("string"), 2, "0"),
-          lit("</lastmod>"))).otherwise(lit("")),
-        when(col("doc_id") % 7 === 0, lit("<priority>0.9</priority>"))
-          .when(col("doc_id") % 2 === 0, lit("<priority>0.5</priority>"))
-          .otherwise(lit("")),
-        lit("</url>"))
-      val content = d.select(
-          concat(site, lit("/maps/s"),
-            ((col("doc_id") % 2) + 1).cast("string"), lit(".xml"))
-            .as("sitemap_loc"),
-          col("doc_id"), entry.as("e"))
-        .groupBy("sitemap_loc")
-        .agg(concat(lit("<urlset>"),
-          concat_ws("", array_sort(collect_list(
-            struct(col("doc_id"), col("e")))).getField("e")),
-          lit("</urlset>")).as("xml"))
-      val entries = SitemapOps.parseUrlset(
-        children.join(content, Seq("sitemap_loc")),
-        Seq("reg_domain", "sitemap_loc"))
-      val crawled = d.filter(col("doc_id") % 10 === 0)
-        .select(linkBase.as("canon_url"), lit(true).as("__crawled"))
-      val flagged = entries
-        .withColumn("canon_url", UrlOps.canonicalizeUrl(col("loc")))
-        .filter(col("canon_url").isNotNull)
-        .join(crawled, Seq("canon_url"), "left")
-        .withColumn("is_new", col("__crawled").isNull)
-      flagged.groupBy("reg_domain", "sitemap_loc")
-        .agg(count(lit(1)).as("n_entries"),
-          sum(when(col("is_new"), 1L).otherwise(0L)).as("n_new"),
-          sum(when(col("lastmod").isNotNull, 1L).otherwise(0L))
-            .as("n_lastmod"),
-          sum(when(col("priority") >= "0.8", 1L).otherwise(0L))
-            .as("n_high"),
-          min("lastmod").as("min_lastmod"),
-          min("canon_url").as("first_loc"))
-        .groupBy("reg_domain")
-        .agg(count(lit(1)).as("n_sitemaps"),
-          sum("n_entries").as("n_entries"), sum("n_new").as("n_new"),
-          sum("n_lastmod").as("n_lastmod"),
-          sum("n_high").as("n_high_priority"),
-          min("min_lastmod").as("min_lastmod"),
-          min("first_loc").as("first_loc"))
-        .orderBy("reg_domain")
-    },
-
-    // x144 — chunked transfer decoding (DechunkBody; RFC 9112 §7.1):
-    // the LAST envelope layer of the byte tier. A LIVE fetch (unlike
-    // Common Crawl's de-chunked store) delivers chunked framing, so
-    // the fixture wraps each x127 page in a chunked HTTP message
-    // (hex sizes from Spark's uppercase hex(), a chunk extension and
-    // a trailer field planted, one chunk boundary mid-document) inside
-    // plain-text WARC records, and the query runs WARC parse → HTTP
-    // split (which de-chunks on Transfer-Encoding routing) → the SAME
-    // C4 page extraction as x128. Oracle = the independently
-    // recomputed x128 target (the x139 losslessness proof for the
-    // chunked layer).
-    "x144_http_chunked" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val pages = WarcOps.responses(
-        warcChunkedHttpFixture(d), "file_id", "content")
-      c4ResponsePages(pages, col("body"),
-        col("transfer_encoding") === "chunked")
-    },
-
-    // x145 — the prioritized frontier SCHEDULE (the round's capstone
-    // composition): what a crawl scheduler actually emits — candidate
-    // URLs from link discovery (the x136 frontier: links minus the
-    // crawled corpus), admitted by robots (graftbot; /root disallowed
-    // everywhere), ranked by link authority (the x142 integer
-    // PageRank, un-ranked candidates at 0), capped at 4 fetch slots
-    // per registered domain, each slot offset by the domain's
-    // governing Crawl-delay (RobotsOps.crawlDelays; site 0 publishes
-    // none and the CDN domain has no robots at all — both fall to the
-    // 200 ms default spacing). Integer ranks + integral ms make every
-    // output column exact in both engines.
-    "x145_frontier_schedule" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val d = spread(t(s, dir, "documents"))
-      val pages = d.select(col("doc_id"), linkBase.as("base"),
-        linkHtmlFixture.as("html"))
-      // one materialization feeds BOTH the rank edges and the
-      // candidate stream (the x136 localCheckpoint discipline)
-      val resolved = resolvedCanon(pages.select(col("base"),
-          explode(HtmlOps.extractLinks(col("html"))).as("ref")),
-        Seq("base"), "ref").localCheckpoint()
-      val edges = resolved.filter(col("canon_url") =!= col("base"))
-        .groupBy(col("base").as("src"), col("canon_url").as("dst"))
-        .agg(count(lit(1)).as("w"))
-      val ranks = GraphOps.pageRankInt(edges, iterations = 2)
-      val cand = resolved.select("canon_url").distinct()
-        .join(pages.select(col("base").as("canon_url")),
-          Seq("canon_url"), "left_anti")
-        .withColumn("host", UrlOps.host(col("canon_url")))
-        .withColumn("reg_domain", UrlOps.domainOf(col("canon_url")))
-        .withColumn("match_path", RobotsOps.matchPath(col("canon_url")))
-      val doms = pages
-        .select(UrlOps.domainOf(col("base")).as("reg_domain")).distinct()
-        .withColumn("mnum",
-          regexp_extract(col("reg_domain"), "example-([0-9])", 1))
-      val robots = doms.withColumn("robots_txt", concat(
-        lit("User-agent: megabot\nDisallow: /\n\n"),
-        lit("User-agent: graftbot\n"),
-        when(col("mnum") === "0", lit(""))
-          .otherwise(concat(lit("Crawl-delay: "), col("mnum"),
-            lit(".5\n"))),
-        lit("Disallow: /root\n\n"),
-        lit("User-agent: *\nCrawl-delay: 30\nDisallow: /\n")))
-      val rules = RobotsOps.parseRules(robots, "graftbot")
-      val delays = RobotsOps.crawlDelays(robots, "graftbot")
-      RobotsOps.allowedFlags(cand, rules,
-          Seq("canon_url", "host", "reg_domain"))
-        .filter(col("allowed")).drop("allowed")
-        .join(ranks.select(col("node").as("canon_url"), col("rank")),
-          Seq("canon_url"), "left")
-        .withColumn("rank", coalesce(col("rank"), lit(0L)))
-        // slots per HOST (r18, VERDICT r17 #5): the fetch queue is a
-        // per-server schedule — two hosts on one registered domain
-        // fill their slot windows independently; the domain stays for
-        // the rollup and the Crawl-delay spacing (robots are fetched
-        // per authority; this fixture publishes them per domain)
-        .withColumn("slot", row_number().over(
-            Window.partitionBy("host")
-              .orderBy(col("rank").desc, col("canon_url")))
-          .cast(LongType))
-        .filter(col("slot") <= 4)
-        .join(delays, Seq("reg_domain"), "left")
-        .withColumn("fetch_offset_ms",
-          (col("slot") - 1) * coalesce(col("delay_ms"), lit(200L)))
-        .select("reg_domain", "host", "slot", "canon_url", "rank",
-          "fetch_offset_ms")
-        .orderBy("reg_domain", "host", "slot")
-    },
-
-    // x146 — WARC revisit resolution (WARC 1.1 §6.7.2): a crawler that
-    // re-fetches unchanged content writes a BODY-LESS revisit record
-    // carrying the payload digest — the container-level dedup a
-    // recrawl store ships with. The fixture groups docs by 3: the head
-    // stores the payload as a response, the second stores the SAME
-    // payload at a different URL (duplicate content — also a
-    // response), the third is a revisit with the group digest, no
-    // body, and a Refers-To header. Resolution is by CONTENT identity:
-    // earliest response per digest (date then URI — the 28-day date
-    // wrap makes some duplicate-URL responses the original, exercising
-    // the rule), revisits left-joined on. Both engines parse the same
-    // synthesized WARC bytes and resolve with the same window.
-    "x146_warc_revisit" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val recs = WarcOps.parseRecords(
-        warcRevisitFixture(d), "file_id", "content")
-      WarcOps.resolveRevisits(recs)
-        .select("target_uri", "warc_date", "payload_digest",
-          "refers_to", "original_uri", "original_date")
-        .orderBy("target_uri")
-    },
-
-    // x147 — charset-faithful byte decoding via the LATIN1-VIEW
-    // convention (HttpOps.decodeBody): raw record bytes decoded as
-    // ISO-8859-1 give a 1:1 byte↔char string, so every WARC/HTTP
-    // length and delimiter is an exact BYTE offset (the string-tier
-    // char-count bound disappears); once the envelope is off, the body
-    // re-encodes to its original bytes and decodes with the charset
-    // the Content-Type header declared. Three arms (doc_id % 3): REAL
-    // UTF-8 bytes (mojibake in the view until decodeBody
-    // reinterprets), latin1 bytes (the view IS the text), and — r17,
-    // VERDICT r16 #2 — REAL windows-1252 bytes carrying smart quotes /
-    // em dash / ellipsis, decoded by the 27-codepoint translate arm.
-    // All arms must land on the per-arm C4 target. Oracle = the
-    // independent recompute over the same per-arm synthesis (the x139
-    // convention — DuckDB does not transcode).
-    "x147_charset_bytes" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val pages = WarcOps.responses(
-        warcCharsetFixture(d), "file_id", "content")
-      c4ResponsePages(pages,
-        HttpOps.decodeBody(col("body"), col("charset")))
-    },
-
-    // x148 — <base href> resolution (HTML5 §4.2.3): when a page
-    // declares a base element, EVERY relative reference resolves
-    // against IT, not the page URL — a link tier that ignores it
-    // mis-attributes every relative link on such pages. Four page
-    // shapes cycle: no base, an absolute CDN base (relative links
-    // leave the page's domain entirely), a root-relative base, and a
-    // path-relative base (itself resolved against the page URL
-    // first); each page carries a path-relative, a root-relative, and
-    // a query-only link, all of which must resolve against the
-    // EFFECTIVE base. Rolled up per (base shape, target domain).
-    "x148_base_href" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val id = col("doc_id")
-      val baseTag = when(id % 4 === 1,
-          lit("<base href=\"https://cdn.example.net/assets/\">"))
-        .when(id % 4 === 2, lit("<base href=\"/b/\">"))
-        .when(id % 4 === 3, lit("<base href=\"sub/\">"))
-        .otherwise(lit(""))
-      val html = concat(lit("<html><head>"), baseTag,
-        lit("</head><body><a href=\"x/"), (id % 5).cast("string"),
-        lit("\">r</a><a href=\"/abs/"), (id % 7).cast("string"),
-        lit("\">a</a><a href=\"?p="), (id % 3).cast("string"),
-        lit("\">q</a></body></html>"))
-      val pages = d.select((id % 4).as("base_kind"),
-        linkBase.as("page"), html.as("html"))
-      val resolved = pages
-        .select(col("base_kind"),
-          UrlOps.effectiveBase(col("page"),
-            HtmlOps.baseHref(col("html"))).as("base"),
-          explode(HtmlOps.extractLinks(col("html"))).as("ref"))
-      resolvedCanon(resolved, Seq("base_kind"), "ref")
-        .withColumn("reg_domain", UrlOps.domainOf(col("canon_url")))
-        .groupBy("base_kind", "reg_domain")
-        .agg(count(lit(1)).as("n_links"),
-          min(col("canon_url")).as("first_target"),
-          max(col("canon_url")).as("last_target"))
-        .orderBy("base_kind", "reg_domain")
-    },
-
-    // x149 — freshness-driven recrawl scheduling
-    // (CrawlOps.recrawlPriority; Cho/Garcia-Molina 2000): which stored
-    // URLs to re-fetch first. Three captures per URL at weekly
-    // spacing; a third of URLs change every capture, a third change
-    // once, a third never (digest = md5 of a version counter) — the
-    // observed-change lag statistic, integral change-rate basis
-    // points, and staleness × rate priority must agree exactly. r17
-    // arm (VERDICT r16 #5): a sitemap-lastmod table joins in as the
-    // publisher's declared change evidence — doc_id % 5 == 4 declares
-    // a lastmod NEWER than every last capture (raising priority by
-    // the one-observed-change bonus, which RESCUES never-changing
-    // URLs from their zero score), % 5 == 2 declares an OLDER lastmod
-    // (no effect), the rest declare nothing.
-    "x149_recrawl_priority" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val caps = captureHistory(d)
-        .withColumn("digest", md5(concat(col("doc_id").cast("string"),
-          lit("_v"), col("version").cast("string"))))
-      val lastmods = d.filter(col("doc_id") % 5 === 4 ||
-          col("doc_id") % 5 === 2)
-        .select(docUrl.as("url"),
-          when(col("doc_id") % 5 === 4, lit("2020-02-10"))
-            .otherwise(lit("2020-01-01")).as("lastmod"))
-      CrawlOps.recrawlPriority(caps, "2020-02-15",
-          sitemapLastmod = lastmods)
-        .orderBy("url")
-    },
-
-    // x150 — `Content-Encoding: gzip/deflate` response bodies (r17,
-    // VERDICT r16 #1 — the one HTTP envelope layer r16 left
-    // unhandled; the MAJORITY of live fetches ship gzip-coded
-    // bodies). The fixture wraps each accent page's REAL UTF-8 bytes
-    // in gzip / zlib-deflate / ZSTD frames (doc_id % 3 — the zstd arm
-    // is r18: the jar-gated ZstdBytes/ZstdToString kernels are LIVE
-    // because zstd-jni rides every Spark classpath),
-    // ships the coded
-    // bytes as the body's latin1 view inside plain-text WARC records,
-    // and the query runs WARC parse → HTTP split (which now removes
-    // the content coding after the transfer coding —
-    // HttpOps.decodeContentCoding) → charset decode → the SAME C4
-    // page extraction as x128. Oracle = the accent-modified recompute
-    // (the x139 convention — DuckDB cannot gunzip): row-identity
-    // proves compress → view → decompress → transcode is lossless on
-    // non-ASCII content.
-    "x150_content_encoding" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val pages = WarcOps.responses(
-        warcContentEncodingFixture(d), "file_id", "content")
-      c4ResponsePages(pages,
-        HttpOps.decodeBody(col("body"), col("charset")),
-        col("content_encoding").isin("gzip", "deflate", "zstd"))
-    },
-
-    // x151 — block-density main-content extraction (r17, VERDICT r16
-    // #4; trafilatura-class, RefinedWeb §3.1): nav/sidebar/footer
-    // chrome whose sentences PASS every C4 line rule (terminal
-    // punctuation, ≥3 words) but whose characters are mostly anchor
-    // text. The fixture plants exactly that — two link-bar divs above
-    // the article, a link footer below, and a trailing content island
-    // that must LOSE the best-run contest to the article body (run
-    // selection, not per-block filtering); the article itself carries
-    // one low-density inline link that must survive. Both engines
-    // compute the same integral block scores (chars, anchor chars,
-    // density basis points), the same run segmentation, the same
-    // argmax run, then the SAME C4 line/page tier as x128.
-    "x151_main_content" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val pages = d.select(col("doc_id"), mainContentFixture.as("html"))
-      val main = HtmlOps.mainContent(pages, "doc_id", "html")
-      HtmlOps.c4Pages(main, "doc_id", "main_html")
-        .select("doc_id", "n_lines", "text")
-        .orderBy("doc_id")
-    },
-
-    // x152 — redirect following in the crawl loop (r17, VERDICT r16
-    // #3): ~15-20% of live fetches answer 3xx, and a frontier that
-    // drops them loses the target URLs entirely. Four arms per doc
-    // (doc_id % 4): a single 301 with a ROOT-RELATIVE Location
-    // (resolved against the redirect's own URL) landing on a stored
-    // page; a 3-step chain cut by redirectCap=2 (the RFC 9110 §15.4
-    // chain bound — its final target must NOT be scheduled); a
-    // redirect LOOP back to the crawled seed (terminated by the
-    // crawled-set dedup, not the cap); and a CROSS-DOMAIN redirect to
-    // a CDN whose robots disallow the target path (admission re-runs
-    // on the TARGET domain). maxHops=4 yet only hops 1-2 can emit —
-    // the loop's early-stop on an empty hop is part of what the row
-    // set proves. Oracle: both hops unrolled as CTEs with the same
-    // resolve/dedup/cap/admission chain (locations land in canonical
-    // form by construction, so the mirror's resolve IS the canon —
-    // the Spark side still runs canonicalizeUrl over them).
-    "x152_redirect_follow" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val m = (col("doc_id") % 5).cast("string")
-      val site = concat(lit("https://s"), m, lit(".example-"), m,
-        lit(".com"))
-      val idS = col("doc_id").cast("string")
-      val arm = col("doc_id") % 4
-      val rUrl = concat(site, lit("/r/"), idS)
-      val seeds = d.select(rUrl.as("canon_url"))
-      // ONE scan builds all redirect rows (the loop re-reads this
-      // frame every hop — a 4-branch union re-ran 4 scans per hop)
-      val redirects = d.select(explode(array(
-          struct(rUrl.as("canon_url"),
-            when(arm === 0, concat(lit("/t/"), idS))
-              .when(arm === 1, concat(lit("/c1/"), idS))
-              .when(arm === 2, concat(lit("/la/"), idS))
-              .otherwise(concat(lit("https://cdn.example.net/x/"), idS))
-              .as("location")),
-          struct(when(arm === 1, concat(site, lit("/c1/"), idS))
-              .when(arm === 2, concat(site, lit("/la/"), idS))
-              .as("canon_url"),
-            when(arm === 1, concat(lit("/c2/"), idS))
-              .when(arm === 2, concat(lit("/r/"), idS))
-              .as("location")),
-          struct(when(arm === 1, concat(site, lit("/c2/"), idS))
-              .as("canon_url"),
-            when(arm === 1, concat(lit("/t/"), idS)).as("location"))))
-          .as("e"))
-        .select(col("e.canon_url").as("canon_url"),
-          col("e.location").as("location"))
-        .filter(col("canon_url").isNotNull)
-      val pages = d.filter(arm <= 1).select(
-        concat(site, lit("/t/"), idS).as("canon_url"),
-        lit("<html><body></body></html>").as("html"))
-      val doms = d.select(concat(lit("example-"), m, lit(".com"))
-          .as("reg_domain")).distinct()
-        .unionByName(s.range(1).select(lit("example.net").as("reg_domain")))
-      val robots = doms.withColumn("robots_txt",
-        when(col("reg_domain") === "example.net",
-          lit("User-agent: graftbot\nDisallow: /x\n\n" +
-            "User-agent: *\nDisallow: /\n"))
-        .otherwise(
-          lit("User-agent: graftbot\nDisallow: /private\n\n" +
-            "User-agent: *\nDisallow: /\n")))
-      val rules = RobotsOps.parseRules(robots, "graftbot")
-      CrawlOps.crawlFrontierIterate(pages, seeds, rules, maxHops = 4,
-          perHostCap = 1000000, redirects = redirects, redirectCap = 2)
-        .withColumn("path_kind",
-          regexp_extract(col("canon_url"), "/(t|c1|c2|la|x)/", 1))
-        .groupBy("hop", "path_kind")
-        .agg(count(lit(1)).as("n_scheduled"),
-          sum(when(col("fetched"), 1L).otherwise(0L)).as("n_fetched"),
-          min("canon_url").as("first_url"),
-          max("canon_url").as("last_url"))
-        .orderBy("hop", "path_kind")
-    },
-
-    // x153 — per-page robots META directives (r17; RFC 9309 §2.3.1's
-    // HTML channel): the noindex/nofollow admission flags an indexing
-    // or corpus pipeline honors alongside robots.txt. Seven arms
-    // cycle attribute order (name-first / content-first), case
-    // (NAME="ROBOTS", content="NONE"), the `none` combined token, an
-    // explicit allow, a DIFFERENT meta whose content contains the
-    // word "noindex" (name selectivity — must NOT count), and a
-    // `noindex-x` near-token (token equality, never substring).
-    "x153_meta_robots" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      d.select(col("doc_id"), metaRobotsFixture.as("html"))
-        .select(col("doc_id"),
-          HtmlOps.metaRobotsContent(col("html")).as("robots_content"),
-          HtmlOps.metaNoindex(col("html")).as("noindex"),
-          HtmlOps.metaNofollow(col("html")).as("nofollow"))
-        .orderBy("doc_id")
-    },
-
-    // x154 — nofollow-aware link graph (r17): `rel="nofollow"` anchors
-    // and page-level meta-nofollow pages contribute NO ranking edges
-    // (the endorsement rule PageRank-class graphs run on), while plain
-    // anchors do. Four anchors per page (plain cross-site, rel=
-    // nofollow cross-site, rel="ugc nofollow" token list same-site,
-    // rel="noopener noreferrer" same-site — which must NOT count);
-    // every 7th page declares meta nofollow, excluding ALL its edges.
-    // Rolled up per (src_domain, dst_domain).
-    "x154_nofollow_edges" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val pages = d.select(col("doc_id"), nofollowBase.as("base"),
-        nofollowLinkFixture.as("html"))
-      val anchors = pages.select(col("base"),
-        HtmlOps.metaNofollow(col("html")).as("page_nofollow"),
-        explode(HtmlOps.extractAnchorRels(col("html"))).as("a"))
-      anchors
-        .select(col("base"), col("page_nofollow"),
-          col("a.nofollow").as("anchor_nofollow"),
-          UrlOps.canonicalizeUrl(UrlOps.resolveUrl(col("base"),
-            col("a.href"))).as("dst"))
-        .filter(col("dst").isNotNull)
-        .groupBy(UrlOps.domainOf(col("base")).as("src_domain"),
-          UrlOps.domainOf(col("dst")).as("dst_domain"))
-        .agg(count(lit(1)).as("n_edges"),
-          sum(when(!col("page_nofollow") && !col("anchor_nofollow"), 1L)
-            .otherwise(0L)).as("n_followed"),
-          sum(when(col("anchor_nofollow"), 1L).otherwise(0L))
-            .as("n_anchor_nofollow"),
-          sum(when(col("page_nofollow"), 1L).otherwise(0L))
-            .as("n_page_nofollow"))
-        .orderBy("src_domain", "dst_domain")
-    },
-
-    // x155 — canonical-link clustering (r17; RFC 6596): URL variants
-    // that SYNTACTIC canonicalization cannot merge (?page=2 is a real
-    // query param, m.-host is a real host) all declare the same
-    // `<link rel="canonical">`, so declared-canonical clustering is
-    // the dedup tier ABOVE UrlOps.canonicalizeUrl. Three variants per
-    // article: the article itself (no canonical link — self by
-    // default), a ?page=2 variant with a ROOT-RELATIVE canonical
-    // href, and an m.-host variant with a PROTOCOL-RELATIVE one
-    // (href-before-rel attribute order) — both resolve through
-    // effectiveBase + resolveUrl like any reference.
-    "x155_canonical_cluster" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val v = col("doc_id") % 3
-      val gS = expr("doc_id div 3").cast("string")
-      val gm = expr("(doc_id div 3) % 5").cast("string")
-      val article = concat(lit("https://s"), gm, lit(".example-"), gm,
-        lit(".com/article/"), gS)
-      val pageUrl = when(v === 0, article)
-        .when(v === 1, concat(article, lit("?page=2")))
-        .otherwise(concat(lit("https://m.s"), gm, lit(".example-"), gm,
-          lit(".com/article/"), gS))
-      val canonTag = when(v === 1,
-          concat(lit("<link rel=\"canonical\" href=\"/article/"), gS,
-            lit("\">")))
-        .when(v === 2,
-          concat(lit("<link href=\"//s"), gm, lit(".example-"), gm,
-            lit(".com/article/"), gS, lit("\" rel=\"canonical\">")))
-        .otherwise(lit(""))
-      val html = concat(lit("<html><head>"), canonTag,
-        lit("</head><body><p>Variant "), v.cast("string"),
-        lit(" of article "), gS, lit(".</p></body></html>"))
-      d.select(pageUrl.as("url"), html.as("html"))
-        .select(col("url"),
-          UrlOps.canonicalizeUrl(coalesce(
-            UrlOps.resolveUrl(
-              UrlOps.effectiveBase(col("url"),
-                HtmlOps.baseHref(col("html"))),
-              HtmlOps.canonicalHref(col("html"))),
-            col("url"))).as("canonical"))
-        .groupBy("canonical")
-        .agg(count(lit(1)).as("n_variants"),
-          sum(when(col("url") === col("canonical"), 1L).otherwise(0L))
-            .as("n_self"),
-          min("url").as("first_variant"),
-          max("url").as("last_variant"))
-        .orderBy("canonical")
-    },
-
-    // x156 — meta-charset sniffing (r17; WHATWG §13.2.3.2): most real
-    // servers send `Content-Type: text/html` with NO charset — the
-    // bytes then self-declare via `<meta charset>` or the legacy
-    // http-equiv form, and the HTTP header WINS when present. Three
-    // arms: headerless UTF-8 bytes + modern meta; headerless
-    // windows-1252 bytes + legacy meta; a header-wins conflict
-    // (header iso-8859-1 beats a planted meta utf-8 — mis-precedence
-    // would mojibake the accent line). Same WARC → HTTP → decode →
-    // C4 chain as x147; oracle = the independent recompute.
-    "x156_meta_charset" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val pages = WarcOps.responses(
-        warcMetaCharsetFixture(d), "file_id", "content")
-      val decoded = HttpOps.parseResponses(pages, "payload")
-        .filter(col("status_code") === 200 &&
-          col("content_type") === "text/html")
-        .select(uriDocId,
-          coalesce(col("charset"), HtmlOps.metaCharset(col("body")))
-            .as("charset_used"),
-          col("body"))
-        .select(col("doc_id"), col("charset_used"),
-          HttpOps.decodeBody(col("body"), col("charset_used")).as("html"))
-      HtmlOps.c4Pages(decoded, "doc_id", "html")
-        .join(decoded.select("doc_id", "charset_used"), Seq("doc_id"))
-        .select("doc_id", "charset_used", "n_lines", "text")
-        .orderBy("doc_id")
-    },
-
-    // x157 — per-domain boilerplate-line removal (r17;
-    // HtmlOps.domainCleanPages — the site-granularity frequency rule
-    // of CCNet §3.1 / RefinedWeb §3.1): two footer sentences repeat on
-    // EVERY page of a domain (dropped from all of them, first page
-    // included — unlike x128's keep-first corpus dedup), while a
-    // pair-keyed promo line appears on exactly TWO same-domain pages
-    // (under minPages — kept on both). Unique article paragraphs must
-    // survive untouched.
-    "x157_domain_boilerplate" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val pages = d.select(col("doc_id"),
-        concat(lit("example-"), (col("doc_id") % 5).cast("string"),
-          lit(".com")).as("dom"),
-        boilerplateFixture.as("html"))
-      HtmlOps.domainCleanPages(pages, "doc_id", "html", "dom")
-        .select("doc_id", "n_lines", "text")
-        .orderBy("doc_id")
-    },
-
-    // x158 — crawler-trap detection (r17; CrawlOps.trapTemplates —
-    // Mercator §3.3's trap problem): per (domain, URL template), how
-    // many URLs minted vs distinct payloads served. Three spaces per
-    // domain: articles (every URL its own payload — never a trap), a
-    // calendar space (every URL the SAME payload — flags once the
-    // domain mints >= 20), and a session-id query space (3 payloads —
-    // the sorted-param-NAMES template collapses every sid). Integral
-    // basis points; exact two-stage distinct.
-    "x158_trap_templates" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val m = (col("doc_id") % 5).cast("string")
-      val site = concat(lit("https://s"), m, lit(".example-"), m,
-        lit(".com"))
-      val idS = col("doc_id").cast("string")
-      val urls = d.select(explode(array(
-          struct(concat(site, lit("/art/"), idS).as("url"),
-            md5(concat(lit("a"), idS)).as("digest")),
-          struct(concat(site, lit("/cal/2020/"), idS).as("url"),
-            md5(concat(lit("cal"), m)).as("digest")),
-          struct(concat(site, lit("/list?sid="), idS, lit("&page=1"))
-              .as("url"),
-            md5(concat(lit("s"), m, (col("doc_id") % 3).cast("string")))
-              .as("digest")))).as("e"))
-        .select(col("e.url").as("url"), col("e.digest").as("digest"))
-      CrawlOps.trapTemplates(urls)
-        .orderBy("reg_domain", "template")
-    },
-
-    // x159 — conditional-revalidation planning (r17;
-    // CrawlOps.revalidationPlan — RFC 9111 §4.3.1): the next fetch of
-    // each stored URL carries If-None-Match when its LATEST capture
-    // had an ETag, If-Modified-Since when only Last-Modified,
-    // unconditional otherwise — ranked by the same capture-history
-    // priority as x149. The x149 three-capture synthesis, with ETags
-    // on a third of URLs and Last-Modified on two thirds (so every
-    // mode arm is populated and etag-beats-lastmod is exercised).
-    // r18 arm (VERDICT r17 #6): every 5th URL carries a sitemap
-    // lastmod NEWER than its last capture — declared_newer upgrades
-    // it to an UNCONDITIONAL fetch (even over an ETag: a conditional
-    // cannot 304 when the change is already evidenced), drops the
-    // validator, and boosts priority by 10000.
-    "x159_revalidation_plan" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val caps = captureHistory(d)
-        .withColumn("digest", md5(concat(col("doc_id").cast("string"),
-          lit("_v"), col("version").cast("string"))))
-        .withColumn("etag",
-          when(col("doc_id") % 3 === 0,
-            concat(lit("\"v"), col("k").cast("string"), lit("-"),
-              col("doc_id").cast("string"), lit("\"")))
-            .otherwise(lit(null).cast("string")))
-        .withColumn("last_modified",
-          when(col("doc_id") % 3 <= 1,
-            concat(lit("Wed, 0"), (lit(1) + col("k") * 2).cast("string"),
-              lit(" Jan 2020 00:00:00 GMT")))
-            .otherwise(lit(null).cast("string")))
-      val sitemap = d.filter(col("doc_id") % 5 === 0)
-        .select(docUrl.as("url"), lit("2020-02-10").as("lastmod"))
-      CrawlOps.revalidationPlan(caps, "2020-02-15",
-          sitemapLastmod = sitemap)
-        .orderBy("url")
-    },
-
-    // x165 — deduplicated WARC store round trip (r17; WARC 1.1
-    // §6.7.2, the Common Crawl storage convention): write the x149
-    // capture history as a DEDUPLICATED store — first capture per
-    // payload digest a full response, every refetch of unchanged
-    // content a body-less revisit — then parse back, resolve the
-    // revisits by digest, and recover every capture's payload from
-    // its original. A third of URLs change every capture (no
-    // revisits), a third once (one revisit then a new response), a
-    // third never (two revisits); row-identity of the recovered
-    // payloads proves the write/resolve pair is a lossless inverse.
-    // x166 — BOM charset precedence (r17; WHATWG §13.2.3.2's ACTUAL
-    // order: byte-order mark > Content-Type header > meta): a UTF-8
-    // BOM must beat a LYING iso-8859-1 header (mis-precedence
-    // mojibakes the accent line), and UTF-16LE/BE bodies — whose
-    // interleaved NULs make header/meta sniffing useless, exactly why
-    // the BOM outranks them — must decode through their BOMs with the
-    // leading U+FEFF stripped. Fourth arm = no BOM, header utf-8 (the
-    // coalesce falls through). All four arms land row-identical on
-    // the same recomputed C4 target.
-    "x166_bom_charset" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val bomArm = col("doc_id") % 4
-      val view = when(bomArm === 0, concat(lit("ï»¿"),
-          decode(encode(accentPage, "UTF-8"), "ISO-8859-1")))
-        .when(bomArm === 1, concat(lit("ÿþ"),
-          decode(encode(accentPage, "UTF-16LE"), "ISO-8859-1")))
-        .when(bomArm === 2, concat(lit("þÿ"),
-          decode(encode(accentPage, "UTF-16BE"), "ISO-8859-1")))
-        .otherwise(decode(encode(accentPage, "UTF-8"), "ISO-8859-1"))
-      val ct = when(bomArm === 0, lit("text/html; charset=iso-8859-1"))
-        .when(bomArm === 3, lit("text/html; charset=utf-8"))
-        .otherwise(lit("text/html"))
-      val msgs = d.select(col("doc_id"),
-        concat(lit("HTTP/1.1 200 OK\r\nContent-Type: "), ct,
-          lit("\r\n\r\n"), view).as("msg"))
-      val routed = HttpOps.parseResponses(msgs, "msg")
-        .select(col("doc_id"),
-          coalesce(HttpOps.bomCharset(col("body")), col("charset"),
-            HtmlOps.metaCharset(col("body"))).as("charset_used"),
-          col("body"))
-        .select(col("doc_id"), col("charset_used"),
-          HttpOps.stripBom(HttpOps.decodeBody(col("body"),
-            col("charset_used"))).as("html"))
-      HtmlOps.c4Pages(routed, "doc_id", "html")
-        .join(routed.select("doc_id", "charset_used"), Seq("doc_id"))
-        .select("doc_id", "charset_used", "n_lines", "text")
-        .orderBy("doc_id")
-    },
-
-    "x165_dedup_store" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val caps = storeCaptures(d)
-      val recs = WarcOps.dedupStoreRecords(caps)
-        .withColumn("file_id", expr("doc_id div 8"))
-      val files = respread(recs.groupBy("file_id")
-        .agg(concat_ws("", array_sort(collect_list(
-            struct(col("doc_id"), col("k"), col("record"))))
-          .getField("record")).as("content")))
-      // parsed feeds THREE consumers (the response rows, the revisit
-      // resolution, and the revisit payload join) — without the barrier
-      // the synth+assembly+parse chain re-ran per consumer (r20, the
-      // x125 multi-consumer discipline; fixture-file-count-sized rows)
-      val parsed = WarcOps.parseRecords(files, "file_id", "content")
-        .localCheckpoint()
-      val resp = parsed.filter(col("warc_type") === "response")
-      val responses = resp.select(col("target_uri").as("url"),
-        col("warc_date").as("capture_date"),
-        lit("response").as("warc_type"),
-        lit(null).cast("string").as("original_uri"),
-        col("payload").as("payload_text"))
-      val revisits = WarcOps.resolveRevisits(parsed)
-        .join(resp.select(col("payload_digest"),
-          col("payload").as("payload_text")), Seq("payload_digest"))
-        .select(col("target_uri").as("url"),
-          col("warc_date").as("capture_date"),
-          lit("revisit").as("warc_type"), col("original_uri"),
-          col("payload_text"))
-      responses.unionByName(revisits)
-        .orderBy("url", "capture_date")
-    },
-
-    // x167 — dedup-store savings audit (r17): the table a storage
-    // owner reads before turning revisit-writing on — per change
-    // class (never / once / every-capture), how many payload chars
-    // the dedup store avoided writing. Expected shape by
-    // construction: the always-changing third saves 0 bp, the
-    // change-once third ~1/3 of its payload bytes, the never-changing
-    // third ~2/3 (two of three captures collapse to revisits).
-    "x167_store_savings" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val caps = storeCaptures(d)
-      WarcOps.dedupStoreRecords(caps)
-        .groupBy((col("doc_id") % 3).as("change_class"))
-        .agg(count(lit(1)).as("n_records"),
-          sum(when(col("is_revisit"), 1L).otherwise(0L))
-            .as("n_revisits"),
-          sum(length(col("payload")).cast(LongType)).as("payload_chars"),
-          sum(when(!col("is_revisit"),
-            length(col("payload")).cast(LongType)).otherwise(0L))
-            .as("stored_payload_chars"))
-        .withColumn("saved_bp", expr(
-          "(payload_chars - stored_payload_chars) * 10000" +
-            " div greatest(payload_chars, 1L)"))
-        .orderBy("change_class")
-    },
-
-    // x164 — WET conversion-record round trip (r17): the OUTPUT
-    // direction of the first mile — extracted pages re-wrapped as
-    // WARC `conversion` records (the Common Crawl WET artifact),
-    // grouped into files, then parsed BACK through the same ingest
-    // tier and utf-8-decoded. Text carries real non-ASCII (the accent
-    // line), so Content-Length is a true BYTE count via the UTF-8
-    // view; row-identity of the recovered text against the
-    // independently-recomputed C4 target proves write → parse →
-    // decode lossless, and length_ok=true on every row proves the
-    // byte accounting.
-    "x164_wet_roundtrip" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val pages = HtmlOps.c4Pages(
-        d.select(col("doc_id"), accentPage.as("html")), "doc_id", "html")
-      val wet = pages.select(col("doc_id"),
-        expr("doc_id div 8").as("file_id"),
-        WarcOps.conversionRecord(docUrl, lit("2020-02-01T00:00:00Z"),
-          col("text")).as("r"))
-      val files = warcFiles(wet, "doc_id")
-      WarcOps.parseRecords(files, "file_id", "content")
-        .filter(col("warc_type") === "conversion")
-        .select(uriDocId,
-          col("refers_to"), col("content_length"), col("length_ok"),
-          HttpOps.decodeBody(col("payload"), lit("utf-8")).as("text"))
-        .orderBy("doc_id")
-    },
-
-    // x162 — magic-byte media-type sniffing (r17; the WHATWG
-    // MIME-sniffing idea at the signature tier): real servers
-    // mislabel constantly — a pipeline that trusts Content-Type
-    // routes PDFs and gzip blobs into the HTML tier. Five arms: an
-    // honest html page; a PDF served as text/html (the lying server —
-    // the signature must OVERRIDE); a PNG served as image/png
-    // (agreement); a gzip blob served as text/plain (override); and
-    // an html page served as application/octet-stream (the sniffable
-    // declaration — the `<` heuristic rescues it). Signature bytes
-    // travel as latin1-view chars, constructed with chr() in the
-    // mirror.
-    "x162_media_sniff" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val arm = col("doc_id") % 5
-      val idS = col("doc_id").cast("string")
-      val body = when(arm === 0,
-          concat(lit("<html><body>page "), idS, lit("</body></html>")))
-        .when(arm === 1, concat(lit("%PDF-1.7 obj "), idS))
-        .when(arm === 2,
-          concat(lit("\u0089PNG\r\n\u001a\nIHDRfake"), idS))
-        .when(arm === 3, concat(lit("\u001f\u008bgzblob "), idS))
-        .otherwise(concat(lit("  <!DOCTYPE html><p>octet "), idS,
-          lit("</p>")))
-      val ct = when(arm === 0 || arm === 1, lit("text/html"))
-        .when(arm === 2, lit("image/png"))
-        .when(arm === 3, lit("text/plain"))
-        .otherwise(lit("application/octet-stream"))
-      val msgs = d.select(col("doc_id"),
-        concat(lit("HTTP/1.1 200 OK\r\nContent-Type: "), ct,
-          lit("\r\n\r\n"), body).as("msg"))
-      HttpOps.parseResponses(msgs, "msg")
-        .select(col("doc_id"), col("content_type").as("declared"),
-          HttpOps.sniffMediaType(col("body")).as("sniffed"))
-        .withColumn("final_type",
-          HttpOps.effectiveMediaType(col("declared"), col("sniffed")))
-        .withColumn("mislabeled", col("final_type") =!= col("declared"))
-        .orderBy("doc_id")
-    },
-
-    // x163 — soft-404 detection (r17; Bar-Yossef et al. WWW'04): 200
-    // answers that ARE error pages. Four arms per domain: a normal
-    // article (clean); a page whose digest equals the domain's
-    // known-bogus-URL probe digest (probe-digest — whatever its
-    // title); a "Page Not Found" title with a unique digest
-    // (title-pattern); and a "does not exist" phrasing (the second
-    // pattern arm). Probe table broadcast; precedence probe > title.
-    "x163_soft404" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val m = (col("doc_id") % 5).cast("string")
-      val arm = col("doc_id") % 4
-      val idS = col("doc_id").cast("string")
-      val title = when(arm === 2, lit("Page Not Found"))
-        .when(arm === 3,
-          lit("Oops, this article does not exist anymore"))
-        .otherwise(concat(lit("Article "), idS))
-      val pages = d.select(
-        concat(lit("https://s"), m, lit(".example-"), m, lit(".com/a/"),
-          idS).as("url"),
-        concat(lit("example-"), m, lit(".com")).as("reg_domain"),
-        when(arm === 1, md5(concat(lit("err"), m)))
-          .otherwise(md5(concat(lit("p"), idS))).as("digest"),
-        concat(lit("<html><head><title>"), title,
-          lit("</title></head><body>x</body></html>")).as("html"))
-      val probes = d.select(
-          concat(lit("example-"), m, lit(".com")).as("reg_domain"))
-        .distinct()
-        .withColumn("probe_digest",
-          md5(concat(lit("err"), regexp_extract(col("reg_domain"),
-            "example-([0-9]+)", 1))))
-      CrawlOps.soft404Flags(pages, probes)
-        .orderBy("url")
-    },
-
-    // x161 — HITS hubs & authorities (r17; Kleinberg 1999): the OTHER
-    // classic link signal — hubs (directory pages pointing at good
-    // authorities) vs authorities (content pages good hubs point at),
-    // the two lists a seed-selection policy wants separately. Exact
-    // integer power iteration with max-normalization per half-step
-    // (order-preserving and engine-portable where the textbook L2
-    // norm is not); same page-level edge stream as x142; 2 iterations
-    // unrolled in the mirror.
-    "x161_hits" -> { (s, dir) =>
-      val edges = pageLinkEdges(spread(t(s, dir, "documents")))
-      GraphOps.hitsInt(edges, iterations = 2)
-        .orderBy("node")
-    },
-
-    // x160 — domain-level PageRank (r17): collapse the page link
-    // graph to registered domains (inter-domain edges only, weight =
-    // page-edge count) and run the same exact integer power iteration
-    // — the domain ranking crawl schedulers actually prioritize by
-    // (Common Crawl publishes exactly this artifact). Same link
-    // synthesis as x142; 3 iterations over the 6-node domain graph.
-    "x160_domain_rank" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val pages = d.select(col("doc_id"), linkBase.as("base"),
-        linkHtmlFixture.as("html"))
-      val links = resolvedCanon(pages.select(col("base"),
-          explode(HtmlOps.extractLinks(col("html"))).as("ref")),
-        Seq("base"), "ref")
-      val domEdges = links
-        .select(UrlOps.domainOf(col("base")).as("src"),
-          UrlOps.domainOf(col("canon_url")).as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .groupBy("src", "dst")
-        .agg(count(lit(1)).as("w"))
-      GraphOps.pageRankInt(domEdges, iterations = 3)
-        .orderBy("node")
-    },
-
-    // x168 — LANGUAGE-AWARE Gopher battery (r18, VERDICT r17 #2 — the
-    // CCNet discipline): three planted language arms (en/fr/de,
-    // labeled by the REAL x18 langId), filtered once under the
-    // English-only config and once under per-language profiles, with
-    // the x105 per-group funnel showing the difference: the English
-    // config silently eats BOTH non-English arms (their stopword
-    // probes miss), the language-aware pass keeps all three. Profiles
-    // broadcast; the corpus never shuffles for the filter (plan-gated).
-    "x168_lang_gopher" -> { (s, dir) =>
-      import s.implicits._
-      val d = spread(t(s, dir, "documents"))
-      val txt = when(col("doc_id") % 3 === 0, lit(langEnText))
-        .when(col("doc_id") % 3 === 1, lit(langFrText))
-        .otherwise(lit(langDeText))
-      val docs = d.select(col("doc_id"), txt.as("text"))
-      val lang = TextOps.langId(docs)
-        .select(col("doc_id"), col("text"), col("pred_lang").as("lang"))
-      val profiles = Seq(
-        ("en", TextOps.GopherStopProbe, 2L, 10L, 100000L, 300L, 1000L, 8000L),
-        ("fr", langFrStops, 2L, 10L, 100000L, 250L, 1000L, 8000L),
-        ("de", langDeStops, 2L, 10L, 100000L, 250L, 1000L, 8000L))
-        .toDF(GopherProfileCols: _*)
-      gopherFunnel(lang, profiles)
-    },
-
-    // x169 — LANGUAGE-AWARE C4 line rules (r18, the x168 sibling at
-    // the LINE tier): an en/ja page fixture through c4KeptLinesByLang —
-    // the English terminal-punctuation and ≥3-words rules drop EVERY
-    // line of a space-free Japanese page (sentences end in 。 and
-    // space-split to one "word"); the ja profile (term 。！？」,
-    // min_line_words 1, min_line_chars 3) keeps exactly the real
-    // sentences. The en arm carries NO profile row, proving the
-    // English-defaults fallback bit-for-bit.
-    "x169_c4_lang_lines" -> { (s, dir) =>
-      import s.implicits._
-      val d = spread(t(s, dir, "documents"))
-      val arm = col("doc_id") % 2
-      val docs = d.select(col("doc_id"),
-        when(arm === 0, lit("en")).otherwise(lit("ja")).as("lang"),
-        when(arm === 0, lit(langEnHtml)).otherwise(lit(langJaHtml))
-          .as("html"))
-      val profiles = Seq(
-        ("ja", Seq("。", "！", "？", "」"), 1L, 3L))
-        .toDF("lang", "term_chars", "min_line_words", "min_line_chars")
-      HtmlOps.c4KeptLinesByLang(docs, "doc_id", "html", profiles)
-        .orderBy("doc_id", "line_no")
-    },
-
-    // x170 — WAT metadata records (r18, VERDICT r17 #3): the third leg
-    // of the Common Crawl WARC/WAT/WET artifact triple — per-page JSON
-    // metadata (links, title, headers) wrapped as WARC `metadata`
-    // records, grouped into files, then parsed BACK through the same
-    // ingest tier, utf-8-decoded, and from_json'd. The title carries a
-    // real non-ASCII em dash, so Content-Length is a true BYTE count
-    // (length_ok=true on every row proves the accounting); row-identity
-    // of the recovered fields against the independently-recomputed
-    // targets proves write → parse → decode → JSON-decode lossless.
-    "x170_wat_roundtrip" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val idS = col("doc_id").cast("string")
-      val html = concat(lit("<head><title>Page "), idS,
-        lit(" — News</title></head>"), linkHtmlFixture)
-      val meta = d.select(col("doc_id"), linkBase.as("uri"),
-        html.as("html"))
-        .select(col("doc_id"), col("uri"),
-          HtmlOps.title(col("html")).as("title"),
-          HtmlOps.extractLinks(col("html")).as("links"),
-          map(lit("content-type"), lit("text/html"),
-            lit("status"), lit("200")).as("headers"))
-      val wat = meta.select(col("doc_id"),
-        expr("doc_id div 8").as("file_id"),
-        WarcOps.watRecord(col("uri"), lit("2020-03-01T00:00:00Z"),
-          to_json(struct(col("uri"), col("title"), col("links"),
-            col("headers")))).as("r"))
-      val files = warcFiles(wat, "doc_id")
-      WarcOps.parseRecords(files, "file_id", "content")
-        .filter(col("warc_type") === "metadata")
-        .withColumn("j", HttpOps.decodeBody(col("payload"), lit("utf-8")))
-        .withColumn("m", expr("from_json(j, 'uri STRING, title STRING, " +
-          "links ARRAY<STRING>, headers MAP<STRING,STRING>')"))
-        .select(
-          expr("CAST(regexp_extract(target_uri, '/dir/page/([0-9]+)$', 1)" +
-            " AS BIGINT)").as("doc_id"),
-          col("target_uri").as("uri"),
-          col("m.title").as("title"),
-          size(col("m.links")).cast(LongType).as("n_links"),
-          concat_ws("|", col("m.links")).as("links"),
-          element_at(col("m.headers"), "content-type").as("content_type"),
-          col("length_ok"))
-        .orderBy("doc_id")
-    },
-
-    // x171 — per-HOST politeness (r18, VERDICT r17 #5): two hosts on
-    // one registered domain schedule INDEPENDENTLY — ten hub pages on
-    // blog./shop. subdomains of five domains, each linking six URLs on
-    // its own host; with the cap keyed on host every (domain, host)
-    // slot window fills to 4 (8 scheduled per domain), where a
-    // domain-keyed cap would stop at 4 total. Robots cover a dummy
-    // domain only (absent domains are unrestricted — RFC 9309), so
-    // the window is the only gate.
-    "x171_crawl_per_host" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val hubs = d.filter(col("doc_id") < 10)
-        .select(col("doc_id"), (col("doc_id") % 5).cast("string").as("m"),
-          when(expr("doc_id div 5") === 0, lit("blog"))
-            .otherwise(lit("shop")).as("sub"))
-        .withColumn("origin", concat(lit("https://"), col("sub"),
-          lit(".example-"), col("m"), lit(".com")))
-      val pages = hubs.select(
-        concat(col("origin"), lit("/hub")).as("canon_url"),
-        concat(lit("<html><body>"),
-          concat_ws("", transform(sequence(lit(0), lit(5)),
-            k => concat(lit("<a href=\"/a/"), k.cast("string"),
-              lit("\">l</a>")))),
-          lit("</body></html>")).as("html"))
-      val seeds = pages.select("canon_url")
-      val rules = RobotsOps.parseRules(
-        d.sparkSession.range(1)
-          .select(lit("unrelated.example").as("reg_domain"),
-            lit("User-agent: *\nDisallow: /private\n").as("robots_txt")),
-        "graftbot")
-      CrawlOps.crawlFrontierIterate(pages, seeds, rules, maxHops = 2)
-        .groupBy("hop", "reg_domain", "host")
-        .agg(count(lit(1)).as("n_scheduled"),
-          sum(when(col("fetched"), 1L).otherwise(0L)).as("n_fetched"),
-          min("canon_url").as("first_url"))
-        .orderBy("hop", "reg_domain", "host")
-    },
-
-    // x172 — the COMPLETE language router (r18, share-thresholded r19 —
-    // closes x18's declared CJK boundary now that the legacy-charset
-    // decode lands CJK pages in the corpus): Unicode-SCRIPT evidence
-    // first (kana → ja, hangul → ko, thai → th, han-only → zh — exact
-    // codepoint counts per block, each arm gated on the script holding
-    // ≥ ScriptShareBp of non-whitespace codepoints), the x18 trigram
-    // tier for text the router calls und. Seven planted arms: ja
-    // (kana+kanji), ko, zh (han only), th, the x168 en/fr texts riding
-    // the trigram tier, and (r19, VERDICT r18 #1) the MIXED-SCRIPT arm —
-    // an English page quoting one kana phrase, which the r18
-    // absolute-count precedence flipped to ja and which must now stay
-    // en — every route populated, both evidence tiers in the output.
-    "x172_lang_router" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val arm = col("doc_id") % 7
-      val txt = when(arm === 0, lit(langJaText))
-        .when(arm === 1, lit(langKoText))
-        .when(arm === 2, lit(langZhText))
-        .when(arm === 3, lit(langThText))
-        .when(arm === 4, lit(langEnText))
-        .when(arm === 5, lit(langFrText))
-        .otherwise(lit(langEnMixedText))
-      TextOps.langIdRouted(d.select(col("doc_id"), txt.as("text")))
-        .select("doc_id", "n_hira", "n_kata", "n_hangul", "n_han",
-          "n_thai", "script_lang", "pred_lang", "pred_hits")
-        .orderBy("doc_id")
-    },
-
-    // x173 — the NON-LATIN alphabetic web + the broadened latin tier
-    // (r19, VERDICT r18 #2/#4): eleven planted arms — ru/uk (Cyrillic),
-    // ar/fa (Arabic), el (Greek), he (Hebrew), hi (Devanagari), and
-    // it/pt/nl/pl riding the broadened latin trigram tier — through the
-    // same router. Script evidence routes to PER-SCRIPT trigram
-    // profiles (ru/uk compete only under cyrl, ar/fa only under arab),
-    // so a latin brand name inside a Cyrillic page can never steal it
-    // for English; every route populated, the per-script counts and
-    // both tiers' evidence in the output.
-    "x173_script_router_ext" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val arm = col("doc_id") % 11
-      val txt = when(arm === 0, lit(langRuText))
-        .when(arm === 1, lit(langUkText))
-        .when(arm === 2, lit(langArText))
-        .when(arm === 3, lit(langFaText))
-        .when(arm === 4, lit(langElText))
-        .when(arm === 5, lit(langHeText))
-        .when(arm === 6, lit(langHiText))
-        .when(arm === 7, lit(langItText))
-        .when(arm === 8, lit(langPtText))
-        .when(arm === 9, lit(langNlText))
-        .otherwise(lit(langPlText))
-      TextOps.langIdRouted(d.select(col("doc_id"), txt.as("text")))
-        .select("doc_id", "n_cyrl", "n_arab", "n_grek", "n_hebr",
-          "n_deva", "script_lang", "pred_lang", "pred_hits")
-        .orderBy("doc_id")
-    },
-
-    // x174 — language-aware Gopher over the NON-LATIN web (r19, the
-    // x168 funnel re-run where it matters most): en/ru/ar/el/he/hi
-    // arms labeled by the REAL router (langIdRouted — script tier,
-    // not trigram), filtered once under the English-only config and
-    // once under per-language profiles. The English config eats EVERY
-    // non-latin arm twice over — their stopword probes miss AND the
-    // [a-zA-Z] alphabetic-word floor reads every Cyrillic/Arabic/
-    // Greek/Hebrew/Devanagari word as non-alphabetic — so their
-    // profiles set min_alpha_bp 0 and their own stopword probes; the
-    // funnel proves the fallback no longer eats any of them.
-    // Profiles broadcast; the corpus never shuffles.
-    "x174_lang_gopher_ext" -> { (s, dir) =>
-      import s.implicits._
-      val d = spread(t(s, dir, "documents"))
-      val arm = col("doc_id") % 6
-      val txt = when(arm === 0, lit(langEnText))
-        .when(arm === 1, lit(langRuText))
-        .when(arm === 2, lit(langArText))
-        .when(arm === 3, lit(langElText))
-        .when(arm === 4, lit(langHeText))
-        .otherwise(lit(langHiText))
-      val docs = d.select(col("doc_id"), txt.as("text"))
-      val lang = TextOps.langIdRouted(docs)
-        .select(col("doc_id"), col("text"), col("pred_lang").as("lang"))
-      val profiles = Seq(
-        ("en", TextOps.GopherStopProbe, 2L, 10L, 100000L, 300L, 1000L, 8000L),
-        ("ru", langRuStops, 2L, 10L, 100000L, 250L, 1000L, 0L),
-        ("ar", langArStops, 2L, 10L, 100000L, 250L, 1000L, 0L),
-        ("el", langElStops, 2L, 10L, 100000L, 250L, 1000L, 0L),
-        ("he", langHeStops, 2L, 10L, 100000L, 250L, 1000L, 0L),
-        ("hi", langHiStops, 2L, 10L, 100000L, 250L, 1000L, 0L))
-        .toDF(GopherProfileCols: _*)
-      gopherFunnel(lang, profiles)
-    },
-
-    // x175 — PDF text extraction (r19, VERDICT r18 #3; the x150
-    // row-identity convention — DuckDB cannot inflate a content
-    // stream, so the oracle recomputes every TARGET independently):
-    // five arms per doc through the REAL envelope route — sniff →
-    // effectiveMediaType → pdfText. Arm 0: a FlateDecode content
-    // stream (REAL zlib bytes via DeflateBytes) with Tj/T* text ops;
-    // arm 1: a filterless raw stream with a TJ kerning array and the
-    // \( \) \\ escapes; arm 2: a stream DECLARED /FlateDecode whose
-    // bytes do not inflate — the malformed document, whose text must
-    // be the auditable NULL; arm 3: the LYING SERVER — a real PDF
-    // served as text/html, which the signature override must still
-    // route to the PDF tier; arm 4 (r20, VERDICT r19 #3): UTF-16BE
-    // text strings — a literal string and a hex string both opening
-    // with the FE FF BOM (ISO 32000-1 §7.9.2.2), carrying REAL
-    // Japanese text that must decode, not mojibake, plus a BOM-less
-    // latin literal on the same page (the two regimes coexist). No
-    // xref tables are synthesized: the kernel's stream scan (its
-    // documented contract) never consults them.
-    "x175_pdf_extract" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val idS = col("doc_id").cast("string")
-      val arm = col("doc_id") % 5
-      val contentTj = concat(lit("BT /F1 12 Tf 72 720 Td (Report "), idS,
-        lit(" first line.) Tj T* (Second line with accents: café "), idS,
-        lit(".) Tj ET"))
-      val contentLying = concat(
-        lit("BT /F1 12 Tf 72 720 Td (Hidden report "), idS,
-        lit(" behind a lying header.) Tj ET"))
-      val contentTJ = concat(
-        lit("BT 72 720 Td [(Table ) 20 (of) -20 ( contents)] TJ T* " +
-          "(Escaped \\(parens\\) and backslash \\\\ here "), idS,
-        lit(".) Tj ET"))
-      val contentU16 = concat(
-        lit("BT /F1 12 Tf 72 720 Td (" + u16beView(pdfJaHeadline) +
-          ") Tj T* (Latin tail "), idS,
-        lit(".) Tj T* <" + u16beHex(pdfJaSecond) + "> Tj ET"))
-      // stream payload view: real zlib bytes (arm 0/3), the raw ops
-      // (arm 1/4), or garbage under a /FlateDecode declaration (arm 2)
-      val flateView = decode(bridge1(graft.functions.DeflateBytes(_),
-        when(arm === 3, contentLying).otherwise(contentTj)), "ISO-8859-1")
-      val streamView = when(arm === 1, contentTJ)
-        .when(arm === 4, contentU16)
-        .when(arm === 2, lit("this is not a deflate stream at all"))
-        .otherwise(flateView)
-      val filterDecl = when(arm === 1 || arm === 4, lit(""))
-        .otherwise(lit(" /Filter /FlateDecode"))
-      val pdf = concat(
-        lit("%PDF-1.4\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\n" +
-          "endobj\n2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\n" +
-          "endobj\n3 0 obj\n<< /Type /Page /Parent 2 0 R /Contents " +
-          "4 0 R >>\nendobj\n4 0 obj\n<< /Length "),
-        length(streamView).cast("string"), filterDecl,
-        lit(" >>\nstream\n"), streamView,
-        lit("\nendstream\nendobj\n%%EOF"))
-      val ct = when(arm === 3, lit("text/html"))
-        .otherwise(lit("application/pdf"))
-      val msgs = d.select(col("doc_id"),
-        concat(lit("HTTP/1.1 200 OK\r\nContent-Type: "), ct,
-          lit("\r\n\r\n"), pdf).as("msg"))
-      HttpOps.parseResponses(msgs, "msg")
-        .select(col("doc_id"), col("content_type").as("declared"),
-          HttpOps.effectiveMediaType(col("content_type"),
-            HttpOps.sniffMediaType(col("body"))).as("final_type"),
-          col("body"))
-        .withColumn("pdf_text",
-          when(col("final_type") === "application/pdf",
-            HttpOps.pdfText(col("body"))))
-        .select("doc_id", "declared", "final_type", "pdf_text")
-        .orderBy("doc_id")
-    },
-
-    // x176 — the FIRST-MILE → TRAINING-MANIFEST capstone (r19, VERDICT
-    // r18 #7): the whole r15–r19 stack in ONE oracle-gated composite —
-    // `.warc.gz` (per-record gzip members) → HTTP envelope (gzip
-    // content coding on even docs, chunked transfer coding on odd) →
-    // charset decode (ja pages travel as REAL shift_jis bytes; en/fr
-    // as UTF-8) → the r19 language router (script tier for ja, trigram
-    // tier for en/fr) → language-aware C4 line rules (ja profile:
-    // 。-terminal, 1-word lines) → language-aware Gopher (ja profile:
-    // alpha floor 0, wide word-len band) → OPH near-dup dedup over
-    // char-6 shingles at 0.9 (each (lang, doc_id div 6) group plants
-    // an EXACT duplicate pair; the md5 group token keeps cross-group
-    // Jaccard ~0.5, far under threshold) → token-budget mixture
-    // (en .4 / fr .3 / ja .3 — chars as the token proxy, the honest
-    // unit a space-free script shares) → GPT-style sequence packing.
-    // r20 (VERDICT r19 #2): two of every eight docs travel as
-    // application/pdf — the x162 media-type route sends them through
-    // the x175 PdfToText kernel (the ja paragraph as a UTF-16BE hex
-    // string) instead of the charset/HTML tier, and the SAME
-    // router→C4→Gopher→dedup→mixture→packing chain consumes the
-    // result; a pdf doc can be near-dup-dropped against an html doc
-    // (cross-format dedup). Output: the per-(stage, lang/src-cohort)
-    // funnel — extracted / quality / deduped / mixture / packed — doc
-    // counts and token sums, the integration proof that the tiers
-    // compose without a seam, with the `…/pdf` cohorts surviving to
-    // `packed` read straight off the rows. Every fifth doc plants a
-    // "too short." page that the quality tier must eat in every
-    // language. Oracle = the independently-recomputed chain over the
-    // PLAINTEXT synthesis (the x139/x150 convention: DuckDB cannot
-    // gunzip, dechunk, decode shift_jis, or walk a PDF stream —
-    // funnel identity proves the envelope tiers were lossless).
-    "x176_first_mile_capstone" -> { (s, dir) =>
-      import s.implicits._
-      val d = spread(t(s, dir, "documents"))
-      val l3 = col("doc_id") % 3
-      val isShort = col("doc_id") % 5 === 4
-      val md5g = md5(expr("doc_id div 6").cast("string"))
-      // line 1 as the DECLARED-CHARSET byte view: the ja paragraph's
-      // real windows-31j bytes (shift_jis superset — the WHATWG label),
-      // the fr paragraph's real UTF-8 bytes; ASCII is identity in both
-      val line1View = when(isShort, lit("too short."))
-        .when(l3 === 0, lit(capEnPara))
-        .when(l3 === 1, decode(encode(lit(capFrPara), "UTF-8"), "ISO-8859-1"))
-        .otherwise(lit(sjisView(capJaPara)))
-      // line 2 carries the group token TWICE (md5 + its reverse): the
-      // group-unique shingle mass then rivals the shared paragraph's,
-      // which keeps the OPH hot-bucket (the all-minima-from-the-shared-
-      // paragraph signature) small — without it, cross-group banding
-      // collisions grow a bucket that both engines must pay
-      // quadratically to verify (measured: the DuckDB mirror blew past
-      // the bench window at sf0.1 before this)
-      val htmlView = concat(lit("<html><body><p>"), line1View,
-        lit("</p><p>ref "), md5g, lit(" "), reverse(md5g),
-        lit(" end.</p><p>" + capJsLine + "</p></body></html>"))
-      // the PDF slice (r20, VERDICT r19 #2): two of every eight docs
-      // — one on the gzip coding, one on the chunked coding — travel
-      // as application/pdf instead of HTML, carrying the SAME two
-      // content lines as PDF text operators (no js boilerplate — a
-      // PDF has no "enable javascript" chrome): en/fr/short line1 as
-      // a latin1 literal string, the ja paragraph as a UTF-16BE HEX
-      // string (the x175 arm-4 tier — a PDF is how non-latin text
-      // actually reaches a crawl without a charset header)
-      val isPdf = (col("doc_id") % 8).isin(2, 5)
-      val pdfLine1Tok = when(isShort, lit("(too short.)"))
-        .when(l3 === 0, lit("(" + capEnPara + ")"))
-        .when(l3 === 1, lit("(" + capFrPara + ")"))
-        .otherwise(lit("<" + u16beHex(capJaPara) + ">"))
-      val pdfContent = concat(lit("BT "), pdfLine1Tok,
-        lit(" Tj T* (ref "), md5g, lit(" "), reverse(md5g),
-        lit(" end.) Tj ET"))
-      val pdfView = concat(
-        lit("%PDF-1.4\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\n" +
-          "endobj\n4 0 obj\n<< /Length "),
-        length(pdfContent).cast("string"),
-        lit(" >>\nstream\n"), pdfContent,
-        lit("\nendstream\nendobj\n%%EOF"))
-      val bodyView = when(isPdf, pdfView).otherwise(htmlView)
-      val cs = when(l3 === 2, lit("shift_jis")).otherwise(lit("utf-8"))
-      val gzView = decode(bridge1(graft.functions.GzipBytes(_), bodyView),
-        "ISO-8859-1")
-      val c1 = substring(bodyView, 1, 64)
-      val c2 = substring(bodyView, 65, Int.MaxValue - 64)
-      val chunked = concat(
-        hex(length(c1)), lit("\r\n"), c1, lit("\r\n"),
-        hex(length(c2)), lit("\r\n"), c2, lit("\r\n0\r\n\r\n"))
-      val ctHdr = when(isPdf, lit("application/pdf"))
-        .otherwise(concat(lit("text/html; charset="), cs))
-      val httpMsg = concat(
-        lit("HTTP/1.1 200 OK\r\nContent-Type: "), ctHdr,
-        when(col("doc_id") % 2 === 0,
-          concat(lit("\r\nContent-Encoding: gzip\r\nContent-Length: "),
-            length(gzView).cast("string"), lit("\r\n\r\n"), gzView))
-          .otherwise(concat(
-            lit("\r\nTransfer-Encoding: chunked\r\n\r\n"), chunked)))
-      val files = warcHttpFiles(d, Seq(), httpMsg, gz = true,
-        date = lit("2020-03-01T00:00:00Z"))
-      // ---- the engine chain under test ----
-      val pages = WarcOps.responses(
-        files.select(col("file_id"),
-          WarcOps.gunzipText(col("gz")).as("content")),
-        "file_id", "content")
-      // MATERIALIZE at the decode+extract boundary (the x125
-      // multi-consumer discipline, here against Catalyst's
-      // CollapseProject): the router evaluates ~25 expressions over
-      // `ptext`, and without a barrier each one inlines its OWN copy
-      // of the gunzip → envelope-split → charset-decode → tag-strip
-      // chain — measured 80 s of a 130 s run at sf0.1; with the one
-      // page-count-sized checkpoint the router stage is seconds
-      val body = HttpOps.decodeBody(col("body"), col("charset"))
-      // the media-type ROUTE (x162's effectiveMediaType): html decodes
-      // through the charset tier, pdf through the PdfToText kernel —
-      // the extracted text then joins ONE downstream chain, with the
-      // source format carried as provenance (`src`) so the funnel can
-      // show the PDF slice surviving to `packed`.
-      // TWO materialization boundaries here (the r19 CollapseProject
-      // lesson, measured again in r20): the route needs the media type
-      // in a filter plus three projections, and each copy would inline
-      // its OWN gunzip→dechunk envelope chain (~8 copies — x176 went
-      // 11.5 s → 33.5 s when the route was first fused). Boundary 1
-      // materializes the parsed envelope (body + headers); the route
-      // and decode then run over STORED columns, and boundary 2 (the
-      // pre-existing one) materializes the extracted text for the
-      // ~25-expression router fan-out downstream.
-      val envelope = HttpOps.parseResponses(pages, "payload")
-        .filter(col("status_code") === 200)
-        .select(uriDocId, col("content_type"), col("charset"), col("body"))
-        .localCheckpoint()
-      val mt = HttpOps.effectiveMediaType(col("content_type"),
-        HttpOps.sniffMediaType(col("body")))
-      val extracted = when(mt === "application/pdf",
-        HttpOps.pdfText(col("body"))).otherwise(body)
-      val routed = envelope
-        .filter(mt.isin("text/html", "application/pdf"))
-        .select(col("doc_id"),
-          when(mt === "application/pdf", lit("pdf"))
-            .otherwise(lit("html")).as("src"),
-          extracted.as("html"),
-          HtmlOps.htmlToText(extracted).as("ptext"))
-        .localCheckpoint()
-      val labeled = TextOps.langIdRouted(routed, "ptext")
-        .select(col("doc_id"), col("html"), col("src"),
-          col("pred_lang").as("lang"))
-      val c4Profiles = Seq(("ja", Seq("。", "."), 1L, 3L))
-        .toDF("lang", "term_chars", "min_line_words", "min_line_chars")
-      val lines = HtmlOps.c4KeptLinesByLang(labeled, "doc_id", "html",
-        c4Profiles, carry = Seq("src"))
-      val docsText = lines.groupBy(col("doc_id"), col("lang"), col("src"))
-        .agg(concat_ws("\n", array_sort(collect_list(
-            struct(col("line_no"), col("line")))).getField("line"))
-          .as("text"))
-        .withColumn("n_tokens", length(col("text")).cast(LongType))
-        .localCheckpoint()
-      val gProfiles = Seq(
-        ("en", TextOps.GopherStopProbe, 2L, 10L, 100000L, 300L, 1000L, 8000L),
-        ("fr", capFrStops, 2L, 10L, 100000L, 250L, 1000L, 8000L),
-        ("ja", Seq("の"), 0L, 1L, 100000L, 1L, 100000L, 0L))
-        .toDF("lang", "stop_words", "min_stop_hits", "min_words",
-          "max_words", "min_word_len_centi", "max_word_len_centi",
-          "min_alpha_bp")
-      val quality = TextOps.gopherFilterByLang(docsText, gProfiles)
-        .filter(col("keep"))
-        .select("doc_id", "lang", "src", "text", "n_tokens")
-        .localCheckpoint()
-      // maxBucket 100: the shared paragraph makes one band signature
-      // (all four minima from the paragraph's shingles) corpus-hot —
-      // the exact bucket class the cap exists for at 100 TB. Planted
-      // pairs are identical docs, so they collide in ALL four bands
-      // and the probability every one of them is the hot signature is
-      // ~(0.09)^4 — each pair keeps a private small bucket and is
-      // found; the cap only sheds the quadratic cross-group bucket.
-      val pairs = DedupOps.nearDupPairs(quality, "doc_id",
-        TextOps.charShingles(col("text"), 6), 0.9, oph = true,
-        maxBucket = 100)
-      val dropd = DedupOps.connectedComponents(pairs)
-        .filter(col("comp") < col("id"))
-        .select(col("id").as("doc_id"))
-      val deduped = quality.join(dropd, Seq("doc_id"), "left_anti")
-      val mix = SampleOps.tokenBudgetMixture(deduped, "doc_id", "lang",
-          "n_tokens", Seq("en" -> 0.4, "fr" -> 0.3, "ja" -> 0.3))
-        .select("doc_id", "lang", "src", "n_tokens")
-        .localCheckpoint()
-      val packed = SampleOps.packSequences(
-          mix.select(col("doc_id"), col("n_tokens")),
-          "doc_id", "n_tokens", seqLen = 128)
-        .join(mix.select(col("doc_id"), col("lang"), col("src")),
-          Seq("doc_id"))
-        .withColumn("n_tokens", col("n_toks"))
-      // the funnel reports per (lang, source-format) cohort — the
-      // integration proof VERDICT r19 #2 asked for reads straight off
-      // the `…/pdf` rows surviving every stage to `packed`
-      def coh(df: org.apache.spark.sql.DataFrame) = df.withColumn(
-        "cohort", concat_ws("/", col("lang"), col("src")))
-      StatOps.funnelReportBy(Seq(
-          "extracted" -> coh(docsText), "quality" -> coh(quality),
-          "deduped" -> coh(deduped), "mixture" -> coh(mix),
-          "packed" -> coh(packed)),
-          col("n_tokens"), "cohort")
-        .orderBy("stage_idx", "cohort")
-    },
-
-    // x177 — C4 line-rule profiles for the non-latin script tier (r20,
-    // VERDICT r19 #4; the x169 pattern widened): el/he/hi/ar pages
-    // through c4KeptLinesByLang with the SHIPPED
-    // [[graft.ops.HtmlOps.c4LineProfiles]] table — the Greek question
-    // mark (;), the sof pasuq (׃), the danda (।), and the Arabic
-    // question mark (؟) all end real sentences that the English
-    // terminal-punctuation rule silently eats (exactly the way ja
-    // lines were eaten before x169). Each arm also plants an
-    // ASCII-period line (kept under BOTH rule sets — the profile must
-    // not break the common case), the too-short line, and the
-    // javascript boilerplate (dropped everywhere). The en control arm
-    // carries no profile row, proving the defaults fallback.
-    "x177_c4_script_lines" -> { (s, dir) =>
-      import s.implicits._
-      val d = spread(t(s, dir, "documents"))
-      val arm = col("doc_id") % 5
-      val docs = d.select(col("doc_id"),
-        when(arm === 0, lit("el")).when(arm === 1, lit("he"))
-          .when(arm === 2, lit("hi")).when(arm === 3, lit("ar"))
-          .otherwise(lit("en")).as("lang"),
-        when(arm === 0, lit(c4ElHtml)).when(arm === 1, lit(c4HeHtml))
-          .when(arm === 2, lit(c4HiHtml)).when(arm === 3, lit(c4ArHtml))
-          .otherwise(lit(langEnHtml)).as("html"))
-      val profiles = graft.ops.HtmlOps.c4LineProfiles
-        .toDF("lang", "term_chars", "min_line_words", "min_line_chars")
-      HtmlOps.c4KeptLinesByLang(docs, "doc_id", "html", profiles)
-        .orderBy("doc_id", "line_no")
-    },
-
-    // x178 — CDX(J) index round trip with a REAL SEEK (r20, VERDICT
-    // r19 #5 — the artifact that makes the x165 dedup store seekable,
-    // completing the WARC/WAT/WET/CDX Common Crawl artifact family):
-    // the x165 capture synthesis → dedup store records → cdxjRecords
-    // (SURT urlkey, 14-digit timestamp, JSON with offset/length/
-    // filename) → parse the lines BACK → use the recovered
-    // offset/length to substring the assembled file content and
-    // re-parse THAT SLICE as a WARC record. seek_ok ties the loop:
-    // the seeked record's length_ok, target URI, and payload digest
-    // must all match the index row — the proof a replay consumer can
-    // jump straight to one capture without scanning the file.
-    "x178_cdxj_index" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val caps = storeCaptures(d)
-      // recs feeds BOTH the index and the assembled files — checkpoint
-      // once (r20, the x125 multi-consumer discipline) so the
-      // digest-window store synthesis runs once, not per consumer.
-      // `parsed` (two consumers) is deliberately NOT checkpointed: the
-      // file-keyed offset window must stay visible in the final plan
-      // (the x178 plan gate asserts the window is file-partitioned),
-      // and re-running the narrow cdxj parse over the checkpointed recs
-      // is cheap.
-      val recs = WarcOps.dedupStoreRecords(caps)
-        .withColumn("file_id", expr("doc_id div 8"))
-        .localCheckpoint()
-      val idx = WarcOps.cdxjRecords(recs, "file_id", Seq("doc_id", "k"))
-      val files = respread(recs.groupBy("file_id")
-        .agg(concat_ws("", array_sort(collect_list(
-            struct(col("doc_id"), col("k"), col("record"))))
-          .getField("record")).as("content")))
-      val parsed = WarcOps.parseCdxj(
-        idx.select(col("file_id"), col("doc_id"), col("k"), col("cdxj")),
-        "cdxj")
-      val sliced = parsed.join(files, Seq("file_id"))
-        .select((col("doc_id") * 3 + col("k")).as("rid"),
-          col("content").substr(col("offset").cast("int") + lit(1),
-            col("rec_length").cast("int")).as("slice"))
-      val reparsed = WarcOps.parseRecords(sliced, "rid", "slice")
-        .select(col("rid"), col("warc_type").as("rec_type"),
-          col("target_uri").as("seek_uri"),
-          col("payload_digest").as("seek_digest"),
-          col("payload").as("seek_payload"), col("length_ok"))
-      parsed.withColumn("rid", col("doc_id") * 3 + col("k"))
-        .join(reparsed, Seq("rid"))
-        .withColumn("seek_ok", col("length_ok") &&
-          col("seek_uri") === col("url") &&
-          col("seek_digest") === col("digest"))
-        .select("doc_id", "k", "urlkey", "cdxj_ts", "url", "mime",
-          "status", "offset", "rec_length", "digest", "rec_type",
-          "seek_payload", "seek_ok")
-        .orderBy("doc_id", "k")
-    },
-
-    // x179 — SORTED CDXJ shards + the SURT range scan (r20, the claim
-    // x178's urlkey exists for, proven: host-label REVERSAL makes one
-    // registered domain's captures — root AND subdomains —
-    // lexicographically contiguous, so a sorted index answers "every
-    // capture of example-1.com and its hosts" as ONE prefix range
-    // with no full scan). Three host arms per doc (www. — which the
-    // canonical form strips — blog., shop.) across four registered
-    // domains, two captures each; index lines sort into per-shard
-    // files by (urlkey, timestamp), the files split back into lines,
-    // and the gate (a) proves every shard's line order is
-    // non-decreasing (sorted_ok, computed for real with a lag window)
-    // and (b) answers the example-1 range scan by urlkey prefix,
-    // row-identical to the oracle's independent recomputation.
-    "x179_cdxj_range_scan" -> { (s, dir) =>
-      val d = spread(t(s, dir, "documents"))
-      val idS = col("doc_id").cast("string")
-      val m = (col("doc_id") % 4).cast("string")
-      val sub = when(col("doc_id") % 3 === 0, lit("www."))
-        .when(col("doc_id") % 3 === 1, lit("blog."))
-        .otherwise(lit("shop."))
-      val caps = d
-        .select(col("doc_id"), explode(sequence(lit(0), lit(1))).as("k"))
-        .withColumn("url", concat(lit("https://"), sub,
-          lit("example-"), m, lit(".com/doc/"), idS, lit("/"),
-          col("k").cast("string")))
-        .withColumn("capture_date", concat(lit("2020-02-0"),
-          (col("k") + 1).cast("string")))
-        .withColumn("payload", concat(lit("Cap "),
-          col("k").cast("string"), lit(" of doc "), idS, lit(".")))
-        .withColumn("digest", md5(col("payload")))
-      val recs = WarcOps.dedupStoreRecords(caps)
-        .withColumn("file_id", expr("doc_id div 8"))
-      val idx = WarcOps.cdxjRecords(recs, "file_id", Seq("doc_id", "k"))
-      val shards = respread(idx.groupBy("file_id")
-        .agg(concat_ws("\n", array_sort(collect_list(
-            struct(col("urlkey"), col("cdxj_ts"), col("cdxj"))))
-          .getField("cdxj")).as("content")))
-      val lines = shards.select(col("file_id"),
-        posexplode(split(col("content"), "\n"))
-          .as(Seq("line_no", "line")))
-      // parsed feeds the sortedness window AND the range filter —
-      // one checkpoint, one parse (the x125 multi-consumer discipline)
-      val parsed = WarcOps.parseCdxj(lines, "line").localCheckpoint()
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("file_id").orderBy("line_no")
-      val key = concat_ws(" ", col("urlkey"), col("cdxj_ts"))
-      val sortedOk = parsed
-        .withColumn("__prev", lag(key, 1).over(w))
-        .groupBy("file_id")
-        .agg(min(col("__prev").isNull || col("__prev") <= key)
-          .as("sorted_ok"))
-      parsed
-        .filter(col("urlkey").startsWith("com,example-1"))
-        .join(sortedOk, Seq("file_id"))
-        .select("file_id", "urlkey", "cdxj_ts", "url", "sorted_ok")
-        .orderBy("file_id", "urlkey", "cdxj_ts")
-    }
-  )
-
   /** The x149 capture history: three weekly captures `k` per doc URL;
     * `version` changes every capture on `doc_id % 3 == 0`, once (at the
     * third) on `== 1`, never on `== 2`. Columns (doc_id, k, url,
@@ -4969,23 +1682,43 @@ object ExtensionQueries {
       |   WHERE ('0x' || substr(md5(s.doc_id::VARCHAR), 1, 15))::BIGINT
       |     % 10000 < r.rate_bp)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
-    "x16_text_tokens" ->
+  /** Each query body above its DuckDB mirror. The oracle strings are built
+    * when the object initialises, so the catalog sits below every strict
+    * `val` they read: placed above one, it would read `null`.
+    */
+  val catalog: Map[String, QueryCase] = QueryCase.catalog(
+    // x16 — token counting (whitespace, alpha runs, BPE-ish segmentation).
+    "x16_text_tokens" -> QueryCase({ (s, dir) =>
+      TextOps.tokenCounts(spread(t(s, dir, "documents")))
+        .select("doc_id", "ws_tokens", "alpha_tokens", "bpe_tokens")
+        .orderBy("doc_id")
+    }, oracle =
       """SELECT doc_id,
         | len(string_split(text,' '))::BIGINT AS ws_tokens,
         | len(regexp_extract_all(text,'[a-z]+'))::BIGINT AS alpha_tokens,
         | len(regexp_extract_all(text,'[a-z]+|[0-9]+|[^a-z0-9 ]'))::BIGINT AS bpe_tokens
-        | FROM documents ORDER BY doc_id""".stripMargin,
+        | FROM documents ORDER BY doc_id""".stripMargin),
 
-    "x17_text_quality" ->
+    // x17 — quality-score signals (C4/Gopher-style filters), basis points.
+    "x17_text_quality" -> QueryCase({ (s, dir) =>
+      TextOps.qualityScore(spread(t(s, dir, "documents")))
+        .select("doc_id", "n_words", "avg_word_len_bp", "stop_ratio_bp",
+          "alpha_ratio_bp")
+        .orderBy("doc_id")
+    }, oracle =
       """SELECT doc_id,
         | len(string_split(text,' '))::BIGINT AS n_words,
         | floor((len(text) - len(string_split(text,' ')) + 1)::DOUBLE * 10000 / len(string_split(text,' '))::DOUBLE)::BIGINT AS avg_word_len_bp,
         | floor(len(list_filter(string_split(text,' '), x -> list_contains(['the','a','of','and','in'], x)))::DOUBLE * 10000 / len(string_split(text,' '))::DOUBLE)::BIGINT AS stop_ratio_bp,
         | floor(len(regexp_replace(text,'[^a-z]','','g'))::DOUBLE * 10000 / len(text)::DOUBLE)::BIGINT AS alpha_ratio_bp
-        | FROM documents ORDER BY doc_id""".stripMargin,
+        | FROM documents ORDER BY doc_id""".stripMargin),
 
-    "x18_lang_id" -> {
+    // x18 — char-trigram-profile language ID (n-gram heuristic).
+    "x18_lang_id" -> QueryCase({ (s, dir) =>
+      TextOps.langId(spread(t(s, dir, "documents")))
+        .select("doc_id", "pred_lang", "pred_hits")
+        .orderBy("doc_id")
+    }, oracle = {
       // relational trigram scoring (triScoreCtesSql — r19): struct max
       // ≙ Spark array_max (field-order comparison, ties break on the
       // lexicographically-largest lang); a doc with NO profile hits
@@ -5000,23 +1733,39 @@ object ExtensionQueries {
          |   coalesce(mm.m.hits, 0)::BIGINT AS pred_hits
          | FROM tr LEFT JOIN mm ON mm.doc_id = tr.doc_id
          | ORDER BY tr.doc_id""".stripMargin
-    },
+    }),
 
-    "x19_fingerprint" ->
+    // x19 — bottom-k sketch document fingerprint.
+    "x19_fingerprint" -> QueryCase({ (s, dir) =>
+      TextOps.fingerprint(spread(t(s, dir, "documents")))
+        .select("doc_id", "fp")
+        .orderBy("doc_id")
+    }, oracle =
       """SELECT doc_id,
         | array_to_string(list_sort(list_transform(list_distinct(
         |   list_transform(range(1, greatest(len(text)-7,0)+1), i -> substr(text,i::INT,8))),
         |   s -> md5(s)))[1:4], '') AS fp
-        | FROM documents ORDER BY doc_id""".stripMargin,
+        | FROM documents ORDER BY doc_id""".stripMargin),
 
-    "x20_dedup_exact" ->
+    // x20 — exact dedup by content hash (keep min doc_id per md5(text)).
+    "x20_dedup_exact" -> QueryCase({ (s, dir) =>
+      DedupOps.exact(t(s, dir, "documents"), "doc_id", "text")
+        .orderBy("doc_id")
+    }, oracle =
       """SELECT doc_id FROM (
         | SELECT min(doc_id) AS doc_id FROM documents
         |   WHERE text IS NOT NULL GROUP BY md5(text)
         | UNION ALL SELECT doc_id FROM documents WHERE text IS NULL
-        |) ORDER BY doc_id""".stripMargin,
+        |) ORDER BY doc_id""".stripMargin),
 
-    "x21_dedup_ngram_jaccard" ->
+    // x21 — n-gram Jaccard near-dup pairs via shingle equi-join (no cross
+    // join anywhere: the shuffle key is the shingle).
+    "x21_dedup_ngram_jaccard" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      DedupOps.ngramJaccardPairs(d, "doc_id",
+          TextOps.wordShingles(col("text"), 3), 0.5)
+        .orderBy("i", "j")
+    }, oracle =
       s"""$word3gramShingles,
          | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
          | $exactInterSql
@@ -5024,18 +1773,29 @@ object ExtensionQueries {
          |   floor(c::DOUBLE * 10000 / (na.n + nb.n - c)::DOUBLE)::BIGINT AS jaccard_bp
          | FROM inter JOIN n na ON na.doc_id = i JOIN n nb ON nb.doc_id = j
          | WHERE $jaccardHitSql
-         | ORDER BY i, j""".stripMargin,
+         | ORDER BY i, j""".stripMargin),
 
-    "x22_dedup_minhash_lsh" ->
+    // x22 — MinHash+LSH candidate pairs (16 hashes, 4 bands × 4 rows:
+    // P(candidate) = 1-(1-J^4)^4 → J=0.99 caught, J=0.1 ~4e-4).
+    "x22_dedup_minhash_lsh" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      DedupOps.minhashLshCandidates(d, "doc_id",
+          TextOps.wordShingles(col("text"), 3), numHashes = 16, bandRows = 4)
+        .orderBy("i", "j")
+    }, oracle =
       s"""$word3gramShingles,
          | $minhashBsigSql
          | SELECT a.doc_id i, b.doc_id j, count(*)::BIGINT AS bands
          | FROM bsig a JOIN bsig b
          |   ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
          | JOIN okb ON okb.band = a.band AND okb.sig = a.sig
-         | GROUP BY 1, 2 ORDER BY i, j""".stripMargin,
+         | GROUP BY 1, 2 ORDER BY i, j""".stripMargin),
 
-    "x23_dedup_simhash" ->
+    // x23 — SimHash near-dup pairs (60-bit code, hamming ≤ 3).
+    "x23_dedup_simhash" -> QueryCase({ (s, dir) =>
+      DedupOps.simhashPairs(spread(t(s, dir, "documents")), "doc_id", "text", 3)
+        .orderBy("i", "j")
+    }, oracle =
       """WITH w AS (SELECT doc_id, unnest(string_split(text,' ')) word FROM documents),
         | h AS (SELECT doc_id, ('0x' || substr(md5(word),1,15))::BIGINT hash FROM w),
         | bits AS (SELECT doc_id, b,
@@ -5046,9 +1806,14 @@ object ExtensionQueries {
         |   FROM bits GROUP BY doc_id)
         | SELECT a.doc_id i, b.doc_id j, bit_count(xor(a.sh, b.sh))::BIGINT AS ham
         | FROM sim a JOIN sim b ON a.doc_id < b.doc_id
-        | WHERE bit_count(xor(a.sh, b.sh)) <= 3 ORDER BY i, j""".stripMargin,
+        | WHERE bit_count(xor(a.sh, b.sh)) <= 3 ORDER BY i, j""".stripMargin),
 
-    "x24_dedup_embedding" ->
+    // x24 — embedding-cosine near-dup pairs (brute-force exact baseline).
+    "x24_dedup_embedding" -> QueryCase({ (s, dir) =>
+      DedupOps.embeddingNearDup(spread(t(s, dir, "embeddings")), "vec_id",
+          "embedding", 0.45)
+        .orderBy("i", "j")
+    }, oracle =
       // nrm > 0 matches embeddingNearDup's sided() exclusion — DuckDB's
       // NaN-is-greatest would otherwise pass `cos >= 0.45` for a
       // zero-norm row Spark excludes
@@ -5058,27 +1823,57 @@ object ExtensionQueries {
          |     ${dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) cos
          |   FROM v a JOIN v b ON a.vec_id < b.vec_id)
          | SELECT i, j, floor(cos * 10000)::BIGINT AS cos_bp
-         | FROM p WHERE cos >= 0.45 ORDER BY i, j""".stripMargin,
+         | FROM p WHERE cos >= 0.45 ORDER BY i, j""".stripMargin),
 
-    "x25_ann_topk" ->
+    // x25 — exact ANN baseline: brute-force cosine top-5 for 20 query
+    // vectors (corpus scanned once, queries broadcast).
+    "x25_ann_topk" -> QueryCase({ (s, dir) =>
+      val e = spread(t(s, dir, "embeddings"))
+      VectorOps.bruteForceTopK(e.filter(col("vec_id") < 20), e, "vec_id",
+          "embedding", 5)
+        .orderBy("qid", "nid")
+    }, oracle =
       s"""WITH $annV,
          | $annBrute
          | SELECT qid, nid, rk::BIGINT AS rk, floor(cos * 10000)::BIGINT AS cos_bp
-         | FROM r_ex WHERE rk <= 5 ORDER BY qid, nid""".stripMargin,
+         | FROM r_ex WHERE rk <= 5 ORDER BY qid, nid""".stripMargin),
 
-    "x26_ann_lsh" ->
+    // x26 — LSH-bucketed ANN (8 random hyperplanes → 256 buckets); the
+    // scale path: corpus partitions by bucket, queries probe one bucket.
+    "x26_ann_lsh" -> QueryCase({ (s, dir) =>
+      val e = spread(t(s, dir, "embeddings"))
+      VectorOps.lshTopK(e.filter(col("vec_id") < 20), e, "vec_id",
+          "embedding", 5, dim = 64, numPlanes = 8)
+        .orderBy("qid", "nid")
+    }, oracle =
       s"""WITH $annV,
          | $annLsh
          | SELECT qid, nid, rk::BIGINT AS rk, floor(cos * 10000)::BIGINT AS cos_bp
-         | FROM r_ap WHERE rk <= 5 ORDER BY qid, nid""".stripMargin,
+         | FROM r_ap WHERE rk <= 5 ORDER BY qid, nid""".stripMargin),
 
-    "x35_ann_ivf" ->
+    // x35 — IVF ANN (8 deterministic seed centroids, 2-probe): the other
+    // classic scale path next to LSH (x26). Corpus shuffles once on its
+    // cell id; queries probe 2/8 of the data.
+    "x35_ann_ivf" -> QueryCase({ (s, dir) =>
+      val e = spread(t(s, dir, "embeddings"))
+      VectorOps.ivfTopK(e.filter(col("vec_id") < 20), e, "vec_id",
+          "embedding", 5, numCentroids = 8, nProbe = 2)
+        .orderBy("qid", "nid")
+    }, oracle =
       s"""WITH $annV,
          | $annIvf
          | SELECT qid, nid, rk::BIGINT AS rk, floor(cos * 10000)::BIGINT AS cos_bp
-         | FROM r_ivf WHERE rk <= 5 ORDER BY qid, nid""".stripMargin,
+         | FROM r_ivf WHERE rk <= 5 ORDER BY qid, nid""".stripMargin),
 
-    "x39_resample_fill" ->
+    // x39 — fixed-interval resample + forward gap-fill (TimeOps): hourly
+    // per-user max(value), densified over each user's active span.
+    "x39_resample_fill" -> QueryCase({ (s, dir) =>
+      TimeOps.resampleFill(t(s, dir, "events"), "user_id", "ts", "value",
+          3600L * 1000000L)
+        .select(col("user_id"), col("b"),
+          floor(col("fv") * 10000).cast(LongType).as("v_bp"))
+        .orderBy("user_id", "b")
+    }, oracle =
       """WITH e AS (SELECT user_id, floor(epoch_us(ts) / 3600000000)::BIGINT b,
         |     max(value) v
         |   FROM events GROUP BY 1, 2),
@@ -5090,9 +1885,20 @@ object ExtensionQueries {
         |       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) fv
         |   FROM f)
         | SELECT user_id, b, floor(fv * 10000)::BIGINT AS v_bp
-        | FROM filled ORDER BY user_id, b""".stripMargin,
+        | FROM filled ORDER BY user_id, b""".stripMargin),
 
-    "x38_interval_join" ->
+    // x38 — keyed interval join (bucketed range-join plan): clicks within
+    // one hour AFTER each purchase, counted per purchase.
+    "x38_interval_join" -> QueryCase({ (s, dir) =>
+      val e = t(s, dir, "events")
+      val p = e.filter(col("event_type") === "purchase")
+        .select(col("event_id").as("pid"), col("user_id"), col("ts").as("pts"))
+      val c = e.filter(col("event_type") === "click")
+        .select(col("event_id").as("cid"), col("user_id"), col("ts").as("cts"))
+      JoinOps.intervalJoin(p, c, "user_id", "pts", "cts", 3600L * 1000000L)
+        .groupBy(col("pid")).agg(count(lit(1)).as("n_clicks"))
+        .orderBy("pid")
+    }, oracle =
       """WITH p AS (SELECT event_id pid, user_id, ts pts FROM events
         |   WHERE event_type = 'purchase'),
         | c AS (SELECT event_id cid, user_id, ts cts FROM events
@@ -5100,9 +1906,15 @@ object ExtensionQueries {
         | SELECT pid, count(*)::BIGINT AS n_clicks
         | FROM p JOIN c USING (user_id)
         | WHERE cts >= pts AND cts <= pts + INTERVAL 1 HOUR
-        | GROUP BY pid ORDER BY pid""".stripMargin,
+        | GROUP BY pid ORDER BY pid""".stripMargin),
 
-    "x37_text_repetition" ->
+    // x37 — repetition signals (Gopher-style filters): duplicate-word and
+    // duplicate-bigram fractions in basis points.
+    "x37_text_repetition" -> QueryCase({ (s, dir) =>
+      TextOps.repetitionScore(spread(t(s, dir, "documents")))
+        .select("doc_id", "n_words", "dup_word_bp", "dup_bigram_bp")
+        .orderBy("doc_id")
+    }, oracle =
       """WITH w AS (SELECT doc_id, string_split(text, ' ') w FROM documents)
         | SELECT doc_id, len(w)::BIGINT AS n_words,
         |   floor((len(w) - len(list_distinct(w)))::DOUBLE * 10000
@@ -5112,9 +1924,22 @@ object ExtensionQueries {
         |         range(1, len(w)), k -> w[k::INT] || ' ' || w[k::INT + 1]))))::DOUBLE
         |       * 10000 / (len(w) - 1)::DOUBLE)::BIGINT
         |   ELSE 0 END AS dup_bigram_bp
-        | FROM w ORDER BY doc_id""".stripMargin,
+        | FROM w ORDER BY doc_id""".stripMargin),
 
-    "x36_pii_redact" ->
+    // x36 — PII redaction (C4/Dolma-style corpus scrubbing). The fixtures
+    // carry no real PII, so the query plants deterministic email/IP/phone
+    // spans derived from doc_id, then redacts — both engines synthesize and
+    // scrub the identical string.
+    "x36_pii_redact" -> QueryCase({ (s, dir) =>
+      val planted = spread(t(s, dir, "documents")).withColumn("text", concat(
+        lit("mail u"), col("doc_id").cast("string"),
+        lit("@ex.com on 10.0.0."), (col("doc_id") % 200).cast("string"),
+        lit(" call +1-555-000-"), col("doc_id").cast("string"),
+        lit(" "), substring(col("text"), 1, 40)))
+      TextOps.redactPii(planted)
+        .select("doc_id", "red", "n_email", "n_ip", "n_phone")
+        .orderBy("doc_id")
+    }, oracle =
       """WITH p AS (SELECT doc_id,
         |     'mail u' || doc_id || '@ex.com on 10.0.0.' || (doc_id % 200)
         |       || ' call +1-555-000-' || doc_id || ' ' || substr(text, 1, 40) AS text
@@ -5130,9 +1955,25 @@ object ExtensionQueries {
         |       '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b'))::BIGINT AS n_ip,
         |   length(regexp_extract_all(text,
         |       '\+[0-9][0-9 -]{6,}[0-9]'))::BIGINT AS n_phone
-        | FROM p ORDER BY doc_id""".stripMargin,
+        | FROM p ORDER BY doc_id""".stripMargin),
 
-    "x27_asof_join" ->
+    // x27 — backward as-of join (union+window plan, JoinOps): for each
+    // purchase, the user's most recent click at-or-before it.
+    "x27_asof_join" -> QueryCase({ (s, dir) =>
+      val ev = t(s, dir, "events")
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select("event_id", "user_id", "ts")
+      val clicks = ev.filter(col("event_type") === "click")
+        .groupBy(col("user_id"), col("ts"))
+        .agg(max(col("event_id")).as("click_id"))
+        .withColumn("click_ts", col("ts"))
+      JoinOps.asOfJoinBackward(purchases, clicks, "user_id", "ts",
+          Seq("click_id", "click_ts"))
+        .select(col("event_id"), col("user_id"), col("click_id"),
+          (graft.ops.TsCompat.micros(col("ts")) -
+            graft.ops.TsCompat.micros(col("click_ts"))).as("delay_us"))
+        .orderBy("event_id")
+    }, oracle =
       """WITH clicks AS (SELECT user_id, ts, max(event_id) click_id
         |   FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
         | p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
@@ -5140,46 +1981,287 @@ object ExtensionQueries {
         |   epoch_us(p.ts) - epoch_us(c.ts) AS delay_us
         | FROM p ASOF LEFT JOIN clicks c
         |   ON p.user_id = c.user_id AND p.ts >= c.ts
-        | ORDER BY p.event_id""".stripMargin,
+        | ORDER BY p.event_id""".stripMargin),
 
-    "x28_window_running" ->
+    // x28 — running windowed aggregation + lag over event time.
+    "x28_window_running" -> QueryCase({ (s, dir) =>
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy(col("user_id"))
+        .orderBy(col("ts"), col("event_id"))
+      val wf = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      t(s, dir, "events")
+        .select(col("event_id"), col("user_id"),
+          (round(sum(col("value").cast(DecimalType(38, 6))).over(wf), 4) * 10000)
+            .cast(LongType).as("run_total_e4"),
+          lag(col("event_type"), 1).over(w).as("prev_type"))
+        .orderBy("event_id")
+    }, oracle =
       """SELECT event_id, user_id,
         | CAST(ROUND(SUM(CAST(value AS DECIMAL(38,6))) OVER
         |   (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING), 4)
         |   * 10000 AS BIGINT) AS run_total_e4,
         | lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
-        | FROM events ORDER BY event_id""".stripMargin,
+        | FROM events ORDER BY event_id""".stripMargin),
 
-    "x29_dedup_stats" ->
+    // x29 — corpus dedup statistics (exact counts → oracle-able summary).
+    "x29_dedup_stats" -> QueryCase({ (s, dir) =>
+      t(s, dir, "documents")
+        .agg(count(lit(1)).as("n_docs"),
+          countDistinct(md5(col("text"))).as("n_unique"))
+        .select(col("n_docs"), col("n_unique"),
+          TextOps.bp(col("n_docs") - col("n_unique"), col("n_docs")).as("dup_ratio_bp"))
+    }, oracle =
       """SELECT count(*) AS n_docs, count(DISTINCT md5(text)) AS n_unique,
         | floor((count(*) - count(DISTINCT md5(text)))::DOUBLE * 10000
         |   / count(*)::DOUBLE)::BIGINT AS dup_ratio_bp
-        | FROM documents""".stripMargin,
+        | FROM documents""".stripMargin),
 
-    "x30_cube" ->
+    // x30 — CUBE grouping sets over the corpus dimensions.
+    "x30_cube" -> QueryCase({ (s, dir) =>
+      t(s, dir, "documents")
+        .cube(col("lang"), col("source"))
+        .agg(count(lit(1)).as("cnt"))
+        .orderBy(col("lang").asc_nulls_first, col("source").asc_nulls_first)
+    }, oracle =
       """SELECT lang, source, count(*) AS cnt FROM documents
         | GROUP BY CUBE(lang, source)
-        | ORDER BY lang NULLS FIRST, source NULLS FIRST""".stripMargin,
+        | ORDER BY lang NULLS FIRST, source NULLS FIRST""".stripMargin),
 
-    "x47_grouping_sets" ->
+    // x47 — explicit GROUPING SETS (the third grouping-sets form next to
+    // CUBE x30 and ROLLUP q13): per-lang and per-source marginals plus the
+    // grand total, in one expand + partial agg.
+    "x47_grouping_sets" -> QueryCase({ (s, dir) =>
+      t(s, dir, "documents")
+        .groupingSets(Seq(Seq(col("lang")), Seq(col("source")), Seq.empty),
+          col("lang"), col("source"))
+        .agg(count(lit(1)).as("cnt"))
+        .orderBy(col("lang").asc_nulls_first, col("source").asc_nulls_first)
+    }, oracle =
       """SELECT lang, source, count(*) AS cnt FROM documents
         | GROUP BY GROUPING SETS ((lang), (source), ())
-        | ORDER BY lang NULLS FIRST, source NULLS FIRST""".stripMargin,
+        | ORDER BY lang NULLS FIRST, source NULLS FIRST""".stripMargin),
 
-    "x31_full_outer" ->
+    // x31 — full outer join of per-nation aggregates.
+    "x31_full_outer" -> QueryCase({ (s, dir) =>
+      val cc = t(s, dir, "customer").groupBy(col("c_nationkey"))
+        .agg(count(lit(1)).as("c_cnt"))
+      val sc = t(s, dir, "supplier").groupBy(col("s_nationkey"))
+        .agg(count(lit(1)).as("s_cnt"))
+      cc.join(sc, col("c_nationkey") === col("s_nationkey"), "full_outer")
+        .select(coalesce(col("c_nationkey"), col("s_nationkey")).as("k"),
+          col("c_cnt"), col("s_cnt"))
+        .orderBy("k")
+    }, oracle =
       """WITH cc AS (SELECT c_nationkey, count(*) c_cnt FROM customer GROUP BY 1),
         | sc AS (SELECT s_nationkey, count(*) s_cnt FROM supplier GROUP BY 1)
         | SELECT coalesce(cc.c_nationkey, sc.s_nationkey) AS k, cc.c_cnt, sc.s_cnt
         | FROM cc FULL OUTER JOIN sc ON cc.c_nationkey = sc.s_nationkey
-        | ORDER BY k""".stripMargin,
+        | ORDER BY k""".stripMargin),
 
-    "x32_except" ->
+    // x32 — EXCEPT set op (users who errored but never purchased).
+    "x32_except" -> QueryCase({ (s, dir) =>
+      val ev = t(s, dir, "events")
+      ev.filter(col("event_type") === "error").select(col("user_id"))
+        .except(ev.filter(col("event_type") === "purchase").select(col("user_id")))
+        .orderBy("user_id")
+    }, oracle =
       """SELECT user_id FROM events WHERE event_type = 'error'
         | EXCEPT
         | SELECT user_id FROM events WHERE event_type = 'purchase'
-        | ORDER BY user_id""".stripMargin,
+        | ORDER BY user_id""".stripMargin),
 
-    "x48_sessionize" ->
+    // x33 — approximate aggregates (HLL distinct, quantile sketch). Raw
+    // sketch values differ across engines, so the oracle-able contract is:
+    // exact values (cross-engine comparable) + in-query error-bound checks
+    // on the sketches emitted as 0/1 longs (the oracle asserts 1). The
+    // bound check stays in integer arithmetic (|apx−exact|·100 ≤ exact·5,
+    // i.e. 5% relative error; HLL rsd=0.02 and a 1000-bucket KLL-style
+    // percentile sketch sit comfortably inside it, deterministically —
+    // both sketches are hash-based, not randomized).
+    // Plan note: each distinct column gets its OWN aggregate — two
+    // count_distincts + a sort-based percentile in one agg makes Catalyst
+    // expand every input row once per distinct group (observed 8s vs 2s at
+    // sf0.1). Three independent 1-row aggs cross-joined cost three narrow
+    // scans instead. Within each distinct agg, `distinct().agg(count)`
+    // beats `agg(count_distinct)`: the map side combines down to the
+    // distinct values BEFORE the shuffle and no Expand is planned for the
+    // exact+HLL pair (measured 2.87s → re-measured after; HLL over the
+    // distinct set is the same estimate since HLL is duplicate-blind).
+    "x33_approx_stats" -> QueryCase({ (s, dir) =>
+      val li = t(s, dir, "lineitem")
+      val parts = li.select("l_partkey").distinct().agg(
+        count(lit(1)).as("exact_parts"),
+        approx_count_distinct(col("l_partkey"), 0.02).as("__ap"))
+      val supps = li.select("l_suppkey").distinct().agg(
+        count(lit(1)).as("exact_supps"),
+        approx_count_distinct(col("l_suppkey"), 0.02).as("__as"))
+      // Exact median via the distributed three-pass histogram kernel
+      // (StatOps, the x50 plan) instead of Spark's `percentile`: the
+      // built-in is a TypedImperativeAggregate that builds a value→count
+      // map per partition and merges ALL of them on one reducer — profiled
+      // at 1.86s of x33's 2.87s at sf0.1, and sized by distinct values
+      // (unbounded at 100 TB). The histogram kernel is map-side-combinable
+      // counts end-to-end. Rank-vs-interpolated median differs by ≤1 value
+      // gap — far inside the 5% sketch bound this flag checks.
+      val approxMed = li.agg(
+        percentile_approx(col("l_extendedprice"), lit(0.5), lit(1000))
+          .as("__am"))
+      val exactMed = StatOps.exactQuantiles(
+          li.select(col("l_extendedprice")).withColumn("g", lit(1)),
+          "g", "l_extendedprice", Seq(("__em", 1L, 2L)))
+        .select(col("__em"))
+      val med = approxMed.crossJoin(exactMed)
+      parts.crossJoin(supps).crossJoin(med)
+        .select(col("exact_parts"), col("exact_supps"),
+          (abs(col("__ap") - col("exact_parts")) * lit(100L) <=
+            col("exact_parts") * lit(5L)).cast("long").as("parts_ok"),
+          (abs(col("__as") - col("exact_supps")) * lit(100L) <=
+            col("exact_supps") * lit(5L)).cast("long").as("supps_ok"),
+          (abs(col("__am") - col("__em")) <= col("__em") * lit(0.05))
+            .cast("long").as("median_ok"))
+    }, oracle =
+      // x33: the sketch values themselves are engine-specific, so the query
+      // emits exact values plus in-query error-bound flags; the oracle checks
+      // the exact values and asserts the flags are 1.
+      """SELECT count(DISTINCT l_partkey)::BIGINT AS exact_parts,
+        |   count(DISTINCT l_suppkey)::BIGINT AS exact_supps,
+        |   1::BIGINT AS parts_ok, 1::BIGINT AS supps_ok, 1::BIGINT AS median_ok
+        | FROM lineitem""".stripMargin),
+
+    // x40 — near-dup CLUSTERS: connected components over the Jaccard pair
+    // graph (pairs → clusters is what "keep one per duplicate group"
+    // actually needs; A~B, B~C must collapse to one component).
+    "x40_dedup_clusters" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val pairs = DedupOps.ngramJaccardPairs(d, "doc_id",
+        TextOps.wordShingles(col("text"), 3), 0.5)
+      DedupOps.connectedComponents(pairs, "i", "j")
+        .select(col("id").as("doc_id"), col("comp").as("component"))
+        .orderBy("doc_id")
+    }, oracle =
+      s"""WITH RECURSIVE ${word3gramCtes("documents")},
+        | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
+        | $exactInterSql,
+        | $jaccardPairsSql,
+        | $reachSql
+        | SELECT a AS doc_id, least(a, min(b)) AS component
+        | FROM reach GROUP BY a ORDER BY doc_id""".stripMargin),
+
+    // x41 — deterministic train/val/test split by id hash (80/10/10):
+    // reproducible across runs/engines/partitionings, stable under corpus
+    // growth — the hash-mod idiom every large corpus pipeline uses.
+    "x41_hash_split" -> QueryCase({ (s, dir) =>
+      SampleOps.hashSplit(t(s, dir, "documents"), "doc_id",
+          Seq(("train", 8000), ("val", 9000), ("test", 10000)))
+        .select(col("doc_id"), col("split"))
+        .orderBy("doc_id")
+    }, oracle =
+      """SELECT doc_id,
+        | CASE WHEN h < 8000 THEN 'train' WHEN h < 9000 THEN 'val'
+        |      ELSE 'test' END AS split
+        | FROM (SELECT doc_id,
+        |   ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT % 10000 AS h
+        |   FROM documents)
+        | ORDER BY doc_id""".stripMargin),
+
+    // x42 — semantic dedup (SemDeDup): cluster embeddings to 8 seed cells,
+    // drop the higher id of every within-cell cosine ≥ 0.45 pair.
+    "x42_semantic_dedup" -> QueryCase({ (s, dir) =>
+      VectorOps.semanticDedup(spread(t(s, dir, "embeddings")), "vec_id",
+          "embedding", numCentroids = 8, threshold = 0.45)
+        .orderBy("vec_id")
+    }, oracle =
+      semanticDedupSql(s"cent AS ${seedCentSql(8)}")),
+
+    // x65 — SemDeDup at the scale sizing: centroid count grows with the
+    // corpus (k = max(8, n/32)) so expected cell size — and the per-cell
+    // pair term — stays constant across decades, where x42's pinned k=8
+    // is quadratic (the one scaling row r9 left unmeasured).
+    "x65_semantic_dedup_scaled" -> QueryCase({ (s, dir) =>
+      VectorOps.semanticDedupScaled(spread(t(s, dir, "embeddings")),
+          "vec_id", "embedding", perCell = 32, threshold = 0.45)
+        .orderBy("vec_id")
+    }, oracle =
+      // corpus-proportional centroid count: k = greatest(8, n // 32)
+      // over the FULL embeddings table (semanticDedupScaled counts vecs
+      // before sided()'s zero-norm exclusion), seeds = the k lowest-id
+      // vectors with zero-norm seeds dropped AFTER the limit — the same
+      // limit-then-filter order as seedCentSql, with row_number standing
+      // in for the dynamic LIMIT
+      semanticDedupSql(
+        s"""nk AS (SELECT greatest(8, count(*) // 32) k FROM embeddings),
+           | cent AS (SELECT cid, cv, cn FROM (
+           |     SELECT vec_id cid, embedding cv, ${normSql("embedding")} cn,
+           |       row_number() OVER (ORDER BY vec_id) rn FROM embeddings)
+           |   CROSS JOIN nk WHERE rn <= k AND cn > 0)""".stripMargin)),
+
+    // x44 — token-budget shard packing (sequence packing stage 1): docs in
+    // id order fill contiguous ~10k-token shards; distributed prefix sum,
+    // never a global ordered window over the corpus.
+    "x44_shard_pack" -> QueryCase({ (s, dir) =>
+      val toks = TextOps.tokenCounts(spread(t(s, dir, "documents")))
+        .select(col("doc_id"), col("ws_tokens"))
+      SampleOps.packShards(toks, "doc_id", "ws_tokens", budget = 10000L,
+          bucketSize = 100L)
+        .select(col("doc_id"), col("shard"))
+        .orderBy("doc_id")
+    }, oracle =
+      """WITH tk AS (SELECT doc_id, len(string_split(text,' '))::BIGINT tok
+        |   FROM documents),
+        | r AS (SELECT doc_id, tok,
+        |     SUM(tok) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) run
+        |   FROM tk)
+        | SELECT doc_id, floor((run - tok)::DOUBLE / 10000)::BIGINT AS shard
+        | FROM r ORDER BY doc_id""".stripMargin),
+
+    // x45 — corpus vocabulary: top-25 whitespace tokens by frequency
+    // (vocab building / BPE seeding): map-side-combined count + top-k.
+    "x45_vocab_topk" -> QueryCase({ (s, dir) =>
+      TextOps.vocabTopK(spread(t(s, dir, "documents")), 25)
+    }, oracle =
+      """WITH w AS (SELECT unnest(string_split(text,' ')) word FROM documents)
+        | SELECT word, count(*)::BIGINT AS cnt FROM w GROUP BY word
+        | ORDER BY cnt DESC, word LIMIT 25""".stripMargin),
+
+    // x46 — sliding-window chunking: 20-token chunks, 4-token overlap
+    // (context-window splitting before tokenization/packing).
+    "x46_chunk_windows" -> QueryCase({ (s, dir) =>
+      TextOps.chunkTokens(spread(t(s, dir, "documents")), "doc_id",
+          chunkSize = 20, overlap = 4)
+        .orderBy("doc_id", "chunk_idx")
+    }, oracle =
+      """WITH w AS (SELECT doc_id, string_split(text,' ') w FROM documents),
+        | c AS (SELECT doc_id, w,
+        |     unnest(range(0, greatest(0,
+        |       ceil((len(w)-20)::DOUBLE / 16)::BIGINT) + 1)) s FROM w)
+        | SELECT doc_id, s::BIGINT AS chunk_idx,
+        |   array_to_string(w[(s*16+1)::INT:(s*16+20)::INT], ' ') AS chunk_text
+        | FROM c ORDER BY doc_id, chunk_idx""".stripMargin),
+
+    // x43 — benchmark decontamination: distinct 3-gram overlap between each
+    // corpus doc and a (stand-in) benchmark set, docs 0-2. The benchmark
+    // shingle set broadcasts; the corpus never shuffles on the shingle key.
+    "x43_decontaminate" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val sh = TextOps.wordShingles(col("text"), 3)
+      DedupOps.contaminationHits(d.filter(col("doc_id") >= 3), "doc_id", sh,
+          d.filter(col("doc_id") < 3), sh)
+        .orderBy("doc_id")
+    }, oracle =
+      s"""$word3gramShingles,
+         | bench AS (SELECT DISTINCT s FROM sh WHERE doc_id < 3)
+         | SELECT sh.doc_id, count(DISTINCT sh.s)::BIGINT AS n_hits
+         | FROM sh JOIN bench USING (s) WHERE sh.doc_id >= 3
+         | GROUP BY sh.doc_id ORDER BY doc_id""".stripMargin),
+
+    // x48 — gap-based sessionization: 30-minute inactivity closes a user's
+    // session. Single key shuffle; lag + running sum share one window sort.
+    "x48_sessionize" -> QueryCase({ (s, dir) =>
+      TimeOps.sessionize(t(s, dir, "events"), "user_id", "ts", "event_id",
+          gapMicros = 1800L * 1000000L)
+        .select(col("user_id"), col("event_id"), col("session_idx"))
+        .orderBy("user_id", "event_id")
+    }, oracle =
       """WITH o AS (SELECT user_id, event_id, ts, epoch_us(ts) u,
         |     lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) p
         |   FROM events)
@@ -5188,16 +2270,42 @@ object ExtensionQueries {
         |     OVER (PARTITION BY user_id ORDER BY ts, event_id
         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT
         |     AS session_idx
-        | FROM o ORDER BY user_id, event_id""".stripMargin,
+        | FROM o ORDER BY user_id, event_id""".stripMargin),
 
-    "x49_pivot" ->
+    // x49 — pivot (priority × status order counts): Spark's pivot relational
+    // operator with explicit value list (no extra distinct-values scan);
+    // one expand + partial agg, same shape as CUBE.
+    "x49_pivot" -> QueryCase({ (s, dir) =>
+      t(s, dir, "orders").groupBy(col("o_orderpriority"))
+        .pivot("o_orderstatus", Seq("O", "F", "P"))
+        .agg(count(lit(1)))
+        .select(col("o_orderpriority"),
+          coalesce(col("O"), lit(0L)).as("cnt_o"),
+          coalesce(col("F"), lit(0L)).as("cnt_f"),
+          coalesce(col("P"), lit(0L)).as("cnt_p"))
+        .orderBy("o_orderpriority")
+    }, oracle =
       """SELECT o_orderpriority,
         | sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END)::BIGINT AS cnt_o,
         | sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END)::BIGINT AS cnt_f,
         | sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END)::BIGINT AS cnt_p
-        | FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
+        | FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "x50_percentile" ->
+    // x50 — EXACT per-group percentiles (p50/p90/p99 of extended price) via
+    // StatOps.exactQuantiles: two-pass histogram selection with position =
+    // ceil(p·n) in pure integer math — engine-portable, no interpolation,
+    // and scale-correct (a window/row_number plan would sort each group
+    // through one task; the histogram plan only sorts the target buckets).
+    "x50_percentile" -> QueryCase({ (s, dir) =>
+      StatOps.exactQuantiles(t(s, dir, "lineitem"), "l_returnflag",
+          "l_extendedprice",
+          Seq(("p50", 1L, 2L), ("p90", 9L, 10L), ("p99", 99L, 100L)))
+        .select(col("l_returnflag"),
+          floor(col("p50") * 100).cast(LongType).as("p50_c"),
+          floor(col("p90") * 100).cast(LongType).as("p90_c"),
+          floor(col("p99") * 100).cast(LongType).as("p99_c"))
+        .orderBy("l_returnflag")
+    }, oracle =
       """WITH r AS (SELECT l_returnflag, l_extendedprice,
         |     row_number() OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice) rn,
         |     count(*) OVER (PARTITION BY l_returnflag) n
@@ -5206,137 +2314,123 @@ object ExtensionQueries {
         |   floor(min(CASE WHEN rn = (n+1)//2 THEN l_extendedprice END)*100)::BIGINT AS p50_c,
         |   floor(min(CASE WHEN rn = (9*n+9)//10 THEN l_extendedprice END)*100)::BIGINT AS p90_c,
         |   floor(min(CASE WHEN rn = (99*n+99)//100 THEN l_extendedprice END)*100)::BIGINT AS p99_c
-        | FROM r GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
+        | FROM r GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
 
-    "x51_term_salience" ->
-      """WITH w AS (SELECT doc_id, unnest(string_split(text,' ')) w FROM documents),
-        | tf AS (SELECT doc_id, w, count(*) tf FROM w GROUP BY 1, 2),
-        | df AS (SELECT w, count(*) df FROM tf GROUP BY 1),
-        | n AS (SELECT count(*) n_docs FROM documents),
-        | s AS (SELECT doc_id, w, tf, df, (tf*10000*n_docs)//df sal
-        |   FROM tf JOIN df USING (w) CROSS JOIN n),
-        | r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-        |     ORDER BY sal DESC, w) rk FROM s)
-        | SELECT doc_id, w AS term, tf::BIGINT AS tf, df::BIGINT AS df,
-        |   sal::BIGINT AS salience_bp, rk::BIGINT AS rank
-        | FROM r WHERE rk <= 3 ORDER BY doc_id, rank""".stripMargin,
-
-    "x52_domain_cap" ->
-      """WITH r AS (SELECT doc_id, source, row_number() OVER (
-        |     PARTITION BY source
-        |     ORDER BY ('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT, doc_id) rk
-        |   FROM documents)
-        | SELECT doc_id, source FROM r WHERE rk <= 20 ORDER BY doc_id""".stripMargin,
-
-    "x53_bigram_pmi" ->
-      """WITH w AS (SELECT doc_id, string_split(text,' ') w FROM documents),
-        | bg AS (SELECT doc_id, unnest(list_distinct(list_transform(
-        |     range(1, greatest(len(w)-1,0)+1),
-        |     k -> w[k::INT] || ' ' || w[k::INT+1]))) bg FROM w),
-        | bdf AS (SELECT bg, count(*) df_xy FROM bg GROUP BY 1
-        |   HAVING count(*) >= 5),
-        | wt AS (SELECT doc_id, unnest(list_distinct(w)) w FROM w),
-        | wdf AS (SELECT w, count(*) df_w FROM wt GROUP BY 1),
-        | n AS (SELECT count(*) n_docs FROM documents),
-        | s AS (SELECT bg, df_xy,
-        |     wx.df_w df_x, wy.df_w df_y,
-        |     (df_xy*10000*n_docs)//(wx.df_w*wy.df_w) pmi
-        |   FROM bdf
-        |   JOIN wdf wx ON wx.w = string_split(bg,' ')[1]
-        |   JOIN wdf wy ON wy.w = string_split(bg,' ')[2]
-        |   CROSS JOIN n)
-        | SELECT bg AS bigram, df_xy::BIGINT AS df_xy, df_x::BIGINT AS df_x,
-        |   df_y::BIGINT AS df_y, pmi::BIGINT AS pmi_bp
-        | FROM s ORDER BY pmi DESC, bigram LIMIT 25""".stripMargin,
-
-    "x55_row_index" ->
+    // x55 — contiguous 0-based global row index in (n_chars desc, doc_id)
+    // order: distributed prefix sum over a range repartition — never a
+    // global row_number window.
+    "x55_row_index" -> QueryCase({ (s, dir) =>
+      SampleOps.globalRowIndex(t(s, dir, "documents"),
+          Seq(col("n_chars").desc, col("doc_id")))
+        .select(col("doc_id"), col("idx"))
+        .orderBy("doc_id")
+    }, oracle =
       """SELECT doc_id,
         |   (row_number() OVER (ORDER BY n_chars DESC, doc_id) - 1)::BIGINT AS idx
-        | FROM documents ORDER BY doc_id""".stripMargin,
+        | FROM documents ORDER BY doc_id""".stripMargin),
 
-    "x56_profile" -> Seq("l_discount", "l_extendedprice", "l_quantity").map { c =>
+    // x56 — ANALYZE-style numeric column profile: one scan, one row per
+    // column (count / nulls / exact distinct / min / max).
+    "x56_profile" -> QueryCase({ (s, dir) =>
+      StatOps.profile(t(s, dir, "lineitem"),
+          Seq("l_discount", "l_extendedprice", "l_quantity"))
+        .orderBy("col_name")
+    }, oracle = Seq("l_discount", "l_extendedprice", "l_quantity").map { c =>
       s"""SELECT '$c' AS col_name, count($c)::BIGINT AS n,
          | (count(*) - count($c))::BIGINT AS n_null,
          | count(DISTINCT $c)::BIGINT AS n_distinct,
          | min($c)::DOUBLE AS min_v, max($c)::DOUBLE AS max_v
          | FROM lineitem""".stripMargin
-    }.mkString("", " UNION ALL ", " ORDER BY col_name"),
+    }.mkString("", " UNION ALL ", " ORDER BY col_name")),
 
-    "x54_stratified_sample" ->
-      """SELECT doc_id, lang FROM documents
-        | WHERE ('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT % 10000 <
-        |   CASE WHEN lang = 'en' THEN 8000 WHEN lang = 'zh' THEN 2000
-        |        ELSE 5000 END
-        | ORDER BY doc_id""".stripMargin,
-
-    // x33: the sketch values themselves are engine-specific, so the query
-    // emits exact values plus in-query error-bound flags; the oracle checks
-    // the exact values and asserts the flags are 1.
-    "x33_approx_stats" ->
-      """SELECT count(DISTINCT l_partkey)::BIGINT AS exact_parts,
-        |   count(DISTINCT l_suppkey)::BIGINT AS exact_supps,
-        |   1::BIGINT AS parts_ok, 1::BIGINT AS supps_ok, 1::BIGINT AS median_ok
-        | FROM lineitem""".stripMargin,
-
-    "x40_dedup_clusters" ->
-      s"""WITH RECURSIVE ${word3gramCtes("documents")},
-        | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
-        | $exactInterSql,
-        | $jaccardPairsSql,
-        | $reachSql
-        | SELECT a AS doc_id, least(a, min(b)) AS component
-        | FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
-
-    "x43_decontaminate" ->
-      s"""$word3gramShingles,
-         | bench AS (SELECT DISTINCT s FROM sh WHERE doc_id < 3)
-         | SELECT sh.doc_id, count(DISTINCT sh.s)::BIGINT AS n_hits
-         | FROM sh JOIN bench USING (s) WHERE sh.doc_id >= 3
-         | GROUP BY sh.doc_id ORDER BY doc_id""".stripMargin,
-
-    "x44_shard_pack" ->
-      """WITH tk AS (SELECT doc_id, len(string_split(text,' '))::BIGINT tok
+    // x57 — rare-token ratio: share of token occurrences with corpus
+    // document-frequency < 3 — the corpus-relative garbage/noise signal.
+    "x57_rare_tokens" -> QueryCase({ (s, dir) =>
+      TextOps.rareTokenRatio(spread(t(s, dir, "documents")), "doc_id", minDf = 3L)
+        .select("doc_id", "n_tokens", "n_rare", "rare_bp")
+        .orderBy("doc_id")
+    }, oracle =
+      """WITH w AS (SELECT doc_id, unnest(string_split(text,' ')) AS tok
         |   FROM documents),
-        | r AS (SELECT doc_id, tok,
-        |     SUM(tok) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) run
-        |   FROM tk)
-        | SELECT doc_id, floor((run - tok)::DOUBLE / 10000)::BIGINT AS shard
-        | FROM r ORDER BY doc_id""".stripMargin,
+        | dfq AS (SELECT tok, count(DISTINCT doc_id) AS dfc FROM w GROUP BY tok)
+        | SELECT doc_id, count(*)::BIGINT AS n_tokens,
+        |   sum(CASE WHEN dfc < 3 THEN 1 ELSE 0 END)::BIGINT AS n_rare,
+        |   floor(sum(CASE WHEN dfc < 3 THEN 1 ELSE 0 END)::DOUBLE * 10000
+        |     / count(*)::DOUBLE)::BIGINT AS rare_bp
+        | FROM w JOIN dfq USING (tok)
+        | GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    "x45_vocab_topk" ->
-      """WITH w AS (SELECT unnest(string_split(text,' ')) word FROM documents)
-        | SELECT word, count(*)::BIGINT AS cnt FROM w GROUP BY word
-        | ORDER BY cnt DESC, word LIMIT 25""".stripMargin,
+    // x58 — temperature (α=1/2) domain rebalancing: per-source keep rates
+    // √(n_min/n_d) computed from the corpus, rows picked by id-hash.
+    "x58_temperature_sample" -> QueryCase({ (s, dir) =>
+      SampleOps.temperatureSample(t(s, dir, "documents"), "doc_id", "source")
+        .select("doc_id", "source")
+        .orderBy("doc_id")
+    }, oracle =
+      """WITH c AS (SELECT source, count(*)::BIGINT AS n FROM documents
+        |   GROUP BY source),
+        | m AS (SELECT min(n) AS nmin FROM c),
+        | r AS (SELECT source,
+        |     floor(10000 * sqrt(nmin::DOUBLE / n::DOUBLE))::BIGINT AS rate_bp
+        |   FROM c, m)
+        | SELECT d.doc_id, d.source FROM documents d
+        | JOIN r ON d.source IS NOT DISTINCT FROM r.source
+        | WHERE ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 15))::BIGINT
+        |   % 10000 < r.rate_bp
+        | ORDER BY d.doc_id""".stripMargin),
 
-    "x46_chunk_windows" ->
-      """WITH w AS (SELECT doc_id, string_split(text,' ') w FROM documents),
-        | c AS (SELECT doc_id, w,
-        |     unnest(range(0, greatest(0,
-        |       ceil((len(w)-20)::DOUBLE / 16)::BIGINT) + 1)) s FROM w)
-        | SELECT doc_id, s::BIGINT AS chunk_idx,
-        |   array_to_string(w[(s*16+1)::INT:(s*16+20)::INT], ' ') AS chunk_text
-        | FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
+    // x59 — per-source power-of-two length histogram (exact integer
+    // buckets via base-2 digit count): the packing/batching size profile.
+    "x59_length_buckets" -> QueryCase({ (s, dir) =>
+      StatOps.lengthBuckets(t(s, dir, "documents"), "source", "n_chars")
+        .orderBy("source", "len_bucket")
+    }, oracle =
+      """SELECT source, length(printf('%b', n_chars))::BIGINT AS len_bucket,
+        | count(*)::BIGINT AS n, sum(n_chars)::BIGINT AS sum_len,
+        | min(n_chars)::BIGINT AS min_len, max(n_chars)::BIGINT AS max_len
+        | FROM documents GROUP BY 1, 2 ORDER BY source, len_bucket""".stripMargin),
 
-    "x41_hash_split" ->
-      """SELECT doc_id,
-        | CASE WHEN h < 8000 THEN 'train' WHEN h < 9000 THEN 'val'
-        |      ELSE 'test' END AS split
-        | FROM (SELECT doc_id,
-        |   ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT % 10000 AS h
-        |   FROM documents)
-        | ORDER BY doc_id""".stripMargin,
+    // x60 — incremental dedup: new snapshot (doc_id >= 250) deduped against
+    // the existing corpus (doc_id < 250) by exact hash + 3-gram Jaccard.
+    "x60_incremental_dedup" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      DedupOps.incrementalDedup(
+          d.filter(col("doc_id") >= 250), d.filter(col("doc_id") < 250),
+          "doc_id", "text", TextOps.wordShingles(col("text"), 3), 0.5)
+        .orderBy("doc_id")
+    }, oracle = incrementalDedupSql),
 
-    "x60_incremental_dedup" -> incrementalDedupSql,
-
-    "x73_bloom_incremental" -> incrementalDedupSql,
-
-    "x62_ann_lsh_multi" ->
+    // x62 — multi-table LSH ANN (4 independent tables): the recall remedy
+    // the x61 gate prescribes for the single-table path, recall 1-(1-r)^4.
+    "x62_ann_lsh_multi" -> QueryCase({ (s, dir) =>
+      val e = spread(t(s, dir, "embeddings"))
+      VectorOps.lshTopKMultiTable(e.filter(col("vec_id") < 20), e, "vec_id",
+          "embedding", 5, dim = 64, numPlanes = 8, numTables = 4)
+        .orderBy("qid", "nid")
+    }, oracle =
       s"""WITH $annV,
          | $annLshMulti
          | SELECT qid, nid, rk::BIGINT AS rk, floor(cos * 10000)::BIGINT AS cos_bp
-         | FROM r_mt WHERE rk <= 5 ORDER BY qid, nid""".stripMargin,
+         | FROM r_mt WHERE rk <= 5 ORDER BY qid, nid""".stripMargin),
 
-    "x61_ann_recall" ->
+    // x61 — ANN recall@5: BOTH approximate paths (LSH x26, IVF x35) graded
+    // against brute-force ground truth (x25), per query — the index-quality
+    // gate an embedding pipeline runs before trusting an approximate index.
+    // (On this fixture's near-random embeddings the single-table 8-bit LSH
+    // scores ~0 — which is the point of the gate; IVF nProbe=2 does better.)
+    "x61_ann_recall" -> QueryCase({ (s, dir) =>
+      // truth from the per-run memo: both method grades join against it,
+      // and x63 grades against the SAME set — one brute-force scoring
+      // job per run instead of one per gate per branch
+      val exact = annTruth(s, dir)
+      val lsh = VectorOps.annRecall(gateCandidates(s, dir, "x26_ann_lsh"),
+        exact, "qid", "nid").withColumn("method", lit("lsh"))
+      val ivf = VectorOps.annRecall(gateCandidates(s, dir, "x35_ann_ivf"),
+        exact, "qid", "nid").withColumn("method", lit("ivf"))
+      lsh.unionByName(ivf)
+        .select("method", "qid", "n_exact", "n_hit", "recall_bp")
+        .orderBy("method", "qid")
+    }, oracle =
       s"""WITH $annV,
          | $annBrute,
          | ex AS (SELECT qid, nid FROM r_ex WHERE rk <= 5),
@@ -5347,9 +2441,83 @@ object ExtensionQueries {
          | ${gradeSql("lsh", "ap")},
          | ${gradeSql("ivf", "iv")}
          | SELECT * FROM g_ap UNION ALL SELECT * FROM g_iv
-         | ORDER BY method, qid""".stripMargin,
+         | ORDER BY method, qid""".stripMargin),
 
-    "x63_ann_recall_trained" ->
+    // x67 — multi-PROBE LSH (Lv et al. VLDB'07, single-bit perturbations):
+    // ONE hash table, 8 margin-ordered probe buckets per query — where
+    // x62's multi-TABLE remedy pays 4× index storage for 7% recall, this
+    // pays 8 probe lookups on the query side (20 rows, not the corpus)
+    // for 11% on the same fixture. The honest conclusion the gate
+    // documents: probing beats replication at equal scan, and BOTH are
+    // candidate-generation tools on near-isotropic data, not serving
+    // paths — the IVF family is the serving path.
+    "x67_ann_lsh_multiprobe" -> QueryCase({ (s, dir) =>
+      val e = spread(t(s, dir, "embeddings"))
+      VectorOps.lshTopKMultiProbe(e.filter(col("vec_id") < 20), e, "vec_id",
+          "embedding", 5, dim = 64, numPlanes = 8, numProbes = 8)
+        .orderBy("qid", "nid")
+    }, oracle =
+      s"""WITH $annV,
+         | $annLsh,
+         | $annLshMultiProbe
+         | SELECT qid, nid, rk::BIGINT AS rk, floor(cos * 10000)::BIGINT AS cos_bp
+         | FROM r_mp WHERE rk <= 5 ORDER BY qid, nid""".stripMargin),
+
+    // x66 — scalar-quantized trained IVF (IVF-SQ8 with asymmetric
+    // distance): the x63 codebook's probe with the corpus side stored as
+    // int8 BINARY — the index that fits when 100 TB of float32 embeddings
+    // don't (4× smaller). Cell assignment at full precision (index-build
+    // time); candidate scoring is ADC (float query × dequantized int8
+    // corpus), qscale = 127/max|component| derived from one corpus
+    // aggregate the oracle recomputes in SQL — every scoring op mirrored,
+    // so the result is hash-exact despite quantization.
+    "x66_ann_quantized" -> QueryCase({ (s, dir) =>
+      val e = spread(t(s, dir, "embeddings"))
+      VectorOps.ivfTopKQuantizedWithCentroids(e.filter(col("vec_id") < 20),
+          e, "vec_id", "embedding", 5, trainedCodebook(s, dir).toSeq,
+          sqScaleOf(s, dir), nProbe = 4)
+        .orderBy("qid", "nid")
+    }, oracle =
+      s"""WITH $annV,
+         | ${annIvfTrainedSql(k = 32, iters = 2, nProbe = 4)},
+         | $annIvfQuantized
+         | SELECT qid, nid, rk::BIGINT AS rk, floor(cos * 10000)::BIGINT AS cos_bp
+         | FROM r_q8 WHERE rk <= 5 ORDER BY qid, nid""".stripMargin),
+
+    // x63 — the FULL index-selection gate: all six approximate paths
+    // (single-table LSH, 4-table LSH, multi-probe LSH, seed-IVF,
+    // k-means-trained IVF, int8-quantized trained IVF) graded against
+    // brute-force ground truth
+    // in one result — the table a user reads to pick an index. The trained
+    // path wires kmeansCentroidsExact (k=32, 2 Lloyd rounds) into the IVF
+    // probe at nProbe=4: ~87% mean recall@5 at HALF the scan fraction of
+    // x35's seed-IVF (12% vs 25% of the corpus) on the sf0.01 fixture; the
+    // quantized row (x66) shows what 4×-smaller storage costs in recall at
+    // the SAME scan fraction — see SURVEY §2.10 for the full sweep.
+    "x63_ann_recall_trained" -> QueryCase({ (s, dir) =>
+      val e = spread(t(s, dir, "embeddings"))
+      val exact = annTruth(s, dir)
+      def grade(df: DataFrame, m: String): DataFrame =
+        VectorOps.annRecall(df, exact, "qid", "nid")
+          .withColumn("method", lit(m))
+      // training runs its own driver-iterated jobs BEFORE the gate plan is
+      // built — the codebook is k×dim floats entering the probe as
+      // literals, trained ONCE per run (gateMemo) like a production
+      // pipeline trains once per corpus
+      val ivfTrained = memoRelation(s, dir, "cand|ivf_trained") {
+        VectorOps.ivfTopKWithCentroids(
+          e.filter(col("vec_id") < 20), e, "vec_id", "embedding", 5,
+          trainedCodebook(s, dir).toSeq, nProbe = 4)
+      }
+      grade(gateCandidates(s, dir, "x26_ann_lsh"), "lsh")
+        .unionByName(grade(gateCandidates(s, dir, "x62_ann_lsh_multi"), "lsh_multi"))
+        .unionByName(grade(gateCandidates(s, dir, "x67_ann_lsh_multiprobe"), "lsh_mp"))
+        .unionByName(grade(gateCandidates(s, dir, "x35_ann_ivf"), "ivf"))
+        .unionByName(grade(ivfTrained, "ivf_trained"))
+        .unionByName(grade(gateCandidates(s, dir, "x66_ann_quantized"), "ivf_q8"))
+        .select("method", "qid", "n_exact", "n_hit", "recall_bp")
+        .orderBy("method", "qid")
+    }, oracle =
       s"""WITH $annV,
          | $annBrute,
          | ex AS (SELECT qid, nid FROM r_ex WHERE rk <= 5),
@@ -5375,89 +2543,135 @@ object ExtensionQueries {
          | UNION ALL SELECT * FROM g_mp
          | UNION ALL SELECT * FROM g_iv UNION ALL SELECT * FROM g_it
          | UNION ALL SELECT * FROM g_q8
-         | ORDER BY method, qid""".stripMargin,
+         | ORDER BY method, qid""".stripMargin),
 
-    "x66_ann_quantized" ->
-      s"""WITH $annV,
-         | ${annIvfTrainedSql(k = 32, iters = 2, nProbe = 4)},
-         | $annIvfQuantized
-         | SELECT qid, nid, rk::BIGINT AS rk, floor(cos * 10000)::BIGINT AS cos_bp
-         | FROM r_q8 WHERE rk <= 5 ORDER BY qid, nid""".stripMargin,
+    // x51 — per-doc salient terms (TF-IDF ranking in exact integer
+    // arithmetic): top-3 terms per document by tf·10000·N/df.
+    "x51_term_salience" -> QueryCase({ (s, dir) =>
+      TextOps.termSalience(spread(t(s, dir, "documents")), "doc_id", 3)
+        .orderBy("doc_id", "rank")
+    }, oracle =
+      """WITH w AS (SELECT doc_id, unnest(string_split(text,' ')) w FROM documents),
+        | tf AS (SELECT doc_id, w, count(*) tf FROM w GROUP BY 1, 2),
+        | df AS (SELECT w, count(*) df FROM tf GROUP BY 1),
+        | n AS (SELECT count(*) n_docs FROM documents),
+        | s AS (SELECT doc_id, w, tf, df, (tf*10000*n_docs)//df sal
+        |   FROM tf JOIN df USING (w) CROSS JOIN n),
+        | r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
+        |     ORDER BY sal DESC, w) rk FROM s)
+        | SELECT doc_id, w AS term, tf::BIGINT AS tf, df::BIGINT AS df,
+        |   sal::BIGINT AS salience_bp, rk::BIGINT AS rank
+        | FROM r WHERE rk <= 3 ORDER BY doc_id, rank""".stripMargin),
 
-    "x67_ann_lsh_multiprobe" ->
-      s"""WITH $annV,
-         | $annLsh,
-         | $annLshMultiProbe
-         | SELECT qid, nid, rk::BIGINT AS rk, floor(cos * 10000)::BIGINT AS cos_bp
-         | FROM r_mp WHERE rk <= 5 ORDER BY qid, nid""".stripMargin,
+    // x52 — per-domain cap ("at most 20 pages per source"), id-hash order:
+    // the domain-balancing primitive, deterministic under any partitioning.
+    "x52_domain_cap" -> QueryCase({ (s, dir) =>
+      SampleOps.topKPerKey(t(s, dir, "documents"), "source", "doc_id", 20)
+        .select(col("doc_id"), col("source"))
+        .orderBy("doc_id")
+    }, oracle =
+      """WITH r AS (SELECT doc_id, source, row_number() OVER (
+        |     PARTITION BY source
+        |     ORDER BY ('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT, doc_id) rk
+        |   FROM documents)
+        | SELECT doc_id, source FROM r WHERE rk <= 20 ORDER BY doc_id""".stripMargin),
 
-    "x57_rare_tokens" ->
-      """WITH w AS (SELECT doc_id, unnest(string_split(text,' ')) AS tok
-        |   FROM documents),
-        | dfq AS (SELECT tok, count(DISTINCT doc_id) AS dfc FROM w GROUP BY tok)
-        | SELECT doc_id, count(*)::BIGINT AS n_tokens,
-        |   sum(CASE WHEN dfc < 3 THEN 1 ELSE 0 END)::BIGINT AS n_rare,
-        |   floor(sum(CASE WHEN dfc < 3 THEN 1 ELSE 0 END)::DOUBLE * 10000
-        |     / count(*)::DOUBLE)::BIGINT AS rare_bp
-        | FROM w JOIN dfq USING (tok)
-        | GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+    // x53 — corpus collocations: top-25 bigrams by document-level PMI
+    // (exact integer score, min document frequency 5).
+    "x53_bigram_pmi" -> QueryCase({ (s, dir) =>
+      TextOps.bigramPmi(spread(t(s, dir, "documents")), "doc_id",
+        k = 25, minDf = 5L)
+    }, oracle =
+      """WITH w AS (SELECT doc_id, string_split(text,' ') w FROM documents),
+        | bg AS (SELECT doc_id, unnest(list_distinct(list_transform(
+        |     range(1, greatest(len(w)-1,0)+1),
+        |     k -> w[k::INT] || ' ' || w[k::INT+1]))) bg FROM w),
+        | bdf AS (SELECT bg, count(*) df_xy FROM bg GROUP BY 1
+        |   HAVING count(*) >= 5),
+        | wt AS (SELECT doc_id, unnest(list_distinct(w)) w FROM w),
+        | wdf AS (SELECT w, count(*) df_w FROM wt GROUP BY 1),
+        | n AS (SELECT count(*) n_docs FROM documents),
+        | s AS (SELECT bg, df_xy,
+        |     wx.df_w df_x, wy.df_w df_y,
+        |     (df_xy*10000*n_docs)//(wx.df_w*wy.df_w) pmi
+        |   FROM bdf
+        |   JOIN wdf wx ON wx.w = string_split(bg,' ')[1]
+        |   JOIN wdf wy ON wy.w = string_split(bg,' ')[2]
+        |   CROSS JOIN n)
+        | SELECT bg AS bigram, df_xy::BIGINT AS df_xy, df_x::BIGINT AS df_x,
+        |   df_y::BIGINT AS df_y, pmi::BIGINT AS pmi_bp
+        | FROM s ORDER BY pmi DESC, bigram LIMIT 25""".stripMargin),
 
-    "x58_temperature_sample" ->
-      """WITH c AS (SELECT source, count(*)::BIGINT AS n FROM documents
-        |   GROUP BY source),
-        | m AS (SELECT min(n) AS nmin FROM c),
-        | r AS (SELECT source,
-        |     floor(10000 * sqrt(nmin::DOUBLE / n::DOUBLE))::BIGINT AS rate_bp
-        |   FROM c, m)
-        | SELECT d.doc_id, d.source FROM documents d
-        | JOIN r ON d.source IS NOT DISTINCT FROM r.source
-        | WHERE ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 15))::BIGINT
-        |   % 10000 < r.rate_bp
-        | ORDER BY d.doc_id""".stripMargin,
+    // x54 — stratified sampling: per-language keep rates (en 80%, zh 20%,
+    // default 50%) by id hash — narrow, shuffle-free, stable as the corpus
+    // grows.
+    "x54_stratified_sample" -> QueryCase({ (s, dir) =>
+      SampleOps.stratifiedSample(t(s, dir, "documents"), "doc_id", "lang",
+          Map("en" -> 8000, "zh" -> 2000), defaultBp = 5000)
+        .select(col("doc_id"), col("lang"))
+        .orderBy("doc_id")
+    }, oracle =
+      """SELECT doc_id, lang FROM documents
+        | WHERE ('0x'||substr(md5(doc_id::VARCHAR),1,15))::BIGINT % 10000 <
+        |   CASE WHEN lang = 'en' THEN 8000 WHEN lang = 'zh' THEN 2000
+        |        ELSE 5000 END
+        | ORDER BY doc_id""".stripMargin),
 
-    "x59_length_buckets" ->
-      """SELECT source, length(printf('%b', n_chars))::BIGINT AS len_bucket,
-        | count(*)::BIGINT AS n, sum(n_chars)::BIGINT AS sum_len,
-        | min(n_chars)::BIGINT AS min_len, max(n_chars)::BIGINT AS max_len
-        | FROM documents GROUP BY 1, 2 ORDER BY source, len_bucket""".stripMargin,
-
-    "x42_semantic_dedup" ->
-      semanticDedupSql(s"cent AS ${seedCentSql(8)}"),
-
-    "x65_semantic_dedup_scaled" ->
-      // corpus-proportional centroid count: k = greatest(8, n // 32)
-      // over the FULL embeddings table (semanticDedupScaled counts vecs
-      // before sided()'s zero-norm exclusion), seeds = the k lowest-id
-      // vectors with zero-norm seeds dropped AFTER the limit — the same
-      // limit-then-filter order as seedCentSql, with row_number standing
-      // in for the dynamic LIMIT
-      semanticDedupSql(
-        s"""nk AS (SELECT greatest(8, count(*) // 32) k FROM embeddings),
-           | cent AS (SELECT cid, cv, cn FROM (
-           |     SELECT vec_id cid, embedding cv, ${normSql("embedding")} cn,
-           |       row_number() OVER (ORDER BY vec_id) rn FROM embeddings)
-           |   CROSS JOIN nk WHERE rn <= k AND cn > 0)""".stripMargin),
-
-    "x34_corpus_curation" ->
+    // x34 — corpus curation on the EXACT baseline: quality filter → exact
+    // dedup → near-dup pairs → TRANSITIVE closure (connected components) →
+    // keep the lowest id per duplicate group. The composition a
+    // training-data pipeline actually runs: pair-based dropping alone
+    // mishandles chains (A~B, B~C without A~C must still collapse to one
+    // survivor). `exact = true` is a deliberate opt-IN here — x64 runs
+    // the API's default (LSH-verify) path; this entry keeps the complete
+    // enumeration as the declared calibration baseline.
+    "x34_corpus_curation" -> QueryCase({ (s, dir) =>
+      val (exactKept, survivors) = curationSurvivors(spread(t(s, dir, "documents")))
+      curationResult(exactKept, DedupOps.nearDupPairs(survivors, "doc_id",
+        TextOps.wordShingles(col("text"), 3), 0.5, exact = true))
+    }, oracle =
       s"""WITH RECURSIVE $curationHeadSql,
          | $exactInterSql,
-         | $curationTailSql""".stripMargin,
+         | $curationTailSql""".stripMargin),
 
-    // Mirrors x34's pipeline with the near-dup stage swapped to
-    // minhash-LSH banding (the x22 mirror verbatim: 16 hashes, 4 bands ×
-    // 4 rows over the SAME md5(h||'|'||shingle) minhash) followed by
-    // exact-Jaccard verification restricted to candidate pairs.
-    "x64_corpus_curation_lsh" ->
+    // x64 — FLAGSHIP corpus curation on the DEFAULT (scale) path: same
+    // quality→exact-dedup→near-dup→components pipeline as x34, with the
+    // near-dup stage as nearDupPairs' default LSH-candidate-then-verify.
+    // The sf1 decade measurement (SURVEY §6.3) showed x34's exact pair
+    // kernel going quadratic when shingle density is high (toy-vocab
+    // fixture: every trigram bucket grows with the corpus); this path's
+    // near-dup cost is |candidates|-proportional — what a 100 TB curation
+    // run actually executes. Differs from x34 only where LSH recall
+    // misses a true pair (P(miss) = (1-J⁴)⁴: 1.9% at J=0.9, ~0 at
+    // J=0.99); the oracle mirrors the SAME banding so the gate is exact
+    // regardless.
+    "x64_corpus_curation_lsh" -> QueryCase({ (s, dir) =>
+      val (exactKept, survivors) = curationSurvivors(spread(t(s, dir, "documents")))
+      curationResult(exactKept, DedupOps.nearDupPairs(survivors, "doc_id",
+        TextOps.wordShingles(col("text"), 3), 0.5))
+    }, oracle =
+      // Mirrors x34's pipeline with the near-dup stage swapped to
+      // minhash-LSH banding (the x22 mirror verbatim: 16 hashes, 4 bands ×
+      // 4 rows over the SAME md5(h||'|'||shingle) minhash) followed by
+      // exact-Jaccard verification restricted to candidate pairs.
       s"""WITH RECURSIVE $curationHeadSql,
          | $minhashBsigSql,
          | $bandVerifySql,
-         | $curationTailSql""".stripMargin,
+         | $curationTailSql""".stripMargin),
 
-    // Positional 5-token shingles (hash60 of the space-joined slice, the
-    // engine's exact hash), occurrence count >= 2, per-doc
-    // gaps-and-islands merge: a new island iff p > prev_p + 5 — the same
-    // break predicate as duplicatedSpans.
-    "x68_span_dedup" ->
+    // x68 — substring-level exact dedup (Lee et al. 2021): maximal spans
+    // of ≥2-occurrence 5-token shingles, merged gaps-and-islands per doc.
+    // The granularity doc-level dedup cannot see — boilerplate repeating
+    // INSIDE otherwise-unique documents.
+    "x68_span_dedup" -> QueryCase({ (s, dir) =>
+      DedupOps.duplicatedSpans(spread(t(s, dir, "documents")), "doc_id",
+          "text", k = 5, minCount = 2)
+        .orderBy("doc_id", "span_start")
+    }, oracle =
+      // Positional 5-token shingles (hash60 of the space-joined slice, the
+      // engine's exact hash), occurrence count >= 2, per-doc
+      // gaps-and-islands merge: a new island iff p > prev_p + 5 — the same
+      // break predicate as duplicatedSpans.
       """WITH w AS (SELECT doc_id, string_split(text,' ') t FROM documents),
         | ps AS (SELECT doc_id, unnest(list_transform(
         |     range(0, greatest(len(t)-4, 0)),
@@ -5475,27 +2689,70 @@ object ExtensionQueries {
         | SELECT doc_id, min(p)::BIGINT AS span_start,
         |   (max(p) + 5 - min(p))::BIGINT AS span_tokens
         | FROM isl GROUP BY doc_id, island
-        | ORDER BY doc_id, span_start""".stripMargin,
+        | ORDER BY doc_id, span_start""".stripMargin),
 
-    // Label = the x17 stopword-ratio heuristic at 1500 bp; token weight =
-    // (good_df+1)*10000 // (df+2) over distinct-token document frequency;
-    // score = integral mean — every op integral, mirroring
-    // qualityClassifierScore exactly.
-    // Unrolled 8-iteration BPE training (the x63 k-means CTE precedent):
-    // each iteration = pair counts over the vocab CTE, 1-row argmax with
-    // the (cnt DESC, l, r) tie-break, then the list_reduce fold that
-    // mirrors BpeOps.mergePair exactly. Assumes the corpus sustains 8
-    // merges (any real corpus does; the trainer stops early only when
-    // every word is fully merged).
-    "x70_bpe_train" ->
+    // x69 — model-based quality scoring (the CCNet-style classifier
+    // filter): distant labels from the x17 stopword heuristic,
+    // Laplace-smoothed integral token posteriors over document frequency,
+    // doc score = integral mean over its distinct tokens. Integer
+    // arithmetic end-to-end (the x53 convention) → hash-exact oracle.
+    "x69_quality_classifier" -> QueryCase({ (s, dir) =>
+      TextOps.qualityClassifierScore(spread(t(s, dir, "documents")),
+          "doc_id", labelBp = 1500)
+        .orderBy("doc_id")
+    }, oracle =
+      // Label = the x17 stopword-ratio heuristic at 1500 bp; token weight =
+      // (good_df+1)*10000 // (df+2) over distinct-token document frequency;
+      // score = integral mean — every op integral, mirroring
+      // qualityClassifierScore exactly.
+      """WITH lbl AS (SELECT doc_id, text, CASE WHEN
+        |     floor(len(list_filter(string_split(text,' '),
+        |         x -> list_contains(['the','a','of','and','in'], x)))::DOUBLE
+        |       * 10000 / len(string_split(text,' '))::DOUBLE) >= 1500
+        |     THEN 1 ELSE 0 END good FROM documents),
+        | tok AS (SELECT doc_id, good,
+        |     unnest(list_distinct(string_split(text,' '))) w FROM lbl),
+        | wt AS (SELECT w, (sum(good) + 1) * 10000 // (count(*) + 2) w_bp
+        |   FROM tok GROUP BY w),
+        | sc AS (SELECT doc_id, count(*) n_toks, sum(w_bp) sw
+        |   FROM tok JOIN wt USING (w) GROUP BY doc_id)
+        | SELECT doc_id, n_toks::BIGINT AS n_toks,
+        |   (sw // n_toks)::BIGINT AS score_bp
+        | FROM sc ORDER BY doc_id""".stripMargin),
+
+    // x70 — distributed BPE tokenizer training (Sennrich et al. 2016): the
+    // corpus collapses to a word-frequency table in ONE shuffle; all 8
+    // merge iterations run over the vocab. Output = the learned merge
+    // table, integer-exact (long pair counts, lexicographic tie-break) so
+    // the unrolled-CTE oracle hash-matches.
+    "x70_bpe_train" -> QueryCase({ (s, dir) =>
+      import s.implicits._
+      bpeMergesOf(s, dir)
+        .map(m => (m.rank.toLong, m.left, m.right, m.pairCount))
+        .toDF("merge_rank", "left_sym", "right_sym", "pair_count")
+        .orderBy("merge_rank")
+    }, oracle =
+      // Unrolled 8-iteration BPE training (the x63 k-means CTE precedent):
+      // each iteration = pair counts over the vocab CTE, 1-row argmax with
+      // the (cnt DESC, l, r) tie-break, then the list_reduce fold that
+      // mirrors BpeOps.mergePair exactly. Assumes the corpus sustains 8
+      // merges (any real corpus does; the trainer stops early only when
+      // every word is fully merged).
       s"""WITH $bpeTrainSql
          | SELECT * FROM (
          |   ${(1 to 8).map(i =>
                s"SELECT ${i}::BIGINT merge_rank, l left_sym, r right_sym, cnt pair_count FROM b$i")
                .mkString("\n |   UNION ALL ")}
-         | ) ORDER BY merge_rank""".stripMargin,
+         | ) ORDER BY merge_rank""".stripMargin),
 
-    "x71_bpe_tokenize" ->
+    // x71 — tokenize the corpus with the trained merges: folds run over
+    // the DISTINCT words only; each occurrence joins its word's symbol
+    // count (broadcast — a Zipf vocab is always ≪ its corpus).
+    "x71_bpe_tokenize" -> QueryCase({ (s, dir) =>
+      BpeOps.tokenize(spread(t(s, dir, "documents")), "doc_id",
+          bpeMergesOf(s, dir))
+        .orderBy("doc_id")
+    }, oracle =
       s"""WITH $bpeTrainSql,
          | wn AS (SELECT word, len(string_split(syms,' '))::BIGINT ns FROM v8),
          | dt AS (SELECT doc_id, unnest(string_split(text,' ')) word
@@ -5503,12 +2760,30 @@ object ExtensionQueries {
          | SELECT doc_id, count(*)::BIGINT AS ws_tokens,
          |   sum(ns)::BIGINT AS bpe_tokens
          | FROM dt JOIN wn USING (word)
-         | GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         | GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    // Bloom build/probe mirrored bit-for-bit: position = hash60 of
-    // "i<chr(1)>text" mod m, 32-bit word packing, bit_or aggregation,
-    // all-k-bits-set membership. Absent words are all-zero (LEFT JOIN).
-    "x72_bloom_dedup" ->
+    // x72 — Bloom-filter incremental-dedup probe: src0 docs probe a bloom
+    // built over every OTHER source (m=2048 deliberately undersized so
+    // the fixture exhibits real false positives next to exact_dup=0).
+    // exact_dup alongside proves the no-false-negative contract in the
+    // gated output itself: no row may have exact_dup=1, bloom_hit=0.
+    "x72_bloom_dedup" -> QueryCase({ (s, dir) =>
+      val docs = spread(t(s, dir, "documents"))
+      val ref = docs.filter(col("source") =!= "src0").select("text")
+      val probe = docs.filter(col("source") === "src0").select("doc_id", "text")
+      val bloom = StatOps.bloomSketch(ref, "text", mBits = 2048, kHashes = 4)
+      val hits = StatOps.bloomProbe(probe, "doc_id", "text", bloom,
+        mBits = 2048, kHashes = 4)
+      val exact = probe.join(ref.distinct(), Seq("text"), "left_semi")
+        .select(col("doc_id"), lit(1L).as("exact_dup"))
+      hits.join(exact, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("bloom_hit"),
+          coalesce(col("exact_dup"), lit(0L)).as("exact_dup"))
+        .orderBy("doc_id")
+    }, oracle =
+      // Bloom build/probe mirrored bit-for-bit: position = hash60 of
+      // "i<chr(1)>text" mod m, 32-bit word packing, bit_or aggregation,
+      // all-k-bits-set membership. Absent words are all-zero (LEFT JOIN).
       """WITH ref AS (SELECT text FROM documents WHERE source <> 'src0'),
         | pos AS (SELECT unnest(list_transform(range(0, 4), i ->
         |     ('0x'||substr(md5(i::VARCHAR || chr(1) || text),1,15))::BIGINT
@@ -5531,14 +2806,38 @@ object ExtensionQueries {
         | SELECT h.doc_id, h.h::BIGINT AS bloom_hit,
         |   (CASE WHEN e.doc_id IS NULL THEN 0 ELSE 1 END)::BIGINT AS exact_dup
         | FROM hit h LEFT JOIN ex e ON e.doc_id = h.doc_id
-        | ORDER BY h.doc_id""".stripMargin,
+        | ORDER BY h.doc_id""".stripMargin),
 
-    // x68's positional-shingle machinery extended with keep-first: the
-    // first occurrence of each duplicated shingle (corpus order (doc_id,
-    // p), via rn) is exempt from removal; islands/spans identical to x68;
-    // removal drops every token index covered by a span and re-joins the
-    // survivors in position order.
-    "x74_span_removal" ->
+    // x73 — x60's incremental dedup with the Bloom pre-filter engaged: the
+    // reference corpus collapses to a bounded sketch, definite misses skip
+    // the exact anti-join entirely. Output is row-identical to x60 by
+    // construction (no false negatives), so the oracle asserts exactly
+    // that — same SQL as x60.
+    "x73_bloom_incremental" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      DedupOps.incrementalDedup(
+          d.filter(col("doc_id") >= 250), d.filter(col("doc_id") < 250),
+          "doc_id", "text", TextOps.wordShingles(col("text"), 3), 0.5,
+          bloom = true, bloomBits = 1 << 14, bloomHashes = 4)
+        .orderBy("doc_id")
+    }, oracle = incrementalDedupSql),
+
+    // x74 — span REMOVAL (Lee et al. 2021 second half): x68 finds the
+    // duplicated 5-gram spans; this emits the corpus rewritten with every
+    // non-first occurrence excised. Only touched docs emitted (the
+    // untouched corpus would be pure fixture echo).
+    "x74_span_removal" -> QueryCase({ (s, dir) =>
+      DedupOps.removeSpans(spread(t(s, dir, "documents")), "doc_id", "text",
+          k = 5, minCount = 2)
+        .filter(col("n_removed") > 0)
+        .select("doc_id", "n_removed", "text_clean")
+        .orderBy("doc_id")
+    }, oracle =
+      // x68's positional-shingle machinery extended with keep-first: the
+      // first occurrence of each duplicated shingle (corpus order (doc_id,
+      // p), via rn) is exempt from removal; islands/spans identical to x68;
+      // removal drops every token index covered by a span and re-joins the
+      // survivors in position order.
       """WITH w AS (SELECT doc_id, string_split(text,' ') t FROM documents),
         | ps AS (SELECT doc_id, unnest(list_transform(
         |     range(0, greatest(len(t)-4, 0)),
@@ -5571,9 +2870,27 @@ object ExtensionQueries {
         |   coalesce(agg.txt, '') AS text_clean
         | FROM w LEFT JOIN agg USING (doc_id)
         | WHERE len(w.t) - coalesce(agg.nk, 0) > 0
-        | ORDER BY w.doc_id""".stripMargin,
+        | ORDER BY w.doc_id""".stripMargin),
 
-    "x75_asof_forward" ->
+    // x75 — forward as-of join (x27's mirror, previously spec-only): for
+    // each purchase, the user's EARLIEST click at-or-after it — the "next
+    // event after" direction (next fill after an order). Same union+window
+    // plan, first(ignoreNulls) over the FOLLOWING frame.
+    "x75_asof_forward" -> QueryCase({ (s, dir) =>
+      val ev = t(s, dir, "events")
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select("event_id", "user_id", "ts")
+      val clicks = ev.filter(col("event_type") === "click")
+        .groupBy(col("user_id"), col("ts"))
+        .agg(max(col("event_id")).as("click_id"))
+        .withColumn("click_ts", col("ts"))
+      JoinOps.asOfJoinForward(purchases, clicks, "user_id", "ts",
+          Seq("click_id", "click_ts"))
+        .select(col("event_id"), col("user_id"), col("click_id"),
+          (graft.ops.TsCompat.micros(col("click_ts")) -
+            graft.ops.TsCompat.micros(col("ts"))).as("wait_us"))
+        .orderBy("event_id")
+    }, oracle =
       """WITH clicks AS (SELECT user_id, ts, max(event_id) click_id
         |   FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
         | p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
@@ -5581,11 +2898,19 @@ object ExtensionQueries {
         |   epoch_us(c.ts) - epoch_us(p.ts) AS wait_us
         | FROM p ASOF LEFT JOIN clicks c
         |   ON p.user_id = c.user_id AND p.ts <= c.ts
-        | ORDER BY p.event_id""".stripMargin,
+        | ORDER BY p.event_id""".stripMargin),
 
-    // minhash convention identical to x22 (md5(h||'|'||s)); group = source.
-    // min over the multiset == min over the set, so no per-source distinct.
-    "x76_source_similarity" ->
+    // x76 — cross-source MinHash similarity matrix: estimated Jaccard
+    // between every source pair's 3-gram shingle sets — the corpus-overlap
+    // analytics a mixture-weighting stage reads ("how much of src3 is src1
+    // again?"). Group signatures are bounded metadata (sources × 32).
+    "x76_source_similarity" -> QueryCase({ (s, dir) =>
+      DedupOps.minhashGroupSimilarity(spread(t(s, dir, "documents")),
+          "source", TextOps.wordShingles(col("text"), 3), numHashes = 32)
+        .orderBy("key_a", "key_b")
+    }, oracle =
+      // minhash convention identical to x22 (md5(h||'|'||s)); group = source.
+      // min over the multiset == min over the set, so no per-source distinct.
       s"""$word3gramShingles,
          | ss AS (SELECT d.source, sh.s FROM sh
          |   JOIN documents d USING (doc_id)),
@@ -5597,9 +2922,16 @@ object ExtensionQueries {
          |   floor(sum(CASE WHEN a.m = b.m THEN 1 ELSE 0 END)::DOUBLE
          |     * 10000 / 32)::BIGINT AS est_jaccard_bp
          | FROM hs a JOIN hs b ON a.h = b.h AND a.source < b.source
-         | GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+         | GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
-    "x77_novelty" ->
+    // x77 — per-doc seen-before novelty: of each doc's distinct 3-gram
+    // shingles, the fraction first appearing in a LOWER-id doc — the
+    // "how derivative is this document" signal, integer basis points.
+    "x77_novelty" -> QueryCase({ (s, dir) =>
+      DedupOps.seenBeforeNovelty(spread(t(s, dir, "documents")), "doc_id",
+          TextOps.wordShingles(col("text"), 3))
+        .orderBy("doc_id")
+    }, oracle =
       s"""$word3gramShingles,
          | fst AS (SELECT s, min(doc_id) fd FROM sh GROUP BY s)
          | SELECT sh.doc_id, count(*)::BIGINT AS n_shingles,
@@ -5608,12 +2940,19 @@ object ExtensionQueries {
          |   floor((count(*) - sum(CASE WHEN fst.fd < sh.doc_id THEN 1
          |     ELSE 0 END))::DOUBLE * 10000 / count(*))::BIGINT AS novelty_bp
          | FROM sh JOIN fst USING (s)
-         | GROUP BY sh.doc_id ORDER BY sh.doc_id""".stripMargin,
+         | GROUP BY sh.doc_id ORDER BY sh.doc_id""".stripMargin),
 
-    // this DuckDB's arg_min rejects struct keys, so open/close come from
-    // row_number in both time directions — equivalent because (ts,
-    // event_id) is unique; the engine's min_by/max_by needs no sort.
-    "x78_ohlc_resample" ->
+    // x78 — OHLC candles: per (user, day) the first/last/max/min value and
+    // event count — the canonical time-series downsample of the reference
+    // domain (price candles over trades). One map-side-combinable shuffle.
+    "x78_ohlc_resample" -> QueryCase({ (s, dir) =>
+      TimeOps.ohlcResample(t(s, dir, "events"), "user_id", "ts", "event_id",
+          "value", 86400L * 1000000)
+        .orderBy("user_id", "bucket")
+    }, oracle =
+      // this DuckDB's arg_min rejects struct keys, so open/close come from
+      // row_number in both time directions — equivalent because (ts,
+      // event_id) is unique; the engine's min_by/max_by needs no sort.
       """WITH b AS (SELECT user_id,
         |     epoch_us(ts) // 86400000000 AS bucket, value v, ts, event_id
         |   FROM events WHERE ts IS NOT NULL),
@@ -5627,32 +2966,82 @@ object ExtensionQueries {
         |   max(CASE WHEN rno = 1 THEN v END) AS open,
         |   max(CASE WHEN rnc = 1 THEN v END) AS close,
         |   max(v) AS high, min(v) AS low, count(*)::BIGINT AS n_events
-        | FROM r GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        | FROM r GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
 
-    "x80_containment" ->
+    // x79 — trailing 1-hour RANGE-frame aggregate per event: event-time
+    // windows (peers at equal ts see each other; event-time gaps shrink
+    // the frame) vs x28's ROWS running total.
+    "x79_rolling_time_window" -> QueryCase({ (s, dir) =>
+      TimeOps.rollingTimeWindow(t(s, dir, "events"), "user_id", "ts",
+          "event_id", "value", 3600L * 1000000)
+        .orderBy("event_id")
+    }, oracle =
+      """SELECT event_id, user_id,
+        | CAST(ROUND(SUM(CAST(value AS DECIMAL(38,6))) OVER
+        |   (PARTITION BY user_id ORDER BY epoch_us(ts)
+        |    RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW), 4)
+        |   * 10000 AS BIGINT) AS win_total_e4,
+        | COUNT(*) OVER
+        |   (PARTITION BY user_id ORDER BY epoch_us(ts)
+        |    RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)::BIGINT
+        |   AS win_n
+        | FROM events WHERE ts IS NOT NULL ORDER BY event_id""".stripMargin),
+
+    // x80 — asymmetric containment pairs: |A∩B|/|A| and /|B| — the
+    // sub-duplication metric Jaccard structurally misses (a short doc
+    // fully embedded in a long one). `exact = true` is the deliberate
+    // opt-IN (the x21/x34 pattern): this entry is the complete
+    // enumeration kept as the calibration baseline; x82 runs the API's
+    // default LSH-candidate-then-verify path.
+    "x80_containment" -> QueryCase({ (s, dir) =>
+      DedupOps.containmentPairs(spread(t(s, dir, "documents")), "doc_id",
+          TextOps.wordShingles(col("text"), 3), 0.8, exact = true)
+        .orderBy("i", "j")
+    }, oracle =
       s"""$word3gramShingles,
          | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
          | $exactInterSql
          | $containmentSelectSql
-         | ORDER BY i, j""".stripMargin,
+         | ORDER BY i, j""".stripMargin),
 
-    // x80's scoring with the candidate set replaced by the OPH banding
-    // mirror (ophBsigSql — one hash per shingle, bucket mins, rotation
-    // densification; r14 flip): intersection counts evaluated only on
-    // band-colliding pairs, exactly as the engine's verify arm.
-    "x82_containment_lsh" ->
+    // x82 — containment on the DEFAULT (scale) path: MinHash-LSH banding
+    // (r14: the one-permutation signatures, like every other banding
+    // consumer) proposes candidate pairs, exact intersection counts
+    // verify on those pairs only — work ∝ |candidates| instead of
+    // Θ(Σ bucket²). The oracle mirrors the SAME banding (the x124
+    // pattern), so the gate is exact regardless of banding recall;
+    // differs from x80 only where banding misses a pair
+    // (J = tρ/(1+ρ−tρ) for containment t at size ratio ρ — see
+    // DedupOps.containmentPairs for the honest math).
+    "x82_containment_lsh" -> QueryCase({ (s, dir) =>
+      DedupOps.containmentPairs(spread(t(s, dir, "documents")), "doc_id",
+          TextOps.wordShingles(col("text"), 3), 0.8, oph = true)
+        .orderBy("i", "j")
+    }, oracle =
+      // x80's scoring with the candidate set replaced by the OPH banding
+      // mirror (ophBsigSql — one hash per shingle, bucket mins, rotation
+      // densification; r14 flip): intersection counts evaluated only on
+      // band-colliding pairs, exactly as the engine's verify arm.
       s"""$word3gramShingles,
          | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
          | $ophBsigSql,
          | $bandVerifySql
          | $containmentSelectSql
-         | ORDER BY i, j""".stripMargin,
+         | ORDER BY i, j""".stripMargin),
 
-    // the rate arithmetic mirrors mixtureSample's exact double sequence:
-    // T = min(n/w), rate = floor(((10000*w)*T)/n) — left-associative in
-    // both engines; weights cast to DOUBLE so the decimal literal doesn't
-    // change the IEEE value.
-    "x81_mixture_sample" ->
+    // x81 — mixture sampling to target source weights (assemble-the-mix):
+    // largest corpus matching src0:src1:src2 = 5:3:2, deterministic
+    // id-hash acceptance; unweighted sources dropped.
+    "x81_mixture_sample" -> QueryCase({ (s, dir) =>
+      SampleOps.mixtureSample(t(s, dir, "documents"), "doc_id", "source",
+          Seq("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2))
+        .select("doc_id", "source")
+        .orderBy("doc_id")
+    }, oracle =
+      // the rate arithmetic mirrors mixtureSample's exact double sequence:
+      // T = min(n/w), rate = floor(((10000*w)*T)/n) — left-associative in
+      // both engines; weights cast to DOUBLE so the decimal literal doesn't
+      // change the IEEE value.
       """WITH wt AS (SELECT * FROM (VALUES
         |     ('src0', 0.5::DOUBLE), ('src1', 0.3::DOUBLE),
         |     ('src2', 0.2::DOUBLE)) w(dom, w)),
@@ -5666,26 +3055,51 @@ object ExtensionQueries {
         | JOIN r ON d.source = r.dom
         | WHERE ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 15))::BIGINT
         |   % 10000 < r.rate
-        | ORDER BY d.doc_id""".stripMargin,
+        | ORDER BY d.doc_id""".stripMargin),
 
-    // Occurrence bigrams (NO list_distinct — an LM needs counts), Laplace
-    // add-one over a V-sized successor space, per-bigram surprisal
-    // quantized to an integer BEFORE the per-doc sum (floating summation
-    // order can then never perturb the hash on either engine). ln over
-    // doubles derived from identical integer counts → identical IEEE
-    // input on both sides.
-    "x83_lm_perplexity" ->
+    // x83 — bigram-LM perplexity scoring (the CCNet-style model-based
+    // quality tier): train a Laplace-smoothed bigram LM on the corpus,
+    // score every doc by integral mean surprisal. Per-bigram surprisal is
+    // quantized to an integer BEFORE per-doc summation, so the result is
+    // partition-order-proof and the oracle hash-exact. The trained model
+    // is localCheckpointed: scoring references it three times (bigram
+    // join, prefix table, vocab row) and a production run loads it from
+    // ModelIO instead of retraining.
+    "x83_lm_perplexity" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val model = LmOps.trainBigramLm(d).localCheckpoint()
+      LmOps.scoreBigramNll(d, model).orderBy("doc_id")
+    }, oracle =
+      // Occurrence bigrams (NO list_distinct — an LM needs counts), Laplace
+      // add-one over a V-sized successor space, per-bigram surprisal
+      // quantized to an integer BEFORE the per-doc sum (floating summation
+      // order can then never perturb the hash on either engine). ln over
+      // doubles derived from identical integer counts → identical IEEE
+      // input on both sides.
       s"""WITH $bigramNllSql
         | SELECT doc_id, count(*)::BIGINT AS n_bigrams,
         |   sum(nll)::BIGINT AS nll_sum,
         |   (sum(nll)::BIGINT // count(*)::BIGINT) AS avg_nll_scaled
-        | FROM big JOIN m USING (s) GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        | FROM big JOIN m USING (s) GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    // The OPH banding mirror (ophBsigSql; r14 flip) feeding the
-    // x40 reachability CTE, then the keep decision: per component, rank by
-    // stopword-ratio quality desc / doc_id asc; rank 1 is canonical.
-    // Singletons (docs in no edge) are their own component and keeper.
-    "x84_canonical_keep" ->
+    // x84 — the canonical KEEP/DROP decision, the artifact a dedup stage
+    // actually ships: LSH-verified near-dup pairs → connected components
+    // → per cluster keep the highest-quality member (stopword-ratio
+    // signal, doc_id tie-break), everything else dropped with its
+    // canonical id attached. Singleton docs keep themselves. One row per
+    // input doc — the decision table a 100 TB pipeline writes back next
+    // to the corpus.
+    "x84_canonical_keep" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      DedupOps.canonicalKeep(d, "doc_id", TextOps.stopRatioBp(col("text")),
+          DedupOps.nearDupPairs(d, "doc_id",
+            TextOps.wordShingles(col("text"), 3), 0.5, oph = true))
+        .orderBy("doc_id")
+    }, oracle =
+      // The OPH banding mirror (ophBsigSql; r14 flip) feeding the
+      // x40 reachability CTE, then the keep decision: per component, rank by
+      // stopword-ratio quality desc / doc_id asc; rank 1 is canonical.
+      // Singletons (docs in no edge) are their own component and keeper.
       s"""WITH RECURSIVE ${word3gramCtes("documents")},
         | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
         | $ophBsigSql,
@@ -5707,11 +3121,35 @@ object ExtensionQueries {
         |     AS keep_flag
         | FROM allc a JOIN q USING (doc_id)
         | WINDOW win AS (PARTITION BY a.component ORDER BY q.q DESC, a.doc_id)
-        | ORDER BY a.doc_id""".stripMargin,
+        | ORDER BY a.doc_id""".stripMargin),
 
-    // Same OPH banding mirror + verify threshold; pairs fold symmetrically
-    // on (least, greatest) of the two sources.
-    "x85_source_overlap" ->
+    // x85 — cross-source duplication matrix: which sources overlap, from
+    // the same LSH-verified near-dup pairs. One bounded sources² report
+    // row set — the "which crawl dumps re-crawl each other" audit that
+    // decides what to ingest at all. src_a <= src_b folds the symmetric
+    // pair; the diagonal is intra-source duplication.
+    "x85_source_overlap" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val pairs = DedupOps.nearDupPairs(d, "doc_id",
+        TextOps.wordShingles(col("text"), 3), 0.5, oph = true)
+      val src = d.select(col("doc_id"), col("source"))
+      val cnt = src.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
+      pairs
+        .join(src.select(col("doc_id").as("i"), col("source").as("si")), Seq("i"))
+        .join(src.select(col("doc_id").as("j"), col("source").as("sj")), Seq("j"))
+        .select(least(col("si"), col("sj")).as("src_a"),
+          greatest(col("si"), col("sj")).as("src_b"))
+        .groupBy(col("src_a"), col("src_b"))
+        .agg(count(lit(1)).as("n_pairs"))
+        .join(cnt.select(col("source").as("src_a"), col("n_docs").as("n_docs_a")),
+          Seq("src_a"))
+        .join(cnt.select(col("source").as("src_b"), col("n_docs").as("n_docs_b")),
+          Seq("src_b"))
+        .select("src_a", "src_b", "n_pairs", "n_docs_a", "n_docs_b")
+        .orderBy("src_a", "src_b")
+    }, oracle =
+      // Same OPH banding mirror + verify threshold; pairs fold symmetrically
+      // on (least, greatest) of the two sources.
       s"""$word3gramShingles,
         | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
         | $ophBsigSql,
@@ -5727,13 +3165,20 @@ object ExtensionQueries {
         |   ca.n_docs::BIGINT AS n_docs_a, cb.n_docs::BIGINT AS n_docs_b
         | FROM g JOIN cnt ca ON ca.source = g.src_a
         | JOIN cnt cb ON cb.source = g.src_b
-        | ORDER BY src_a, src_b""".stripMargin,
+        | ORDER BY src_a, src_b""".stripMargin),
 
-    // DSIR mirror: unigram+bigram occurrences hashed into 1024 buckets
-    // (the house md5 hash), two smoothed bag-of-buckets models (target =
-    // lang='en', raw = all), per-bucket integer log weight, per-doc
-    // integer sum, top-100 by (weight desc, id).
-    "x86_dsir_selection" ->
+    // x86 — DSIR selection (Xie et al. 2023): the 100 raw docs whose
+    // hashed-n-gram profile the English slice up-weights most. The
+    // "make the crawl look like the target corpus" curation stage;
+    // target = lang='en' stands in for the high-quality reference set.
+    "x86_dsir_selection" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      DsirOps.selectTopN(d, d.filter(col("lang") === "en"), 100)
+    }, oracle =
+      // DSIR mirror: unigram+bigram occurrences hashed into 1024 buckets
+      // (the house md5 hash), two smoothed bag-of-buckets models (target =
+      // lang='en', raw = all), per-bucket integer log weight, per-doc
+      // integer sum, top-100 by (weight desc, id).
       """WITH w AS (SELECT doc_id, lang, string_split(text,' ') w FROM documents),
         | uni AS (SELECT doc_id, lang, unnest(w) s FROM w),
         | big AS (SELECT doc_id, lang, unnest(list_transform(
@@ -5752,37 +3197,43 @@ object ExtensionQueries {
         |   FROM cr LEFT JOIN ct USING (b) CROSS JOIN tot)
         | SELECT doc_id, count(*)::BIGINT AS n_feats, sum(ws)::BIGINT AS logw_sum
         | FROM f JOIN wt USING (b)
-        | GROUP BY doc_id ORDER BY logw_sum DESC, doc_id LIMIT 100""".stripMargin,
+        | GROUP BY doc_id ORDER BY logw_sum DESC, doc_id LIMIT 100""".stripMargin),
 
-    // IVF-PQ mirror: seed codebooks = 16-dim slices of the 16 lowest-id
-    // vectors; encode by argmin d² = |x_s|² − 2·x_s·c + |c|² (ties →
-    // lowest code); ADC cosine against the reconstruction with every
-    // cross-subspace sum folded in ascending s (list_reduce over
-    // list(... ORDER BY s)) — bit-exact vs the Scala left folds. Reuses
-    // annIvf's ic/iq for the coarse cells and query probes.
-    "x87_ann_ivf_pq" ->
+    // x87 — IVF-PQ: the product-quantized serving index (m=4 one-byte
+    // codes per vector, 64× smaller than float32) probing the same
+    // seed-centroid cells as x35; completes the serving ladder
+    // float (x35) → int8 SQ (x66) → PQ codes (x87).
+    "x87_ann_ivf_pq" -> QueryCase({ (s, dir) =>
+      val e = spread(t(s, dir, "embeddings"))
+      VectorOps.ivfTopKPq(e.filter(col("vec_id") < 20), e, "vec_id",
+          "embedding", 5, pqCodebooksOf(s, dir), numCentroids = 8, nProbe = 2)
+        .orderBy("qid", "nid")
+    }, oracle =
+      // IVF-PQ mirror: seed codebooks = 16-dim slices of the 16 lowest-id
+      // vectors; encode by argmin d² = |x_s|² − 2·x_s·c + |c|² (ties →
+      // lowest code); ADC cosine against the reconstruction with every
+      // cross-subspace sum folded in ascending s (list_reduce over
+      // list(... ORDER BY s)) — bit-exact vs the Scala left folds. Reuses
+      // annIvf's ic/iq for the coarse cells and query probes.
       s"""WITH $annV,
          | $annIvf,
          | $annIvfPq
          | SELECT qid, nid, rk::BIGINT AS rk, floor(cos * 10000)::BIGINT AS cos_bp
-         | FROM r_pq WHERE rk <= 5 ORDER BY qid, nid""".stripMargin,
+         | FROM r_pq WHERE rk <= 5 ORDER BY qid, nid""".stripMargin),
 
-    // The PQ recall gate: x87's top-5 graded against the x25 brute-force
-    // truth — the honest "what does 64× compression cost" number next to
-    // the x61/x63 per-method grades.
-    "x91_ann_recall_pq" ->
-      s"""WITH $annV,
-         | $annBrute,
-         | ex AS (SELECT qid, nid FROM r_ex WHERE rk <= 5),
-         | $annIvf,
-         | $annIvfPq,
-         | pq AS (SELECT DISTINCT qid, nid FROM r_pq WHERE rk <= 5),
-         | ${gradeSql("ivf_pq", "pq")}
-         | SELECT * FROM g_pq ORDER BY method, qid""".stripMargin,
-
-    // Gopher decision-table mirror: same integral signals (centi / basis
-    // points, floor), same rule bounds, same conjunction.
-    "x88_gopher_filter" ->
+    // x88 — the Gopher rule battery as a decision table: every signal,
+    // one flag per rule, and the conjunction — the filter artifact a
+    // pipeline writes next to the corpus (Rae et al. 2021 §A.1.1).
+    "x88_gopher_filter" -> QueryCase({ (s, dir) =>
+      TextOps.gopherFilter(spread(t(s, dir, "documents")))
+        .select("doc_id", "n_words", "mean_word_len_centi", "dup_word_bp",
+          "alpha_word_bp", "sym_bp", "stop_hits", "keep_n_words",
+          "keep_word_len", "keep_dup", "keep_alpha", "keep_sym",
+          "keep_stop", "keep")
+        .orderBy("doc_id")
+    }, oracle =
+      // Gopher decision-table mirror: same integral signals (centi / basis
+      // points, floor), same rule bounds, same conjunction.
       s"""WITH $gopherCountsSql,
         | s2 AS (SELECT doc_id, n_words,
         |     floor(word_chars::DOUBLE * 100 / n_words::DOUBLE)::BIGINT mean_word_len_centi,
@@ -5803,169 +3254,106 @@ object ExtensionQueries {
         |    AND (mean_word_len_centi >= 300 AND mean_word_len_centi <= 1000)
         |    AND (dup_word_bp <= 3000) AND (alpha_word_bp >= 8000)
         |    AND (sym_bp <= 1000) AND (stop_hits >= 2)) AS keep
-        | FROM s2 ORDER BY doc_id""".stripMargin,
+        | FROM s2 ORDER BY doc_id""".stripMargin),
 
-    // Normalization mirror: lower → collapse \s+ → trim; the nopunct
-    // variant strips [^a-z0-9 ] then re-collapses.
-    "x93_normalized_dup_stats" ->
-      """WITH nrm AS (SELECT text,
-        |     trim(regexp_replace(lower(text), '\s+', ' ', 'g')) n1
-        |   FROM documents),
-        | n2t AS (SELECT text, n1,
-        |     trim(regexp_replace(regexp_replace(n1, '[^a-z0-9 ]', '', 'g'),
-        |       '\s+', ' ', 'g')) n2
-        |   FROM nrm)
-        | SELECT count(*)::BIGINT AS n_docs,
-        |   count(DISTINCT text)::BIGINT AS n_distinct_raw,
-        |   count(DISTINCT n1)::BIGINT AS n_distinct_norm,
-        |   count(DISTINCT n2)::BIGINT AS n_distinct_norm_nopunct
-        | FROM n2t""".stripMargin,
-
-    // Training-manifest mirror: quality gate → canonical keep-min dedup →
-    // x58 temperature rates over the SURVIVOR set → x89 packing windows.
-    "x94_training_manifest" ->
-      s"""WITH $manifestHeadSql,
-        | d2 AS (SELECT doc_id, len(string_split(text,' '))::BIGINT n FROM bal),
-        | sto AS (SELECT doc_id, n,
+    // x89 — GPT-style concat-and-chunk packing: whitespace token counts,
+    // then the fixed-128-token sequence spans — the loader index for
+    // "materialize training sequence N" without re-scanning the corpus.
+    "x89_seq_packing" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+        .select(col("doc_id"), size(split(col("text"), " "))
+          .cast(org.apache.spark.sql.types.LongType).as("n_toks_doc"))
+      SampleOps.packSequences(d, "doc_id", "n_toks_doc", seqLen = 128)
+        .select("seq_id", "doc_id", "seq_off", "doc_off", "n_toks")
+        .orderBy("seq_id", "doc_id")
+    }, oracle =
+      // Sequence-packing mirror: running token-start offsets in doc_id
+      // order, each doc exploded over the sequences it overlaps, interval
+      // arithmetic for the span columns.
+      """WITH d AS (SELECT doc_id,
+        |     len(string_split(text,' '))::BIGINT n FROM documents),
+        | s AS (SELECT doc_id, n,
         |     coalesce(sum(n) OVER (ORDER BY doc_id
         |       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT st
-        |   FROM d2),
+        |   FROM d),
         | x AS (SELECT doc_id, n, st,
         |     unnest(range(st // 128, (st + n - 1) // 128 + 1)) seq_id
-        |   FROM sto WHERE n > 0)
+        |   FROM s WHERE n > 0)
         | SELECT seq_id::BIGINT AS seq_id, doc_id,
         |   greatest(st - seq_id*128, 0)::BIGINT AS seq_off,
         |   greatest(seq_id*128 - st, 0)::BIGINT AS doc_off,
         |   (least(st + n, seq_id*128 + 128)
         |     - greatest(st, seq_id*128))::BIGINT AS n_toks
-        | FROM x ORDER BY seq_id, doc_id""".stripMargin,
+        | FROM x ORDER BY seq_id, doc_id""".stripMargin),
 
-    // Prototypicality mirror: the x42/x65 assignment CTEs (argmax cosine,
-    // ties → lowest cid) with the winning cosine kept and floored to bp;
-    // keep = rank ≤ ⌈n_cell·keepBp/10000⌉ in the pure-integer form.
-    "x95_prototype_pruning" ->
-      s"""WITH v AS (SELECT * FROM (SELECT vec_id, embedding,
-         |     ${normSql("embedding")} nrm FROM embeddings) WHERE nrm > 0),
-         | cent AS ${seedCentSql(8)},
-         | ca AS (SELECT v.vec_id id, cent.cid,
-         |     ${dotSql("v.embedding", "cent.cv")} / (v.nrm * cent.cn) ccos
-         |   FROM v CROSS JOIN cent),
-         | ranked AS (SELECT id, cid, ccos,
-         |     row_number() OVER (PARTITION BY id ORDER BY ccos DESC, cid) crk
-         |   FROM ca),
-         | cells AS (SELECT id, cid cell,
-         |     floor(ccos * 10000)::BIGINT proto_bp FROM ranked WHERE crk = 1),
-         | k AS (SELECT id, cell, proto_bp,
-         |     row_number() OVER (PARTITION BY cell ORDER BY proto_bp, id) rk,
-         |     count(*) OVER (PARTITION BY cell) n FROM cells)
-         | SELECT id AS vec_id, cell, proto_bp,
-         |   ((rk - 1) * 10000 < n * 5000) AS keep
-         | FROM k ORDER BY vec_id""".stripMargin,
-
-    // CCNet mirror: the x83 scoring CTEs + per-language ntile(3) over the
-    // integer score with the doc_id tie-break.
-    "x96_ccnet_buckets" ->
-      s"""WITH $bigramNllSql,
-        | sc AS (SELECT doc_id,
-        |     (sum(nll)::BIGINT // count(*)::BIGINT) avg_nll_scaled
-        |   FROM big JOIN m USING (s) GROUP BY doc_id),
-        | t AS (SELECT sc.doc_id, d.lang, avg_nll_scaled,
-        |     ntile(3) OVER (PARTITION BY d.lang
-        |       ORDER BY avg_nll_scaled, sc.doc_id) tc
-        |   FROM sc JOIN documents d USING (doc_id))
-        | SELECT doc_id, lang, avg_nll_scaled, tc::BIGINT AS tercile,
-        |   CASE tc WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
-        |     ELSE 'tail' END AS bucket
-        | FROM t ORDER BY doc_id""".stripMargin,
-
-    // Top-n-gram mirror: positional grams per n ∈ [2,10], count + window,
-    // integral // division, both coverages capped at 10000 bp.
-    "x97_topgram_coverage" ->
-      """WITH w AS (SELECT doc_id, length(text)::BIGINT len,
-        |     string_split(text,' ') w FROM documents WHERE length(text) > 0),
-        | g AS (SELECT doc_id, len, n, unnest(list_transform(
-        |     range(1, greatest(len(w) - (n - 1), 0) + 1),
-        |     k -> array_to_string(list_slice(w, k::INT, (k + n - 1)::INT), ' '))) gram
-        |   FROM w CROSS JOIN (SELECT unnest(range(2, 11)) n)),
-        | c AS (SELECT doc_id, len, n, gram, count(*)::BIGINT cnt,
-        |     length(gram)::BIGINT glen
-        |   FROM g GROUP BY doc_id, len, n, gram),
-        | t AS (SELECT doc_id, len, n, gram, cnt, glen,
-        |     row_number() OVER (PARTITION BY doc_id, n
-        |       ORDER BY cnt DESC, gram) rk,
-        |     sum(CASE WHEN cnt >= 2 THEN cnt * glen ELSE 0 END)
-        |       OVER (PARTITION BY doc_id, n)::BIGINT dupc
-        |   FROM c)
-        | SELECT doc_id, n::BIGINT AS n, gram AS top_gram, cnt AS top_cnt,
-        |   least((cnt * glen * 10000) // len, 10000)::BIGINT AS top_bp,
-        |   least((dupc * 10000) // len, 10000)::BIGINT AS dup_bp
-        | FROM t WHERE rk = 1 ORDER BY doc_id, n""".stripMargin,
-
-    // Shuffle-order mirror: rank by (hash60('0_'||id), id); shard =
-    // round-robin over the 0-based global position.
-    "x98_shuffle_order" ->
-      """WITH h AS (SELECT doc_id,
-        |     ('0x' || substr(md5('0_' || doc_id::VARCHAR), 1, 15))::BIGINT h
+    // x90 — BM25 retrieval: the 5 lowest-id docs as seed queries, top-5
+    // corpus matches each — the "find more like these" curation primitive
+    // over the inline-built inverted index.
+    "x90_bm25_retrieval" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      TextOps.bm25TopK(d.filter(col("doc_id") < 5), d, 5)
+        .orderBy("qid", "did")
+    }, oracle =
+      // BM25 mirror: same postings/doclen/df tables, the same literal
+      // constants (1.2/2.2/0.25/0.75), the same expression shape so every
+      // double matches bit-for-bit before the single floor-quantization.
+      """WITH wds AS (SELECT doc_id did, unnest(string_split(text,' ')) t
         |   FROM documents),
-        | r AS (SELECT doc_id,
-        |     row_number() OVER (ORDER BY h, doc_id) - 1 gp FROM h)
-        | SELECT doc_id, gp::BIGINT AS global_pos, (gp % 8)::BIGINT AS shard,
-        |   (gp // 8)::BIGINT AS shard_pos
-        | FROM r ORDER BY doc_id""".stripMargin,
+        | tf AS (SELECT did, t, count(*) tf FROM wds GROUP BY 1, 2),
+        | dl AS (SELECT did, count(*) dl FROM wds GROUP BY 1),
+        | dfq AS (SELECT t, count(*) df FROM tf GROUP BY 1),
+        | st AS (SELECT (SELECT count(*) FROM documents) n_docs,
+        |     (SELECT count(*) FROM wds) n_toks),
+        | qt AS (SELECT DISTINCT qid, t FROM
+        |   (SELECT doc_id qid, unnest(string_split(text,' ')) t
+        |    FROM documents WHERE doc_id < 5)),
+        | sc AS (SELECT qt.qid, tf.did, floor(
+        |     1000000 * ln((st.n_docs - dfq.df + 0.5) / (dfq.df + 0.5) + 1.0)
+        |     * (tf.tf * 2.2)
+        |     / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl
+        |         / (st.n_toks::DOUBLE / st.n_docs::DOUBLE))))::BIGINT ws
+        |   FROM qt JOIN tf USING (t) JOIN dfq USING (t)
+        |   JOIN dl ON dl.did = tf.did CROSS JOIN st
+        |   WHERE qt.qid <> tf.did),
+        | pr AS (SELECT qid, did, count(*)::BIGINT n_terms,
+        |     sum(ws)::BIGINT score FROM sc GROUP BY 1, 2),
+        | rnk AS (SELECT qid, did, n_terms, score,
+        |     row_number() OVER (PARTITION BY qid ORDER BY score DESC, did)::BIGINT rk
+        |   FROM pr)
+        | SELECT qid, did, n_terms, score, rk FROM rnk
+        | WHERE rk <= 5 ORDER BY qid, did""".stripMargin),
 
-    // Hard-negative mirror: the x25 brute CTEs with the label inequality
-    // (IS DISTINCT FROM = Spark's !(<=>)) in the join.
-    "x99_hard_negatives" ->
-      s"""WITH v AS (SELECT * FROM (SELECT vec_id, embedding, label,
-         |     ${normSql("embedding")} nrm FROM embeddings) WHERE nrm > 0),
-         | s_hn AS (SELECT q.vec_id qid, c.vec_id nid,
-         |     ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) cos
-         |   FROM v c JOIN v q ON q.vec_id < 20 AND q.vec_id <> c.vec_id
-         |     AND q.label IS DISTINCT FROM c.label),
-         | r_hn AS (SELECT qid, nid, cos,
-         |     row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) rk
-         |   FROM s_hn)
-         | SELECT qid, nid, rk::BIGINT AS rk,
-         |   floor(cos * 10000)::BIGINT AS cos_bp
-         | FROM r_hn WHERE rk <= 5 ORDER BY qid, nid""".stripMargin,
+    // x91 — the PQ recall gate: x87's memoized top-5 graded against the
+    // x25 brute-force truth (the annTruth pattern) — what the 64×
+    // compression costs, measured, next to the x61/x63 method grades.
+    "x91_ann_recall_pq" -> QueryCase({ (s, dir) =>
+      VectorOps.annRecall(gateCandidates(s, dir, "x87_ann_ivf_pq"),
+          annTruth(s, dir), "qid", "nid")
+        .withColumn("method", lit("ivf_pq"))
+        .select("method", "qid", "n_exact", "n_hit", "recall_bp")
+        .orderBy("method", "qid")
+    }, oracle =
+      // The PQ recall gate: x87's top-5 graded against the x25 brute-force
+      // truth — the honest "what does 64× compression cost" number next to
+      // the x61/x63 per-method grades.
+      s"""WITH $annV,
+         | $annBrute,
+         | ex AS (SELECT qid, nid FROM r_ex WHERE rk <= 5),
+         | $annIvf,
+         | $annIvfPq,
+         | pq AS (SELECT DISTINCT qid, nid FROM r_pq WHERE rk <= 5),
+         | ${gradeSql("ivf_pq", "pq")}
+         | SELECT * FROM g_pq ORDER BY method, qid""".stripMargin),
 
-    // Label-noise mirror: the x65 corpus-proportional assignment CTEs
-    // carrying the label, within-cell kNN, majority via (cnt desc, label)
-    // rank — ties → smallest label, same as min(struct(-cnt, label)).
-    "x100_label_noise" ->
-      s"""WITH v AS (SELECT * FROM (SELECT vec_id, embedding,
-         |     label::BIGINT lab, ${normSql("embedding")} nrm
-         |   FROM embeddings) WHERE nrm > 0),
-         | nk AS (SELECT greatest(8, count(*) // 32) k FROM embeddings),
-         | cent AS (SELECT cid, cv, cn FROM (
-         |     SELECT vec_id cid, embedding cv, ${normSql("embedding")} cn,
-         |       row_number() OVER (ORDER BY vec_id) rn FROM embeddings)
-         |   CROSS JOIN nk WHERE rn <= k AND cn > 0),
-         | ca AS (SELECT v.vec_id id, v.embedding vec, v.nrm, v.lab, cent.cid,
-         |     ${dotSql("v.embedding", "cent.cv")} / (v.nrm * cent.cn) ccos
-         |   FROM v CROSS JOIN cent),
-         | ranked AS (SELECT id, vec, nrm, lab, cid,
-         |     row_number() OVER (PARTITION BY id ORDER BY ccos DESC, cid) crk
-         |   FROM ca),
-         | cl AS (SELECT id, vec, nrm, lab, cid cell FROM ranked WHERE crk = 1),
-         | p AS (SELECT a.id, a.lab, a.cell, b.id nid, b.lab nlab,
-         |     ${dotSql("a.vec", "b.vec")} / (a.nrm * b.nrm) cos
-         |   FROM cl a JOIN cl b ON a.cell = b.cell AND a.id <> b.id),
-         | r AS (SELECT id, lab, cell, nid, nlab,
-         |     row_number() OVER (PARTITION BY id ORDER BY cos DESC, nid) rk
-         |   FROM p),
-         | t AS (SELECT id, lab, cell, nlab, count(*)::BIGINT cnt
-         |   FROM r WHERE rk <= 5 GROUP BY id, lab, cell, nlab),
-         | m AS (SELECT id, lab, cell, nlab, cnt,
-         |     row_number() OVER (PARTITION BY id ORDER BY cnt DESC, nlab) mrk,
-         |     sum(cnt) OVER (PARTITION BY id) n_nbrs FROM t)
-         | SELECT id AS vec_id, lab AS label, cell, n_nbrs::BIGINT AS n_nbrs,
-         |   nlab AS maj_label, (nlab IS DISTINCT FROM lab) AS noisy
-         | FROM m WHERE mrk = 1 ORDER BY vec_id""".stripMargin,
-
-    // Dataset-card mirror: the x88 keep conjunction inlined, per-source
-    // aggregates, deterministic language mode ((count desc, lang asc)).
-    "x92_source_report" ->
+    // x92 — the per-source dataset card: counts, token stats, Gopher pass
+    // rate, intra-source exact duplication, modal language — the audit
+    // table a corpus release ships next to the data.
+    "x92_source_report" -> QueryCase({ (s, dir) =>
+      StatOps.sourceReport(spread(t(s, dir, "documents")))
+        .orderBy("source")
+    }, oracle =
+      // Dataset-card mirror: the x88 keep conjunction inlined, per-source
+      // aggregates, deterministic language mode ((count desc, lang asc)).
       """WITH w AS (SELECT doc_id, source, lang, text,
         |     string_split(text,' ') w FROM documents),
         | sig AS (SELECT doc_id, source, text,
@@ -6005,102 +3393,278 @@ object ExtensionQueries {
         |     / n_docs::DOUBLE)::BIGINT AS dup_text_bp,
         |   top_lang,
         |   floor(n_top_lang::DOUBLE * 10000 / n_docs::DOUBLE)::BIGINT AS top_lang_bp
-        | FROM ps JOIN tl USING (source) ORDER BY source""".stripMargin,
+        | FROM ps JOIN tl USING (source) ORDER BY source""".stripMargin),
 
-    // Sequence-packing mirror: running token-start offsets in doc_id
-    // order, each doc exploded over the sequences it overlaps, interval
-    // arithmetic for the span columns.
-    "x89_seq_packing" ->
-      """WITH d AS (SELECT doc_id,
-        |     len(string_split(text,' '))::BIGINT n FROM documents),
-        | s AS (SELECT doc_id, n,
+    // x93 — normalization-aware dup audit: distinct counts of the raw
+    // text vs its canonical form (lower/collapse-ws/trim, then the
+    // punct-stripped variant) — the "how much duplication does
+    // normalization reveal" number that decides whether a corpus deduos
+    // raw or canonical.
+    "x93_normalized_dup_stats" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      d.agg(count(lit(1)).as("n_docs"),
+        count_distinct(col("text")).as("n_distinct_raw"),
+        count_distinct(TextOps.normalizeText(col("text")))
+          .as("n_distinct_norm"),
+        count_distinct(TextOps.normalizeText(col("text"), stripPunct = true))
+          .as("n_distinct_norm_nopunct"))
+    }, oracle =
+      // Normalization mirror: lower → collapse \s+ → trim; the nopunct
+      // variant strips [^a-z0-9 ] then re-collapses.
+      """WITH nrm AS (SELECT text,
+        |     trim(regexp_replace(lower(text), '\s+', ' ', 'g')) n1
+        |   FROM documents),
+        | n2t AS (SELECT text, n1,
+        |     trim(regexp_replace(regexp_replace(n1, '[^a-z0-9 ]', '', 'g'),
+        |       '\s+', ' ', 'g')) n2
+        |   FROM nrm)
+        | SELECT count(*)::BIGINT AS n_docs,
+        |   count(DISTINCT text)::BIGINT AS n_distinct_raw,
+        |   count(DISTINCT n1)::BIGINT AS n_distinct_norm,
+        |   count(DISTINCT n2)::BIGINT AS n_distinct_norm_nopunct
+        | FROM n2t""".stripMargin),
+
+    // x94 — the END-TO-END training manifest, the round's capstone
+    // composite: quality gate (the x34 curation filter) → canonical-text
+    // exact dedup (x93's normalizer feeding x20's keep-min) → temperature
+    // (α=1/2) source rebalance (x58) → fixed-128-token sequence packing
+    // (x89). One lazy plan from raw documents to the loader manifest a
+    // training run reads — every stage narrow or combiner-condensed, the
+    // corpus never shuffled pairwise.
+    "x94_training_manifest" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val (_, _, bal) = manifestStages(d)
+      val toks = bal.select(col("doc_id"),
+        size(split(col("text"), " ")).cast(LongType).as("n_toks_doc"))
+      SampleOps.packSequences(toks, "doc_id", "n_toks_doc", seqLen = 128)
+        .select("seq_id", "doc_id", "seq_off", "doc_off", "n_toks")
+        .orderBy("seq_id", "doc_id")
+    }, oracle =
+      // Training-manifest mirror: quality gate → canonical keep-min dedup →
+      // x58 temperature rates over the SURVIVOR set → x89 packing windows.
+      s"""WITH $manifestHeadSql,
+        | d2 AS (SELECT doc_id, len(string_split(text,' '))::BIGINT n FROM bal),
+        | sto AS (SELECT doc_id, n,
         |     coalesce(sum(n) OVER (ORDER BY doc_id
         |       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT st
-        |   FROM d),
+        |   FROM d2),
         | x AS (SELECT doc_id, n, st,
         |     unnest(range(st // 128, (st + n - 1) // 128 + 1)) seq_id
-        |   FROM s WHERE n > 0)
+        |   FROM sto WHERE n > 0)
         | SELECT seq_id::BIGINT AS seq_id, doc_id,
         |   greatest(st - seq_id*128, 0)::BIGINT AS seq_off,
         |   greatest(seq_id*128 - st, 0)::BIGINT AS doc_off,
         |   (least(st + n, seq_id*128 + 128)
         |     - greatest(st, seq_id*128))::BIGINT AS n_toks
-        | FROM x ORDER BY seq_id, doc_id""".stripMargin,
+        | FROM x ORDER BY seq_id, doc_id""".stripMargin),
 
-    // BM25 mirror: same postings/doclen/df tables, the same literal
-    // constants (1.2/2.2/0.25/0.75), the same expression shape so every
-    // double matches bit-for-bit before the single floor-quantization.
-    "x90_bm25_retrieval" ->
-      """WITH wds AS (SELECT doc_id did, unnest(string_split(text,' ')) t
+    // x95 — prototypicality pruning (Sorscher 2022): 8 seed cells, keep
+    // the hardest 50% of each cell (ascending cosine-to-centroid rank).
+    "x95_prototype_pruning" -> QueryCase({ (s, dir) =>
+      VectorOps.prototypePrune(spread(t(s, dir, "embeddings")), "vec_id",
+          "embedding", numCentroids = 8, keepBp = 5000)
+        .orderBy("vec_id")
+    }, oracle =
+      // Prototypicality mirror: the x42/x65 assignment CTEs (argmax cosine,
+      // ties → lowest cid) with the winning cosine kept and floored to bp;
+      // keep = rank ≤ ⌈n_cell·keepBp/10000⌉ in the pure-integer form.
+      s"""WITH v AS (SELECT * FROM (SELECT vec_id, embedding,
+         |     ${normSql("embedding")} nrm FROM embeddings) WHERE nrm > 0),
+         | cent AS ${seedCentSql(8)},
+         | ca AS (SELECT v.vec_id id, cent.cid,
+         |     ${dotSql("v.embedding", "cent.cv")} / (v.nrm * cent.cn) ccos
+         |   FROM v CROSS JOIN cent),
+         | ranked AS (SELECT id, cid, ccos,
+         |     row_number() OVER (PARTITION BY id ORDER BY ccos DESC, cid) crk
+         |   FROM ca),
+         | cells AS (SELECT id, cid cell,
+         |     floor(ccos * 10000)::BIGINT proto_bp FROM ranked WHERE crk = 1),
+         | k AS (SELECT id, cell, proto_bp,
+         |     row_number() OVER (PARTITION BY cell ORDER BY proto_bp, id) rk,
+         |     count(*) OVER (PARTITION BY cell) n FROM cells)
+         | SELECT id AS vec_id, cell, proto_bp,
+         |   ((rk - 1) * 10000 < n * 5000) AS keep
+         | FROM k ORDER BY vec_id""".stripMargin),
+
+    // x96 — CCNet head/middle/tail: per-language perplexity terciles
+    // under the x83 bigram model (head = most fluent third per language).
+    "x96_ccnet_buckets" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val model = LmOps.trainBigramLm(d).localCheckpoint()
+      LmOps.ccnetBuckets(d, model).orderBy("doc_id")
+    }, oracle =
+      // CCNet mirror: the x83 scoring CTEs + per-language ntile(3) over the
+      // integer score with the doc_id tie-break.
+      s"""WITH $bigramNllSql,
+        | sc AS (SELECT doc_id,
+        |     (sum(nll)::BIGINT // count(*)::BIGINT) avg_nll_scaled
+        |   FROM big JOIN m USING (s) GROUP BY doc_id),
+        | t AS (SELECT sc.doc_id, d.lang, avg_nll_scaled,
+        |     ntile(3) OVER (PARTITION BY d.lang
+        |       ORDER BY avg_nll_scaled, sc.doc_id) tc
+        |   FROM sc JOIN documents d USING (doc_id))
+        | SELECT doc_id, lang, avg_nll_scaled, tc::BIGINT AS tercile,
+        |   CASE tc WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
+        |     ELSE 'tail' END AS bucket
+        | FROM t ORDER BY doc_id""".stripMargin),
+
+    // x97 — Gopher's full n-gram repetition family: per doc and
+    // n ∈ [2,10], top-gram and duplicated-gram character coverage.
+    "x97_topgram_coverage" -> QueryCase({ (s, dir) =>
+      TextOps.topNgramCoverage(spread(t(s, dir, "documents")))
+        .orderBy("doc_id", "n")
+    }, oracle =
+      // Top-n-gram mirror: positional grams per n ∈ [2,10], count + window,
+      // integral // division, both coverages capped at 10000 bp.
+      """WITH w AS (SELECT doc_id, length(text)::BIGINT len,
+        |     string_split(text,' ') w FROM documents WHERE length(text) > 0),
+        | g AS (SELECT doc_id, len, n, unnest(list_transform(
+        |     range(1, greatest(len(w) - (n - 1), 0) + 1),
+        |     k -> array_to_string(list_slice(w, k::INT, (k + n - 1)::INT), ' '))) gram
+        |   FROM w CROSS JOIN (SELECT unnest(range(2, 11)) n)),
+        | c AS (SELECT doc_id, len, n, gram, count(*)::BIGINT cnt,
+        |     length(gram)::BIGINT glen
+        |   FROM g GROUP BY doc_id, len, n, gram),
+        | t AS (SELECT doc_id, len, n, gram, cnt, glen,
+        |     row_number() OVER (PARTITION BY doc_id, n
+        |       ORDER BY cnt DESC, gram) rk,
+        |     sum(CASE WHEN cnt >= 2 THEN cnt * glen ELSE 0 END)
+        |       OVER (PARTITION BY doc_id, n)::BIGINT dupc
+        |   FROM c)
+        | SELECT doc_id, n::BIGINT AS n, gram AS top_gram, cnt AS top_cnt,
+        |   least((cnt * glen * 10000) // len, 10000)::BIGINT AS top_bp,
+        |   least((dupc * 10000) // len, 10000)::BIGINT AS dup_bp
+        | FROM t WHERE rk = 1 ORDER BY doc_id, n""".stripMargin),
+
+    // x98 — epoch-0 training-order shuffle into 8 shards: the
+    // deterministic permutation + round-robin layout a loader replays.
+    "x98_shuffle_order" -> QueryCase({ (s, dir) =>
+      SampleOps.shuffleOrder(spread(t(s, dir, "documents")), "doc_id",
+          numShards = 8, epoch = 0L)
+        .select("doc_id", "global_pos", "shard", "shard_pos")
+        .orderBy("doc_id")
+    }, oracle =
+      // Shuffle-order mirror: rank by (hash60('0_'||id), id); shard =
+      // round-robin over the 0-based global position.
+      """WITH h AS (SELECT doc_id,
+        |     ('0x' || substr(md5('0_' || doc_id::VARCHAR), 1, 15))::BIGINT h
         |   FROM documents),
-        | tf AS (SELECT did, t, count(*) tf FROM wds GROUP BY 1, 2),
-        | dl AS (SELECT did, count(*) dl FROM wds GROUP BY 1),
-        | dfq AS (SELECT t, count(*) df FROM tf GROUP BY 1),
-        | st AS (SELECT (SELECT count(*) FROM documents) n_docs,
-        |     (SELECT count(*) FROM wds) n_toks),
-        | qt AS (SELECT DISTINCT qid, t FROM
-        |   (SELECT doc_id qid, unnest(string_split(text,' ')) t
-        |    FROM documents WHERE doc_id < 5)),
-        | sc AS (SELECT qt.qid, tf.did, floor(
-        |     1000000 * ln((st.n_docs - dfq.df + 0.5) / (dfq.df + 0.5) + 1.0)
-        |     * (tf.tf * 2.2)
-        |     / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl
-        |         / (st.n_toks::DOUBLE / st.n_docs::DOUBLE))))::BIGINT ws
-        |   FROM qt JOIN tf USING (t) JOIN dfq USING (t)
-        |   JOIN dl ON dl.did = tf.did CROSS JOIN st
-        |   WHERE qt.qid <> tf.did),
-        | pr AS (SELECT qid, did, count(*)::BIGINT n_terms,
-        |     sum(ws)::BIGINT score FROM sc GROUP BY 1, 2),
-        | rnk AS (SELECT qid, did, n_terms, score,
-        |     row_number() OVER (PARTITION BY qid ORDER BY score DESC, did)::BIGINT rk
-        |   FROM pr)
-        | SELECT qid, did, n_terms, score, rk FROM rnk
-        | WHERE rk <= 5 ORDER BY qid, did""".stripMargin,
+        | r AS (SELECT doc_id,
+        |     row_number() OVER (ORDER BY h, doc_id) - 1 gp FROM h)
+        | SELECT doc_id, gp::BIGINT AS global_pos, (gp % 8)::BIGINT AS shard,
+        |   (gp // 8)::BIGINT AS shard_pos
+        | FROM r ORDER BY doc_id""".stripMargin),
 
-    "x79_rolling_time_window" ->
-      """SELECT event_id, user_id,
-        | CAST(ROUND(SUM(CAST(value AS DECIMAL(38,6))) OVER
-        |   (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |    RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW), 4)
-        |   * 10000 AS BIGINT) AS win_total_e4,
-        | COUNT(*) OVER
-        |   (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |    RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)::BIGINT
-        |   AS win_n
-        | FROM events WHERE ts IS NOT NULL ORDER BY event_id""".stripMargin,
+    // x99 — hard-negative mining: for the 20 lowest-id query vectors, the
+    // 5 most similar corpus vectors with a different label (the x25 scan
+    // shape with the label inequality fused into the join).
+    "x99_hard_negatives" -> QueryCase({ (s, dir) =>
+      val e = spread(t(s, dir, "embeddings"))
+      VectorOps.hardNegatives(e.filter(col("vec_id") < 20), e, "vec_id",
+          "embedding", "label", 5)
+        .orderBy("qid", "nid")
+    }, oracle =
+      // Hard-negative mirror: the x25 brute CTEs with the label inequality
+      // (IS DISTINCT FROM = Spark's !(<=>)) in the join.
+      s"""WITH v AS (SELECT * FROM (SELECT vec_id, embedding, label,
+         |     ${normSql("embedding")} nrm FROM embeddings) WHERE nrm > 0),
+         | s_hn AS (SELECT q.vec_id qid, c.vec_id nid,
+         |     ${dotSql("q.embedding", "c.embedding")} / (q.nrm * c.nrm) cos
+         |   FROM v c JOIN v q ON q.vec_id < 20 AND q.vec_id <> c.vec_id
+         |     AND q.label IS DISTINCT FROM c.label),
+         | r_hn AS (SELECT qid, nid, cos,
+         |     row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) rk
+         |   FROM s_hn)
+         | SELECT qid, nid, rk::BIGINT AS rk,
+         |   floor(cos * 10000)::BIGINT AS cos_bp
+         | FROM r_hn WHERE rk <= 5 ORDER BY qid, nid""".stripMargin),
 
-    "x69_quality_classifier" ->
-      """WITH lbl AS (SELECT doc_id, text, CASE WHEN
-        |     floor(len(list_filter(string_split(text,' '),
-        |         x -> list_contains(['the','a','of','and','in'], x)))::DOUBLE
-        |       * 10000 / len(string_split(text,' '))::DOUBLE) >= 1500
-        |     THEN 1 ELSE 0 END good FROM documents),
-        | tok AS (SELECT doc_id, good,
-        |     unnest(list_distinct(string_split(text,' '))) w FROM lbl),
-        | wt AS (SELECT w, (sum(good) + 1) * 10000 // (count(*) + 2) w_bp
-        |   FROM tok GROUP BY w),
-        | sc AS (SELECT doc_id, count(*) n_toks, sum(w_bp) sw
-        |   FROM tok JOIN wt USING (w) GROUP BY doc_id)
-        | SELECT doc_id, n_toks::BIGINT AS n_toks,
-        |   (sw // n_toks)::BIGINT AS score_bp
-        | FROM sc ORDER BY doc_id""".stripMargin,
+    // x100 — kNN label-noise audit: majority label of the 5 nearest
+    // same-cell neighbors vs own label, corpus-proportional cells.
+    "x100_label_noise" -> QueryCase({ (s, dir) =>
+      VectorOps.knnLabelNoise(spread(t(s, dir, "embeddings")), "vec_id",
+          "embedding", "label", k = 5, perCell = 32)
+        .orderBy("vec_id")
+    }, oracle =
+      // Label-noise mirror: the x65 corpus-proportional assignment CTEs
+      // carrying the label, within-cell kNN, majority via (cnt desc, label)
+      // rank — ties → smallest label, same as min(struct(-cnt, label)).
+      s"""WITH v AS (SELECT * FROM (SELECT vec_id, embedding,
+         |     label::BIGINT lab, ${normSql("embedding")} nrm
+         |   FROM embeddings) WHERE nrm > 0),
+         | nk AS (SELECT greatest(8, count(*) // 32) k FROM embeddings),
+         | cent AS (SELECT cid, cv, cn FROM (
+         |     SELECT vec_id cid, embedding cv, ${normSql("embedding")} cn,
+         |       row_number() OVER (ORDER BY vec_id) rn FROM embeddings)
+         |   CROSS JOIN nk WHERE rn <= k AND cn > 0),
+         | ca AS (SELECT v.vec_id id, v.embedding vec, v.nrm, v.lab, cent.cid,
+         |     ${dotSql("v.embedding", "cent.cv")} / (v.nrm * cent.cn) ccos
+         |   FROM v CROSS JOIN cent),
+         | ranked AS (SELECT id, vec, nrm, lab, cid,
+         |     row_number() OVER (PARTITION BY id ORDER BY ccos DESC, cid) crk
+         |   FROM ca),
+         | cl AS (SELECT id, vec, nrm, lab, cid cell FROM ranked WHERE crk = 1),
+         | p AS (SELECT a.id, a.lab, a.cell, b.id nid, b.lab nlab,
+         |     ${dotSql("a.vec", "b.vec")} / (a.nrm * b.nrm) cos
+         |   FROM cl a JOIN cl b ON a.cell = b.cell AND a.id <> b.id),
+         | r AS (SELECT id, lab, cell, nid, nlab,
+         |     row_number() OVER (PARTITION BY id ORDER BY cos DESC, nid) rk
+         |   FROM p),
+         | t AS (SELECT id, lab, cell, nlab, count(*)::BIGINT cnt
+         |   FROM r WHERE rk <= 5 GROUP BY id, lab, cell, nlab),
+         | m AS (SELECT id, lab, cell, nlab, cnt,
+         |     row_number() OVER (PARTITION BY id ORDER BY cnt DESC, nlab) mrk,
+         |     sum(cnt) OVER (PARTITION BY id) n_nbrs FROM t)
+         | SELECT id AS vec_id, lab AS label, cell, n_nbrs::BIGINT AS n_nbrs,
+         |   nlab AS maj_label, (nlab IS DISTINCT FROM lab) AS noisy
+         | FROM m WHERE mrk = 1 ORDER BY vec_id""".stripMargin),
 
-    // Epoch-upsample mirror: ONE double multiply (w * 12000.0) then
-    // integer math only — full epochs = want div n capped at 5, partial
-    // rate = remainder bp, the shared md5 hash-mod acceptance.
-    "x101_epoch_upsample" ->
+    // x101 — epoch up-sampling: assemble a 12k-doc mix at src0:src2:src3
+    // = 50:20:1 percent shares, repeating scarce sources up to 5 epochs
+    // (the LLaMA books/wiki recipe). At sf0.01 src0/src2 hit the epoch
+    // cap while src3 lands between (4 full epochs + an 8000 bp partial);
+    // at sf0.1 src3 degrades to plain down-sampling — both directions of
+    // mix assembly and all three arms through one operator.
+    "x101_epoch_upsample" -> QueryCase({ (s, dir) =>
+      SampleOps.epochUpsample(t(s, dir, "documents"), "doc_id", "source",
+          Seq("src0" -> 0.5, "src2" -> 0.2, "src3" -> 0.01),
+          totalDocs = 12000L, maxEpochs = 5)
+        .select("doc_id", "source", "epoch")
+        .orderBy("doc_id", "epoch")
+    }, oracle =
+      // Epoch-upsample mirror: ONE double multiply (w * 12000.0) then
+      // integer math only — full epochs = want div n capped at 5, partial
+      // rate = remainder bp, the shared md5 hash-mod acceptance.
       s"""WITH $epochPlanSql
         | SELECT d.doc_id, d.source, ep.epoch::BIGINT AS epoch
         | FROM documents d JOIN ep ON d.source = ep.dom
         | WHERE ep.epoch < ep.eful
         |   OR ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 15))::BIGINT
         |     % 10000 < ep.pbp
-        | ORDER BY doc_id, epoch""".stripMargin,
+        | ORDER BY doc_id, epoch""".stripMargin),
 
-    // Funnel mirror: the x94 stage CTEs (quality → canonical dedup →
-    // temperature balance) with a count/sum per stage instead of the
-    // packing tail.
-    "x102_funnel_report" ->
+    // x102 — the pipeline funnel: doc/token counts after each stage of
+    // the x94 manifest pipeline (raw → quality → canonical dedup →
+    // temperature balance) — the observability table that makes a mix
+    // bug visible BEFORE a training run pays for it. Four bounded
+    // aggregates; deliberately LAZY (no localCheckpoint): measured at
+    // sf0.1/sf1/sf2, checkpointing the shared quality/survivor stages
+    // was a wash (−15%/+4%/+10%) — counting is so much cheaper than the
+    // stages themselves that materialization costs more than the branch
+    // re-execution it saves (contrast x34/x64, where the reused frame
+    // feeds expensive SHUFFLING consumers, not count(*) branches).
+    "x102_funnel_report" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val (quality, surv, bal) = manifestStages(d)
+      StatOps.funnelReport(
+          Seq("raw" -> d, "quality" -> quality, "dedup" -> surv,
+            "balanced" -> bal),
+          size(split(col("text"), " ")))
+        .orderBy("stage_idx")
+    }, oracle =
+      // Funnel mirror: the x94 stage CTEs (quality → canonical dedup →
+      // temperature balance) with a count/sum per stage instead of the
+      // packing tail.
       s"""WITH $manifestHeadSql
         | SELECT * FROM (
         |   SELECT 0::BIGINT stage_idx, 'raw' stage, count(*)::BIGINT n_docs,
@@ -6112,11 +3676,21 @@ object ExtensionQueries {
         |     coalesce(sum(len(string_split(text,' '))), 0)::BIGINT FROM surv
         |   UNION ALL SELECT 3::BIGINT, 'balanced', count(*)::BIGINT,
         |     coalesce(sum(len(string_split(text,' '))), 0)::BIGINT FROM bal)
-        | ORDER BY stage_idx""".stripMargin,
+        | ORDER BY stage_idx""".stripMargin),
 
-    // Hashed-BoW mirror: same md5-derived 60-bit hash, bucket = h mod 64,
-    // sign = (h div 64) mod 2 — all-integer signed occurrence sums.
-    "x103_hashed_bow" ->
+    // x103 — feature-hashed bag-of-words vectors (sparse form): the
+    // text→vector bridge with no vocabulary, model, or embedding
+    // service. Restricted to the first 500 docs so the fixture output
+    // stays diff-sized; the plan is corpus-shaped (one explode + one
+    // doc-scoped combinable agg) regardless of the cut.
+    "x103_hashed_bow" -> QueryCase({ (s, dir) =>
+      TextOps.hashedBow(
+          spread(t(s, dir, "documents")).filter(col("doc_id") < 500),
+          "doc_id", "text", dim = 64)
+        .orderBy("doc_id", "bucket")
+    }, oracle =
+      // Hashed-BoW mirror: same md5-derived 60-bit hash, bucket = h mod 64,
+      // sign = (h div 64) mod 2 — all-integer signed occurrence sums.
       """WITH tok AS (SELECT doc_id,
         |     unnest(list_filter(string_split(text, ' '),
         |       t -> length(t) > 0)) t
@@ -6126,12 +3700,22 @@ object ExtensionQueries {
         | b AS (SELECT doc_id, (h % 64)::BIGINT bucket,
         |     CASE WHEN (h // 64) % 2 = 0 THEN 1 ELSE -1 END sgn FROM h)
         | SELECT doc_id, bucket, sum(sgn)::BIGINT AS val
-        | FROM b GROUP BY doc_id, bucket ORDER BY doc_id, bucket""".stripMargin,
+        | FROM b GROUP BY doc_id, bucket ORDER BY doc_id, bucket""".stripMargin),
 
-    // Sparse-cosine mirror: x103's vector CTEs over the FULL corpus,
-    // integer dots on the bucket join, exact integer squared norms, the
-    // single double step (dot / (qn·nn)) in the same operand order.
-    "x104_sparse_cosine" ->
+    // x104 — sparse cosine top-5 over the hashed-BoW vectors: text-only
+    // near-neighbor retrieval through the inverted-index join (pairs cost
+    // only their co-occurring buckets). The 20 lowest-id docs probe the
+    // full corpus — the x25 shape on the sparse representation.
+    "x104_sparse_cosine" -> QueryCase({ (s, dir) =>
+      val sv = TextOps.hashedBow(spread(t(s, dir, "documents")),
+        "doc_id", "text", dim = 64)
+      VectorOps.sparseCosineTopK(sv.filter(col("doc_id") < 20), sv,
+          "doc_id", "bucket", "val", k = 5)
+        .orderBy("qid", "nid")
+    }, oracle =
+      // Sparse-cosine mirror: x103's vector CTEs over the FULL corpus,
+      // integer dots on the bucket join, exact integer squared norms, the
+      // single double step (dot / (qn·nn)) in the same operand order.
       """WITH tok AS (SELECT doc_id,
         |     unnest(list_filter(string_split(text, ' '),
         |       t -> length(t) > 0)) t
@@ -6157,11 +3741,22 @@ object ExtensionQueries {
         |   FROM sc)
         | SELECT qid, nid, rk::BIGINT AS rk,
         |   floor(cos * 10000)::BIGINT AS cos_bp
-        | FROM r WHERE rk <= 5 ORDER BY qid, nid""".stripMargin,
+        | FROM r WHERE rk <= 5 ORDER BY qid, nid""".stripMargin),
 
-    // Per-source funnel mirror: the x102 stage CTEs with source carried
-    // through and a GROUP BY source per branch.
-    "x105_funnel_by_source" ->
+    // x105 — the x102 funnel broken out BY SOURCE: where mix bugs hide —
+    // a global funnel that drops 40% looks fine until the by-source view
+    // shows one domain losing 99%. Bounded stages × sources metadata.
+    "x105_funnel_by_source" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val (quality, surv, bal) = manifestStages(d)
+      StatOps.funnelReportBy(
+          Seq("raw" -> d, "quality" -> quality, "dedup" -> surv,
+            "balanced" -> bal),
+          size(split(col("text"), " ")), "source")
+        .orderBy("stage_idx", "source")
+    }, oracle =
+      // Per-source funnel mirror: the x102 stage CTEs with source carried
+      // through and a GROUP BY source per branch.
       s"""WITH $manifestHeadSql
         | SELECT * FROM (
         |   SELECT 0::BIGINT stage_idx, 'raw' stage, source,
@@ -6177,11 +3772,24 @@ object ExtensionQueries {
         |   UNION ALL SELECT 3::BIGINT, 'balanced', source, count(*)::BIGINT,
         |     coalesce(sum(len(string_split(text,' '))), 0)::BIGINT
         |   FROM bal GROUP BY source)
-        | ORDER BY stage_idx, source""".stripMargin,
+        | ORDER BY stage_idx, source""".stripMargin),
 
-    // Epoch-replay mirror: the x101 selection CTEs, then rank by
-    // (hash60(epoch‖'_'‖id), id, epoch) and round-robin over 8 shards.
-    "x106_epoch_replay" ->
+    // x106 — the complete mix-assembly capstone: x101's epoched replica
+    // stream laid out for the loader — global position by the per-row
+    // (epoch, id) hash (a doc's replicas scatter away from each other),
+    // round-robin shards with exact ±1 balance. epochUpsample →
+    // replayLayout is "assemble the mix, lay it out", end to end.
+    "x106_epoch_replay" -> QueryCase({ (s, dir) =>
+      SampleOps.replayLayout(
+          SampleOps.epochUpsample(t(s, dir, "documents"), "doc_id",
+            "source", Seq("src0" -> 0.5, "src2" -> 0.2, "src3" -> 0.01),
+            totalDocs = 12000L, maxEpochs = 5),
+          "doc_id", "epoch", numShards = 8)
+        .select("doc_id", "epoch", "global_pos", "shard", "shard_pos")
+        .orderBy("doc_id", "epoch")
+    }, oracle =
+      // Epoch-replay mirror: the x101 selection CTEs, then rank by
+      // (hash60(epoch‖'_'‖id), id, epoch) and round-robin over 8 shards.
       s"""WITH $epochPlanSql,
         | sel AS (SELECT d.doc_id, ep.epoch::BIGINT epoch
         |   FROM documents d JOIN ep ON d.source = ep.dom
@@ -6195,11 +3803,26 @@ object ExtensionQueries {
         |     row_number() OVER (ORDER BY h, doc_id, epoch) - 1 gp FROM hh)
         | SELECT doc_id, epoch, gp::BIGINT AS global_pos,
         |   (gp % 8)::BIGINT AS shard, (gp // 8)::BIGINT AS shard_pos
-        | FROM rr ORDER BY doc_id, epoch""".stripMargin,
+        | FROM rr ORDER BY doc_id, epoch""".stripMargin),
 
-    // Config-diff mirror: the x88 signal CTEs computed ONCE, both
-    // conjunctions decided from them, 2×2 flip matrix.
-    "x107_filter_config_diff" ->
+    // x107 — filter-config decision diff: the strict (Gopher-default)
+    // vs lax (minWords 20, 1 stopword) keep decisions RE-DECIDED from
+    // one signal table — no second text scan — aggregated to the 2×2
+    // flip matrix a config review reads ("how many docs does loosening
+    // admit, and how many tokens ride on them").
+    "x107_filter_config_diff" -> QueryCase({ (s, dir) =>
+      val g = TextOps.gopherFilter(spread(t(s, dir, "documents")))
+      g.withColumn("keep_lax",
+          col("n_words") >= 20L && col("n_words") <= 100000L &&
+          col("keep_word_len") && col("keep_dup") && col("keep_alpha") &&
+          col("keep_sym") && col("stop_hits") >= 1L)
+        .groupBy(col("keep").as("keep_strict"), col("keep_lax"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_words")).as("n_words_total"))
+        .orderBy("keep_strict", "keep_lax")
+    }, oracle =
+      // Config-diff mirror: the x88 signal CTEs computed ONCE, both
+      // conjunctions decided from them, 2×2 flip matrix.
       s"""WITH $gopherCountsSql,
         | s2 AS (SELECT doc_id, n_words,
         |     floor(word_chars::DOUBLE * 100 / n_words::DOUBLE)::BIGINT mwl,
@@ -6221,11 +3844,21 @@ object ExtensionQueries {
         | SELECT keep_strict, keep_lax, count(*)::BIGINT AS n_docs,
         |   sum(n_words)::BIGINT AS n_words_total
         | FROM k GROUP BY keep_strict, keep_lax
-        | ORDER BY keep_strict, keep_lax""".stripMargin,
+        | ORDER BY keep_strict, keep_lax""".stripMargin),
 
-    // Token-budget mixture mirror: the x81 CTEs with count(*) swapped for
-    // sum(n_tokens) and the same left-to-right double arithmetic.
-    "x108_token_mixture" ->
+    // x108 — mixture sampling with the budget in TOKENS, the unit recipes
+    // actually specify: feasible T = min_d(tokens_d/w_d), per-domain doc
+    // acceptance rate = w_d·T/tokens_d bp. Corpus never shuffles.
+    "x108_token_mixture" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+        .withColumn("n_tokens", size(split(col("text"), " ")).cast(LongType))
+      SampleOps.tokenBudgetMixture(d, "doc_id", "source", "n_tokens",
+          Seq("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2))
+        .select("doc_id", "source", "n_tokens")
+        .orderBy("doc_id")
+    }, oracle =
+      // Token-budget mixture mirror: the x81 CTEs with count(*) swapped for
+      // sum(n_tokens) and the same left-to-right double arithmetic.
       """WITH wt AS (SELECT * FROM (VALUES
         |     ('src0', 0.5::DOUBLE), ('src1', 0.3::DOUBLE),
         |     ('src2', 0.2::DOUBLE)) w(dom, w)),
@@ -6241,11 +3874,21 @@ object ExtensionQueries {
         | JOIN r ON d.source = r.dom
         | WHERE ('0x' || substr(md5(d.doc_id::VARCHAR), 1, 15))::BIGINT
         |   % 10000 < r.rate
-        | ORDER BY d.doc_id""".stripMargin,
+        | ORDER BY d.doc_id""".stripMargin),
 
-    // Split-leakage mirror: the OPH banding + candidate-verify CTEs (r14
-    // flip) over the full corpus, split labels by hashSplit hash-mod cuts.
-    "x109_split_leakage" ->
+    // x109 — train/eval split-leakage audit: per split, docs with an
+    // LSH-verified near-dup in train — the eval-contamination number a
+    // benchmark ships with. Train's own row = intra-train duplication.
+    "x109_split_leakage" -> QueryCase({ (s, dir) =>
+      val d = SampleOps.hashSplit(spread(t(s, dir, "documents")), "doc_id",
+        Seq("train" -> 8000, "eval" -> 10000))
+      DedupOps.splitLeakage(d, "doc_id",
+          TextOps.wordShingles(col("text"), 3), 0.5, "split", "train",
+          oph = true)
+        .orderBy("split")
+    }, oracle =
+      // Split-leakage mirror: the OPH banding + candidate-verify CTEs (r14
+      // flip) over the full corpus, split labels by hashSplit hash-mod cuts.
       s"""$word3gramShingles,
          | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
          | $ophBsigSql,
@@ -6264,21 +3907,40 @@ object ExtensionQueries {
          |   floor(sum(CASE WHEN l.doc_id IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE
          |     * 10000 / count(*)::DOUBLE)::BIGINT AS leak_bp
          | FROM sp LEFT JOIN leaky l USING (doc_id)
-         | GROUP BY sp.split ORDER BY split""".stripMargin,
+         | GROUP BY sp.split ORDER BY split""".stripMargin),
 
-    // Winnowing mirror: positional 3-gram hash60s, the zero-padded
-    // decimal (hash,pos) key, a CURRENT ROW..3 FOLLOWING window min,
-    // full windows only, DISTINCT selections.
-    "x110_winnow_fingerprints" ->
+    // x110 — winnowing fingerprints (Schleimer 2003): window-min selection
+    // over positional 3-gram hashes, w=4 — every ≥6-token overlap still
+    // shares a fingerprint at ~40% of the full shingle table's size.
+    "x110_winnow_fingerprints" -> QueryCase({ (s, dir) =>
+      TextOps.winnowFingerprints(spread(t(s, dir, "documents")), "doc_id",
+          k = 3, w = 4)
+        .orderBy("doc_id", "pos")
+    }, oracle =
+      // Winnowing mirror: positional 3-gram hash60s, the zero-padded
+      // decimal (hash,pos) key, a CURRENT ROW..3 FOLLOWING window min,
+      // full windows only, DISTINCT selections.
       s"""WITH $winnowCtesSql
         | SELECT DISTINCT doc_id, substr(wmin, 20, 8)::BIGINT AS pos,
         |   substr(wmin, 1, 19)::BIGINT AS fp
         | FROM wm WHERE p <= maxp - 3
-        | ORDER BY doc_id, pos""".stripMargin,
+        | ORDER BY doc_id, pos""".stripMargin),
 
-    // Cluster-histogram mirror: x109's banding/verify pairs → recursive
-    // reachability (the x40 component rule) → sizes → histogram.
-    "x111_cluster_histogram" ->
+    // x111 — duplicate-cluster size histogram: the dedup-stage audit
+    // ("are dups pairs or one 10k-doc boilerplate blob?") — LSH-verified
+    // pairs → components → bounded size histogram.
+    "x111_cluster_histogram" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val pairs = DedupOps.nearDupPairs(d, "doc_id",
+        TextOps.wordShingles(col("text"), 3), 0.5, oph = true)
+      DedupOps.connectedComponents(pairs)
+        .groupBy(col("comp")).agg(count(lit(1)).as("sz"))
+        .groupBy(col("sz").as("cluster_size"))
+        .agg(count(lit(1)).as("n_clusters"))
+        .orderBy("cluster_size")
+    }, oracle =
+      // Cluster-histogram mirror: x109's banding/verify pairs → recursive
+      // reachability (the x40 component rule) → sizes → histogram.
       s"""WITH RECURSIVE ${word3gramCtes("documents")},
          | n AS (SELECT doc_id, count(*) n FROM sh GROUP BY 1),
          | $ophBsigSql,
@@ -6289,11 +3951,24 @@ object ExtensionQueries {
          |   FROM reach GROUP BY a),
          | sz AS (SELECT comp, count(*) s FROM compo GROUP BY comp)
          | SELECT s::BIGINT AS cluster_size, count(*)::BIGINT AS n_clusters
-         | FROM sz GROUP BY s ORDER BY cluster_size""".stripMargin,
+         | FROM sz GROUP BY s ORDER BY cluster_size""".stripMargin),
 
-    // Truncated-recall mirror: the x25 brute CTEs at full dim (truth) and
-    // over the first 16 dims (approx), graded per query.
-    "x112_truncated_recall" ->
+    // x112 — truncated-dimension recall (the Matryoshka/MRL question):
+    // what does serving on the first 16 of 64 dims lose? Brute top-5 on
+    // the truncated vectors graded against the full-dim truth.
+    "x112_truncated_recall" -> QueryCase({ (s, dir) =>
+      val e = spread(t(s, dir, "embeddings"))
+      val tr = e.withColumn("embedding", slice(col("embedding"), 1, 16))
+      val approx = VectorOps.bruteForceTopK(tr.filter(col("vec_id") < 20),
+        tr, "vec_id", "embedding", 5)
+      // full-dim ground truth = the x25 rows the annTruth memo already
+      // holds — re-deriving it here was a second brute-force corpus scan
+      // per run (the exact sub-job class the gateMemo exists to stop)
+      VectorOps.annRecall(approx, annTruth(s, dir), "qid", "nid")
+        .orderBy("qid")
+    }, oracle =
+      // Truncated-recall mirror: the x25 brute CTEs at full dim (truth) and
+      // over the first 16 dims (approx), graded per query.
       s"""WITH $annV,
          | $annBrute,
          | ex AS (SELECT qid, nid FROM r_ex WHERE rk <= 5),
@@ -6312,11 +3987,19 @@ object ExtensionQueries {
          |   floor(sum(CASE WHEN ap.nid IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE
          |     * 10000 / count(*)::DOUBLE)::BIGINT AS recall_bp
          | FROM ex LEFT JOIN ap ON ex.qid = ap.qid AND ex.nid = ap.nid
-         | GROUP BY ex.qid ORDER BY ex.qid""".stripMargin,
+         | GROUP BY ex.qid ORDER BY ex.qid""".stripMargin),
 
-    // Winnow-overlap mirror: the x110 selection CTEs → DISTINCT (doc,fp)
-    // → fp-bucket pair join → shared count ≥ 2.
-    "x113_winnow_overlap" ->
+    // x113 — overlap candidates from the x110 winnow index: docs sharing
+    // ≥2 selected fingerprints — the MOSS-style candidate generator at
+    // ~40% of the shingle table's bill. maxBucket 200 is MOSS's
+    // "too-common fingerprint" drop — the declared scale knob.
+    "x113_winnow_overlap" -> QueryCase({ (s, dir) =>
+      DedupOps.winnowOverlapPairs(spread(t(s, dir, "documents")), "doc_id",
+          k = 3, w = 4, minShared = 2, maxBucket = 200)
+        .orderBy("i", "j")
+    }, oracle =
+      // Winnow-overlap mirror: the x110 selection CTEs → DISTINCT (doc,fp)
+      // → fp-bucket pair join → shared count ≥ 2.
       s"""WITH $winnowCtesSql,
         | sel AS (SELECT DISTINCT doc_id, substr(wmin, 1, 19)::BIGINT fp
         |   FROM wm WHERE p <= maxp - 3),
@@ -6324,11 +4007,18 @@ object ExtensionQueries {
         | sf AS (SELECT sel.doc_id, sel.fp FROM sel JOIN ok USING (fp))
         | SELECT a.doc_id i, b.doc_id j, count(*)::BIGINT AS shared
         | FROM sf a JOIN sf b ON a.fp = b.fp AND a.doc_id < b.doc_id
-        | GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY i, j""".stripMargin,
+        | GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY i, j""".stripMargin),
 
-    // Snapshot-diff mirror: the same simulated refresh, md5 compare over
-    // a full-outer id join.
-    "x114_snapshot_diff" ->
+    // x114 — corpus snapshot diff: per-id added/removed/changed/unchanged
+    // between a dump and its refresh — the work-list the incremental ops
+    // (x60/x73) run from. The refresh is simulated deterministically.
+    "x114_snapshot_diff" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents")).select("doc_id", "text")
+      StatOps.snapshotDiff(d, refreshSnapshot(d), "doc_id", "text")
+        .orderBy("doc_id")
+    }, oracle =
+      // Snapshot-diff mirror: the same simulated refresh, md5 compare over
+      // a full-outer id join.
       """WITH nw AS (
         |   SELECT doc_id, md5(CASE WHEN doc_id % 5 = 0
         |     THEN text || ' updated' ELSE text END) h
@@ -6344,11 +4034,18 @@ object ExtensionQueries {
         |        WHEN o.h = n.h THEN 'unchanged'
         |        ELSE 'changed' END AS status
         | FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
-        | ORDER BY doc_id""".stripMargin,
+        | ORDER BY doc_id""".stripMargin),
 
-    // Mix-drift mirror: per-source counts/shares in both snapshots, bp
-    // deltas from the same floor arithmetic.
-    "x115_mix_drift" ->
+    // x115 — source-mix drift between the same two snapshots: per source,
+    // counts + corpus shares + delta — the ingest monitor that catches a
+    // domain quietly halving before training bakes it in.
+    "x115_mix_drift" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val nw = d.filter(!(col("source") === "src0" && col("doc_id") % 2 === 0))
+      StatOps.mixDrift(d, nw, "source").orderBy("source")
+    }, oracle =
+      // Mix-drift mirror: per-source counts/shares in both snapshots, bp
+      // deltas from the same floor arithmetic.
       """WITH nw AS (SELECT * FROM documents
         |   WHERE NOT (source = 'src0' AND doc_id % 2 = 0)),
         | o AS (SELECT source, count(*) n_old FROM documents GROUP BY 1),
@@ -6367,11 +4064,18 @@ object ExtensionQueries {
         |     AS delta_bp
         | FROM o FULL OUTER JOIN n ON o.source = n.source
         | CROSS JOIN ot CROSS JOIN nt
-        | ORDER BY source""".stripMargin,
+        | ORDER BY source""".stripMargin),
 
-    // Blocklist mirror: distinct grams per phrase length, VALUES
-    // blocklist, distinct-hit counts, keep = no hit.
-    "x116_blocklist" ->
+    // x116 — phrase-blocklist decision table (the C4 bad-words stage):
+    // whole-word contiguous-phrase matching, distinct-hit counts, keep
+    // flag. Blocklist broadcasts; the corpus never shuffles its text.
+    "x116_blocklist" -> QueryCase({ (s, dir) =>
+      TextOps.blocklistHits(spread(t(s, dir, "documents")), "doc_id",
+          Seq("slow", "spark join", "big scan table"))
+        .orderBy("doc_id")
+    }, oracle =
+      // Blocklist mirror: distinct grams per phrase length, VALUES
+      // blocklist, distinct-hit counts, keep = no hit.
       """WITH w AS (SELECT doc_id, string_split(text,' ') w FROM documents),
         | g1 AS (SELECT doc_id, unnest(list_distinct(w)) g FROM w),
         | g2 AS (SELECT doc_id, unnest(list_distinct(list_transform(
@@ -6390,11 +4094,20 @@ object ExtensionQueries {
         | SELECT d.doc_id, coalesce(h.n, 0)::BIGINT AS n_hits,
         |   (coalesce(h.n, 0) = 0) AS keep
         | FROM documents d LEFT JOIN hits h USING (doc_id)
-        | ORDER BY d.doc_id""".stripMargin,
+        | ORDER BY d.doc_id""".stripMargin),
 
-    // Percentile-selection mirror: the x17 alpha-ratio signal, per-source
-    // rank/count windows, the same pure-integer cut rule.
-    "x117_percentile_select" ->
+    // x117 — per-source percentile selection (FineWeb-style "keep the
+    // best 30% of each source"): a global threshold would let one
+    // well-scoring source crowd out the rest.
+    "x117_percentile_select" -> QueryCase({ (s, dir) =>
+      val q = TextOps.qualityScore(spread(t(s, dir, "documents")))
+        .select(col("doc_id"), col("source"), col("alpha_ratio_bp"))
+      SampleOps.percentileSelect(q, "doc_id", "source", "alpha_ratio_bp",
+          3000L)
+        .orderBy("doc_id")
+    }, oracle =
+      // Percentile-selection mirror: the x17 alpha-ratio signal, per-source
+      // rank/count windows, the same pure-integer cut rule.
       """WITH q AS (SELECT doc_id, source,
         |     floor(length(regexp_replace(text, '[^a-z]', '', 'g'))::DOUBLE
         |       * 10000 / length(text)::DOUBLE)::BIGINT ab
@@ -6403,11 +4116,23 @@ object ExtensionQueries {
         |     row_number() OVER (PARTITION BY source ORDER BY ab DESC, doc_id) rk,
         |     count(*) OVER (PARTITION BY source) n FROM q)
         | SELECT doc_id, source, ab AS alpha_ratio_bp FROM r
-        | WHERE (rk - 1) * 10000 < n * 3000 ORDER BY doc_id""".stripMargin,
+        | WHERE (rk - 1) * 10000 < n * 3000 ORDER BY doc_id""".stripMargin),
 
-    // Epoch-token mirror: the x101/x106 selection CTEs carrying source
-    // and token counts, grouped per (source, epoch).
-    "x118_epoch_tokens" ->
+    // x118 — epoch token accounting: per (source, epoch) doc/token totals
+    // of the x101 replica stream — "what will the run actually see",
+    // priced in tokens, before any GPU burns.
+    "x118_epoch_tokens" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+        .withColumn("n_tok", size(split(col("text"), " ")).cast(LongType))
+      SampleOps.epochUpsample(d, "doc_id", "source",
+          Seq("src0" -> 0.5, "src2" -> 0.2, "src3" -> 0.01),
+          totalDocs = 12000L, maxEpochs = 5)
+        .groupBy(col("source"), col("epoch"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
+        .orderBy("source", "epoch")
+    }, oracle =
+      // Epoch-token mirror: the x101/x106 selection CTEs carrying source
+      // and token counts, grouped per (source, epoch).
       s"""WITH $epochPlanSql,
         | sel AS (SELECT d.doc_id, d.source,
         |     len(string_split(d.text,' '))::BIGINT nt, ep.epoch::BIGINT epoch
@@ -6418,12 +4143,22 @@ object ExtensionQueries {
         | SELECT source, epoch, count(*)::BIGINT AS n_docs,
         |   sum(nt)::BIGINT AS n_tokens
         | FROM sel GROUP BY source, epoch
-        | ORDER BY source, epoch""".stripMargin,
+        | ORDER BY source, epoch""".stripMargin),
 
-    // Centroid-drift mirror: the same floor(x·1e4) component quantization
-    // over a dims range join, integer (label, dim) sums both snapshots,
-    // one double cosine step per label.
-    "x119_centroid_drift" ->
+    // x119 — embedding-space drift per label between snapshots: cosine of
+    // integer-quantized centroid SUMS (scale invariance removes the
+    // mean's division) — content drift that x115's count drift can't see.
+    "x119_centroid_drift" -> QueryCase({ (s, dir) =>
+      val e = spread(t(s, dir, "embeddings"))
+      val nw = e.filter(col("vec_id") % 3 =!= 0)
+      VectorOps.centroidDrift(e, nw, "embedding", "label")
+        .select(col("label").cast(LongType).as("label"), col("n_old"),
+          col("n_new"), col("cos_bp"))
+        .orderBy("label")
+    }, oracle =
+      // Centroid-drift mirror: the same floor(x·1e4) component quantization
+      // over a dims range join, integer (label, dim) sums both snapshots,
+      // one double cosine step per label.
       """WITH q AS (SELECT label, k::INT dim, vec_id,
         |     floor(embedding[k::INT]::DOUBLE * 10000)::BIGINT qq
         |   FROM embeddings CROSS JOIN range(1,65) t(k)),
@@ -6437,11 +4172,33 @@ object ExtensionQueries {
         |   n_new::BIGINT AS n_new,
         |   floor(dt::DOUBLE / sqrt(o2::DOUBLE * n2::DOUBLE)
         |     * 10000)::BIGINT AS cos_bp
-        | FROM g ORDER BY label""".stripMargin,
+        | FROM g ORDER BY label""".stripMargin),
 
-    // PII-report mirror: same planted text, the x36 regex literals, per-
-    // source totals and floor-bp rate.
-    "x120_pii_report" ->
+    // x120 — PII compliance report per source: doc counts, any-hit docs,
+    // per-category totals, rate bp — the release-gate table a corpus
+    // ships next to its dataset card. PII planted deterministically.
+    "x120_pii_report" -> QueryCase({ (s, dir) =>
+      val planted = spread(t(s, dir, "documents")).withColumn("text",
+        when(col("doc_id") % 10 < 3,
+          concat(lit("u"), col("doc_id").cast("string"), lit("@ex.com "),
+            col("text")))
+        .when(col("doc_id") % 10 === 5,
+          concat(lit("host 10.0.0."), (col("doc_id") % 200).cast("string"),
+            lit(" "), col("text")))
+        .otherwise(col("text")))
+      TextOps.redactPii(planted)
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(when(col("n_email") + col("n_ip") + col("n_phone") > 0, 1L)
+            .otherwise(0L)).as("n_pii_docs"),
+          sum(col("n_email")).as("n_email"),
+          sum(col("n_ip")).as("n_ip"),
+          sum(col("n_phone")).as("n_phone"))
+        .withColumn("pii_rate_bp", TextOps.bp(col("n_pii_docs"), col("n_docs")))
+        .orderBy("source")
+    }, oracle =
+      // PII-report mirror: same planted text, the x36 regex literals, per-
+      // source totals and floor-bp rate.
       """WITH p AS (SELECT doc_id, source,
         |     CASE WHEN doc_id % 10 < 3 THEN 'u' || doc_id || '@ex.com ' || text
         |          WHEN doc_id % 10 = 5 THEN 'host 10.0.0.' || (doc_id % 200)
@@ -6463,11 +4220,17 @@ object ExtensionQueries {
         |   sum(np)::BIGINT AS n_phone,
         |   floor(sum(CASE WHEN ne + ni + np > 0 THEN 1 ELSE 0 END)::DOUBLE
         |     * 10000 / count(*)::DOUBLE)::BIGINT AS pii_rate_bp
-        | FROM c GROUP BY source ORDER BY source""".stripMargin,
+        | FROM c GROUP BY source ORDER BY source""".stripMargin),
 
-    // Entropy mirror: per-term contributions quantized BEFORE the per-doc
-    // sum, same left-to-right double sequence.
-    "x121_token_entropy" ->
+    // x121 — per-doc token Shannon entropy (integral micro-nats,
+    // quantize-then-sum): the gibberish/boilerplate signal at both
+    // extremes of the scale.
+    "x121_token_entropy" -> QueryCase({ (s, dir) =>
+      TextOps.tokenEntropy(spread(t(s, dir, "documents")), "doc_id")
+        .orderBy("doc_id")
+    }, oracle =
+      // Entropy mirror: per-term contributions quantized BEFORE the per-doc
+      // sum, same left-to-right double sequence.
       """WITH w AS (SELECT doc_id, string_split(text,' ') w FROM documents),
         | t AS (SELECT doc_id, len(w)::BIGINT n, unnest(w) tk FROM w),
         | tf AS (SELECT doc_id, n, tk, count(*) tf FROM t GROUP BY 1, 2, 3),
@@ -6477,11 +4240,23 @@ object ExtensionQueries {
         |   FROM tf)
         | SELECT doc_id, max(n)::BIGINT AS n_tokens,
         |   sum(hh)::BIGINT AS entropy_micro
-        | FROM h GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+        | FROM h GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    // Lexical-diversity mirror: (source, token) tf table, type/token/
-    // hapax counts, floor-bp ratios.
-    "x122_lexical_diversity" ->
+    // x122 — lexical diversity per source: type/token/hapax counts, TTR
+    // and hapax-ratio bp — the vocabulary-richness row of a dataset card.
+    "x122_lexical_diversity" -> QueryCase({ (s, dir) =>
+      val tf = spread(t(s, dir, "documents"))
+        .select(col("source"), explode(split(col("text"), " ")).as("tk"))
+        .groupBy(col("source"), col("tk")).agg(count(lit(1)).as("__tf"))
+      tf.groupBy(col("source"))
+        .agg(count(lit(1)).as("n_types"), sum(col("__tf")).as("n_tokens"),
+          sum(when(col("__tf") === 1L, 1L).otherwise(0L)).as("n_hapax"))
+        .withColumn("ttr_bp", TextOps.bp(col("n_types"), col("n_tokens")))
+        .withColumn("hapax_bp", TextOps.bp(col("n_hapax"), col("n_types")))
+        .orderBy("source")
+    }, oracle =
+      // Lexical-diversity mirror: (source, token) tf table, type/token/
+      // hapax counts, floor-bp ratios.
       """WITH t AS (SELECT source, unnest(string_split(text,' ')) tk
         |   FROM documents),
         | tf AS (SELECT source, tk, count(*) tf FROM t GROUP BY 1, 2)
@@ -6491,30 +4266,74 @@ object ExtensionQueries {
         |   floor(count(*)::DOUBLE * 10000 / sum(tf)::DOUBLE)::BIGINT AS ttr_bp,
         |   floor(sum(CASE WHEN tf = 1 THEN 1 ELSE 0 END)::DOUBLE * 10000
         |     / count(*)::DOUBLE)::BIGINT AS hapax_bp
-        | FROM tf GROUP BY source ORDER BY source""".stripMargin,
+        | FROM tf GROUP BY source ORDER BY source""".stripMargin),
 
-    // OPH mirror: one hash60 per shingle, bucket mins, clockwise
-    // rotation borrow via arg_min on the cyclic distance, same banding.
-    "x123_dedup_minhash_oph" ->
+    // x123 — one-permutation MinHash LSH candidates (Li/Owen/Zhang 2012):
+    // ONE hash per shingle vs x22's sixteen — the signature pass that
+    // dominates at 100 TB, at the same banding contract.
+    "x123_dedup_minhash_oph" -> QueryCase({ (s, dir) =>
+      DedupOps.minhashLshCandidatesOph(spread(t(s, dir, "documents")),
+          "doc_id", TextOps.wordShingles(col("text"), 3),
+          numHashes = 16, bandRows = 4)
+        .orderBy("i", "j")
+    }, oracle =
+      // OPH mirror: one hash60 per shingle, bucket mins, clockwise
+      // rotation borrow via arg_min on the cyclic distance, same banding.
       s"""$word3gramShingles,
          | $ophBsigSql
          | SELECT a.doc_id i, b.doc_id j, count(*)::BIGINT AS bands
          | FROM bsig a JOIN bsig b
          |   ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id
          | JOIN okb ON okb.band = a.band AND okb.sig = a.sig
-         | GROUP BY 1, 2 ORDER BY i, j""".stripMargin,
+         | GROUP BY 1, 2 ORDER BY i, j""".stripMargin),
 
-    // x64's curation mirror with the banding CTEs swapped to OPH.
-    "x124_corpus_curation_oph" ->
+    // x124 — the x64 curation flagship on OPH signatures: same quality →
+    // exact-dedup → candidate-verify → components pipeline, with the
+    // signature stage paying one hash per shingle instead of sixteen.
+    "x124_corpus_curation_oph" -> QueryCase({ (s, dir) =>
+      val (exactKept, survivors) = curationSurvivors(spread(t(s, dir, "documents")))
+      curationResult(exactKept, DedupOps.nearDupPairs(survivors, "doc_id",
+        TextOps.wordShingles(col("text"), 3), 0.5, oph = true))
+    }, oracle =
+      // x64's curation mirror with the banding CTEs swapped to OPH.
       s"""WITH RECURSIVE $curationHeadSql,
          | $ophBsigSql,
          | $bandVerifySql,
-         | $curationTailSql""".stripMargin,
+         | $curationTailSql""".stripMargin),
 
-    // Refresh-capstone mirror: the x114 diff CTEs (with source carried),
-    // x116's blocklist over the work-list, x121's entropy, x108's token
-    // mixture — each stage the tested fragment, chained.
-    "x125_refresh_manifest" ->
+    // x125 — the REFRESH capstone (x94's incremental sibling): snapshot
+    // diff → only added+changed docs pay → blocklist + entropy quality
+    // gates → token-budget mixture over the surviving refresh. The
+    // integration exhibit for the incremental-ingest story: a corpus
+    // refresh never re-bills the unchanged 99%.
+    "x125_refresh_manifest" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents")).select("doc_id", "source", "text")
+      val nw = refreshSnapshot(d)
+      val work = StatOps.snapshotDiff(d.select("doc_id", "text"),
+          nw.select("doc_id", "text"), "doc_id", "text")
+        .filter(col("status").isin("added", "changed")).select("doc_id")
+      // materialized: the work-list feeds THREE consumers (blocklist,
+      // entropy, the survivor join) — lazily, each would re-run the
+      // diff + semi-join subtree. A production refresh materializes its
+      // work-list for exactly this reason (and it is change-sized, not
+      // corpus-sized). Measured in-suite: 5.9 s → ~1.5 s at sf0.1.
+      val docs = nw.join(work, Seq("doc_id"), "left_semi").localCheckpoint()
+      val keepBl = TextOps.blocklistHits(docs, "doc_id",
+          Seq("big scan table", "slow fast agg"))
+        .filter(col("keep")).select("doc_id")
+      val ent = TextOps.tokenEntropy(docs, "doc_id")
+        .filter(col("entropy_micro") >= 1500000L)
+        .select("doc_id", "n_tokens")
+      val survivors = docs.join(keepBl, Seq("doc_id"), "left_semi")
+        .join(ent, Seq("doc_id"))
+      SampleOps.tokenBudgetMixture(survivors, "doc_id", "source",
+          "n_tokens", Seq("src0" -> 0.3, "src1" -> 0.3, "src2" -> 0.4))
+        .select("doc_id", "source", "n_tokens")
+        .orderBy("doc_id")
+    }, oracle =
+      // Refresh-capstone mirror: the x114 diff CTEs (with source carried),
+      // x116's blocklist over the work-list, x121's entropy, x108's token
+      // mixture — each stage the tested fragment, chained.
       """WITH nw AS (
         |   SELECT doc_id, source,
         |     CASE WHEN doc_id % 5 = 0 THEN text || ' updated' ELSE text END t
@@ -6564,9 +4383,35 @@ object ExtensionQueries {
         | JOIN r ON s.source = r.dom
         | WHERE ('0x' || substr(md5(s.doc_id::VARCHAR), 1, 15))::BIGINT
         |   % 10000 < r.rate
-        | ORDER BY s.doc_id""".stripMargin,
+        | ORDER BY s.doc_id""".stripMargin),
 
-    "x126_ann_recall_pq_trained" ->
+    // x126 — the TRAINED-PQ recall gate, closing the index-selection
+    // table's last unmeasured row: per-subspace k-means codebooks
+    // (pqTrainedCodebooks, 2 exact Lloyd rounds) graded against the x25
+    // brute-force truth at the SAME serving plan as x87's seed-PQ
+    // (m=4 one-byte codes, identical cells, identical nProbe) — two
+    // codebook budgets, ksub=16 (byte-for-byte the seed index's storage)
+    // and ksub=32 (still one byte per code; the codebook itself is driver
+    // metadata either way). The decision this row exists to make: does
+    // training close enough of seed-PQ's 20% recall@5 gap to ship PQ at
+    // the memory floor, or does SQ8 stay the quantized serving tier?
+    "x126_ann_recall_pq_trained" -> QueryCase({ (s, dir) =>
+      val e = spread(t(s, dir, "embeddings"))
+      def cands(ksub: Int): DataFrame =
+        memoRelation(s, dir, s"cand|pq_trained_$ksub") {
+          VectorOps.ivfTopKPq(e.filter(col("vec_id") < 20), e,
+            "vec_id", "embedding", 5, pqTrainedCodebooksOf(s, dir, ksub),
+            numCentroids = 8, nProbe = 2)
+        }
+      val exact = annTruth(s, dir)
+      def grade(df: DataFrame, m: String): DataFrame =
+        VectorOps.annRecall(df, exact, "qid", "nid")
+          .withColumn("method", lit(m))
+      grade(cands(16), "ivf_pq_t16")
+        .unionByName(grade(cands(32), "ivf_pq_t32"))
+        .select("method", "qid", "n_exact", "n_hit", "recall_bp")
+        .orderBy("method", "qid")
+    }, oracle =
       s"""WITH $annV,
          | $annBrute,
          | ex AS (SELECT qid, nid FROM r_ex WHERE rk <= 5),
@@ -6578,41 +4423,100 @@ object ExtensionQueries {
          | ${gradeSql("ivf_pq_t16", "k16")},
          | ${gradeSql("ivf_pq_t32", "k32")}
          | SELECT * FROM g_k16 UNION ALL SELECT * FROM g_k32
-         | ORDER BY method, qid""".stripMargin,
+         | ORDER BY method, qid""".stripMargin),
 
-    // x127 mirror: identical HTML synthesis (htmlSynthSql — the ONE
-    // definition), then the same strip order (script → style → comments
-    // → block closes → tags → entities with &amp; decoded LAST), the
-    // same line split / whitespace collapse, the same three line rules,
-    // and first-(doc_id, line_no) dedup.
-    "x127_html_extract" ->
+    // x127 — HTML/boilerplate extraction, the FIRST-MILE stage every
+    // web-scale corpus runs before any other curation operator (r15; C4,
+    // Raffel et al. 2020 §2.2). The fixture ships clean text, so each doc
+    // is first wrapped in a deterministic HTML page — head with style
+    // (braces!) and script (angle brackets and quotes!), headings,
+    // paragraph breaks carved at ' window ' word boundaries, entity-
+    // encoded chrome, an "enable JavaScript" banner, a cross-page legal
+    // footer, and a comment hiding tagged content — IDENTICALLY in both
+    // engines. Extraction then proves: script/style/comment content never
+    // leaks, block closes become line breaks, entities decode once,
+    // no-terminal-punctuation and short lines drop, the javascript line
+    // drops, and the repeated footer survives exactly once corpus-wide
+    // (line-level dedup).
+    "x127_html_extract" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      HtmlOps.c4KeptLines(d.select(col("doc_id"), htmlFixture.as("html")),
+          "doc_id", "html")
+        .select("doc_id", "line_no", "line")
+        .orderBy("doc_id", "line_no")
+    }, oracle =
+      // x127 mirror: identical HTML synthesis (htmlSynthSql — the ONE
+      // definition), then the same strip order (script → style → comments
+      // → block closes → tags → entities with &amp; decoded LAST), the
+      // same line split / whitespace collapse, the same three line rules,
+      // and first-(doc_id, line_no) dedup.
       s"""WITH $htmlKeptCtesSql
         | SELECT doc_id, line_no, line FROM dd WHERE rk = 1
-        | ORDER BY doc_id, line_no""".stripMargin,
+        | ORDER BY doc_id, line_no""".stripMargin),
 
-    // x128 mirror: the same kept-line CTEs, then the page reassembly
-    // (lines joined in line_no order) and C4's page rules.
-    "x128_html_pages" ->
+    // x128 — the PAGE tier on the same extraction (HtmlOps.c4Pages):
+    // reassemble each page from its surviving lines and apply C4's
+    // page-level rules (≥5 kept lines; brace and lorem-ipsum page
+    // drops). The artifact a crawl ingest actually ships downstream —
+    // cleaned page text, not loose lines. Same ONE-definition synthesis
+    // and strip chain as x127 on both engines.
+    "x128_html_pages" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      HtmlOps.c4Pages(d.select(col("doc_id"), htmlFixture.as("html")),
+          "doc_id", "html")
+        .select("doc_id", "n_lines", "text")
+        .orderBy("doc_id")
+    }, oracle =
+      // x128 mirror: the same kept-line CTEs, then the page reassembly
+      // (lines joined in line_no order) and C4's page rules.
       s"""WITH $htmlKeptCtesSql,
-        | $htmlPageTailSql""".stripMargin,
+        | $htmlPageTailSql""".stripMargin),
 
-    // x129 mirror: identical WARC synthesis over the x127 HTML pages
-    // (htmlSynthSql + warcSynthCtesSql — the ONE definitions), then the
-    // same sentinel-split record parse, header extraction, and
-    // Content-Length payload slicing.
-    "x129_warc_records" ->
+    // x129 — WARC container parsing (WarcOps, ISO 28500): the stage
+    // BEFORE x127 — a crawl arrives as WARC files, not loose HTML. The
+    // x127 HTML pages are wrapped into multi-record WARC files (one
+    // warcinfo per file, a request record for every third doc, a
+    // response per doc — identical synthesis in both engines), then
+    // parsed back: record splitting, header extraction (case-insensitive,
+    // absent → NULL), Content-Length payload slicing, and the length_ok
+    // self-diagnosis.
+    "x129_warc_records" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      WarcOps.parseRecords(warcFixture(d), "file_id", "content")
+        .select(col("file_id"), col("rec_no"), col("warc_type"),
+          col("target_uri"), col("warc_date"), col("content_length"),
+          md5(col("payload")).as("payload_md5"), col("length_ok"))
+        .orderBy("file_id", "rec_no")
+    }, oracle =
+      // x129 mirror: identical WARC synthesis over the x127 HTML pages
+      // (htmlSynthSql + warcSynthCtesSql — the ONE definitions), then the
+      // same sentinel-split record parse, header extraction, and
+      // Content-Length payload slicing.
       s"""WITH $htmlSynthSql,
         | $warcSynthCtesSql,
         | $warcParseCtesSql
         | SELECT file_id, rec_no, warc_type, target_uri, warc_date,
         |   content_length, md5(payload) AS payload_md5, length_ok
-        | FROM wrecs ORDER BY file_id, rec_no""".stripMargin,
+        | FROM wrecs ORDER BY file_id, rec_no""".stripMargin),
 
-    // x130 mirror: the full first-mile composition — the same WARC
-    // synthesis and parse as x129, response payloads become the HTML
-    // source CTE, then the SAME strip/line CTEs as x127 and the SAME
-    // page tail as x128 (all ONE definitions).
-    "x130_warc_to_c4" ->
+    // x130 — the full first-mile composition: WARC parse → response
+    // payloads → the SAME C4 page extraction as x128. Output must be
+    // row-identical to x128 (the container round trip adds nothing and
+    // loses nothing) — and the oracle recomputes it independently
+    // through DuckDB's own parse chain, so the equality is proven, not
+    // assumed.
+    "x130_warc_to_c4" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val pages = WarcOps.responses(warcFixture(d), "file_id", "content")
+        .select(uriDocId, col("payload").as("html"))
+      HtmlOps.c4Pages(pages, "doc_id", "html")
+        .select("doc_id", "n_lines", "text")
+        .orderBy("doc_id")
+    }, oracle =
+      // x130 mirror: the full first-mile composition — the same WARC
+      // synthesis and parse as x129, response payloads become the HTML
+      // source CTE, then the SAME strip/line CTEs as x127 and the SAME
+      // page tail as x128 (all ONE definitions).
       s"""WITH $htmlSynthSql,
         | $warcSynthCtesSql,
         | $warcParseCtesSql,
@@ -6620,26 +4524,64 @@ object ExtensionQueries {
         |       AS BIGINT) AS doc_id, payload AS html
         |   FROM wrecs WHERE warc_type = 'response' AND length_ok),
         | ${htmlStripCtesSql("h2")},
-        | $htmlPageTailSql""".stripMargin,
+        | $htmlPageTailSql""".stripMargin),
 
-    // x131 mirror: identical URL synthesis (urlSynthSql — the ONE
-    // definition), then the same canonicalization rules (scheme/host
-    // lowercase, userinfo/fragment drop, default-port drop, slash
-    // collapse + trailing-slash drop, tracking-param drop + bytewise
-    // param sort) and the same eTLD+1 suffix heuristic — the suffix
-    // set interpolated from the SAME loadPsl read the Spark side
-    // performs (the loaded-data path, both engines consuming one
-    // artifact).
-    "x131_url_canon" ->
+    // x131 — URL canonicalization + registered domain (UrlOps): the
+    // RefinedWeb/CCNet URL tier. Eight deterministic URL shapes per doc
+    // exercise every rule: case, www/userinfo/fragment drop, default
+    // vs non-default ports, slash collapse, trailing dot and slash,
+    // tracking-param drop, bytewise param sort, non-absolute → NULL,
+    // and the multi-label suffix heuristic — with the suffix set
+    // LOADED from a PSL file (UrlOps.loadPsl → RegisteredDomainOf's
+    // data parameter, r16): arm 7's `co.kr` resolves to example.co.kr
+    // only through the loaded list, proving the data path end-to-end
+    // through the oracle.
+    "x131_url_canon" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val suffixes = UrlOps.loadPsl(pslFixturePath)
+      d.select(col("doc_id"), urlFixture.as("url"))
+        .select(col("doc_id"), col("url"),
+          UrlOps.canonicalizeUrl(col("url")).as("canon_url"),
+          UrlOps.host(col("url")).as("host"),
+          UrlOps.domainOf(col("url"), suffixes)
+            .as("reg_domain"))
+        .orderBy("doc_id")
+    }, oracle =
+      // x131 mirror: identical URL synthesis (urlSynthSql — the ONE
+      // definition), then the same canonicalization rules (scheme/host
+      // lowercase, userinfo/fragment drop, default-port drop, slash
+      // collapse + trailing-slash drop, tracking-param drop + bytewise
+      // param sort) and the same eTLD+1 suffix heuristic — the suffix
+      // set interpolated from the SAME loadPsl read the Spark side
+      // performs (the loaded-data path, both engines consuming one
+      // artifact).
       s"""WITH $urlSynthSql,
         | ${urlCanonCtesOver("u", "doc_id",
              graft.ops.UrlOps.loadPsl(pslFixturePath))}
         | SELECT doc_id, url, canon_url, host, reg_domain FROM ur
-        | ORDER BY doc_id""".stripMargin,
+        | ORDER BY doc_id""".stripMargin),
 
-    // x132 mirror: canonical-URL dedup (keep min doc_id per canonical)
-    // rolled up per registered domain — the RefinedWeb URL-dedup stage.
-    "x132_url_dedup" ->
+    // x132 — canonical-URL dedup rolled up per registered domain: the
+    // actual consumer of x131 (RefinedWeb dedups its frontier on the
+    // canonical string — URLs differing only in tracking params, case,
+    // ports, or slashes are one fetch). One shuffle on the canonical
+    // string, one on the domain.
+    "x132_url_dedup" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val ur = d.select(col("doc_id"),
+          UrlOps.canonicalizeUrl(urlFixture).as("canon_url"),
+          UrlOps.domainOf(urlFixture)
+            .as("reg_domain"))
+        .filter(col("canon_url").isNotNull)
+      ur.groupBy("canon_url", "reg_domain")
+        .agg(min("doc_id").as("keep_doc"), count(lit(1)).as("n_docs"))
+        .groupBy("reg_domain")
+        .agg(count(lit(1)).as("n_urls"), sum("n_docs").as("n_docs"),
+          min("keep_doc").as("first_doc"))
+        .orderBy("reg_domain")
+    }, oracle =
+      // x132 mirror: canonical-URL dedup (keep min doc_id per canonical)
+      // rolled up per registered domain — the RefinedWeb URL-dedup stage.
       s"""WITH $urlSynthSql,
         | $urlCanonCtesSql,
         | ku AS (SELECT canon_url, reg_domain, min(doc_id) AS keep_doc,
@@ -6648,15 +4590,50 @@ object ExtensionQueries {
         |   GROUP BY canon_url, reg_domain)
         | SELECT reg_domain, count(*)::BIGINT AS n_urls,
         |   sum(n_docs)::BIGINT AS n_docs, min(keep_doc) AS first_doc
-        | FROM ku GROUP BY reg_domain ORDER BY reg_domain""".stripMargin,
+        | FROM ku GROUP BY reg_domain ORDER BY reg_domain""".stripMargin),
 
-    // x133 mirror: the same URL synthesis + canonicalization, the same
-    // per-domain robots body (robotsBodySql — ONE definition), DuckDB's
-    // own RFC 9309 parse (line split with ordinality, comment strip,
-    // group segmentation via lag + running sum, exact-token-beats-star
-    // group selection), then longest-prefix admission with Allow winning
-    // ties via a window over the hits.
-    "x133_robots_filter" ->
+    // x133 — robots.txt admission (RobotsOps): parse per-domain robots
+    // bodies into the rules governing agent "graftbot" (exact-token
+    // groups beat `*` domain-wide; multi-agent headers; comments; the
+    // empty-Disallow idiom), then admit the x131 canonical URLs by
+    // longest-prefix-match with Allow winning ties. The fixture plants a
+    // megabot-only Disallow-everything group (agent scoping must ignore
+    // it), a `*` group that must be ignored wherever the graftbot group
+    // exists, and drops the graftbot group on example.org only — the
+    // RFC 9309 fallback path, observable as that domain going fully
+    // blocked under `Disallow: /`.
+    "x133_robots_filter" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      // localCheckpoint: the canonicalized frontier feeds THREE consumers
+      // (robots domains, the admission join, the final rollup join) —
+      // materialize the regex-heavy canonicalization once instead of
+      // re-running it per branch (the curationSurvivors pattern)
+      val urls = d.select(col("doc_id"),
+          UrlOps.canonicalizeUrl(urlFixture).as("canon_url"),
+          UrlOps.domainOf(urlFixture).as("reg_domain"))
+        .filter(col("canon_url").isNotNull)
+        .withColumn("match_path", RobotsOps.matchPath(col("canon_url")))
+        .localCheckpoint()
+      val robots = urls.select("reg_domain").distinct()
+        .withColumn("robots_txt", robotsFixture(col("reg_domain")))
+      val rules = RobotsOps.parseRules(robots, "graftbot")
+      // reg_domain rides the admission keys (unique per doc_id row), so
+      // the per-domain rollup reads the flags frame directly — no
+      // join-back shuffle
+      RobotsOps.allowedFlags(urls, rules, Seq("doc_id", "reg_domain"))
+        .groupBy("reg_domain")
+        .agg(count(lit(1)).as("n_urls"),
+          sum(when(col("allowed"), 1L).otherwise(0L)).as("n_allowed"),
+          sum(when(col("allowed"), 0L).otherwise(1L)).as("n_blocked"),
+          min(when(!col("allowed"), col("doc_id"))).as("first_blocked_doc"))
+        .orderBy("reg_domain")
+    }, oracle =
+      // x133 mirror: the same URL synthesis + canonicalization, the same
+      // per-domain robots body (robotsBodySql — ONE definition), DuckDB's
+      // own RFC 9309 parse (line split with ordinality, comment strip,
+      // group segmentation via lag + running sum, exact-token-beats-star
+      // group selection), then longest-prefix admission with Allow winning
+      // ties via a window over the hits.
       s"""WITH $urlSynthSql,
         | ${urlCanonCtesOver("u", "doc_id")},
         | updt AS (SELECT doc_id, reg_domain, canon_url,
@@ -6680,12 +4657,43 @@ object ExtensionQueries {
         |   sum(CASE WHEN allowed THEN 1 ELSE 0 END)::BIGINT n_allowed,
         |   sum(CASE WHEN allowed THEN 0 ELSE 1 END)::BIGINT n_blocked,
         |   min(CASE WHEN NOT allowed THEN doc_id END) first_blocked_doc
-        | FROM fl GROUP BY reg_domain ORDER BY reg_domain""".stripMargin,
+        | FROM fl GROUP BY reg_domain ORDER BY reg_domain""".stripMargin),
 
-    // x134 mirror: the same page/link synthesis (linkSynthCtesSql — ONE
-    // definition), DuckDB's own href extraction + RFC 3986 resolve +
-    // canonicalization, then the two-stage per-target/per-pair rollup.
-    "x134_link_graph" ->
+    // x134 — the link graph (HtmlOps.extractLinks → UrlOps.resolveUrl →
+    // canonicalize): every <a href> of each synthesized page resolved
+    // against the page's own URL (absolute, protocol-relative,
+    // root-relative, path-relative, and fragment-only arms all planted),
+    // canonicalized, and rolled up per (source domain, target domain) —
+    // the corpus link graph whose in-degree is a quality prior and whose
+    // edges seed the crawl frontier. Two chained combinable aggs (per-
+    // target then per-pair) — no count_distinct Expand (the x56 lesson).
+    "x134_link_graph" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val pages = d.select(col("doc_id"), linkBase.as("base"),
+        linkHtmlFixture.as("html"))
+      // aggregate on the canonical string FIRST, then derive the target
+      // domain on the per-target frame: dst_domain is a regexp chain
+      // over canon_url, and computing it pre-agg re-inlines the whole
+      // canonicalization tree into every reference on the exploded link
+      // stream (project collapse duplicates the expression, not the
+      // value) — post-agg it runs once per DISTINCT target
+      val edges = resolvedCanon(pages.select(
+          UrlOps.domainOf(col("base")).as("src_domain"),
+          col("base"),
+          explode(HtmlOps.extractLinks(col("html"))).as("ref")),
+        Seq("src_domain"), "ref")
+      edges.groupBy("src_domain", "canon_url")
+        .agg(count(lit(1)).as("n"))
+        .withColumn("dst_domain",
+          UrlOps.domainOf(col("canon_url")))
+        .groupBy("src_domain", "dst_domain")
+        .agg(sum(col("n")).as("n_links"), count(lit(1)).as("n_targets"),
+          min(col("canon_url")).as("sample_target"))
+        .orderBy("src_domain", "dst_domain")
+    }, oracle =
+      // x134 mirror: the same page/link synthesis (linkSynthCtesSql — ONE
+      // definition), DuckDB's own href extraction + RFC 3986 resolve +
+      // canonicalization, then the two-stage per-target/per-pair rollup.
       s"""WITH $linkSynthCtesSql,
         | ${urlCanonCtesOver("lr", "src_domain")},
         | e AS (SELECT src_domain, canon_url, reg_domain AS dst_domain
@@ -6696,13 +4704,36 @@ object ExtensionQueries {
         | SELECT src_domain, dst_domain, sum(n)::BIGINT n_links,
         |   count(*)::BIGINT n_targets, min(canon_url) sample_target
         | FROM g1 GROUP BY src_domain, dst_domain
-        | ORDER BY src_domain, dst_domain""".stripMargin,
+        | ORDER BY src_domain, dst_domain""".stripMargin),
 
-    // x135 mirror: the same even/odd split and x34 quality label, the
-    // full multinomial-NB estimation in DuckDB (Laplace counts, micro-
-    // nat floored log-odds — the x90 scaled-long convention, so scores
-    // are exact integer sums), then the same confusion rollup.
-    "x135_nb_quality" ->
+    // x135 — token Naive Bayes quality classifier (ClassifyOps): the
+    // model-based filter tier (the fastText-classifier role in
+    // CCNet/DataComp curation). Labels come from the x34 quality rule on
+    // the even-id half, the model scores the odd-id half, and the output
+    // is the confusion rollup with exact integer score sums (micro-nat
+    // scaled-long weights — the x90 BM25 convention, so the DuckDB
+    // mirror is hash-exact regardless of summation order).
+    "x135_nb_quality" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val labeled = TextOps.qualityScore(d)
+        .withColumn("pos",
+          col("n_words") >= 20 && col("alpha_ratio_bp") >= 7000)
+        .select("doc_id", "text", "pos")
+      val train = labeled.filter(col("doc_id") % 2 === 0)
+      val test = labeled.filter(col("doc_id") % 2 =!= 0)
+      val model = ClassifyOps.trainTokenNb(train, "pos")
+      ClassifyOps.scoreTokenNb(test, model)
+        .join(test.select(col("doc_id"), col("pos").as("actual")),
+          Seq("doc_id"))
+        .groupBy("actual", "pred")
+        .agg(count(lit(1)).as("n_docs"), sum(col("score")).as("sum_score"),
+          min("doc_id").as("min_doc"), max("doc_id").as("max_doc"))
+        .orderBy("actual", "pred")
+    }, oracle =
+      // x135 mirror: the same even/odd split and x34 quality label, the
+      // full multinomial-NB estimation in DuckDB (Laplace counts, micro-
+      // nat floored log-odds — the x90 scaled-long convention, so scores
+      // are exact integer sums), then the same confusion rollup.
       s"""WITH lab AS (SELECT doc_id, text,
         |     (len(string_split(text, ' ')) >= 20 AND
         |      floor(len(regexp_replace(text, '[^a-z]', '', 'g'))::DOUBLE
@@ -6743,13 +4774,71 @@ object ExtensionQueries {
         |   count(*)::BIGINT n_docs, sum(score)::BIGINT sum_score,
         |   min(te.doc_id) min_doc, max(te.doc_id) max_doc
         | FROM sc JOIN te USING (doc_id)
-        | GROUP BY actual, pred ORDER BY actual, pred""".stripMargin,
+        | GROUP BY actual, pred ORDER BY actual, pred""".stripMargin),
 
-    // x136 mirror: links → resolve → canonicalize (the x134 chain), then
-    // DuckDB's own frontier: per-canonical dedup, crawled anti-set,
-    // robots admission over the frontier body, and the per-domain cap-4
-    // politeness window.
-    "x136_crawl_frontier" ->
+    // x136 — the crawl-frontier capstone: the first-mile DISCOVERY loop
+    // end-to-end. Pages → extracted links → resolved + canonicalized
+    // targets → frontier dedup (one row per canonical URL, keep the
+    // first discoverer) → already-crawled anti-set → robots admission
+    // (RobotsOps, agent graftbot) → per-domain politeness cap (4 fetches
+    // per domain, canonical order). Per-domain funnel counts out — every
+    // stage's survivors visible in one row, the crawl-scheduler report.
+    "x136_crawl_frontier" -> QueryCase({ (s, dir) =>
+      import org.apache.spark.sql.expressions.Window
+      val d = spread(t(s, dir, "documents"))
+      val pages = d.select(col("doc_id"), linkBase.as("base"),
+        linkHtmlFixture.as("html"))
+      val resolved = resolvedCanon(pages.select(col("doc_id"),
+          explode(HtmlOps.extractLinks(col("html"))).as("ref"), col("base")),
+        Seq("doc_id"), "ref")
+      val cand = resolved.groupBy("canon_url")
+        .agg(min("doc_id").as("discovered_by"), count(lit(1)).as("n_refs"))
+        .withColumn("reg_domain",
+          UrlOps.domainOf(col("canon_url")))
+        .withColumn("match_path", RobotsOps.matchPath(col("canon_url")))
+      val crawled = pages
+        .select(UrlOps.canonicalizeUrl(col("base")).as("canon_url"))
+        .distinct().withColumn("seen", lit(true))
+      // localCheckpoint: the marked frontier (one row per canonical URL —
+      // far smaller than the link stream) feeds the robots-domain
+      // distinct, the admission join, AND the staged rollup; without it
+      // each branch re-runs link extraction + resolution + the
+      // canonical-dedup shuffle over the whole corpus
+      val marked = cand.join(crawled, Seq("canon_url"), "left")
+        .withColumn("is_new", col("seen").isNull).drop("seen")
+        .localCheckpoint()
+      val robots = marked.select("reg_domain").distinct()
+        .withColumn("robots_txt", frontierRobotsFixture)
+      val rules = RobotsOps.parseRules(robots, "graftbot")
+      // the funnel columns all ride the admission keys (unique per
+      // canonical URL), so no join-back; ONE window then does the
+      // per-domain politeness cap: admitted rows sort first inside their
+      // domain, so row_number ranks exactly the admitted set — no
+      // schedule self-join (deterministic: (admitted, canon_url) is
+      // unique within a domain)
+      val staged = RobotsOps.allowedFlags(marked, rules,
+          Seq("canon_url", "reg_domain", "n_refs", "is_new"))
+        .withColumn("admitted", col("is_new") && col("allowed"))
+        .drop("allowed")
+      staged
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("reg_domain")
+            .orderBy(col("admitted").desc, col("canon_url"))))
+        .withColumn("scheduled", col("admitted") && col("rn") <= 4)
+        .groupBy("reg_domain")
+        .agg(count(lit(1)).as("n_candidates"),
+          sum(col("n_refs")).as("n_refs"),
+          sum(when(col("is_new"), 1L).otherwise(0L)).as("n_new"),
+          sum(when(col("admitted"), 1L).otherwise(0L)).as("n_admitted"),
+          sum(when(col("scheduled"), 1L).otherwise(0L)).as("n_scheduled"),
+          min(when(col("scheduled"), col("canon_url")))
+            .as("first_scheduled"))
+        .orderBy("reg_domain")
+    }, oracle =
+      // x136 mirror: links → resolve → canonicalize (the x134 chain), then
+      // DuckDB's own frontier: per-canonical dedup, crawled anti-set,
+      // robots admission over the frontier body, and the per-domain cap-4
+      // politeness window.
       s"""WITH $linkSynthCtesSql,
         | ${urlCanonCtesOver("lr", "doc_id")},
         | cand AS (SELECT canon_url, min(doc_id) discovered_by,
@@ -6790,12 +4879,60 @@ object ExtensionQueries {
         |   sum(CASE WHEN admitted THEN 1 ELSE 0 END)::BIGINT n_admitted,
         |   sum(CASE WHEN scheduled THEN 1 ELSE 0 END)::BIGINT n_scheduled,
         |   min(CASE WHEN scheduled THEN canon_url END) first_scheduled
-        | FROM fin GROUP BY reg_domain ORDER BY reg_domain""".stripMargin,
+        | FROM fin GROUP BY reg_domain ORDER BY reg_domain""".stripMargin),
 
-    // x137 mirror: content stats synthesized per site domain (the same
-    // doc_id % 5 site map), the x134 edge chain filtered to cross-domain
-    // links, full-outer joined with both sides zeroed via coalesce.
-    "x137_domain_card" ->
+    // x137 — the per-domain card: content stats (pages, quality passes,
+    // tokens — the x34 rule over each site's docs) full-outer-joined
+    // with link-graph authority (cross-domain in-links and distinct
+    // referring domains from the x134 edges). The domain-level quality
+    // prior RefinedWeb/C4-style pipelines gate fetches and weight
+    // sampling with; a link-only domain (the CDN) and a page-only
+    // domain both appear, each with the other side zeroed.
+    "x137_domain_card" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val content = d.select(
+          UrlOps.domainOf(linkBase).as("domain"),
+          col("text"))
+        .withColumn("n_words",
+          size(split(col("text"), " ")).cast(LongType))
+        .withColumn("q_pass",
+          col("n_words") >= 20 &&
+            TextOps.bp(length(regexp_replace(col("text"), "[^a-z]", "")),
+              length(col("text"))) >= 7000)
+        .groupBy("domain")
+        .agg(count(lit(1)).as("n_pages"),
+          sum(when(col("q_pass"), 1L).otherwise(0L)).as("n_quality"),
+          sum(col("n_words")).as("n_toks"))
+      val pages = d.select(col("doc_id"), linkBase.as("base"),
+        linkHtmlFixture.as("html"))
+      // per-target agg first, domain derivation + cross filter on the
+      // aggregated frame (the x134 expression-duplication rationale)
+      val inlinks = resolvedCanon(pages.select(
+            UrlOps.domainOf(col("base"))
+              .as("src_domain"),
+            explode(HtmlOps.extractLinks(col("html"))).as("ref"),
+            col("base")),
+          Seq("src_domain"), "ref")
+        .withColumn("domain",
+          UrlOps.domainOf(col("canon_url")))
+        .filter(col("domain") =!= col("src_domain"))
+        .groupBy("domain", "src_domain")
+        .agg(count(lit(1)).as("n"))
+        .groupBy("domain")
+        .agg(sum(col("n")).as("in_links_cross"),
+          count(lit(1)).as("in_domains"))
+      content.join(inlinks, Seq("domain"), "full_outer")
+        .select(col("domain"),
+          coalesce(col("n_pages"), lit(0L)).as("n_pages"),
+          coalesce(col("n_quality"), lit(0L)).as("n_quality"),
+          coalesce(col("n_toks"), lit(0L)).as("n_toks"),
+          coalesce(col("in_links_cross"), lit(0L)).as("in_links_cross"),
+          coalesce(col("in_domains"), lit(0L)).as("in_domains"))
+        .orderBy("domain")
+    }, oracle =
+      // x137 mirror: content stats synthesized per site domain (the same
+      // doc_id % 5 site map), the x134 edge chain filtered to cross-domain
+      // links, full-outer joined with both sides zeroed via coalesce.
       s"""WITH $linkSynthCtesSql,
         | ${urlCanonCtesOver("lr", "src_domain")},
         | content AS (SELECT 'example-' || (doc_id % 5)::VARCHAR ||
@@ -6824,13 +4961,39 @@ object ExtensionQueries {
         |   coalesce(in_links_cross, 0)::BIGINT in_links_cross,
         |   coalesce(in_domains, 0)::BIGINT in_domains
         | FROM cagg c FULL OUTER JOIN lagg l ON c.domain = l.domain
-        | ORDER BY domain""".stripMargin,
+        | ORDER BY domain""".stripMargin),
 
-    // x138 mirror: anchor ELEMENTS extracted whole (group 0), href and
-    // inner text re-extracted per element, inner tags stripped to
-    // spaces, whitespace collapsed — then resolve + canonicalize (the
-    // x134 chain) and the two-stage rollup.
-    "x138_anchor_text" ->
+    // x138 — anchor-text rollup: every <a> element's target resolved +
+    // canonicalized and its ANCHOR TEXT kept (inner tags stripped) —
+    // the label the web puts on each target, rolled up per (target
+    // domain, anchor text). The WebText-style signal: anchor text is
+    // curated human description of the linked page.
+    "x138_anchor_text" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val pages = d.select(col("doc_id"), linkBase.as("base"),
+        linkHtmlFixture.as("html"))
+      // two chained combinable aggs, not count_distinct (the x56
+      // Expand lesson)
+      resolvedCanon(
+          pages.select(col("base"),
+              explode(HtmlOps.extractAnchors(col("html"))).as("a"))
+            .select(col("base"), col("a.href").as("href"),
+              col("a.atext").as("atext"))
+            .filter(col("atext") =!= ""),
+          Seq("atext"), "href")
+        .groupBy("atext", "canon_url")
+        .agg(count(lit(1)).as("n"))
+        .withColumn("dst_domain",
+          UrlOps.domainOf(col("canon_url")))
+        .groupBy("dst_domain", "atext")
+        .agg(sum(col("n")).as("n_anchors"),
+          count(lit(1)).as("n_targets"))
+        .orderBy("dst_domain", "atext")
+    }, oracle =
+      // x138 mirror: anchor ELEMENTS extracted whole (group 0), href and
+      // inner text re-extracted per element, inner tags stripped to
+      // spaces, whitespace collapsed — then resolve + canonicalize (the
+      // x134 chain) and the two-stage rollup.
       s"""WITH $linkSynthCtesSql,
         | ae AS (SELECT doc_id, src_domain, base,
         |     unnest(regexp_extract_all(html,
@@ -6876,24 +5039,66 @@ object ExtensionQueries {
         | SELECT dst_domain, atext, sum(n)::BIGINT n_anchors,
         |   count(*)::BIGINT n_targets
         | FROM ag1 GROUP BY dst_domain, atext
-        | ORDER BY dst_domain, atext""".stripMargin,
+        | ORDER BY dst_domain, atext""".stripMargin),
 
-    // x139 mirror: the ACCENT-modified x128 target recomputed
-    // independently from the documents table (DuckDB has no gunzip —
-    // the gzip/WARC/HTTP/charset round trip is the Spark side's to
-    // prove on real UTF-8 bytes; row-identity with this
-    // independently-derived target is exactly the x130 losslessness
-    // proof, one container tier deeper). The Spark-side gzip and HTTP
-    // kernels are additionally spec-gated (HttpOpsSpec round-trip +
-    // multi-member + view tests).
-    "x139_warc_gz_http" ->
+    // x139 — the BYTE/HTTP-faithful first mile (r16; VERDICT r15 #1):
+    // a real Common Crawl file is `.warc.gz` — one gzip member per
+    // record — and each response payload is an HTTP/1.1 message, not
+    // bare HTML. The fixture builds exactly that (per-record gzip
+    // members, concatenated per file), and the query runs the REAL
+    // chain: gunzip the file (multi-member, GunzipToString → the
+    // latin1 VIEW of the record bytes, r17) → WARC record parse → HTTP
+    // envelope split → route on status 200 + text/html → charset
+    // decode (the pages ship as REAL UTF-8 bytes with an accented
+    // paragraph, so the gz tier is now gated on non-ASCII content —
+    // ADVICE r16) → the SAME C4 page extraction as x128. The oracle is
+    // the accent-modified x128 recompute: DuckDB cannot gunzip, so it
+    // recomputes the target output independently from the documents
+    // table — row-identity proves the whole container+envelope+byte
+    // round trip is lossless (the x130 proof, one tier deeper).
+    "x139_warc_gz_http" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val files = warcGzHttpFixture(d)
+      val pages = WarcOps.responses(
+        files.select(col("file_id"),
+          WarcOps.gunzipText(col("gz")).as("content")),
+        "file_id", "content")
+      c4ResponsePages(pages,
+        HttpOps.decodeBody(col("body"), col("charset")))
+    }, oracle =
+      // x139 mirror: the ACCENT-modified x128 target recomputed
+      // independently from the documents table (DuckDB has no gunzip —
+      // the gzip/WARC/HTTP/charset round trip is the Spark side's to
+      // prove on real UTF-8 bytes; row-identity with this
+      // independently-derived target is exactly the x130 losslessness
+      // proof, one container tier deeper). The Spark-side gzip and HTTP
+      // kernels are additionally spec-gated (HttpOpsSpec round-trip +
+      // multi-member + view tests).
       s"""${accentPagesSql(None)},
-        | $htmlPageTailSql""".stripMargin,
+        | $htmlPageTailSql""".stripMargin),
 
-    // x140 mirror: identical envelope synthesis, DuckDB's own split
-    // (same regexes: first-blank-line head/body split, anchored status
-    // line, case-insensitive headers, media-type + charset params).
-    "x140_http_headers" -> {
+    // x140 — the HTTP envelope split on its own cross-engine oracle
+    // (the regex tier IS mirrorable, unlike gzip): four synthesized
+    // response shapes (200+charset, 301+Location, 404, lowercase
+    // content-type with quoted charset), split into status /
+    // media type / charset / redirect / body in both engines, rolled
+    // up per envelope shape. The routing table a crawl ingest
+    // partitions its fetch results by.
+    "x140_http_headers" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      HttpOps.parseResponses(
+          d.select(col("doc_id"), httpFixture.as("msg")), "msg")
+        .groupBy("status_code", "content_type", "charset")
+        .agg(count(lit(1)).as("n_msgs"),
+          sum(length(col("body")).cast(LongType)).as("body_chars"),
+          sum(when(col("location").isNotNull, 1L).otherwise(0L))
+            .as("n_redirects"),
+          min("doc_id").as("min_doc"))
+        .orderBy("status_code", "content_type")
+    }, oracle = {
+      // x140 mirror: identical envelope synthesis, DuckDB's own split
+      // (same regexes: first-blank-line head/body split, anchored status
+      // line, case-insensitive headers, media-type + charset params).
       val crlf = "chr(13) || chr(10)"
       s"""WITH hm AS (SELECT doc_id,
         |   CASE (doc_id % 4)
@@ -6938,16 +5143,44 @@ object ExtensionQueries {
         |   min(doc_id) min_doc
         | FROM hx GROUP BY 1, 2, 3
         | ORDER BY status_code, content_type""".stripMargin
-    },
+    }),
 
-    // x141 mirror: the same link corpus and robots rules, both hops
-    // unrolled as CTEs (crawlHopCtesSql — one generator, so hop 1 and
-    // hop 2 cannot drift): per hop, links of the previous frontier's
-    // fetched pages → NOT EXISTS against the cumulative crawled set →
-    // longest-match admission → per-domain cap-4 window; the crawled
-    // set then grows by the hop's scheduled URLs and the next frontier
-    // is its fetched subset.
-    "x141_crawl_hops" ->
+    // x141 — the multi-hop crawl loop (CrawlOps.crawlFrontierIterate;
+    // VERDICT r15 #7): x136 is ONE discovery hop, a crawl iterates.
+    // Seeds = every 10th page of the link corpus; two hops of
+    // frontier → fetch → extract → dedup-against-everything-crawled →
+    // robots admission (agent graftbot) → per-domain cap-4 politeness,
+    // rolled up per (hop, domain) with the fetched/404 split. The
+    // oracle unrolls both hops as CTEs — the same links, the same
+    // rules, the same cumulative crawled set.
+    "x141_crawl_hops" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val pages = d.select(linkBase.as("canon_url"),
+        linkHtmlFixture.as("html"))
+      val seeds = d.filter(col("doc_id") % 10 === 0)
+        .select(linkBase.as("canon_url"))
+      // robots coverage: the five site domains plus the CDN's (a
+      // domain absent from the rule table is unrestricted — RFC 9309)
+      val doms = pages
+        .select(UrlOps.domainOf(col("canon_url")).as("reg_domain"))
+        .distinct()
+        .unionByName(s.range(1).select(lit("example.net").as("reg_domain")))
+      val rules = RobotsOps.parseRules(
+        doms.withColumn("robots_txt", frontierRobotsFixture), "graftbot")
+      CrawlOps.crawlFrontierIterate(pages, seeds, rules, maxHops = 2)
+        .groupBy("hop", "reg_domain")
+        .agg(count(lit(1)).as("n_scheduled"),
+          sum(when(col("fetched"), 1L).otherwise(0L)).as("n_fetched"),
+          min("canon_url").as("first_url"))
+        .orderBy("hop", "reg_domain")
+    }, oracle =
+      // x141 mirror: the same link corpus and robots rules, both hops
+      // unrolled as CTEs (crawlHopCtesSql — one generator, so hop 1 and
+      // hop 2 cannot drift): per hop, links of the previous frontier's
+      // fetched pages → NOT EXISTS against the cumulative crawled set →
+      // longest-match admission → per-domain cap-4 window; the crawled
+      // set then grows by the hop's scheduled URLs and the next frontier
+      // is its fetched subset.
       s"""WITH $linkSynthCtesSql,
         | ${urlCanonCtesOver("lr", "doc_id")},
         | l2 AS (SELECT DISTINCT doc_id, canon_url, host, reg_domain
@@ -6970,17 +5203,44 @@ object ExtensionQueries {
         |     n_fetched,
         |   min(canon_url) first_url
         | FROM sched s GROUP BY 1, 2
-        | ORDER BY hop, reg_domain""".stripMargin,
+        | ORDER BY hop, reg_domain""".stripMargin),
 
-    // x142 mirror: the x134 edge chain (self-loops dropped, href
-    // multiplicity as weight), then the SAME two power iterations
-    // unrolled as CTEs in the same scaled-BIGINT arithmetic — `//` in
-    // DuckDB and `div` in Spark both truncate on the non-negative
-    // values here, so every intermediate is the identical Long. Node
-    // domains ride the edge endpoints (lb.src_domain for sources,
-    // ur.reg_domain for targets — provably equal where a node is
-    // both, the x134 equivalence).
-    "x142_pagerank" ->
+    // x142 — link-authority PageRank (GraphOps.pageRankInt; the
+    // Cho/Garcia-Molina/Page WWW'98 crawl-ordering signal): the x134
+    // edge stream (resolve + canonicalize, self-loops dropped), edge
+    // weight = href multiplicity, two damped power iterations in exact
+    // scaled-BIGINT arithmetic (rank at 10^6, integral div throughout,
+    // so summation order cannot matter and the DuckDB mirror unrolling
+    // the same two iterations as CTEs is hash-exact by construction).
+    // Rolled up per target domain with the argmax node — the
+    // per-domain authority table a frontier scheduler orders its fetch
+    // queue by.
+    "x142_pagerank" -> QueryCase({ (s, dir) =>
+      import org.apache.spark.sql.expressions.Window
+      val edges = pageLinkEdges(spread(t(s, dir, "documents")))
+      val ranks = GraphOps.pageRankInt(edges, iterations = 2)
+        .withColumn("reg_domain", UrlOps.domainOf(col("node")))
+      // argmax with a deterministic tie-break: min node among the
+      // rank_max holders (one window + the rollup — no self-join)
+      ranks
+        .withColumn("rmax",
+          max("rank").over(Window.partitionBy("reg_domain")))
+        .groupBy("reg_domain")
+        .agg(count(lit(1)).as("n_nodes"),
+          sum("rank").as("rank_sum"),
+          max("rank").as("rank_max"),
+          min(when(col("rank") === col("rmax"), col("node")))
+            .as("top_node"))
+        .orderBy("reg_domain")
+    }, oracle =
+      // x142 mirror: the x134 edge chain (self-loops dropped, href
+      // multiplicity as weight), then the SAME two power iterations
+      // unrolled as CTEs in the same scaled-BIGINT arithmetic — `//` in
+      // DuckDB and `div` in Spark both truncate on the non-negative
+      // values here, so every intermediate is the identical Long. Node
+      // domains ride the edge endpoints (lb.src_domain for sources,
+      // ur.reg_domain for targets — provably equal where a node is
+      // both, the x134 equivalence).
       s"""WITH $linkSynthCtesSql,
         | ${urlCanonCtesOver("lr", "doc_id")},
         | e0 AS (SELECT lb.base AS src, lb.src_domain AS sdom,
@@ -6999,14 +5259,98 @@ object ExtensionQueries {
         | SELECT reg_domain, count(*)::BIGINT n_nodes,
         |   sum(r)::BIGINT rank_sum, max(r)::BIGINT rank_max,
         |   min(CASE WHEN r = rmax THEN node END) top_node
-        | FROM rm GROUP BY reg_domain ORDER BY reg_domain""".stripMargin,
+        | FROM rm GROUP BY reg_domain ORDER BY reg_domain""".stripMargin),
 
-    // x143 mirror: the same robots/index/urlset synthesis, DuckDB's own
-    // directive extraction (line split + comment strip + case-folded
-    // key), regex element/child parses with the same patterns and the
-    // same five-entity un-escape order (`&amp;` last), the shared
-    // canonicalization chain, and the identical two-stage rollup.
-    "x143_sitemap_discovery" ->
+    // x143 — sitemap discovery (SitemapOps; sitemaps.org protocol):
+    // the OTHER half of the crawl's URL-discovery plane. Four of the
+    // five site domains advertise a sitemap INDEX from robots.txt
+    // (key case varies, one pointer carries a trailing comment, the
+    // fifth domain has no directive), each index references two child
+    // urlsets, each child packs its domain's pages as <url> entries
+    // with XML-escaped tracking params in the loc and optional
+    // lastmod/priority. The chain: Sitemap: directives → index parse →
+    // child fetch (closed-corpus double, the CrawlOps convention) →
+    // urlset parse → canonicalize → anti-flag against the crawled set
+    // → two-stage per-sitemap/per-domain rollup (no count_distinct
+    // Expand — the x56 lesson).
+    "x143_sitemap_discovery" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val m = (col("doc_id") % 5).cast("string")
+      val site = concat(lit("https://s"), m, lit(".example-"), m,
+        lit(".com"))
+      val dom = concat(lit("example-"), m, lit(".com"))
+      val idS = col("doc_id").cast("string")
+      val robots = d.select((col("doc_id") % 5).as("mnum"),
+          dom.as("reg_domain"), site.as("site")).distinct()
+        .withColumn("robots_txt",
+          when(col("reg_domain") =!= "example-4.com", concat(
+            lit("User-agent: *\nDisallow: /private\n\n"),
+            when(col("mnum") % 2 === 0, lit("Sitemap: "))
+              .otherwise(lit("SITEMAP: ")),
+            col("site"), lit("/sitemap_index.xml # autogen\n")))
+          .otherwise(lit("User-agent: *\nAllow: /\n")))
+      val ptr = SitemapOps.sitemapUrls(robots)
+      val idxXml = ptr.withColumn("xml", concat(
+        lit("<sitemapindex><sitemap><loc>"),
+        regexp_replace(col("sitemap_url"), "sitemap_index\\.xml$",
+          "maps/s1.xml"),
+        lit("</loc></sitemap><sitemap><loc>"),
+        regexp_replace(col("sitemap_url"), "sitemap_index\\.xml$",
+          "maps/s2.xml"),
+        lit("</loc></sitemap></sitemapindex>")))
+      val children = SitemapOps.parseIndex(idxXml, Seq("reg_domain"))
+      val entry = concat(lit("<url><loc>"), site, lit("/dir/page/"), idS,
+        lit("?utm_source=map&amp;utm_medium=xml</loc>"),
+        when(col("doc_id") % 3 === 0, concat(lit("<lastmod>2020-01-"),
+          lpad(((col("doc_id") % 28) + 1).cast("string"), 2, "0"),
+          lit("</lastmod>"))).otherwise(lit("")),
+        when(col("doc_id") % 7 === 0, lit("<priority>0.9</priority>"))
+          .when(col("doc_id") % 2 === 0, lit("<priority>0.5</priority>"))
+          .otherwise(lit("")),
+        lit("</url>"))
+      val content = d.select(
+          concat(site, lit("/maps/s"),
+            ((col("doc_id") % 2) + 1).cast("string"), lit(".xml"))
+            .as("sitemap_loc"),
+          col("doc_id"), entry.as("e"))
+        .groupBy("sitemap_loc")
+        .agg(concat(lit("<urlset>"),
+          concat_ws("", array_sort(collect_list(
+            struct(col("doc_id"), col("e")))).getField("e")),
+          lit("</urlset>")).as("xml"))
+      val entries = SitemapOps.parseUrlset(
+        children.join(content, Seq("sitemap_loc")),
+        Seq("reg_domain", "sitemap_loc"))
+      val crawled = d.filter(col("doc_id") % 10 === 0)
+        .select(linkBase.as("canon_url"), lit(true).as("__crawled"))
+      val flagged = entries
+        .withColumn("canon_url", UrlOps.canonicalizeUrl(col("loc")))
+        .filter(col("canon_url").isNotNull)
+        .join(crawled, Seq("canon_url"), "left")
+        .withColumn("is_new", col("__crawled").isNull)
+      flagged.groupBy("reg_domain", "sitemap_loc")
+        .agg(count(lit(1)).as("n_entries"),
+          sum(when(col("is_new"), 1L).otherwise(0L)).as("n_new"),
+          sum(when(col("lastmod").isNotNull, 1L).otherwise(0L))
+            .as("n_lastmod"),
+          sum(when(col("priority") >= "0.8", 1L).otherwise(0L))
+            .as("n_high"),
+          min("lastmod").as("min_lastmod"),
+          min("canon_url").as("first_loc"))
+        .groupBy("reg_domain")
+        .agg(count(lit(1)).as("n_sitemaps"),
+          sum("n_entries").as("n_entries"), sum("n_new").as("n_new"),
+          sum("n_lastmod").as("n_lastmod"),
+          sum("n_high").as("n_high_priority"),
+          min("min_lastmod").as("min_lastmod"),
+          min("first_loc").as("first_loc"))
+        .orderBy("reg_domain")
+    }, oracle =
+      // x143 mirror: the same robots/index/urlset synthesis, DuckDB's own
+      // directive extraction (line split + comment strip + case-folded
+      // key), regex element/child parses with the same patterns and the
+      // same five-entity un-escape order (`&amp;` last), the shared
+      // canonicalization chain, and the identical two-stage rollup.
       s"""WITH dm AS (SELECT DISTINCT (doc_id % 5) AS mnum,
         |     'example-' || (doc_id % 5)::VARCHAR || '.com' AS reg_domain,
         |     'https://s' || (doc_id % 5)::VARCHAR || '.example-' ||
@@ -7113,24 +5457,108 @@ object ExtensionQueries {
         |   sum(n_lastmod)::BIGINT n_lastmod,
         |   sum(n_high)::BIGINT n_high_priority,
         |   min(min_lastmod) min_lastmod, min(first_loc) first_loc
-        | FROM g1 GROUP BY reg_domain ORDER BY reg_domain""".stripMargin,
+        | FROM g1 GROUP BY reg_domain ORDER BY reg_domain""".stripMargin),
 
-    // x144 mirror: the x128 target recomputed independently (DuckDB
-    // does not de-chunk — the WARC/HTTP/chunked round trip is the
-    // Spark side's to prove; row-identity with the independent target
-    // is the x139 losslessness proof for the chunked layer). The
-    // decoder is additionally spec-gated (HttpOpsSpec goldens:
-    // byte-count sizes across a multi-byte boundary, extension/trailer
-    // drops, malformed-framing NULLs).
-    "x144_http_chunked" ->
+    // x144 — chunked transfer decoding (DechunkBody; RFC 9112 §7.1):
+    // the LAST envelope layer of the byte tier. A LIVE fetch (unlike
+    // Common Crawl's de-chunked store) delivers chunked framing, so
+    // the fixture wraps each x127 page in a chunked HTTP message
+    // (hex sizes from Spark's uppercase hex(), a chunk extension and
+    // a trailer field planted, one chunk boundary mid-document) inside
+    // plain-text WARC records, and the query runs WARC parse → HTTP
+    // split (which de-chunks on Transfer-Encoding routing) → the SAME
+    // C4 page extraction as x128. Oracle = the independently
+    // recomputed x128 target (the x139 losslessness proof for the
+    // chunked layer).
+    "x144_http_chunked" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val pages = WarcOps.responses(
+        warcChunkedHttpFixture(d), "file_id", "content")
+      c4ResponsePages(pages, col("body"),
+        col("transfer_encoding") === "chunked")
+    }, oracle =
+      // x144 mirror: the x128 target recomputed independently (DuckDB
+      // does not de-chunk — the WARC/HTTP/chunked round trip is the
+      // Spark side's to prove; row-identity with the independent target
+      // is the x139 losslessness proof for the chunked layer). The
+      // decoder is additionally spec-gated (HttpOpsSpec goldens:
+      // byte-count sizes across a multi-byte boundary, extension/trailer
+      // drops, malformed-framing NULLs).
       s"""WITH $htmlKeptCtesSql,
-        | $htmlPageTailSql""".stripMargin,
+        | $htmlPageTailSql""".stripMargin),
 
-    // x145 mirror: the x142 rank CTEs, the x136 candidate/admission
-    // chain, DuckDB's own governing-group Crawl-delay extraction (the
-    // rg/rgov CTEs robotsParseCtesSql already builds), and the same
-    // slot window + delay spacing.
-    "x145_frontier_schedule" ->
+    // x145 — the prioritized frontier SCHEDULE (the round's capstone
+    // composition): what a crawl scheduler actually emits — candidate
+    // URLs from link discovery (the x136 frontier: links minus the
+    // crawled corpus), admitted by robots (graftbot; /root disallowed
+    // everywhere), ranked by link authority (the x142 integer
+    // PageRank, un-ranked candidates at 0), capped at 4 fetch slots
+    // per registered domain, each slot offset by the domain's
+    // governing Crawl-delay (RobotsOps.crawlDelays; site 0 publishes
+    // none and the CDN domain has no robots at all — both fall to the
+    // 200 ms default spacing). Integer ranks + integral ms make every
+    // output column exact in both engines.
+    "x145_frontier_schedule" -> QueryCase({ (s, dir) =>
+      import org.apache.spark.sql.expressions.Window
+      val d = spread(t(s, dir, "documents"))
+      val pages = d.select(col("doc_id"), linkBase.as("base"),
+        linkHtmlFixture.as("html"))
+      // one materialization feeds BOTH the rank edges and the
+      // candidate stream (the x136 localCheckpoint discipline)
+      val resolved = resolvedCanon(pages.select(col("base"),
+          explode(HtmlOps.extractLinks(col("html"))).as("ref")),
+        Seq("base"), "ref").localCheckpoint()
+      val edges = resolved.filter(col("canon_url") =!= col("base"))
+        .groupBy(col("base").as("src"), col("canon_url").as("dst"))
+        .agg(count(lit(1)).as("w"))
+      val ranks = GraphOps.pageRankInt(edges, iterations = 2)
+      val cand = resolved.select("canon_url").distinct()
+        .join(pages.select(col("base").as("canon_url")),
+          Seq("canon_url"), "left_anti")
+        .withColumn("host", UrlOps.host(col("canon_url")))
+        .withColumn("reg_domain", UrlOps.domainOf(col("canon_url")))
+        .withColumn("match_path", RobotsOps.matchPath(col("canon_url")))
+      val doms = pages
+        .select(UrlOps.domainOf(col("base")).as("reg_domain")).distinct()
+        .withColumn("mnum",
+          regexp_extract(col("reg_domain"), "example-([0-9])", 1))
+      val robots = doms.withColumn("robots_txt", concat(
+        lit("User-agent: megabot\nDisallow: /\n\n"),
+        lit("User-agent: graftbot\n"),
+        when(col("mnum") === "0", lit(""))
+          .otherwise(concat(lit("Crawl-delay: "), col("mnum"),
+            lit(".5\n"))),
+        lit("Disallow: /root\n\n"),
+        lit("User-agent: *\nCrawl-delay: 30\nDisallow: /\n")))
+      val rules = RobotsOps.parseRules(robots, "graftbot")
+      val delays = RobotsOps.crawlDelays(robots, "graftbot")
+      RobotsOps.allowedFlags(cand, rules,
+          Seq("canon_url", "host", "reg_domain"))
+        .filter(col("allowed")).drop("allowed")
+        .join(ranks.select(col("node").as("canon_url"), col("rank")),
+          Seq("canon_url"), "left")
+        .withColumn("rank", coalesce(col("rank"), lit(0L)))
+        // slots per HOST (r18, VERDICT r17 #5): the fetch queue is a
+        // per-server schedule — two hosts on one registered domain
+        // fill their slot windows independently; the domain stays for
+        // the rollup and the Crawl-delay spacing (robots are fetched
+        // per authority; this fixture publishes them per domain)
+        .withColumn("slot", row_number().over(
+            Window.partitionBy("host")
+              .orderBy(col("rank").desc, col("canon_url")))
+          .cast(LongType))
+        .filter(col("slot") <= 4)
+        .join(delays, Seq("reg_domain"), "left")
+        .withColumn("fetch_offset_ms",
+          (col("slot") - 1) * coalesce(col("delay_ms"), lit(200L)))
+        .select("reg_domain", "host", "slot", "canon_url", "rank",
+          "fetch_offset_ms")
+        .orderBy("reg_domain", "host", "slot")
+    }, oracle =
+      // x145 mirror: the x142 rank CTEs, the x136 candidate/admission
+      // chain, DuckDB's own governing-group Crawl-delay extraction (the
+      // rg/rgov CTEs robotsParseCtesSql already builds), and the same
+      // slot window + delay spacing.
       s"""WITH $linkSynthCtesSql,
         | ${urlCanonCtesOver("lr", "doc_id")},
         | e0 AS (SELECT lb.base AS src, u.canon_url AS dst
@@ -7190,12 +5618,32 @@ object ExtensionQueries {
         |     fetch_offset_ms
         | FROM sc LEFT JOIN rdel ON sc.reg_domain = rdel.reg_domain
         | WHERE slot <= 4
-        | ORDER BY sc.reg_domain, sc.host, slot""".stripMargin,
+        | ORDER BY sc.reg_domain, sc.host, slot""".stripMargin),
 
-    // x146 mirror: the same revisit synthesis byte for byte, the shared
-    // WARC parse CTEs (now surfacing payload_digest/refers_to), and the
-    // same earliest-response-per-digest window + left join.
-    "x146_warc_revisit" -> {
+    // x146 — WARC revisit resolution (WARC 1.1 §6.7.2): a crawler that
+    // re-fetches unchanged content writes a BODY-LESS revisit record
+    // carrying the payload digest — the container-level dedup a
+    // recrawl store ships with. The fixture groups docs by 3: the head
+    // stores the payload as a response, the second stores the SAME
+    // payload at a different URL (duplicate content — also a
+    // response), the third is a revisit with the group digest, no
+    // body, and a Refers-To header. Resolution is by CONTENT identity:
+    // earliest response per digest (date then URI — the 28-day date
+    // wrap makes some duplicate-URL responses the original, exercising
+    // the rule), revisits left-joined on. Both engines parse the same
+    // synthesized WARC bytes and resolve with the same window.
+    "x146_warc_revisit" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val recs = WarcOps.parseRecords(
+        warcRevisitFixture(d), "file_id", "content")
+      WarcOps.resolveRevisits(recs)
+        .select("target_uri", "warc_date", "payload_digest",
+          "refers_to", "original_uri", "original_date")
+        .orderBy("target_uri")
+    }, oracle = {
+      // x146 mirror: the same revisit synthesis byte for byte, the shared
+      // WARC parse CTEs (now surfacing payload_digest/refers_to), and the
+      // same earliest-response-per-digest window + left join.
       val crlf = "chr(13) || chr(10)"
       s"""WITH wbase AS (SELECT doc_id, doc_id // 8 AS file_id,
         |     'snapshot of group ' || (doc_id - (doc_id % 3))::VARCHAR ||
@@ -7238,23 +5686,80 @@ object ExtensionQueries {
         | FROM wrecs r LEFT JOIN wresp USING (payload_digest)
         | WHERE r.warc_type = 'revisit' AND r.payload_digest IS NOT NULL
         | ORDER BY r.target_uri""".stripMargin
-    },
+    }),
 
-    // x147 mirror: the C4 target recomputed independently over the
-    // same per-arm synthesis (DuckDB does not transcode — the
-    // byte/charset round trip is the Spark side's to prove; row
-    // identity across ALL THREE charset arms, windows-1252 included,
-    // is the x139 losslessness proof for the decode layer).
-    "x147_charset_bytes" ->
+    // x147 — charset-faithful byte decoding via the LATIN1-VIEW
+    // convention (HttpOps.decodeBody): raw record bytes decoded as
+    // ISO-8859-1 give a 1:1 byte↔char string, so every WARC/HTTP
+    // length and delimiter is an exact BYTE offset (the string-tier
+    // char-count bound disappears); once the envelope is off, the body
+    // re-encodes to its original bytes and decodes with the charset
+    // the Content-Type header declared. Three arms (doc_id % 3): REAL
+    // UTF-8 bytes (mojibake in the view until decodeBody
+    // reinterprets), latin1 bytes (the view IS the text), and — r17,
+    // VERDICT r16 #2 — REAL windows-1252 bytes carrying smart quotes /
+    // em dash / ellipsis, decoded by the 27-codepoint translate arm.
+    // All arms must land on the per-arm C4 target. Oracle = the
+    // independent recompute over the same per-arm synthesis (the x139
+    // convention — DuckDB does not transcode).
+    "x147_charset_bytes" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val pages = WarcOps.responses(
+        warcCharsetFixture(d), "file_id", "content")
+      c4ResponsePages(pages,
+        HttpOps.decodeBody(col("body"), col("charset")))
+    }, oracle =
+      // x147 mirror: the C4 target recomputed independently over the
+      // same per-arm synthesis (DuckDB does not transcode — the
+      // byte/charset round trip is the Spark side's to prove; row
+      // identity across ALL THREE charset arms, windows-1252 included,
+      // is the x139 losslessness proof for the decode layer).
       s"""${accentPagesSql(Some(2))},
-        | $htmlPageTailSql""".stripMargin,
+        | $htmlPageTailSql""".stripMargin),
 
-    // x148 mirror: the same four-shape synthesis, DuckDB's own base
-    // extraction (first match) and href extraction, the shared
-    // resolve CASE applied TWICE (base href vs page URL, then each
-    // ref vs the effective base), the shared canon chain, the same
-    // rollup.
-    "x148_base_href" ->
+    // x148 — <base href> resolution (HTML5 §4.2.3): when a page
+    // declares a base element, EVERY relative reference resolves
+    // against IT, not the page URL — a link tier that ignores it
+    // mis-attributes every relative link on such pages. Four page
+    // shapes cycle: no base, an absolute CDN base (relative links
+    // leave the page's domain entirely), a root-relative base, and a
+    // path-relative base (itself resolved against the page URL
+    // first); each page carries a path-relative, a root-relative, and
+    // a query-only link, all of which must resolve against the
+    // EFFECTIVE base. Rolled up per (base shape, target domain).
+    "x148_base_href" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val id = col("doc_id")
+      val baseTag = when(id % 4 === 1,
+          lit("<base href=\"https://cdn.example.net/assets/\">"))
+        .when(id % 4 === 2, lit("<base href=\"/b/\">"))
+        .when(id % 4 === 3, lit("<base href=\"sub/\">"))
+        .otherwise(lit(""))
+      val html = concat(lit("<html><head>"), baseTag,
+        lit("</head><body><a href=\"x/"), (id % 5).cast("string"),
+        lit("\">r</a><a href=\"/abs/"), (id % 7).cast("string"),
+        lit("\">a</a><a href=\"?p="), (id % 3).cast("string"),
+        lit("\">q</a></body></html>"))
+      val pages = d.select((id % 4).as("base_kind"),
+        linkBase.as("page"), html.as("html"))
+      val resolved = pages
+        .select(col("base_kind"),
+          UrlOps.effectiveBase(col("page"),
+            HtmlOps.baseHref(col("html"))).as("base"),
+          explode(HtmlOps.extractLinks(col("html"))).as("ref"))
+      resolvedCanon(resolved, Seq("base_kind"), "ref")
+        .withColumn("reg_domain", UrlOps.domainOf(col("canon_url")))
+        .groupBy("base_kind", "reg_domain")
+        .agg(count(lit(1)).as("n_links"),
+          min(col("canon_url")).as("first_target"),
+          max(col("canon_url")).as("last_target"))
+        .orderBy("base_kind", "reg_domain")
+    }, oracle =
+      // x148 mirror: the same four-shape synthesis, DuckDB's own base
+      // extraction (first match) and href extraction, the shared
+      // resolve CASE applied TWICE (base href vs page URL, then each
+      // ref vs the effective base), the shared canon chain, the same
+      // rollup.
       s"""WITH bp AS (SELECT doc_id, (doc_id % 4) AS base_kind,
         |     'https://s' || (doc_id % 5)::VARCHAR || '.example-' ||
         |       (doc_id % 5)::VARCHAR || '.com/dir/page/' ||
@@ -7293,13 +5798,39 @@ object ExtensionQueries {
         |   min(canon_url) first_target, max(canon_url) last_target
         | FROM ur WHERE canon_url IS NOT NULL
         | GROUP BY base_kind, reg_domain
-        | ORDER BY base_kind, reg_domain""".stripMargin,
+        | ORDER BY base_kind, reg_domain""".stripMargin),
 
-    // x149 mirror: the same three-capture synthesis, DuckDB's own lag
-    // window for observed changes, the same integral day/bp/priority
-    // arithmetic, and the same sitemap-lastmod join + declared-change
-    // bonus (r17 arm).
-    "x149_recrawl_priority" ->
+    // x149 — freshness-driven recrawl scheduling
+    // (CrawlOps.recrawlPriority; Cho/Garcia-Molina 2000): which stored
+    // URLs to re-fetch first. Three captures per URL at weekly
+    // spacing; a third of URLs change every capture, a third change
+    // once, a third never (digest = md5 of a version counter) — the
+    // observed-change lag statistic, integral change-rate basis
+    // points, and staleness × rate priority must agree exactly. r17
+    // arm (VERDICT r16 #5): a sitemap-lastmod table joins in as the
+    // publisher's declared change evidence — doc_id % 5 == 4 declares
+    // a lastmod NEWER than every last capture (raising priority by
+    // the one-observed-change bonus, which RESCUES never-changing
+    // URLs from their zero score), % 5 == 2 declares an OLDER lastmod
+    // (no effect), the rest declare nothing.
+    "x149_recrawl_priority" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val caps = captureHistory(d)
+        .withColumn("digest", md5(concat(col("doc_id").cast("string"),
+          lit("_v"), col("version").cast("string"))))
+      val lastmods = d.filter(col("doc_id") % 5 === 4 ||
+          col("doc_id") % 5 === 2)
+        .select(docUrl.as("url"),
+          when(col("doc_id") % 5 === 4, lit("2020-02-10"))
+            .otherwise(lit("2020-01-01")).as("lastmod"))
+      CrawlOps.recrawlPriority(caps, "2020-02-15",
+          sitemapLastmod = lastmods)
+        .orderBy("url")
+    }, oracle =
+      // x149 mirror: the same three-capture synthesis, DuckDB's own lag
+      // window for observed changes, the same integral day/bp/priority
+      // arithmetic, and the same sitemap-lastmod join + declared-change
+      // bonus (r17 arm).
       s"""WITH caps AS (SELECT
         |     'https://example.com/doc/' || doc_id::VARCHAR AS url,
         |     '2020-01-' ||
@@ -7333,23 +5864,65 @@ object ExtensionQueries {
         |     (CASE WHEN declared_newer THEN 10000 ELSE 0 END))::BIGINT
         |     priority,
         |   declared_newer
-        | FROM ag2 ORDER BY url""".stripMargin,
+        | FROM ag2 ORDER BY url""".stripMargin),
 
-    // x150 mirror: the accent-modified x128 target recomputed
-    // independently (DuckDB cannot gunzip/inflate — the content-coding
-    // round trip is the Spark side's to prove; row-identity across the
-    // gzip AND deflate arms is the x139 losslessness proof for the
-    // Content-Encoding layer).
-    "x150_content_encoding" ->
+    // x150 — `Content-Encoding: gzip/deflate` response bodies (r17,
+    // VERDICT r16 #1 — the one HTTP envelope layer r16 left
+    // unhandled; the MAJORITY of live fetches ship gzip-coded
+    // bodies). The fixture wraps each accent page's REAL UTF-8 bytes
+    // in gzip / zlib-deflate / ZSTD frames (doc_id % 3 — the zstd arm
+    // is r18: the jar-gated ZstdBytes/ZstdToString kernels are LIVE
+    // because zstd-jni rides every Spark classpath),
+    // ships the coded
+    // bytes as the body's latin1 view inside plain-text WARC records,
+    // and the query runs WARC parse → HTTP split (which now removes
+    // the content coding after the transfer coding —
+    // HttpOps.decodeContentCoding) → charset decode → the SAME C4
+    // page extraction as x128. Oracle = the accent-modified recompute
+    // (the x139 convention — DuckDB cannot gunzip): row-identity
+    // proves compress → view → decompress → transcode is lossless on
+    // non-ASCII content.
+    "x150_content_encoding" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val pages = WarcOps.responses(
+        warcContentEncodingFixture(d), "file_id", "content")
+      c4ResponsePages(pages,
+        HttpOps.decodeBody(col("body"), col("charset")),
+        col("content_encoding").isin("gzip", "deflate", "zstd"))
+    }, oracle =
+      // x150 mirror: the accent-modified x128 target recomputed
+      // independently (DuckDB cannot gunzip/inflate — the content-coding
+      // round trip is the Spark side's to prove; row-identity across the
+      // gzip AND deflate arms is the x139 losslessness proof for the
+      // Content-Encoding layer).
       s"""${accentPagesSql(None)},
-        | $htmlPageTailSql""".stripMargin,
+        | $htmlPageTailSql""".stripMargin),
 
-    // x151 mirror: the same chrome-heavy synthesis, DuckDB's own block
-    // split (the shared strip order + block-close regex), per-block
-    // text/anchor char counts and integral density, the same run
-    // segmentation window and argmax-run pick, then the shared C4
-    // line/page CTEs over the reassembled main content.
-    "x151_main_content" ->
+    // x151 — block-density main-content extraction (r17, VERDICT r16
+    // #4; trafilatura-class, RefinedWeb §3.1): nav/sidebar/footer
+    // chrome whose sentences PASS every C4 line rule (terminal
+    // punctuation, ≥3 words) but whose characters are mostly anchor
+    // text. The fixture plants exactly that — two link-bar divs above
+    // the article, a link footer below, and a trailing content island
+    // that must LOSE the best-run contest to the article body (run
+    // selection, not per-block filtering); the article itself carries
+    // one low-density inline link that must survive. Both engines
+    // compute the same integral block scores (chars, anchor chars,
+    // density basis points), the same run segmentation, the same
+    // argmax run, then the SAME C4 line/page tier as x128.
+    "x151_main_content" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val pages = d.select(col("doc_id"), mainContentFixture.as("html"))
+      val main = HtmlOps.mainContent(pages, "doc_id", "html")
+      HtmlOps.c4Pages(main, "doc_id", "main_html")
+        .select("doc_id", "n_lines", "text")
+        .orderBy("doc_id")
+    }, oracle =
+      // x151 mirror: the same chrome-heavy synthesis, DuckDB's own block
+      // split (the shared strip order + block-close regex), per-block
+      // text/anchor char counts and integral density, the same run
+      // segmentation window and argmax-run pick, then the shared C4
+      // line/page CTEs over the reassembled main content.
       s"""WITH h AS (SELECT doc_id,
         |     '<html><head><style>nav { margin: 0; }</style></head><body>' ||
         |     '<div><a href="/home">Home is where you always start browsing ' ||
@@ -7414,15 +5987,86 @@ object ExtensionQueries {
         |   FROM mb5 m JOIN mb7 USING (doc_id, run) WHERE m.is_content
         |   GROUP BY m.doc_id),
         | ${htmlStripCtesSql("mc")},
-        | $htmlPageTailSql""".stripMargin,
+        | $htmlPageTailSql""".stripMargin),
 
-    // x152 mirror: the same redirect/page/robots synthesis, both
-    // productive hops unrolled by ONE generator (redirectHopCtesSql —
-    // resolve via the shared resolve CASE, depth+1 with the cap, min
-    // depth per URL, NOT-EXISTS dedup against the cumulative crawled
-    // set, longest-match admission on the TARGET domain), plus the
-    // provably-empty hop 3 for loop-termination fidelity.
-    "x152_redirect_follow" ->
+    // x152 — redirect following in the crawl loop (r17, VERDICT r16
+    // #3): ~15-20% of live fetches answer 3xx, and a frontier that
+    // drops them loses the target URLs entirely. Four arms per doc
+    // (doc_id % 4): a single 301 with a ROOT-RELATIVE Location
+    // (resolved against the redirect's own URL) landing on a stored
+    // page; a 3-step chain cut by redirectCap=2 (the RFC 9110 §15.4
+    // chain bound — its final target must NOT be scheduled); a
+    // redirect LOOP back to the crawled seed (terminated by the
+    // crawled-set dedup, not the cap); and a CROSS-DOMAIN redirect to
+    // a CDN whose robots disallow the target path (admission re-runs
+    // on the TARGET domain). maxHops=4 yet only hops 1-2 can emit —
+    // the loop's early-stop on an empty hop is part of what the row
+    // set proves. Oracle: both hops unrolled as CTEs with the same
+    // resolve/dedup/cap/admission chain (locations land in canonical
+    // form by construction, so the mirror's resolve IS the canon —
+    // the Spark side still runs canonicalizeUrl over them).
+    "x152_redirect_follow" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val m = (col("doc_id") % 5).cast("string")
+      val site = concat(lit("https://s"), m, lit(".example-"), m,
+        lit(".com"))
+      val idS = col("doc_id").cast("string")
+      val arm = col("doc_id") % 4
+      val rUrl = concat(site, lit("/r/"), idS)
+      val seeds = d.select(rUrl.as("canon_url"))
+      // ONE scan builds all redirect rows (the loop re-reads this
+      // frame every hop — a 4-branch union re-ran 4 scans per hop)
+      val redirects = d.select(explode(array(
+          struct(rUrl.as("canon_url"),
+            when(arm === 0, concat(lit("/t/"), idS))
+              .when(arm === 1, concat(lit("/c1/"), idS))
+              .when(arm === 2, concat(lit("/la/"), idS))
+              .otherwise(concat(lit("https://cdn.example.net/x/"), idS))
+              .as("location")),
+          struct(when(arm === 1, concat(site, lit("/c1/"), idS))
+              .when(arm === 2, concat(site, lit("/la/"), idS))
+              .as("canon_url"),
+            when(arm === 1, concat(lit("/c2/"), idS))
+              .when(arm === 2, concat(lit("/r/"), idS))
+              .as("location")),
+          struct(when(arm === 1, concat(site, lit("/c2/"), idS))
+              .as("canon_url"),
+            when(arm === 1, concat(lit("/t/"), idS)).as("location"))))
+          .as("e"))
+        .select(col("e.canon_url").as("canon_url"),
+          col("e.location").as("location"))
+        .filter(col("canon_url").isNotNull)
+      val pages = d.filter(arm <= 1).select(
+        concat(site, lit("/t/"), idS).as("canon_url"),
+        lit("<html><body></body></html>").as("html"))
+      val doms = d.select(concat(lit("example-"), m, lit(".com"))
+          .as("reg_domain")).distinct()
+        .unionByName(s.range(1).select(lit("example.net").as("reg_domain")))
+      val robots = doms.withColumn("robots_txt",
+        when(col("reg_domain") === "example.net",
+          lit("User-agent: graftbot\nDisallow: /x\n\n" +
+            "User-agent: *\nDisallow: /\n"))
+        .otherwise(
+          lit("User-agent: graftbot\nDisallow: /private\n\n" +
+            "User-agent: *\nDisallow: /\n")))
+      val rules = RobotsOps.parseRules(robots, "graftbot")
+      CrawlOps.crawlFrontierIterate(pages, seeds, rules, maxHops = 4,
+          perHostCap = 1000000, redirects = redirects, redirectCap = 2)
+        .withColumn("path_kind",
+          regexp_extract(col("canon_url"), "/(t|c1|c2|la|x)/", 1))
+        .groupBy("hop", "path_kind")
+        .agg(count(lit(1)).as("n_scheduled"),
+          sum(when(col("fetched"), 1L).otherwise(0L)).as("n_fetched"),
+          min("canon_url").as("first_url"),
+          max("canon_url").as("last_url"))
+        .orderBy("hop", "path_kind")
+    }, oracle =
+      // x152 mirror: the same redirect/page/robots synthesis, both
+      // productive hops unrolled by ONE generator (redirectHopCtesSql —
+      // resolve via the shared resolve CASE, depth+1 with the cap, min
+      // depth per URL, NOT-EXISTS dedup against the cumulative crawled
+      // set, longest-match admission on the TARGET domain), plus the
+      // provably-empty hop 3 for loop-termination fidelity.
       s"""WITH rdq AS (SELECT doc_id, doc_id % 4 AS arm,
         |     'https://s' || (doc_id % 5)::VARCHAR || '.example-' ||
         |       (doc_id % 5)::VARCHAR || '.com' AS site
@@ -7474,12 +6118,28 @@ object ExtensionQueries {
         |   count(*)::BIGINT n_scheduled,
         |   sum(CASE WHEN fetched THEN 1 ELSE 0 END)::BIGINT n_fetched,
         |   min(canon_url) first_url, max(canon_url) last_url
-        | FROM sched GROUP BY 1, 2 ORDER BY hop, path_kind""".stripMargin,
+        | FROM sched GROUP BY 1, 2 ORDER BY hop, path_kind""".stripMargin),
 
-    // x153 mirror: the same seven-arm synthesis, DuckDB's own
-    // two-order robots-meta extraction (identical patterns) and the
-    // same per-token trim+lower list test.
-    "x153_meta_robots" ->
+    // x153 — per-page robots META directives (r17; RFC 9309 §2.3.1's
+    // HTML channel): the noindex/nofollow admission flags an indexing
+    // or corpus pipeline honors alongside robots.txt. Seven arms
+    // cycle attribute order (name-first / content-first), case
+    // (NAME="ROBOTS", content="NONE"), the `none` combined token, an
+    // explicit allow, a DIFFERENT meta whose content contains the
+    // word "noindex" (name selectivity — must NOT count), and a
+    // `noindex-x` near-token (token equality, never substring).
+    "x153_meta_robots" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      d.select(col("doc_id"), metaRobotsFixture.as("html"))
+        .select(col("doc_id"),
+          HtmlOps.metaRobotsContent(col("html")).as("robots_content"),
+          HtmlOps.metaNoindex(col("html")).as("noindex"),
+          HtmlOps.metaNofollow(col("html")).as("nofollow"))
+        .orderBy("doc_id")
+    }, oracle =
+      // x153 mirror: the same seven-arm synthesis, DuckDB's own
+      // two-order robots-meta extraction (identical patterns) and the
+      // same per-token trim+lower list test.
       s"""WITH mr AS (SELECT doc_id,
         |     '<html><head><title>t</title>' ||
         |     (CASE (doc_id % 7)
@@ -7512,13 +6172,44 @@ object ExtensionQueries {
         |       t -> lower(trim(t))), 'nofollow') OR
         |     list_contains(list_transform(string_split(rc, ','),
         |       t -> lower(trim(t))), 'none') END AS nofollow
-        | FROM mc ORDER BY doc_id""".stripMargin,
+        | FROM mc ORDER BY doc_id""".stripMargin),
 
-    // x154 mirror: the same four-anchor synthesis, DuckDB's own
-    // anchor-element extraction, open-tag slice, whitespace-token rel
-    // test, page-meta test, the absolute/root-relative resolve arms
-    // the fixture plants, and the identical rollup.
-    "x154_nofollow_edges" ->
+    // x154 — nofollow-aware link graph (r17): `rel="nofollow"` anchors
+    // and page-level meta-nofollow pages contribute NO ranking edges
+    // (the endorsement rule PageRank-class graphs run on), while plain
+    // anchors do. Four anchors per page (plain cross-site, rel=
+    // nofollow cross-site, rel="ugc nofollow" token list same-site,
+    // rel="noopener noreferrer" same-site — which must NOT count);
+    // every 7th page declares meta nofollow, excluding ALL its edges.
+    // Rolled up per (src_domain, dst_domain).
+    "x154_nofollow_edges" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val pages = d.select(col("doc_id"), nofollowBase.as("base"),
+        nofollowLinkFixture.as("html"))
+      val anchors = pages.select(col("base"),
+        HtmlOps.metaNofollow(col("html")).as("page_nofollow"),
+        explode(HtmlOps.extractAnchorRels(col("html"))).as("a"))
+      anchors
+        .select(col("base"), col("page_nofollow"),
+          col("a.nofollow").as("anchor_nofollow"),
+          UrlOps.canonicalizeUrl(UrlOps.resolveUrl(col("base"),
+            col("a.href"))).as("dst"))
+        .filter(col("dst").isNotNull)
+        .groupBy(UrlOps.domainOf(col("base")).as("src_domain"),
+          UrlOps.domainOf(col("dst")).as("dst_domain"))
+        .agg(count(lit(1)).as("n_edges"),
+          sum(when(!col("page_nofollow") && !col("anchor_nofollow"), 1L)
+            .otherwise(0L)).as("n_followed"),
+          sum(when(col("anchor_nofollow"), 1L).otherwise(0L))
+            .as("n_anchor_nofollow"),
+          sum(when(col("page_nofollow"), 1L).otherwise(0L))
+            .as("n_page_nofollow"))
+        .orderBy("src_domain", "dst_domain")
+    }, oracle =
+      // x154 mirror: the same four-anchor synthesis, DuckDB's own
+      // anchor-element extraction, open-tag slice, whitespace-token rel
+      // test, page-meta test, the absolute/root-relative resolve arms
+      // the fixture plants, and the identical rollup.
       s"""WITH nf1 AS (SELECT doc_id,
         |     'https://s' || (doc_id % 5)::VARCHAR || '.example-' ||
         |       (doc_id % 5)::VARCHAR || '.com/p/' || doc_id::VARCHAR
@@ -7586,15 +6277,61 @@ object ExtensionQueries {
         |     n_followed,
         |   sum(CASE WHEN anf THEN 1 ELSE 0 END)::BIGINT n_anchor_nofollow,
         |   sum(CASE WHEN pnf THEN 1 ELSE 0 END)::BIGINT n_page_nofollow
-        | FROM ax2 GROUP BY 1, 2 ORDER BY src_domain, dst_domain""".stripMargin,
+        | FROM ax2 GROUP BY 1, 2 ORDER BY src_domain, dst_domain""".stripMargin),
 
-    // x155 mirror: the same three-variant synthesis; the canonical is
-    // the article URL by construction for every variant (v=0 self,
-    // v=1 root-relative resolve, v=2 protocol-relative resolve), so
-    // the mirror groups on it directly — a Spark-side extraction or
-    // resolve defect lands on a different canonical and the hash
-    // catches it.
-    "x155_canonical_cluster" ->
+    // x155 — canonical-link clustering (r17; RFC 6596): URL variants
+    // that SYNTACTIC canonicalization cannot merge (?page=2 is a real
+    // query param, m.-host is a real host) all declare the same
+    // `<link rel="canonical">`, so declared-canonical clustering is
+    // the dedup tier ABOVE UrlOps.canonicalizeUrl. Three variants per
+    // article: the article itself (no canonical link — self by
+    // default), a ?page=2 variant with a ROOT-RELATIVE canonical
+    // href, and an m.-host variant with a PROTOCOL-RELATIVE one
+    // (href-before-rel attribute order) — both resolve through
+    // effectiveBase + resolveUrl like any reference.
+    "x155_canonical_cluster" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val v = col("doc_id") % 3
+      val gS = expr("doc_id div 3").cast("string")
+      val gm = expr("(doc_id div 3) % 5").cast("string")
+      val article = concat(lit("https://s"), gm, lit(".example-"), gm,
+        lit(".com/article/"), gS)
+      val pageUrl = when(v === 0, article)
+        .when(v === 1, concat(article, lit("?page=2")))
+        .otherwise(concat(lit("https://m.s"), gm, lit(".example-"), gm,
+          lit(".com/article/"), gS))
+      val canonTag = when(v === 1,
+          concat(lit("<link rel=\"canonical\" href=\"/article/"), gS,
+            lit("\">")))
+        .when(v === 2,
+          concat(lit("<link href=\"//s"), gm, lit(".example-"), gm,
+            lit(".com/article/"), gS, lit("\" rel=\"canonical\">")))
+        .otherwise(lit(""))
+      val html = concat(lit("<html><head>"), canonTag,
+        lit("</head><body><p>Variant "), v.cast("string"),
+        lit(" of article "), gS, lit(".</p></body></html>"))
+      d.select(pageUrl.as("url"), html.as("html"))
+        .select(col("url"),
+          UrlOps.canonicalizeUrl(coalesce(
+            UrlOps.resolveUrl(
+              UrlOps.effectiveBase(col("url"),
+                HtmlOps.baseHref(col("html"))),
+              HtmlOps.canonicalHref(col("html"))),
+            col("url"))).as("canonical"))
+        .groupBy("canonical")
+        .agg(count(lit(1)).as("n_variants"),
+          sum(when(col("url") === col("canonical"), 1L).otherwise(0L))
+            .as("n_self"),
+          min("url").as("first_variant"),
+          max("url").as("last_variant"))
+        .orderBy("canonical")
+    }, oracle =
+      // x155 mirror: the same three-variant synthesis; the canonical is
+      // the article URL by construction for every variant (v=0 self,
+      // v=1 root-relative resolve, v=2 protocol-relative resolve), so
+      // the mirror groups on it directly — a Spark-side extraction or
+      // resolve defect lands on a different canonical and the hash
+      // catches it.
       s"""WITH cc AS (SELECT doc_id, (doc_id % 3) v,
         |     (doc_id // 3) g, ((doc_id // 3) % 5) gm FROM documents),
         | cu AS (SELECT doc_id, v,
@@ -7612,12 +6349,38 @@ object ExtensionQueries {
         | SELECT article AS canonical, count(*)::BIGINT n_variants,
         |   sum(CASE WHEN url = article THEN 1 ELSE 0 END)::BIGINT n_self,
         |   min(url) first_variant, max(url) last_variant
-        | FROM cu GROUP BY article ORDER BY canonical""".stripMargin,
+        | FROM cu GROUP BY article ORDER BY canonical""".stripMargin),
 
-    // x156 mirror: the independently-recomputed page target (the x147
-    // convention — the byte round trips are the Spark side's to
-    // prove) plus the arm-determined charset the sniff must land on.
-    "x156_meta_charset" ->
+    // x156 — meta-charset sniffing (r17; WHATWG §13.2.3.2): most real
+    // servers send `Content-Type: text/html` with NO charset — the
+    // bytes then self-declare via `<meta charset>` or the legacy
+    // http-equiv form, and the HTTP header WINS when present. Three
+    // arms: headerless UTF-8 bytes + modern meta; headerless
+    // windows-1252 bytes + legacy meta; a header-wins conflict
+    // (header iso-8859-1 beats a planted meta utf-8 — mis-precedence
+    // would mojibake the accent line). Same WARC → HTTP → decode →
+    // C4 chain as x147; oracle = the independent recompute.
+    "x156_meta_charset" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val pages = WarcOps.responses(
+        warcMetaCharsetFixture(d), "file_id", "content")
+      val decoded = HttpOps.parseResponses(pages, "payload")
+        .filter(col("status_code") === 200 &&
+          col("content_type") === "text/html")
+        .select(uriDocId,
+          coalesce(col("charset"), HtmlOps.metaCharset(col("body")))
+            .as("charset_used"),
+          col("body"))
+        .select(col("doc_id"), col("charset_used"),
+          HttpOps.decodeBody(col("body"), col("charset_used")).as("html"))
+      HtmlOps.c4Pages(decoded, "doc_id", "html")
+        .join(decoded.select("doc_id", "charset_used"), Seq("doc_id"))
+        .select("doc_id", "charset_used", "n_lines", "text")
+        .orderBy("doc_id")
+    }, oracle =
+      // x156 mirror: the independently-recomputed page target (the x147
+      // convention — the byte round trips are the Spark side's to
+      // prove) plus the arm-determined charset the sniff must land on.
       s"""${accentPagesSql(Some(1))},
         | $htmlPagesSql
         | SELECT doc_id,
@@ -7626,14 +6389,31 @@ object ExtensionQueries {
         |     ELSE 'iso-8859-1' END AS charset_used,
         |   n_lines, text FROM pg
         | $c4PageWhereSql
-        | ORDER BY doc_id""".stripMargin,
+        | ORDER BY doc_id""".stripMargin),
 
-    // x157 mirror: the same synthesis, the shared strip/line CTEs,
-    // DuckDB's own per-domain line census (count DISTINCT pages per
-    // (domain, line), >= 3), NOT-EXISTS removal, and the same page
-    // tail WITHOUT the corpus keep-first dedup (domainCleanPages
-    // removes, never keeps-first).
-    "x157_domain_boilerplate" ->
+    // x157 — per-domain boilerplate-line removal (r17;
+    // HtmlOps.domainCleanPages — the site-granularity frequency rule
+    // of CCNet §3.1 / RefinedWeb §3.1): two footer sentences repeat on
+    // EVERY page of a domain (dropped from all of them, first page
+    // included — unlike x128's keep-first corpus dedup), while a
+    // pair-keyed promo line appears on exactly TWO same-domain pages
+    // (under minPages — kept on both). Unique article paragraphs must
+    // survive untouched.
+    "x157_domain_boilerplate" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val pages = d.select(col("doc_id"),
+        concat(lit("example-"), (col("doc_id") % 5).cast("string"),
+          lit(".com")).as("dom"),
+        boilerplateFixture.as("html"))
+      HtmlOps.domainCleanPages(pages, "doc_id", "html", "dom")
+        .select("doc_id", "n_lines", "text")
+        .orderBy("doc_id")
+    }, oracle =
+      // x157 mirror: the same synthesis, the shared strip/line CTEs,
+      // DuckDB's own per-domain line census (count DISTINCT pages per
+      // (domain, line), >= 3), NOT-EXISTS removal, and the same page
+      // tail WITHOUT the corpus keep-first dedup (domainCleanPages
+      // removes, never keeps-first).
       s"""WITH hb AS (SELECT doc_id,
         |     '<html><body><p>' ||
         |     replace(text, ' window ', '.</p><p>') || '.</p>' ||
@@ -7657,13 +6437,39 @@ object ExtensionQueries {
         |   FROM kl GROUP BY doc_id)
         | SELECT doc_id, n_lines, text FROM pg
         | $c4PageWhereSql
-        | ORDER BY doc_id""".stripMargin,
+        | ORDER BY doc_id""".stripMargin),
 
-    // x158 mirror: the synthesis constructs the templates the Spark
-    // side must COMPUTE (digit runs -> {n}, sorted query names) — a
-    // template-kernel defect lands on different strings and the hash
-    // catches it; the rollup is the same exact two-stage distinct.
-    "x158_trap_templates" ->
+    // x158 — crawler-trap detection (r17; CrawlOps.trapTemplates —
+    // Mercator §3.3's trap problem): per (domain, URL template), how
+    // many URLs minted vs distinct payloads served. Three spaces per
+    // domain: articles (every URL its own payload — never a trap), a
+    // calendar space (every URL the SAME payload — flags once the
+    // domain mints >= 20), and a session-id query space (3 payloads —
+    // the sorted-param-NAMES template collapses every sid). Integral
+    // basis points; exact two-stage distinct.
+    "x158_trap_templates" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val m = (col("doc_id") % 5).cast("string")
+      val site = concat(lit("https://s"), m, lit(".example-"), m,
+        lit(".com"))
+      val idS = col("doc_id").cast("string")
+      val urls = d.select(explode(array(
+          struct(concat(site, lit("/art/"), idS).as("url"),
+            md5(concat(lit("a"), idS)).as("digest")),
+          struct(concat(site, lit("/cal/2020/"), idS).as("url"),
+            md5(concat(lit("cal"), m)).as("digest")),
+          struct(concat(site, lit("/list?sid="), idS, lit("&page=1"))
+              .as("url"),
+            md5(concat(lit("s"), m, (col("doc_id") % 3).cast("string")))
+              .as("digest")))).as("e"))
+        .select(col("e.url").as("url"), col("e.digest").as("digest"))
+      CrawlOps.trapTemplates(urls)
+        .orderBy("reg_domain", "template")
+    }, oracle =
+      // x158 mirror: the synthesis constructs the templates the Spark
+      // side must COMPUTE (digit runs -> {n}, sorted query names) — a
+      // template-kernel defect lands on different strings and the hash
+      // catches it; the rollup is the same exact two-stage distinct.
       s"""WITH tu AS (
         |   SELECT (doc_id % 5) m, '/art/{n}' tmpl,
         |     md5('a' || doc_id::VARCHAR) digest FROM documents
@@ -7682,14 +6488,47 @@ object ExtensionQueries {
         |   (n_urls >= 20 AND
         |    ((n_digests * 10000) // greatest(n_urls, 1)) <= 2000)
         |     AS is_trap
-        | FROM g ORDER BY reg_domain, "template"""".stripMargin,
+        | FROM g ORDER BY reg_domain, "template"""".stripMargin),
 
-    // x159 mirror: the x149 capture synthesis with validator arms,
-    // DuckDB's own latest-capture window (same date-desc digest-desc
-    // tie-break), the declared-newer-beats-etag-beats-lastmod mode
-    // CASE, and the same integral priority chain with the +10000
-    // declared-newer bonus (every 5th URL's sitemap row).
-    "x159_revalidation_plan" ->
+    // x159 — conditional-revalidation planning (r17;
+    // CrawlOps.revalidationPlan — RFC 9111 §4.3.1): the next fetch of
+    // each stored URL carries If-None-Match when its LATEST capture
+    // had an ETag, If-Modified-Since when only Last-Modified,
+    // unconditional otherwise — ranked by the same capture-history
+    // priority as x149. The x149 three-capture synthesis, with ETags
+    // on a third of URLs and Last-Modified on two thirds (so every
+    // mode arm is populated and etag-beats-lastmod is exercised).
+    // r18 arm (VERDICT r17 #6): every 5th URL carries a sitemap
+    // lastmod NEWER than its last capture — declared_newer upgrades
+    // it to an UNCONDITIONAL fetch (even over an ETag: a conditional
+    // cannot 304 when the change is already evidenced), drops the
+    // validator, and boosts priority by 10000.
+    "x159_revalidation_plan" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val caps = captureHistory(d)
+        .withColumn("digest", md5(concat(col("doc_id").cast("string"),
+          lit("_v"), col("version").cast("string"))))
+        .withColumn("etag",
+          when(col("doc_id") % 3 === 0,
+            concat(lit("\"v"), col("k").cast("string"), lit("-"),
+              col("doc_id").cast("string"), lit("\"")))
+            .otherwise(lit(null).cast("string")))
+        .withColumn("last_modified",
+          when(col("doc_id") % 3 <= 1,
+            concat(lit("Wed, 0"), (lit(1) + col("k") * 2).cast("string"),
+              lit(" Jan 2020 00:00:00 GMT")))
+            .otherwise(lit(null).cast("string")))
+      val sitemap = d.filter(col("doc_id") % 5 === 0)
+        .select(docUrl.as("url"), lit("2020-02-10").as("lastmod"))
+      CrawlOps.revalidationPlan(caps, "2020-02-15",
+          sitemapLastmod = sitemap)
+        .orderBy("url")
+    }, oracle =
+      // x159 mirror: the x149 capture synthesis with validator arms,
+      // DuckDB's own latest-capture window (same date-desc digest-desc
+      // tie-break), the declared-newer-beats-etag-beats-lastmod mode
+      // CASE, and the same integral priority chain with the +10000
+      // declared-newer bonus (every 5th URL's sitemap row).
       s"""WITH caps AS (SELECT
         |     'https://example.com/doc/' || doc_id::VARCHAR AS url,
         |     '2020-01-' ||
@@ -7737,13 +6576,60 @@ object ExtensionQueries {
         |     ((n_changes * 10000) // greatest(span_days, 1)) +
         |     (CASE WHEN a.declared_newer THEN 10000 ELSE 0 END))::BIGINT
         |     priority
-        | FROM ag2 a JOIN l1 USING (url) ORDER BY url""".stripMargin,
+        | FROM ag2 a JOIN l1 USING (url) ORDER BY url""".stripMargin),
 
-    // x166 mirror: the independently-recomputed accent target (DuckDB
-    // cannot decode UTF-16 — the byte round trips are the Spark
-    // side's to prove) plus the arm-determined charset the precedence
-    // chain must land on.
-    "x166_bom_charset" ->
+    // x165 — deduplicated WARC store round trip (r17; WARC 1.1
+    // §6.7.2, the Common Crawl storage convention): write the x149
+    // capture history as a DEDUPLICATED store — first capture per
+    // payload digest a full response, every refetch of unchanged
+    // content a body-less revisit — then parse back, resolve the
+    // revisits by digest, and recover every capture's payload from
+    // its original. A third of URLs change every capture (no
+    // revisits), a third once (one revisit then a new response), a
+    // third never (two revisits); row-identity of the recovered
+    // payloads proves the write/resolve pair is a lossless inverse.
+    // x166 — BOM charset precedence (r17; WHATWG §13.2.3.2's ACTUAL
+    // order: byte-order mark > Content-Type header > meta): a UTF-8
+    // BOM must beat a LYING iso-8859-1 header (mis-precedence
+    // mojibakes the accent line), and UTF-16LE/BE bodies — whose
+    // interleaved NULs make header/meta sniffing useless, exactly why
+    // the BOM outranks them — must decode through their BOMs with the
+    // leading U+FEFF stripped. Fourth arm = no BOM, header utf-8 (the
+    // coalesce falls through). All four arms land row-identical on
+    // the same recomputed C4 target.
+    "x166_bom_charset" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val bomArm = col("doc_id") % 4
+      val view = when(bomArm === 0, concat(lit("ï»¿"),
+          decode(encode(accentPage, "UTF-8"), "ISO-8859-1")))
+        .when(bomArm === 1, concat(lit("ÿþ"),
+          decode(encode(accentPage, "UTF-16LE"), "ISO-8859-1")))
+        .when(bomArm === 2, concat(lit("þÿ"),
+          decode(encode(accentPage, "UTF-16BE"), "ISO-8859-1")))
+        .otherwise(decode(encode(accentPage, "UTF-8"), "ISO-8859-1"))
+      val ct = when(bomArm === 0, lit("text/html; charset=iso-8859-1"))
+        .when(bomArm === 3, lit("text/html; charset=utf-8"))
+        .otherwise(lit("text/html"))
+      val msgs = d.select(col("doc_id"),
+        concat(lit("HTTP/1.1 200 OK\r\nContent-Type: "), ct,
+          lit("\r\n\r\n"), view).as("msg"))
+      val routed = HttpOps.parseResponses(msgs, "msg")
+        .select(col("doc_id"),
+          coalesce(HttpOps.bomCharset(col("body")), col("charset"),
+            HtmlOps.metaCharset(col("body"))).as("charset_used"),
+          col("body"))
+        .select(col("doc_id"), col("charset_used"),
+          HttpOps.stripBom(HttpOps.decodeBody(col("body"),
+            col("charset_used"))).as("html"))
+      HtmlOps.c4Pages(routed, "doc_id", "html")
+        .join(routed.select("doc_id", "charset_used"), Seq("doc_id"))
+        .select("doc_id", "charset_used", "n_lines", "text")
+        .orderBy("doc_id")
+    }, oracle =
+      // x166 mirror: the independently-recomputed accent target (DuckDB
+      // cannot decode UTF-16 — the byte round trips are the Spark
+      // side's to prove) plus the arm-determined charset the precedence
+      // chain must land on.
       s"""${accentPagesSql(None)},
         | $htmlPagesSql
         | SELECT doc_id,
@@ -7752,14 +6638,44 @@ object ExtensionQueries {
         |     ELSE 'utf-8' END AS charset_used,
         |   n_lines, text FROM pg
         | $c4PageWhereSql
-        | ORDER BY doc_id""".stripMargin,
+        | ORDER BY doc_id""".stripMargin),
 
-    // x165 mirror: the same capture/payload synthesis, DuckDB's own
-    // first-per-digest window (same date/url order), the same
-    // response/revisit classification, and payload recovery through
-    // the digest join — the store strings themselves are the Spark
-    // side's to prove.
-    "x165_dedup_store" ->
+    "x165_dedup_store" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val caps = storeCaptures(d)
+      val recs = WarcOps.dedupStoreRecords(caps)
+        .withColumn("file_id", expr("doc_id div 8"))
+      val files = respread(recs.groupBy("file_id")
+        .agg(concat_ws("", array_sort(collect_list(
+            struct(col("doc_id"), col("k"), col("record"))))
+          .getField("record")).as("content")))
+      // parsed feeds THREE consumers (the response rows, the revisit
+      // resolution, and the revisit payload join) — without the barrier
+      // the synth+assembly+parse chain re-ran per consumer (r20, the
+      // x125 multi-consumer discipline; fixture-file-count-sized rows)
+      val parsed = WarcOps.parseRecords(files, "file_id", "content")
+        .localCheckpoint()
+      val resp = parsed.filter(col("warc_type") === "response")
+      val responses = resp.select(col("target_uri").as("url"),
+        col("warc_date").as("capture_date"),
+        lit("response").as("warc_type"),
+        lit(null).cast("string").as("original_uri"),
+        col("payload").as("payload_text"))
+      val revisits = WarcOps.resolveRevisits(parsed)
+        .join(resp.select(col("payload_digest"),
+          col("payload").as("payload_text")), Seq("payload_digest"))
+        .select(col("target_uri").as("url"),
+          col("warc_date").as("capture_date"),
+          lit("revisit").as("warc_type"), col("original_uri"),
+          col("payload_text"))
+      responses.unionByName(revisits)
+        .orderBy("url", "capture_date")
+    }, oracle =
+      // x165 mirror: the same capture/payload synthesis, DuckDB's own
+      // first-per-digest window (same date/url order), the same
+      // response/revisit classification, and payload recovery through
+      // the digest join — the store strings themselves are the Spark
+      // side's to prove.
       s"""WITH ${captureHistorySql("dsc")},
         | dsp AS (SELECT url, capture_date,
         |     'Body v' || ver::VARCHAR || ' of doc ' ||
@@ -7780,11 +6696,34 @@ object ExtensionQueries {
         |     AS original_uri,
         |   o.orig_payload AS payload_text
         | FROM dsr r JOIN dso o USING (digest)
-        | ORDER BY url, capture_date""".stripMargin,
+        | ORDER BY url, capture_date""".stripMargin),
 
-    // x167 mirror: the x165 synthesis + window, rolled up per change
-    // class with the same integral savings arithmetic.
-    "x167_store_savings" ->
+    // x167 — dedup-store savings audit (r17): the table a storage
+    // owner reads before turning revisit-writing on — per change
+    // class (never / once / every-capture), how many payload chars
+    // the dedup store avoided writing. Expected shape by
+    // construction: the always-changing third saves 0 bp, the
+    // change-once third ~1/3 of its payload bytes, the never-changing
+    // third ~2/3 (two of three captures collapse to revisits).
+    "x167_store_savings" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val caps = storeCaptures(d)
+      WarcOps.dedupStoreRecords(caps)
+        .groupBy((col("doc_id") % 3).as("change_class"))
+        .agg(count(lit(1)).as("n_records"),
+          sum(when(col("is_revisit"), 1L).otherwise(0L))
+            .as("n_revisits"),
+          sum(length(col("payload")).cast(LongType)).as("payload_chars"),
+          sum(when(!col("is_revisit"),
+            length(col("payload")).cast(LongType)).otherwise(0L))
+            .as("stored_payload_chars"))
+        .withColumn("saved_bp", expr(
+          "(payload_chars - stored_payload_chars) * 10000" +
+            " div greatest(payload_chars, 1L)"))
+        .orderBy("change_class")
+    }, oracle =
+      // x167 mirror: the x165 synthesis + window, rolled up per change
+      // class with the same integral savings arithmetic.
       s"""WITH ssc AS (SELECT doc_id, t.k,
         |     'https://example.com/doc/' || doc_id::VARCHAR AS url,
         |     '2020-01-' ||
@@ -7812,14 +6751,39 @@ object ExtensionQueries {
         |   stored_payload_chars,
         |   ((payload_chars - stored_payload_chars) * 10000 //
         |     greatest(payload_chars, 1))::BIGINT AS saved_bp
-        | FROM ssg ORDER BY change_class""".stripMargin,
+        | FROM ssg ORDER BY change_class""".stripMargin),
 
-    // x164 mirror: the independently-recomputed C4 accent target (the
-    // x150 convention), with Content-Length as DuckDB's own UTF-8
-    // byte count (octet_length) and length_ok true by construction —
-    // the Spark side must land the SAME bytes through write → split →
-    // slice → decode.
-    "x164_wet_roundtrip" ->
+    // x164 — WET conversion-record round trip (r17): the OUTPUT
+    // direction of the first mile — extracted pages re-wrapped as
+    // WARC `conversion` records (the Common Crawl WET artifact),
+    // grouped into files, then parsed BACK through the same ingest
+    // tier and utf-8-decoded. Text carries real non-ASCII (the accent
+    // line), so Content-Length is a true BYTE count via the UTF-8
+    // view; row-identity of the recovered text against the
+    // independently-recomputed C4 target proves write → parse →
+    // decode lossless, and length_ok=true on every row proves the
+    // byte accounting.
+    "x164_wet_roundtrip" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val pages = HtmlOps.c4Pages(
+        d.select(col("doc_id"), accentPage.as("html")), "doc_id", "html")
+      val wet = pages.select(col("doc_id"),
+        expr("doc_id div 8").as("file_id"),
+        WarcOps.conversionRecord(docUrl, lit("2020-02-01T00:00:00Z"),
+          col("text")).as("r"))
+      val files = warcFiles(wet, "doc_id")
+      WarcOps.parseRecords(files, "file_id", "content")
+        .filter(col("warc_type") === "conversion")
+        .select(uriDocId,
+          col("refers_to"), col("content_length"), col("length_ok"),
+          HttpOps.decodeBody(col("payload"), lit("utf-8")).as("text"))
+        .orderBy("doc_id")
+    }, oracle =
+      // x164 mirror: the independently-recomputed C4 accent target (the
+      // x150 convention), with Content-Length as DuckDB's own UTF-8
+      // byte count (octet_length) and length_ok true by construction —
+      // the Spark side must land the SAME bytes through write → split →
+      // slice → decode.
       s"""${accentPagesSql(None)},
         | $htmlPagesSql
         | SELECT doc_id,
@@ -7828,12 +6792,49 @@ object ExtensionQueries {
         |   true AS length_ok, text
         | FROM pg
         | $c4PageWhereSql
-        | ORDER BY doc_id""".stripMargin,
+        | ORDER BY doc_id""".stripMargin),
 
-    // x162 mirror: the same five-arm synthesis (signature bytes via
-    // chr()), DuckDB's own prefix/heuristic sniff CASE, the same
-    // override precedence, the same mislabel test.
-    "x162_media_sniff" ->
+    // x162 — magic-byte media-type sniffing (r17; the WHATWG
+    // MIME-sniffing idea at the signature tier): real servers
+    // mislabel constantly — a pipeline that trusts Content-Type
+    // routes PDFs and gzip blobs into the HTML tier. Five arms: an
+    // honest html page; a PDF served as text/html (the lying server —
+    // the signature must OVERRIDE); a PNG served as image/png
+    // (agreement); a gzip blob served as text/plain (override); and
+    // an html page served as application/octet-stream (the sniffable
+    // declaration — the `<` heuristic rescues it). Signature bytes
+    // travel as latin1-view chars, constructed with chr() in the
+    // mirror.
+    "x162_media_sniff" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val arm = col("doc_id") % 5
+      val idS = col("doc_id").cast("string")
+      val body = when(arm === 0,
+          concat(lit("<html><body>page "), idS, lit("</body></html>")))
+        .when(arm === 1, concat(lit("%PDF-1.7 obj "), idS))
+        .when(arm === 2,
+          concat(lit("\u0089PNG\r\n\u001a\nIHDRfake"), idS))
+        .when(arm === 3, concat(lit("\u001f\u008bgzblob "), idS))
+        .otherwise(concat(lit("  <!DOCTYPE html><p>octet "), idS,
+          lit("</p>")))
+      val ct = when(arm === 0 || arm === 1, lit("text/html"))
+        .when(arm === 2, lit("image/png"))
+        .when(arm === 3, lit("text/plain"))
+        .otherwise(lit("application/octet-stream"))
+      val msgs = d.select(col("doc_id"),
+        concat(lit("HTTP/1.1 200 OK\r\nContent-Type: "), ct,
+          lit("\r\n\r\n"), body).as("msg"))
+      HttpOps.parseResponses(msgs, "msg")
+        .select(col("doc_id"), col("content_type").as("declared"),
+          HttpOps.sniffMediaType(col("body")).as("sniffed"))
+        .withColumn("final_type",
+          HttpOps.effectiveMediaType(col("declared"), col("sniffed")))
+        .withColumn("mislabeled", col("final_type") =!= col("declared"))
+        .orderBy("doc_id")
+    }, oracle =
+      // x162 mirror: the same five-arm synthesis (signature bytes via
+      // chr()), DuckDB's own prefix/heuristic sniff CASE, the same
+      // override precedence, the same mislabel test.
       s"""WITH sm AS (SELECT doc_id,
         |     CASE (doc_id % 5)
         |       WHEN 0 THEN '<html><body>page ' || doc_id::VARCHAR ||
@@ -7880,12 +6881,44 @@ object ExtensionQueries {
         |   FROM sn)
         | SELECT doc_id, declared, sniffed, final_type,
         |   (final_type <> declared) AS mislabeled
-        | FROM sf ORDER BY doc_id""".stripMargin,
+        | FROM sf ORDER BY doc_id""".stripMargin),
 
-    // x163 mirror: the same four-arm synthesis, DuckDB's own title
-    // extraction (same regex + whitespace collapse), the same probe
-    // join and precedence.
-    "x163_soft404" ->
+    // x163 — soft-404 detection (r17; Bar-Yossef et al. WWW'04): 200
+    // answers that ARE error pages. Four arms per domain: a normal
+    // article (clean); a page whose digest equals the domain's
+    // known-bogus-URL probe digest (probe-digest — whatever its
+    // title); a "Page Not Found" title with a unique digest
+    // (title-pattern); and a "does not exist" phrasing (the second
+    // pattern arm). Probe table broadcast; precedence probe > title.
+    "x163_soft404" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val m = (col("doc_id") % 5).cast("string")
+      val arm = col("doc_id") % 4
+      val idS = col("doc_id").cast("string")
+      val title = when(arm === 2, lit("Page Not Found"))
+        .when(arm === 3,
+          lit("Oops, this article does not exist anymore"))
+        .otherwise(concat(lit("Article "), idS))
+      val pages = d.select(
+        concat(lit("https://s"), m, lit(".example-"), m, lit(".com/a/"),
+          idS).as("url"),
+        concat(lit("example-"), m, lit(".com")).as("reg_domain"),
+        when(arm === 1, md5(concat(lit("err"), m)))
+          .otherwise(md5(concat(lit("p"), idS))).as("digest"),
+        concat(lit("<html><head><title>"), title,
+          lit("</title></head><body>x</body></html>")).as("html"))
+      val probes = d.select(
+          concat(lit("example-"), m, lit(".com")).as("reg_domain"))
+        .distinct()
+        .withColumn("probe_digest",
+          md5(concat(lit("err"), regexp_extract(col("reg_domain"),
+            "example-([0-9]+)", 1))))
+      CrawlOps.soft404Flags(pages, probes)
+        .orderBy("url")
+    }, oracle =
+      // x163 mirror: the same four-arm synthesis, DuckDB's own title
+      // extraction (same regex + whitespace collapse), the same probe
+      // join and precedence.
       s"""WITH sp AS (SELECT doc_id, (doc_id % 5) m, (doc_id % 4) arm,
         |     CASE (doc_id % 4)
         |       WHEN 2 THEN 'Page Not Found'
@@ -7917,13 +6950,25 @@ object ExtensionQueries {
         |   FROM pg LEFT JOIN pr USING (reg_domain))
         | SELECT url, reg_domain,
         |   (soft404_reason IS NOT NULL) AS soft404, soft404_reason
-        | FROM fl ORDER BY url""".stripMargin,
+        | FROM fl ORDER BY url""".stripMargin),
 
-    // x161 mirror: the x142 link synthesis, canon chain, and page
-    // edge CTEs, then TWO unrolled HITS iterations — each half-step a
-    // keyed join + sum + 1-row max normalization with the same
-    // integral div.
-    "x161_hits" ->
+    // x161 — HITS hubs & authorities (r17; Kleinberg 1999): the OTHER
+    // classic link signal — hubs (directory pages pointing at good
+    // authorities) vs authorities (content pages good hubs point at),
+    // the two lists a seed-selection policy wants separately. Exact
+    // integer power iteration with max-normalization per half-step
+    // (order-preserving and engine-portable where the textbook L2
+    // norm is not); same page-level edge stream as x142; 2 iterations
+    // unrolled in the mirror.
+    "x161_hits" -> QueryCase({ (s, dir) =>
+      val edges = pageLinkEdges(spread(t(s, dir, "documents")))
+      GraphOps.hitsInt(edges, iterations = 2)
+        .orderBy("node")
+    }, oracle =
+      // x161 mirror: the x142 link synthesis, canon chain, and page
+      // edge CTEs, then TWO unrolled HITS iterations — each half-step a
+      // keyed join + sum + 1-row max normalization with the same
+      // integral div.
       s"""WITH $linkSynthCtesSql,
         | ${urlCanonCtesOver("lr", "doc_id")},
         | e0 AS (SELECT lb.base AS src, u.canon_url AS dst
@@ -7960,13 +7005,34 @@ object ExtensionQueries {
         |   FROM nodes n LEFT JOIN h2r USING (node) CROSS JOIN h2m)
         | SELECT n.node, a2.a AS authority, h2.h AS hub
         | FROM nodes n JOIN a2 USING (node) JOIN h2 USING (node)
-        | ORDER BY node""".stripMargin,
+        | ORDER BY node""".stripMargin),
 
-    // x160 mirror: the x142 link synthesis and canon chain, collapsed
-    // to inter-domain edges (weight = page-edge count), then THREE
-    // unrolled integer power iterations with the same base/damping
-    // constants.
-    "x160_domain_rank" ->
+    // x160 — domain-level PageRank (r17): collapse the page link
+    // graph to registered domains (inter-domain edges only, weight =
+    // page-edge count) and run the same exact integer power iteration
+    // — the domain ranking crawl schedulers actually prioritize by
+    // (Common Crawl publishes exactly this artifact). Same link
+    // synthesis as x142; 3 iterations over the 6-node domain graph.
+    "x160_domain_rank" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val pages = d.select(col("doc_id"), linkBase.as("base"),
+        linkHtmlFixture.as("html"))
+      val links = resolvedCanon(pages.select(col("base"),
+          explode(HtmlOps.extractLinks(col("html"))).as("ref")),
+        Seq("base"), "ref")
+      val domEdges = links
+        .select(UrlOps.domainOf(col("base")).as("src"),
+          UrlOps.domainOf(col("canon_url")).as("dst"))
+        .filter(col("src") =!= col("dst"))
+        .groupBy("src", "dst")
+        .agg(count(lit(1)).as("w"))
+      GraphOps.pageRankInt(domEdges, iterations = 3)
+        .orderBy("node")
+    }, oracle =
+      // x160 mirror: the x142 link synthesis and canon chain, collapsed
+      // to inter-domain edges (weight = page-edge count), then THREE
+      // unrolled integer power iterations with the same base/damping
+      // constants.
       s"""WITH $linkSynthCtesSql,
         | ${urlCanonCtesOver("lr", "doc_id")},
         | de0 AS (SELECT lb.src_domain AS s, u.reg_domain AS t
@@ -7999,12 +7065,35 @@ object ExtensionQueries {
         | dr3 AS (SELECT n.node,
         |     (150000 + (85 * coalesce(di3.s, 0)) // 100)::BIGINT r
         |   FROM dn n LEFT JOIN di3 USING (node))
-        | SELECT node, r AS rank FROM dr3 ORDER BY node""".stripMargin,
+        | SELECT node, r AS rank FROM dr3 ORDER BY node""".stripMargin),
 
-    // x168 mirror: the same three planted texts, the x18 trigram
-    // langId, an inline profile VALUES table, the Gopher signal
-    // arithmetic (all integral), and the three funnel stages unioned.
-    "x168_lang_gopher" -> {
+    // x168 — LANGUAGE-AWARE Gopher battery (r18, VERDICT r17 #2 — the
+    // CCNet discipline): three planted language arms (en/fr/de,
+    // labeled by the REAL x18 langId), filtered once under the
+    // English-only config and once under per-language profiles, with
+    // the x105 per-group funnel showing the difference: the English
+    // config silently eats BOTH non-English arms (their stopword
+    // probes miss), the language-aware pass keeps all three. Profiles
+    // broadcast; the corpus never shuffles for the filter (plan-gated).
+    "x168_lang_gopher" -> QueryCase({ (s, dir) =>
+      import s.implicits._
+      val d = spread(t(s, dir, "documents"))
+      val txt = when(col("doc_id") % 3 === 0, lit(langEnText))
+        .when(col("doc_id") % 3 === 1, lit(langFrText))
+        .otherwise(lit(langDeText))
+      val docs = d.select(col("doc_id"), txt.as("text"))
+      val lang = TextOps.langId(docs)
+        .select(col("doc_id"), col("text"), col("pred_lang").as("lang"))
+      val profiles = Seq(
+        ("en", TextOps.GopherStopProbe, 2L, 10L, 100000L, 300L, 1000L, 8000L),
+        ("fr", langFrStops, 2L, 10L, 100000L, 250L, 1000L, 8000L),
+        ("de", langDeStops, 2L, 10L, 100000L, 250L, 1000L, 8000L))
+        .toDF(GopherProfileCols: _*)
+      gopherFunnel(lang, profiles)
+    }, oracle = {
+      // x168 mirror: the same three planted texts, the x18 trigram
+      // langId, an inline profile VALUES table, the Gopher signal
+      // arithmetic (all integral), and the three funnel stages unioned.
       // relational trigram scoring (triScoreCtesSql — r19)
       val engArr = sqlArr(TextOps.GopherStopProbe)
       s"""WITH d AS (SELECT doc_id,
@@ -8046,13 +7135,34 @@ object ExtensionQueries {
         |     AND alpha_bp >= 8000 AND sym_bp <= 1000
         |     AND lang_stops >= msh)
         | $gopherFunnelSql""".stripMargin
-    },
+    }),
 
-    // x169 mirror: the same en/ja page synthesis, the SAME strip/line
-    // CTEs as x127 (htmlStripCtesSql — the ONE definition, used through
-    // `ln`; its English `kept` tail is unused here), then the
-    // language-parameterized line rules over an inline profile table.
-    "x169_c4_lang_lines" ->
+    // x169 — LANGUAGE-AWARE C4 line rules (r18, the x168 sibling at
+    // the LINE tier): an en/ja page fixture through c4KeptLinesByLang —
+    // the English terminal-punctuation and ≥3-words rules drop EVERY
+    // line of a space-free Japanese page (sentences end in 。 and
+    // space-split to one "word"); the ja profile (term 。！？」,
+    // min_line_words 1, min_line_chars 3) keeps exactly the real
+    // sentences. The en arm carries NO profile row, proving the
+    // English-defaults fallback bit-for-bit.
+    "x169_c4_lang_lines" -> QueryCase({ (s, dir) =>
+      import s.implicits._
+      val d = spread(t(s, dir, "documents"))
+      val arm = col("doc_id") % 2
+      val docs = d.select(col("doc_id"),
+        when(arm === 0, lit("en")).otherwise(lit("ja")).as("lang"),
+        when(arm === 0, lit(langEnHtml)).otherwise(lit(langJaHtml))
+          .as("html"))
+      val profiles = Seq(
+        ("ja", Seq("。", "！", "？", "」"), 1L, 3L))
+        .toDF("lang", "term_chars", "min_line_words", "min_line_chars")
+      HtmlOps.c4KeptLinesByLang(docs, "doc_id", "html", profiles)
+        .orderBy("doc_id", "line_no")
+    }, oracle =
+      // x169 mirror: the same en/ja page synthesis, the SAME strip/line
+      // CTEs as x127 (htmlStripCtesSql — the ONE definition, used through
+      // `ln`; its English `kept` tail is unused here), then the
+      // language-parameterized line rules over an inline profile table.
       s"""WITH d0 AS (SELECT doc_id,
         |     CASE (doc_id % 2) WHEN 0 THEN 'en' ELSE 'ja' END AS lang,
         |     CASE (doc_id % 2) WHEN 0 THEN '$langEnHtml'
@@ -8064,15 +7174,57 @@ object ExtensionQueries {
         |     ('ja', ['。','！','？','」'], 1, 3))
         |   p(lang, term_chars, min_line_words, min_line_chars)),
         | $c4LangLinesSql
-        | ORDER BY doc_id, line_no""".stripMargin,
+        | ORDER BY doc_id, line_no""".stripMargin),
 
-    // x170 mirror: the recovered WAT fields are the Spark side's to
-    // prove (DuckDB cannot replay the WARC envelope or Spark's JSON
-    // serialization) — the oracle independently recomputes every
-    // TARGET: the same link synthesis (linkSynthCtesSql, the ONE
-    // definition), the links list in document order, the em-dash
-    // title, and the constant header; length_ok true by construction.
-    "x170_wat_roundtrip" ->
+    // x170 — WAT metadata records (r18, VERDICT r17 #3): the third leg
+    // of the Common Crawl WARC/WAT/WET artifact triple — per-page JSON
+    // metadata (links, title, headers) wrapped as WARC `metadata`
+    // records, grouped into files, then parsed BACK through the same
+    // ingest tier, utf-8-decoded, and from_json'd. The title carries a
+    // real non-ASCII em dash, so Content-Length is a true BYTE count
+    // (length_ok=true on every row proves the accounting); row-identity
+    // of the recovered fields against the independently-recomputed
+    // targets proves write → parse → decode → JSON-decode lossless.
+    "x170_wat_roundtrip" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val idS = col("doc_id").cast("string")
+      val html = concat(lit("<head><title>Page "), idS,
+        lit(" — News</title></head>"), linkHtmlFixture)
+      val meta = d.select(col("doc_id"), linkBase.as("uri"),
+        html.as("html"))
+        .select(col("doc_id"), col("uri"),
+          HtmlOps.title(col("html")).as("title"),
+          HtmlOps.extractLinks(col("html")).as("links"),
+          map(lit("content-type"), lit("text/html"),
+            lit("status"), lit("200")).as("headers"))
+      val wat = meta.select(col("doc_id"),
+        expr("doc_id div 8").as("file_id"),
+        WarcOps.watRecord(col("uri"), lit("2020-03-01T00:00:00Z"),
+          to_json(struct(col("uri"), col("title"), col("links"),
+            col("headers")))).as("r"))
+      val files = warcFiles(wat, "doc_id")
+      WarcOps.parseRecords(files, "file_id", "content")
+        .filter(col("warc_type") === "metadata")
+        .withColumn("j", HttpOps.decodeBody(col("payload"), lit("utf-8")))
+        .withColumn("m", expr("from_json(j, 'uri STRING, title STRING, " +
+          "links ARRAY<STRING>, headers MAP<STRING,STRING>')"))
+        .select(
+          expr("CAST(regexp_extract(target_uri, '/dir/page/([0-9]+)$', 1)" +
+            " AS BIGINT)").as("doc_id"),
+          col("target_uri").as("uri"),
+          col("m.title").as("title"),
+          size(col("m.links")).cast(LongType).as("n_links"),
+          concat_ws("|", col("m.links")).as("links"),
+          element_at(col("m.headers"), "content-type").as("content_type"),
+          col("length_ok"))
+        .orderBy("doc_id")
+    }, oracle =
+      // x170 mirror: the recovered WAT fields are the Spark side's to
+      // prove (DuckDB cannot replay the WARC envelope or Spark's JSON
+      // serialization) — the oracle independently recomputes every
+      // TARGET: the same link synthesis (linkSynthCtesSql, the ONE
+      // definition), the links list in document order, the em-dash
+      // title, and the constant header; length_ok true by construction.
       s"""WITH $linkSynthCtesSql,
         | wl AS (SELECT doc_id, base,
         |     list_filter(list_transform(regexp_extract_all(html,
@@ -8084,14 +7236,49 @@ object ExtensionQueries {
         |   len(links)::BIGINT AS n_links,
         |   array_to_string(links, '|') AS links,
         |   'text/html' AS content_type, true AS length_ok
-        | FROM wl ORDER BY doc_id""".stripMargin,
+        | FROM wl ORDER BY doc_id""".stripMargin),
 
-    // x171 mirror: the same hub synthesis, six per-host candidates,
-    // the per-HOST cap-4 window; no robots table touches these
-    // domains so the window is the only gate. All candidates are
-    // misses (the corpus holds only hubs) — n_fetched 0 by
-    // construction, hop 2 empty.
-    "x171_crawl_per_host" ->
+    // x171 — per-HOST politeness (r18, VERDICT r17 #5): two hosts on
+    // one registered domain schedule INDEPENDENTLY — ten hub pages on
+    // blog./shop. subdomains of five domains, each linking six URLs on
+    // its own host; with the cap keyed on host every (domain, host)
+    // slot window fills to 4 (8 scheduled per domain), where a
+    // domain-keyed cap would stop at 4 total. Robots cover a dummy
+    // domain only (absent domains are unrestricted — RFC 9309), so
+    // the window is the only gate.
+    "x171_crawl_per_host" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val hubs = d.filter(col("doc_id") < 10)
+        .select(col("doc_id"), (col("doc_id") % 5).cast("string").as("m"),
+          when(expr("doc_id div 5") === 0, lit("blog"))
+            .otherwise(lit("shop")).as("sub"))
+        .withColumn("origin", concat(lit("https://"), col("sub"),
+          lit(".example-"), col("m"), lit(".com")))
+      val pages = hubs.select(
+        concat(col("origin"), lit("/hub")).as("canon_url"),
+        concat(lit("<html><body>"),
+          concat_ws("", transform(sequence(lit(0), lit(5)),
+            k => concat(lit("<a href=\"/a/"), k.cast("string"),
+              lit("\">l</a>")))),
+          lit("</body></html>")).as("html"))
+      val seeds = pages.select("canon_url")
+      val rules = RobotsOps.parseRules(
+        d.sparkSession.range(1)
+          .select(lit("unrelated.example").as("reg_domain"),
+            lit("User-agent: *\nDisallow: /private\n").as("robots_txt")),
+        "graftbot")
+      CrawlOps.crawlFrontierIterate(pages, seeds, rules, maxHops = 2)
+        .groupBy("hop", "reg_domain", "host")
+        .agg(count(lit(1)).as("n_scheduled"),
+          sum(when(col("fetched"), 1L).otherwise(0L)).as("n_fetched"),
+          min("canon_url").as("first_url"))
+        .orderBy("hop", "reg_domain", "host")
+    }, oracle =
+      // x171 mirror: the same hub synthesis, six per-host candidates,
+      // the per-HOST cap-4 window; no robots table touches these
+      // domains so the window is the only gate. All candidates are
+      // misses (the corpus holds only hubs) — n_fetched 0 by
+      // construction, hop 2 empty.
       s"""WITH hb AS (SELECT doc_id, (doc_id % 5)::VARCHAR m,
         |     (CASE WHEN doc_id // 5 = 0 THEN 'blog' ELSE 'shop' END) sub
         |   FROM documents WHERE doc_id < 10),
@@ -8110,18 +7297,44 @@ object ExtensionQueries {
         |   count(*)::BIGINT n_scheduled, 0::BIGINT n_fetched,
         |   min(canon_url) first_url
         | FROM sched WHERE rn <= 4 GROUP BY reg_domain, host
-        | ORDER BY hop, reg_domain, host""".stripMargin,
+        | ORDER BY hop, reg_domain, host""".stripMargin),
 
-    // x172 mirror: the same seven planted texts (incl. the r19
-    // mixed-script arm), per-script codepoint counts via the same
-    // literal BMP character-class ranges (RE2 and java.util.regex
-    // agree on literal ranges; both engines' length() counts
-    // codepoints on BMP text), the same SHARE-gated script precedence
-    // (multiply form — integer-exact), and the x18 trigram
-    // struct-argmax over the LATIN profile group for the
-    // fall-through (no non-latin-alphabet arm is planted here — x173
-    // exercises the per-script routing).
-    "x172_lang_router" -> {
+    // x172 — the COMPLETE language router (r18, share-thresholded r19 —
+    // closes x18's declared CJK boundary now that the legacy-charset
+    // decode lands CJK pages in the corpus): Unicode-SCRIPT evidence
+    // first (kana → ja, hangul → ko, thai → th, han-only → zh — exact
+    // codepoint counts per block, each arm gated on the script holding
+    // ≥ ScriptShareBp of non-whitespace codepoints), the x18 trigram
+    // tier for text the router calls und. Seven planted arms: ja
+    // (kana+kanji), ko, zh (han only), th, the x168 en/fr texts riding
+    // the trigram tier, and (r19, VERDICT r18 #1) the MIXED-SCRIPT arm —
+    // an English page quoting one kana phrase, which the r18
+    // absolute-count precedence flipped to ja and which must now stay
+    // en — every route populated, both evidence tiers in the output.
+    "x172_lang_router" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val arm = col("doc_id") % 7
+      val txt = when(arm === 0, lit(langJaText))
+        .when(arm === 1, lit(langKoText))
+        .when(arm === 2, lit(langZhText))
+        .when(arm === 3, lit(langThText))
+        .when(arm === 4, lit(langEnText))
+        .when(arm === 5, lit(langFrText))
+        .otherwise(lit(langEnMixedText))
+      TextOps.langIdRouted(d.select(col("doc_id"), txt.as("text")))
+        .select("doc_id", "n_hira", "n_kata", "n_hangul", "n_han",
+          "n_thai", "script_lang", "pred_lang", "pred_hits")
+        .orderBy("doc_id")
+    }, oracle = {
+      // x172 mirror: the same seven planted texts (incl. the r19
+      // mixed-script arm), per-script codepoint counts via the same
+      // literal BMP character-class ranges (RE2 and java.util.regex
+      // agree on literal ranges; both engines' length() counts
+      // codepoints on BMP text), the same SHARE-gated script precedence
+      // (multiply form — integer-exact), and the x18 trigram
+      // struct-argmax over the LATIN profile group for the
+      // fall-through (no non-latin-alphabet arm is planted here — x173
+      // exercises the per-script routing).
       s"""WITH d AS (SELECT doc_id,
         |     CASE (doc_id % 7) WHEN 0 THEN '$langJaText'
         |       WHEN 1 THEN '$langKoText'
@@ -8146,13 +7359,40 @@ object ExtensionQueries {
         | FROM sl s LEFT JOIN hitg hg ON hg.doc_id = s.doc_id
         |   AND hg.grp = $routedGrpSql
         | ORDER BY s.doc_id""".stripMargin
-    },
+    }),
 
-    // x173 mirror: the same eleven planted texts, the same share-gated
-    // script CASE, and the PER-GROUP trigram argmax — one list_max per
-    // script group, routed by the script label exactly like
-    // langIdRouted's allowed-set filter.
-    "x173_script_router_ext" -> {
+    // x173 — the NON-LATIN alphabetic web + the broadened latin tier
+    // (r19, VERDICT r18 #2/#4): eleven planted arms — ru/uk (Cyrillic),
+    // ar/fa (Arabic), el (Greek), he (Hebrew), hi (Devanagari), and
+    // it/pt/nl/pl riding the broadened latin trigram tier — through the
+    // same router. Script evidence routes to PER-SCRIPT trigram
+    // profiles (ru/uk compete only under cyrl, ar/fa only under arab),
+    // so a latin brand name inside a Cyrillic page can never steal it
+    // for English; every route populated, the per-script counts and
+    // both tiers' evidence in the output.
+    "x173_script_router_ext" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val arm = col("doc_id") % 11
+      val txt = when(arm === 0, lit(langRuText))
+        .when(arm === 1, lit(langUkText))
+        .when(arm === 2, lit(langArText))
+        .when(arm === 3, lit(langFaText))
+        .when(arm === 4, lit(langElText))
+        .when(arm === 5, lit(langHeText))
+        .when(arm === 6, lit(langHiText))
+        .when(arm === 7, lit(langItText))
+        .when(arm === 8, lit(langPtText))
+        .when(arm === 9, lit(langNlText))
+        .otherwise(lit(langPlText))
+      TextOps.langIdRouted(d.select(col("doc_id"), txt.as("text")))
+        .select("doc_id", "n_cyrl", "n_arab", "n_grek", "n_hebr",
+          "n_deva", "script_lang", "pred_lang", "pred_hits")
+        .orderBy("doc_id")
+    }, oracle = {
+      // x173 mirror: the same eleven planted texts, the same share-gated
+      // script CASE, and the PER-GROUP trigram argmax — one list_max per
+      // script group, routed by the script label exactly like
+      // langIdRouted's allowed-set filter.
       s"""WITH d AS (SELECT doc_id,
         |     CASE (doc_id % 11) WHEN 0 THEN '$langRuText'
         |       WHEN 1 THEN '$langUkText'
@@ -8181,14 +7421,47 @@ object ExtensionQueries {
         | FROM sl s LEFT JOIN hitg hg ON hg.doc_id = s.doc_id
         |   AND hg.grp = $routedGrpSql
         | ORDER BY s.doc_id""".stripMargin
-    },
+    }),
 
-    // x174 mirror: the x168 funnel arithmetic with the lang labels
-    // coming from the ROUTER (share-gated script CASE + per-group
-    // trigram argmax) and a profile table that carries min_alpha_bp —
-    // the ru/ar profiles set it to 0 because the [a-zA-Z] alphabetic
-    // floor reads every non-latin word as non-alphabetic.
-    "x174_lang_gopher_ext" -> {
+    // x174 — language-aware Gopher over the NON-LATIN web (r19, the
+    // x168 funnel re-run where it matters most): en/ru/ar/el/he/hi
+    // arms labeled by the REAL router (langIdRouted — script tier,
+    // not trigram), filtered once under the English-only config and
+    // once under per-language profiles. The English config eats EVERY
+    // non-latin arm twice over — their stopword probes miss AND the
+    // [a-zA-Z] alphabetic-word floor reads every Cyrillic/Arabic/
+    // Greek/Hebrew/Devanagari word as non-alphabetic — so their
+    // profiles set min_alpha_bp 0 and their own stopword probes; the
+    // funnel proves the fallback no longer eats any of them.
+    // Profiles broadcast; the corpus never shuffles.
+    "x174_lang_gopher_ext" -> QueryCase({ (s, dir) =>
+      import s.implicits._
+      val d = spread(t(s, dir, "documents"))
+      val arm = col("doc_id") % 6
+      val txt = when(arm === 0, lit(langEnText))
+        .when(arm === 1, lit(langRuText))
+        .when(arm === 2, lit(langArText))
+        .when(arm === 3, lit(langElText))
+        .when(arm === 4, lit(langHeText))
+        .otherwise(lit(langHiText))
+      val docs = d.select(col("doc_id"), txt.as("text"))
+      val lang = TextOps.langIdRouted(docs)
+        .select(col("doc_id"), col("text"), col("pred_lang").as("lang"))
+      val profiles = Seq(
+        ("en", TextOps.GopherStopProbe, 2L, 10L, 100000L, 300L, 1000L, 8000L),
+        ("ru", langRuStops, 2L, 10L, 100000L, 250L, 1000L, 0L),
+        ("ar", langArStops, 2L, 10L, 100000L, 250L, 1000L, 0L),
+        ("el", langElStops, 2L, 10L, 100000L, 250L, 1000L, 0L),
+        ("he", langHeStops, 2L, 10L, 100000L, 250L, 1000L, 0L),
+        ("hi", langHiStops, 2L, 10L, 100000L, 250L, 1000L, 0L))
+        .toDF(GopherProfileCols: _*)
+      gopherFunnel(lang, profiles)
+    }, oracle = {
+      // x174 mirror: the x168 funnel arithmetic with the lang labels
+      // coming from the ROUTER (share-gated script CASE + per-group
+      // trigram argmax) and a profile table that carries min_alpha_bp —
+      // the ru/ar profiles set it to 0 because the [a-zA-Z] alphabetic
+      // floor reads every non-latin word as non-alphabetic.
       val engArr = sqlArr(TextOps.GopherStopProbe)
       s"""WITH d AS (SELECT doc_id,
         |     CASE (doc_id % 6) WHEN 0 THEN '$langEnText'
@@ -8240,18 +7513,87 @@ object ExtensionQueries {
         |     AND alpha_bp >= mab AND sym_bp <= 1000
         |     AND lang_stops >= msh)
         | $gopherFunnelSql""".stripMargin
-    },
+    }),
 
-    // x175 mirror: the extracted text is the Spark side's to PROVE
-    // (DuckDB cannot inflate a FlateDecode stream or walk the BOM'd
-    // string decode) — the oracle recomputes each arm's TARGET text
-    // independently (the x150 row-identity convention): the same
-    // Tj/T* line pair, the TJ concatenation with its escapes resolved
-    // by hand, NULL for the malformed-Flate arm, the lying-server
-    // arm's text under its text/html declaration, and the UTF-16BE
-    // arm's REAL Japanese lines (interpolated from the one fixture
-    // definition) around the BOM-less latin tail.
-    "x175_pdf_extract" ->
+    // x175 — PDF text extraction (r19, VERDICT r18 #3; the x150
+    // row-identity convention — DuckDB cannot inflate a content
+    // stream, so the oracle recomputes every TARGET independently):
+    // five arms per doc through the REAL envelope route — sniff →
+    // effectiveMediaType → pdfText. Arm 0: a FlateDecode content
+    // stream (REAL zlib bytes via DeflateBytes) with Tj/T* text ops;
+    // arm 1: a filterless raw stream with a TJ kerning array and the
+    // \( \) \\ escapes; arm 2: a stream DECLARED /FlateDecode whose
+    // bytes do not inflate — the malformed document, whose text must
+    // be the auditable NULL; arm 3: the LYING SERVER — a real PDF
+    // served as text/html, which the signature override must still
+    // route to the PDF tier; arm 4 (r20, VERDICT r19 #3): UTF-16BE
+    // text strings — a literal string and a hex string both opening
+    // with the FE FF BOM (ISO 32000-1 §7.9.2.2), carrying REAL
+    // Japanese text that must decode, not mojibake, plus a BOM-less
+    // latin literal on the same page (the two regimes coexist). No
+    // xref tables are synthesized: the kernel's stream scan (its
+    // documented contract) never consults them.
+    "x175_pdf_extract" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val idS = col("doc_id").cast("string")
+      val arm = col("doc_id") % 5
+      val contentTj = concat(lit("BT /F1 12 Tf 72 720 Td (Report "), idS,
+        lit(" first line.) Tj T* (Second line with accents: café "), idS,
+        lit(".) Tj ET"))
+      val contentLying = concat(
+        lit("BT /F1 12 Tf 72 720 Td (Hidden report "), idS,
+        lit(" behind a lying header.) Tj ET"))
+      val contentTJ = concat(
+        lit("BT 72 720 Td [(Table ) 20 (of) -20 ( contents)] TJ T* " +
+          "(Escaped \\(parens\\) and backslash \\\\ here "), idS,
+        lit(".) Tj ET"))
+      val contentU16 = concat(
+        lit("BT /F1 12 Tf 72 720 Td (" + u16beView(pdfJaHeadline) +
+          ") Tj T* (Latin tail "), idS,
+        lit(".) Tj T* <" + u16beHex(pdfJaSecond) + "> Tj ET"))
+      // stream payload view: real zlib bytes (arm 0/3), the raw ops
+      // (arm 1/4), or garbage under a /FlateDecode declaration (arm 2)
+      val flateView = decode(bridge1(graft.functions.DeflateBytes(_),
+        when(arm === 3, contentLying).otherwise(contentTj)), "ISO-8859-1")
+      val streamView = when(arm === 1, contentTJ)
+        .when(arm === 4, contentU16)
+        .when(arm === 2, lit("this is not a deflate stream at all"))
+        .otherwise(flateView)
+      val filterDecl = when(arm === 1 || arm === 4, lit(""))
+        .otherwise(lit(" /Filter /FlateDecode"))
+      val pdf = concat(
+        lit("%PDF-1.4\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\n" +
+          "endobj\n2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\n" +
+          "endobj\n3 0 obj\n<< /Type /Page /Parent 2 0 R /Contents " +
+          "4 0 R >>\nendobj\n4 0 obj\n<< /Length "),
+        length(streamView).cast("string"), filterDecl,
+        lit(" >>\nstream\n"), streamView,
+        lit("\nendstream\nendobj\n%%EOF"))
+      val ct = when(arm === 3, lit("text/html"))
+        .otherwise(lit("application/pdf"))
+      val msgs = d.select(col("doc_id"),
+        concat(lit("HTTP/1.1 200 OK\r\nContent-Type: "), ct,
+          lit("\r\n\r\n"), pdf).as("msg"))
+      HttpOps.parseResponses(msgs, "msg")
+        .select(col("doc_id"), col("content_type").as("declared"),
+          HttpOps.effectiveMediaType(col("content_type"),
+            HttpOps.sniffMediaType(col("body"))).as("final_type"),
+          col("body"))
+        .withColumn("pdf_text",
+          when(col("final_type") === "application/pdf",
+            HttpOps.pdfText(col("body"))))
+        .select("doc_id", "declared", "final_type", "pdf_text")
+        .orderBy("doc_id")
+    }, oracle =
+      // x175 mirror: the extracted text is the Spark side's to PROVE
+      // (DuckDB cannot inflate a FlateDecode stream or walk the BOM'd
+      // string decode) — the oracle recomputes each arm's TARGET text
+      // independently (the x150 row-identity convention): the same
+      // Tj/T* line pair, the TJ concatenation with its escapes resolved
+      // by hand, NULL for the malformed-Flate arm, the lying-server
+      // arm's text under its text/html declaration, and the UTF-16BE
+      // arm's REAL Japanese lines (interpolated from the one fixture
+      // definition) around the BOM-less latin tail.
       s"""SELECT doc_id,
         | CASE WHEN doc_id % 5 = 3 THEN 'text/html'
         |      ELSE 'application/pdf' END AS declared,
@@ -8269,21 +7611,218 @@ object ExtensionQueries {
         |     || '$pdfJaSecond'
         |   ELSE 'Hidden report ' || doc_id::VARCHAR
         |     || ' behind a lying header.' END AS pdf_text
-        | FROM documents ORDER BY doc_id""".stripMargin,
+        | FROM documents ORDER BY doc_id""".stripMargin),
 
-    // x176 mirror: the independently-recomputed chain over the
-    // PLAINTEXT synthesis — DuckDB cannot gunzip the members, dechunk
-    // the transfer coding, or decode the shift_jis bytes, so funnel
-    // identity proves those tiers were lossless (the x139/x150
-    // convention). Every downstream stage IS mirrored for real: the
-    // share-gated router (scriptLangCtesSql + per-group trigram
-    // argmax), the hand-derived kept-line set (line2 always survives,
-    // line1 survives except on the short arm, the javascript line
-    // never does — the C4 rules resolved against this fixture), the
-    // Gopher profile arithmetic, OPH banding + exact verify at 9000 bp
-    // over char-6 shingles, recursive reachability, the token-budget
-    // mixture rates, and the x94 packing prefix sums.
-    "x176_first_mile_capstone" -> {
+    // x176 — the FIRST-MILE → TRAINING-MANIFEST capstone (r19, VERDICT
+    // r18 #7): the whole r15–r19 stack in ONE oracle-gated composite —
+    // `.warc.gz` (per-record gzip members) → HTTP envelope (gzip
+    // content coding on even docs, chunked transfer coding on odd) →
+    // charset decode (ja pages travel as REAL shift_jis bytes; en/fr
+    // as UTF-8) → the r19 language router (script tier for ja, trigram
+    // tier for en/fr) → language-aware C4 line rules (ja profile:
+    // 。-terminal, 1-word lines) → language-aware Gopher (ja profile:
+    // alpha floor 0, wide word-len band) → OPH near-dup dedup over
+    // char-6 shingles at 0.9 (each (lang, doc_id div 6) group plants
+    // an EXACT duplicate pair; the md5 group token keeps cross-group
+    // Jaccard ~0.5, far under threshold) → token-budget mixture
+    // (en .4 / fr .3 / ja .3 — chars as the token proxy, the honest
+    // unit a space-free script shares) → GPT-style sequence packing.
+    // r20 (VERDICT r19 #2): two of every eight docs travel as
+    // application/pdf — the x162 media-type route sends them through
+    // the x175 PdfToText kernel (the ja paragraph as a UTF-16BE hex
+    // string) instead of the charset/HTML tier, and the SAME
+    // router→C4→Gopher→dedup→mixture→packing chain consumes the
+    // result; a pdf doc can be near-dup-dropped against an html doc
+    // (cross-format dedup). Output: the per-(stage, lang/src-cohort)
+    // funnel — extracted / quality / deduped / mixture / packed — doc
+    // counts and token sums, the integration proof that the tiers
+    // compose without a seam, with the `…/pdf` cohorts surviving to
+    // `packed` read straight off the rows. Every fifth doc plants a
+    // "too short." page that the quality tier must eat in every
+    // language. Oracle = the independently-recomputed chain over the
+    // PLAINTEXT synthesis (the x139/x150 convention: DuckDB cannot
+    // gunzip, dechunk, decode shift_jis, or walk a PDF stream —
+    // funnel identity proves the envelope tiers were lossless).
+    "x176_first_mile_capstone" -> QueryCase({ (s, dir) =>
+      import s.implicits._
+      val d = spread(t(s, dir, "documents"))
+      val l3 = col("doc_id") % 3
+      val isShort = col("doc_id") % 5 === 4
+      val md5g = md5(expr("doc_id div 6").cast("string"))
+      // line 1 as the DECLARED-CHARSET byte view: the ja paragraph's
+      // real windows-31j bytes (shift_jis superset — the WHATWG label),
+      // the fr paragraph's real UTF-8 bytes; ASCII is identity in both
+      val line1View = when(isShort, lit("too short."))
+        .when(l3 === 0, lit(capEnPara))
+        .when(l3 === 1, decode(encode(lit(capFrPara), "UTF-8"), "ISO-8859-1"))
+        .otherwise(lit(sjisView(capJaPara)))
+      // line 2 carries the group token TWICE (md5 + its reverse): the
+      // group-unique shingle mass then rivals the shared paragraph's,
+      // which keeps the OPH hot-bucket (the all-minima-from-the-shared-
+      // paragraph signature) small — without it, cross-group banding
+      // collisions grow a bucket that both engines must pay
+      // quadratically to verify (measured: the DuckDB mirror blew past
+      // the bench window at sf0.1 before this)
+      val htmlView = concat(lit("<html><body><p>"), line1View,
+        lit("</p><p>ref "), md5g, lit(" "), reverse(md5g),
+        lit(" end.</p><p>" + capJsLine + "</p></body></html>"))
+      // the PDF slice (r20, VERDICT r19 #2): two of every eight docs
+      // — one on the gzip coding, one on the chunked coding — travel
+      // as application/pdf instead of HTML, carrying the SAME two
+      // content lines as PDF text operators (no js boilerplate — a
+      // PDF has no "enable javascript" chrome): en/fr/short line1 as
+      // a latin1 literal string, the ja paragraph as a UTF-16BE HEX
+      // string (the x175 arm-4 tier — a PDF is how non-latin text
+      // actually reaches a crawl without a charset header)
+      val isPdf = (col("doc_id") % 8).isin(2, 5)
+      val pdfLine1Tok = when(isShort, lit("(too short.)"))
+        .when(l3 === 0, lit("(" + capEnPara + ")"))
+        .when(l3 === 1, lit("(" + capFrPara + ")"))
+        .otherwise(lit("<" + u16beHex(capJaPara) + ">"))
+      val pdfContent = concat(lit("BT "), pdfLine1Tok,
+        lit(" Tj T* (ref "), md5g, lit(" "), reverse(md5g),
+        lit(" end.) Tj ET"))
+      val pdfView = concat(
+        lit("%PDF-1.4\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\n" +
+          "endobj\n4 0 obj\n<< /Length "),
+        length(pdfContent).cast("string"),
+        lit(" >>\nstream\n"), pdfContent,
+        lit("\nendstream\nendobj\n%%EOF"))
+      val bodyView = when(isPdf, pdfView).otherwise(htmlView)
+      val cs = when(l3 === 2, lit("shift_jis")).otherwise(lit("utf-8"))
+      val gzView = decode(bridge1(graft.functions.GzipBytes(_), bodyView),
+        "ISO-8859-1")
+      val c1 = substring(bodyView, 1, 64)
+      val c2 = substring(bodyView, 65, Int.MaxValue - 64)
+      val chunked = concat(
+        hex(length(c1)), lit("\r\n"), c1, lit("\r\n"),
+        hex(length(c2)), lit("\r\n"), c2, lit("\r\n0\r\n\r\n"))
+      val ctHdr = when(isPdf, lit("application/pdf"))
+        .otherwise(concat(lit("text/html; charset="), cs))
+      val httpMsg = concat(
+        lit("HTTP/1.1 200 OK\r\nContent-Type: "), ctHdr,
+        when(col("doc_id") % 2 === 0,
+          concat(lit("\r\nContent-Encoding: gzip\r\nContent-Length: "),
+            length(gzView).cast("string"), lit("\r\n\r\n"), gzView))
+          .otherwise(concat(
+            lit("\r\nTransfer-Encoding: chunked\r\n\r\n"), chunked)))
+      val files = warcHttpFiles(d, Seq(), httpMsg, gz = true,
+        date = lit("2020-03-01T00:00:00Z"))
+      // ---- the engine chain under test ----
+      val pages = WarcOps.responses(
+        files.select(col("file_id"),
+          WarcOps.gunzipText(col("gz")).as("content")),
+        "file_id", "content")
+      // MATERIALIZE at the decode+extract boundary (the x125
+      // multi-consumer discipline, here against Catalyst's
+      // CollapseProject): the router evaluates ~25 expressions over
+      // `ptext`, and without a barrier each one inlines its OWN copy
+      // of the gunzip → envelope-split → charset-decode → tag-strip
+      // chain — measured 80 s of a 130 s run at sf0.1; with the one
+      // page-count-sized checkpoint the router stage is seconds
+      val body = HttpOps.decodeBody(col("body"), col("charset"))
+      // the media-type ROUTE (x162's effectiveMediaType): html decodes
+      // through the charset tier, pdf through the PdfToText kernel —
+      // the extracted text then joins ONE downstream chain, with the
+      // source format carried as provenance (`src`) so the funnel can
+      // show the PDF slice surviving to `packed`.
+      // TWO materialization boundaries here (the r19 CollapseProject
+      // lesson, measured again in r20): the route needs the media type
+      // in a filter plus three projections, and each copy would inline
+      // its OWN gunzip→dechunk envelope chain (~8 copies — x176 went
+      // 11.5 s → 33.5 s when the route was first fused). Boundary 1
+      // materializes the parsed envelope (body + headers); the route
+      // and decode then run over STORED columns, and boundary 2 (the
+      // pre-existing one) materializes the extracted text for the
+      // ~25-expression router fan-out downstream.
+      val envelope = HttpOps.parseResponses(pages, "payload")
+        .filter(col("status_code") === 200)
+        .select(uriDocId, col("content_type"), col("charset"), col("body"))
+        .localCheckpoint()
+      val mt = HttpOps.effectiveMediaType(col("content_type"),
+        HttpOps.sniffMediaType(col("body")))
+      val extracted = when(mt === "application/pdf",
+        HttpOps.pdfText(col("body"))).otherwise(body)
+      val routed = envelope
+        .filter(mt.isin("text/html", "application/pdf"))
+        .select(col("doc_id"),
+          when(mt === "application/pdf", lit("pdf"))
+            .otherwise(lit("html")).as("src"),
+          extracted.as("html"),
+          HtmlOps.htmlToText(extracted).as("ptext"))
+        .localCheckpoint()
+      val labeled = TextOps.langIdRouted(routed, "ptext")
+        .select(col("doc_id"), col("html"), col("src"),
+          col("pred_lang").as("lang"))
+      val c4Profiles = Seq(("ja", Seq("。", "."), 1L, 3L))
+        .toDF("lang", "term_chars", "min_line_words", "min_line_chars")
+      val lines = HtmlOps.c4KeptLinesByLang(labeled, "doc_id", "html",
+        c4Profiles, carry = Seq("src"))
+      val docsText = lines.groupBy(col("doc_id"), col("lang"), col("src"))
+        .agg(concat_ws("\n", array_sort(collect_list(
+            struct(col("line_no"), col("line")))).getField("line"))
+          .as("text"))
+        .withColumn("n_tokens", length(col("text")).cast(LongType))
+        .localCheckpoint()
+      val gProfiles = Seq(
+        ("en", TextOps.GopherStopProbe, 2L, 10L, 100000L, 300L, 1000L, 8000L),
+        ("fr", capFrStops, 2L, 10L, 100000L, 250L, 1000L, 8000L),
+        ("ja", Seq("の"), 0L, 1L, 100000L, 1L, 100000L, 0L))
+        .toDF("lang", "stop_words", "min_stop_hits", "min_words",
+          "max_words", "min_word_len_centi", "max_word_len_centi",
+          "min_alpha_bp")
+      val quality = TextOps.gopherFilterByLang(docsText, gProfiles)
+        .filter(col("keep"))
+        .select("doc_id", "lang", "src", "text", "n_tokens")
+        .localCheckpoint()
+      // maxBucket 100: the shared paragraph makes one band signature
+      // (all four minima from the paragraph's shingles) corpus-hot —
+      // the exact bucket class the cap exists for at 100 TB. Planted
+      // pairs are identical docs, so they collide in ALL four bands
+      // and the probability every one of them is the hot signature is
+      // ~(0.09)^4 — each pair keeps a private small bucket and is
+      // found; the cap only sheds the quadratic cross-group bucket.
+      val pairs = DedupOps.nearDupPairs(quality, "doc_id",
+        TextOps.charShingles(col("text"), 6), 0.9, oph = true,
+        maxBucket = 100)
+      val dropd = DedupOps.connectedComponents(pairs)
+        .filter(col("comp") < col("id"))
+        .select(col("id").as("doc_id"))
+      val deduped = quality.join(dropd, Seq("doc_id"), "left_anti")
+      val mix = SampleOps.tokenBudgetMixture(deduped, "doc_id", "lang",
+          "n_tokens", Seq("en" -> 0.4, "fr" -> 0.3, "ja" -> 0.3))
+        .select("doc_id", "lang", "src", "n_tokens")
+        .localCheckpoint()
+      val packed = SampleOps.packSequences(
+          mix.select(col("doc_id"), col("n_tokens")),
+          "doc_id", "n_tokens", seqLen = 128)
+        .join(mix.select(col("doc_id"), col("lang"), col("src")),
+          Seq("doc_id"))
+        .withColumn("n_tokens", col("n_toks"))
+      // the funnel reports per (lang, source-format) cohort — the
+      // integration proof VERDICT r19 #2 asked for reads straight off
+      // the `…/pdf` rows surviving every stage to `packed`
+      def coh(df: org.apache.spark.sql.DataFrame) = df.withColumn(
+        "cohort", concat_ws("/", col("lang"), col("src")))
+      StatOps.funnelReportBy(Seq(
+          "extracted" -> coh(docsText), "quality" -> coh(quality),
+          "deduped" -> coh(deduped), "mixture" -> coh(mix),
+          "packed" -> coh(packed)),
+          col("n_tokens"), "cohort")
+        .orderBy("stage_idx", "cohort")
+    }, oracle = {
+      // x176 mirror: the independently-recomputed chain over the
+      // PLAINTEXT synthesis — DuckDB cannot gunzip the members, dechunk
+      // the transfer coding, or decode the shift_jis bytes, so funnel
+      // identity proves those tiers were lossless (the x139/x150
+      // convention). Every downstream stage IS mirrored for real: the
+      // share-gated router (scriptLangCtesSql + per-group trigram
+      // argmax), the hand-derived kept-line set (line2 always survives,
+      // line1 survives except on the short arm, the javascript line
+      // never does — the C4 rules resolved against this fixture), the
+      // Gopher profile arithmetic, OPH banding + exact verify at 9000 bp
+      // over char-6 shingles, recursive reachability, the token-budget
+      // mixture rates, and the x94 packing prefix sums.
       val engArr = sqlArr(TextOps.GopherStopProbe)
       s"""WITH RECURSIVE d0 AS (SELECT doc_id, doc_id % 3 l3,
         |     (doc_id % 5 = 4) sh0, md5((doc_id // 6)::VARCHAR) g,
@@ -8414,14 +7953,41 @@ object ExtensionQueries {
         |     count(*)::BIGINT, sum(n_toks)::BIGINT FROM spans
         |   GROUP BY lang, src
         | ORDER BY stage_idx, cohort""".stripMargin
-    },
+    }),
 
-    // x177 mirror: the x169 mirror widened — the same five-arm page
-    // synthesis, the shared strip/line CTEs, then the language-
-    // parameterized line rules over the SHIPPED profile table
-    // (c4ProfileRowsSql interpolates HtmlOps.c4LineProfiles verbatim,
-    // so engine and mirror read the one definition).
-    "x177_c4_script_lines" ->
+    // x177 — C4 line-rule profiles for the non-latin script tier (r20,
+    // VERDICT r19 #4; the x169 pattern widened): el/he/hi/ar pages
+    // through c4KeptLinesByLang with the SHIPPED
+    // [[graft.ops.HtmlOps.c4LineProfiles]] table — the Greek question
+    // mark (;), the sof pasuq (׃), the danda (।), and the Arabic
+    // question mark (؟) all end real sentences that the English
+    // terminal-punctuation rule silently eats (exactly the way ja
+    // lines were eaten before x169). Each arm also plants an
+    // ASCII-period line (kept under BOTH rule sets — the profile must
+    // not break the common case), the too-short line, and the
+    // javascript boilerplate (dropped everywhere). The en control arm
+    // carries no profile row, proving the defaults fallback.
+    "x177_c4_script_lines" -> QueryCase({ (s, dir) =>
+      import s.implicits._
+      val d = spread(t(s, dir, "documents"))
+      val arm = col("doc_id") % 5
+      val docs = d.select(col("doc_id"),
+        when(arm === 0, lit("el")).when(arm === 1, lit("he"))
+          .when(arm === 2, lit("hi")).when(arm === 3, lit("ar"))
+          .otherwise(lit("en")).as("lang"),
+        when(arm === 0, lit(c4ElHtml)).when(arm === 1, lit(c4HeHtml))
+          .when(arm === 2, lit(c4HiHtml)).when(arm === 3, lit(c4ArHtml))
+          .otherwise(lit(langEnHtml)).as("html"))
+      val profiles = graft.ops.HtmlOps.c4LineProfiles
+        .toDF("lang", "term_chars", "min_line_words", "min_line_chars")
+      HtmlOps.c4KeptLinesByLang(docs, "doc_id", "html", profiles)
+        .orderBy("doc_id", "line_no")
+    }, oracle =
+      // x177 mirror: the x169 mirror widened — the same five-arm page
+      // synthesis, the shared strip/line CTEs, then the language-
+      // parameterized line rules over the SHIPPED profile table
+      // (c4ProfileRowsSql interpolates HtmlOps.c4LineProfiles verbatim,
+      // so engine and mirror read the one definition).
       s"""WITH d0 AS (SELECT doc_id,
         |     CASE (doc_id % 5) WHEN 0 THEN 'el' WHEN 1 THEN 'he'
         |       WHEN 2 THEN 'hi' WHEN 3 THEN 'ar' ELSE 'en' END AS lang,
@@ -8434,17 +8000,68 @@ object ExtensionQueries {
         | prof AS (SELECT * FROM (VALUES $c4ProfileRowsSql)
         |   p(lang, term_chars, min_line_words, min_line_chars)),
         | $c4LangLinesSql
-        | ORDER BY doc_id, line_no""".stripMargin,
+        | ORDER BY doc_id, line_no""".stripMargin),
 
-    // x178 mirror: the store strings and the seek are the Spark
-    // side's to prove — the oracle CONSTRUCTS the same records
-    // (x165's synthesis + the dedupStoreRecords head layout, CRLF
-    // via chr(13)||chr(10)) and recomputes every index field
-    // independently: the window prefix-sum offsets over the same
-    // (file, doc, k) order, the SURT urlkey constant-folded for the
-    // fixture host, the digit-only timestamp, and the seeked record's
-    // expected type/payload; seek_ok true by construction.
-    "x178_cdxj_index" ->
+    // x178 — CDX(J) index round trip with a REAL SEEK (r20, VERDICT
+    // r19 #5 — the artifact that makes the x165 dedup store seekable,
+    // completing the WARC/WAT/WET/CDX Common Crawl artifact family):
+    // the x165 capture synthesis → dedup store records → cdxjRecords
+    // (SURT urlkey, 14-digit timestamp, JSON with offset/length/
+    // filename) → parse the lines BACK → use the recovered
+    // offset/length to substring the assembled file content and
+    // re-parse THAT SLICE as a WARC record. seek_ok ties the loop:
+    // the seeked record's length_ok, target URI, and payload digest
+    // must all match the index row — the proof a replay consumer can
+    // jump straight to one capture without scanning the file.
+    "x178_cdxj_index" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val caps = storeCaptures(d)
+      // recs feeds BOTH the index and the assembled files — checkpoint
+      // once (r20, the x125 multi-consumer discipline) so the
+      // digest-window store synthesis runs once, not per consumer.
+      // `parsed` (two consumers) is deliberately NOT checkpointed: the
+      // file-keyed offset window must stay visible in the final plan
+      // (the x178 plan gate asserts the window is file-partitioned),
+      // and re-running the narrow cdxj parse over the checkpointed recs
+      // is cheap.
+      val recs = WarcOps.dedupStoreRecords(caps)
+        .withColumn("file_id", expr("doc_id div 8"))
+        .localCheckpoint()
+      val idx = WarcOps.cdxjRecords(recs, "file_id", Seq("doc_id", "k"))
+      val files = respread(recs.groupBy("file_id")
+        .agg(concat_ws("", array_sort(collect_list(
+            struct(col("doc_id"), col("k"), col("record"))))
+          .getField("record")).as("content")))
+      val parsed = WarcOps.parseCdxj(
+        idx.select(col("file_id"), col("doc_id"), col("k"), col("cdxj")),
+        "cdxj")
+      val sliced = parsed.join(files, Seq("file_id"))
+        .select((col("doc_id") * 3 + col("k")).as("rid"),
+          col("content").substr(col("offset").cast("int") + lit(1),
+            col("rec_length").cast("int")).as("slice"))
+      val reparsed = WarcOps.parseRecords(sliced, "rid", "slice")
+        .select(col("rid"), col("warc_type").as("rec_type"),
+          col("target_uri").as("seek_uri"),
+          col("payload_digest").as("seek_digest"),
+          col("payload").as("seek_payload"), col("length_ok"))
+      parsed.withColumn("rid", col("doc_id") * 3 + col("k"))
+        .join(reparsed, Seq("rid"))
+        .withColumn("seek_ok", col("length_ok") &&
+          col("seek_uri") === col("url") &&
+          col("seek_digest") === col("digest"))
+        .select("doc_id", "k", "urlkey", "cdxj_ts", "url", "mime",
+          "status", "offset", "rec_length", "digest", "rec_type",
+          "seek_payload", "seek_ok")
+        .orderBy("doc_id", "k")
+    }, oracle =
+      // x178 mirror: the store strings and the seek are the Spark
+      // side's to prove — the oracle CONSTRUCTS the same records
+      // (x165's synthesis + the dedupStoreRecords head layout, CRLF
+      // via chr(13)||chr(10)) and recomputes every index field
+      // independently: the window prefix-sum offsets over the same
+      // (file, doc, k) order, the SURT urlkey constant-folded for the
+      // fixture host, the digit-only timestamp, and the seeked record's
+      // expected type/payload; seek_ok true by construction.
       s"""WITH ${captureHistorySql("xc")},
         | xp AS (SELECT doc_id, k, url, capture_date,
         |     'Body v' || ver::VARCHAR || ' of doc ' ||
@@ -8486,16 +8103,72 @@ object ExtensionQueries {
         |     AS rec_type,
         |   CASE WHEN rn = 1 THEN payload ELSE '' END AS seek_payload,
         |   true AS seek_ok
-        | FROM xoff ORDER BY doc_id, k""".stripMargin,
+        | FROM xoff ORDER BY doc_id, k""".stripMargin),
 
-    // x179 mirror: the range-scan TARGET recomputed independently —
-    // the SURT keys by the same host-reversal CASE (www strips in the
-    // canonical form; blog/shop reverse under the registered domain),
-    // the digit-only timestamps, and the example-1 prefix filter;
-    // sorted_ok true is the target the Spark side's lag-window proof
-    // must land on (the x150 row-identity convention — DuckDB never
-    // sees the shard files).
-    "x179_cdxj_range_scan" ->
+    // x179 — SORTED CDXJ shards + the SURT range scan (r20, the claim
+    // x178's urlkey exists for, proven: host-label REVERSAL makes one
+    // registered domain's captures — root AND subdomains —
+    // lexicographically contiguous, so a sorted index answers "every
+    // capture of example-1.com and its hosts" as ONE prefix range
+    // with no full scan). Three host arms per doc (www. — which the
+    // canonical form strips — blog., shop.) across four registered
+    // domains, two captures each; index lines sort into per-shard
+    // files by (urlkey, timestamp), the files split back into lines,
+    // and the gate (a) proves every shard's line order is
+    // non-decreasing (sorted_ok, computed for real with a lag window)
+    // and (b) answers the example-1 range scan by urlkey prefix,
+    // row-identical to the oracle's independent recomputation.
+    "x179_cdxj_range_scan" -> QueryCase({ (s, dir) =>
+      val d = spread(t(s, dir, "documents"))
+      val idS = col("doc_id").cast("string")
+      val m = (col("doc_id") % 4).cast("string")
+      val sub = when(col("doc_id") % 3 === 0, lit("www."))
+        .when(col("doc_id") % 3 === 1, lit("blog."))
+        .otherwise(lit("shop."))
+      val caps = d
+        .select(col("doc_id"), explode(sequence(lit(0), lit(1))).as("k"))
+        .withColumn("url", concat(lit("https://"), sub,
+          lit("example-"), m, lit(".com/doc/"), idS, lit("/"),
+          col("k").cast("string")))
+        .withColumn("capture_date", concat(lit("2020-02-0"),
+          (col("k") + 1).cast("string")))
+        .withColumn("payload", concat(lit("Cap "),
+          col("k").cast("string"), lit(" of doc "), idS, lit(".")))
+        .withColumn("digest", md5(col("payload")))
+      val recs = WarcOps.dedupStoreRecords(caps)
+        .withColumn("file_id", expr("doc_id div 8"))
+      val idx = WarcOps.cdxjRecords(recs, "file_id", Seq("doc_id", "k"))
+      val shards = respread(idx.groupBy("file_id")
+        .agg(concat_ws("\n", array_sort(collect_list(
+            struct(col("urlkey"), col("cdxj_ts"), col("cdxj"))))
+          .getField("cdxj")).as("content")))
+      val lines = shards.select(col("file_id"),
+        posexplode(split(col("content"), "\n"))
+          .as(Seq("line_no", "line")))
+      // parsed feeds the sortedness window AND the range filter —
+      // one checkpoint, one parse (the x125 multi-consumer discipline)
+      val parsed = WarcOps.parseCdxj(lines, "line").localCheckpoint()
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("file_id").orderBy("line_no")
+      val key = concat_ws(" ", col("urlkey"), col("cdxj_ts"))
+      val sortedOk = parsed
+        .withColumn("__prev", lag(key, 1).over(w))
+        .groupBy("file_id")
+        .agg(min(col("__prev").isNull || col("__prev") <= key)
+          .as("sorted_ok"))
+      parsed
+        .filter(col("urlkey").startsWith("com,example-1"))
+        .join(sortedOk, Seq("file_id"))
+        .select("file_id", "urlkey", "cdxj_ts", "url", "sorted_ok")
+        .orderBy("file_id", "urlkey", "cdxj_ts")
+    }, oracle =
+      // x179 mirror: the range-scan TARGET recomputed independently —
+      // the SURT keys by the same host-reversal CASE (www strips in the
+      // canonical form; blog/shop reverse under the registered domain),
+      // the digit-only timestamps, and the example-1 prefix filter;
+      // sorted_ok true is the target the Spark side's lag-window proof
+      // must land on (the x150 row-identity convention — DuckDB never
+      // sees the shard files).
       """WITH rc AS (SELECT doc_id, t.k,
         |     (doc_id % 4)::VARCHAR AS m,
         |     CASE WHEN doc_id % 3 = 0 THEN 'www.'
@@ -8516,8 +8189,11 @@ object ExtensionQueries {
         |   FROM rc)
         | SELECT file_id, urlkey, cdxj_ts, url, true AS sorted_ok
         | FROM ru WHERE starts_with(urlkey, 'com,example-1')
-        | ORDER BY file_id, urlkey, cdxj_ts""".stripMargin
+        | ORDER BY file_id, urlkey, cdxj_ts""".stripMargin)
   )
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    catalog.transform((_, c) => c.build)
 
   /** The struct_pack trigram-score list for the given profile
     * languages over CTE column `tri` — the x18 scoring, restricted to
@@ -8565,7 +8241,7 @@ object ExtensionQueries {
   /** The routing-group key for a row `s` carrying `script_lang` —
     * langIdRouted's allowed-set rule as SQL.
     */
-  // def, not val: this object's oracle map initializes before later
+  // def, not val: this object's catalog initializes before later
   // vals, and a forward val reference interpolates as null (observed)
   private def routedGrpSql: String =
     "CASE WHEN s.script_lang IN ('cyrl','arab','grek','hebr','deva') " +
@@ -9448,7 +9124,7 @@ object ExtensionQueries {
     (head +: iters).mkString(",\n ")
   }
 
-  // lazy: referenced from the `oracle` map's interpolations above —
+  // lazy: referenced from the catalog's oracle interpolations above —
   // object-init order would otherwise read them as null
   private lazy val curationHeadSql =
     s"""q AS (SELECT doc_id, text FROM documents

@@ -17,4 +17,18 @@ class EntrySpec extends SparkSpec {
     val danglingOracle = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(danglingOracle.isEmpty, s"oracle without query: $danglingOracle")
   }
+
+  test("the catalog rejects a repeated name and a name two objects declare") {
+    val c = sql.QueryCase((s, _) => s.emptyDataFrame, "SELECT 1")
+    val repeated = intercept[IllegalArgumentException] {
+      sql.QueryCase.catalog("x1_a" -> c, "x2_b" -> c, "x1_a" -> c)
+    }
+    assert(repeated.getMessage.contains("x1_a") &&
+      !repeated.getMessage.contains("x2_b"), repeated.getMessage)
+    val shared = intercept[IllegalArgumentException] {
+      SparkEntry.merge(Map("q1_a" -> c), Map("q1_a" -> c, "x2_b" -> c))
+    }
+    assert(shared.getMessage.contains("q1_a") &&
+      !shared.getMessage.contains("x2_b"), shared.getMessage)
+  }
 }

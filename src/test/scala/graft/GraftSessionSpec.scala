@@ -19,21 +19,33 @@ class GraftSessionSpec extends SparkSpec {
     val saved = conf.getAllConfs
     spark.sessionState.functionRegistry.dropFunction(
       org.apache.spark.sql.catalyst.FunctionIdentifier("keccak256"))
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
     val err = new java.io.ByteArrayOutputStream()
     val stderr = System.err
     System.setErr(new java.io.PrintStream(err, true))
     // getOrCreate applies the builder's runtime confs to the shared
     // session; they are put back for the suites that follow
-    val s = try GraftSession.getOrCreate() finally {
+    val (s, timeZone, nanosAsLong) = try {
+      val s = GraftSession.getOrCreate()
+      (s, conf.getConfString("spark.sql.session.timeZone"),
+        conf.getConfString("spark.sql.legacy.parquet.nanosAsLong"))
+    } finally {
       System.setErr(stderr)
       conf.clear()
       saved.foreach { case (k, v) => conf.setConfString(k, v) }
     }
     assert(s eq spark)
     assert(spark.catalog.functionExists("keccak256"))
+    assert(timeZone == "UTC" && nanosAsLong == "true")
     val warned = err.toString.linesIterator.filter(_.contains("spark.sql.extensions")).toList
     assert(warned.size == 1 && warned.head.contains("not applied") &&
       warned.head.contains("temp functions"), s"stderr: $err")
+    val changed = err.toString.linesIterator.filter(_.contains("confs applied")).toList
+    assert(changed.size == 1 &&
+      changed.head.contains("spark.sql.session.timeZone: America/New_York -> UTC") &&
+      changed.head.contains("spark.sql.legacy.parquet.nanosAsLong: false -> true"),
+      s"stderr: $err")
   }
 
   test("GraftExtensions registers all builders and they evaluate") {

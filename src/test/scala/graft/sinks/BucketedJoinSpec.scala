@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The co-located-join contract of [[BucketedCatalogSink]]: two tables
+/** The co-located-join contract of [[CatalogSink]]'s `buckets`: two tables
   * written bucketed on the same key and count join WITHOUT shuffling
   * either side — the plan property that turns every downstream equi-join
   * of a 100 TB fact table from a corpus-sized exchange into a bucket-
@@ -26,7 +26,7 @@ class BucketedJoinSpec extends SparkSpec {
     val docs = (0L until 500L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
     val scores = (0L until 500L).map(i => (i, i % 7)).toDF("doc_id", "score")
     withTables("bkt_docs", "bkt_scores") {
-      BucketedCatalogSink(Map(
+      CatalogSink(buckets = Map(
         "bkt_docs" -> ("doc_id", 8), "bkt_scores" -> ("doc_id", 8)))
         .push(Map("bkt_docs" -> docs, "bkt_scores" -> scores))
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -47,14 +47,14 @@ class BucketedJoinSpec extends SparkSpec {
 
   test("x114 snapshot diff runs exchange-free over bucketed snapshots") {
     // the DECLARED x114 flow (ExtensionQueries x114_snapshot_diff) over
-    // snapshots persisted through BucketedCatalogSink: both scans read
+    // snapshots persisted through CatalogSink: both scans read
     // bucket-aligned, the full-outer merge joins with ZERO exchange, and
     // the rows are identical to the unbucketed path
     val d = (0L until 500L).map(i => (i, s"text of document number $i"))
       .toDF("doc_id", "text")
     val nw = graft.sql.ExtensionQueries.refreshSnapshot(d)
     withTables("snap_old", "snap_new") {
-      BucketedCatalogSink(Map(
+      CatalogSink(buckets = Map(
           "snap_old" -> ("doc_id", 8), "snap_new" -> ("doc_id", 8)))
         .push(Map("snap_old" -> d, "snap_new" -> nw))
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -84,7 +84,7 @@ class BucketedJoinSpec extends SparkSpec {
     val scores = (0L until 200L).map(i => (i, i)).toDF("doc_id", "s")
     withTables("bkt_a", "bkt_b") {
       // ONE sink, two bucket counts in one push — the per-table layout map
-      BucketedCatalogSink(Map(
+      CatalogSink(buckets = Map(
           "bkt_a" -> ("doc_id", 8), "bkt_b" -> ("doc_id", 3)))
         .push(Map("bkt_a" -> docs, "bkt_b" -> scores))
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -97,7 +97,7 @@ class BucketedJoinSpec extends SparkSpec {
           s"expected a shuffle for mismatched bucket counts:\n$p")
       } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       val e = intercept[IllegalArgumentException] {
-        BucketedCatalogSink(Map("nope" -> ("doc_id", 4)))
+        CatalogSink(buckets = Map("nope" -> ("doc_id", 4)))
           .push(Map("bkt_a" -> docs))
       }
       assert(e.getMessage.contains("unknown table"))

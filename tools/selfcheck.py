@@ -4,7 +4,7 @@ over the fixture parquet, compare to the Spark dump in outDir (columns
 sorted by name, values hashed row-wise). Usage:
   python3 tools/selfcheck.py <sfDir> <outDir>
 """
-import json, sys, glob
+import json, os, sys, glob
 import duckdb, pandas as pd
 import pyarrow.parquet as pq
 import pyarrow as pa
@@ -18,9 +18,11 @@ if "--only-dumped" in sys.argv[3:]:
               if glob.glob(f"{out_dir}/{k}/*.parquet")}
 
 con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders",
-          "lineitem","events","documents","embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+# one view per table file: the fixture directory, not a copied list, names
+# the tables (graft.sources.Tables.all owns the engine-side list)
+for f in sorted(glob.glob(f"{sf_dir}/*.parquet")):
+    t = os.path.basename(f)[:-len(".parquet")]
+    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{f}')")
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
