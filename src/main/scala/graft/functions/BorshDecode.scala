@@ -4,8 +4,8 @@ import java.math.BigInteger
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -172,55 +172,32 @@ object BorshRuntime {
 /** svm_decode_instruction('<discriminator-hex>', '<field spec>', data)
   * → struct; `allowFail=true` → null on mismatch/truncation.
   *
-  * Code-generates (r10) via one call into [[BorshRuntime.decode]] so the
-  * containing stage stays in whole-stage codegen — same measured rationale
-  * as [[EvmDecodeEvent]] (SURVEY §6.2).
+  * A [[UnaryKernel]] whose compute is [[BorshRuntime.decode]], with the
+  * signature as one reference object, so the containing stage stays in
+  * whole-stage codegen — same measured rationale as [[EvmDecodeEvent]]
+  * (SURVEY §6.2).
   */
 case class SvmDecodeInstruction(discriminatorHex: String, fieldSpec: String,
                                 allowFail: Boolean, child: Expression)
-    extends UnaryExpression {
+    extends UnaryKernel {
   @transient private lazy val sig = Borsh.InstructionSig(
-    hexToBytes(discriminatorHex), Borsh.parseFields(fieldSpec))
+    Hex.decode(discriminatorHex), Borsh.parseFields(fieldSpec))
 
-  private def hexToBytes(s: String): Array[Byte] = Hex.decode(s)
-
+  override protected def inputType: DataType = BinaryType
+  override protected def nullOnBadInput: Boolean = allowFail
   override def dataType: DataType = sig.schema
+  // the struct reports nullable whatever allowFail says (the schema the
+  // steps and queries were built against)
   override def nullable: Boolean = true
   override def prettyName: String = "svm_decode_instruction"
 
-  // plan-time gate + eval delegation: same rationale as EvmDecodeEvent
-  // (a hex-string data column must fail analysis by name, and the
-  // interpreted path must be the codegen shim, not a second copy)
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      // NullType accepted alongside BinaryType (standard Spark expression
-      // convention): a literal NULL argument is a null row, not a type bug
-      case org.apache.spark.sql.types.BinaryType |
-           org.apache.spark.sql.types.NullType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"svm_decode_instruction requires binary data, got " +
-            other.simpleString)
-    }
   override protected def nullSafeEval(input: Any): Any =
     BorshRuntime.decode(sig, input.asInstanceOf[Array[Byte]], allowFail)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+  override protected def computeCall(ctx: CodegenContext): String => String = {
     val sigRef = ctx.addReferenceObj("borshSig", sig, "Object")
-    nullSafeCodeGen(ctx, ev, d => {
-      val row = ctx.freshName("borshRow")
-      // the (byte[]) cast is a no-op for binary children but keeps the
-      // (dead) non-null branch compilable when the child is a NullType
-      // literal, whose generated value is Object-typed
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow $row =
-         |  graft.functions.BorshRuntime.decode($sigRef, (byte[]) $d, $allowFail);
-         |${ev.isNull} = ($row == null);
-         |${ev.value} = $row;
-       """.stripMargin
-    })
+    d => s"graft.functions.BorshRuntime.decode($sigRef, $d, $allowFail)"
   }
+
   override protected def withNewChildInternal(newChild: Expression): SvmDecodeInstruction =
     copy(child = newChild)
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{DataType, NullType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Decode a LATIN1-VIEW body (char i = byte i — the [[Latin1View]]
@@ -48,38 +45,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * real byte goldens per charset in the spec tier.
   */
 case class DecodeCharset(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryKernel {
+  override protected def inputTypes: Seq[DataType] = Seq(StringType, StringType)
+  override protected def nullOnBadInput: Boolean = true
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
   override def prettyName: String = "decode_charset"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t == StringType || t == NullType
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"decode_charset requires (string, string), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
 
   override protected def nullSafeEval(view: Any, name: Any): Any =
     DecodeCharset.compute(view.asInstanceOf[UTF8String],
       name.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    // a NullType child's generated value is Object-typed, which Janino
-    // rejects where UTF8String is expected — the result is constant null
-    if (left.dataType == NullType || right.dataType == NullType)
-      ev.copy(code = code"""
-        |boolean ${ev.isNull} = true;
-        |UTF8String ${ev.value} = null;
-        """.stripMargin)
-    else
-      // compute() returns null for malformed input — explicit re-check
-      nullSafeCodeGen(ctx, ev, (v, n) => s"""
-        |${ev.value} = graft.functions.DecodeCharset.compute($v, $n);
-        |${ev.isNull} = (${ev.value} == null);
-        """.stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DecodeCharset =

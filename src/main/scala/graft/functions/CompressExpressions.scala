@@ -1,23 +1,28 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType, NullType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The contract every unary kernel of this package shares, written once:
+/** The contract every kernel of this package shares, written once for
+  * both arities ([[UnaryKernel]], [[BinaryKernel]]):
   *
-  *  - type check: the child is `inputType` (nested nullability ignored)
-  *    or `NullType` — a literal NULL argument is a null row (the standard
-  *    Spark convention); any other type fails at analysis, naming the
-  *    function, instead of passing and dying mid-job in an anonymous
-  *    ClassCastException after the Janino fallback;
-  *  - codegen: ONE `nullSafeCodeGen` call to the companion's static
-  *    `compute` (reached through the case class's static forwarder), so
-  *    the stage stays inside whole-stage codegen;
+  *  - one algorithm: the companion's static `compute`, which both
+  *    `nullSafeEval` and the generated code call — no hand-written Java
+  *    copy of the algorithm exists to drift from it;
+  *  - type check: each child is its `inputTypes` entry (nested
+  *    nullability ignored) or `NullType` — a literal NULL argument is a
+  *    null row (the standard Spark convention); any other type fails at
+  *    analysis, naming the function, instead of passing and dying
+  *    mid-job in an anonymous ClassCastException after the Janino
+  *    fallback;
+  *  - codegen: ONE `nullSafeCodeGen` call to `compute` (by default
+  *    reached through the case class's static forwarder), so the stage
+  *    stays inside whole-stage codegen;
   *  - `nullOnBadInput`: compute() returns null on malformed input (the
   *    100 TB rule — corruption surfaces as a filterable NULL row, never a
   *    dead stage), so the result is nullable and codegen re-checks the
@@ -26,9 +31,48 @@ import org.apache.spark.unsafe.types.UTF8String
   *    rejects where compute() expects its input type — the result is a
   *    constant null.
   */
-private[functions] trait UnaryKernel extends UnaryExpression {
-  protected def inputType: DataType
+private[functions] trait Kernel extends Expression {
+  protected def inputTypes: Seq[DataType]
   protected def nullOnBadInput: Boolean = false
+
+  /** The arity's `nullSafeCodeGen` over the compute call; `assign` turns
+    * the call's Java source into the statements that set `ev`.
+    */
+  protected def computeCode(ctx: CodegenContext, ev: ExprCode,
+                            assign: String => String): ExprCode
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val got = children.map(_.dataType)
+    if (got.zip(inputTypes).forall { case (t, want) =>
+          t == NullType || DataTypeUtils.equalsIgnoreNullability(t, want) })
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires ${typeList(inputTypes)}, got ${typeList(got)}")
+  }
+
+  private def typeList(ts: Seq[DataType]): String = ts match {
+    case Seq(t) => t.simpleString
+    case _      => ts.map(_.simpleString).mkString("(", ", ", ")")
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    if (children.exists(_.dataType == NullType))
+      ev.copy(code = code"""
+        |boolean ${ev.isNull} = true;
+        |${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+        """.stripMargin)
+    else computeCode(ctx, ev, call =>
+      if (nullOnBadInput) s"""
+        |${ev.value} = $call;
+        |${ev.isNull} = (${ev.value} == null);
+        """.stripMargin
+      else s"${ev.value} = $call;")
+}
+
+/** [[Kernel]] over one child of type `inputType`. */
+private[functions] trait UnaryKernel extends UnaryExpression with Kernel {
+  protected def inputType: DataType
+  override protected def inputTypes: Seq[DataType] = Seq(inputType)
   override def nullable: Boolean = nullOnBadInput || child.nullable
 
   /** Java source of the static compute call on the child's value; runs
@@ -38,29 +82,25 @@ private[functions] trait UnaryKernel extends UnaryExpression {
   protected def computeCall(ctx: CodegenContext): String => String =
     c => s"${getClass.getName}.compute($c)"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case NullType => TypeCheckResult.TypeCheckSuccess
-    case t if DataTypeUtils.equalsIgnoreNullability(t, inputType) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ${inputType.simpleString}, got ${other.simpleString}")
+  override protected def computeCode(ctx: CodegenContext, ev: ExprCode,
+                                     assign: String => String): ExprCode = {
+    val call = computeCall(ctx)
+    nullSafeCodeGen(ctx, ev, c => assign(call(c)))
   }
+}
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (child.dataType == NullType)
-      ev.copy(code = code"""
-        |boolean ${ev.isNull} = true;
-        |${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
-        """.stripMargin)
-    else {
-      val call = computeCall(ctx)
-      if (nullOnBadInput)
-        nullSafeCodeGen(ctx, ev, c => s"""
-        |${ev.value} = ${call(c)};
-        |${ev.isNull} = (${ev.value} == null);
-        """.stripMargin)
-      else nullSafeCodeGen(ctx, ev, c => s"${ev.value} = ${call(c)};")
-    }
+/** [[Kernel]] over two children; `computeCall` as in [[UnaryKernel]]. */
+private[functions] trait BinaryKernel extends BinaryExpression with Kernel {
+  override def nullable: Boolean = nullOnBadInput || left.nullable || right.nullable
+
+  protected def computeCall(ctx: CodegenContext): (String, String) => String =
+    (l, r) => s"${getClass.getName}.compute($l, $r)"
+
+  override protected def computeCode(ctx: CodegenContext, ev: ExprCode,
+                                     assign: String => String): ExprCode = {
+    val call = computeCall(ctx)
+    nullSafeCodeGen(ctx, ev, (l, r) => assign(call(l, r)))
+  }
 }
 
 /** The LATIN1-VIEW byte⇄string conversions every compression kernel in

@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
 /** Left-fold dot product of two Array[Float] columns in double precision —
   * the hot kernel of every similarity/ANN operator (ops/VectorOps).
@@ -21,6 +21,12 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, 
   * strict left-to-right IEEE addition starting at 0.0 — bit-exact results
   * for the oracle compare. Null elements are treated as 0 contribution
   * (embeddings carry no null elements; documented engine contract).
+  *
+  * The one kernel here whose loop is written into the generated code
+  * instead of called as a static [[Kernel]] `compute`: as a static call
+  * the JIT often left it un-inlined in real plans (one call site shared
+  * by UnsafeArrayData, ColumnarArray and GenericArrayData inputs), and
+  * x25/x65/x66 ran slower at sf0.1.
   */
 case class FloatVecDot(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -104,20 +110,25 @@ case class FloatVecDot(left: Expression, right: Expression)
   * elements quantize to 0 (same no-null-elements contract as the dots).
   */
 case class QuantizeVec(child: Expression, qscale: Double)
-    extends UnaryExpression {
+    extends UnaryKernel {
   require(qscale > 0 && !qscale.isInfinite && !qscale.isNaN,
     s"quantize_vec: qscale must be a positive finite double (got $qscale)")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${t.simpleString}")
-  }
+  override protected def inputType: DataType = ArrayType(FloatType)
   override def dataType: DataType = BinaryType
   override def prettyName: String = "quantize_vec"
 
-  override protected def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any): Any =
+    QuantizeVec.compute(a.asInstanceOf[ArrayData], qscale)
+  override protected def computeCall(ctx: CodegenContext): String => String =
+    c => s"graft.functions.QuantizeVec.compute($c, $qscale)"
+
+  override protected def withNewChildInternal(newChild: Expression): QuantizeVec =
+    copy(child = newChild)
+}
+
+object QuantizeVec {
+  def compute(x: ArrayData, qscale: Double): Array[Byte] = {
     val n = x.numElements()
     val out = new Array[Byte](n)
     var i = 0
@@ -131,29 +142,6 @@ case class QuantizeVec(child: Expression, qscale: Double)
     }
     out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val out = ctx.freshName("out")
-      val q = ctx.freshName("q")
-      s"""
-         |int $n = $x.numElements();
-         |byte[] $out = new byte[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$x.isNullAt($i)) {
-         |    double $q = Math.max(-127.0, Math.min(127.0,
-         |      Math.floor((double) $x.getFloat($i) * $qscale)));
-         |    $out[$i] = (byte) $q;
-         |  }
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): QuantizeVec =
-    copy(child = newChild)
 }
 
 /** Left-fold dot product of two int8-quantized BINARY vectors in double —
@@ -164,21 +152,21 @@ case class QuantizeVec(child: Expression, qscale: Double)
   * mismatch fails loudly (same contract as float_vec_dot).
   */
 case class Int8VecDot(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType == BinaryType)
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires (binary, binary), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
+    extends BinaryKernel {
+  override protected def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "int8_vec_dot"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[Array[Byte]]
-    val y = b.asInstanceOf[Array[Byte]]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    Int8VecDot.compute(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Int8VecDot =
+    copy(left = newLeft, right = newRight)
+}
+
+object Int8VecDot {
+  def compute(x: Array[Byte], y: Array[Byte]): Double = {
     if (x.length != y.length)
       throw new IllegalArgumentException(
         s"int8_vec_dot: length mismatch ${x.length} vs ${y.length}")
@@ -190,27 +178,6 @@ case class Int8VecDot(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |if ($x.length != $y.length) {
-         |  throw new IllegalArgumentException(
-         |    "int8_vec_dot: length mismatch " + $x.length + " vs " + $y.length);
-         |}
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $x.length; $i++) {
-         |  $acc += (double) $x[$i] * (double) $y[$i];
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Int8VecDot =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Asymmetric distance kernel: int8-quantized BINARY corpus vector ×
@@ -223,21 +190,22 @@ case class Int8VecDot(left: Expression, right: Expression)
   * (dequantizing the SUM, not each term — fewer ops, same exactness).
   */
 case class Int8FloatVecDot(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, ArrayType(FloatType, _)) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (binary, array<float>), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
+    extends BinaryKernel {
+  override protected def inputTypes: Seq[DataType] =
+    Seq(BinaryType, ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "int8_float_vec_dot"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[Array[Byte]]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    Int8FloatVecDot.compute(a.asInstanceOf[Array[Byte]], b.asInstanceOf[ArrayData])
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Int8FloatVecDot =
+    copy(left = newLeft, right = newRight)
+}
+
+object Int8FloatVecDot {
+  def compute(x: Array[Byte], y: ArrayData): Double = {
     if (x.length != y.numElements())
       throw new IllegalArgumentException(
         s"int8_float_vec_dot: length mismatch ${x.length} vs ${y.numElements()}")
@@ -249,29 +217,6 @@ case class Int8FloatVecDot(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |if ($x.length != $y.numElements()) {
-         |  throw new IllegalArgumentException(
-         |    "int8_float_vec_dot: length mismatch " + $x.length + " vs " + $y.numElements());
-         |}
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $x.length; $i++) {
-         |  if (!$y.isNullAt($i)) {
-         |    $acc += (double) $x[$i] * (double) $y.getFloat($i);
-         |  }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Int8FloatVecDot =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Argmax-cosine cell assignment against a DRIVER-HELD codebook — the
@@ -281,7 +226,7 @@ case class Int8FloatVecDot(left: Expression, right: Expression)
   * collapse them; with k ∝ n (the sizing that keeps cells constant) that
   * intermediate is n²/perCell rows and dominated the x65 decade
   * measurement (3.0× per sf2 doubling). This expression evaluates the
-  * same k cosines as a tight generated loop over a plan-embedded float
+  * same k cosines as one tight loop over a plan-embedded float
   * matrix — one output row per vector, zero extra rows, O(k·dim) flops
   * per row that 32 cores chew through in milliseconds at fixture scale.
   *
@@ -302,7 +247,7 @@ case class Int8FloatVecDot(left: Expression, right: Expression)
 case class NearestCentroid(left: Expression, right: Expression,
                            cids: Array[Long], flat: Array[Float],
                            cns: Array[Double], dim: Int)
-    extends BinaryExpression {
+    extends BinaryKernel {
   require(cids.nonEmpty, "nearest_centroid: empty codebook")
   require(dim > 0, s"nearest_centroid: dim must be positive (got $dim)")
   require(flat.length == cids.length * dim,
@@ -335,19 +280,30 @@ case class NearestCentroid(left: Expression, right: Expression,
   require(cids.zip(cids.tail).forall { case (a, b) => a < b },
     "nearest_centroid: cids must be strictly ascending (tie rule = lowest cid)")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), DoubleType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<float>, double), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  override protected def inputTypes: Seq[DataType] =
+    Seq(ArrayType(FloatType), DoubleType)
+  override def dataType: DataType = LongType
   override def prettyName: String = "nearest_centroid"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val nrm = b.asInstanceOf[Double]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    NearestCentroid.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[Double],
+      cids, flat, cns, dim)
+  override protected def computeCall(ctx: CodegenContext): (String, String) => String = {
+    val cidsRef = ctx.addReferenceObj("ncCids", cids, "long[]")
+    val flatRef = ctx.addReferenceObj("ncFlat", flat, "float[]")
+    val cnsRef = ctx.addReferenceObj("ncCns", cns, "double[]")
+    (x, nrm) => s"graft.functions.NearestCentroid.compute(" +
+      s"$x, $nrm, $cidsRef, $flatRef, $cnsRef, $dim)"
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): NearestCentroid =
+    copy(left = newLeft, right = newRight)
+}
+
+object NearestCentroid {
+  def compute(x: ArrayData, nrm: Double, cids: Array[Long], flat: Array[Float],
+              cns: Array[Double], dim: Int): Long = {
     if (x.numElements() != dim)
       throw new IllegalArgumentException(
         s"nearest_centroid: vector length ${x.numElements()} != codebook dim $dim")
@@ -368,45 +324,6 @@ case class NearestCentroid(left: Expression, right: Expression,
     }
     bestId
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val flatRef = ctx.addReferenceObj("ncFlat", flat, "float[]")
-    val cidsRef = ctx.addReferenceObj("ncCids", cids, "long[]")
-    val cnsRef = ctx.addReferenceObj("ncCns", cns, "double[]")
-    nullSafeCodeGen(ctx, ev, (x, nrm) => {
-      val best = ctx.freshName("best")
-      val bestId = ctx.freshName("bestId")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val off = ctx.freshName("off")
-      val cos = ctx.freshName("cos")
-      s"""
-         |if ($x.numElements() != $dim) {
-         |  throw new IllegalArgumentException(
-         |    "nearest_centroid: vector length " + $x.numElements() + " != codebook dim $dim");
-         |}
-         |double $best = Double.NEGATIVE_INFINITY;
-         |long $bestId = $cidsRef[0];
-         |for (int $c = 0; $c < $cidsRef.length; $c++) {
-         |  double $acc = 0.0;
-         |  int $off = $c * $dim;
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    if (!$x.isNullAt($i)) {
-         |      $acc += (double) $x.getFloat($i) * (double) $flatRef[$off + $i];
-         |    }
-         |  }
-         |  double $cos = $acc / ($nrm * $cnsRef[$c]);
-         |  if ($cos > $best) { $best = $cos; $bestId = $cidsRef[$c]; }
-         |}
-         |${ev.value} = $bestId;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): NearestCentroid =
-    copy(left = newLeft, right = newRight)
 }
 
 /** PQ encoder: one pass over an Array[Float] vector producing its `m`
@@ -416,7 +333,7 @@ case class NearestCentroid(left: Expression, right: Expression,
   * `array_min`) evaluates the subvector slice per codeword; this kernel
   * reads the input ArrayData once per subspace and keeps the whole argmin
   * in two registers — the encode loop an index BUILD runs over the full
-  * corpus, so it must be one tight codegen'd loop, not 4×16 array
+  * corpus, so it must be one tight loop inside codegen, not 4×16 array
   * allocations per row.
   *
   * Arithmetic is BIT-IDENTICAL to the composed form (and so to the
@@ -427,7 +344,7 @@ case class NearestCentroid(left: Expression, right: Expression,
   */
 case class PqEncode(child: Expression, flat: Array[Float],
                     cn2: Array[Double], m: Int, ksub: Int, dsub: Int)
-    extends UnaryExpression {
+    extends UnaryKernel {
   require(m > 0 && ksub > 0 && dsub > 0, "pq_encode: m, ksub, dsub must be positive")
   require(flat.length == m * ksub * dsub,
     s"pq_encode: flat codebook length ${flat.length} != $m*$ksub*$dsub")
@@ -449,29 +366,43 @@ case class PqEncode(child: Expression, flat: Array[Float],
     Integer.valueOf(java.util.Arrays.hashCode(flat)),
     Integer.valueOf(java.util.Arrays.hashCode(cn2)))
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float>, got ${t.simpleString}")
-  }
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
+  override protected def inputType: DataType = ArrayType(FloatType)
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "pq_encode"
 
-  override protected def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any): Any =
+    PqEncode.compute(a.asInstanceOf[ArrayData], flat, cn2, m, ksub, dsub)
+  override protected def computeCall(ctx: CodegenContext): String => String = {
+    val flatRef = ctx.addReferenceObj("pqFlat", flat, "float[]")
+    val cn2Ref = ctx.addReferenceObj("pqCn2", cn2, "double[]")
+    c => s"graft.functions.PqEncode.compute($c, $flatRef, $cn2Ref, $m, $ksub, $dsub)"
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): PqEncode =
+    copy(child = newChild)
+}
+
+object PqEncode {
+  def compute(x: ArrayData, flat: Array[Float], cn2: Array[Double],
+              m: Int, ksub: Int, dsub: Int): GenericArrayData = {
     if (x.numElements() != m * dsub)
       throw new IllegalArgumentException(
         s"pq_encode: vector length ${x.numElements()} != ${m * dsub}")
     val codes = new Array[Int](m)
+    // the subspace's components, read once per subspace rather than once
+    // per codeword; a null element stays skipped in both folds
+    val xs = new Array[Double](dsub)
+    val present = new Array[Boolean](dsub)
     var s = 0
     while (s < m) {
       val base = s * dsub
       var xs2 = 0.0
       var i = 0
       while (i < dsub) {
-        if (!x.isNullAt(base + i)) {
+        present(i) = !x.isNullAt(base + i)
+        if (present(i)) {
           val v = x.getFloat(base + i).toDouble
+          xs(i) = v
           xs2 += v * v
         }
         i += 1
@@ -484,8 +415,7 @@ case class PqEncode(child: Expression, flat: Array[Float],
         var dot = 0.0
         var k = 0
         while (k < dsub) {
-          if (!x.isNullAt(base + k))
-            dot += x.getFloat(base + k).toDouble * flat(off + k).toDouble
+          if (present(k)) dot += xs(k) * flat(off + k).toDouble
           k += 1
         }
         val d2 = xs2 - dot * 2 + cn2(s * ksub + j)
@@ -495,61 +425,6 @@ case class PqEncode(child: Expression, flat: Array[Float],
       codes(s) = bestJ
       s += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(codes)
+    new GenericArrayData(codes)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val flatRef = ctx.addReferenceObj("pqFlat", flat, "float[]")
-    val cn2Ref = ctx.addReferenceObj("pqCn2", cn2, "double[]")
-    nullSafeCodeGen(ctx, ev, x => {
-      val codes = ctx.freshName("codes")
-      val s = ctx.freshName("s")
-      val base = ctx.freshName("base")
-      val xs2 = ctx.freshName("xs2")
-      val i = ctx.freshName("i")
-      val v = ctx.freshName("v")
-      val best = ctx.freshName("best")
-      val bestJ = ctx.freshName("bestJ")
-      val j = ctx.freshName("j")
-      val off = ctx.freshName("off")
-      val dot = ctx.freshName("dot")
-      val k = ctx.freshName("k")
-      val d2 = ctx.freshName("d2")
-      s"""
-         |if ($x.numElements() != ${m * dsub}) {
-         |  throw new IllegalArgumentException(
-         |    "pq_encode: vector length " + $x.numElements() + " != ${m * dsub}");
-         |}
-         |int[] $codes = new int[$m];
-         |for (int $s = 0; $s < $m; $s++) {
-         |  int $base = $s * $dsub;
-         |  double $xs2 = 0.0;
-         |  for (int $i = 0; $i < $dsub; $i++) {
-         |    if (!$x.isNullAt($base + $i)) {
-         |      double $v = (double) $x.getFloat($base + $i);
-         |      $xs2 += $v * $v;
-         |    }
-         |  }
-         |  double $best = Double.POSITIVE_INFINITY;
-         |  int $bestJ = 0;
-         |  for (int $j = 0; $j < $ksub; $j++) {
-         |    int $off = ($s * $ksub + $j) * $dsub;
-         |    double $dot = 0.0;
-         |    for (int $k = 0; $k < $dsub; $k++) {
-         |      if (!$x.isNullAt($base + $k)) {
-         |        $dot += (double) $x.getFloat($base + $k) * (double) $flatRef[$off + $k];
-         |      }
-         |    }
-         |    double $d2 = $xs2 - $dot * 2 + $cn2Ref[$s * $ksub + $j];
-         |    if ($d2 < $best) { $best = $d2; $bestJ = $j; }
-         |  }
-         |  $codes[$s] = $bestJ;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($codes);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): PqEncode =
-    copy(child = newChild)
 }

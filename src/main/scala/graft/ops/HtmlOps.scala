@@ -282,16 +282,6 @@ object HtmlOps {
       idCol, minLines)
   }
 
-  /** All `href` targets of `<a>` tags, in document order — the link
-    * tier of the first mile: a crawl discovers its frontier from
-    * exactly these, and a corpus's link graph (in-degree as a quality
-    * prior, anchor provenance) starts here. Double-quoted hrefs only
-    * (the dominant form; single-quoted/bare attributes are a documented
-    * fidelity bound of the regex tier, like the `>`-in-attribute bound
-    * above). Empty hrefs are dropped. Pure codegen'd column expression —
-    * resolve against the page URL with [[UrlOps.resolveUrl]], then
-    * canonicalize.
-    */
   /** The document's `<base href>` value — HTML's base-URL override: when
     * present, EVERY relative reference on the page resolves against it,
     * not the page URL (HTML5 §4.2.3; only the FIRST base element with an
@@ -405,6 +395,16 @@ object HtmlOps {
     nullif(trim(regexp_replace(regexp_extract(html,
       "(?is)<title[^>]*>(.*?)</title\\s*>", 1), "\\s+", " ")), lit(""))
 
+  /** All `href` targets of `<a>` tags, in document order — the link
+    * tier of the first mile: a crawl discovers its frontier from
+    * exactly these, and a corpus's link graph (in-degree as a quality
+    * prior, anchor provenance) starts here. Double-quoted hrefs only
+    * (the dominant form; single-quoted/bare attributes are a documented
+    * fidelity bound of the regex tier, like the `>`-in-attribute bound
+    * above). Empty hrefs are dropped. Pure codegen'd column expression —
+    * resolve against the page URL with [[UrlOps.resolveUrl]], then
+    * canonicalize.
+    */
   def extractLinks(html: Column): Column =
     filter(
       transform(
@@ -417,6 +417,12 @@ object HtmlOps {
         r => trim(r)),
       r => r =!= "")
 
+  /** A complete `<a href="...">...</a>` element — ONE pattern, shared
+    * by [[extractAnchors]] and the [[blockScores]] link-density sum.
+    */
+  private val anchorElemRe =
+    "(?is)<a\\s(?:[^>]*?\\s)?href\\s*=\\s*\"[^\"]*\"[^>]*>.*?</a\\s*>"
+
   /** `<a>` elements with BOTH their href target and their anchor TEXT —
     * the link-description signal (anchor text is how the web labels a
     * target page; WebText-style corpora and link-graph quality priors
@@ -428,12 +434,6 @@ object HtmlOps {
     * bound class as the rest of this object. Pure codegen'd column
     * expression.
     */
-  /** A complete `<a href="...">...</a>` element — ONE pattern, shared
-    * by [[extractAnchors]] and the [[blockScores]] link-density sum.
-    */
-  private val anchorElemRe =
-    "(?is)<a\\s(?:[^>]*?\\s)?href\\s*=\\s*\"[^\"]*\"[^>]*>.*?</a\\s*>"
-
   def extractAnchors(html: Column): Column = {
     val elem = regexp_extract_all(html, lit(anchorElemRe), lit(0))
     filter(

@@ -554,19 +554,6 @@ object StatOps {
     }.reduce(_ unionAll _)
   }
 
-  /** [[funnelReport]] broken out by a group column (source / language /
-    * snapshot): the per-DOMAIN funnel, which is where mix bugs actually
-    * hide — a global funnel that drops 40% looks fine until the by-source
-    * view shows one domain losing 99% (a filter tuned on English eating a
-    * low-resource language, a dedup threshold melting one crawl). One
-    * row per (stage, group) PRESENT AT that stage; a group absent from a
-    * stage's rows was filtered out entirely — the diff against the
-    * stage-0 group set IS the signal (an explicit zero row would require
-    * knowing the group universe, which only stage 0 defines).
-    *
-    * Scale shape: per stage, one map-side-combinable agg keyed by the
-    * group — output bounded by stages × groups metadata rows.
-    */
   /** Corpus snapshot diff — the release-to-release audit table: per doc
     * id, `added` (new only) / `removed` (old only) / `changed` (both,
     * content hash differs) / `unchanged`. The table a crawl refresh or a
@@ -631,6 +618,19 @@ object StatOps {
       .drop("__to", "__tn")
   }
 
+  /** [[funnelReport]] broken out by a group column (source / language /
+    * snapshot): the per-DOMAIN funnel, which is where mix bugs actually
+    * hide — a global funnel that drops 40% looks fine until the by-source
+    * view shows one domain losing 99% (a filter tuned on English eating a
+    * low-resource language, a dedup threshold melting one crawl). One
+    * row per (stage, group) PRESENT AT that stage; a group absent from a
+    * stage's rows was filtered out entirely — the diff against the
+    * stage-0 group set IS the signal (an explicit zero row would require
+    * knowing the group universe, which only stage 0 defines).
+    *
+    * Scale shape: per stage, one map-side-combinable agg keyed by the
+    * group — output bounded by stages × groups metadata rows.
+    */
   def funnelReportBy(stages: Seq[(String, DataFrame)], tokenCol: Column,
                      groupCol: String): DataFrame = {
     require(stages.nonEmpty, "funnelReportBy: stages must be non-empty")

@@ -78,11 +78,6 @@ object TextOps {
         expr(s"size(regexp_extract_all(`$textCol`, '[a-z]+|[0-9]+|[^a-z0-9 ]', 0))")
           .cast(LongType))
 
-  /** Quality-scoring signals, all in BASIS POINTS (floor(ratio·10000)):
-    * average word length, stopword ratio, alpha-char ratio — the
-    * length/punct/stopword heuristics of C4/Gopher-style corpus filters,
-    * shuffle-free.
-    */
   /** The stopword-ratio quality signal as a standalone Column — the
     * [[qualityScore]] `stop_ratio_bp` term, exposed for operators that
     * rank by quality without materializing the full signal frame
@@ -96,6 +91,11 @@ object TextOps {
       array_contains(array(stopwords.map(lit): _*), w))), size(words))
   }
 
+  /** Quality-scoring signals, all in BASIS POINTS (floor(ratio·10000)):
+    * average word length, stopword ratio, alpha-char ratio — the
+    * length/punct/stopword heuristics of C4/Gopher-style corpus filters,
+    * shuffle-free.
+    */
   def qualityScore(docs: DataFrame, textCol: String = "text",
                    stopwords: Seq[String] = Seq("the", "a", "of", "and", "in"))
       : DataFrame = {
@@ -588,13 +588,6 @@ object TextOps {
     counted.withColumn("red", redacted)
   }
 
-  /** Character-trigram-profile language ID — the classic n-gram heuristic
-    * (Cavnar & Trenkle '94 shape): score = |profile ∩ doc trigrams| /
-    * |doc trigrams| per language, predict the argmax. Profiles here are
-    * compact built-in stop-trigram sets; real deployments would broadcast a
-    * trained profile table instead (same plan shape: no shuffle, the profile
-    * is a plan-time literal).
-    */
   /** Char-TRIGRAM profiles only: every entry must be exactly 3 chars or
     * it can never match a 3-char shingle. (An earlier zh profile of
     * SINGLE CJK characters was structurally dead — zh could score only
@@ -639,6 +632,13 @@ object TextOps {
   require(langScript.keySet == langProfiles.keySet,
     "every profile language needs a script group")
 
+  /** Character-trigram-profile language ID — the classic n-gram heuristic
+    * (Cavnar & Trenkle '94 shape): score = |profile ∩ doc trigrams| /
+    * |doc trigrams| per language, predict the argmax. Profiles here are
+    * compact built-in stop-trigram sets; real deployments would broadcast a
+    * trained profile table instead (same plan shape: no shuffle, the profile
+    * is a plan-time literal).
+    */
   def langId(docs: DataFrame, textCol: String = "text"): DataFrame = {
     val tri = charShingles(col(textCol), 3)
     val scored = langProfiles.toSeq.sortBy(_._1).map { case (lang, prof) =>
@@ -673,6 +673,23 @@ object TextOps {
     * phrase in a real page is a fraction of a percent).
     */
   val ScriptShareBp: Long = 3000L
+
+  /** The counted script blocks as regex character-class ranges — ONE
+    * definition, interpolated verbatim into the DuckDB mirrors (literal
+    * BMP ranges behave identically in java.util.regex and RE2). Key
+    * order is the column order of [[scriptLangId]].
+    */
+  val ScriptRanges: Seq[(String, String)] = Seq(
+    "hira" -> "ぁ-ゟ",
+    "kata" -> "゠-ヿ",
+    "hangul" -> "가-힣",
+    "han" -> "㐀-䶿一-鿿", // unified han + Extension A (both BMP)
+    "thai" -> "ก-๛",
+    "cyrl" -> "Ѐ-ӿ",
+    "arab" -> "؀-ۿ",
+    "grek" -> "Ͱ-Ͽ",
+    "hebr" -> "֐-׿",
+    "deva" -> "ऀ-ॿ")
 
   /** SCRIPT-based language evidence (r18, share-thresholded and
     * extended to the non-latin alphabetic web in r19 — the declared
@@ -717,23 +734,6 @@ object TextOps {
     * share denominator only grows, making the threshold marginally
     * more conservative).
     */
-  /** The counted script blocks as regex character-class ranges — ONE
-    * definition, interpolated verbatim into the DuckDB mirrors (literal
-    * BMP ranges behave identically in java.util.regex and RE2). Key
-    * order is the column order of [[scriptLangId]].
-    */
-  val ScriptRanges: Seq[(String, String)] = Seq(
-    "hira" -> "ぁ-ゟ",
-    "kata" -> "゠-ヿ",
-    "hangul" -> "가-힣",
-    "han" -> "㐀-䶿一-鿿", // unified han + Extension A (both BMP)
-    "thai" -> "ก-๛",
-    "cyrl" -> "Ѐ-ӿ",
-    "arab" -> "؀-ۿ",
-    "grek" -> "Ͱ-Ͽ",
-    "hebr" -> "֐-׿",
-    "deva" -> "ऀ-ॿ")
-
   def scriptLangId(docs: DataFrame, textCol: String = "text"): DataFrame = {
     val ranges = ScriptRanges.toMap
     def inRange(key: String): Column =

@@ -42,15 +42,4 @@ object Tables {
   def bundle(spark: SparkSession, dir: String,
              names: Seq[String] = all): Map[String, DataFrame] =
     names.map(n => n -> load(spark, dir, n)).toMap
-
-  /** Register each table as a temp view — the SQL-context step analog
-    * (cherry `steps/datafusion_step.py:13-20` registers every table into a
-    * DataFusion SessionContext; here Catalyst is the session context).
-    */
-  def registerViews(spark: SparkSession, dir: String,
-                    names: Seq[String] = all): Unit =
-    // through bundle(), not a parallel load loop — view registration and
-    // DataFrame bundles must see the SAME table semantics
-    bundle(spark, dir, names).foreach { case (n, df) =>
-      df.createOrReplaceTempView(n) }
 }

@@ -74,15 +74,15 @@ class WireChainSource extends ChainProvider("chainwire", streams = true) {
 private[sources] object WireHttp {
   final case class Page(body: Array[Byte], nextBlock: Long, height: Long)
 
+  /** 4xx: the QUERY is wrong — retrying it is pure waste, fail fast. */
+  final class WireClientException(msg: String) extends java.io.IOException(msg)
+
   /** Bounded exponential-backoff retry for transient provider failures
     * (connection resets, 5xx under load). Safe here because wire queries
     * are idempotent reads: re-POSTing the same query returns the same
     * page. A 1000-task scan WILL see transient failures from a real
     * provider; without this, one blip kills the whole stage.
     */
-  /** 4xx: the QUERY is wrong — retrying it is pure waste, fail fast. */
-  final class WireClientException(msg: String) extends java.io.IOException(msg)
-
   def retry[A](attempts: Int, backoffMs: Long)(f: => A): A = {
     var i = 0
     while (true) {

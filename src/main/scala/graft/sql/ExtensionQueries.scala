@@ -168,10 +168,6 @@ object ExtensionQueries {
         "vec_id", "embedding", k = 32, iters = 2)
     }
 
-  /** Int8 quantization scale for the embeddings fixture — index metadata
-    * like the codebook (127/max|component|, one corpus aggregate),
-    * computed once per (app, dir).
-    */
   /** Learned BPE merge list (8 rules) for the documents fixture — the
     * tokenizer model, deterministic in (dir), trained once per run exactly
     * as a production pipeline trains its tokenizer once per corpus; the
@@ -183,6 +179,10 @@ object ExtensionQueries {
       BpeOps.trainMerges(spread(t(s, dir, "documents")), BpeMergeCount)._1
     }
 
+  /** Int8 quantization scale for the embeddings fixture — index metadata
+    * like the codebook (127/max|component|, one corpus aggregate),
+    * computed once per (app, dir).
+    */
   private def sqScaleOf(s: SparkSession, dir: String): Double =
     memoized(s, dir, "sqScale") {
       java.lang.Double.valueOf(
@@ -1384,13 +1384,6 @@ object ExtensionQueries {
        |     row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) rk
        |   FROM s_ivf)""".stripMargin
 
-  /** Trained-IVF CTEs mirroring `VectorOps.kmeansCentroidsExact` +
-    * `ivfTopKWithCentroids`: `iters` unrolled Lloyd rounds (cosine argmax
-    * assignment, ties → lowest cid; exact integer-scaled mean update —
-    * see the Scala doc for why every step is engine-independent), then
-    * the nProbe probe phase → CTE r_it. CTE names are t-prefixed so the
-    * fragment composes with `annIvf` in one WITH.
-    */
   /** Unrolled-Lloyd trained-centroid CTEs over an arbitrary vector CTE
     * `vCte(vec_id, embedding, nrm)` of dimension `dim` — the ONE
     * definition of the exact cross-engine k-means trainer mirror
@@ -1430,6 +1423,13 @@ object ExtensionQueries {
     (ctes.toSeq, prev)
   }
 
+  /** Trained-IVF CTEs mirroring `VectorOps.kmeansCentroidsExact` +
+    * `ivfTopKWithCentroids`: `iters` unrolled Lloyd rounds (cosine argmax
+    * assignment, ties → lowest cid; exact integer-scaled mean update —
+    * see the Scala doc for why every step is engine-independent), then
+    * the nProbe probe phase → CTE r_it. CTE names are t-prefixed so the
+    * fragment composes with `annIvf` in one WITH.
+    */
   private def annIvfTrainedSql(k: Int, iters: Int, nProbe: Int): String = {
     val (cb, fin) = lloydCbSql("t", "v", 64, seedCentSql(k), iters)
     val ctes = scala.collection.mutable.ArrayBuffer[String]()
@@ -1549,12 +1549,6 @@ object ExtensionQueries {
        |   FROM ex LEFT JOIN $ap ON ex.qid = $ap.qid AND ex.nid = $ap.nid
        |   GROUP BY ex.qid)""".stripMargin
 
-  /** IVF-PQ CTEs mirroring `VectorOps.pqSeedCodebooks` (m=4 × ksub=16
-    * slices of the 16 lowest-id vectors) + `ivfTopKPq`: argmin-d² encode
-    * with ties → lowest code, ADC cosine with ascending-subspace ordered
-    * folds → CTE r_pq. Composes after `annIvf` (needs its ic/iq cells);
-    * shared by x87 (the index) and x91 (its recall grade).
-    */
   /** PQ encode + ADC scoring CTEs over a codebook CTE `cbCte(s, j, cw,
     * cn2)` and the `annIvf` cells (ic/iq) — the ONE definition of the
     * argmin-d² encode (ties → lowest code) and ascending-subspace ADC
@@ -1591,6 +1585,12 @@ object ExtensionQueries {
        |   row_number() OVER (PARTITION BY qid ORDER BY cos DESC, nid) rk
        | FROM s_$pfx)""".stripMargin)
 
+  /** IVF-PQ CTEs mirroring `VectorOps.pqSeedCodebooks` (m=4 × ksub=16
+    * slices of the 16 lowest-id vectors) + `ivfTopKPq`: argmin-d² encode
+    * with ties → lowest code, ADC cosine with ascending-subspace ordered
+    * folds → CTE r_pq. Composes after `annIvf` (needs its ic/iq cells);
+    * shared by x87 (the index) and x91 (its recall grade).
+    */
   private lazy val annIvfPq = (Seq(
     s"""pqseed AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 j, embedding e
        |   FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16))""".stripMargin,
@@ -8195,11 +8195,6 @@ object ExtensionQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     catalog.transform((_, c) => c.build)
 
-  /** The struct_pack trigram-score list for the given profile
-    * languages over CTE column `tri` — the x18 scoring, restricted to
-    * a script group (langIdRouted's allowed-set filter). ONE
-    * definition for x18/x168/x172/x173/x174.
-    */
   /** The RELATIONAL trigram-scoring CTE chain over a CTE
     * `tr(doc_id, tri)` (r19): explode the distinct trigrams once, ONE
     * hash join against the (lang, trigram) profile rows, count per
@@ -9082,13 +9077,6 @@ object ExtensionQueries {
       |   FROM uc)""".stripMargin
   }
 
-  /** Shared curation-oracle CTE head (x34/x64): quality filter (q) →
-    * exact-dedup keepers (k1) → survivors (s) → their distinct 3-gram
-    * shingles (sh) and per-doc shingle counts (n). ONE definition — the
-    * two curation oracles may only differ in how they produce `inter`
-    * (the per-pair intersection counts), mirroring the Scala
-    * `curationSurvivors`/`curationResult` split.
-    */
   /** Shared BPE-training CTE chain (x70/x71): word-frequency table, char
     * symbol init, then 8 unrolled merge iterations. Each `v{i}` carries the
     * vocab after i merges; each `b{i}` the winning pair. The list_reduce
@@ -9126,6 +9114,13 @@ object ExtensionQueries {
 
   // lazy: referenced from the catalog's oracle interpolations above —
   // object-init order would otherwise read them as null
+  /** Shared curation-oracle CTE head (x34/x64): quality filter (q) →
+    * exact-dedup keepers (k1) → survivors (s) → their distinct 3-gram
+    * shingles (sh) and per-doc shingle counts (n). ONE definition — the
+    * two curation oracles may only differ in how they produce `inter`
+    * (the per-pair intersection counts), mirroring the Scala
+    * `curationSurvivors`/`curationResult` split.
+    */
   private lazy val curationHeadSql =
     s"""q AS (SELECT doc_id, text FROM documents
       |   WHERE len(string_split(text,' ')) >= 20

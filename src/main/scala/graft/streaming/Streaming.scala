@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 import graft.api.{Sink, Step}
 
@@ -323,11 +323,4 @@ object Streaming {
         r(rightTs) <= l(leftTs) + w)
       .drop(r(keyCol))
   }
-
-  /** Start a memory-sink query for tests/inspection; production sinks go
-    * through `pipelineWriter`.
-    */
-  def toMemory(df: DataFrame, name: String, mode: OutputMode = OutputMode.Append)
-      : StreamingQuery =
-    df.writeStream.format("memory").queryName(name).outputMode(mode).start()
 }

@@ -334,16 +334,20 @@ class FunctionsSpec extends SparkSpec {
     assert(df.head().isNullAt(0))
   }
 
-  // --- the shared unary-kernel contract (UnaryKernel) ----------------------
+  // --- the shared kernel contract (Kernel: UnaryKernel, BinaryKernel) ------
 
-  /** One unary kernel: its SQL call when registered, else its constructor
-    * (Column API); and arguments of types it must reject.
+  /** One kernel, varied in one argument: its SQL call when registered,
+    * else its constructor (Column API); and arguments of types it must
+    * reject.
     */
   private case class Unary(name: String, sql: Option[String => String],
                            mk: Expression => Expression, wrong: Seq[String])
 
   private val notString = Seq("i", "CAST('x' AS BINARY)")
   private val notBinary = Seq("i", "'x'")
+  private val notFloats = Seq("i", "'x'", "array(1)")
+  private def floats: Expression = Bridge.expression(expr("array(CAST(1 AS FLOAT))"))
+  private def bytes: Expression = Bridge.expression(lit(Array[Byte](1)))
   private val unaryKernels = Seq(
     Unary("deflate_len", Some(a => s"deflate_len($a)"), DeflateLen(_), notString),
     Unary("char_ngrams", Some(a => s"char_ngrams($a, 3)"), CharNGrams(_, 3), notString),
@@ -371,7 +375,27 @@ class FunctionsSpec extends SparkSpec {
     Unary("keccak256", Some(a => s"keccak256($a)"), Keccak256(_), notBinary),
     Unary("u256_to_decimal", Some(a => s"u256_to_decimal($a)"), U256ToDecimal(_), notBinary),
     Unary("u256_to_string", Some(a => s"u256_to_string($a)"), U256ToString(_), notBinary),
-    Unary("u256_from_string", Some(a => s"u256_from_string($a)"), U256FromString(_), notString))
+    Unary("u256_from_string", Some(a => s"u256_from_string($a)"), U256FromString(_), notString),
+    // the two-child kernels (BinaryKernel): one row per argument
+    // position, the other argument a well-typed expression
+    Unary("decode_charset", Some(a => s"decode_charset($a, 'utf-8')"),
+      DecodeCharset(_, Bridge.expression(lit("utf-8"))), notString),
+    Unary("decode_charset", Some(a => s"decode_charset('x', $a)"),
+      DecodeCharset(Bridge.expression(lit("x")), _), notString),
+    Unary("int8_vec_dot", None, Int8VecDot(_, bytes), notBinary),
+    Unary("int8_vec_dot", None, Int8VecDot(bytes, _), notBinary),
+    Unary("int8_float_vec_dot", None, Int8FloatVecDot(_, floats), notBinary),
+    Unary("int8_float_vec_dot", None, Int8FloatVecDot(bytes, _), notFloats),
+    Unary("nearest_centroid", None,
+      NearestCentroid(_, Bridge.expression(lit(1.0)), Array(1L), Array(1f), Array(1.0), 1),
+      notFloats),
+    Unary("nearest_centroid", None,
+      NearestCentroid(floats, _, Array(1L), Array(1f), Array(1.0), 1), notString),
+    // the unary kernels that joined the contract with them
+    Unary("quantize_vec", None, QuantizeVec(_, 1.0), notFloats),
+    Unary("pq_encode", None, PqEncode(_, Array(1f), Array(1.0), 1, 1, 1), notFloats),
+    Unary("svm_decode_instruction", None,
+      SvmDecodeInstruction("f8c6", "amount:u64", allowFail = true, _), notBinary))
 
   test("literal NULL arguments pass the plan-time type gates (NullType)") {
     import spark.implicits._

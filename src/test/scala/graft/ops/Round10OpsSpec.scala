@@ -4,12 +4,13 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Unit specs for the round-10 surface: the `nearDupPairs` default flip
-  * (LSH-verify is the path a caller gets without asking; the exact
-  * enumeration is an opt-in) and the `NearestCentroid` codegen'd cell
-  * assignment that replaced the n×k crossJoin in SemDeDup. Tiny fixtures;
-  * the oracle-gated x34/x64/x42/x65 cover the sf-scale cross-engine
-  * contract.
+/** Unit specs for the round-10 operator surface: the `nearDupPairs`
+  * default flip (LSH-verify is the path a caller gets without asking; the
+  * exact enumeration is an opt-in), the quantized IVF probe, multi-probe
+  * LSH, salting and duplicated spans. The kernel-level tests
+  * (`NearestCentroid`, `QuantizeVec`, the int8 dots, ABI/Borsh codegen)
+  * live in [[graft.functions.KernelsSpec]]. Tiny fixtures; the
+  * oracle-gated x34/x64/x42/x65 cover the sf-scale cross-engine contract.
   */
 class Round10OpsSpec extends SparkSpec {
   import spark.implicits._
@@ -47,82 +48,6 @@ class Round10OpsSpec extends SparkSpec {
       assert(r.getLong(2) >= 5000L,
         s"pair (${r.getLong(0)},${r.getLong(1)}) verified at ${r.getLong(2)}bp < threshold")
     }
-  }
-
-  test("NearestCentroid matches the broadcast-join argmax on every vector") {
-    val rnd = new scala.util.Random(7)
-    val vecs = (0L until 200L).map(i =>
-      (i, Array.fill(16)(rnd.nextFloat() * 2f - 1f))).toDF("vec_id", "embedding")
-    // reference assignment: the crossJoin + row_number form the DuckDB
-    // oracle mirrors (ties -> lowest cid)
-    val cent = vecs.orderBy(col("vec_id")).limit(24)
-      .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-      .withColumn("cn", VectorOps.norm(col("cv")))
-      .filter(col("cn") > 0)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("cid"))
-    val joined = vecs
-      .withColumn("nrm", VectorOps.norm(col("embedding")))
-      .filter(col("nrm") > 0)
-      .crossJoin(broadcast(cent))
-      .withColumn("ccos",
-        VectorOps.dot(col("embedding"), col("cv")) / (col("nrm") * col("cn")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    // expression assignment over the same codebook
-    val seeds = cent.orderBy("cid").collect().map(r =>
-      (r.getLong(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
-    val bridge = org.apache.spark.sql.graftbridge.Bridge
-    val assign = bridge.column(graft.functions.NearestCentroid(
-      bridge.expression(col("embedding")),
-      bridge.expression(VectorOps.norm(col("embedding"))),
-      seeds.map(_._1), seeds.flatMap(_._2), seeds.map(_._3), 16))
-    val expr = vecs.select(col("vec_id"), assign.as("cell"))
-    val diff = expr.as("a").join(joined.as("b"), Seq("vec_id"))
-      .filter(col("a.cell") =!= col("b.cell")).count()
-    assert(diff == 0L, s"$diff vectors assigned to a different cell")
-  }
-
-  test("QuantizeVec bytes match the reference clamp-floor on random vectors") {
-    val rnd = new scala.util.Random(11)
-    val vecs = (0L until 100L).map(i =>
-      (i, Array.fill(16)(rnd.nextFloat() * 4f - 2f))).toDF("id", "v")
-    val maxAbs = 2.0 // fixture range; deliberately NOT the corpus max so the clamp fires
-    val qscale = 127.0 / maxAbs
-    val got = vecs.select(col("id"), VectorOps.quantizeInt8(col("v"), qscale).as("qv"))
-      .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1))).toMap
-    vecs.collect().foreach { r =>
-      val exp = r.getSeq[Float](1).map { x =>
-        math.max(-127.0, math.min(127.0, math.floor(x.toDouble * qscale))).toByte
-      }.toArray
-      assert(got(r.getLong(0)).sameElements(exp), s"row ${r.getLong(0)}")
-    }
-  }
-
-  test("int8 dot kernels match reference left folds; length mismatch is loud") {
-    val rnd = new scala.util.Random(13)
-    val rows = (0L until 50L).map { i =>
-      val f = Array.fill(16)(rnd.nextFloat() * 2f - 1f)
-      val q = Array.fill(16)((rnd.nextInt(255) - 127).toByte)
-      (i, q, f)
-    }
-    val df = rows.toDF("id", "q", "f")
-    val got = df.select(col("id"),
-        VectorOps.int8Dot(col("q"), col("q")).as("qq"),
-        VectorOps.int8FloatDot(col("q"), col("f")).as("qf"))
-      .collect().map(r => (r.getLong(0), (r.getDouble(1), r.getDouble(2)))).toMap
-    rows.foreach { case (i, q, f) =>
-      val qq = q.foldLeft(0.0)((a, b) => a + b.toDouble * b.toDouble)
-      val qf = q.zip(f).foldLeft(0.0)((a, p) => a + p._1.toDouble * p._2.toDouble)
-      assert(got(i)._1 == qq && got(i)._2 == qf, s"row $i") // bit-exact, not approx
-    }
-    val bad = Seq((1L, Array[Byte](1, 2, 3), Array(1f, 2f))).toDF("id", "q", "f")
-    val e = intercept[Exception] {
-      bad.select(VectorOps.int8FloatDot(col("q"), col("f"))).collect()
-    }
-    assert(e.getMessage.contains("length mismatch")
-      || e.getCause != null && e.getCause.getMessage.contains("length mismatch"))
   }
 
   test("quantized IVF probe finds the planted nearest neighbors (ADC sanity)") {
@@ -211,72 +136,6 @@ class Round10OpsSpec extends SparkSpec {
     val max = groups.map(_.getLong(2)).max
     assert(max <= 2 * 400 / salts,
       s"hot key max reducer input $max exceeds 2x the even share ${400 / salts}")
-  }
-
-  test("sqScale and QuantizeVec fail loudly on degenerate input") {
-    intercept[IllegalArgumentException] {
-      graft.functions.QuantizeVec(
-        org.apache.spark.sql.graftbridge.Bridge.expression(col("v")), 0.0)
-    }
-    val zeros = Seq((1L, Array(0f, 0f))).toDF("id", "v")
-    intercept[IllegalArgumentException] {
-      VectorOps.sqScale(zeros, "v")
-    }
-  }
-
-  test("codegen'd ABI/Borsh decode matches eval semantics incl. allowFail nulls") {
-    import graft.functions.GraftFunctions
-    // Transfer(from indexed, to indexed, value): row 1 valid, row 2 has
-    // truncated data — allowFail=true must null the struct, not throw
-    val a1 = Array.tabulate[Byte](32)(i => if (i >= 12) (i + 1).toByte else 0)
-    val a2 = Array.tabulate[Byte](32)(i => if (i >= 12) (i + 7).toByte else 0)
-    val amount = { val b = new Array[Byte](32); b(31) = 42; b }
-    val rows = Seq(
-      (1L, a1, a2, amount),
-      (2L, a1, a2, Array[Byte](1, 2, 3))
-    ).toDF("id", "t1", "t2", "data")
-    val dec = GraftFunctions.evm_decode_event(
-      "Transfer(address indexed from, address indexed to, uint32 value)",
-      col("t1"), col("t2"), lit(null).cast("binary"), col("data"),
-      allowFail = true)
-    val got = rows.select(col("id"), dec.as("e"))
-      .select(col("id"), col("e.value").as("v")).orderBy("id").collect()
-    assert(got(0).getLong(1) == 42L, "valid row must decode through codegen")
-    assert(got(1).isNullAt(1), "allowFail row must null, not throw, in codegen")
-    // Borsh: u64 LE amount after an 8-byte discriminator
-    val disc = "0102030405060708"
-    val ok = Hex.decodeHex(disc) ++ Array[Byte](9, 0, 0, 0, 0, 0, 0, 0)
-    val badDisc = Array.fill[Byte](8)(0) ++ Array[Byte](9, 0, 0, 0, 0, 0, 0, 0)
-    val brows = Seq((1L, ok), (2L, badDisc)).toDF("id", "data")
-    val bdec = GraftFunctions.svm_decode_instruction(disc, "amount:u64",
-      col("data"), allowFail = true)
-    val bgot = brows.select(col("id"), bdec.as("e"))
-      .select(col("id"), col("e.amount").as("a")).orderBy("id").collect()
-    assert(bgot(0).getDecimal(1).longValueExact == 9L)
-    assert(bgot(1).isNullAt(1), "discriminator mismatch must null under allowFail")
-  }
-
-  private object Hex {
-    def decodeHex(s: String): Array[Byte] =
-      s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
-  }
-
-  test("NearestCentroid fails loudly on a malformed codebook") {
-    val bridge = org.apache.spark.sql.graftbridge.Bridge
-    val v = bridge.expression(col("embedding"))
-    val n = bridge.expression(lit(1.0))
-    intercept[IllegalArgumentException] { // unsorted cids break the tie rule
-      graft.functions.NearestCentroid(v, n,
-        Array(2L, 1L), Array.fill(4)(1f), Array(1.0, 1.0), 2)
-    }
-    intercept[IllegalArgumentException] { // zero-norm centroid
-      graft.functions.NearestCentroid(v, n,
-        Array(1L, 2L), Array.fill(4)(1f), Array(1.0, 0.0), 2)
-    }
-    intercept[IllegalArgumentException] { // flat length != k * dim
-      graft.functions.NearestCentroid(v, n,
-        Array(1L, 2L), Array.fill(3)(1f), Array(1.0, 1.0), 2)
-    }
   }
 
   test("duplicatedSpans finds maximal cross-doc spans, within-doc repeats, and merges adjacent coverage") {
