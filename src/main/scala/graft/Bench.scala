@@ -60,20 +60,20 @@ object Bench {
       val esc = Verify.jsonEscape _ // ONE escape definition for both channels
       Files.writeString(tmp.resolve("oracle_sql.json"),
         sqls.map { case (k, v) => s"${esc(k)}: ${esc(v)}" }.mkString("{", ",", "}"))
-      // table list derives from Tables.all (a hand-kept copy drifted
-      // risk-free until a new table silently never reached the oracle);
-      // per-table try so ONE missing parquet file at a scale factor only
-      // skips the queries that need it, not the whole denominator
-      val tableList = graft.sources.Tables.all.map(t => s""""$t"""").mkString(", ")
+      // one view per fixture parquet file — tools/selfcheck.py's rule,
+      // so the two DuckDB channels always name the same tables; per-view
+      // try so ONE unreadable file only skips the queries that need it,
+      // not the whole denominator
       Files.writeString(tmp.resolve("oracle_bench.py"),
-        s"""import json, sys, time, duckdb
+        s"""import glob, json, os, sys, time, duckdb
           |sf, sql_path, reps = sys.argv[1], sys.argv[2], int(sys.argv[3])
-          |sfq = sf.replace("'", "''")  # quote-safe inside the SQL literal
           |qs = json.load(open(sql_path))
           |con = duckdb.connect()
-          |for t in [$tableList]:
+          |for f in sorted(glob.glob(os.path.join(sf, "*.parquet"))):
+          |    t = os.path.basename(f)[:-len(".parquet")]
+          |    fq = f.replace("'", "''")  # quote-safe inside the SQL literal
           |    try:
-          |        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfq}/{t}.parquet')")
+          |        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{fq}')")
           |    except Exception as e:
           |        print(f"skipping view {t}: {e}", file=sys.stderr)
           |# pinned fixed-work probe (the Bench.ProbeSql twin): DuckDB's own

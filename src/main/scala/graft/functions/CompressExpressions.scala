@@ -272,7 +272,7 @@ object GunzipToString {
     */
   val MaxDecompressedBytes: Int = 256 << 20
 
-  private[functions] def drain(in: java.io.InputStream): Array[Byte] = {
+  private def drain(in: java.io.InputStream): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream(8192)
     val buf = new Array[Byte](8192)
     var n = in.read(buf)
@@ -284,18 +284,31 @@ object GunzipToString {
     bos.toByteArray
   }
 
-  def compute(bytes: Array[Byte]): UTF8String = {
+  /** The decompress core of every `*_to_string` kernel: opens the
+    * stream, drains it under [[MaxDecompressedBytes]] and closes it on
+    * EVERY path (a throwing read must not leave an inflater's native
+    * memory to the GC). NULL past the cap or when opening, reading or
+    * closing throws an IOException — or, for the native-backed codecs
+    * (`unchecked`), any RuntimeException.
+    */
+  private[functions] def decompressed(open: => java.io.InputStream,
+                                      unchecked: Boolean): Array[Byte] =
     try {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val out = drain(in)
-      in.close()
-      if (out == null) null
-      else UTF8String.fromString(Latin1View.toView(out))
+      val in = open
+      try drain(in) finally in.close()
     } catch {
       case _: java.io.IOException => null
+      case _: RuntimeException if unchecked => null
     }
-  }
+
+  /** The latin1-view string of decompressed bytes; NULL stays NULL. */
+  private[functions] def view(out: Array[Byte]): UTF8String =
+    if (out == null) null
+    else UTF8String.fromString(Latin1View.toView(out))
+
+  def compute(bytes: Array[Byte]): UTF8String =
+    view(decompressed(new java.util.zip.GZIPInputStream(
+      new java.io.ByteArrayInputStream(bytes)), unchecked = false))
 }
 
 /** Decompress a DEFLATE body (the HTTP `deflate` content coding) to
@@ -306,7 +319,7 @@ object GunzipToString {
   * same token, so a failed zlib parse retries nowrap before giving up
   * — both arms deterministic, NULL only when neither format parses.
   * Same never-throw + [[GunzipToString.MaxDecompressedBytes]] cap
-  * contract.
+  * contract ([[GunzipToString.decompressed]]).
   */
 case class InflateToString(child: Expression) extends UnaryKernel {
   override def dataType: DataType = StringType
@@ -320,26 +333,28 @@ case class InflateToString(child: Expression) extends UnaryKernel {
 }
 
 object InflateToString {
-  private def tryInflate(bytes: Array[Byte], nowrap: Boolean): Array[Byte] =
-    try {
-      val in = new java.util.zip.InflaterInputStream(
-        new java.io.ByteArrayInputStream(bytes),
-        new java.util.zip.Inflater(nowrap))
-      val out = GunzipToString.drain(in)
-      in.close()
-      out
-    } catch {
-      case _: java.io.IOException => null
-    }
-
-  def compute(bytes: Array[Byte]): UTF8String = {
-    // empty input is not a valid stream in either format
-    if (bytes.length == 0) return null
-    val zlib = tryInflate(bytes, nowrap = false)
-    val out = if (zlib != null) zlib else tryInflate(bytes, nowrap = true)
-    if (out == null) null
-    else UTF8String.fromString(Latin1View.toView(out))
+  /** zlib inflate of `bytes[off, off+len)` with the raw-deflate retry
+    * under the shared size cap — NULL when neither format parses (an
+    * empty slice is not a valid stream in either). Also the stream
+    * decoder of [[PdfToText]].
+    */
+  private[functions] def inflate(bytes: Array[Byte], off: Int,
+                                 len: Int): Array[Byte] = {
+    // an InflaterInputStream given its own Inflater does not end it on
+    // close(); this one does, so the native stream is freed on every path
+    def arm(nowrap: Boolean): Array[Byte] =
+      GunzipToString.decompressed(new java.util.zip.InflaterInputStream(
+          new java.io.ByteArrayInputStream(bytes, off, len),
+          new java.util.zip.Inflater(nowrap)) {
+        override def close(): Unit = try super.close() finally inf.end()
+      }, unchecked = false)
+    if (len <= 0) return null
+    val zlib = arm(nowrap = false)
+    if (zlib != null) zlib else arm(nowrap = true)
   }
+
+  def compute(bytes: Array[Byte]): UTF8String =
+    GunzipToString.view(inflate(bytes, 0, bytes.length))
 }
 
 object DeflateLen {
@@ -377,7 +392,8 @@ object DeflateLen {
   * probe holds NO hard reference: the class loads only inside
   * [[ZstdToString.Impl]], which is touched only after `Class.forName`
   * succeeded. Same never-throw + [[GunzipToString.MaxDecompressedBytes]]
-  * cap contract as the gzip/deflate kernels.
+  * cap contract as the gzip/deflate kernels
+  * ([[GunzipToString.decompressed]]).
   */
 case class ZstdToString(child: Expression) extends UnaryKernel {
   override def dataType: DataType = StringType
@@ -400,26 +416,15 @@ object ZstdToString {
   // touched when `available` is false, so a jar-less classpath never
   // links it
   private object Impl {
-    def decode(bytes: Array[Byte]): Array[Byte] = {
-      val in = new com.github.luben.zstd.ZstdInputStream(
+    def open(bytes: Array[Byte]): java.io.InputStream =
+      new com.github.luben.zstd.ZstdInputStream(
         new java.io.ByteArrayInputStream(bytes))
-      try GunzipToString.drain(in) finally in.close()
-    }
   }
 
-  def compute(bytes: Array[Byte]): UTF8String = {
-    if (!available || bytes.length == 0) return null
-    try {
-      val out = Impl.decode(bytes)
-      if (out == null) null
-      else UTF8String.fromString(Latin1View.toView(out))
-    } catch {
-      // IOException for malformed frames; the native-backed codecs can
-      // also surface unchecked exceptions — same NULL contract
-      case _: java.io.IOException => null
-      case _: RuntimeException => null
-    }
-  }
+  def compute(bytes: Array[Byte]): UTF8String =
+    if (!available || bytes.length == 0) null
+    else GunzipToString.view(
+      GunzipToString.decompressed(Impl.open(bytes), unchecked = true))
 }
 
 /** zstd-compress a LATIN1-VIEW string's bytes (RFC 8878) — the
@@ -494,25 +499,14 @@ object BrotliToString {
     def probe(): Boolean =
       org.apache.commons.compress.compressors.brotli.BrotliUtils
         .isBrotliCompressionAvailable
-    def decode(bytes: Array[Byte]): Array[Byte] = {
-      val in = new org.apache.commons.compress.compressors.brotli
+    def open(bytes: Array[Byte]): java.io.InputStream =
+      new org.apache.commons.compress.compressors.brotli
         .BrotliCompressorInputStream(
           new java.io.ByteArrayInputStream(bytes))
-      try GunzipToString.drain(in) finally in.close()
-    }
   }
 
-  def compute(bytes: Array[Byte]): UTF8String = {
-    if (!available || bytes.length == 0) return null
-    try {
-      val out = Impl.decode(bytes)
-      if (out == null) null
-      else UTF8String.fromString(Latin1View.toView(out))
-    } catch {
-      // IOException for malformed frames; the native-backed codecs can
-      // also surface unchecked exceptions — same NULL contract
-      case _: java.io.IOException => null
-      case _: RuntimeException => null
-    }
-  }
+  def compute(bytes: Array[Byte]): UTF8String =
+    if (!available || bytes.length == 0) null
+    else GunzipToString.view(
+      GunzipToString.decompressed(Impl.open(bytes), unchecked = true))
 }

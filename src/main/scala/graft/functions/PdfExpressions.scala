@@ -82,24 +82,6 @@ case class PdfToText(child: Expression) extends UnaryKernel {
 }
 
 object PdfToText {
-  /** zlib inflate with the raw-deflate retry and the shared size cap —
-    * the [[InflateToString]] arms over byte slices.
-    */
-  private def inflate(bytes: Array[Byte], off: Int, len: Int): Array[Byte] = {
-    def arm(nowrap: Boolean): Array[Byte] =
-      try {
-        val in = new java.util.zip.InflaterInputStream(
-          new java.io.ByteArrayInputStream(bytes, off, len),
-          new java.util.zip.Inflater(nowrap))
-        val out = GunzipToString.drain(in)
-        in.close()
-        out
-      } catch { case _: java.io.IOException => null }
-    if (len <= 0) return null
-    val zlib = arm(nowrap = false)
-    if (zlib != null) zlib else arm(nowrap = true)
-  }
-
   /** The balanced `<< … >>` dictionary ending nearest before `pos`,
     * or null when none balances — walked backwards counting nested
     * dict delimiters.
@@ -319,7 +301,7 @@ object PdfToText {
         if (dataEnd >= 0) {
           if (dict == null) anyFailed = true // no governing dict
           else if (dict.contains("/FlateDecode")) {
-            val raw = inflate(bytes, j, dataEnd - j)
+            val raw = InflateToString.inflate(bytes, j, dataEnd - j)
             if (raw == null) anyFailed = true // declared Flate, no inflate
             else extractOps(Latin1View.toView(raw), out)
           } else if (!dict.contains("/Filter")) {

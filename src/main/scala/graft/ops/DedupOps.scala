@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, RelationalGroupedDataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -110,21 +110,8 @@ object DedupOps {
                    salts: Int = 1, oph: Boolean = false): DataFrame =
     if (exact) ngramJaccardPairs(docs, idCol, shingles, threshold, maxBucket)
     else {
-      // materialized: verifyJaccardPairs references the candidate frame
-      // three times (two id projections + the pair join) — without this
-      // the banding pipeline re-executes per branch.
-      // oph = true swaps in the one-permutation signatures
-      // (numHashes-fold fewer hashes — the dominant cost of this stage
-      // at scale, measured 2.4× at sf1): the CANDIDATE set differs
-      // slightly (OPH's collision curve approximates classic banding's),
-      // but every emitted pair is still exact-verified ≥ threshold, so
-      // the output contract is identical either way.
-      val cand = (if (oph)
-          minhashLshCandidatesOph(docs, idCol, shingles, numHashes,
-            bandRows, maxBucket)
-        else
-          minhashLshCandidates(docs, idCol, shingles, numHashes,
-            bandRows, maxBucket)).localCheckpoint()
+      val cand = bandedCandidates(docs, idCol, shingles, numHashes,
+        bandRows, maxBucket, oph)
       // salts defaults to 1 (plain join): always-on salting pays its
       // replication tax on EVERY run — measured 8.6 s → 30.4 s on the
       // sf2 dense-candidate decade at salts = 8, where candidates are
@@ -134,6 +121,28 @@ object DedupOps {
       // split handles moderate shuffle skew adaptively at zero cost here.
       verifyJaccardPairs(cand, docs, idCol, shingles, threshold, salts)
     }
+
+  /** The MinHash-banding candidate pairs of the LSH-verify arms of
+    * [[nearDupPairs]] and [[containmentPairs]], materialized: the verify
+    * references the candidate frame three times (two id projections +
+    * the pair join) — without this the banding pipeline re-executes per
+    * branch. `oph = true` swaps in the one-permutation signatures
+    * (numHashes-fold fewer hashes — the dominant cost of this stage at
+    * scale, measured 2.4× at sf1): the CANDIDATE set differs slightly
+    * (OPH's collision curve approximates classic banding's), but every
+    * emitted pair is still exact-verified ≥ threshold, so the output
+    * contract is identical either way.
+    */
+  private def bandedCandidates(docs: DataFrame, idCol: String,
+                               shingles: Column, numHashes: Int,
+                               bandRows: Int, maxBucket: Int,
+                               oph: Boolean): DataFrame =
+    (if (oph)
+      minhashLshCandidatesOph(docs, idCol, shingles, numHashes,
+        bandRows, maxBucket)
+    else
+      minhashLshCandidates(docs, idCol, shingles, numHashes,
+        bandRows, maxBucket)).localCheckpoint()
 
   /** Exact inverted-index Jaccard enumeration — the `exact = true` arm of
     * [[nearDupPairs]]; large corpora should reach it only deliberately
@@ -257,17 +266,8 @@ object DedupOps {
           TextOps.bp(col("c"), col("bn")).as("cont_j_bp"))
         .filter(greatest(col("cont_i_bp"), col("cont_j_bp")) >= minBp)
     } else {
-      // materialized for the same reason as nearDupPairs: the verify
-      // references the candidate frame three times.
-      // oph = true swaps in the one-permutation signatures (the same
-      // trade as nearDupPairs: one hash per shingle, slightly different
-      // candidate curve, every emitted pair still exact-verified)
-      val cand = (if (oph)
-          minhashLshCandidatesOph(docs, idCol, shingles, numHashes,
-            bandRows, maxBucket)
-        else
-          minhashLshCandidates(docs, idCol, shingles, numHashes,
-            bandRows, maxBucket)).localCheckpoint()
+      val cand = bandedCandidates(docs, idCol, shingles, numHashes,
+        bandRows, maxBucket, oph)
       verifyContainmentPairs(cand, docs, idCol, shingles, threshold, salts)
     }
   }
@@ -604,36 +604,28 @@ object DedupOps {
     */
   def imageNearDupPairs(df: DataFrame, idCol: String, payloadCol: String,
                         maxHamming: Int,
-                        maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      "maxHamming must be in [0, 3]: 4-band blocking is only exhaustive below 4")
-    requireLongId(df, idCol)
-    val h = MultimodalOps.imageDHash(df, idCol, payloadCol)
-      .filter(col("dhash").isNotNull)
-      .select(col(idCol).as("id"), col("dhash").as("h64"))
-    hash64NearDupPairs(h, maxHamming, maxBucket)
-  }
+                        maxBucket: Int = DefaultMaxBucket): DataFrame =
+    hash64NearDupPairs(df, idCol,
+      MultimodalOps.imageDHash(df, idCol, payloadCol), "dhash",
+      maxHamming, maxBucket)
 
   /** Audio near-dup pairs by energy-envelope hash
     * (`MultimodalOps.audioEnergyHash` — real PCM decode for WAV/AIFF/AU):
     * the audio face of [[imageNearDupPairs]], finding re-encoded /
     * gain-scaled copies that defeat exact byte hashing. Same 4-band
-    * blocking, exhaustive for `maxHamming` ≤ 3.
+    * blocking ([[hash64NearDupPairs]]), exhaustive for `maxHamming` ≤ 3.
     */
   def audioNearDupPairs(df: DataFrame, idCol: String, payloadCol: String,
                         maxHamming: Int,
-                        maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      "maxHamming must be in [0, 3]: 4-band blocking is only exhaustive below 4")
-    requireLongId(df, idCol)
-    val h = MultimodalOps.audioEnergyHash(df, idCol, payloadCol)
-      .filter(col("ehash").isNotNull)
-      .select(col(idCol).as("id"), col("ehash").as("h64"))
-    hash64NearDupPairs(h, maxHamming, maxBucket)
-  }
+                        maxBucket: Int = DefaultMaxBucket): DataFrame =
+    hash64NearDupPairs(df, idCol,
+      MultimodalOps.audioEnergyHash(df, idCol, payloadCol), "ehash",
+      maxHamming, maxBucket)
 
-  /** Shared 64-bit-hash near-dup tail: block `h` = (id, h64) on 4×16-bit
-    * bands, enumerate within-bucket candidates, exact in-bucket Hamming
+  /** Shared 64-bit-hash near-dup core of [[imageNearDupPairs]] and
+    * [[audioNearDupPairs]]: the parameter guards, then the non-NULL
+    * `hashCol` values of `hashed` (built after the guards) blocked on
+    * 4×16-bit bands, within-bucket candidates, exact in-bucket Hamming
     * filter. Pigeonhole-exhaustive for hamming ≤ 3.
     *
     * TWO shuffles total: the hash rides through DocPairs' an/bn slots
@@ -643,8 +635,16 @@ object DedupOps {
     * with no distinct() pass and no hash-attach joins back to `h`. The
     * decode pipeline is consumed exactly once.
     */
-  private def hash64NearDupPairs(h: DataFrame, maxHamming: Int,
+  private def hash64NearDupPairs(df: DataFrame, idCol: String,
+                                 hashed: => DataFrame,
+                                 hashCol: String, maxHamming: Int,
                                  maxBucket: Int): DataFrame = {
+    require(maxHamming >= 0 && maxHamming <= 3,
+      "maxHamming must be in [0, 3]: 4-band blocking is only exhaustive below 4")
+    requireLongId(df, idCol)
+    val h = hashed
+      .filter(col(hashCol).isNotNull)
+      .select(col(idCol).as("id"), col(hashCol).as("h64"))
     val bands = h.select(col("id"), col("h64"),
       explode(array((0 until 4).map(b => struct(lit(b).as("bk"),
         shiftright(col("h64"), b * 16).bitwiseAND(lit(0xffffL)).as("bv"))): _*))
@@ -1031,6 +1031,22 @@ object DedupOps {
     */
   def duplicatedSpans(docs: DataFrame, idCol: String, textCol: String,
                       k: Int = 5, minCount: Long = 2): DataFrame = {
+    val pos = spanPositions(docs, idCol, textCol, k, minCount)
+    val dup = pos.groupBy(col("sh")).agg(count(lit(1)).as("occ"))
+      .filter(col("occ") >= minCount).select("sh")
+    spanIslands(pos.join(dup, Seq("sh")), k)
+      .agg(min(col("p")).as("ps"), max(col("p")).as("pe"))
+      .select(col("id").as(idCol),
+        col("ps").cast(LongType).as("span_start"),
+        (col("pe") + k - col("ps")).cast(LongType).as("span_tokens"))
+  }
+
+  /** The positional shingles of [[duplicatedSpans]] and [[removeSpans]]:
+    * after the parameter guards, one `(id, p, sh)` row per token position
+    * `p` whose k-token shingle hashes to `sh`.
+    */
+  private def spanPositions(docs: DataFrame, idCol: String, textCol: String,
+                            k: Int, minCount: Long): DataFrame = {
     require(k > 0, s"k must be positive (got $k)")
     require(minCount >= 2,
       s"minCount must be >= 2 — 1 would flag every position (got $minCount)")
@@ -1041,22 +1057,23 @@ object DedupOps {
         transform(sequence(lit(0), size(toks) - k),
           p => hash60(concat_ws(" ", slice(toks, p + 1, lit(k))))))
       .otherwise(array().cast(ArrayType(LongType)))
-    // (id, p, sh): the element INDEX of posexplode is the token position
-    val pos = docs.select(col(idCol).as("id"),
-      posexplode(shArr).as(Seq("p", "sh")))
-    val dup = pos.groupBy(col("sh")).agg(count(lit(1)).as("occ"))
-      .filter(col("occ") >= minCount).select("sh")
+    // the element INDEX of posexplode is the token position
+    docs.select(col(idCol).as("id"), posexplode(shArr).as(Seq("p", "sh")))
+  }
+
+  /** The island merge of the span ops: flagged `(id, p)` positions whose
+    * [p, p+k) coverage is contiguous fall in one island (a new island iff
+    * p > prev_p + k), grouped by `(id, island)` for the caller's bounds.
+    */
+  private def spanIslands(flagged: DataFrame,
+                          k: Int): RelationalGroupedDataset = {
     val wOrd = Window.partitionBy("id").orderBy("p")
-    pos.join(dup, Seq("sh"))
+    flagged
       .withColumn("brk",
         when(col("p") > lag(col("p"), 1).over(wOrd) + k, 1).otherwise(0))
       .withColumn("island", sum(col("brk")).over(
         wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .groupBy(col("id"), col("island"))
-      .agg(min(col("p")).as("ps"), max(col("p")).as("pe"))
-      .select(col("id").as(idCol),
-        col("ps").cast(LongType).as("span_start"),
-        (col("pe") + k - col("ps")).cast(LongType).as("span_tokens"))
   }
 
   /** Span REMOVAL — the second half of Lee et al. 2021 ("Deduplicating
@@ -1069,8 +1086,8 @@ object DedupOps {
     * Keep-first semantics, precisely: a position row is removable when its
     * k-token shingle occurs ≥ `minCount` times corpus-wide AND the row is
     * not the shingle's first occurrence. Removable positions merge into
-    * maximal spans with the same gaps-and-islands rule as
-    * [[duplicatedSpans]]; a token is dropped when ANY span covers its
+    * maximal spans with [[duplicatedSpans]]' gaps-and-islands rule (the
+    * shared [[spanIslands]]); a token is dropped when ANY span covers its
     * index, and the cleaned text is the surviving tokens rejoined in
     * order.
     *
@@ -1088,30 +1105,16 @@ object DedupOps {
     */
   def removeSpans(docs: DataFrame, idCol: String, textCol: String,
                   k: Int = 5, minCount: Long = 2): DataFrame = {
-    require(k > 0, s"k must be positive (got $k)")
-    require(minCount >= 2,
-      s"minCount must be >= 2 — 1 would flag every position (got $minCount)")
+    val pos = spanPositions(docs, idCol, textCol, k, minCount)
     val toks = split(col(textCol), " ")
-    val shArr = when(size(toks) >= k,
-        transform(sequence(lit(0), size(toks) - k),
-          p => hash60(concat_ws(" ", slice(toks, p + 1, lit(k))))))
-      .otherwise(array().cast(ArrayType(LongType)))
-    val pos = docs.select(col(idCol).as("id"),
-      posexplode(shArr).as(Seq("p", "sh")))
     // one row per duplicated hash: its occurrence count gate and its
     // first-occurrence coordinates (lexicographic struct min)
     val firsts = pos.groupBy(col("sh"))
       .agg(count(lit(1)).as("occ"), min(struct(col("id"), col("p"))).as("f"))
       .filter(col("occ") >= minCount)
       .select(col("sh"), col("f.id").as("fid"), col("f.p").as("fp"))
-    val wOrd = Window.partitionBy("id").orderBy("p")
-    val spans = pos.join(firsts, Seq("sh"))
-      .filter(!(col("id") === col("fid") && col("p") === col("fp")))
-      .withColumn("brk",
-        when(col("p") > lag(col("p"), 1).over(wOrd) + k, 1).otherwise(0))
-      .withColumn("island", sum(col("brk")).over(
-        wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("id"), col("island"))
+    val spans = spanIslands(pos.join(firsts, Seq("sh"))
+        .filter(!(col("id") === col("fid") && col("p") === col("fp"))), k)
       .agg(min(col("p")).as("ps"), (max(col("p")) + k).as("pe"))
       .groupBy(col("id"))
       .agg(collect_list(struct(col("ps"), col("pe"))).as("__spans"))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Link-graph analytics over the crawl first mile's edge stream —
   * the priority signal a frontier scheduler ranks its fetch queue by
@@ -58,55 +59,79 @@ object GraphOps {
                   srcCol: String = "src", dstCol: String = "dst",
                   wCol: String = "w", scale: Long = 1000000L,
                   dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
-    require(iterations >= 1 && iterations <= 64,
-      s"iterations must be in [1, 64], got $iterations")
-    require(scale >= 1000L && scale <= 1000000000L,
-      s"scale must be in [10^3, 10^9], got $scale")
+    requireRounds(iterations, scale)
     require(dampNum >= 0 && dampNum <= dampDen && dampDen >= 1,
       s"damping must satisfy 0 <= dampNum <= dampDen, got " +
         s"$dampNum/$dampDen")
     val base = scale * (dampDen - dampNum) / dampDen
-    val e0 = edges.select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"),
-        col(wCol).cast("long").as("w"))
-      .filter(col("src") =!= col("dst"))
     // out_w folded into the edge row once — the per-iteration join then
     // needs only the rank table
-    val e = e0.join(
-        e0.groupBy("src").agg(sum("w").as("out_w")), Seq("src"))
+    val (e, nodes) = linkGraph(edges, srcCol, dstCol, wCol)(e0 =>
+      e0.join(e0.groupBy("src").agg(sum("w").as("out_w")), Seq("src")))
+    // the seed rank table is a literal projection of the checkpointed
+    // node table — materializing it separately was a wasted job; only
+    // ITERATION RESULTS checkpoint (each replaces the previous)
+    val Seq(ranks) = rounds(iterations, Seq(e, nodes),
+        Seq(nodes.withColumn("rank", lit(scale)))) { case Seq(ranks) =>
+      val inflow = e.join(ranks, e("src") === ranks("node"))
+        .select(col("dst"), expr("(rank * w) div out_w").as("c"))
+        .groupBy("dst").agg(sum("c").as("s"))
+      Seq(nodes.join(inflow, nodes("node") === inflow("dst"), "left")
+        .select(col("node"),
+          (lit(base) + expr(s"($dampNum * coalesce(s, 0L)) div $dampDen"))
+            .as("rank"))
+        .localCheckpoint())
+    }
+    ranks
+  }
+
+  /** The argument guards [[pageRankInt]] and [[hitsInt]] share. */
+  private def requireRounds(iterations: Int, scale: Long): Unit = {
+    require(iterations >= 1 && iterations <= 64,
+      s"iterations must be in [1, 64], got $iterations")
+    require(scale >= 1000L && scale <= 1000000000L,
+      s"scale must be in [10^3, 10^9], got $scale")
+  }
+
+  /** The shared frame of [[pageRankInt]] and [[hitsInt]]: the `(src,
+    * dst, w)` edge projection without self-loops (`prep` may add
+    * per-edge columns) materialized ONCE, and the materialized node
+    * table = distinct sources ∪ targets.
+    */
+  private def linkGraph(edges: DataFrame, srcCol: String, dstCol: String,
+                        wCol: String)(
+                        prep: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val e = prep(edges.select(col(srcCol).cast("string").as("src"),
+        col(dstCol).cast("string").as("dst"),
+        col(wCol).cast("long").as("w"))
+      .filter(col("src") =!= col("dst")))
       .localCheckpoint()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
       .localCheckpoint()
-    // the seed rank table is a literal projection of the checkpointed
-    // node table — materializing it separately was a wasted job; only
-    // ITERATION RESULTS checkpoint (each replaces the previous)
-    var ranks = nodes.withColumn("rank", lit(scale))
-    var checkpointed = false
-    var it = 0
-    while (it < iterations) {
-      val inflow = e.join(ranks, e("src") === ranks("node"))
-        .select(col("dst"), expr("(rank * w) div out_w").as("c"))
-        .groupBy("dst").agg(sum("c").as("s"))
-      val next = nodes.join(inflow, nodes("node") === inflow("dst"), "left")
-        .select(col("node"),
-          (lit(base) + expr(s"($dampNum * coalesce(s, 0L)) div $dampDen"))
-            .as("rank"))
-        .localCheckpoint()
-      if (checkpointed) {
-        org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(ranks)
-      }
-      ranks = next
-      checkpointed = true
-      it += 1
+    (e, nodes)
+  }
+
+  /** `iterations` rounds of `step` from `seed`: each round's
+    * checkpointed frames replace the previous round's, whose blocks are
+    * released (the seed is a plan, not a checkpoint, so it is kept). The
+    * loop-scoped `graph` frames are released at the end too — the
+    * returned frames are materialized checkpoints (iterations >= 1) with
+    * no lineage into them, and repeated calls in a long-lived session
+    * must not pin them in executor storage.
+    */
+  private def rounds(iterations: Int, graph: Seq[DataFrame],
+                     seed: Seq[DataFrame])(
+                     step: Seq[DataFrame] => Seq[DataFrame]): Seq[DataFrame] = {
+    var cur = seed
+    for (it <- 0 until iterations) {
+      val next = step(cur)
+      if (it > 0) cur.foreach(Bridge.unpersistCheckpoint)
+      cur = next
     }
-    // the edge and node lists are loop-scoped: the returned ranks are a
-    // materialized checkpoint (iterations >= 1) with no lineage into
-    // them, so their blocks can go now
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(e)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(nodes)
-    ranks
+    graph.foreach(Bridge.unpersistCheckpoint)
+    cur
   }
 
   /** HITS hubs & authorities (Kleinberg JACM 1999) in exact integer
@@ -129,8 +154,9 @@ object GraphOps {
     *    `hub(v) = Σ_{v→w} auth'(w)·w`, normalized the same way;
     *  - a node with no in-edges holds authority 0, no out-edges hub 0.
     *
-    * Scale shape: the [[pageRankInt]] discipline — edges materialize
-    * ONCE (localCheckpoint); each iteration is two node-sized keyed
+    * Scale shape: the [[pageRankInt]] discipline, one code path
+    * ([[linkGraph]], [[rounds]]) — edges materialize ONCE
+    * (localCheckpoint); each iteration is two node-sized keyed
     * joins + two map-side-combinable sums + two 1-ROW max aggregates
     * broadcast back (a crossJoin of a single row — never a shuffle of
     * the node table). Iteration results checkpoint and replace;
@@ -146,19 +172,8 @@ object GraphOps {
   def hitsInt(edges: DataFrame, iterations: Int,
               srcCol: String = "src", dstCol: String = "dst",
               wCol: String = "w", scale: Long = 1000000L): DataFrame = {
-    require(iterations >= 1 && iterations <= 64,
-      s"iterations must be in [1, 64], got $iterations")
-    require(scale >= 1000L && scale <= 1000000000L,
-      s"scale must be in [10^3, 10^9], got $scale")
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"),
-        col(wCol).cast("long").as("w"))
-      .filter(col("src") =!= col("dst"))
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint()
+    requireRounds(iterations, scale)
+    val (e, nodes) = linkGraph(edges, srcCol, dstCol, wCol)(identity)
     // normalize a raw score column against its 1-row max (broadcast
     // cross join; max of an all-zero round is 0 -> greatest(..,1)
     // keeps the div total and the zeros zero)
@@ -170,12 +185,9 @@ object GraphOps {
           expr(s"(coalesce($c, 0L) * $scale) div greatest(__mx, 1L)")
             .as(c))
     }
-    var hubs = nodes.withColumn("hub", lit(scale))
-    var auths: DataFrame = null
-    var prevH: DataFrame = null
-    var prevA: DataFrame = null
-    var it = 0
-    while (it < iterations) {
+    val Seq(auths, hubs) = rounds(iterations, Seq(e, nodes),
+        Seq(nodes.withColumn("hub", lit(scale)))) { prev =>
+      val hubs = prev.last
       val aRaw = e.join(hubs, e("src") === hubs("node"))
         .select(col("dst"), expr("hub * w").as("c"))
         .groupBy(col("dst").as("node")).agg(sum("c").as("authority"))
@@ -183,26 +195,8 @@ object GraphOps {
       val hRaw = e.join(aN, e("dst") === aN("node"))
         .select(col("src"), expr("authority * w").as("c"))
         .groupBy(col("src").as("node")).agg(sum("c").as("hub"))
-      val hN = normalized(hRaw, "hub").localCheckpoint()
-      if (prevA != null) {
-        org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(prevA)
-      }
-      if (prevH != null) {
-        org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(prevH)
-      }
-      auths = aN
-      hubs = hN
-      prevA = aN
-      prevH = hN
-      it += 1
+      Seq(aN, normalized(hRaw, "hub").localCheckpoint())
     }
-    // mirror pageRankInt: the returned frames join the FINAL
-    // checkpointed aN/hN (materialized, no lineage into e/nodes), so
-    // the edge and node blocks can go now — repeated calls in a
-    // long-lived session must not pin them in executor storage
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(e)
-    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(nodes)
-    val out = auths.join(hubs, Seq("node"))
-    out
+    auths.join(hubs, Seq("node"))
   }
 }

@@ -89,7 +89,8 @@ object HtmlOps {
   def c4KeptLines(docs: DataFrame, idCol: String, htmlCol: String,
                   minWords: Int = 3, dedupLines: Boolean = true): DataFrame = {
     require(minWords >= 1, s"minWords must be >= 1, got $minWords")
-    val lines = keptLineStage(docs, idCol, Nil, htmlCol, minWords)
+    val lines = keptLineStage(docs, idCol, Nil, htmlCol, C4Terminals,
+      lit(minWords))
     if (!dedupLines) lines
     else {
       val w = Window.partitionBy(col("line"))
@@ -153,7 +154,9 @@ object HtmlOps {
     *
     * The "javascript" boilerplate rule stays global (the string is
     * language-independent chrome). A page whose language has no
-    * profile row gets exactly [[c4KeptLines]]' English decisions.
+    * profile row gets exactly [[c4KeptLines]]' English decisions: both
+    * ops run the one [[keptLineStage]], whose English terminal set is
+    * the no-profile default here.
     * No cross-page line dedup here — compose with [[c4KeptLines]]'
     * dedup window or [[domainCleanPages]] downstream if needed.
     *
@@ -170,58 +173,47 @@ object HtmlOps {
                         profiles: DataFrame,
                         langCol: String = "lang",
                         carry: Seq[String] = Nil): DataFrame = {
-    // Deterministic per-lang collapse (the soft404Flags/gopherFilterByLang
-    // discipline, r19): a duplicate lang row in `profiles` must not
-    // multiply every doc of that language through the left join.
-    val prof = broadcast(profiles.select(col("lang").as(langCol),
-        col("term_chars").as("__p_term_chars"),
-        col("min_line_words").as("__p_min_line_words"),
-        col("min_line_chars").as("__p_min_line_chars"))
-      .groupBy(langCol)
-      .agg(max(struct(col("__p_term_chars"), col("__p_min_line_words"),
-        col("__p_min_line_chars"))).as("__p"))
-      .select(col(langCol), col("__p.__p_term_chars").as("__p_term_chars"),
-        col("__p.__p_min_line_words").as("__p_min_line_words"),
-        col("__p.__p_min_line_chars").as("__p_min_line_chars")))
-    val keys = Seq(col(idCol), col(langCol)) ++ carry.map(col)
-    docs.join(prof, Seq(langCol), "left")
-      .select(keys ++ Seq(col("__p_term_chars"),
-        col("__p_min_line_words"), col("__p_min_line_chars"),
-        posexplode(split(htmlToText(col(htmlCol)), "\n"))
-          .as(Seq("line_no", "__raw"))): _*)
-      .select(keys ++ Seq(col("__p_term_chars"),
-        col("__p_min_line_words"), col("__p_min_line_chars"),
-        col("line_no").cast(LongType).as("line_no"),
-        trim(regexp_replace(col("__raw"), "\\s+", " ")).as("line")): _*)
-      .filter(
-        array_contains(
-          coalesce(col("__p_term_chars"),
-            array(Seq(".", "!", "?", "\"").map(lit): _*)),
-          substring(col("line"), -1, 1)) &&
-        size(split(col("line"), " ")) >=
-          coalesce(col("__p_min_line_words"), lit(3L)) &&
-        length(col("line")) >=
-          coalesce(col("__p_min_line_chars"), lit(1L)) &&
-        !lower(col("line")).contains("javascript"))
-      .select(keys ++ Seq(col("line_no"), col("line")): _*)
+    val pcols = Seq("term_chars", "min_line_words", "min_line_chars")
+    keptLineStage(
+        docs.join(TextOps.profileByLang(profiles, langCol, pcols),
+          Seq(langCol), "left"),
+        idCol, (langCol +: carry) ++ pcols.map(c => s"__p_$c"), htmlCol,
+        coalesce(col("__p_term_chars"), C4Terminals),
+        coalesce(col("__p_min_line_words"), lit(3L)),
+        Some(coalesce(col("__p_min_line_chars"), lit(1L))))
+      .select((Seq(idCol, langCol) ++ carry ++ Seq("line_no", "line"))
+        .map(col): _*)
   }
 
-  /** The shared line stage of [[c4KeptLines]] and [[domainCleanPages]]:
-    * extract → split → normalize → the three line rules, with optional
-    * carried columns (a provenance key like the page's domain) riding
-    * along the narrow map. ONE definition of the line rules.
+  /** C4's English terminal set: a kept line's LAST character is one of
+    * `. ! ? "`. A set test on the last character, not a `[.!?"]$`
+    * regex: java.util.regex's `$` also matches before a final U+0085,
+    * U+2028 or U+2029, which neither whitespace collapsing nor `trim`
+    * removes.
+    */
+  private val C4Terminals: Column = array(Seq(".", "!", "?", "\"").map(lit): _*)
+
+  /** The line stage of [[c4KeptLines]], [[c4KeptLinesByLang]] and
+    * [[domainCleanPages]]: extract → split → normalize → the line rules,
+    * with carried columns (a provenance key like the page's domain, or a
+    * profile's values) riding along the narrow map. ONE definition of
+    * the line rules: the last character is in `termChars`, at least
+    * `minWords` space-split words, at least `minChars` characters when
+    * given, and no "javascript" mention.
     */
   private def keptLineStage(docs: DataFrame, idCol: String,
                             carry: Seq[String], htmlCol: String,
-                            minWords: Int): DataFrame = {
+                            termChars: Column, minWords: Column,
+                            minChars: Option[Column] = None): DataFrame = {
     val keys = col(idCol) +: carry.map(col)
+    val rules = array_contains(termChars, substring(col("line"), -1, 1)) &&
+      size(split(col("line"), " ")) >= minWords
     docs
       .select(keys :+ posexplode(split(htmlToText(col(htmlCol)), "\n"))
         .as(Seq("line_no", "__raw")): _*)
       .select(keys ++ Seq(col("line_no").cast(LongType).as("line_no"),
         trim(regexp_replace(col("__raw"), "\\s+", " ")).as("line")): _*)
-      .filter(col("line").rlike("[.!?\"]$") &&
-        size(split(col("line"), " ")) >= minWords &&
+      .filter(minChars.fold(rules)(c => rules && length(col("line")) >= c) &&
         !lower(col("line")).contains("javascript"))
   }
 
@@ -272,7 +264,8 @@ object HtmlOps {
                        domainCol: String, minPages: Int = 3,
                        minWords: Int = 3, minLines: Int = 5): DataFrame = {
     require(minPages >= 2, s"minPages must be >= 2, got $minPages")
-    val lines = keptLineStage(docs, idCol, Seq(domainCol), htmlCol, minWords)
+    val lines = keptLineStage(docs, idCol, Seq(domainCol), htmlCol,
+      C4Terminals, lit(minWords))
     val census = lines
       .groupBy(col(domainCol), col("line"))
       .agg(countDistinct(col(idCol)).as("__n_pages"))

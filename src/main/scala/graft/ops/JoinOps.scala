@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import SampleOps.requireFresh
 
 /** Join operators beyond Spark's built-in set: temporal as-of join and a
   * salting utility for skewed keys. The reference has neither (SURVEY §2.4
@@ -15,18 +16,6 @@ import org.apache.spark.sql.functions._
   * values by the zone offset. See the [[TimeOps]] note.
   */
 object JoinOps {
-
-  /** Loud reserved-name gate (the SampleOps convention): these ops stage
-    * `__`-prefixed scratch columns and drop them on the way out — an
-    * input already carrying one would be silently overwritten and then
-    * deleted from the output.
-    */
-  private def requireFresh(df: DataFrame, names: String*): Unit = {
-    val clash = names.filter(df.columns.contains)
-    require(clash.isEmpty,
-      s"input already has internal column(s) ${clash.mkString(", ")} — " +
-        "rename before calling (they would be overwritten and dropped)")
-  }
 
   /** Backward as-of join: for every left row, the single most recent right
     * row with `right.tsCol <= left.tsCol` (inclusive), per join key —

@@ -316,26 +316,45 @@ object MultimodalOps {
     * heavyweight codec state. Null or undecodable payloads yield null
     * feature columns (row kept, never a fabricated value).
     */
-  def extractImageFeatures(df: DataFrame, payloadCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields ++ imageFeatureSchema.fields)
+  def extractImageFeatures(df: DataFrame, payloadCol: String): DataFrame =
+    decodePayloads(df, payloadCol,
+        StructType(df.schema.fields ++ imageFeatureSchema.fields),
+        imageIO = true) { (r, payload) =>
+      val f = if (payload == null) null
+              else JdkImageDecoder.imageFeatures(payload)
+      // Seq[Any], not Seq(...): Scala would numerically widen the Ints
+      // to Double alongside luma and break the row encoder.
+      val feats =
+        if (f == null) Seq[Any](null, null, null, null)
+        else Seq[Any](f.width, f.height, f.nChannels, f.meanLuma)
+      Row.fromSeq(r.toSeq ++ feats)
+    }
+
+  /** The partition-batched decode loop of every payload op here: each
+    * row with its `payloadCol` bytes (NULL stays null) maps through
+    * `decode` to one `outSchema` row. `imageIO` runs the per-partition
+    * decoder init: ImageIO's disk-backed cache off, so decoding stays
+    * in-memory on executors (no /tmp churn per image).
+    */
+  private def decodePayloads(df: DataFrame, payloadCol: String,
+                             outSchema: StructType, imageIO: Boolean)(
+                             decode: (Row, Array[Byte]) => Row): DataFrame = {
     val payloadIdx = df.schema.fieldIndex(payloadCol)
-    val enc = RowEncoder.encoderFor(outSchema)
     df.mapPartitions { rows =>
-      // per-partition decoder init: disable ImageIO's disk-backed cache so
-      // decoding stays in-memory on executors (no /tmp churn per image)
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        val f = if (payload == null) null
-                else JdkImageDecoder.imageFeatures(payload)
-        // Seq[Any], not Seq(...): Scala would numerically widen the Ints
-        // to Double alongside luma and break the row encoder.
-        val feats =
-          if (f == null) Seq[Any](null, null, null, null)
-          else Seq[Any](f.width, f.height, f.nChannels, f.meanLuma)
-        Row.fromSeq(r.toSeq ++ feats)
-      }
-    }(enc)
+      if (imageIO) javax.imageio.ImageIO.setUseCache(false)
+      rows.map(r => decode(r, r.getAs[Array[Byte]](payloadIdx)))
+    }(RowEncoder.encoderFor(outSchema))
+  }
+
+  /** [[decodePayloads]] to `(idCol, out)` rows: the id beside
+    * `decode(payload)`.
+    */
+  private def decodeById(df: DataFrame, idCol: String, payloadCol: String,
+                         out: StructField, imageIO: Boolean)(
+                         decode: Array[Byte] => Any): DataFrame = {
+    val idIdx = df.schema.fieldIndex(idCol)
+    decodePayloads(df, payloadCol, StructType(Seq(df.schema(idCol), out)),
+      imageIO)((r, payload) => Row(r.get(idIdx), decode(payload)))
   }
 
   /** Per-image 64-bit perceptual hash ([[JdkImageDecoder.dHash64]]) —
@@ -343,21 +362,11 @@ object MultimodalOps {
     * null `dhash` (row kept). The blocking key for image near-dup
     * detection: see `DedupOps.imageNearDupPairs`.
     */
-  def imageDHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("dhash", LongType, nullable = true)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
-    val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        Row(r.get(idIdx),
-          if (payload == null) null else JdkImageDecoder.dHash64(payload))
-      }
-    }(enc)
-  }
+  def imageDHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    decodeById(df, idCol, payloadCol,
+        StructField("dhash", LongType, nullable = true), imageIO = true) {
+      payload => if (payload == null) null else JdkImageDecoder.dHash64(payload)
+    }
 
   /** 64-bit audio energy-envelope hash over DECODED PCM samples (not
     * header metadata): mean |amplitude| over 65 equal time windows, bit i
@@ -423,54 +432,34 @@ object MultimodalOps {
     * null `ehash` (row kept). Blocking key for audio near-dup detection:
     * see `DedupOps.audioNearDupPairs`.
     */
-  def audioEnergyHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    val outSchema = StructType(Seq(df.schema(idCol),
-      StructField("ehash", LongType, nullable = true)))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
-    val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        Row(r.get(idIdx),
-          if (payload == null) null else AudioEnergyHash.hash64(payload))
-      }
-    }(enc)
-  }
+  def audioEnergyHash(df: DataFrame, idCol: String, payloadCol: String): DataFrame =
+    decodeById(df, idCol, payloadCol,
+        StructField("ehash", LongType, nullable = true), imageIO = false) {
+      payload => if (payload == null) null else AudioEnergyHash.hash64(payload)
+    }
 
   /** Audio resample metadata over the payload column — REAL header decode
     * via `javax.sound.sampled` (WAV/AIFF/AU with the bare JDK): narrow,
     * shuffle-free. Null or undecodable payloads yield a null frame_count
     * (row kept, never a fabricated value).
     */
-  def audioFrames(df: DataFrame, payloadCol: String, targetRate: Int = 16000): DataFrame = {
-    val outSchema = df.schema.add("frame_count", LongType)
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
-    val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        val n = if (payload == null) -1L
-                else JdkAudioDecoder.resampledFrameCount(payload, targetRate)
-        Row.fromSeq(r.toSeq :+ (if (n < 0) null else n))
-      }
-    }(enc)
-  }
+  def audioFrames(df: DataFrame, payloadCol: String, targetRate: Int = 16000): DataFrame =
+    decodePayloads(df, payloadCol, df.schema.add("frame_count", LongType),
+        imageIO = false) { (r, payload) =>
+      val n = if (payload == null) -1L
+              else JdkAudioDecoder.resampledFrameCount(payload, targetRate)
+      Row.fromSeq(r.toSeq :+ (if (n < 0) null else n))
+    }
 
   /** Video container metadata — REAL MP4/ISO-BMFF header parse (duration
     * from moov/mvhd): narrow, shuffle-free; null/unparseable → null.
     */
-  def videoMeta(df: DataFrame, payloadCol: String): DataFrame = {
-    val outSchema = df.schema.add("duration_ms", LongType)
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
-    val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val d = Mp4Meta.durationMs(r.getAs[Array[Byte]](payloadIdx))
-        Row.fromSeq(r.toSeq :+ (if (d < 0) null else d))
-      }
-    }(enc)
-  }
+  def videoMeta(df: DataFrame, payloadCol: String): DataFrame =
+    decodePayloads(df, payloadCol, df.schema.add("duration_ms", LongType),
+        imageIO = false) { (r, payload) =>
+      val d = Mp4Meta.durationMs(payload)
+      Row.fromSeq(r.toSeq :+ (if (d < 0) null else d))
+    }
 
   /** REAL animated-frame extraction → exploded (id, frame_index, width,
     * height, mean_luma) rows, decoded per partition by the stock-JDK GIF
@@ -485,21 +474,11 @@ object MultimodalOps {
       StructField("frame_width", IntegerType, nullable = false),
       StructField("frame_height", IntegerType, nullable = false),
       StructField("frame_luma", DoubleType, nullable = false)))
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("frame", ArrayType(frameStruct))))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
-    val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false) // per-partition decoder init
-      rows.map { r =>
-        val frames = GifFrames
-          .sampleFrames(r.getAs[Array[Byte]](payloadIdx), everyN, maxFrames)
-          .map(f => Row(f.index, f.width, f.height, f.meanLuma))
-        Row(r.get(idIdx), frames)
-      }
-    }(enc)
+    decodeById(df, idCol, payloadCol,
+        StructField("frame", ArrayType(frameStruct)), imageIO = true) {
+      payload => GifFrames.sampleFrames(payload, everyN, maxFrames)
+        .map(f => Row(f.index, f.width, f.height, f.meanLuma))
+    }
       // explode_outer, not explode: ids whose payload is null/undecodable
       // have an empty frame array and must SURVIVE with null frame columns
       // — the "row kept, never a fabricated value" contract of
@@ -519,20 +498,11 @@ object MultimodalOps {
     */
   def sampleVideoFrames(df: DataFrame, idCol: String, payloadCol: String,
                         everyN: Int = 30): DataFrame = {
-    val outSchema = StructType(Seq(
-      df.schema(idCol),
-      StructField("frame_offset", ArrayType(LongType))))
-    val idIdx = df.schema.fieldIndex(idCol)
-    val payloadIdx = df.schema.fieldIndex(payloadCol)
-    val enc = RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        val offs = if (payload == null) Seq.empty[Long]
-                   else StubDecoders.videoFrameOffsets(payload, everyN)
-        Row(r.get(idIdx), offs)
-      }
-    }(enc)
+    decodeById(df, idCol, payloadCol,
+        StructField("frame_offset", ArrayType(LongType)), imageIO = false) {
+      payload => if (payload == null) Seq.empty[Long]
+                 else StubDecoders.videoFrameOffsets(payload, everyN)
+    }
       .withColumn("frame_offset", explode(col("frame_offset")))
   }
 }

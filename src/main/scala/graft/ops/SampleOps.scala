@@ -23,9 +23,10 @@ object SampleOps {
   /** Loud reserved-name gate: the ops here stage scratch columns under
     * `__`-prefixed names and drop them on the way out — an input already
     * carrying one would be silently overwritten and then DELETED from
-    * the output (r15 review). One definition for every op that stages.
+    * the output (r15 review). One definition for every op that stages,
+    * here and in [[JoinOps]].
     */
-  private def requireFresh(df: DataFrame, names: String*): Unit = {
+  private[ops] def requireFresh(df: DataFrame, names: String*): Unit = {
     val clash = names.filter(df.columns.contains)
     require(clash.isEmpty,
       s"input already has internal column(s) ${clash.mkString(", ")} — " +

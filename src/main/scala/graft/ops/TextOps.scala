@@ -639,27 +639,33 @@ object TextOps {
     * trained profile table instead (same plan shape: no shuffle, the profile
     * is a plan-time literal).
     */
-  def langId(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val tri = charShingles(col(textCol), 3)
-    val scored = langProfiles.toSeq.sortBy(_._1).map { case (lang, prof) =>
-      val profArr = array(prof.map(lit): _*)
-      // tri is distinct, so |array_intersect| == filter-count, but
-      // array_intersect runs a native hash-set probe instead of an
-      // interpreted lambda per element (~10× on wide corpora).
-      struct(
-        size(array_intersect(tri, profArr)).cast(LongType).as("hits"),
-        lit(lang).as("lang"))
-    }
+  def langId(docs: DataFrame, textCol: String = "text"): DataFrame =
     // argmax by (hits, lang) — array_max over structs compares field-wise,
     // so ties break deterministically on the lexicographically-largest
     // lang. Zero hits everywhere = NO evidence → "und" (undetermined),
     // never a fabricated winner.
-    docs.withColumn("__scores", array(scored: _*))
+    docs.withColumn("__scores", trigramScores(col(textCol)))
       .withColumn("pred_hits", array_max(col("__scores")).getField("hits"))
       .withColumn("pred_lang",
         when(col("pred_hits") === 0L, lit("und"))
           .otherwise(array_max(col("__scores")).getField("lang")))
       .drop("__scores")
+
+  /** The trigram score list of [[langId]] and [[langIdRouted]]: one
+    * `(hits, lang)` struct per profile, in language order, where `hits`
+    * = |profile ∩ distinct char trigrams of `text`|.
+    */
+  private def trigramScores(text: Column): Column = {
+    val tri = charShingles(text, 3)
+    array(langProfiles.toSeq.sortBy(_._1).map { case (lang, prof) =>
+      // tri is distinct, so |array_intersect| == filter-count, but
+      // array_intersect runs a native hash-set probe instead of an
+      // interpreted lambda per element (~10× on wide corpora).
+      struct(
+        size(array_intersect(tri, array(prof.map(lit): _*)))
+          .cast(LongType).as("hits"),
+        lit(lang).as("lang"))
+    }: _*)
   }
 
   /** Script evidence fires only when the script's codepoints are at
@@ -789,13 +795,6 @@ object TextOps {
     * shuffles.
     */
   def langIdRouted(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val tri = charShingles(col(textCol), 3)
-    val scored = langProfiles.toSeq.sortBy(_._1).map { case (lang, prof) =>
-      struct(
-        size(array_intersect(tri, array(prof.map(lit): _*)))
-          .cast(LongType).as("hits"),
-        lit(lang).as("lang"))
-    }
     def groupArr(g: String): Column =
       array(langScript.collect { case (l, s) if s == g => l }
         .toSeq.sorted.map(lit): _*)
@@ -806,7 +805,7 @@ object TextOps {
       .when(col("script_lang") === "deva", groupArr("deva"))
       .otherwise(groupArr("latn"))
     scriptLangId(docs, textCol)
-      .withColumn("__m", array_max(filter(array(scored: _*),
+      .withColumn("__m", array_max(filter(trigramScores(col(textCol)),
         s => array_contains(allowed, s.getField("lang")))))
       .withColumn("pred_hits", col("__m").getField("hits"))
       .withColumn("pred_lang",
@@ -949,38 +948,10 @@ object TextOps {
   def gopherFilter(docs: DataFrame, textCol: String = "text",
                    minWords: Long = 50L, maxWords: Long = 100000L,
                    minStopHits: Long = 2L): DataFrame = {
-    val words = split(col(textCol), " ")
-    val nWords = size(words).cast(LongType)
-    // chars-in-words via single-space removal: robust to texts that are
-    // not perfectly single-space-joined (unlike length − n + 1)
-    val wordChars = length(regexp_replace(col(textCol), " ", "")).cast(LongType)
-    val stopProbe = GopherStopProbe
-    val symCount = (length(col(textCol))
-      - length(regexp_replace(col(textCol), "[#…]", ""))).cast(LongType)
-    docs
-      .withColumn("n_words", nWords)
-      .withColumn("mean_word_len_centi",
-        floor(wordChars.cast(DoubleType) * 100d / nWords.cast(DoubleType))
-          .cast(LongType))
-      .withColumn("dup_word_bp", bp(nWords - size(array_distinct(words)), nWords))
-      .withColumn("alpha_word_bp",
-        bp(size(filter(words, w =>
-          length(regexp_replace(w, "[^a-zA-Z]", "")) > 0)), nWords))
-      .withColumn("sym_bp", bp(symCount, nWords))
-      .withColumn("stop_hits",
-        size(array_intersect(array_distinct(words),
-          array(stopProbe.map(lit): _*))).cast(LongType))
-      .withColumn("keep_n_words",
-        col("n_words") >= minWords && col("n_words") <= maxWords)
-      .withColumn("keep_word_len",
-        col("mean_word_len_centi") >= 300L && col("mean_word_len_centi") <= 1000L)
-      .withColumn("keep_dup", col("dup_word_bp") <= 3000L)
-      .withColumn("keep_alpha", col("alpha_word_bp") >= 8000L)
-      .withColumn("keep_sym", col("sym_bp") <= 1000L)
-      .withColumn("keep_stop", col("stop_hits") >= minStopHits)
-      .withColumn("keep",
-        col("keep_n_words") && col("keep_word_len") && col("keep_dup") &&
-          col("keep_alpha") && col("keep_sym") && col("keep_stop"))
+    val fixed = Map("min_words" -> minWords, "max_words" -> maxWords,
+      "min_stop_hits" -> minStopHits)
+    gopherTable(docs, textCol, array(GopherStopProbe.map(lit): _*),
+      (field, default) => lit(fixed.getOrElse(field, default)))
   }
 
   /** Gopher's English defaults as profile values — ONE definition shared
@@ -1018,9 +989,9 @@ object TextOps {
     *    the wrong unit there).
     *
     * A doc whose language has NO profile row gets the full English
-    * defaults (the documented conservative fallback — identical to
-    * [[gopherFilter]]'s decisions). The non-language rules (dup-word,
-    * symbol ratio) keep their global Gopher bounds.
+    * defaults (the documented conservative fallback — [[gopherFilter]]'s
+    * decisions: both ops run the one [[gopherTable]]). The non-language
+    * rules (dup-word, symbol ratio) keep their global Gopher bounds.
     *
     * Scale shape: `profiles` is language-count-sized → BROADCAST; the
     * corpus never shuffles — every signal and rule fuses into the scan
@@ -1032,26 +1003,32 @@ object TextOps {
     val pcols = Seq("stop_words", "min_stop_hits", "min_words",
       "max_words", "min_word_len_centi", "max_word_len_centi",
       "min_alpha_bp")
-    // Collapse duplicate lang rows DETERMINISTICALLY (max over the whole
-    // row-struct — the soft404Flags discipline, r18): a left join on a
-    // profile table with two rows for one lang would silently MULTIPLY
-    // every doc of that language. Unique-key inputs pass through
-    // bit-identically (max of one row is that row).
-    val prof = broadcast(profiles.select(
-        col("lang").as(langCol) +:
-          pcols.map(c => col(c).as(s"__p_$c")): _*)
-      .groupBy(langCol)
-      .agg(max(struct(pcols.map(c => col(s"__p_$c")): _*)).as("__p"))
-      .select(col(langCol) +:
-        pcols.map(c => col(s"__p.__p_$c").as(s"__p_$c")): _*))
+    gopherTable(
+        docs.join(profileByLang(profiles, langCol, pcols), Seq(langCol), "left"),
+        textCol,
+        coalesce(col("__p_stop_words"), array(GopherStopProbe.map(lit): _*)),
+        (field, default) => coalesce(col(s"__p_$field"), lit(default)))
+      .drop(pcols.map(c => s"__p_$c"): _*)
+  }
+
+  /** The Gopher decision table of [[gopherFilter]] and
+    * [[gopherFilterByLang]]: the six signals, the six rules and `keep`.
+    * `stopWords` is the whole-word stopword probe; `bound(field,
+    * default)` is the bound of a language-sensitive rule, named by its
+    * profile field, whose Gopher English value is `default`.
+    *
+    * Chars-in-words count via single-space removal: robust to texts that
+    * are not perfectly single-space-joined (unlike length − n + 1).
+    */
+  private def gopherTable(docs: DataFrame, textCol: String,
+                          stopWords: Column,
+                          bound: (String, Long) => Column): DataFrame = {
     val words = split(col(textCol), " ")
     val nWords = size(words).cast(LongType)
     val wordChars = length(regexp_replace(col(textCol), " ", "")).cast(LongType)
     val symCount = (length(col(textCol))
       - length(regexp_replace(col(textCol), "[#…]", ""))).cast(LongType)
-    def p(c: String, default: Long): Column =
-      coalesce(col(s"__p_$c"), lit(default))
-    docs.join(prof, Seq(langCol), "left")
+    docs
       .withColumn("n_words", nWords)
       .withColumn("mean_word_len_centi",
         floor(wordChars.cast(DoubleType) * 100d / nWords.cast(DoubleType))
@@ -1062,24 +1039,39 @@ object TextOps {
           length(regexp_replace(w, "[^a-zA-Z]", "")) > 0)), nWords))
       .withColumn("sym_bp", bp(symCount, nWords))
       .withColumn("stop_hits",
-        size(array_intersect(array_distinct(words),
-          coalesce(col("__p_stop_words"),
-            array(GopherStopProbe.map(lit): _*)))).cast(LongType))
+        size(array_intersect(array_distinct(words), stopWords)).cast(LongType))
       .withColumn("keep_n_words",
-        col("n_words") >= p("min_words", 50L) &&
-          col("n_words") <= p("max_words", 100000L))
+        col("n_words") >= bound("min_words", 50L) &&
+          col("n_words") <= bound("max_words", 100000L))
       .withColumn("keep_word_len",
-        col("mean_word_len_centi") >= p("min_word_len_centi", 300L) &&
-          col("mean_word_len_centi") <= p("max_word_len_centi", 1000L))
+        col("mean_word_len_centi") >= bound("min_word_len_centi", 300L) &&
+          col("mean_word_len_centi") <= bound("max_word_len_centi", 1000L))
       .withColumn("keep_dup", col("dup_word_bp") <= 3000L)
-      .withColumn("keep_alpha", col("alpha_word_bp") >= p("min_alpha_bp", 8000L))
+      .withColumn("keep_alpha", col("alpha_word_bp") >= bound("min_alpha_bp", 8000L))
       .withColumn("keep_sym", col("sym_bp") <= 1000L)
-      .withColumn("keep_stop", col("stop_hits") >= p("min_stop_hits", 2L))
+      .withColumn("keep_stop", col("stop_hits") >= bound("min_stop_hits", 2L))
       .withColumn("keep",
         col("keep_n_words") && col("keep_word_len") && col("keep_dup") &&
           col("keep_alpha") && col("keep_sym") && col("keep_stop"))
-      .drop(pcols.map(c => s"__p_$c"): _*)
   }
+
+  /** A per-language profile table as a broadcast `(langCol, __p_<c>…)`
+    * frame, one row per language — the join side of every `ByLang` op.
+    * Duplicate lang rows collapse DETERMINISTICALLY (max over the whole
+    * row-struct — the soft404Flags discipline, r18): a left join on a
+    * profile table with two rows for one lang would silently MULTIPLY
+    * every doc of that language. Unique-key inputs pass through
+    * bit-identically (max of one row is that row).
+    */
+  private[ops] def profileByLang(profiles: DataFrame, langCol: String,
+                                 pcols: Seq[String]): DataFrame =
+    broadcast(profiles.select(
+        col("lang").as(langCol) +:
+          pcols.map(c => col(c).as(s"__p_$c")): _*)
+      .groupBy(langCol)
+      .agg(max(struct(pcols.map(c => col(s"__p_$c")): _*)).as("__p"))
+      .select(col(langCol) +:
+        pcols.map(c => col(s"__p.__p_$c").as(s"__p_$c")): _*))
 
   /** Feature-hashed bag-of-words document vectors (the hashing trick,
     * Weinberger et al. 2009, arXiv:0902.2206) — the bridge from the TEXT

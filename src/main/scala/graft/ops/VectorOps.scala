@@ -167,23 +167,35 @@ object VectorOps {
     * global).
     */
   def lshBucketAt(vecCol: Column, dim: Int, numPlanes: Int,
-                  planeOffset: Int): Column = {
-    // bits live in one long and the sum below assumes they are DISJOINT:
-    // numPlanes ≥ 65 would wrap the shift mod 64 and carry-corrupt other
-    // planes' bits SILENTLY (wrong buckets, degraded recall, no error);
-    // numPlanes = 0 would die in reduce with no parameter named
+                  planeOffset: Int): Column =
+    bucketOf(lshProjections(vecCol, dim, numPlanes, planeOffset))
+
+  /** The signed projections of `vecCol` on hyperplanes `planeOffset
+    * until planeOffset+numPlanes` — ONE definition for [[lshBucketAt]]
+    * and [[lshProbeBuckets]].
+    */
+  private def lshProjections(vecCol: Column, dim: Int, numPlanes: Int,
+                             planeOffset: Int): Seq[Column] = {
+    // bits live in one long and [[bucketOf]]'s sum assumes they are
+    // DISJOINT: numPlanes ≥ 65 would wrap the shift mod 64 and
+    // carry-corrupt other planes' bits SILENTLY (wrong buckets, degraded
+    // recall, no error); numPlanes = 0 would die in reduce with no
+    // parameter named
     require(numPlanes >= 1 && numPlanes <= 64,
       s"numPlanes must be in [1, 64] (got $numPlanes)")
-    val planeBits = (0 until numPlanes).map { j =>
+    (0 until numPlanes).map { j =>
       // ±1 in float is exact, so x·(±1f) ≡ ±x — bit-identical to the
       // oracle's CASE-negation form; dot() keeps the loop codegen'd.
-      val signs = array((0 until dim).map(i =>
-        lit(signComponent(planeOffset + j, i).toFloat)): _*)
-      val proj = dot(vecCol, signs)
-      when(proj > 0, lit(1L << j)).otherwise(lit(0L))
+      dot(vecCol, array((0 until dim).map(i =>
+        lit(signComponent(planeOffset + j, i).toFloat)): _*))
     }
-    planeBits.reduce(_ + _)
   }
+
+  /** Bucket id of a projection list: bit j set iff projection j > 0. */
+  private def bucketOf(projs: Seq[Column]): Column =
+    projs.zipWithIndex.map { case (p, j) =>
+      when(p > 0, lit(1L << j)).otherwise(lit(0L))
+    }.reduce(_ + _)
 
   /** IVF (inverted-file) ANN: corpus vectors are assigned to the cell of
     * their nearest centroid (argmax cosine, rank-1); each query probes its
@@ -212,19 +224,27 @@ object VectorOps {
                            idCol: String, vecCol: String, k: Int,
                            centroids: Seq[Array[Float]],
                            nProbe: Int = 2): DataFrame = {
-    // checked on the VALUES, not just emptiness: the zero-norm filter
-    // below would silently empty an all-zero codebook and every query
-    // would lose all neighbors with no error — the condition this guard
-    // exists to catch loudly
+    ivfTopKAgainst(queries, corpus, idCol, vecCol, k,
+      centroidFrame(corpus, centroids), nProbe)
+  }
+
+  /** Externally trained centroids as the (cid, cv, cn) frame every IVF
+    * probe assigns against — shared by [[ivfTopKWithCentroids]] and
+    * [[ivfTopKQuantizedWithCentroids]]. Checked on the VALUES, not just
+    * emptiness: the zero-norm filter would silently empty an all-zero
+    * codebook and every query would lose all neighbors with no error —
+    * the condition the guard exists to catch loudly.
+    */
+  private def centroidFrame(corpus: DataFrame,
+                            centroids: Seq[Array[Float]]): DataFrame = {
     require(centroids.exists(c => c.exists(_ != 0.0f)),
       "need at least one non-zero-norm centroid")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val cent = centroids.zipWithIndex
+    centroids.zipWithIndex
       .map { case (c, i) => (i.toLong, c) }.toDF("cid", "cv")
       .withColumn("cn", norm(col("cv")))
       .filter(col("cn") > 0) // a zero-norm centroid would swallow every cell
-    ivfTopKAgainst(queries, corpus, idCol, vecCol, k, cent, nProbe)
   }
 
   /** Symmetric int8 quantization scale for a corpus: `127 / max|x|` over
@@ -287,14 +307,7 @@ object VectorOps {
                                     centroids: Seq[Array[Float]],
                                     qscale: Double,
                                     nProbe: Int = 2): DataFrame = {
-    require(centroids.exists(c => c.exists(_ != 0.0f)),
-      "need at least one non-zero-norm centroid")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cent = centroids.zipWithIndex
-      .map { case (c, i) => (i.toLong, c) }.toDF("cid", "cv")
-      .withColumn("cn", norm(col("cv")))
-      .filter(col("cn") > 0)
+    val cent = centroidFrame(corpus, centroids)
     // the serving index: cell + quantized vector + quantized norm; the
     // float vector is DROPPED after assignment (it exists only at build)
     val c = assignCells(sided(corpus, idCol, vecCol, "nid", "nv", "nn"),
@@ -336,11 +349,18 @@ object VectorOps {
       cent, "nid", "nv", "nn", 1)
     val q = assignCells(sided(queries, idCol, vecCol, "qid", "qv", "qn"),
       cent, "qid", "qv", "qn", nProbe)
-    val scored = c.join(broadcast(q), Seq("cell"))
+    rankTopK(cosinePairs(c, q, Seq("cell")), k)
+  }
+
+  /** The exact-cosine scoring of the bucketed ANN probes: corpus rows
+    * `c` (nid, nv, nn, keys…) meet the broadcast query rows `q` (qid,
+    * qv, qn, keys…) on `keys`, self-pairs dropped, `cos` attached.
+    */
+  private def cosinePairs(c: DataFrame, q: DataFrame,
+                          keys: Seq[String]): DataFrame =
+    c.join(broadcast(q), keys)
       .filter(col("qid") =!= col("nid"))
       .withColumn("cos", dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
-    rankTopK(scored, k)
-  }
 
   /** Lloyd's k-means refinement for IVF centroids — the "separate k-means
     * job" `ivfTopK`'s doc refers to. Driver-iterated (the MLlib shape):
@@ -802,15 +822,22 @@ object VectorOps {
     * [[ivfTopKQuantizedWithCentroids]] 86% at 4× less storage).
     */
   def lshTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-              vecCol: String, k: Int, dim: Int, numPlanes: Int = 8): DataFrame = {
+              vecCol: String, k: Int, dim: Int, numPlanes: Int = 8): DataFrame =
+    lshProbe(queries, corpus, idCol, vecCol, k, dim, numPlanes,
+      lshBucket(col("qv"), dim, numPlanes))
+
+  /** The one-table LSH ANN of [[lshTopK]] and [[lshTopKMultiProbe]]:
+    * each corpus vector in its [[lshBucket]], each query in the buckets
+    * `probe` (over the query vector `qv`) gives it.
+    */
+  private def lshProbe(queries: DataFrame, corpus: DataFrame, idCol: String,
+                       vecCol: String, k: Int, dim: Int, numPlanes: Int,
+                       probe: Column): DataFrame = {
     val q = sided(queries, idCol, vecCol, "qid", "qv", "qn")
-      .withColumn("bucket", lshBucket(col("qv"), dim, numPlanes))
+      .withColumn("bucket", probe)
     val c = sided(corpus, idCol, vecCol, "nid", "nv", "nn")
       .withColumn("bucket", lshBucket(col("nv"), dim, numPlanes))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("cos", dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
-    rankTopK(scored, k)
+    rankTopK(cosinePairs(c, q, Seq("bucket")), k)
   }
 
   /** Margin-ordered probe buckets for multi-probe LSH (Lv et al., VLDB'07
@@ -832,16 +859,8 @@ object VectorOps {
     require(numProbes >= 1 && numProbes <= numPlanes + 1,
       s"numProbes must be in [1, numPlanes+1] — only single-bit flips " +
         s"(got $numProbes for $numPlanes planes)")
-    require(numPlanes >= 1 && numPlanes <= 64,
-      s"numPlanes must be in [1, 64] (got $numPlanes)")
-    val projs = (0 until numPlanes).map { j =>
-      val signs = array((0 until dim).map(i =>
-        lit(signComponent(j, i).toFloat)): _*)
-      dot(vecCol, signs)
-    }
-    val base = projs.zipWithIndex.map { case (p, j) =>
-      when(p > 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
+    val projs = lshProjections(vecCol, dim, numPlanes, planeOffset = 0)
+    val base = bucketOf(projs)
     val ranked = sort_array(array(projs.zipWithIndex.map { case (p, j) =>
       struct(abs(p).as("m"), lit(1L << j).as("mask")) }: _*))
     concat(array(base),
@@ -855,24 +874,18 @@ object VectorOps {
     * per CORPUS vector (T copies of the index), T probes cost T lookups
     * per QUERY against a single index — the probe side is the small side,
     * so extra work lands on 20 queries instead of the corpus. Corpus plan
-    * is identical to [[lshTopK]] (one bucket per vector, shuffled once);
-    * queries explode to numProbes (bucket, query) rows and broadcast.
+    * is [[lshTopK]]'s (one bucket per vector, shuffled once); queries
+    * explode to numProbes (bucket, query) rows and broadcast.
+    * `numProbes = 1` probes only the query's own bucket: exactly
+    * [[lshTopK]]'s rows.
     */
   def lshTopKMultiProbe(queries: DataFrame, corpus: DataFrame, idCol: String,
                         vecCol: String, k: Int, dim: Int,
-                        numPlanes: Int = 8, numProbes: Int = 8): DataFrame = {
-    val q = sided(queries, idCol, vecCol, "qid", "qv", "qn")
-      .withColumn("bucket",
-        explode(lshProbeBuckets(col("qv"), dim, numPlanes, numProbes)))
-    val c = sided(corpus, idCol, vecCol, "nid", "nv", "nn")
-      .withColumn("bucket", lshBucket(col("nv"), dim, numPlanes))
+                        numPlanes: Int = 8, numProbes: Int = 8): DataFrame =
     // no (qid, nid) dedup needed: a corpus vector lives in exactly one
     // bucket and the probe set is distinct buckets — a pair meets once
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("cos", dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
-    rankTopK(scored, k)
-  }
+    lshProbe(queries, corpus, idCol, vecCol, k, dim, numPlanes,
+      explode(lshProbeBuckets(col("qv"), dim, numPlanes, numProbes)))
 
   /** Multi-table LSH ANN: `numTables` independent hash tables (disjoint
     * hyperplane seed ranges), candidates = the UNION of same-bucket
@@ -881,6 +894,8 @@ object VectorOps {
     * gate prescribes when a single table scores low — at the cost of T
     * bucket assignments per vector (the classic LSH memory/recall trade;
     * at scale each table is its own bucketed copy of the corpus index).
+    * Table 0 uses [[lshTopK]]'s hyperplanes, so `numTables = 1` returns
+    * exactly [[lshTopK]]'s rows.
     *
     * Plan shape: explode to (table, bucket) keys — T rows per vector —
     * one (table, bucket)-keyed join, a (qid, nid) dedup agg, then the
@@ -901,9 +916,7 @@ object VectorOps {
           col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
     val q = tabled(queries, "qid", "qv", "qn")
     val c = tabled(corpus, "nid", "nv", "nn")
-    val scored = c.join(broadcast(q), Seq("tbl", "bucket"))
-      .filter(col("qid") =!= col("nid"))
-      .withColumn("cos", dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
+    val scored = cosinePairs(c, q, Seq("tbl", "bucket"))
       // a pair colliding in several tables surfaces once — first(cos) is
       // safe because cos is a function of the pair, not the table
       .groupBy(col("qid"), col("nid")).agg(first(col("cos")).as("cos"))

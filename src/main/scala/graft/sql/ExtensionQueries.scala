@@ -1218,6 +1218,27 @@ object ExtensionQueries {
 
   private val word3gramShingles = s"WITH ${word3gramCtes("documents")}"
 
+  /** The as-of join inputs of x27 and x75: purchases `(event_id,
+    * user_id, ts)`, and clicks with one row per `(user_id, ts)` (the
+    * highest `click_id`) carrying `click_ts`.
+    */
+  private def purchasesAndClicks(s: SparkSession,
+                                 dir: String): (DataFrame, DataFrame) = {
+    val ev = t(s, dir, "events")
+    (ev.filter(col("event_type") === "purchase")
+      .select("event_id", "user_id", "ts"),
+     ev.filter(col("event_type") === "click")
+      .groupBy(col("user_id"), col("ts"))
+      .agg(max(col("event_id")).as("click_id"))
+      .withColumn("click_ts", col("ts")))
+  }
+
+  /** [[purchasesAndClicks]] as the oracle CTEs `clicks` and `p`. */
+  private val purchasesAndClicksSql =
+    """WITH clicks AS (SELECT user_id, ts, max(event_id) click_id
+      |   FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
+      | p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')""".stripMargin
+
   /** The band-collision candidates `cand(i, j)` of a banding fragment's
     * `bsig`/`okb` and their exact shingle intersections
     * `inter(i, j, c)` over `sh` — the verify arm every LSH oracle shares.
@@ -1960,13 +1981,7 @@ object ExtensionQueries {
     // x27 — backward as-of join (union+window plan, JoinOps): for each
     // purchase, the user's most recent click at-or-before it.
     "x27_asof_join" -> QueryCase({ (s, dir) =>
-      val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val clicks = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("click_id"))
-        .withColumn("click_ts", col("ts"))
+      val (purchases, clicks) = purchasesAndClicks(s, dir)
       JoinOps.asOfJoinBackward(purchases, clicks, "user_id", "ts",
           Seq("click_id", "click_ts"))
         .select(col("event_id"), col("user_id"), col("click_id"),
@@ -1974,9 +1989,7 @@ object ExtensionQueries {
             graft.ops.TsCompat.micros(col("click_ts"))).as("delay_us"))
         .orderBy("event_id")
     }, oracle =
-      """WITH clicks AS (SELECT user_id, ts, max(event_id) click_id
-        |   FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
-        | p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
+      s"""$purchasesAndClicksSql
         | SELECT p.event_id, p.user_id, c.click_id,
         |   epoch_us(p.ts) - epoch_us(c.ts) AS delay_us
         | FROM p ASOF LEFT JOIN clicks c
@@ -2877,13 +2890,7 @@ object ExtensionQueries {
     // event after" direction (next fill after an order). Same union+window
     // plan, first(ignoreNulls) over the FOLLOWING frame.
     "x75_asof_forward" -> QueryCase({ (s, dir) =>
-      val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val clicks = ev.filter(col("event_type") === "click")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("click_id"))
-        .withColumn("click_ts", col("ts"))
+      val (purchases, clicks) = purchasesAndClicks(s, dir)
       JoinOps.asOfJoinForward(purchases, clicks, "user_id", "ts",
           Seq("click_id", "click_ts"))
         .select(col("event_id"), col("user_id"), col("click_id"),
@@ -2891,9 +2898,7 @@ object ExtensionQueries {
             graft.ops.TsCompat.micros(col("ts"))).as("wait_us"))
         .orderBy("event_id")
     }, oracle =
-      """WITH clicks AS (SELECT user_id, ts, max(event_id) click_id
-        |   FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
-        | p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
+      s"""$purchasesAndClicksSql
         | SELECT p.event_id, p.user_id, c.click_id,
         |   epoch_us(c.ts) - epoch_us(p.ts) AS wait_us
         | FROM p ASOF LEFT JOIN clicks c

@@ -7,7 +7,8 @@ import graft.SparkSpec
 
 /** HTML extraction + C4 line rules (Raffel et al. 2020 §2.2): tag
   * stripping, script/style/comment content removal, entity decoding
-  * order, and each line-retention rule at its edge.
+  * order, each line-retention rule at its edge, and the language-aware
+  * line rules of `c4KeptLinesByLang`.
   */
 class HtmlOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -86,7 +87,11 @@ class HtmlOpsSpec extends SparkSpec {
     val r = kept(
       1L -> ("<p>this line ends well.</p><p>this line ends not</p>" +
         "<p>exclaimed line stands here!</p><p>question line stands here?</p>" +
-        "<p>quoted line ends \"here.\"</p>"))
+        "<p>quoted line ends \"here.\"</p>" +
+        // the last character is a line separator that neither the
+        // whitespace collapse nor trim removes: not a terminal
+        "<p>next line ends after.\u0085</p><p>line sep ends after.\u2028</p>" +
+        "<p>para sep ends after.\u2029</p>"))
     assert(r.map(_._3) == Seq("this line ends well.",
       "exclaimed line stands here!", "question line stands here?",
       "quoted line ends \"here.\""))
@@ -243,5 +248,94 @@ class HtmlOpsSpec extends SparkSpec {
       Seq(1L -> twoRuns).toDF("id", "html"), "id", "html")
       .head().getAs[String]("main_html")
     assert(got.contains("one") && !got.contains("two"))
+  }
+
+  test("c4KeptLinesByLang: ja profile keeps 。-terminated space-free " +
+      "sentences the English rules drop; en fallback unchanged") {
+    val enHtml = "<html><body><p>this line has enough words to pass.</p>" +
+      "<p>too short.</p></body></html>"
+    val jaHtml = "<html><body><p>これは日本語の文です。</p>" +
+      "<p>はい。</p><p>あ。</p><p>これはテストです</p></body></html>"
+    val docs = Seq((1L, "en", enHtml), (2L, "ja", jaHtml))
+      .toDF("doc_id", "lang", "html")
+    val prof = Seq(("ja", Seq("。", "！", "？", "」"), 1L, 3L))
+      .toDF("lang", "term_chars", "min_line_words", "min_line_chars")
+    val got = HtmlOps.c4KeptLinesByLang(docs, "doc_id", "html", prof)
+      .orderBy("doc_id", "line_no")
+      .collect().map(r => (r.getLong(0), r.getString(3))).toSeq
+    assert(got == Seq(
+      (1L, "this line has enough words to pass."),
+      (2L, "これは日本語の文です。"),
+      (2L, "はい。"))) // あ。 fails min_line_chars; no-。 line fails term
+    // English rules alone keep ZERO ja lines — the planted difference
+    val engOnly = HtmlOps.c4KeptLines(
+        docs.filter(col("lang") === "ja"), "doc_id", "html",
+        dedupLines = false)
+      .count()
+    assert(engOnly == 0L)
+  }
+
+  test("c4KeptLinesByLang: the javascript rule stays global across " +
+      "profiles") {
+    val docs = Seq((1L, "ja",
+      "<html><body><p>javascriptを有効にしてください。</p></body></html>"))
+      .toDF("doc_id", "lang", "html")
+    val prof = Seq(("ja", Seq("。"), 1L, 3L))
+      .toDF("lang", "term_chars", "min_line_words", "min_line_chars")
+    assert(HtmlOps.c4KeptLinesByLang(docs, "doc_id", "html", prof)
+      .count() == 0L)
+  }
+
+  test("c4KeptLinesByLang: a DUPLICATE profile row is collapsed — " +
+      "lines never multiply") {
+    val docs = Seq((1L, "ja",
+      "<html><body><p>これは日本語の文です。</p></body></html>"))
+      .toDF("doc_id", "lang", "html")
+    val prof = Seq(
+      ("ja", Seq("。"), 1L, 3L),
+      ("ja", Seq("。"), 1L, 3L)) // exact duplicate
+      .toDF("lang", "term_chars", "min_line_words", "min_line_chars")
+    val got = HtmlOps.c4KeptLinesByLang(docs, "doc_id", "html", prof)
+      .collect()
+    assert(got.length == 1, "duplicate profile row multiplied line rows")
+  }
+
+  test("c4KeptLinesByLang: carry columns ride the narrow map (the " +
+      "provenance contract the capstone's src cohort uses)") {
+    val docs = Seq(
+      (0L, "en", "pdf", "<p>this line has enough words to pass.</p>"))
+      .toDF("doc_id", "lang", "src", "html")
+    val prof = Seq(("ja", Seq("。"), 1L, 3L))
+      .toDF("lang", "term_chars", "min_line_words", "min_line_chars")
+    val got = HtmlOps.c4KeptLinesByLang(docs, "doc_id", "html", prof,
+      carry = Seq("src"))
+    assert(got.columns.toSeq ==
+      Seq("doc_id", "lang", "src", "line_no", "line"))
+    assert(got.select("src").as[String].head() == "pdf")
+  }
+
+  test("c4KeptLinesByLang with no profile row keeps exactly " +
+      "c4KeptLines' lines (dedupLines = false)") {
+    val html = "<p>this line ends well.</p><p>this line ends not</p>" +
+      "<p>quoted line ends \"here.\"</p><p>two words.</p>" +
+      "<p>Please enable JavaScript to continue.</p>" +
+      "<p>kept   <i>words</i>   here.</p><p>shared footer line here.</p>" +
+      "<p>next line ends after.\u0085</p><p>line sep ends after.\u2028</p>" +
+      "<p>para sep ends after.\u2029</p><p>これは日本語の文です。</p>"
+    val docs = Seq((1L, "en", html), (2L, null, html),
+        (3L, "fr", "<p>shared footer line here.</p>"))
+      .toDF("doc_id", "lang", "html")
+    val prof = Seq(("ja", Seq("。"), 1L, 3L))
+      .toDF("lang", "term_chars", "min_line_words", "min_line_chars")
+    def lines(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, String)] =
+      df.select("doc_id", "line_no", "line").orderBy("doc_id", "line_no")
+        .as[(Long, Long, String)].collect().toSeq
+    val english = lines(HtmlOps.c4KeptLines(docs, "doc_id", "html",
+      dedupLines = false))
+    assert(english.map(_._3).distinct == Seq("this line ends well.",
+      "quoted line ends \"here.\"", "kept words here.",
+      "shared footer line here."))
+    assert(lines(HtmlOps.c4KeptLinesByLang(docs, "doc_id", "html", prof)) ==
+      english)
   }
 }

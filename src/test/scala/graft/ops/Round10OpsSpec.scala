@@ -103,6 +103,13 @@ class Round10OpsSpec extends SparkSpec {
     // on any non-degenerate fixture the 7 extra probes strictly add hits
     assert(multi >= single,
       s"multi-probe recall $multi must dominate single-table $single")
+    // one probe is the query's own bucket: exactly the single-table rows
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("qid", "rk").collect().toSeq
+    assert(rows(VectorOps.lshTopKMultiProbe(q, vecs, "vec_id", "embedding",
+        5, dim = 32, numPlanes = 8, numProbes = 1)) ==
+      rows(VectorOps.lshTopK(q, vecs, "vec_id", "embedding", 5, dim = 32,
+        numPlanes = 8)))
   }
 
   test("salted candidate-verify matches the unsalted result under a planted hot key") {

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Round-18 wave 1: the language-aware quality tier (the CCNet
-  * discipline) — per-language Gopher profiles and per-language C4 line
-  * rules, with the English-defaults fallback proven bit-for-bit.
+  * discipline) — per-language Gopher profiles, with the English-defaults
+  * fallback proven bit-for-bit. The per-language C4 line rules are in
+  * [[HtmlOpsSpec]].
   */
 class Round18OpsSpec extends SparkSpec {
   import spark.implicits._
@@ -69,31 +70,6 @@ class Round18OpsSpec extends SparkSpec {
     val r = TextOps.gopherFilterByLang(docs, prof).head()
     assert(r.getAs[Boolean]("keep_n_words")) // 7 >= overridden 5
     assert(r.getAs[Long]("stop_hits") == 3L) // default English probe
-  }
-
-  test("c4KeptLinesByLang: ja profile keeps 。-terminated space-free " +
-      "sentences the English rules drop; en fallback unchanged") {
-    val enHtml = "<html><body><p>this line has enough words to pass.</p>" +
-      "<p>too short.</p></body></html>"
-    val jaHtml = "<html><body><p>これは日本語の文です。</p>" +
-      "<p>はい。</p><p>あ。</p><p>これはテストです</p></body></html>"
-    val docs = Seq((1L, "en", enHtml), (2L, "ja", jaHtml))
-      .toDF("doc_id", "lang", "html")
-    val prof = Seq(("ja", Seq("。", "！", "？", "」"), 1L, 3L))
-      .toDF("lang", "term_chars", "min_line_words", "min_line_chars")
-    val got = HtmlOps.c4KeptLinesByLang(docs, "doc_id", "html", prof)
-      .orderBy("doc_id", "line_no")
-      .collect().map(r => (r.getLong(0), r.getString(3))).toSeq
-    assert(got == Seq(
-      (1L, "this line has enough words to pass."),
-      (2L, "これは日本語の文です。"),
-      (2L, "はい。"))) // あ。 fails min_line_chars; no-。 line fails term
-    // English rules alone keep ZERO ja lines — the planted difference
-    val engOnly = HtmlOps.c4KeptLines(
-        docs.filter(col("lang") === "ja"), "doc_id", "html",
-        dedupLines = false)
-      .count()
-    assert(engOnly == 0L)
   }
 
   test("watRecord: WAT write -> parseRecords -> utf-8 decode -> " +
@@ -238,16 +214,5 @@ class Round18OpsSpec extends SparkSpec {
     val r0 = TextOps.scriptLangId(docs).filter(col("doc_id") === 0).head()
     assert(r0.getAs[Long]("n_han") == 2L)   // 漢字
     assert(r0.getAs[Long]("n_hira") == 10L) // だけでなくかなもある
-  }
-
-  test("c4KeptLinesByLang: the javascript rule stays global across " +
-      "profiles") {
-    val docs = Seq((1L, "ja",
-      "<html><body><p>javascriptを有効にしてください。</p></body></html>"))
-      .toDF("doc_id", "lang", "html")
-    val prof = Seq(("ja", Seq("。"), 1L, 3L))
-      .toDF("lang", "term_chars", "min_line_words", "min_line_chars")
-    assert(HtmlOps.c4KeptLinesByLang(docs, "doc_id", "html", prof)
-      .count() == 0L)
   }
 }

@@ -7,7 +7,7 @@ import graft.SparkSpec
 /** Round-19 wave 1: the share-thresholded script router (a quoted
   * phrase must never flip a page's language), the per-script trigram
   * routing for the non-latin alphabetic web, and the duplicate-profile
-  * row guards on the language-aware quality ops.
+  * row guard on the language-aware Gopher battery.
   */
 class Round19OpsSpec extends SparkSpec {
   import spark.implicits._
@@ -78,20 +78,6 @@ class Round19OpsSpec extends SparkSpec {
     // max-collapse picks min_words 20 (field-wise struct max on equal
     // prefixes) -> the 17-word doc fails keep_n_words deterministically
     assert(!got.head.getAs[Boolean]("keep_n_words"))
-  }
-
-  test("c4KeptLinesByLang: a DUPLICATE profile row is collapsed — " +
-      "lines never multiply") {
-    val docs = Seq((1L, "ja",
-      "<html><body><p>これは日本語の文です。</p></body></html>"))
-      .toDF("doc_id", "lang", "html")
-    val prof = Seq(
-      ("ja", Seq("。"), 1L, 3L),
-      ("ja", Seq("。"), 1L, 3L)) // exact duplicate
-      .toDF("lang", "term_chars", "min_line_words", "min_line_chars")
-    val got = HtmlOps.c4KeptLinesByLang(docs, "doc_id", "html", prof)
-      .collect()
-    assert(got.length == 1, "duplicate profile row multiplied line rows")
   }
 
   test("gopherFilterByLang: a ru profile with min_alpha_bp 0 keeps a " +

@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Round-20 units: the SURT urlkey, the CDXJ index write → parse →
-  * seek loop, the shipped non-latin C4 line profiles, and the carry
-  * columns on the language-aware line stage.
+  * seek loop, and the shipped non-latin C4 line profiles.
   */
 class Round20OpsSpec extends SparkSpec {
   import spark.implicits._
@@ -123,19 +122,5 @@ class Round20OpsSpec extends SparkSpec {
     val noProf = HtmlOps.c4KeptLinesByLang(docs, "doc_id", "html",
       prof.filter(lit(false)))
     assert(noProf.count() == 0L)
-  }
-
-  test("c4KeptLinesByLang: carry columns ride the narrow map (the " +
-      "provenance contract the capstone's src cohort uses)") {
-    val docs = Seq(
-      (0L, "en", "pdf", "<p>this line has enough words to pass.</p>"))
-      .toDF("doc_id", "lang", "src", "html")
-    val prof = Seq(("ja", Seq("。"), 1L, 3L))
-      .toDF("lang", "term_chars", "min_line_words", "min_line_chars")
-    val got = HtmlOps.c4KeptLinesByLang(docs, "doc_id", "html", prof,
-      carry = Seq("src"))
-    assert(got.columns.toSeq ==
-      Seq("doc_id", "lang", "src", "line_no", "line"))
-    assert(got.select("src").as[String].head() == "pdf")
   }
 }

@@ -142,6 +142,13 @@ class Round8OpsSpec extends SparkSpec {
     assert(multi >= single,
       s"4-table recall_bp $multi must not lose to single-table $single")
     assert(multi > 0.0)
+    // one table IS the single-table index: exactly its rows
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("qid", "rk").collect().toSeq
+    assert(rows(VectorOps.lshTopKMultiTable(qs, vecs, "vec_id", "embedding",
+        5, dim = 16, numPlanes = 6, numTables = 1)) ==
+      rows(VectorOps.lshTopK(qs, vecs, "vec_id", "embedding", 5, dim = 16,
+        numPlanes = 6)))
   }
 
   test("asOf joins treat null timestamps as non-matching, both directions") {

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -8,7 +9,8 @@ import graft.SparkSpec
   * written bucketed on the same key and count join WITHOUT shuffling
   * either side — the plan property that turns every downstream equi-join
   * of a 100 TB fact table from a corpus-sized exchange into a bucket-
-  * aligned local merge.
+  * aligned local merge. The last case checks the same property on tables
+  * bucketed by Spark's own writer, without the sink.
   */
 class BucketedJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -101,6 +103,36 @@ class BucketedJoinSpec extends SparkSpec {
           .push(Map("bkt_a" -> docs))
       }
       assert(e.getMessage.contains("unknown table"))
+    }
+  }
+
+  test("bucketed tables join without any shuffle exchange") {
+    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    spark.sql("DROP TABLE IF EXISTS b_orders")
+    spark.sql("DROP TABLE IF EXISTS b_customer")
+
+    (1L to 1000L).map(i => (i, i % 100, i * 10.0)).toDF("o_orderkey", "o_custkey", "o_total")
+      .write.bucketBy(8, "o_custkey").sortBy("o_custkey").saveAsTable("b_orders")
+    (0L until 100L).map(i => (i, s"c$i")).toDF("c_custkey", "c_name")
+      .write.bucketBy(8, "c_custkey").sortBy("c_custkey").saveAsTable("b_customer")
+
+    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      // disable broadcast so the join would NEED a shuffle if not co-located
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val joined = spark.table("b_orders")
+        .join(spark.table("b_customer"),
+          $"o_custkey" === $"c_custkey")
+      val shuffles = joined.queryExecution.executedPlan.collect {
+        case s: ShuffleExchangeExec => s
+      }
+      assert(shuffles.isEmpty,
+        s"expected zero shuffles for co-bucketed join, got ${shuffles.size}")
+      assert(joined.count() == 1000L)
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+      spark.sql("DROP TABLE IF EXISTS b_orders")
+      spark.sql("DROP TABLE IF EXISTS b_customer")
     }
   }
 }
