@@ -57,9 +57,7 @@ object Bench {
       val sqls = SparkEntry.oracleSql.toSeq.sortBy(_._1)
         .filter { case (n, _) => names.contains(n) }
       if (sqls.isEmpty) return None
-      val esc = Verify.jsonEscape _ // ONE escape definition for both channels
-      Files.writeString(tmp.resolve("oracle_sql.json"),
-        sqls.map { case (k, v) => s"${esc(k)}: ${esc(v)}" }.mkString("{", ",", "}"))
+      Files.writeString(tmp.resolve("oracle_sql.json"), Verify.oracleSqlJson(sqls))
       // one view per fixture parquet file — tools/selfcheck.py's rule,
       // so the two DuckDB channels always name the same tables; per-view
       // try so ONE unreadable file only skips the queries that need it,
@@ -325,8 +323,11 @@ object Bench {
     }
     val qMed = results.map { case (k, _, _, ts) => (k, median(ts)) }
     val medianTotal = qMed.map(_._2).sum
-    val qs = qMed.map { case (k, m) => s"${Verify.jsonEscape(k)}:${num(m, 4)}" }
-      .mkString("{", ",", "}")
+    // the `name:median` JSON map of the full line and of its chunk lines
+    def medianMap(rows: Seq[(String, Double)]): String =
+      rows.map { case (k, m) => s"${Verify.jsonEscape(k)}:${num(m, 4)}" }
+        .mkString("{", ",", "}")
+    val qs = medianMap(qMed)
     val bestTotal = results.map(_._2).sum
     val meanTotal = results.map(_._3).sum
     val repsDetail = results.map { case (k, _, _, ts) =>
@@ -449,8 +450,7 @@ object Bench {
         "part" -> (i + 1).toString,
         "parts" -> parts.size.toString,
         "headline" -> "\"median_of_reps\"",
-        "queries" -> grp.map { case (k, m) => s"${Verify.jsonEscape(k)}:${num(m, 4)}" }
-          .mkString("{", ",", "}")) ++ sfPair))
+        "queries" -> medianMap(grp)) ++ sfPair))
     }
     // The per-query map alone is ~2 KB at 72 queries, which has pushed the
     // line's HEAD out of the driver's bounded tail capture twice (r07, r11

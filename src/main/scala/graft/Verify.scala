@@ -21,6 +21,11 @@ object Verify {
     case c => c.toString
   } + "\""
 
+  /** `oracle_sql.json`'s body — ONE writer for both channels. */
+  private[graft] def oracleSqlJson(entries: Seq[(String, String)]): String =
+    entries.map { case (k, v) => s"${jsonEscape(k)}: ${jsonEscape(v)}" }
+      .mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: graft.Verify <sfDir> <outDir> [namePrefixes] — got " +
@@ -64,10 +69,8 @@ object Verify {
         }
       }
     }
-    val q = jsonEscape _
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleSqlJson(SparkEntry.oracleSql.toSeq))
     spark.stop()
   }
 }

@@ -145,15 +145,26 @@ object CanonicalizeUrl {
   private[functions] def hostOf(s: String): String = {
     val m = SchemeRe.matcher(s)
     if (!m.find() || m.start() != 0) return null
-    var i = m.end()
+    val auth = s.substring(m.end(), authorityEnd(s, m.end()))
+    bareHost(auth.substring(auth.lastIndexOf('@') + 1))
+  }
+
+  /** End of the authority starting at `from`: the first '/', '?' or '#'. */
+  private def authorityEnd(s: String, from: Int): Int = {
+    var i = from
     while (i < s.length && s.charAt(i) != '/' && s.charAt(i) != '?' &&
       s.charAt(i) != '#') i += 1
-    val auth = s.substring(m.end(), i)
-    val afterUser = auth.substring(auth.lastIndexOf('@') + 1)
+    i
+  }
+
+  /** The host of a userinfo-free authority, null if empty. */
+  private def bareHost(afterUser: String): String = {
+    // bare host: before the first ':' (the `^([^:]*)` extract)
     val colon = afterUser.indexOf(':')
     var host = lowerLikeColumn(
       if (colon < 0) afterUser else afterUser.substring(0, colon))
-      
+    // ONE trailing dot, then ONE leading www. (regexp_replace with
+    // anchored patterns can substitute at most once)
     if (host.endsWith(".")) host = host.substring(0, host.length - 1)
     if (host.startsWith("www.")) host = host.substring(4)
     if (host.isEmpty) null else host
@@ -177,25 +188,12 @@ object CanonicalizeUrl {
     val m = SchemeRe.matcher(s)
     if (!m.find() || m.start() != 0) return null // non-absolute → NULL
     val sch = lowerLikeColumn(m.group(1))
-    val authEnd = {
-      var i = m.end()
-      while (i < s.length && s.charAt(i) != '/' && s.charAt(i) != '?' &&
-        s.charAt(i) != '#') i += 1
-      i
-    }
+    val authEnd = authorityEnd(s, m.end())
     val auth = s.substring(m.end(), authEnd)
     // userinfo drop: longest @-free suffix (the `([^@]*)$` extract)
     val afterUser = auth.substring(auth.lastIndexOf('@') + 1)
-    // bare host: before the first ':' (the `^([^:]*)` extract)
-    val colon = afterUser.indexOf(':')
-    var host = lowerLikeColumn(
-      if (colon < 0) afterUser else afterUser.substring(0, colon))
-      
-    // ONE trailing dot, then ONE leading www. (regexp_replace with
-    // anchored patterns can substitute at most once)
-    if (host.endsWith(".")) host = host.substring(0, host.length - 1)
-    if (host.startsWith("www.")) host = host.substring(4)
-    if (host.isEmpty) return null
+    val host = bareHost(afterUser)
+    if (host == null) return null
     // port: all-digit suffix after the LAST ':' (the `:([0-9]+)$` find)
     val lastColon = afterUser.lastIndexOf(':')
     var port: String = null

@@ -396,22 +396,42 @@ object DedupOps {
     */
   def minhashBands(docs: DataFrame, idCol: String, shingles: Column,
                    numHashes: Int, bandRows: Int): DataFrame = {
-    // integer division would silently discard the trailing hashes (recall
-    // quietly differs from the documented 1-(1-J^r)^b) or, for bandRows >
-    // numHashes, produce ZERO bands and an empty result
-    require(bandRows > 0 && numHashes > 0 && numHashes % bandRows == 0,
-      s"bandRows ($bandRows) must divide numHashes ($numHashes)")
+    requireBands(numHashes, bandRows)
     val mins = (0 until numHashes).map(h =>
       min(TextOps.md5Salted(s"$h|", col("s"))).as(s"m$h"))
     val sigs = shingleTable(docs, idCol, shingles)
       .groupBy(col("id"))
       .agg(mins.head, mins.tail: _*)
-    val bandStructs = (0 until numHashes / bandRows).map { b =>
-      struct(lit(b).as("band"),
-        concat((0 until bandRows).map(r => col(s"m${b * bandRows + r}")): _*).as("sig"))
+    bandRowsOf(sigs, numHashes / bandRows) { b =>
+      concat((0 until bandRows).map(r => col(s"m${b * bandRows + r}")): _*)
     }
+  }
+
+  private[graft] def requireBands(numHashes: Int, bandRows: Int): Unit =
+    // integer division would silently discard the trailing hashes (recall
+    // quietly differs from the documented 1-(1-J^r)^b) or, for bandRows >
+    // numHashes, produce ZERO bands and an empty result
+    require(bandRows > 0 && numHashes > 0 && numHashes % bandRows == 0,
+      s"bandRows ($bandRows) must divide numHashes ($numHashes)")
+
+  /** (id, band, sig) rows of the per-doc frame `sigs`; band b's sig is `sig(b)`. */
+  private def bandRowsOf(sigs: DataFrame, n: Int)(sig: Int => Column): DataFrame = {
+    val bandStructs = (0 until n).map(b => struct(lit(b).as("band"), sig(b).as("sig")))
     sigs.select(col("id"), explode(array(bandStructs: _*)).as("bs"))
       .select(col("id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+  }
+
+  /** [[minhashBandsOph]]'s densify + band key over its slot minimums
+    * `slot(j)`, which the streaming face computes per row instead.
+    */
+  private[graft] def ophBands(signed: DataFrame, numHashes: Int,
+                              bandRows: Int)(slot: Int => Column): DataFrame = {
+    def dense(j: Int): Column =
+      coalesce((0 until numHashes).map(o => slot((j + o) % numHashes)): _*)
+    bandRowsOf(signed, numHashes / bandRows) { b =>
+      concat_ws("|", (0 until bandRows).map(r =>
+        dense(b * bandRows + r).cast(StringType)): _*)
+    }
   }
 
   /** One-permutation MinHash band signatures (Li, Owen & Zhang 2012,
@@ -436,24 +456,13 @@ object DedupOps {
     */
   def minhashBandsOph(docs: DataFrame, idCol: String, shingles: Column,
                       numHashes: Int = 16, bandRows: Int = 4): DataFrame = {
-    require(bandRows > 0 && numHashes > 0 && numHashes % bandRows == 0,
-      s"bandRows ($bandRows) must divide numHashes ($numHashes)")
+    requireBands(numHashes, bandRows)
     val sh = shingleTable(docs, idCol, shingles)
       .select(col("id"), hash60(col("s")).as("h"))
     val mins = (0 until numHashes).map(j =>
       min(when(col("h") % numHashes === j, col("h"))).as(s"m$j"))
     val sigs = sh.groupBy(col("id")).agg(mins.head, mins.tail: _*)
-    // rotation densification: slot j = first non-empty at or after j
-    def dense(j: Int): Column =
-      coalesce((0 until numHashes).map(o =>
-        col(s"m${(j + o) % numHashes}")): _*)
-    val bandStructs = (0 until numHashes / bandRows).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws("|", (0 until bandRows).map(r =>
-          dense(b * bandRows + r).cast(StringType)): _*).as("sig"))
-    }
-    sigs.select(col("id"), explode(array(bandStructs: _*)).as("bs"))
-      .select(col("id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+    ophBands(sigs, numHashes, bandRows)(j => col(s"m$j"))
   }
 
   /** [[minhashLshCandidates]] over the one-permutation signatures — the
@@ -465,13 +474,8 @@ object DedupOps {
                               bandRows: Int = 4,
                               maxBucket: Int = DefaultMaxBucket): DataFrame = {
     requireLongId(docs, idCol)
-    minhashBandsOph(docs, idCol, shingles, numHashes, bandRows)
-      .groupBy(col("band"), col("sig"))
-      .agg(sort_array(collect_list(struct(col("id"), lit(0L)))).as("ds"))
-      .filter(size(col("ds")) > 1 && size(col("ds")) <= maxBucket)
-      .select(explode(docPairs(col("ds"))).as("p"))
-      .groupBy(col("p.i").as("i"), col("p.j").as("j"))
-      .agg(count(lit(1)).as("bands"))
+    sharedBuckets(minhashBandsOph(docs, idCol, shingles, numHashes, bandRows),
+      Seq(col("band"), col("sig")), maxBucket, "bands")
   }
 
   /** LSH candidate pairs: docs sharing ≥1 band signature, with the count of
@@ -483,21 +487,24 @@ object DedupOps {
                            numHashes: Int = 16, bandRows: Int = 4,
                            maxBucket: Int = DefaultMaxBucket): DataFrame = {
     requireLongId(docs, idCol)
-    val bands = minhashBands(docs, idCol, shingles, numHashes, bandRows)
-    // Bucket-group instead of self-join: the minhash aggregation pipeline
-    // runs ONCE (a self-join evaluates its input plan twice), and pair
-    // enumeration happens inside each (band, sig) bucket — which LSH keeps
-    // tiny by construction, so the nested expansion is O(bucket²) over
-    // buckets of a handful of near-identical docs. A bucket over maxBucket
-    // (an exact-duplicate cluster that exact-dedup should have removed
-    // first) is dropped rather than pair-exploded.
-    bands.groupBy(col("band"), col("sig"))
+    sharedBuckets(minhashBands(docs, idCol, shingles, numHashes, bandRows),
+      Seq(col("band"), col("sig")), maxBucket, "bands")
+  }
+
+  /** (i, j, countName = buckets shared) over `df`'s ids grouped by `keys`.
+    * Bucket-group instead of self-join: the input plan runs ONCE, and pairs
+    * are enumerated inside each bucket, which LSH keeps tiny (O(bucket²)
+    * over near-identical docs). A bucket over maxBucket (an exact-dup
+    * cluster exact-dedup should have removed) is dropped, not exploded.
+    */
+  private def sharedBuckets(df: DataFrame, keys: Seq[Column],
+                            maxBucket: Int, countName: String): DataFrame =
+    df.groupBy(keys: _*)
       .agg(sort_array(collect_list(struct(col("id"), lit(0L)))).as("ds"))
       .filter(size(col("ds")) > 1 && size(col("ds")) <= maxBucket)
       .select(explode(docPairs(col("ds"))).as("p"))
       .groupBy(col("p.i").as("i"), col("p.j").as("j"))
-      .agg(count(lit(1)).as("bands"))
-  }
+      .agg(count(lit(1)).as(countName))
 
   /** Exact n-gram Jaccard evaluated ONLY on the given candidate pairs —
     * the verify half of candidate-verify near-dup (LSH proposes, exact
@@ -839,12 +846,7 @@ object DedupOps {
                                   maxBucket: Int = 200): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1 (got $minShared)")
     val fps = fps0.select(col(idCol).as("id"), col("fp")).distinct()
-    fps.groupBy(col("fp"))
-      .agg(sort_array(collect_list(struct(col("id"), lit(0L)))).as("ds"))
-      .filter(size(col("ds")) > 1 && size(col("ds")) <= maxBucket)
-      .select(explode(docPairs(col("ds"))).as("p"))
-      .groupBy(col("p.i").as("i"), col("p.j").as("j"))
-      .agg(count(lit(1)).as("shared"))
+    sharedBuckets(fps, Seq(col("fp")), maxBucket, "shared")
       .filter(col("shared") >= minShared)
   }
 

@@ -47,16 +47,9 @@ object DsirOps {
     */
   private[ops] def featureBuckets(docs: DataFrame, idCol: String,
                                   textCol: String, numBuckets: Int): DataFrame = {
-    val w = docs.select(col(idCol).as("id"), split(col(textCol), " ").as("w"))
-    val uni = w.select(col("id"), explode(col("w")).as("s"))
-    // the size >= 2 filter is the empty-sequence guard (sequence(1,0) is
-    // DESCENDING in Spark — see LmOps.bigrams), not an optimization
-    val big = w.filter(size(col("w")) >= 2)
-      .select(col("id"), explode(expr(
-        "transform(sequence(1, size(w) - 1), " +
-          "k -> concat(element_at(w, k), ' ', element_at(w, k + 1)))"))
-        .as("s"))
-    uni.unionByName(big)
+    val w = LmOps.tokens(docs, idCol, textCol)
+    w.select(col("id"), explode(col("w")).as("s"))
+      .unionByName(LmOps.bigrams(w))
       .select(col("id"), (TextOps.hash60(col("s")) % numBuckets).as("b"))
   }
 

@@ -301,14 +301,21 @@ object HtmlOps {
     * name is part of the pattern, not a post-filter.
     */
   def metaRobotsContent(html: Column): Column =
-    nullif(coalesce(
-      nullif(regexp_extract(html,
-        "(?is)<meta\\s(?:[^>]*?\\s)?name\\s*=\\s*\"robots\"" +
-          "\\s(?:[^>]*?\\s)?content\\s*=\\s*\"([^\"]*)\"", 1), lit("")),
-      nullif(regexp_extract(html,
-        "(?is)<meta\\s(?:[^>]*?\\s)?content\\s*=\\s*\"([^\"]*)\"" +
-          "\\s(?:[^>]*?\\s)?name\\s*=\\s*\"robots\"", 1), lit(""))),
-      lit(""))
+    nullif(eitherOrder(html, "meta", "name", "robots", "content"), lit(""))
+
+  /** `attr`'s value in the first `<tag key="value">`, either attribute
+    * order (key-first preferred); "" when neither matches.
+    */
+  private def eitherOrder(html: Column, tag: String, key: String,
+                          value: String, attr: String): Column = {
+    val kv = s"$key\\s*=\\s*\"$value\""
+    val av = s"$attr\\s*=\\s*\"([^\"]*)\""
+    val open = s"(?is)<$tag\\s(?:[^>]*?\\s)?"
+    val gap = "\\s(?:[^>]*?\\s)?"
+    coalesce(
+      nullif(regexp_extract(html, open + kv + gap + av, 1), lit("")),
+      nullif(regexp_extract(html, open + av + gap + kv, 1), lit("")))
+  }
 
   /** Whether `listStr`'s `sep`-separated token list contains `token`
     * after per-token trim + lowercase — the robots-meta / rel-attribute
@@ -324,21 +331,20 @@ object HtmlOps {
     * which means noindex + nofollow). false when no robots meta — the
     * indexable default.
     */
-  def metaNoindex(html: Column): Column = {
-    val c = metaRobotsContent(html)
-    when(c.isNull, lit(false))
-      .otherwise(hasToken(c, ",", "noindex") || hasToken(c, ",", "none"))
-  }
+  def metaNoindex(html: Column): Column = robotsDirective(html, "noindex")
 
   /** Page-level nofollow: the robots meta declares `nofollow` or
     * `none` — EVERY link on the page is then excluded from the link
     * graph (the page-level form of the per-anchor `rel="nofollow"`,
     * [[extractAnchorRels]]). false when no robots meta.
     */
-  def metaNofollow(html: Column): Column = {
+  def metaNofollow(html: Column): Column = robotsDirective(html, "nofollow")
+
+  /** The robots meta declares `token` or `none`; false without one. */
+  private def robotsDirective(html: Column, token: String): Column = {
     val c = metaRobotsContent(html)
     when(c.isNull, lit(false))
-      .otherwise(hasToken(c, ",", "nofollow") || hasToken(c, ",", "none"))
+      .otherwise(hasToken(c, ",", token) || hasToken(c, ",", "none"))
   }
 
   /** The page's declared canonical URL (`<link rel="canonical"
@@ -352,13 +358,7 @@ object HtmlOps {
     * [[UrlOps.resolveUrl]]) before use.
     */
   def canonicalHref(html: Column): Column =
-    nullif(trim(coalesce(
-      nullif(regexp_extract(html,
-        "(?is)<link\\s(?:[^>]*?\\s)?rel\\s*=\\s*\"canonical\"" +
-          "\\s(?:[^>]*?\\s)?href\\s*=\\s*\"([^\"]*)\"", 1), lit("")),
-      nullif(regexp_extract(html,
-        "(?is)<link\\s(?:[^>]*?\\s)?href\\s*=\\s*\"([^\"]*)\"" +
-          "\\s(?:[^>]*?\\s)?rel\\s*=\\s*\"canonical\"", 1), lit("")))),
+    nullif(trim(eitherOrder(html, "link", "rel", "canonical", "href")),
       lit(""))
 
   /** The charset the PAGE declares, sniffed from the latin1-view bytes
@@ -406,9 +406,12 @@ object HtmlOps {
           // prior attribute): a bare `[^>]*?href` would also match the
           // suffix of `data-href="..."` and emit a false link (\b cannot
           // help — `-` is already a word boundary)
-          lit("(?is)<a\\s(?:[^>]*?\\s)?href\\s*=\\s*\"([^\"]*)\""), lit(1)),
+          lit(anchorHrefRe), lit(1)),
         r => trim(r)),
       r => r =!= "")
+
+  /** The href of an `<a>` open tag — ONE pattern for the three link ops. */
+  private val anchorHrefRe = "(?is)<a\\s(?:[^>]*?\\s)?href\\s*=\\s*\"([^\"]*)\""
 
   /** A complete `<a href="...">...</a>` element — ONE pattern, shared
     * by [[extractAnchors]] and the [[blockScores]] link-density sum.
@@ -431,9 +434,7 @@ object HtmlOps {
     val elem = regexp_extract_all(html, lit(anchorElemRe), lit(0))
     filter(
       transform(elem, e => struct(
-        trim(regexp_extract(e,
-          "(?is)<a\\s(?:[^>]*?\\s)?href\\s*=\\s*\"([^\"]*)\"", 1))
-          .as("href"),
+        trim(regexp_extract(e, anchorHrefRe, 1)).as("href"),
         trim(regexp_replace(regexp_replace(
           regexp_extract(e, "(?is)^<a[^>]*>(.*)</a\\s*>$", 1),
           "<[^>]*>", " "), "\\s+", " ")).as("atext"))),
@@ -459,9 +460,7 @@ object HtmlOps {
       transform(elem, e => {
         val open = regexp_extract(e, "(?is)^(<a[^>]*>)", 1)
         struct(
-          trim(regexp_extract(open,
-            "(?is)<a\\s(?:[^>]*?\\s)?href\\s*=\\s*\"([^\"]*)\"", 1))
-            .as("href"),
+          trim(regexp_extract(open, anchorHrefRe, 1)).as("href"),
           hasToken(regexp_extract(open,
             "(?is)\\srel\\s*=\\s*\"([^\"]*)\"", 1), "\\s+", "nofollow")
             .as("nofollow"))

@@ -83,9 +83,7 @@ object HttpOps {
     * (lowercased, last `,`-separated token per RFC 9112 §6.1 — chunked
     * MUST be final when present), NULL when absent.
     */
-  def transferEncoding(msg: Column): Column =
-    nullif(lower(trim(regexp_extract(header(msg, "Transfer-Encoding"),
-      "([^,]*)$", 1))), lit(""))
+  def transferEncoding(msg: Column): Column = lastCoding(msg, "Transfer-Encoding")
 
   /** De-chunk `bodyCol` when the transfer coding says chunked, pass it
     * through otherwise ([[graft.functions.DechunkBody]]; malformed
@@ -101,9 +99,11 @@ object HttpOps {
     * so the LAST applied is the first to remove, RFC 9110 §8.4), NULL
     * when absent.
     */
-  def contentEncoding(msg: Column): Column =
-    nullif(lower(trim(regexp_extract(header(msg, "Content-Encoding"),
-      "([^,]*)$", 1))), lit(""))
+  def contentEncoding(msg: Column): Column = lastCoding(msg, "Content-Encoding")
+
+  /** The lowercased last `,`-separated token of header `name`, NULL if absent. */
+  private def lastCoding(msg: Column, name: String): Column =
+    nullif(lower(trim(regexp_extract(header(msg, name), "([^,]*)$", 1))), lit(""))
 
   /** Remove the content coding from a latin1-view body: `gzip`/
     * `x-gzip` bodies route through [[graft.functions.GunzipToString]]

@@ -34,19 +34,21 @@ object LmOps {
 
   private val NllScale = 1000000L
 
-  /** Bigram occurrences of `textCol`, one output row per consecutive token
-    * pair, as the space-joined string "w1 w2" (the house shingle spelling,
-    * so the model key matches `TextOps.wordShingles(c, 2)` semantics minus
-    * the distinct pass — an LM needs occurrence counts).
+  /** (id, w): `textCol` split on single spaces, the input of [[bigrams]]. */
+  private[ops] def tokens(docs: DataFrame, idCol: String,
+                          textCol: String): DataFrame =
+    docs.select(col(idCol).as("id"), split(col(textCol), " ").as("w"))
+
+  /** Bigram occurrences of a [[tokens]] frame, one output row per
+    * consecutive token pair, as the space-joined string "w1 w2" (the house
+    * shingle spelling, so the model key matches `TextOps.wordShingles(c,
+    * 2)` semantics minus the distinct pass — an LM needs occurrence counts).
     */
-  private def bigrams(docs: DataFrame, idCol: String,
-                      textCol: String): DataFrame =
-    docs
-      .select(col(idCol).as("id"), split(col(textCol), " ").as("w"))
-      // the filter is the empty-sequence guard, not an optimization:
-      // Spark's sequence(1, 0) yields a DESCENDING [1, 0], so a 1-token
-      // doc would fabricate bigrams from out-of-range element_at nulls
-      .filter(size(col("w")) >= 2)
+  private[ops] def bigrams(w: DataFrame): DataFrame =
+    // the filter is the empty-sequence guard, not an optimization:
+    // Spark's sequence(1, 0) yields a DESCENDING [1, 0], so a 1-token
+    // doc would fabricate bigrams from out-of-range element_at nulls
+    w.filter(size(col("w")) >= 2)
       .select(col("id"), explode(expr(
         "transform(sequence(1, size(w) - 1), " +
           "k -> concat(element_at(w, k), ' ', element_at(w, k + 1)))"))
@@ -66,7 +68,7 @@ object LmOps {
     */
   def trainBigramLm(docs: DataFrame, idCol: String = "doc_id",
                     textCol: String = "text"): DataFrame = {
-    val big = bigrams(docs, idCol, textCol)
+    val big = bigrams(tokens(docs, idCol, textCol))
     val c2 = big.groupBy(col("s")).agg(count(lit(1)).as("n2"))
       .withColumn("w1", substring_index(col("s"), " ", 1))
     val c1 = big.select(substring_index(col("s"), " ", 1).as("w1"))
@@ -106,7 +108,7 @@ object LmOps {
   def scoreBigramNll(docs: DataFrame, model: DataFrame,
                      idCol: String = "doc_id",
                      textCol: String = "text"): DataFrame = {
-    val big = bigrams(docs, idCol, textCol)
+    val big = bigrams(tokens(docs, idCol, textCol))
     val prefixes = model.groupBy(col("w1"))
       .agg(max(col("n1")).as("p_n1"), max(col("v")).as("p_v"))
     val vRow = model.agg(max(col("v")).as("g_v"))

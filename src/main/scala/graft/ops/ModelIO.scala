@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   * are stored exactly by parquet), and each load validates the schema so a
   * path mix-up fails loudly instead of scoring with the wrong table.
   * ModelIOSpec proves load-then-score ≡ train-then-score bit-for-bit for
-  * all four artifact classes.
+  * every artifact below but the bigram LM, whose round trip is LmOpsSpec's.
   *
   * Writes use overwrite mode: an artifact path names ONE model version —
   * version by path (the lakehouse convention), not by append.
@@ -45,6 +45,44 @@ object ModelIO {
     df.select(want.map(c => col(c._1)): _*)
   }
 
+  /** An artifact's columns, declared once for its save and its load. */
+  private final class Artifact(val cols: (String, DataType)*) {
+    def names: Seq[String] = cols.map(_._1)
+    def project(df: DataFrame): DataFrame = df.select(names.map(col): _*)
+    def load(spark: SparkSession, path: String): DataFrame =
+      requireColumns(spark.read.parquet(path), path, cols)
+  }
+
+  private val Codebook = new Artifact(
+    "cid" -> IntegerType, "vec" -> ArrayType(FloatType, containsNull = false))
+  private val SqScale = new Artifact("qscale" -> DoubleType)
+  private val BpeMerges = new Artifact("merge_rank" -> IntegerType,
+    "left_sym" -> StringType, "right_sym" -> StringType, "pair_count" -> LongType)
+  private val BloomSketch = new Artifact("widx" -> LongType, "bits" -> LongType,
+    "m_bits" -> IntegerType, "k_hashes" -> IntegerType)
+  private val Bm25Postings = new Artifact(
+    "did" -> LongType, "t" -> StringType, "tf" -> LongType)
+  private val ClassifierVocab = new Artifact("w" -> StringType, "w_bp" -> LongType)
+  private val NbWeights = new Artifact("token" -> StringType,
+    "c_pos" -> LongType, "c_neg" -> LongType, "w" -> LongType)
+  private val NbConsts = new Artifact(Seq("w_default", "prior", "n_pos",
+    "n_neg", "vocab", "d_pos", "d_neg").map(_ -> LongType): _*)
+  private val BigramLm = new Artifact("s" -> StringType, "w1" -> StringType,
+    "n2" -> LongType, "n1" -> LongType, "v" -> LongType, "nll_scaled" -> LongType)
+  private val PqCodebooks = new Artifact("s" -> IntegerType,
+    "j" -> IntegerType, "cw" -> ArrayType(FloatType, containsNull = false))
+  private val WinnowIndex = new Artifact(
+    "did" -> LongType, "pos" -> LongType, "fp" -> LongType)
+
+  /** nb (the build modulus, r15) rides along when present so a loaded
+    * table still fails loudly on a mismatched-numBuckets probe; tables
+    * from older builds save without it (scorers then fall back to the
+    * bucket-range check only).
+    */
+  private def dsirWeights(columns: Array[String]): Artifact =
+    new Artifact(Seq("b", "n_raw", "n_target", "w_scaled").map(_ -> LongType) ++
+      (if (columns.contains("nb")) Seq("nb" -> LongType) else Nil): _*)
+
   // ---- IVF codebook + quantization scale ----------------------------------
 
   /** Persist a codebook as (cid INT, vec ARRAY<FLOAT>) — one row per
@@ -56,7 +94,7 @@ object ModelIO {
     require(centroids.nonEmpty, "refusing to save an empty codebook")
     import spark.implicits._
     centroids.zipWithIndex.map { case (v, i) => (i, v.toSeq) }
-      .toDF("cid", "vec")
+      .toDF(Codebook.names: _*)
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
@@ -68,9 +106,7 @@ object ModelIO {
     * against the loaded codebook would no longer match train time.
     */
   def loadCodebook(spark: SparkSession, path: String): Array[Array[Float]] = {
-    val rows = requireColumns(spark.read.parquet(path), path,
-        Seq("cid" -> IntegerType, "vec" -> ArrayType(FloatType, containsNull = false)))
-      .orderBy("cid").collect()
+    val rows = Codebook.load(spark, path).orderBy("cid").collect()
     rows.zipWithIndex.foreach { case (r, i) =>
       require(r.getInt(0) == i,
         s"$path: corrupted codebook — expected contiguous cid $i, " +
@@ -84,12 +120,12 @@ object ModelIO {
     */
   def saveSqScale(spark: SparkSession, path: String, qscale: Double): Unit = {
     import spark.implicits._
-    Seq(qscale).toDF("qscale").coalesce(1).write.mode("overwrite").parquet(path)
+    Seq(qscale).toDF(SqScale.names: _*)
+      .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
   def loadSqScale(spark: SparkSession, path: String): Double = {
-    val rows = requireColumns(spark.read.parquet(path), path,
-      Seq("qscale" -> DoubleType)).collect()
+    val rows = SqScale.load(spark, path).collect()
     require(rows.length == 1, s"$path: expected exactly 1 qscale row, " +
       s"got ${rows.length}")
     rows(0).getDouble(0)
@@ -105,7 +141,7 @@ object ModelIO {
     require(merges.nonEmpty, "refusing to save an empty merge list")
     import spark.implicits._
     merges.map(m => (m.rank, m.left, m.right, m.pairCount))
-      .toDF("merge_rank", "left_sym", "right_sym", "pair_count")
+      .toDF(BpeMerges.names: _*)
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
@@ -114,10 +150,7 @@ object ModelIO {
     * means a corrupted artifact).
     */
   def loadBpeMerges(spark: SparkSession, path: String): Seq[BpeOps.Merge] = {
-    val rows = requireColumns(spark.read.parquet(path), path,
-        Seq("merge_rank" -> IntegerType, "left_sym" -> StringType,
-          "right_sym" -> StringType, "pair_count" -> LongType))
-      .orderBy("merge_rank").collect()
+    val rows = BpeMerges.load(spark, path).orderBy("merge_rank").collect()
       .map(r => BpeOps.Merge(r.getInt(0), r.getString(1), r.getString(2),
         r.getLong(3)))
     require(rows.map(_.rank).sameElements(1 to rows.length),
@@ -132,17 +165,14 @@ object ModelIO {
     * but a 12 GB ten-billion-doc sketch should keep its partitioning.
     */
   def saveBloomSketch(sketch: DataFrame, path: String): Unit =
-    sketch.select("widx", "bits", "m_bits", "k_hashes")
-      .write.mode("overwrite").parquet(path)
+    BloomSketch.project(sketch).write.mode("overwrite").parquet(path)
 
   /** Reload a Bloom sketch; m/k ride in every row, so a probe with
     * mismatched parameters still fails loudly downstream
     * ([[StatOps.bloomProbe]]'s embedded-parameter check).
     */
   def loadBloomSketch(spark: SparkSession, path: String): DataFrame =
-    requireColumns(spark.read.parquet(path), path,
-      Seq("widx" -> LongType, "bits" -> LongType,
-        "m_bits" -> IntegerType, "k_hashes" -> IntegerType))
+    BloomSketch.load(spark, path)
 
   // ---- BM25 inverted index -------------------------------------------------
 
@@ -159,12 +189,11 @@ object ModelIO {
     require(postings.schema("did").dataType == LongType,
       "did must be LongType for the BM25 postings artifact " +
         s"(got ${postings.schema("did").dataType.simpleString})")
-    postings.select("did", "t", "tf").write.mode("overwrite").parquet(path)
+    Bm25Postings.project(postings).write.mode("overwrite").parquet(path)
   }
 
   def loadBm25Postings(spark: SparkSession, path: String): DataFrame =
-    requireColumns(spark.read.parquet(path), path,
-      Seq("did" -> LongType, "t" -> StringType, "tf" -> LongType))
+    Bm25Postings.load(spark, path)
 
   // ---- Quality-classifier vocab --------------------------------------------
 
@@ -173,11 +202,10 @@ object ModelIO {
     * exactly train-then-score.
     */
   def saveClassifierVocab(weights: DataFrame, path: String): Unit =
-    weights.select("w", "w_bp").write.mode("overwrite").parquet(path)
+    ClassifierVocab.project(weights).write.mode("overwrite").parquet(path)
 
   def loadClassifierVocab(spark: SparkSession, path: String): DataFrame =
-    requireColumns(spark.read.parquet(path), path,
-      Seq("w" -> StringType, "w_bp" -> LongType))
+    ClassifierVocab.load(spark, path)
 
   // ---- Token Naive Bayes model ---------------------------------------------
 
@@ -189,26 +217,15 @@ object ModelIO {
     * are a genuinely large table.
     */
   def saveNbModel(model: ClassifyOps.NbModel, path: String): Unit = {
-    model.weights.select("token", "c_pos", "c_neg", "w")
+    NbWeights.project(model.weights)
       .write.mode("overwrite").parquet(s"$path/weights")
-    model.consts
-      .select("w_default", "prior", "n_pos", "n_neg", "vocab",
-        "d_pos", "d_neg")
+    NbConsts.project(model.consts)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/consts")
   }
 
-  def loadNbModel(spark: SparkSession, path: String): ClassifyOps.NbModel = {
-    val weights = requireColumns(spark.read.parquet(s"$path/weights"),
-      s"$path/weights",
-      Seq("token" -> StringType, "c_pos" -> LongType,
-        "c_neg" -> LongType, "w" -> LongType))
-    val consts = requireColumns(spark.read.parquet(s"$path/consts"),
-      s"$path/consts",
-      Seq("w_default" -> LongType, "prior" -> LongType,
-        "n_pos" -> LongType, "n_neg" -> LongType, "vocab" -> LongType,
-        "d_pos" -> LongType, "d_neg" -> LongType))
-    ClassifyOps.NbModel(weights, consts)
-  }
+  def loadNbModel(spark: SparkSession, path: String): ClassifyOps.NbModel =
+    ClassifyOps.NbModel(NbWeights.load(spark, s"$path/weights"),
+      NbConsts.load(spark, s"$path/consts"))
 
   // ---- Bigram language model -----------------------------------------------
 
@@ -220,13 +237,10 @@ object ModelIO {
     * which on a web-scale corpus is a genuinely large table.
     */
   def saveBigramLm(model: DataFrame, path: String): Unit =
-    model.select("s", "w1", "n2", "n1", "v", "nll_scaled")
-      .write.mode("overwrite").parquet(path)
+    BigramLm.project(model).write.mode("overwrite").parquet(path)
 
   def loadBigramLm(spark: SparkSession, path: String): DataFrame =
-    requireColumns(spark.read.parquet(path), path,
-      Seq("s" -> StringType, "w1" -> StringType, "n2" -> LongType,
-        "n1" -> LongType, "v" -> LongType, "nll_scaled" -> LongType))
+    BigramLm.load(spark, path)
 
   // ---- DSIR importance-weight table ----------------------------------------
 
@@ -236,23 +250,13 @@ object ModelIO {
     * the two corpus passes that built this table are a whole job, and
     * every subsequent selection run reads the ~1k-row artifact instead.
     */
-  def saveDsirWeights(weights: DataFrame, path: String): Unit = {
-    // nb (the build modulus, r15) rides along when present so a loaded
-    // table still fails loudly on a mismatched-numBuckets probe; tables
-    // from older builds save without it (scorers then fall back to the
-    // bucket-range check only)
-    val cols = Seq("b", "n_raw", "n_target", "w_scaled") ++
-      (if (weights.columns.contains("nb")) Seq("nb") else Nil)
-    weights.select(cols.map(col): _*)
+  def saveDsirWeights(weights: DataFrame, path: String): Unit =
+    dsirWeights(weights.columns).project(weights)
       .coalesce(1).write.mode("overwrite").parquet(path)
-  }
 
   def loadDsirWeights(spark: SparkSession, path: String): DataFrame = {
     val df = spark.read.parquet(path)
-    requireColumns(df, path,
-      Seq("b" -> LongType, "n_raw" -> LongType, "n_target" -> LongType,
-        "w_scaled" -> LongType) ++
-        (if (df.columns.contains("nb")) Seq("nb" -> LongType) else Nil))
+    requireColumns(df, path, dsirWeights(df.columns).cols)
   }
 
   // ---- PQ codebooks --------------------------------------------------------
@@ -273,17 +277,14 @@ object ModelIO {
       "refusing to save an empty PQ codebook")
     codebooks.zipWithIndex.flatMap { case (cb, s) =>
       cb.zipWithIndex.map { case (cw, j) => (s, j, cw.toSeq) }
-    }.toSeq.toDF("s", "j", "cw")
+    }.toSeq.toDF(PqCodebooks.names: _*)
       // m×ksub driver-local metadata — one tidy file, not a file per
       // default-parallelism slice (the saveCodebook rationale)
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
   def loadPqCodebooks(spark: SparkSession, path: String): Array[Array[Array[Float]]] = {
-    val rows = requireColumns(spark.read.parquet(path), path,
-        Seq("s" -> IntegerType, "j" -> IntegerType,
-          "cw" -> ArrayType(FloatType, containsNull = false)))
-      .collect()
+    val rows = PqCodebooks.load(spark, path).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
     require(rows.nonEmpty, s"empty PQ codebook at $path")
     // distinct-cell count, not raw row count: a duplicated (s,j) row
@@ -321,11 +322,10 @@ object ModelIO {
       s"$idCol must be LongType for the winnow index " +
         s"(got ${fps.schema(idCol).dataType.simpleString}); cast ids " +
         "before saving — loadWinnowIndex reads did as LongType")
-    fps.select(col(idCol).as("did"), col("pos"), col("fp"))
+    fps.select(col(idCol).as("did") +: WinnowIndex.names.tail.map(col): _*)
       .write.mode("overwrite").parquet(path)
   }
 
   def loadWinnowIndex(spark: SparkSession, path: String): DataFrame =
-    requireColumns(spark.read.parquet(path), path,
-      Seq("did" -> LongType, "pos" -> LongType, "fp" -> LongType))
+    WinnowIndex.load(spark, path)
 }

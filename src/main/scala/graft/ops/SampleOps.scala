@@ -229,13 +229,18 @@ object SampleOps {
     require(numShards > 0, s"shuffleOrder: numShards must be > 0 (got $numShards)")
     val h = TextOps.hash60(
       concat(lit(s"${epoch}_"), col(idCol).cast("string")))
-    globalRowIndex(df.withColumn("__h", h),
-        Seq(col("__h"), col(idCol)), "global_pos")
+    shardLayout(df, h, Seq(col(idCol)), numShards)
+  }
+
+  /** `global_pos` by `(h, tieBreak…)`, dealt round-robin into shards. */
+  private def shardLayout(df: DataFrame, h: Column, tieBreak: Seq[Column],
+                          numShards: Int): DataFrame =
+    globalRowIndex(df.withColumn("__h", h), col("__h") +: tieBreak,
+        "global_pos")
       .withColumn("shard", (col("global_pos") % numShards).cast(LongType))
       .withColumn("shard_pos",
         expr(s"global_pos div $numShards").cast(LongType))
       .drop("__h")
-  }
 
   /** Stratified deterministic sampling: per-stratum keep rates (basis
     * points), e.g. Map("en" -> 5000) with default 1000 = keep 50% of
@@ -531,11 +536,6 @@ object SampleOps {
     require(numShards > 0, s"replayLayout: numShards must be > 0 (got $numShards)")
     val h = TextOps.hash60(concat(col(epochCol).cast("string"), lit("_"),
       col(idCol).cast("string")))
-    globalRowIndex(df.withColumn("__h", h),
-        Seq(col("__h"), col(idCol), col(epochCol)), "global_pos")
-      .withColumn("shard", (col("global_pos") % numShards).cast(LongType))
-      .withColumn("shard_pos",
-        expr(s"global_pos div $numShards").cast(LongType))
-      .drop("__h")
+    shardLayout(df, h, Seq(col(idCol), col(epochCol)), numShards)
   }
 }

@@ -544,15 +544,8 @@ object StatOps {
     * expensive than the pipeline's own stages.
     */
   def funnelReport(stages: Seq[(String, DataFrame)],
-                   tokenCol: Column): DataFrame = {
-    require(stages.nonEmpty, "funnelReport: stages must be non-empty")
-    stages.zipWithIndex.map { case ((name, df), i) =>
-      df.agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(tokenCol.cast(LongType)), lit(0L)).as("n_tokens"))
-        .select(lit(i.toLong).as("stage_idx"), lit(name).as("stage"),
-          col("n_docs"), col("n_tokens"))
-    }.reduce(_ unionAll _)
-  }
+                   tokenCol: Column): DataFrame =
+    funnel("funnelReport", stages, tokenCol, Nil)
 
   /** Corpus snapshot diff — the release-to-release audit table: per doc
     * id, `added` (new only) / `removed` (old only) / `changed` (both,
@@ -632,14 +625,21 @@ object StatOps {
     * group — output bounded by stages × groups metadata rows.
     */
   def funnelReportBy(stages: Seq[(String, DataFrame)], tokenCol: Column,
-                     groupCol: String): DataFrame = {
-    require(stages.nonEmpty, "funnelReportBy: stages must be non-empty")
+                     groupCol: String): DataFrame =
+    funnel("funnelReportBy", stages, tokenCol, Seq(groupCol))
+
+  /** The funnel of both reports, per `groupCols` (none: one global row per
+    * stage — `Dataset.agg` is `groupBy().agg`).
+    */
+  private def funnel(op: String, stages: Seq[(String, DataFrame)],
+                     tokenCol: Column, groupCols: Seq[String]): DataFrame = {
+    require(stages.nonEmpty, s"$op: stages must be non-empty")
     stages.zipWithIndex.map { case ((name, df), i) =>
-      df.groupBy(col(groupCol))
+      df.groupBy(groupCols.map(col): _*)
         .agg(count(lit(1)).as("n_docs"),
           coalesce(sum(tokenCol.cast(LongType)), lit(0L)).as("n_tokens"))
-        .select(lit(i.toLong).as("stage_idx"), lit(name).as("stage"),
-          col(groupCol), col("n_docs"), col("n_tokens"))
+        .select((lit(i.toLong).as("stage_idx") +: lit(name).as("stage") +:
+          groupCols.map(col)) ++ Seq(col("n_docs"), col("n_tokens")): _*)
     }.reduce(_ unionAll _)
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
@@ -121,16 +121,21 @@ object TimeOps {
                    intervalMicros: Long): DataFrame = {
     require(intervalMicros > 0, "intervalMicros must be positive")
     val us = TsCompat.micros(col(tsCol))
+    val aggs = ohlcAggs(tsCol, idCol, valueCol)
     df.filter(col(tsCol).isNotNull)
       .groupBy(col(keyCol),
         floor(us / intervalMicros).cast(LongType).as("bucket"))
-      .agg(
-        min_by(col(valueCol), struct(col(tsCol), col(idCol))).as("open"),
-        max_by(col(valueCol), struct(col(tsCol), col(idCol))).as("close"),
-        max(col(valueCol)).as("high"),
-        min(col(valueCol)).as("low"),
-        count(lit(1)).as("n_events"))
+      .agg(aggs.head, aggs.tail: _*)
   }
+
+  /** The five candle aggregates, shared with `Streaming.ohlcCandles`. */
+  private[graft] def ohlcAggs(tsCol: String, idCol: String,
+                              valueCol: String): Seq[Column] = Seq(
+    min_by(col(valueCol), struct(col(tsCol), col(idCol))).as("open"),
+    max_by(col(valueCol), struct(col(tsCol), col(idCol))).as("close"),
+    max(col(valueCol)).as("high"),
+    min(col(valueCol)).as("low"),
+    count(lit(1)).as("n_events"))
 
   /** Trailing time-range window aggregate: per row, the value sum and
     * ROW COUNT over the key's rows in the CLOSED interval

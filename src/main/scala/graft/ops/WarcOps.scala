@@ -176,16 +176,8 @@ object WarcOps {
     * module scaladoc) — C4-extracted text cannot carry one, since
     * whitespace collapse removes every \r.
     */
-  def conversionRecord(uri: Column, date: Column, text: Column): Column = {
-    val view = decode(encode(text, "UTF-8"), "ISO-8859-1")
-    concat(
-      lit("WARC/1.0\r\nWARC-Type: conversion\r\nWARC-Target-URI: "), uri,
-      lit("\r\nWARC-Date: "), date,
-      lit("\r\nWARC-Refers-To-Target-URI: "), uri,
-      lit("\r\nContent-Type: text/plain\r\nContent-Length: "),
-      length(view).cast("string"),
-      lit("\r\n\r\n"), view, lit("\r\n\r\n"))
-  }
+  def conversionRecord(uri: Column, date: Column, text: Column): Column =
+    refersToRecord("conversion", "text/plain", uri, date, text)
 
   /** A WAT-style `metadata` record for one page (r18, VERDICT r17 #3 —
     * the third leg of the Common Crawl WARC/WAT/WET artifact triple):
@@ -206,13 +198,19 @@ object WarcOps {
     * read path recovers the JSON with `decodeBody(payload, 'utf-8')`.
     * Same [[parseRecords]] fidelity bounds as every record producer.
     */
-  def watRecord(uri: Column, date: Column, payloadJson: Column): Column = {
-    val view = decode(encode(payloadJson, "UTF-8"), "ISO-8859-1")
+  def watRecord(uri: Column, date: Column, payloadJson: Column): Column =
+    refersToRecord("metadata", "application/json", uri, date, payloadJson)
+
+  /** A `warcType` record referring to `uri`, `payload` as its UTF-8 latin1 view. */
+  private def refersToRecord(warcType: String, contentType: String,
+                             uri: Column, date: Column,
+                             payload: Column): Column = {
+    val view = decode(encode(payload, "UTF-8"), "ISO-8859-1")
     concat(
-      lit("WARC/1.0\r\nWARC-Type: metadata\r\nWARC-Target-URI: "), uri,
+      lit(s"WARC/1.0\r\nWARC-Type: $warcType\r\nWARC-Target-URI: "), uri,
       lit("\r\nWARC-Date: "), date,
       lit("\r\nWARC-Refers-To-Target-URI: "), uri,
-      lit("\r\nContent-Type: application/json\r\nContent-Length: "),
+      lit(s"\r\nContent-Type: $contentType\r\nContent-Length: "),
       length(view).cast("string"),
       lit("\r\n\r\n"), view, lit("\r\n\r\n"))
   }

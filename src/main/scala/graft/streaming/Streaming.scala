@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -48,22 +48,16 @@ object Streaming {
   /** Sliding-window variant (overlapping windows every `slide`). */
   def slidingCounts(events: DataFrame, tsCol: String, windowLen: String,
                     slide: String, lateness: String, keyCols: String*): DataFrame =
-    events.withWatermark(tsCol, lateness)
-      .groupBy(window(col(tsCol), windowLen, slide) +: keyCols.map(col): _*)
-      .agg(count(lit(1)).as("cnt"))
-      .select((col("window.start").as("ws") +: col("window.end").as("we") +:
-        keyCols.map(col)) :+ col("cnt"): _*)
+    windowed(events, tsCol, lateness, window(col(tsCol), windowLen, slide),
+      keyCols)(count(lit(1)).as("cnt"))
 
   /** Session windows: gap-based grouping per key (session closes after
     * `gap` of event-time silence).
     */
   def sessionCounts(events: DataFrame, tsCol: String, gap: String,
                     lateness: String, keyCols: String*): DataFrame =
-    events.withWatermark(tsCol, lateness)
-      .groupBy(session_window(col(tsCol), gap) +: keyCols.map(col): _*)
-      .agg(count(lit(1)).as("cnt"))
-      .select((col("session_window.start").as("ws") +:
-        col("session_window.end").as("we") +: keyCols.map(col)) :+ col("cnt"): _*)
+    windowed(events, tsCol, lateness, session_window(col(tsCol), gap),
+      keyCols)(count(lit(1)).as("cnt"))
 
   /** Streaming OHLC candles — the streaming face of TimeOps.ohlcResample:
     * per (key, tumbling window) the first/last/max/min observed value and
@@ -77,18 +71,20 @@ object Streaming {
   def ohlcCandles(events: DataFrame, tsCol: String, idCol: String,
                   valueCol: String, windowLen: String, lateness: String,
                   keyCols: String*): DataFrame =
-    events.withWatermark(tsCol, lateness)
-      .groupBy(window(col(tsCol), windowLen) +: keyCols.map(col): _*)
-      .agg(
-        min_by(col(valueCol), struct(col(tsCol), col(idCol))).as("open"),
-        max_by(col(valueCol), struct(col(tsCol), col(idCol))).as("close"),
-        max(col(valueCol)).as("high"),
-        min(col(valueCol)).as("low"),
-        count(lit(1)).as("n_events"))
-      .select((col("window.start").as("ws") +: col("window.end").as("we") +:
-        keyCols.map(col)) ++
-        Seq(col("open"), col("close"), col("high"), col("low"),
-          col("n_events")): _*)
+    windowed(events, tsCol, lateness, window(col(tsCol), windowLen),
+      keyCols)(graft.ops.TimeOps.ohlcAggs(tsCol, idCol, valueCol): _*)
+
+  /** Every window op's chain: watermark → group by window and keys → ws/we. */
+  private def windowed(events: DataFrame, tsCol: String, lateness: String,
+                       windowCol: Column, keyCols: Seq[String])(
+                       aggs: Column*): DataFrame = {
+    val g = events.withWatermark(tsCol, lateness)
+      .groupBy(windowCol +: keyCols.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+    val w = g.columns.head // `window` or `session_window`
+    g.select((col(s"$w.start").as("ws") +: col(s"$w.end").as("we") +:
+      keyCols.map(col)) ++ g.columns.drop(1 + keyCols.size).map(col): _*)
+  }
 
   /** Streaming exact dedup on key columns within the watermark horizon —
     * the streaming face of DedupOps.exact. State is per-key in the state
@@ -243,8 +239,7 @@ object Streaming {
                                  maxBucket: Int = 64,
                                  evictAfter: Option[String] = None)
       : Dataset[StreamCand] = {
-    require(bandRows > 0 && numHashes > 0 && numHashes % bandRows == 0,
-      s"bandRows ($bandRows) must divide numHashes ($numHashes)")
+    graft.ops.DedupOps.requireBands(numHashes, bandRows)
     // maxBucket = 0 would silently store nothing and emit nothing — the
     // silent-zero-output class this codebase fails loudly on elsewhere
     require(maxBucket > 0, s"maxBucket must be > 0, got $maxBucket")
@@ -257,24 +252,15 @@ object Streaming {
       s => graft.ops.TextOps.hash60(s))
     val mins = (0 until numHashes).map(j =>
       array_min(filter(hs, h => h % numHashes === j)).as(s"m$j"))
-    def dense(cols: Seq[org.apache.spark.sql.Column], j: Int) =
-      coalesce((0 until numHashes).map(o => cols((j + o) % numHashes)): _*)
     // a doc with no shingles has no signature (matches the batch OPH
     // contract) — unguarded, every sub-k-token doc would share the
     // all-empty signature and pair with every other one
     val signed = stream.filter(size(hs) > 0)
       .select(col(idCol).as("id"), struct(mins: _*).as("m"))
-    val mcols = (0 until numHashes).map(j => col(s"m.m$j"))
-    val bandStructs = (0 until numHashes / bandRows).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws("|", (0 until bandRows).map(r =>
-          dense(mcols, b * bandRows + r).cast("string")): _*).as("sig"))
-    }
     val timeoutConf =
       if (evictAfter.isDefined) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
-    signed.select(col("id"), explode(array(bandStructs: _*)).as("bs"))
-      .select(col("id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
+    graft.ops.DedupOps.ophBands(signed, numHashes, bandRows)(j => col(s"m.m$j"))
       .as[(Long, Int, String)]
       .groupByKey { case (_, band, sig) => (band, sig) }
       .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {

@@ -7,10 +7,11 @@ import graft.SparkSpec
 /** Unit specs for the round-10 operator surface: the `nearDupPairs`
   * default flip (LSH-verify is the path a caller gets without asking; the
   * exact enumeration is an opt-in), the quantized IVF probe, multi-probe
-  * LSH, salting and duplicated spans. The kernel-level tests
-  * (`NearestCentroid`, `QuantizeVec`, the int8 dots, ABI/Borsh codegen)
-  * live in [[graft.functions.KernelsSpec]]. Tiny fixtures; the
-  * oracle-gated x34/x64/x42/x65 cover the sf-scale cross-engine contract.
+  * LSH and salting (the duplicated-span cases are [[DedupOpsSpec]]'s).
+  * The kernel-level tests (`NearestCentroid`, `QuantizeVec`, the int8
+  * dots, ABI/Borsh codegen) live in [[graft.functions.KernelsSpec]].
+  * Tiny fixtures; the oracle-gated x34/x64/x42/x65 cover the sf-scale
+  * cross-engine contract.
   */
 class Round10OpsSpec extends SparkSpec {
   import spark.implicits._
@@ -143,41 +144,6 @@ class Round10OpsSpec extends SparkSpec {
     val max = groups.map(_.getLong(2)).max
     assert(max <= 2 * 400 / salts,
       s"hot key max reducer input $max exceeds 2x the even share ${400 / salts}")
-  }
-
-  test("duplicatedSpans finds maximal cross-doc spans, within-doc repeats, and merges adjacent coverage") {
-    val docs = Seq(
-      // docs 10/11 share the 7-token run D1..D7 inside unique filler:
-      // dup shingle positions {3,4,5} and {2,3,4} merge to 7-token spans
-      (10L, "a1 a2 a3 D1 D2 D3 D4 D5 D6 D7 a4 a5"),
-      (11L, "b1 b2 D1 D2 D3 D4 D5 D6 D7 b3"),
-      // doc 12 repeats R1..R5 internally: two islands (8 > 1 + 5)
-      (12L, "c1 R1 R2 R3 R4 R5 c2 c3 R1 R2 R3 R4 R5 c4"),
-      // docs 13/14 share blocks A1..A5 and B1..B5; contiguous in 13
-      // (positions 0 and 5 merge: 5 <= 0+5) but split by a token in 14
-      (13L, "A1 A2 A3 A4 A5 B1 B2 B3 B4 B5"),
-      (14L, "A1 A2 A3 A4 A5 zz B1 B2 B3 B4 B5"),
-      (15L, "tiny doc"),                         // sub-k: zero positions
-      (16L, "e1 e2 e3 e4 e5 e6 e7 e8")           // unique: no spans
-    ).toDF("doc_id", "text")
-    val spans = DedupOps.duplicatedSpans(docs, "doc_id", "text", k = 5)
-      .orderBy("doc_id", "span_start")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(spans.toSeq == Seq(
-      (10L, 3L, 7L), (11L, 2L, 7L),
-      (12L, 1L, 5L), (12L, 8L, 5L),
-      (13L, 0L, 10L),
-      (14L, 0L, 5L), (14L, 6L, 5L)))
-  }
-
-  test("duplicatedSpans rejects degenerate parameters") {
-    val docs = Seq((0L, "x y")).toDF("doc_id", "text")
-    intercept[IllegalArgumentException] {
-      DedupOps.duplicatedSpans(docs, "doc_id", "text", k = 0)
-    }
-    intercept[IllegalArgumentException] {
-      DedupOps.duplicatedSpans(docs, "doc_id", "text", minCount = 1)
-    }
   }
 
   test("qualityClassifierScore computes the quantized NB posterior exactly") {

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Round-12 operators: Bloom-backed incremental dedup (x73) and span
-  * removal (x74).
+/** Round-12 operators: Bloom-backed incremental dedup (x73); the span
+  * removal (x74) cases are [[DedupOpsSpec]]'s.
   */
 class Round12OpsSpec extends SparkSpec {
   import spark.implicits._
@@ -34,36 +34,6 @@ class Round12OpsSpec extends SparkSpec {
       0.5, bloom = true, bloomBits = 64, bloomHashes = 4)
     assert(ids(plain) == ids(bloomed))
     assert(ids(plain) == Set(252L, 253L)) // exact AND near dups dropped
-  }
-
-  test("removeSpans keeps the first occurrence and excises the rest") {
-    val boiler = "one two three four five" // exactly k=5 tokens
-    val docs = Seq(
-      (1L, s"$boiler unique tail of document one"),
-      (2L, s"leading words here $boiler and a suffix"),
-      (3L, "no duplicated content in this document at all"))
-      .toDF("doc_id", "text")
-    val out = DedupOps.removeSpans(docs, "doc_id", "text", k = 5,
-        minCount = 2)
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2)))
-      .toMap
-    // doc 1 holds the FIRST occurrence (lowest (id, p)) — untouched
-    assert(out(1L) == (s"$boiler unique tail of document one", 0L))
-    // doc 2's occurrence is excised, surroundings survive
-    assert(out(2L) == ("leading words here and a suffix", 5L))
-    assert(out(3L) == ("no duplicated content in this document at all", 0L))
-  }
-
-  test("removeSpans excises within-doc repetition beyond the first run") {
-    // the same 5-token phrase three times in ONE doc: occurrence one is
-    // first (kept); the rest is removable. Islands merge the two later
-    // occurrences (gap <= k) into one span.
-    val p = "a b c d e"
-    val docs = Seq((1L, s"$p x $p y $p")).toDF("doc_id", "text")
-    val out = DedupOps.removeSpans(docs, "doc_id", "text", k = 5,
-      minCount = 2).collect().head
-    assert(out.getString(1) == s"$p x y")
-    assert(out.getLong(2) == 10L)
   }
 
   test("minhashGroupSimilarity: identical groups 10000 bp, disjoint 0") {
@@ -217,20 +187,5 @@ class Round12OpsSpec extends SparkSpec {
     val b = SampleOps.mixtureSample(docs.repartition(7), "doc_id", "source",
       w).select("doc_id").as[Long].collect().sorted.toSeq
     assert(a == b && a.nonEmpty)
-  }
-
-  test("removeSpans can empty a doc and handles sub-k docs") {
-    val docs = Seq(
-      (1L, "w1 w2 w3 w4 w5"), // first occurrence — kept
-      (2L, "w1 w2 w3 w4 w5"), // fully removable
-      (3L, "tiny doc")) // < k tokens: zero shingles, untouched
-      .toDF("doc_id", "text")
-    val out = DedupOps.removeSpans(docs, "doc_id", "text", k = 5,
-        minCount = 2)
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2)))
-      .toMap
-    assert(out(1L) == ("w1 w2 w3 w4 w5", 0L))
-    assert(out(2L) == ("", 5L))
-    assert(out(3L) == ("tiny doc", 0L))
   }
 }

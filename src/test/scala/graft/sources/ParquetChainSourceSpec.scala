@@ -14,24 +14,8 @@ import graft.SparkSpec
   */
 class ParquetChainSourceSpec extends SparkSpec {
 
-  private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-chainfile").toString
-    // 400 blocks × 3 logs, same layout rules as the synthetic source.
-    // repartitionByRange on block_number → 4 files with contiguous,
-    // disjoint block ranges → footer min/max stats can prune whole files.
-    val rows = for (b <- 0L until 400L; i <- 0L until 3L) yield Row(
-      b, i,
-      ChainSource.addressPool((b % 5).toInt),
-      ChainSource.topic0Pool(((b + i) % 3).toInt),
-      { val a = new Array[Byte](32); a(31) = ((b * 7 + i) % 127).toByte; a },
-      { val a = new Array[Byte](32); a(31) = ((b + i) % 100).toByte; a })
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 4), ChainSource.logsSchema)
-      .repartitionByRange(4, col("block_number"))
-      .sortWithinPartitions("block_number")
-      .write.mode("overwrite").parquet(d + "/logs")
-    d
-  }
+  private lazy val dir: String =
+    ChainFixture.logsDir(spark, "graft-chainfile", 400L)
 
   private def read(opts: (String, String)*): DataFrame = {
     val r = spark.read.format(classOf[ParquetChainSource].getName)

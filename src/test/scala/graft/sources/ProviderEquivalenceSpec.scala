@@ -2,7 +2,7 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.DataSourceRegister
@@ -22,21 +22,8 @@ import graft.SparkSpec
   */
 class ProviderEquivalenceSpec extends SparkSpec {
 
-  private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-equiv").toString
-    val rows = for (b <- 0L until 200L; i <- 0L until 3L) yield Row(
-      b, i,
-      ChainSource.addressPool((b % 5).toInt),
-      ChainSource.topic0Pool(((b + i) % 3).toInt),
-      { val a = new Array[Byte](32); a(31) = ((b * 7 + i) % 127).toByte; a },
-      { val a = new Array[Byte](32); a(31) = ((b + i) % 100).toByte; a })
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 4), ChainSource.logsSchema)
-      .repartitionByRange(4, col("block_number"))
-      .sortWithinPartitions("block_number")
-      .write.mode("overwrite").parquet(d + "/logs")
-    d
-  }
+  private lazy val dir: String =
+    ChainFixture.logsDir(spark, "graft-equiv", 200L)
 
   private lazy val server: WireFixtureServer = {
     val rows = spark.read.parquet(s"$dir/logs")

@@ -17,23 +17,10 @@ import graft.sources.WireProtocol.WireQuery
   */
 class WireChainSourceSpec extends SparkSpec {
 
-  // same fixture layout as ParquetChainSourceSpec: 400 blocks × 3 logs
-  // following the synthetic source's rules
-  private lazy val parquetDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-wire").toString
-    val rows = for (b <- 0L until 400L; i <- 0L until 3L) yield Row(
-      b, i,
-      ChainSource.addressPool((b % 5).toInt),
-      ChainSource.topic0Pool(((b + i) % 3).toInt),
-      { val a = new Array[Byte](32); a(31) = ((b * 7 + i) % 127).toByte; a },
-      { val a = new Array[Byte](32); a(31) = ((b + i) % 100).toByte; a })
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 4), ChainSource.logsSchema)
-      .repartitionByRange(4, col("block_number"))
-      .sortWithinPartitions("block_number")
-      .write.mode("overwrite").parquet(d + "/logs")
-    d
-  }
+  // the ParquetChainSourceSpec fixture: the synthetic source's 400
+  // blocks × 3 logs
+  private lazy val parquetDir: String =
+    ChainFixture.logsDir(spark, "graft-wire", 400L)
 
   // the provider fixture serves the SAME rows the parquet fixture holds,
   // page-bounded to 37 blocks so every slice must follow pagination
