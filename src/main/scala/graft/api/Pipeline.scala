@@ -85,9 +85,9 @@ object Pipeline {
                          if !live.exists(_.values.exists(_.sameSemantics(df))))
         Try(df.unpersist())
     // `toDF()` plans afresh against the cache just registered: a
-    // DataFrame's own `rdd` is memoized, so a static dimension would read a
-    // released cache. A failed fill releases what it persisted, or each
-    // failure would pin executor memory for the life of the session.
+    // DataFrame's own `rdd` is built once, so a static dimension would
+    // read a released cache. A failed fill releases what it persisted, or
+    // each failure would pin executor memory for the life of the session.
     def fill(stepped: Tables, live: Option[Tables]): Tables = {
       stepped.values.foreach(_.persist())
       try spark.sparkContext.union(stepped.values.toSeq.distinct.map(_.toDF().rdd))

@@ -407,7 +407,7 @@ case class ZstdToString(child: Expression) extends UnaryKernel {
 }
 
 object ZstdToString {
-  /** true iff zstd-jni is on the classpath (memoized once per JVM). */
+  /** true iff zstd-jni is on the classpath (cached once per JVM). */
   lazy val available: Boolean =
     try { Class.forName("com.github.luben.zstd.ZstdInputStream"); true }
     catch { case _: Throwable => false }
@@ -486,7 +486,7 @@ case class BrotliToString(child: Expression) extends UnaryKernel {
 
 object BrotliToString {
   /** true iff commons-compress AND the org.brotli dec jar are present
-    * (memoized once per JVM).
+    * (cached once per JVM).
     */
   lazy val available: Boolean =
     try {

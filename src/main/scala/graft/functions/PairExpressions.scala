@@ -179,7 +179,7 @@ object SimhashChunkPairs {
     rec(0, a).map(_.toArray).toArray
   }
 
-  // comboMasks are constants of (chunks, maxHamming) — memoized so the
+  // comboMasks are constants of (chunks, maxHamming) — cached so the
   // kernel does not rebuild the recursive combo enumeration on EVERY
   // bucket row (the doc advertises "one tight loop per bucket")
   private val maskCache =
@@ -213,7 +213,7 @@ object SimhashChunkPairs {
       codes(x) = row.getLong(1)
       x += 1
     }
-    // a combo agrees iff xor & comboMask == 0 — masks are memoized
+    // a combo agrees iff xor & comboMask == 0 — masks are cached
     // constants of (chunks, maxHamming)
     val comboMasks = comboMasksFor(chunks, maxHamming)
     val out = new ArrayBuffer[Any]()

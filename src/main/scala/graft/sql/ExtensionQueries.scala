@@ -80,137 +80,58 @@ object ExtensionQueries {
   private def bridge1(mk: Expression => Expression, c: Column): Column =
     Bridge.column(mk(Bridge.expression(c)))
 
-  /** Per-(application, sf-dir) memo of BOUNDED driver-side artifacts the
-    * composite ANN gates share — the brute-force truth set (queries×k rows)
-    * and the trained codebook (k×dim floats). x61+x62+x63 each re-derived
-    * the same truth (and x63 retrained the same codebook) from scratch, so
-    * one bench run paid the most expensive sub-jobs three times (~7.5 s of
-    * the r9 suite). Entries stay REPLAYABLE: every cached value is a pure
-    * deterministic function of (dir), so a gate returns bit-identical rows
-    * whether the memo is cold or warm — the cache moves work, never
-    * answers. Keyed by applicationId so a fresh session (new JVM, changed
-    * data) never sees a stale value; values are bounded (rows ≤ nq·k,
-    * codebook k×dim), so the map never grows with data.
+  /** Brute-force ANN ground truth: x25's cosine top-5 for the 20 query
+    * vectors, without its output order — the set every recall gate
+    * (x61, x63, x91, x112, x126) grades against.
     */
-  private val gateMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-  /** get-then-putIfAbsent, NOT computeIfAbsent: memoized blocks nest (a
-    * candidate memo's thunk trains its codebook through another memoized
-    * call on this same map — x63, x87/x91, x126), and a nested
-    * `computeIfAbsent` on one ConcurrentHashMap throws
-    * IllegalStateException("Recursive update") whenever the inner key
-    * lands in the outer key's reserved bin — a probabilistic flake keyed
-    * by applicationId hashing. The race this form permits (two threads
-    * both computing) is benign: every thunk is a pure deterministic
-    * function of (dir), so duplicates are bit-identical and the loser's
-    * work is merely discarded — and the bench/verify drivers are
-    * single-threaded anyway.
-    */
-  private def memoized[T <: AnyRef](s: SparkSession, dir: String,
-                                    tag: String)(f: => T): T = {
-    val key = s"${s.sparkContext.applicationId}|$dir|$tag"
-    val existing = gateMemo.get(key)
-    if (existing != null) existing.asInstanceOf[T]
-    else {
-      val v = f
-      val prev = gateMemo.putIfAbsent(key, v)
-      (if (prev != null) prev else v).asInstanceOf[T]
-    }
+  private def annTruth(s: SparkSession, dir: String): DataFrame = {
+    val e = spread(t(s, dir, "embeddings"))
+    VectorOps.bruteForceTopK(e.filter(col("vec_id") < 20), e, "vec_id",
+      "embedding", 5)
   }
-
-  /** Brute-force ANN ground truth (x25) as a driver-held literal relation:
-    * computed ONCE per (app, dir), replayed as a LocalRelation for every
-    * gate that grades against it — the recall joins see the same bounded
-    * top-k rows either way, and a localCheckpoint would not survive the
-    * bench harness's per-query unpersist boundary.
-    */
-  private def annTruth(s: SparkSession, dir: String): DataFrame =
-    memoRelation(s, dir, "annTruth")(queries("x25_ann_topk")(s, dir))
-
-  /** Driver-held literal replay of a bounded DataFrame, memoized by tag —
-    * the ONE definition of the (schema, collect) → createDataFrame
-    * convention every gate input shares (annTruth, gateCandidates, the
-    * x63 trained-IVF candidates, the x126 trained-PQ candidates). The
-    * replay survives the bench harness's per-query unpersist boundary,
-    * which a localCheckpoint would not.
-    */
-  private def memoRelation(s: SparkSession, dir: String, tag: String)
-                          (thunk: => DataFrame): DataFrame = {
-    val (schema, rows) = memoized(s, dir, tag) {
-      val df = thunk
-      (df.schema, df.collect())
-    }
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
-
-  /** A recall-gate CANDIDATE set (one approximate method's bounded top-k
-    * output) as a driver-held literal relation, computed once per (app,
-    * dir) — the annTruth pattern applied to the gate's other input. The
-    * x61/x63 gates GRADE index outputs; the index paths themselves are
-    * separately-measured bench entries (x26/x62/x67/x35/x66), so a gate
-    * that re-ran all six candidate plans inside its own job measured the
-    * same work twice and dominated the suite window (r10 #6, r11: x63
-    * 5.4–7.3 s). Like a production recall check, the gate reads the
-    * already-materialized index output — ≤ top-k×queries rows, bounded —
-    * and pays only its grading joins.
-    */
-  private def gateCandidates(s: SparkSession, dir: String,
-                             name: String): DataFrame =
-    memoRelation(s, dir, s"cand|$name")(queries(name)(s, dir))
 
   /** The x63 trained codebook (kmeansCentroidsExact, k=32, 2 Lloyd
-    * rounds) — deterministic in (dir), k×dim driver floats, trained once
-    * per run exactly as a production pipeline trains once per corpus.
+    * rounds) — deterministic in (dir), k×dim driver floats.
     */
   private def trainedCodebook(s: SparkSession, dir: String): Array[Array[Float]] =
-    memoized(s, dir, "kmeans_k32_i2") {
-      VectorOps.kmeansCentroidsExact(spread(t(s, dir, "embeddings")),
-        "vec_id", "embedding", k = 32, iters = 2)
-    }
+    VectorOps.kmeansCentroidsExact(spread(t(s, dir, "embeddings")),
+      "vec_id", "embedding", k = 32, iters = 2)
 
   /** Learned BPE merge list (8 rules) for the documents fixture — the
-    * tokenizer model, deterministic in (dir), trained once per run exactly
-    * as a production pipeline trains its tokenizer once per corpus; the
-    * x70 (train) and x71 (tokenize) gates share it.
+    * tokenizer model, deterministic in (dir); the x70 (train) and x71
+    * (tokenize) gates each train it.
     */
   private val BpeMergeCount = 8
   private def bpeMergesOf(s: SparkSession, dir: String): Seq[BpeOps.Merge] =
-    memoized(s, dir, s"bpeMerges$BpeMergeCount") {
-      BpeOps.trainMerges(spread(t(s, dir, "documents")), BpeMergeCount)._1
-    }
+    BpeOps.trainMerges(spread(t(s, dir, "documents")), BpeMergeCount)._1
 
   /** Int8 quantization scale for the embeddings fixture — index metadata
-    * like the codebook (127/max|component|, one corpus aggregate),
-    * computed once per (app, dir).
+    * like the codebook (127/max|component|, one corpus aggregate).
     */
   private def sqScaleOf(s: SparkSession, dir: String): Double =
-    memoized(s, dir, "sqScale") {
-      java.lang.Double.valueOf(
-        VectorOps.sqScale(t(s, dir, "embeddings"), "embedding"))
-    }.doubleValue()
-
-  /** The x87 PQ codebooks (m=4 subspaces × 16 seed codewords) — index
-    * metadata like the trained codebook and qscale, deterministic in
-    * (dir), computed once per (app, dir).
-    */
-  private def pqCodebooksOf(s: SparkSession, dir: String): Array[Array[Array[Float]]] =
-    memoized(s, dir, "pqSeed_m4_k16") {
-      VectorOps.pqSeedCodebooks(t(s, dir, "embeddings"), "vec_id",
-        "embedding", m = 4, ksub = 16)
-    }
+    VectorOps.sqScale(t(s, dir, "embeddings"), "embedding")
 
   /** TRAINED PQ codebooks (per-subspace kmeansCentroidsExact, 2 Lloyd
     * rounds — [[VectorOps.pqTrainedCodebooks]]) for the x126 gate —
-    * index metadata like the seed codebooks, deterministic in (dir),
-    * trained once per (app, dir, ksub) exactly as a production pipeline
-    * trains once per corpus and persists via ModelIO.savePqCodebooks.
+    * index metadata like the seed codebooks, deterministic in (dir); a
+    * production pipeline trains them once per corpus and persists them
+    * via ModelIO.savePqCodebooks.
     */
   private def pqTrainedCodebooksOf(s: SparkSession, dir: String,
                                    ksub: Int): Array[Array[Array[Float]]] =
-    memoized(s, dir, s"pqTrained_m4_k${ksub}_i2") {
-      VectorOps.pqTrainedCodebooks(spread(t(s, dir, "embeddings")),
-        "vec_id", "embedding", m = 4, ksub = ksub, iters = 2)
-    }
+    VectorOps.pqTrainedCodebooks(spread(t(s, dir, "embeddings")),
+      "vec_id", "embedding", m = 4, ksub = ksub, iters = 2)
+
+  /** The x66 serving plan (IVF-SQ8 over the given trained codebook),
+    * without its output order — x66 and x63's `ivf_q8` arm share it, and
+    * x63 passes the codebook its `ivf_trained` arm already trained.
+    */
+  private def annQuantized(s: SparkSession, dir: String,
+                           codebook: Seq[Array[Float]]): DataFrame = {
+    val e = spread(t(s, dir, "embeddings"))
+    VectorOps.ivfTopKQuantizedWithCentroids(e.filter(col("vec_id") < 20),
+      e, "vec_id", "embedding", 5, codebook, sqScaleOf(s, dir), nProbe = 4)
+  }
 
   /** The x149 capture history: three weekly captures `k` per doc URL;
     * `version` changes every capture on `doc_id % 3 == 0`, once (at the
@@ -1849,10 +1770,7 @@ object ExtensionQueries {
     // x25 — exact ANN baseline: brute-force cosine top-5 for 20 query
     // vectors (corpus scanned once, queries broadcast).
     "x25_ann_topk" -> QueryCase({ (s, dir) =>
-      val e = spread(t(s, dir, "embeddings"))
-      VectorOps.bruteForceTopK(e.filter(col("vec_id") < 20), e, "vec_id",
-          "embedding", 5)
-        .orderBy("qid", "nid")
+      annTruth(s, dir).orderBy("qid", "nid")
     }, oracle =
       s"""WITH $annV,
          | $annBrute
@@ -2071,16 +1989,21 @@ object ExtensionQueries {
         | FROM cc FULL OUTER JOIN sc ON cc.c_nationkey = sc.s_nationkey
         | ORDER BY k""".stripMargin),
 
-    // x32 — EXCEPT set op (users who errored but never purchased).
+    // x32 — EXCEPT set op (users who errored but never made a purchase of
+    // value >= 150). The value cut keeps the gate non-empty: every fixture
+    // user has some purchase, and a 0-row gate passes a plan that drops
+    // every row.
     "x32_except" -> QueryCase({ (s, dir) =>
       val ev = t(s, dir, "events")
       ev.filter(col("event_type") === "error").select(col("user_id"))
-        .except(ev.filter(col("event_type") === "purchase").select(col("user_id")))
+        .except(ev.filter(col("event_type") === "purchase" &&
+          col("value") >= 150).select(col("user_id")))
         .orderBy("user_id")
     }, oracle =
       """SELECT user_id FROM events WHERE event_type = 'error'
         | EXCEPT
-        | SELECT user_id FROM events WHERE event_type = 'purchase'
+        | SELECT user_id FROM events
+        | WHERE event_type = 'purchase' AND value >= 150
         | ORDER BY user_id""".stripMargin),
 
     // x33 — approximate aggregates (HLL distinct, quantile sketch). Raw
@@ -2432,13 +2355,10 @@ object ExtensionQueries {
     // (On this fixture's near-random embeddings the single-table 8-bit LSH
     // scores ~0 — which is the point of the gate; IVF nProbe=2 does better.)
     "x61_ann_recall" -> QueryCase({ (s, dir) =>
-      // truth from the per-run memo: both method grades join against it,
-      // and x63 grades against the SAME set — one brute-force scoring
-      // job per run instead of one per gate per branch
       val exact = annTruth(s, dir)
-      val lsh = VectorOps.annRecall(gateCandidates(s, dir, "x26_ann_lsh"),
+      val lsh = VectorOps.annRecall(queries("x26_ann_lsh")(s, dir),
         exact, "qid", "nid").withColumn("method", lit("lsh"))
-      val ivf = VectorOps.annRecall(gateCandidates(s, dir, "x35_ann_ivf"),
+      val ivf = VectorOps.annRecall(queries("x35_ann_ivf")(s, dir),
         exact, "qid", "nid").withColumn("method", lit("ivf"))
       lsh.unionByName(ivf)
         .select("method", "qid", "n_exact", "n_hit", "recall_bp")
@@ -2485,10 +2405,7 @@ object ExtensionQueries {
     // aggregate the oracle recomputes in SQL — every scoring op mirrored,
     // so the result is hash-exact despite quantization.
     "x66_ann_quantized" -> QueryCase({ (s, dir) =>
-      val e = spread(t(s, dir, "embeddings"))
-      VectorOps.ivfTopKQuantizedWithCentroids(e.filter(col("vec_id") < 20),
-          e, "vec_id", "embedding", 5, trainedCodebook(s, dir).toSeq,
-          sqScaleOf(s, dir), nProbe = 4)
+      annQuantized(s, dir, trainedCodebook(s, dir).toSeq)
         .orderBy("qid", "nid")
     }, oracle =
       s"""WITH $annV,
@@ -2514,20 +2431,18 @@ object ExtensionQueries {
         VectorOps.annRecall(df, exact, "qid", "nid")
           .withColumn("method", lit(m))
       // training runs its own driver-iterated jobs BEFORE the gate plan is
-      // built — the codebook is k×dim floats entering the probe as
-      // literals, trained ONCE per run (gateMemo) like a production
-      // pipeline trains once per corpus
-      val ivfTrained = memoRelation(s, dir, "cand|ivf_trained") {
-        VectorOps.ivfTopKWithCentroids(
-          e.filter(col("vec_id") < 20), e, "vec_id", "embedding", 5,
-          trainedCodebook(s, dir).toSeq, nProbe = 4)
-      }
-      grade(gateCandidates(s, dir, "x26_ann_lsh"), "lsh")
-        .unionByName(grade(gateCandidates(s, dir, "x62_ann_lsh_multi"), "lsh_multi"))
-        .unionByName(grade(gateCandidates(s, dir, "x67_ann_lsh_multiprobe"), "lsh_mp"))
-        .unionByName(grade(gateCandidates(s, dir, "x35_ann_ivf"), "ivf"))
+      // built — the codebook is k×dim floats entering both trained probes
+      // (ivf_trained and x66's ivf_q8) as literals, trained once here
+      val codebook = trainedCodebook(s, dir).toSeq
+      val ivfTrained = VectorOps.ivfTopKWithCentroids(
+        e.filter(col("vec_id") < 20), e, "vec_id", "embedding", 5,
+        codebook, nProbe = 4)
+      grade(queries("x26_ann_lsh")(s, dir), "lsh")
+        .unionByName(grade(queries("x62_ann_lsh_multi")(s, dir), "lsh_multi"))
+        .unionByName(grade(queries("x67_ann_lsh_multiprobe")(s, dir), "lsh_mp"))
+        .unionByName(grade(queries("x35_ann_ivf")(s, dir), "ivf"))
         .unionByName(grade(ivfTrained, "ivf_trained"))
-        .unionByName(grade(gateCandidates(s, dir, "x66_ann_quantized"), "ivf_q8"))
+        .unionByName(grade(annQuantized(s, dir, codebook), "ivf_q8"))
         .select("method", "qid", "n_exact", "n_hit", "recall_bp")
         .orderBy("method", "qid")
     }, oracle =
@@ -3211,7 +3126,9 @@ object ExtensionQueries {
     "x87_ann_ivf_pq" -> QueryCase({ (s, dir) =>
       val e = spread(t(s, dir, "embeddings"))
       VectorOps.ivfTopKPq(e.filter(col("vec_id") < 20), e, "vec_id",
-          "embedding", 5, pqCodebooksOf(s, dir), numCentroids = 8, nProbe = 2)
+          "embedding", 5, VectorOps.pqSeedCodebooks(t(s, dir, "embeddings"),
+            "vec_id", "embedding", m = 4, ksub = 16),
+          numCentroids = 8, nProbe = 2)
         .orderBy("qid", "nid")
     }, oracle =
       // IVF-PQ mirror: seed codebooks = 16-dim slices of the 16 lowest-id
@@ -3328,11 +3245,11 @@ object ExtensionQueries {
         | SELECT qid, did, n_terms, score, rk FROM rnk
         | WHERE rk <= 5 ORDER BY qid, did""".stripMargin),
 
-    // x91 — the PQ recall gate: x87's memoized top-5 graded against the
-    // x25 brute-force truth (the annTruth pattern) — what the 64×
-    // compression costs, measured, next to the x61/x63 method grades.
+    // x91 — the PQ recall gate: x87's top-5 graded against the x25
+    // brute-force truth — what the 64× compression costs, measured, next
+    // to the x61/x63 method grades.
     "x91_ann_recall_pq" -> QueryCase({ (s, dir) =>
-      VectorOps.annRecall(gateCandidates(s, dir, "x87_ann_ivf_pq"),
+      VectorOps.annRecall(queries("x87_ann_ivf_pq")(s, dir),
           annTruth(s, dir), "qid", "nid")
         .withColumn("method", lit("ivf_pq"))
         .select("method", "qid", "n_exact", "n_hit", "recall_bp")
@@ -3966,9 +3883,6 @@ object ExtensionQueries {
       val tr = e.withColumn("embedding", slice(col("embedding"), 1, 16))
       val approx = VectorOps.bruteForceTopK(tr.filter(col("vec_id") < 20),
         tr, "vec_id", "embedding", 5)
-      // full-dim ground truth = the x25 rows the annTruth memo already
-      // holds — re-deriving it here was a second brute-force corpus scan
-      // per run (the exact sub-job class the gateMemo exists to stop)
       VectorOps.annRecall(approx, annTruth(s, dir), "qid", "nid")
         .orderBy("qid")
     }, oracle =
@@ -4403,11 +4317,9 @@ object ExtensionQueries {
     "x126_ann_recall_pq_trained" -> QueryCase({ (s, dir) =>
       val e = spread(t(s, dir, "embeddings"))
       def cands(ksub: Int): DataFrame =
-        memoRelation(s, dir, s"cand|pq_trained_$ksub") {
-          VectorOps.ivfTopKPq(e.filter(col("vec_id") < 20), e,
-            "vec_id", "embedding", 5, pqTrainedCodebooksOf(s, dir, ksub),
-            numCentroids = 8, nProbe = 2)
-        }
+        VectorOps.ivfTopKPq(e.filter(col("vec_id") < 20), e,
+          "vec_id", "embedding", 5, pqTrainedCodebooksOf(s, dir, ksub),
+          numCentroids = 8, nProbe = 2)
       val exact = annTruth(s, dir)
       def grade(df: DataFrame, m: String): DataFrame =
         VectorOps.annRecall(df, exact, "qid", "nid")

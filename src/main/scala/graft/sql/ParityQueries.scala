@@ -118,10 +118,15 @@ object ParityQueries {
         | WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_acctbal > 9000)
         | ORDER BY o_orderkey""".stripMargin),
 
-    // Q6 — anti join (NOT IN with non-null keys ≡ left_anti).
+    // Q6 — anti join (NOT IN with non-null keys ≡ left_anti): customers
+    // with no order before 1996. The date cut keeps the gate non-empty:
+    // every fixture customer has some order, and a 0-row gate passes a
+    // plan that drops every row.
     "q06_anti_join" -> QueryCase({ (s, dir) =>
       val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders").select(col("o_custkey"))
+      val o = t(s, dir, "orders")
+        .filter(col("o_orderdate") < to_timestamp(lit("1996-01-01")))
+        .select(col("o_custkey"))
       c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"))
         .orderBy(col("c_custkey"))
@@ -132,7 +137,8 @@ object ParityQueries {
       // incrementalDedupSql NULL rule, applied here too)
       """SELECT c_custkey FROM customer c
         | WHERE NOT EXISTS (SELECT 1 FROM orders o
-        |   WHERE o.o_custkey = c.c_custkey)
+        |   WHERE o.o_custkey = c.c_custkey
+        |     AND o.o_orderdate < DATE '1996-01-01')
         | ORDER BY c_custkey""".stripMargin),
 
     // Q7 — grouped aggregation + HAVING. Low-cardinality keys → partial

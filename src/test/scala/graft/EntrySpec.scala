@@ -31,4 +31,30 @@ class EntrySpec extends SparkSpec {
     assert(shared.getMessage.contains("q1_a") &&
       !shared.getMessage.contains("x2_b"), shared.getMessage)
   }
+
+  test("a declared query computes its inputs in every evaluation " +
+      "(x70 trains its BPE merges again)") {
+    val sc = spark.sparkContext
+    def jobsOf(group: String): Int = {
+      def under(g: String)(body: => Unit): Unit = {
+        sc.setJobGroup(g, g)
+        try body finally sc.clearJobGroup()
+      }
+      under(group)(sql.ExtensionQueries.queries("x70_bpe_train")(
+        spark, SparkSpec.testDataDir).collect())
+      // status events arrive in order: once a later marker job shows,
+      // every job of the group submitted before it shows too
+      val marker = s"$group-marker"
+      under(marker)(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val first = jobsOf("x70-first")
+    val second = jobsOf("x70-second")
+    assert(first > 1, s"x70 ran $first job(s): no training seen")
+    assert(second >= first, s"x70 ran $first jobs, then $second: the " +
+      "second evaluation reused what the first computed")
+  }
 }

@@ -4,73 +4,13 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Round-18 wave 1: the language-aware quality tier (the CCNet
-  * discipline) — per-language Gopher profiles, with the English-defaults
-  * fallback proven bit-for-bit. The per-language C4 line rules are in
-  * [[HtmlOpsSpec]].
+/** Round-18 wave 1: WAT records, the per-host crawl politeness cap,
+  * sitemap revalidation, the jar-gated zstd/brotli content codings and
+  * script precedence. The per-language Gopher profiles are in
+  * [[TextOpsSpec]].
   */
 class Round18OpsSpec extends SparkSpec {
   import spark.implicits._
-
-  private val frProfile = Seq(
-    ("fr", Seq("le", "la", "les", "de", "du", "des", "et", "un", "une",
-      "en"), 2L, 10L, 100000L, 250L, 1000L, 8000L))
-  private val profCols = Seq("lang", "stop_words", "min_stop_hits",
-    "min_words", "max_words", "min_word_len_centi", "max_word_len_centi",
-    "min_alpha_bp")
-
-  test("gopherFilterByLang: a French doc fails the English stopword " +
-      "probe but passes under its language profile") {
-    val fr = "le temps et la vie de la mer ont un moment prudent " +
-      "dans le coin du monde aujourdhui vraiment."
-    val docs = Seq((1L, "fr", fr)).toDF("doc_id", "lang", "text")
-    // English-only config drops it (no English stopwords present)
-    val eng = TextOps.gopherFilter(docs, "text", minWords = 10L).head()
-    assert(!eng.getAs[Boolean]("keep") && eng.getAs[Long]("stop_hits") == 0L)
-    // the fr profile keeps it
-    val prof = frProfile.toDF(profCols: _*)
-    val aware = TextOps.gopherFilterByLang(docs, prof).head()
-    assert(aware.getAs[Boolean]("keep"))
-    assert(aware.getAs[Long]("stop_hits") >= 2L)
-    // the non-language rules kept their global bounds
-    assert(aware.getAs[Boolean]("keep_dup") && aware.getAs[Boolean]("keep_sym"))
-  }
-
-  test("gopherFilterByLang: a language with NO profile row gets " +
-      "exactly gopherFilter's English decisions (the fallback arm)") {
-    val docs = Seq(
-      (1L, "en", "the study of the river and the stone that people " +
-        "have kept with care over time here today."),
-      (2L, "xx", "zz yy ww vv uu tt ss rr qq pp oo nn.")) // no stopwords
-      .toDF("doc_id", "lang", "text")
-    val prof = frProfile.toDF(profCols: _*) // no en/xx rows
-    val aware = TextOps.gopherFilterByLang(docs, prof)
-      .select("doc_id", "n_words", "mean_word_len_centi", "dup_word_bp",
-        "alpha_word_bp", "sym_bp", "stop_hits", "keep")
-      .orderBy("doc_id").collect()
-    val base = TextOps.gopherFilter(docs, "text") // English defaults
-      .select("doc_id", "n_words", "mean_word_len_centi", "dup_word_bp",
-        "alpha_word_bp", "sym_bp", "stop_hits", "keep")
-      .orderBy("doc_id").collect()
-    assert(aware.toSeq == base.toSeq) // bit-for-bit, incl. minWords=50
-  }
-
-  test("gopherFilterByLang: a NULL profile value falls back per-FIELD " +
-      "(a one-column override works)") {
-    // profile with ONLY min_words set (5); everything else NULL
-    val prof = spark.sql(
-      "SELECT 'en' AS lang, CAST(NULL AS ARRAY<STRING>) AS stop_words, " +
-        "CAST(NULL AS BIGINT) AS min_stop_hits, 5L AS min_words, " +
-        "CAST(NULL AS BIGINT) AS max_words, " +
-        "CAST(NULL AS BIGINT) AS min_word_len_centi, " +
-        "CAST(NULL AS BIGINT) AS max_word_len_centi, " +
-        "CAST(NULL AS BIGINT) AS min_alpha_bp")
-    val docs = Seq((1L, "en", "the cat and the dog have fun."))
-      .toDF("doc_id", "lang", "text") // 7 words: fails default 50
-    val r = TextOps.gopherFilterByLang(docs, prof).head()
-    assert(r.getAs[Boolean]("keep_n_words")) // 7 >= overridden 5
-    assert(r.getAs[Long]("stop_hits") == 3L) // default English probe
-  }
 
   test("watRecord: WAT write -> parseRecords -> utf-8 decode -> " +
       "from_json round-trips links/title/headers with a true BYTE " +

@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Local pre-flight for the driver's t2 gate: run each oracle SQL in DuckDB
 over the fixture parquet, compare to the Spark dump in outDir (columns
-sorted by name, values hashed row-wise). Usage:
+sorted by name, values hashed row-wise). A query whose two sides agree on
+zero rows prints EMPTY and counts as a failure: an empty gate passes a plan
+that drops every row. Usage:
   python3 tools/selfcheck.py <sfDir> <outDir>
 """
 import json, os, sys, glob
@@ -43,6 +45,9 @@ for name, sql in sorted(oracle.items()):
             continue
         if len(want) != len(got):
             print(f"FAIL {name}: rows {len(got)} != {len(want)}"); fails += 1
+            continue
+        if len(got) == 0:
+            print(f"EMPTY {name}"); fails += 1
             continue
         # stringify for robust compare (timestamps, decimals)
         ws = want.astype(str); gs = got.astype(str)
