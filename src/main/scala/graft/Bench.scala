@@ -1,10 +1,45 @@
 package graft
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 object Bench {
+  /** Counts whole-stage codegen fallbacks: Spark keeps no counter for
+    * them, only the WARN `WholeStageCodegenExec` logs when a stage's
+    * generated code fails to compile and the stage runs without it.
+    */
+  private object Fallbacks extends AbstractAppender(
+      "graft-bench-codegen-fallbacks", null, null, true, Property.EMPTY_ARRAY) {
+    private val n = new AtomicLong
+    def count: Long = n.get
+    override def append(e: LogEvent): Unit =
+      if (e.getMessage.getFormattedMessage.startsWith("Whole-stage codegen disabled"))
+        n.incrementAndGet()
+    def install(): Unit = {
+      start()
+      LogManager.getLogger(classOf[WholeStageCodegenExec])
+        .asInstanceOf[CoreLogger].addAppender(this)
+    }
+  }
+
+  /** Generated-code work so far in this JVM: classes compiled (every
+    * successful compile updates CodegenMetrics' compile-time histogram
+    * once), compile nanos (CodeGenerator's accumulator; the histogram
+    * keeps no sum) and whole-stage fallbacks.
+    */
+  private def codegenNow: (Long, Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime,
+      Fallbacks.count)
+
   private def gcMillis: Long =
     ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(_.getCollectionTime).filter(_ > 0).sum
@@ -198,6 +233,7 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty[String])
     val spark = GraftSession.getOrCreate()
+    Fallbacks.install()
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
       only.forall(_.exists(n.startsWith)) && !skip.contains(n) }
     // Warmup pass: run every query once untimed so the timed pass measures
@@ -263,8 +299,12 @@ object Bench {
     // allocates too much" from "the window was hot" without re-running
     // anything. Accumulated per rep around the same timer.
     var gcTimedMs = 0L
+    // per query, summed over its timed reps: classes compiled, compile
+    // ms and whole-stage fallbacks (a warm cache compiles nothing)
+    val codegen = scala.collection.mutable.Map[String, (Long, Long, Long)]()
     val results = selected.map { case (name, fn) =>
       reclaim()
+      val (c0, ns0, f0) = codegenNow
       // per-QUERY accumulator, folded into the global count only for
       // queries that survive: a failed query's reps are excluded from
       // every reported number, so their collector time must not appear
@@ -294,6 +334,8 @@ object Bench {
         dt
       }
       if (!failed.contains(name)) gcTimedMs += qGcMs
+      val (c1, ns1, f1) = codegenNow
+      codegen(name) = (c1 - c0, ns1 - ns0, f1 - f0)
       (name, times.min, times.sum / times.size, times)
     }
       // a failed query's time-to-failure must NOT flatter the headline
@@ -423,8 +465,13 @@ object Bench {
         else Some("oracle_queries" ->
           f.substring(f.indexOf(':', i + 16) + 1).trim)
       }.toSeq
-    val fullLine = obj(corePairs ++
-      Seq("query_reps" -> repsDetail) ++ oracleQueriesPair ++ sfPair)
+    val codegenDetail = results.map { case (k, _, _, _) =>
+      val (compiles, nanos, fallbacks) = codegen(k)
+      s"${Verify.jsonEscape(k)}:" + obj(Seq("compiles" -> compiles.toString,
+        "compile_ms" -> num(nanos / 1e6, 1), "fallbacks" -> fallbacks.toString))
+    }.mkString("{", ",", "}")
+    val fullLine = obj(corePairs ++ Seq("query_reps" -> repsDetail,
+      "query_codegen" -> codegenDetail) ++ oracleQueriesPair ++ sfPair)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
     // an unwritable output path must not take the stdout headline down
     // with it — the two artifacts are independent channels

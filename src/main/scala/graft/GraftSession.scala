@@ -117,6 +117,11 @@ object GraftSession {
         s"SPARK_GRAFT_CPUS must be an integer (got '$raw')") }
   }
 
+  /** Spark's generated-class cache size: a static SQL conf, so a session
+    * that already exists keeps its own value.
+    */
+  private[graft] val codegenCacheConf = "spark.sql.codegen.cache.maxEntries"
+
   /** The engine's scale-posture defaults, as data — builder() applies
     * them; the spec asserts on THIS map (a second SparkContext can't boot
     * in a shared test JVM, so the defaults must be observable without
@@ -142,7 +147,23 @@ object GraftSession {
     // serialized the compute-heavy pair/kernel stages (x21-x24) through a
     // single task; at 100 TB partitions are data-sized either way, so the
     // default is both the local and the cluster posture.
-    "spark.sql.adaptive.enabled" -> "true")
+    "spark.sql.adaptive.enabled" -> "true",
+    // Spark's generated-class cache (default 100 entries, one JVM-wide
+    // cache sized when CodeGenerator first loads) holds fewer classes
+    // than one pass of a query mix generates, so every pass recompiled
+    // the evicted ones: 34-79 classes a catalog_mix session. Static: see
+    // staticConfNotice for a session that already exists.
+    codegenCacheConf -> "1000")
+
+  /** The stderr line for an existing session whose codegen cache size
+    * differs from [[defaults]]' — getOrCreate cannot change a static
+    * conf, so it names the value the session keeps. None when they agree.
+    */
+  private[graft] def staticConfNotice(current: Option[String]): Option[String] =
+    Option.when(!current.contains(defaults(codegenCacheConf)))(
+      s"[graft] $codegenCacheConf not applied: the session existed before " +
+        s"GraftSession and keeps ${current.getOrElse("<unset>")} " +
+        s"(GraftSession default ${defaults(codegenCacheConf)})")
 
   /** Everything builder() sets besides the master. */
   private def settings(shufflePartitions: Int): Map[String, String] =
@@ -158,10 +179,10 @@ object GraftSession {
     // Builder.getOrCreate applies the builder's runtime SQL confs to a
     // session that already exists: read the values they replace, to name
     // every one that changes
-    val before = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .map { p =>
-        settings(envCpus).keys.filter(p.conf.isModifiable).map(k => k -> p.conf.getOption(k))
-      }
+    val existing = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    val before = existing.map { p =>
+      settings(envCpus).keys.filter(p.conf.isModifiable).map(k => k -> p.conf.getOption(k))
+    }
     val s = builder().getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     val changed = before.toSeq.flatten.collect {
@@ -179,6 +200,8 @@ object GraftSession {
       System.err.println("[graft] spark.sql.extensions not applied: the session " +
         "existed before GraftSession; graft SQL functions registered as temp functions")
     }
+    existing.flatMap(p => staticConfNotice(p.conf.getOption(codegenCacheConf)))
+      .foreach(System.err.println)
     s
   }
 }

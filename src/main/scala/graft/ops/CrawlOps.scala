@@ -126,9 +126,17 @@ object CrawlOps {
       // <base href> override when the page declares one (HTML5
       // §4.2.3, the x148 tier), its own URL otherwise. Content links
       // reset the redirect depth: a real page was reached.
+      // The base is computed once per page BELOW the explode: the
+      // not-null filter cannot be pushed through the generator, so it
+      // sees `base` as a column. Computed in the explode's own select,
+      // the pushed filter inlined the whole effectiveBase tree at each
+      // of resolveUrl's references to its base, and the fused aggregate
+      // method outgrew the JVM's 64 KB limit (Spark then ran the stage
+      // without whole-stage codegen, with one log line a hop).
       val links = fetched
-        .select(UrlOps.effectiveBase(col("canon_url"),
-            HtmlOps.baseHref(col("html"))).as("base"),
+        .select(col("html"), UrlOps.effectiveBase(col("canon_url"),
+            HtmlOps.baseHref(col("html"))).as("base"))
+        .select(col("base"),
           explode(HtmlOps.extractLinks(col("html"))).as("ref"))
         .select(UrlOps.canonicalizeUrl(
           UrlOps.resolveUrl(col("base"), col("ref"))).as("canon_url"))

@@ -972,7 +972,10 @@ object ExtensionQueries {
     * column-composition ancestor inflated the x137 plan to a
     * 3,244-regexp-node pushed-down Filter (each of its ~15 input
     * references re-inlined the resolve tree, and predicate pushdown
-    * substituted the lot below the projections).
+    * substituted the lot below the projections). resolveUrl references
+    * `base` several times too: a computed base (effectiveBase) must come
+    * from a projection BELOW the link explode, which the pushed filter
+    * cannot cross.
     */
   private def resolvedCanon(df: DataFrame, keys: Seq[String],
                             refCol: String): DataFrame =
@@ -5660,9 +5663,10 @@ object ExtensionQueries {
       val pages = d.select((id % 4).as("base_kind"),
         linkBase.as("page"), html.as("html"))
       val resolved = pages
-        .select(col("base_kind"),
+        .select(col("base_kind"), col("html"),
           UrlOps.effectiveBase(col("page"),
-            HtmlOps.baseHref(col("html"))).as("base"),
+            HtmlOps.baseHref(col("html"))).as("base"))
+        .select(col("base_kind"), col("base"),
           explode(HtmlOps.extractLinks(col("html"))).as("ref"))
       resolvedCanon(resolved, Seq("base_kind"), "ref")
         .withColumn("reg_domain", UrlOps.domainOf(col("canon_url")))
@@ -6227,13 +6231,16 @@ object ExtensionQueries {
       val html = concat(lit("<html><head>"), canonTag,
         lit("</head><body><p>Variant "), v.cast("string"),
         lit(" of article "), gS, lit(".</p></body></html>"))
+      // base and href are columns of their own projection: nested into
+      // resolveUrl's references they made one method past 64 KB
       d.select(pageUrl.as("url"), html.as("html"))
         .select(col("url"),
+          UrlOps.effectiveBase(col("url"),
+            HtmlOps.baseHref(col("html"))).as("base"),
+          HtmlOps.canonicalHref(col("html")).as("href"))
+        .select(col("url"),
           UrlOps.canonicalizeUrl(coalesce(
-            UrlOps.resolveUrl(
-              UrlOps.effectiveBase(col("url"),
-                HtmlOps.baseHref(col("html"))),
-              HtmlOps.canonicalHref(col("html"))),
+            UrlOps.resolveUrl(col("base"), col("href")),
             col("url"))).as("canonical"))
         .groupBy("canonical")
         .agg(count(lit(1)).as("n_variants"),

@@ -80,6 +80,19 @@ class GraftSessionSpec extends SparkSpec {
     assert(d("spark.sql.parquet.inferTimestampNTZ.enabled") == "false")
     assert(d("spark.sql.adaptive.enabled") == "true")
     assert(d("spark.sql.extensions") == classOf[GraftExtensions].getName)
+    assert(d("spark.sql.codegen.cache.maxEntries") == "1000")
+  }
+
+  test("an existing session's codegen cache size is named when it differs") {
+    // static: getOrCreate cannot resize an existing session's cache, so
+    // it says what the session keeps (asserted on the pure comparison —
+    // the shared test JVM cannot boot a second SparkContext)
+    val conf = GraftSession.codegenCacheConf
+    assert(GraftSession.staticConfNotice(Some("1000")).isEmpty)
+    val kept = GraftSession.staticConfNotice(Some("100"))
+    assert(kept.exists(n => n.contains(conf) && n.contains("keeps 100") &&
+      n.contains("default 1000")), kept)
+    assert(GraftSession.staticConfNotice(None).exists(_.contains("keeps <unset>")))
   }
 
   test("SQL function builders reject wrong arity and overflowing literals") {

@@ -24,6 +24,12 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // the engine's codegen cache size, from its one definition
+      .config(GraftSession.codegenCacheConf,
+        GraftSession.defaults(GraftSession.codegenCacheConf))
+      // a generated method past the JVM's 64 KB limit fails its test
+      // instead of logging one line and running without whole-stage codegen
+      .config("spark.sql.codegen.fallback", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

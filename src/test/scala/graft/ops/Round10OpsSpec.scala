@@ -6,11 +6,12 @@ import graft.SparkSpec
 
 /** Unit specs for the round-10 operator surface: the `nearDupPairs`
   * default flip (LSH-verify is the path a caller gets without asking; the
-  * exact enumeration is an opt-in), the quantized IVF probe, multi-probe
-  * LSH and salting (the duplicated-span cases are [[DedupOpsSpec]]'s).
+  * exact enumeration is an opt-in) and salting (the duplicated-span cases
+  * are [[DedupOpsSpec]]'s; the quantized IVF probe and multi-probe LSH
+  * are [[VectorOpsSpec]]'s).
   * The kernel-level tests (`NearestCentroid`, `QuantizeVec`, the int8
   * dots, ABI/Borsh codegen) live in [[graft.functions.KernelsSpec]].
-  * Tiny fixtures; the oracle-gated x34/x64/x42/x65 cover the sf-scale
+  * Tiny fixtures; the oracle-gated x34/x64 cover the sf-scale
   * cross-engine contract.
   */
 class Round10OpsSpec extends SparkSpec {
@@ -49,68 +50,6 @@ class Round10OpsSpec extends SparkSpec {
       assert(r.getLong(2) >= 5000L,
         s"pair (${r.getLong(0)},${r.getLong(1)}) verified at ${r.getLong(2)}bp < threshold")
     }
-  }
-
-  test("quantized IVF probe finds the planted nearest neighbors (ADC sanity)") {
-    val rnd = new scala.util.Random(17)
-    // 4 well-separated direction clusters; neighbors-of-query = its cluster
-    val base = Array.tabulate(4)(c => Array.tabulate(16)(d =>
-      if (d / 4 == c) 1.0f else 0.0f))
-    val vecs = (0L until 80L).map { i =>
-      val c = (i % 4).toInt
-      val v = base(c).map(x => x + rnd.nextFloat() * 0.05f)
-      (i, v)
-    }.toDF("vec_id", "embedding")
-    val cents = base.map(_.map(x => x: Float))
-    val qscale = VectorOps.sqScale(vecs, "embedding")
-    val got = VectorOps.ivfTopKQuantizedWithCentroids(
-      vecs.filter(col("vec_id") < 4), vecs, "vec_id", "embedding", 5,
-      cents.toSeq, qscale, nProbe = 1).collect()
-    assert(got.length == 4 * 5)
-    got.foreach { r =>
-      assert(r.getLong(1) % 4 == r.getLong(0) % 4,
-        s"query ${r.getLong(0)} got cross-cluster neighbor ${r.getLong(1)}")
-    }
-  }
-
-  test("multi-probe LSH probes are distinct, start at the base bucket, and dominate single-table recall") {
-    val rnd = new scala.util.Random(19)
-    val vecs = (0L until 400L).map(i =>
-      (i, Array.fill(32)(rnd.nextFloat() * 2f - 1f))).toDF("vec_id", "embedding")
-    val probes = vecs.filter(col("vec_id") < 10)
-      .select(col("vec_id"),
-        VectorOps.lshProbeBuckets(col("embedding"), 32, 8, 8).as("pb"),
-        VectorOps.lshBucket(col("embedding"), 32, 8).as("base"))
-      .collect()
-    probes.foreach { r =>
-      val pb = r.getSeq[Long](1)
-      assert(pb.length == 8 && pb.distinct.length == 8, "probes must be distinct")
-      assert(pb.head == r.getLong(2), "first probe must be the query's own bucket")
-      pb.tail.foreach { b =>
-        assert(java.lang.Long.bitCount(b ^ pb.head) == 1,
-          s"probe $b is not a single-bit flip of base ${pb.head}")
-      }
-    }
-    val q = vecs.filter(col("vec_id") < 10)
-    val exact = VectorOps.bruteForceTopK(q, vecs, "vec_id", "embedding", 5)
-    def meanRecall(ap: org.apache.spark.sql.DataFrame): Double =
-      VectorOps.annRecall(ap, exact, "qid", "nid")
-        .agg(avg(col("recall_bp"))).first().getDouble(0)
-    val single = meanRecall(VectorOps.lshTopK(q, vecs, "vec_id", "embedding",
-      5, dim = 32, numPlanes = 8))
-    val multi = meanRecall(VectorOps.lshTopKMultiProbe(q, vecs, "vec_id",
-      "embedding", 5, dim = 32, numPlanes = 8, numProbes = 8))
-    // candidate superset (base bucket is probe 0) -> recall must not drop;
-    // on any non-degenerate fixture the 7 extra probes strictly add hits
-    assert(multi >= single,
-      s"multi-probe recall $multi must dominate single-table $single")
-    // one probe is the query's own bucket: exactly the single-table rows
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("qid", "rk").collect().toSeq
-    assert(rows(VectorOps.lshTopKMultiProbe(q, vecs, "vec_id", "embedding",
-        5, dim = 32, numPlanes = 8, numProbes = 1)) ==
-      rows(VectorOps.lshTopK(q, vecs, "vec_id", "embedding", 5, dim = 32,
-        numPlanes = 8)))
   }
 
   test("salted candidate-verify matches the unsalted result under a planted hot key") {
