@@ -3,13 +3,17 @@ import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.SparkContext
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{Semaphore, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 object Bench {
@@ -39,6 +43,79 @@ object Bench {
   private def codegenNow: (Long, Long, Long) =
     (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime,
       Fallbacks.count)
+
+  /** Local property naming the query whose timed reps submit a job. */
+  private val QueryKey = "graft.bench.query"
+  private val Marker = "<marker>"
+
+  /** One completed stage: wall ms, tasks, executor run ms, and the first
+    * `graft.` frame of its call site that is not the runner's own (the
+    * operator that created it), else the stage's name.
+    */
+  private[graft] final case class StageRec(ms: Long, tasks: Int, cpuMs: Long,
+                                           where: String)
+
+  /** One query's Spark work, summed over its timed reps. */
+  private[graft] final class QueryExec {
+    var jobs, stages, tasks = 0
+    var cpuMs, shuffleWriteBytes, spillBytes = 0L
+    /** The three slowest stages, slowest first. */
+    var slowest = List.empty[StageRec]
+  }
+
+  /** The suite runner's listener: every job started under [[QueryKey]],
+    * and the stages of that job, count toward that query. Listener events
+    * arrive in order, so once [[drain]] returns true every job posted
+    * before it has been counted and [[records]] is complete.
+    */
+  private[graft] final class ExecTally extends SparkListener {
+    private val byQuery = mutable.Map.empty[String, QueryExec]
+    private val stageQuery = mutable.Map.empty[Int, QueryExec]
+    private val markers = new Semaphore(0)
+
+    def records: Map[String, QueryExec] = synchronized(byQuery.toMap)
+
+    def tagged[T](sc: SparkContext, query: String)(body: => T): T = {
+      sc.setLocalProperty(QueryKey, query)
+      try body finally sc.setLocalProperty(QueryKey, null)
+    }
+
+    /** Run a marker job and wait (bounded) until the listener has seen it. */
+    def drain(sc: SparkContext): Boolean = {
+      tagged(sc, Marker)(sc.parallelize(Seq(1), 1).count())
+      markers.tryAcquire(60, TimeUnit.SECONDS)
+    }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      Option(e.properties).flatMap(p => Option(p.getProperty(QueryKey))).foreach {
+        case Marker => markers.release()
+        case q =>
+          val r = byQuery.getOrElseUpdate(q, new QueryExec)
+          r.jobs += 1
+          e.stageIds.foreach(stageQuery(_) = r)
+      }
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      val si = e.stageInfo
+      stageQuery.get(si.stageId).foreach { r =>
+        val m = Option(si.taskMetrics)
+        val cpuMs = m.fold(0L)(_.executorRunTime)
+        r.stages += 1
+        r.tasks += si.numTasks
+        r.cpuMs += cpuMs
+        r.shuffleWriteBytes += m.fold(0L)(_.shuffleWriteMetrics.bytesWritten)
+        r.spillBytes += m.fold(0L)(t => t.memoryBytesSpilled + t.diskBytesSpilled)
+        val ms = (for (a <- si.completionTime; b <- si.submissionTime)
+          yield a - b).getOrElse(-1L)
+        val where = si.details.linesIterator
+          .find(l => l.contains("graft.") && !l.contains("graft.Bench"))
+          .getOrElse(si.name.takeWhile(_ != '\n')).trim.take(110)
+        r.slowest = (StageRec(ms, si.numTasks, cpuMs, where) :: r.slowest)
+          .sortBy(-_.ms).take(3)
+      }
+    }
+  }
 
   private def gcMillis: Long =
     ManagementFactory.getGarbageCollectorMXBeans.asScala
@@ -217,8 +294,8 @@ object Bench {
     // drifting +38% suite-wide). The min of 3 repeats is the steady-state
     // plan cost; mean-vs-min spread is reported as a noise diagnostic.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // fail in milliseconds with the env var named, not after the full
-    // untimed warmup with an anonymous empty.min
+    // fail in milliseconds with the env var named, not after the first
+    // query's runs with an anonymous empty.min
     require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1 (got $reps)")
     // Optional comma-separated prefix filter (e.g. "q" = parity queries
     // only) for fresh-JVM subset runs when diagnosing cross-query pressure.
@@ -233,67 +310,48 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty[String])
     val spark = GraftSession.getOrCreate()
+    val sc = spark.sparkContext
     Fallbacks.install()
+    val exec = new ExecTally
+    sc.addSparkListener(exec)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
       only.forall(_.exists(n.startsWith)) && !skip.contains(n) }
-    // Warmup pass: run every query once untimed so the timed pass measures
-    // steady-state execution, not one-time JVM/JIT/codegen compilation —
-    // the standard methodology for JVM engine benchmarks (a long-running
-    // engine amortizes compilation across thousands of queries; the oracle
-    // engine has no JIT tax to begin with).
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      catch { case e: Throwable =>
-        // named, not swallowed: a warmup failure (even an OOM) means the
-        // query enters the timed pass codegen-cold — the reader of an
-        // inflated min needs to see why
-        System.err.println(s"[bench] warmup $name failed: ${e.getMessage}") }
-      // warmup pins the same checkpoint blocks the timed pass does; free
-      // the previous query's before the next (no forced GC here — the
-      // explicit unpersist is what keeps storage from squeezing execution
-      // memory across a ~60-query warmup)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
     val gc0 = gcMillis
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    // Reclaim the previous query's state ONCE per query, not once per rep:
-    // r8's per-rep System.gc() (63 queries × 3 reps + warmup = 250+ forced
-    // full collections) was itself the dominant share of the artifact's
-    // gc_sec 45.6 — collector pressure the harness manufactured, not the
-    // engine. The memory-safety goal (Spark's ContextCleaner only releases
-    // shuffle/broadcast state on GC; execution memory silently fills and
-    // later aggregations spill — observed r3: x22 1.4s → 16s) is kept by
-    // (a) eagerly unpersisting the blocks the previous query PINNED
-    // (localCheckpoints — the one block class the cleaner can't reclaim
-    // while the suite's maps might still reference the plans) and (b) one
-    // GC per query boundary, which bounds retained garbage to a single
-    // query's reps instead of the whole suite.
+    // Untimed, before EVERY run (a query's first run, each of its timed
+    // reps, the closing probe): a blocking release of the blocks the
+    // previous run PINNED — localCheckpoints, the one block class
+    // Spark's ContextCleaner can't reclaim while a plan might still
+    // reference them. Each run builds fresh plans and fresh checkpoint
+    // blocks, so the previous run's are pure old-gen ballast: left in
+    // place they promoted exactly the garbage whose collection landed
+    // inside a later rep's timer. Blocking, so the removal does not race
+    // the next run and the GC below runs after it.
     var sinceGc = 0
-    def reclaim(): Unit = {
-      // blocking: the GC below must run AFTER the block removal, or the
-      // checkpoint blocks this boundary exists to free survive it and
-      // linger into the next query's window (this is untimed code).
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      // GATED full GC, not unconditional (r15): ~126 forced full
-      // collections per run put tens of seconds of collector time into
-      // the window's gc_sec — pressure the harness manufactured, which
-      // then read as "the engine was hot" in the driver artifact
-      // (r12 x62, r13 x76, r14 headline). Two triggers remain: heap
-      // genuinely filling (used > max/2), and a fixed every-16-queries
-      // cadence — the latter because ContextCleaner also frees
-      // DISK-side shuffle/broadcast files that the heap check cannot
-      // see; a bounded GC cadence bounds how long dead shuffle state
-      // can pin local-dir space, at ~8 forced collections per run
-      // instead of 126.
-      sinceGc += 1
-      val usage = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage
-      if (usage.getUsed * 2 > usage.getMax || sinceGc >= 16) {
-        System.gc()
-        sinceGc = 0
+    def reclaim(boundary: Boolean): Unit = {
+      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      // At a query boundary, a GATED full GC (r15): ContextCleaner only
+      // releases shuffle/broadcast state on GC, so execution memory
+      // otherwise silently fills and later aggregations spill (r3: x22
+      // 1.4 s → 16 s). Not per rep and not unconditional: forced
+      // collections per rep (r8) or per query (r15) were themselves most
+      // of the artifact's gc_sec — pressure the harness manufactured.
+      // Two triggers remain: heap genuinely filling (used > max/2), and a
+      // fixed every-16-queries cadence, because the cleaner also frees
+      // DISK-side shuffle/broadcast files that the heap check cannot see.
+      if (boundary) {
+        sinceGc += 1
+        val usage = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage
+        if (usage.getUsed * 2 > usage.getMax || sinceGc >= 16) {
+          System.gc()
+          sinceGc = 0
+        }
       }
     }
+    // noop sink forces FULL evaluation (projections, sorts, windows) —
+    // count() would let Catalyst prune everything but the row count.
+    def save(fn: (SparkSession, String) => DataFrame): Unit =
+      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
     // GC time spent INSIDE timed reps, separated from boundary/harness
     // collections: the one number that distinguishes "the engine's plan
     // allocates too much" from "the window was hot" without re-running
@@ -303,7 +361,19 @@ object Bench {
     // ms and whole-stage fallbacks (a warm cache compiles nothing)
     val codegen = scala.collection.mutable.Map[String, (Long, Long, Long)]()
     val results = selected.map { case (name, fn) =>
-      reclaim()
+      reclaim(boundary = true)
+      // The query's first run, untimed, right before its timed reps: they
+      // measure steady-state execution, not one-time JIT and codegen
+      // compilation (a long-running engine amortizes compilation across
+      // thousands of queries; the oracle engine has no JIT tax). Per
+      // query, because one pass of the whole suite generates more classes
+      // than the codegen cache holds.
+      try save(fn)
+      catch { case e: Throwable =>
+        // named, not swallowed: a warmup failure (even an OOM) means the
+        // timed reps run codegen-cold — the reader of an inflated median
+        // needs to see why
+        System.err.println(s"[bench] warmup $name failed: ${e.getMessage}") }
       val (c0, ns0, f0) = codegenNow
       // per-QUERY accumulator, folded into the global count only for
       // queries that survive: a failed query's reps are excluded from
@@ -311,28 +381,18 @@ object Bench {
       // in gc_timed_sec either (it would be GC attributable to nothing
       // the artifact shows)
       var qGcMs = 0L
-      val times = (1 to reps).map { r =>
+      val times = exec.tagged(sc, name)((1 to reps).map { _ =>
+        reclaim(boundary = false)
         val g0 = gcMillis
         val t0 = System.nanoTime()
-        // noop sink forces FULL evaluation (projections, sorts, windows) —
-        // count() would let Catalyst prune everything but the row count.
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+        try save(fn)
         catch { case e: Throwable =>
           failed += name
           System.err.println(s"[bench] $name failed: ${e.getMessage}") }
         val dt = (System.nanoTime() - t0) / 1e9
         qGcMs += gcMillis - g0
-        // drop THIS rep's checkpoint blocks before the next rep's timer
-        // starts (untimed, blocking so the removal does not race the next
-        // rep): each invocation builds fresh plans and fresh checkpoint
-        // blocks, so the previous rep's are pure old-gen ballast — left
-        // in place they tripled retained blocks across a query's reps and
-        // promoted exactly the garbage whose eventual collection landed
-        // inside a later rep's timer.
-        if (r < reps) spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
         dt
-      }
+      })
       if (!failed.contains(name)) gcTimedMs += qGcMs
       val (c1, ns1, f1) = codegenNow
       codegen(name) = (c1 - c0, ns1 - ns0, f1 - f0)
@@ -376,9 +436,13 @@ object Bench {
       s"${Verify.jsonEscape(k)}:[${ts.map(num(_, 4)).mkString(",")}]"
     }.mkString("{", ",", "}")
     val gcSec = (gcMillis - gc0) / 1e3
+    // the listener has counted every timed job once it sees the marker
+    if (!exec.drain(sc)) System.err.println(
+      "[bench] listener missed the marker job: query_exec may be incomplete")
+    val execs = exec.records
     // fixed-work host calibration, measured in the SAME JVM state the
     // suite just ran in (post-timed-pass, post-reclaim)
-    reclaim()
+    reclaim(boundary = true)
     val probe = probeSec(spark)
     // Per-query ORACLE timings in the same harness (same machine, same
     // parquet, same min-of-N methodology): the 2× gate denominator should
@@ -470,8 +534,21 @@ object Bench {
       s"${Verify.jsonEscape(k)}:" + obj(Seq("compiles" -> compiles.toString,
         "compile_ms" -> num(nanos / 1e6, 1), "fallbacks" -> fallbacks.toString))
     }.mkString("{", ",", "}")
+    val execDetail = results.map { case (k, _, _, _) =>
+      val r = execs.getOrElse(k, new QueryExec)
+      val slowest = r.slowest.map(st => obj(Seq("ms" -> st.ms.toString,
+        "tasks" -> st.tasks.toString, "cpu_ms" -> st.cpuMs.toString,
+        "where" -> Verify.jsonEscape(st.where))))
+      s"${Verify.jsonEscape(k)}:" + obj(Seq("jobs" -> r.jobs.toString,
+        "stages" -> r.stages.toString, "tasks" -> r.tasks.toString,
+        "cpu_ms" -> r.cpuMs.toString,
+        "shuffle_write_bytes" -> r.shuffleWriteBytes.toString,
+        "spill_bytes" -> r.spillBytes.toString,
+        "slowest_stages" -> slowest.mkString("[", ",", "]")))
+    }.mkString("{", ",", "}")
     val fullLine = obj(corePairs ++ Seq("query_reps" -> repsDetail,
-      "query_codegen" -> codegenDetail) ++ oracleQueriesPair ++ sfPair)
+      "query_codegen" -> codegenDetail, "query_exec" -> execDetail) ++
+      oracleQueriesPair ++ sfPair)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
     // an unwritable output path must not take the stdout headline down
     // with it — the two artifacts are independent channels

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -177,12 +177,10 @@ object CrawlOps {
       // extra canon_url shuffle of the scheduled rows per hop. The cap
       // neither reads nor changes the flag, so the output is identical.
       // emptiness probe FUSED into the checkpoint materialization (r21,
-      // VERDICT r20 #4 — the connectedComponents discipline): observe()
-      // rides the row count on the SAME job that materializes the hop's
-      // localCheckpoint, so each hop is ONE action instead of
-      // checkpoint + a separate isEmpty job.
-      val obs = Observation()
-      val scheduled = RobotsOps
+      // VERDICT r20 #4): the hop's row count rides on the SAME job that
+      // materializes its localCheckpoint, so each hop is ONE action
+      // instead of checkpoint + a separate isEmpty job.
+      val (scheduled, probe) = DedupOps.checkpointObserved(RobotsOps
         .allowedFlagsCollapsed(cand, ruleArr,
           Seq("canon_url", "host", "reg_domain", "__rdepth"))
         .filter(col("allowed")).drop("allowed")
@@ -191,13 +189,9 @@ object CrawlOps {
         .withColumn("__rn", row_number().over(
           Window.partitionBy("host").orderBy("canon_url")))
         .filter(col("__rn") <= perHostCap).drop("__rn")
-        .withColumn("hop", lit(hop))
-        .observe(obs, count(lit(1)).as("n"))
-        // eager: obs.get below blocks until an action has run the
-        // observed plan — a lazy checkpoint would leave it waiting forever
-        .localCheckpoint(eager = true)
+        .withColumn("hop", lit(hop)), count(lit(1)).as("n"))
       out = if (out == null) scheduled else out.unionByName(scheduled)
-      if (obs.get("n").asInstanceOf[Long] == 0L) done = true
+      if (probe("n").asInstanceOf[Long] == 0L) done = true
       else if (hop < maxHops) {
         // the grown crawled set stays a UNION OF CHECKPOINT SCANS —
         // every leaf (the seeds and each hop's scheduled rows) is

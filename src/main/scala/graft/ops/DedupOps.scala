@@ -924,6 +924,20 @@ object DedupOps {
         col("keep_flag"))
   }
 
+  /** `df` materialized as a local checkpoint, with `metrics` computed by
+    * the SAME job: observe() rides them on the checkpoint's
+    * materialization, so a driver loop's probe (row count, label sum)
+    * costs no action of its own. Eager, because `get` blocks until an
+    * action has run the observed plan: a lazy checkpoint would leave it
+    * waiting forever.
+    */
+  private[ops] def checkpointObserved(df: DataFrame, metric: Column,
+                                      metrics: Column*): (DataFrame, Map[String, Any]) = {
+    val obs = Observation()
+    val cp = df.observe(obs, metric, metrics: _*).localCheckpoint(eager = true)
+    (cp, obs.get)
+  }
+
   /** Connected components over an undirected near-dup pair list (i, j):
     * every doc that appears in a pair gets its component id = the minimum
     * doc id reachable through the pair graph. This is the step that turns
@@ -949,17 +963,11 @@ object DedupOps {
     // min-label propagation only ever DECREASES labels, so the exact
     // decimal sum of labels is strictly monotone — comparing sums detects
     // a fixpoint without the old-vs-new join a changed-row count would
-    // need. observe() rides the sum (and row count) on the SAME job that
-    // materializes the localCheckpoint, so each round is ONE action, not
-    // checkpoint + a separate probe aggregation (the probe used to double
-    // the actions per round).
+    // need; each round is ONE action, not checkpoint + a probe job.
     def checkpointProbed(df: DataFrame): (DataFrame, java.math.BigDecimal, Long) = {
-      val obs = Observation()
-      val cp = df.observe(obs,
-          sum(col("comp").cast(DecimalType(38, 0))).as("label_sum"),
-          count(lit(1)).as("n"))
-        .localCheckpoint()
-      val m = obs.get // already complete: localCheckpoint ran the job
+      val (cp, m) = checkpointObserved(df,
+        sum(col("comp").cast(DecimalType(38, 0))).as("label_sum"),
+        count(lit(1)).as("n"))
       val s = m("label_sum") match {
         case null                    => java.math.BigDecimal.ZERO
         case d: java.math.BigDecimal => d

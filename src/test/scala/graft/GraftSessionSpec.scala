@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.BinaryType
 class GraftSessionSpec extends SparkSpec {
 
   test("getOrCreate over a session built without the extensions repairs and warns") {
-    // the shared session is built without spark.sql.extensions; a suite
-    // that ran earlier may have registered the functions as temp functions
+    // the shared session carries the extensions' functions: drop one, as
+    // a session that existed before GraftSession would lack it
     val conf = spark.sessionState.conf
     val saved = conf.getAllConfs
     spark.sessionState.functionRegistry.dropFunction(

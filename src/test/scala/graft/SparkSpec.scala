@@ -16,17 +16,13 @@ object SparkSpec {
     */
   val testDataDir: String = "/root/testdata/sf0.001"
 
+  /** The engine's own session posture (GraftSession's defaults, its
+    * extensions included) at four cores; the spec adds only its name and
+    * one stricter check.
+    */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(master = "local[4]", shufflePartitions = 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the engine's codegen cache size, from its one definition
-      .config(GraftSession.codegenCacheConf,
-        GraftSession.defaults(GraftSession.codegenCacheConf))
       // a generated method past the JVM's 64 KB limit fails its test
       // instead of logging one line and running without whole-stage codegen
       .config("spark.sql.codegen.fallback", "false")

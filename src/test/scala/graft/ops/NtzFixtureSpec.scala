@@ -15,10 +15,10 @@ import graft.SparkSpec
   * all synthesized `TimestampType` inputs in memory. These specs close the
   * blind spot: each time operator runs on a REAL parquet round-trip whose
   * ts column is NTZ (asserted, not assumed), and must produce exactly the
-  * rows it produces on the equivalent `TimestampType` input. The session
-  * here deliberately does NOT set `inferTimestampNTZ=false` (unlike
-  * GraftSession), so this is the hostile-input path, proving the operators
-  * don't depend on the session flag.
+  * rows it produces on the equivalent `TimestampType` input. The fixture's
+  * read turns Spark 4's default `inferTimestampNTZ=true` back on (the
+  * engine session sets it false), so this is the hostile-input path,
+  * proving the operators don't depend on the session flag.
   */
 class NtzFixtureSpec extends SparkSpec {
   import spark.implicits._
@@ -37,7 +37,12 @@ class NtzFixtureSpec extends SparkSpec {
     val dir = Files.createTempDirectory("ntz").toString
     base.withColumn("ts", to_timestamp_ntz(col("s"))).drop("s")
       .write.mode("overwrite").parquet(dir)
-    val ntz = spark.read.parquet(dir)
+    // the hostile read: NTZ inference on for this read only
+    val inferNtz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val saved = spark.conf.getOption(inferNtz)
+    spark.conf.set(inferNtz, "true")
+    val ntz = try spark.read.parquet(dir)
+      finally saved.fold(spark.conf.unset(inferNtz))(spark.conf.set(inferNtz, _))
     assert(ntz.schema("ts").dataType == TimestampNTZType,
       "premise: the parquet round-trip must yield TIMESTAMP_NTZ — if this " +
         "fails the spec no longer tests the regression class")
